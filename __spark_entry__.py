@@ -424,7 +424,6 @@ def q_stream_follow(spark, sf_dir):
     import shutil
     import tempfile
 
-    from ci_log_processing_spark.operators.route import SINKS
     from ci_log_processing_spark.sources.derived import conv_meta_sql
     from ci_log_processing_spark.streaming.follow import run_follow
 
@@ -441,23 +440,12 @@ def q_stream_follow(spark, sf_dir):
         # unit, like the reference's build dirs)
         subset.repartition(2, "conv_id").write.parquet(in_dir)
         run_follow(spark, in_dir, out_dir, meta=meta)
-        rows = []
-        for sink in SINKS:
-            p = os.path.join(out_dir, "sinks", sink)
-            try:
-                # a sink that received no rows leaves only _SUCCESS —
-                # schema inference fails; treat as empty
-                sdf = spark.read.parquet(p)
-            except Exception:
-                continue
-            rows.extend(
-                sdf.select(
-                    "conv_id",
-                    "turn_idx",
-                    F.lit(sink).alias("sink"),
-                    "drop_reason",
-                ).collect()
-            )
+        # follow appends the job's one sink table
+        rows = (
+            spark.read.parquet(os.path.join(out_dir, "sinks"))
+            .select("conv_id", "turn_idx", "sink", "drop_reason")
+            .collect()
+        )
     finally:
         shutil.rmtree(work, ignore_errors=True)
     return spark.createDataFrame(

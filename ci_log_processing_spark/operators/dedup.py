@@ -90,8 +90,16 @@ class scoped_persists:
     def __exit__(self, *exc) -> None:
         scoped = _PERSIST_REGISTRY[self._mark:]
         del _PERSIST_REGISTRY[self._mark:]
+        # one failing unpersist must not leave the rest cached:
+        # release every frame, then re-raise the first error
+        first = None
         for df in scoped:
-            df.unpersist()
+            try:
+                df.unpersist()
+            except Exception as e:
+                first = first or e
+        if first is not None:
+            raise first
 
 
 def h32(col: Column) -> Column:

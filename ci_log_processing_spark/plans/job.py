@@ -9,11 +9,14 @@ Usage (local or cluster — only master/size differ):
       --input-dir /root/testdata/sf0.001 \
       --output-dir /tmp/clp_out \
       [--batch-ts "2024-01-01 00:00:00"] [--ref-year 2024] \
-      [--impl native|pandas] [--no-skip-debug]
+      [--impl native|pandas] [--no-skip-debug] \
+      [--write-strategy repartition|salted] [--write-salt 8]
 
 Writes:
-  <out>/sinks/<sink>/         per-sink parquet (Iceberg-analog
-                              tables, partitioned by sink date)
+  <out>/sinks/sink=<s>/event_date=<d>/
+                              the one sink table (Iceberg analog,
+                              partitioned by sink and date; the
+                              follow loop appends the same table)
   <out>/agg_hourly/           per-sink windowed counts
   <out>/checkpoint/           processed conv manifest (resume via
                               left-anti join on next run)
@@ -41,22 +44,17 @@ def main(argv=None):
     # --impl pandas stays as the mandated-path parity option.
     ap.add_argument("--impl", choices=["native", "pandas"], default="native")
     ap.add_argument("--no-skip-debug", action="store_true")
-    # fan-out write strategy (measured in BASELINE.md):
+    # fan-out write strategy (sinks.append_fanout; measured in
+    # BASELINE.md):
     #   repartition — one exchange keyed on the table partition scheme;
-    #     cleanest file layout (files track sink x date), but write
-    #     parallelism collapses to the number of distinct
-    #     (sink, date) combos — a skew/straggler risk at scale;
+    #     cleanest file layout (files track sink x date), but a hot
+    #     date is one task — a skew/straggler risk at scale;
     #   salted — same exchange plus a conv-hash salt: file layout
-    #     stays (sink x date x salt) while write parallelism is
-    #     combos x salt, removing the one-task-per-date straggler;
-    #   direct — NO exchange: write straight from the pipeline's
-    #     conv-keyed distribution with
-    #     spark.sql.maxConcurrentOutputFileWriters keeping up to N
-    #     partition writers open per task (sort-free dynamic write);
-    #     fewest shuffles, most output files.
+    #     becomes (sink x date x salt) and a hot date spreads over
+    #     salt tasks, removing the one-task-per-date straggler.
     ap.add_argument(
         "--write-strategy",
-        choices=["repartition", "salted", "direct"],
+        choices=["repartition", "salted"],
         default="repartition",
     )
     ap.add_argument("--write-salt", type=int, default=8)
@@ -123,14 +121,14 @@ def main(argv=None):
         skip_debug=not args.no_skip_debug,
         impl=args.impl,
         meta=meta,
-    ).withColumn("src_partition", F.spark_partition_id())
+    )
 
     # The reference routes per file into 3 indices inside one pass
     # (send_to_es, logsender.py:474-489). Spark translation that
-    # survives scale: ONE write job with partitionBy(sink, event_date)
-    # — a single shuffle keyed on the table partition scheme, files
-    # track (sink x date) not tasks x dates, and no wide-row cache is
-    # ever built (persisting the parsed DF measured 2x the cost of
+    # survives scale: ONE write job (sinks.append_fanout) — a single
+    # shuffle keyed on the table partition scheme, files track
+    # (sink x date) not tasks x dates, and no wide-row cache is ever
+    # built (persisting the parsed DF measured 2x the cost of
     # writing it). Aggregates/metrics/checkpoint then run over the
     # just-written columnar data with sink/date pruning for free.
     # Writes are APPEND-mode batches tagged with batch_id; the conv
@@ -139,16 +137,6 @@ def main(argv=None):
     # a real Iceberg sink upgrades this to exactly-once snapshots).
     batch_id = args.batch_ts.replace(" ", "T").replace(":", "-")
     sinks_dir = os.path.join(args.output_dir, "sinks")
-    routed = (
-        routed.withColumn("batch_id", F.lit(batch_id))
-        .withColumn("event_date", F.to_date("filled_ts"))
-        # sink docs keep `message`, not the raw line (the reference's
-        # ES documents likewise store the split message, doc_iter
-        # logsender.py:416-428); dropping text+ts cuts the fan-out
-        # exchange + file bytes ~40%. prior_ts_count is routing
-        # scratch — never a sink column.
-        .drop("text", "ts", "prior_ts_count")
-    )
     counts = {}
     # Row count of THIS write comes from an Observation on the write
     # job itself — no separate count pass over the anti-joined input.
@@ -196,27 +184,14 @@ def main(argv=None):
                 json.dump(summary, f)
         spark.stop()
         return 0
-    w = routed.observe(obs, F.count(F.lit(1)).alias("n"))
-    if args.write_strategy == "repartition":
-        w = w.repartition(F.col("sink"), F.col("event_date"))
-    elif args.write_strategy == "salted":
-        w = w.repartition(
-            F.col("sink"),
-            F.col("event_date"),
-            # pmod, not %: xxhash64 is signed, and negative
-            # remainders would double the salt cells to 2*salt-1
-            F.pmod(F.xxhash64("conv_id"), args.write_salt).alias("_salt"),
-        )
-    else:  # direct: sort-free dynamic-partition write, no exchange
-        spark.conf.set("spark.sql.maxConcurrentOutputFileWriters", "160")
-    # sink DDL seam (sinks.TableSink): ParquetDirSink here; a real
-    # Iceberg catalog slots in as IcebergTableSink without touching
-    # the plan (create_indices analog, logsender.py:563-618)
-    from ..sinks import ParquetDirSink
+    from ..sinks import append_fanout
 
-    table = ParquetDirSink(sinks_dir)
-    table.ensure(spark)
-    table.append(w)
+    append_fanout(
+        routed.observe(obs, F.count(F.lit(1)).alias("n")),
+        sinks_dir,
+        batch_id,
+        salt=args.write_salt if args.write_strategy == "salted" else None,
+    )
     n_rows = obs.get["n"]
     phases["fanout_write_sec"] = round(time.time() - t_w, 2)
     t_w = time.time()

@@ -61,6 +61,58 @@ class ParquetDirSink(TableSink):
         )
 
 
+def fanout_rows(routed: DataFrame, batch_id: str) -> DataFrame:
+    """The sink table's rows for one batch of `full_pipeline` output:
+    exactly `IcebergTableSink.COLUMNS`, in that order.
+
+    Sink docs keep `message`, not the raw line (the reference's ES
+    documents likewise store the split message, doc_iter
+    logsender.py:416-428); dropping text+ts cuts the fan-out exchange
+    and file bytes ~40%. prior_ts_count is routing scratch, never a
+    sink column."""
+    return (
+        routed.withColumn("src_partition", F.spark_partition_id())
+        .withColumn("batch_id", F.lit(batch_id))
+        .withColumn("event_date", F.to_date("filled_ts"))
+        .select(*(n for n, _t in IcebergTableSink.COLUMNS))
+    )
+
+
+def append_fanout(
+    routed: DataFrame,
+    path: str,
+    batch_id: str,
+    salt: int | None = None,
+) -> None:
+    """Route one batch into all four sinks in ONE write job — the
+    reference's single pass per build (send_to_es,
+    logsender.py:467-495), shared by the batch job and every follow
+    micro-batch.
+
+    One exchange keyed on the table partition scheme (sink,
+    event_date), so files track (sink x date), not tasks x dates.
+    A `salt` adds a conv-hash salt key: files become
+    (sink x date x salt) and a hot date no longer lands in one task.
+    The exchange has one partition per core (defaultParallelism):
+    left to AQE, a small batch coalesces to a single task that writes
+    every (sink, date) file serially."""
+    spark = routed.sparkSession
+    keys = [F.col("sink"), F.col("event_date")]
+    if salt is not None:
+        # pmod, not %: xxhash64 is signed, and negative remainders
+        # would double the salt cells to 2*salt-1
+        keys.append(F.pmod(F.xxhash64("conv_id"), salt))
+    w = fanout_rows(routed, batch_id).repartition(
+        spark.sparkContext.defaultParallelism, *keys
+    )
+    # sink DDL seam: a real Iceberg catalog slots in as
+    # IcebergTableSink without touching the plan (create_indices
+    # analog, logsender.py:563-618)
+    table = ParquetDirSink(path)
+    table.ensure(spark)
+    table.append(w)
+
+
 class IcebergTableSink(TableSink):
     """Iceberg catalog table partitioned by (sink, days(event_date)).
 
@@ -73,15 +125,17 @@ class IcebergTableSink(TableSink):
     def __init__(self, table: str):
         self.table = table
 
-    # exactly the columns plans/job.py appends (full_pipeline output
+    # exactly the columns append_fanout writes (full_pipeline output
     # minus text/ts/prior_ts_count, plus src_partition/batch_id/
-    # event_date) — tests assert the DDL list matches the job's
-    # routed schema so the two can never drift
+    # event_date), in full_pipeline's order so the data files keep
+    # their column layout — fanout_rows selects this list, and tests
+    # assert it matches full_pipeline's schema so the two can never
+    # drift
     COLUMNS = (
         ("conv_id", "STRING"),
-        ("turn_idx", "INT"),
-        ("role", "STRING"),
         ("tool", "STRING"),
+        ("role", "STRING"),
+        ("turn_idx", "INT"),
         ("event_ts", "TIMESTAMP"),
         ("message", "STRING"),
         ("severity", "STRING"),

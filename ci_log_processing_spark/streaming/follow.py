@@ -15,6 +15,13 @@ Trigger:
     re-run analog; used in tests);
   * processingTime=Ns  — the literal --follow loop.
 
+Writes: each micro-batch appends the batch job's own sink table,
+`<out>/sinks/sink=<s>/event_date=<d>/`, through the job's one
+fan-out write (sinks.append_fanout, batch_id = the micro-batch id),
+plus its hourly aggregate to `<out>/agg_hourly/`. The reference's
+--follow likewise re-runs the one send_to_es pass
+(logsender.py:467-495).
+
 Checkpointing: Spark's own streaming checkpoint (offset tracking)
 + our conv-manifest checkpoint both apply; a re-run neither
 re-reads files nor re-emits convs.
@@ -28,8 +35,8 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.aggregate import hourly_agg
-from ..operators.route import SINKS
 from ..plans.pipeline import DEFAULT_BATCH_TS, DEFAULT_REF_YEAR, full_pipeline
+from ..sinks import append_fanout
 
 TRANSCRIPT_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, "
@@ -47,7 +54,7 @@ def run_follow(
     processing_time: str | None = None,
     meta=None,
 ):
-    """Stream the transcripts directory into the 4 sinks + hourly agg.
+    """Stream the transcripts directory into the sink table + hourly agg.
 
     `meta` (conv-metadata DataFrame) enables the no_metadata drop
     rule exactly as in batch mode. Returns the StreamingQuery
@@ -64,19 +71,12 @@ def run_follow(
             ref_year=ref_year,
             impl=impl,
             meta=meta,
-        ).withColumn("batch_id", F.lit(batch_id))
-        routed = routed.persist()
+        ).persist()  # the write and hourly_agg both consume it
+        batch = str(batch_id)  # the sink table's batch_id is a string
         try:
-            for sink in SINKS:
-                (
-                    routed.filter(F.col("sink") == sink)
-                    .withColumn("event_date", F.to_date("filled_ts"))
-                    .write.mode("append")
-                    .partitionBy("event_date")
-                    .parquet(os.path.join(output_dir, "sinks", sink))
-                )
+            append_fanout(routed, os.path.join(output_dir, "sinks"), batch)
             hourly_agg(routed).withColumn(
-                "batch_id", F.lit(batch_id)
+                "batch_id", F.lit(batch)
             ).write.mode("append").parquet(
                 os.path.join(output_dir, "agg_hourly")
             )

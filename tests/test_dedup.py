@@ -399,3 +399,35 @@ def test_scoped_persists_back_to_back_composition(spark, corpus):
     except RuntimeError:
         pass
     assert len(_PERSIST_REGISTRY) == 0
+
+
+def test_scoped_persists_releases_all_when_unpersist_raises(spark):
+    """A raising unpersist inside the scope's release must not leave
+    the other scoped frames cached; the first error is re-raised."""
+    from ci_log_processing_spark.operators.dedup import (
+        _PERSIST_REGISTRY,
+        _register_persist,
+        release_persisted,
+        scoped_persists,
+    )
+
+    class _Raising:
+        def __init__(self, msg):
+            self.msg = msg
+
+        def unpersist(self):
+            raise RuntimeError(self.msg)
+
+    release_persisted()
+    a = spark.range(10)
+    b = spark.range(20)
+    with pytest.raises(RuntimeError, match="first"):
+        with scoped_persists():
+            _register_persist(a).count()
+            _PERSIST_REGISTRY.append(_Raising("first"))
+            _register_persist(b).count()
+            _PERSIST_REGISTRY.append(_Raising("second"))
+            assert a.storageLevel.useMemory and b.storageLevel.useMemory
+    assert not a.storageLevel.useMemory and not a.storageLevel.useDisk
+    assert not b.storageLevel.useMemory and not b.storageLevel.useDisk
+    assert len(_PERSIST_REGISTRY) == 0

@@ -5,7 +5,11 @@ import datetime as dt
 
 import pytest
 
-from ci_log_processing_spark.sinks import IcebergTableSink, ParquetDirSink
+from ci_log_processing_spark.sinks import (
+    IcebergTableSink,
+    ParquetDirSink,
+    fanout_rows,
+)
 
 
 def test_parquet_dir_sink_roundtrip(spark, tmp_path):
@@ -37,11 +41,9 @@ def test_iceberg_ddl_golden():
 
 
 def test_iceberg_ddl_matches_job_schema(spark):
-    # the DDL column set must equal what plans/job.py actually
-    # appends, or the Iceberg path fails on its first real write
+    # the DDL columns must equal what append_fanout actually writes,
+    # or the Iceberg path fails on its first real write
     import datetime as dt
-
-    from pyspark.sql import functions as F
 
     from ci_log_processing_spark.plans.pipeline import full_pipeline
 
@@ -52,17 +54,17 @@ def test_iceberg_ddl_matches_job_schema(spark):
         "tool string, ts timestamp",
     )
     meta = spark.createDataFrame([("c1",)], "conv_id string")
-    routed = (
-        full_pipeline(t, spark, meta=meta)
-        .withColumn("src_partition", F.spark_partition_id())
-        .withColumn("batch_id", F.lit("b"))
-        .withColumn("event_date", F.to_date("filled_ts"))
-        .drop("text", "ts", "prior_ts_count")
-    )
-    ddl_cols = {n for n, _t in IcebergTableSink.COLUMNS}
-    assert ddl_cols == set(routed.columns), (
-        ddl_cols ^ set(routed.columns)
-    )
+    routed = full_pipeline(t, spark, meta=meta)
+    # full_pipeline's columns in its order (a new pipeline column must
+    # be added to the DDL), minus the raw line and routing scratch
+    expected = [
+        c for c in routed.columns if c not in ("text", "ts", "prior_ts_count")
+    ] + ["src_partition", "batch_id", "event_date"]
+    assert [n for n, _t in IcebergTableSink.COLUMNS] == expected
+    rows = fanout_rows(routed, "b")
+    assert [
+        (f.name, f.dataType.simpleString().upper()) for f in rows.schema
+    ] == list(IcebergTableSink.COLUMNS)
 
 
 def test_iceberg_unavailable_raises_with_ddl(spark):

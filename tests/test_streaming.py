@@ -13,10 +13,23 @@ from ci_log_processing_spark.streaming.follow import run_follow
 SF = "/root/testdata/sf0.001"
 
 
+def _counts_by(df, col):
+    return {
+        r[col]: r["cnt"]
+        for r in df.filter(F.col(col).isNotNull())
+        .groupBy(col)
+        .agg(F.count("*").alias("cnt"))
+        .collect()
+    }
+
+
 def test_follow_matches_batch(spark, tmp_path):
+    from ci_log_processing_spark.sinks import IcebergTableSink
+
     t = load_transcripts(spark, SF)
     in_dir = str(tmp_path / "transcripts")
     out_dir = str(tmp_path / "out")
+    sinks_dir = os.path.join(out_dir, "sinks")
     # conversations must not straddle files (a conv is the unit of
     # readiness, like the reference's build dirs) — partition by
     # conv_id before writing
@@ -24,22 +37,35 @@ def test_follow_matches_batch(spark, tmp_path):
 
     run_follow(spark, in_dir, out_dir)
 
-    batch_counts = {
-        r["sink"]: r["cnt"]
-        for r in full_pipeline(t, spark)
-        .groupBy("sink")
-        .agg(F.count("*").alias("cnt"))
-        .collect()
-    }
+    batch = full_pipeline(t, spark)
+    batch_counts = _counts_by(batch, "sink")
+    # follow appends the batch job's one sink table
+    # (sinks/sink=<s>/event_date=<d>/), not a per-sink layout
     for sink, expected in batch_counts.items():
-        path = os.path.join(out_dir, "sinks", sink)
+        path = os.path.join(sinks_dir, f"sink={sink}")
         got = spark.read.parquet(path).count()
         assert got == expected, (sink, got, expected)
+
+    table = spark.read.parquet(sinks_dir)
+    assert _counts_by(table, "drop_reason") == _counts_by(
+        batch, "drop_reason"
+    )
+    assert set(table.columns) == {n for n, _t in IcebergTableSink.COLUMNS}
+    # one fan-out write per micro-batch: at most one file per
+    # (sink, event_date) that the batch touched
+    per_cell = (
+        table.withColumn("file", F.input_file_name())
+        .groupBy("batch_id", "sink", "event_date")
+        .agg(F.countDistinct("file").alias("files"))
+    )
+    assert per_cell.agg(F.max("files")).first()[0] == 1
 
     # restart with the same checkpoint: no new files -> no new rows
     run_follow(spark, in_dir, out_dir)
     for sink, expected in batch_counts.items():
-        got = spark.read.parquet(os.path.join(out_dir, "sinks", sink)).count()
+        got = spark.read.parquet(
+            os.path.join(sinks_dir, f"sink={sink}")
+        ).count()
         assert got == expected, ("after-restart", sink, got, expected)
 
 
