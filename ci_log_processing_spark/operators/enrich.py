@@ -1,21 +1,23 @@
-"""Broadcast-lookup enrichment.
+"""Constant-lookup enrichment.
 
 Reference analogs:
   * file->(name, tags) suffix lookup with identity default on miss
     (`get_file_info`, logsender.py:375-381; golden
     tests/test_logsender.py:1199-1217) -> tool->category/tags map;
-  * per-build constant/renamed/cast fields deep-copied onto every
-    line (`makeFields` logsender.py:252-285 + `doc_iter` 416-428)
-    -> conv-level metadata broadcast-joined onto turns.
+  * per-build constant fields copied onto every line (`makeFields`
+    logsender.py:252-285, build_queue default NONE at :270)
+    -> role->pipeline map.
 
-Both lookups are tiny dimension tables: `F.broadcast` makes the
-join a map-side hash join — no shuffle of the fact table, which is
-the only join strategy that survives 100 TB of turns.
+Both lookups are tiny constant dimensions, so each is a literal
+`create_map` probed inside the row's projection: no join, no
+exchange, no dimension table rebuilt per call. (The data-sized
+conv-metadata presence flag is a broadcast join in
+plans/pipeline.py.)
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 # role -> pipeline (build_queue analog, default NONE like
@@ -38,21 +40,14 @@ TOOL_CATEGORY: dict[str, tuple[str, list[str]]] = {
 }
 
 
-def role_pipeline_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        sorted(ROLE_PIPELINE.items()), "role string, pipeline string"
-    )
-
-
-def tool_category_df(spark: SparkSession) -> DataFrame:
-    rows = [(t, c, tags) for t, (c, tags) in sorted(TOOL_CATEGORY.items())]
-    return spark.createDataFrame(
-        rows, "tool string, category string, cat_tags array<string>"
-    )
+def _lookup(mapping: dict) -> Column:
+    """A constant dimension as a literal map column: the lookup is a
+    codegen'd hash probe inside the row's projection, no join."""
+    return F.create_map(*(F.lit(x) for kv in mapping.items() for x in kv))
 
 
 def with_enrichment(df: DataFrame, spark: SparkSession) -> DataFrame:
-    """Add pipeline, category, tags via broadcast joins.
+    """Add pipeline, category, tags via literal map lookups.
 
     Miss semantics:
       * unknown role -> pipeline 'NONE';
@@ -61,33 +56,23 @@ def with_enrichment(df: DataFrame, spark: SparkSession) -> DataFrame:
       * null tool   -> category NULL, tags [].
     Tags are emitted sorted for determinism (the reference's
     list(set(...)) ordering is nondeterministic — SURVEY.md §4).
+    `spark` is unused.
     """
-    rp = F.broadcast(role_pipeline_df(spark))
-    tc = F.broadcast(tool_category_df(spark))
-    out = (
-        df.join(rp, "role", "left")
-        .join(tc, "tool", "left")
-        .withColumn("pipeline", F.coalesce(F.col("pipeline"), F.lit("NONE")))
+    role, tool = F.col("role"), F.col("tool")
+    pipeline = _lookup(ROLE_PIPELINE)[role]
+    category = _lookup({t: c for t, (c, _) in TOOL_CATEGORY.items()})[tool]
+    cat_tags = _lookup(
+        {t: F.array(*map(F.lit, x)) for t, (_, x) in TOOL_CATEGORY.items()}
+    )[tool]
+    no_tags = F.array().cast("array<string>")
+    tags = F.array_union(F.coalesce(cat_tags, no_tags), F.array(tool))
+    return (
+        df.withColumn("pipeline", F.coalesce(pipeline, F.lit("NONE")))
+        .withColumn("category", F.coalesce(category, tool))
         .withColumn(
-            "category",
-            F.when(F.col("tool").isNull(), F.lit(None).cast("string")).otherwise(
-                F.coalesce(F.col("category"), F.col("tool"))
-            ),
+            "tags", F.when(tool.isNull(), no_tags).otherwise(F.array_sort(tags))
         )
-        .withColumn(
-            "tags",
-            F.when(F.col("tool").isNull(), F.array().cast("array<string>")).otherwise(
-                F.array_sort(
-                    F.array_union(
-                        F.coalesce(F.col("cat_tags"), F.array().cast("array<string>")),
-                        F.array(F.col("tool")),
-                    )
-                )
-            ),
-        )
-        .drop("cat_tags")
     )
-    return out
 
 
 # ---- J1: ordered suffix-match lookup (get_file_info parity) ----------

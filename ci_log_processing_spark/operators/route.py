@@ -1,8 +1,9 @@
 """Multi-sink routing — the reference's per-file index fan-out
 (`send_to_es`, logsender.py:467-495: performance.json -> perf
 index, *.subunit -> subunit index, default -> log index) plus its
-implicit drop rules, recast as ONE disjoint, covering CASE over
-parsed columns.
+implicit drop rules, recast as one disjoint, covering decision over
+parsed columns: a drop_reason CASE, and a sink CASE that sends every
+row with a reason to drop_queue, so each rule is written once.
 
 Design decision vs the reference: lines the reference silently
 skips (DEBUG with --skip-debug, journald preamble, empty message
@@ -32,40 +33,14 @@ SINKS = ("errors", "tool_calls", "agent_turns", "drop_queue")
 PREAMBLE_PREFIX = "-- Logs begin at "
 
 
-def sink_col(
-    skip_debug: bool = True,
-    has_metadata: Column | None = None,
-) -> Column:
-    """The routing decision as one Catalyst CASE expression.
-
-    Requires columns: text, message, severity, tool, role,
-    prior_ts_count (see operators.ffill.with_prior_ts_count).
-    """
-    no_meta = (
-        ~has_metadata if has_metadata is not None else F.lit(False)
-    )
-    c = F.when(no_meta, F.lit("drop_queue"))
-    c = c.when(
-        F.col("text").startswith(PREAMBLE_PREFIX)
-        & (F.col("prior_ts_count") == 0),
-        F.lit("drop_queue"),
-    )
-    if skip_debug:
-        c = c.when(F.col("text").contains("DEBUG"), F.lit("drop_queue"))
-    c = c.when(F.length(F.col("message")) == 0, F.lit("drop_queue"))
-    c = c.when(
-        F.col("severity").isin("ERROR", "CRITICAL"), F.lit("errors")
-    )
-    c = c.when(
-        F.col("tool").isNotNull() | (F.col("role") == "tool"),
-        F.lit("tool_calls"),
-    )
-    return c.otherwise(F.lit("agent_turns"))
-
-
 def drop_reason_col(
     skip_debug: bool = True, has_metadata: Column | None = None
 ) -> Column:
+    """The drop rules (precedence 1-4) as one CASE; NULL keeps the row.
+
+    Requires columns: text, message, prior_ts_count (see
+    operators.ffill.with_prior_ts_count).
+    """
     no_meta = (
         ~has_metadata if has_metadata is not None else F.lit(False)
     )
@@ -86,6 +61,19 @@ def with_sink(
     skip_debug: bool = True,
     has_metadata: Column | None = None,
 ) -> DataFrame:
-    return df.withColumn(
-        "sink", sink_col(skip_debug, has_metadata)
-    ).withColumn("drop_reason", drop_reason_col(skip_debug, has_metadata))
+    """Add drop_reason, then sink derived from it (precedence 5-7 need
+    severity, tool, role)."""
+    sink = (
+        F.when(F.col("drop_reason").isNotNull(), F.lit("drop_queue"))
+        .when(F.col("severity").isin("ERROR", "CRITICAL"), F.lit("errors"))
+        .when(
+            F.col("tool").isNotNull() | (F.col("role") == "tool"),
+            F.lit("tool_calls"),
+        )
+        .otherwise(F.lit("agent_turns"))
+    )
+    return (
+        df.withColumn("drop_reason", drop_reason_col(skip_debug, has_metadata))
+        .withColumn("sink", sink)
+        .select(*df.columns, "sink", "drop_reason")
+    )

@@ -59,10 +59,12 @@ def main(argv=None):
     )
     ap.add_argument("--write-salt", type=int, default=8)
     ap.add_argument("--no-write", action="store_true",
-                    help="run parse->enrich->route and count per-sink "
-                         "rows without writing sinks (isolates engine "
-                         "throughput from single-disk sink bandwidth "
-                         "in scaling measurements)")
+                    help="compute every sink row and count per-sink "
+                         "rows, but write to Spark's noop sink instead "
+                         "of the tables; no aggregates, metrics or "
+                         "checkpoint (isolates engine throughput from "
+                         "single-disk sink bandwidth in scaling "
+                         "measurements)")
     ap.add_argument("--master", default=None)
     ap.add_argument("--transcripts-parquet", default=None,
                     help="read a materialized transcripts table instead of deriving from events")
@@ -76,7 +78,7 @@ def main(argv=None):
     from ..session import get_spark
     from ..sources.transcripts import load_transcripts
     from .pipeline import full_pipeline
-    from ..operators.aggregate import hourly_agg, sink_counts
+    from ..operators.aggregate import hourly_agg
     from ..operators.checkpoint import filter_unprocessed, write_checkpoint
 
     spark = get_spark(master=args.master)
@@ -137,89 +139,74 @@ def main(argv=None):
     # a real Iceberg sink upgrades this to exactly-once snapshots).
     batch_id = args.batch_ts.replace(" ", "T").replace(":", "-")
     sinks_dir = os.path.join(args.output_dir, "sinks")
-    counts = {}
-    # Row count of THIS write comes from an Observation on the write
-    # job itself — no separate count pass over the anti-joined input.
-    # A fully-checkpointed input observes 0 rows and must stay a
-    # no-op: in particular it must NOT re-read this batch_id's
-    # previous rows and re-append aggregates.
+    # Row and per-sink counts of THIS write come from one Observation
+    # on the write job itself — no count pass over the input and no
+    # re-read of the sinks. A fully-checkpointed input observes 0 rows
+    # and must stay a no-op: in particular it must NOT re-read this
+    # batch_id's previous rows and re-append aggregates.
     from pyspark.sql import Observation
 
-    obs = Observation("routed_rows")
-    phases = {}
-    t_w = time.time()
+    from ..operators.route import SINKS
+    from ..sinks import append_fanout, fanout_rows
+
+    obs = Observation("routed")
+    observed = routed.observe(
+        obs,
+        F.count(F.lit(1)).alias("n"),
+        *(F.count_if(F.col("sink") == s).alias(s) for s in SINKS),
+    )
+
+    salt = args.write_salt if args.write_strategy == "salted" else None
     if args.no_write:
+
+        def write(df):
+            fanout_rows(df, batch_id).write.format("noop").mode(
+                "overwrite"
+            ).save()
+
         # warmup on a 2% sample: pays the one-time Janino codegen /
         # JIT compile (~8-10 s, identical generated classes) outside
         # the measured window, so wall_sec is steady-state engine
         # throughput — the quantity that scales with executors on a
         # real cluster where compile cost amortizes to zero
-        routed.sample(0.02, seed=7).groupBy("sink").agg(
-            F.count(F.lit(1))
-        ).collect()
+        write(routed.sample(0.02, seed=7))
         t0 = time.time()
-        t_w = time.time()
-        counts = {
-            r["sink"]: r["cnt"]
-            for r in routed.groupBy("sink")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .collect()
-        }
-        n_rows = sum(counts.values())
-        phases["fanout_write_sec"] = round(time.time() - t_w, 2)
-        wall = time.time() - t0
-        summary = {
-            "rows": n_rows,
-            "skipped_already_processed": already,
-            "sinks": counts,
-            "wall_sec": round(wall, 2),
-            "rows_per_sec": round(n_rows / wall, 1) if wall > 0 else None,
-            "impl": args.impl,
-            "no_write": True,
-            **phases,
-        }
-        print(json.dumps(summary))
-        if args.summary_json:
-            with open(args.summary_json, "w") as f:
-                json.dump(summary, f)
-        spark.stop()
-        return 0
-    from ..sinks import append_fanout
+    else:
 
-    append_fanout(
-        routed.observe(obs, F.count(F.lit(1)).alias("n")),
-        sinks_dir,
-        batch_id,
-        salt=args.write_salt if args.write_strategy == "salted" else None,
-    )
-    n_rows = obs.get["n"]
-    phases["fanout_write_sec"] = round(time.time() - t_w, 2)
+        def write(df):
+            append_fanout(df, sinks_dir, batch_id, salt=salt)
+
+    phases = {}
     t_w = time.time()
-    if n_rows > 0:
-        written = spark.read.parquet(sinks_dir).filter(
-            F.col("batch_id") == batch_id
-        )
-        hourly_agg(written).withColumn(
-            "batch_id", F.lit(batch_id)
-        ).write.mode("append").parquet(
-            os.path.join(args.output_dir, "agg_hourly")
-        )
-        # per-partition lineage/throughput metrics
-        # (reference analog: Prometheus per-job gauges,
-        # logscraper.py:295-304)
-        metrics = written.groupBy("src_partition", "sink").agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.countDistinct("conv_id").alias("convs"),
-        )
-        metrics.withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(os.path.join(args.output_dir, "metrics"))
-        write_checkpoint(written, ckpt_dir)
-        counts = {
-            r["sink"]: r["cnt"] for r in sink_counts(written).collect()
-        }
-
-    phases["post_write_sec"] = round(time.time() - t_w, 2)
+    write(observed)
+    got = obs.get
+    n_rows = got["n"]
+    # zero-count sinks are left out, like a GROUP BY over the sinks
+    counts = {s: got[s] for s in SINKS if got[s]}
+    phases["fanout_write_sec"] = round(time.time() - t_w, 2)
+    if not args.no_write:
+        t_w = time.time()
+        if n_rows > 0:
+            written = spark.read.parquet(sinks_dir).filter(
+                F.col("batch_id") == batch_id
+            )
+            hourly_agg(written).withColumn(
+                "batch_id", F.lit(batch_id)
+            ).write.mode("append").parquet(
+                os.path.join(args.output_dir, "agg_hourly")
+            )
+            # per-partition lineage/throughput metrics
+            # (reference analog: Prometheus per-job gauges,
+            # logscraper.py:295-304)
+            metrics = written.groupBy("src_partition", "sink").agg(
+                F.count(F.lit(1)).alias("rows"),
+                F.countDistinct("conv_id").alias("convs"),
+            )
+            metrics.withColumn("batch_id", F.lit(batch_id)).write.mode(
+                "append"
+            ).parquet(os.path.join(args.output_dir, "metrics"))
+            write_checkpoint(written, ckpt_dir)
+        phases["post_write_sec"] = round(time.time() - t_w, 2)
     wall = time.time() - t0
     summary = {
         "rows": n_rows,
@@ -228,6 +215,7 @@ def main(argv=None):
         "wall_sec": round(wall, 2),
         "rows_per_sec": round(n_rows / wall, 1) if wall > 0 else None,
         "impl": args.impl,
+        **({"no_write": True} if args.no_write else {}),
         **phases,
     }
     print(json.dumps(summary))

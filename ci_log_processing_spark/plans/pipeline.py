@@ -4,8 +4,8 @@ One DataFrame DAG replacing the reference's hand-fused generator
 pipeline (logsender.py `send` lifecycle, SURVEY.md §3.1):
 
   read -> parse (ts cascade + grok) -> forward-fill window ->
-  enrich (broadcast maps) -> route (disjoint CASE) ->
-  [persist] -> per-sink writes + grouped aggregates
+  enrich (literal map lookups) -> route (disjoint CASE) ->
+  one fan-out write (sinks.append_fanout) + grouped aggregates
 
 `impl` selects the parse engine:
   * 'native' — pure Catalyst expressions (whole-stage codegen,

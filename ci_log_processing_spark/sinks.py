@@ -133,9 +133,9 @@ class IcebergTableSink(TableSink):
     # drift
     COLUMNS = (
         ("conv_id", "STRING"),
-        ("tool", "STRING"),
-        ("role", "STRING"),
         ("turn_idx", "INT"),
+        ("role", "STRING"),
+        ("tool", "STRING"),
         ("event_ts", "TIMESTAMP"),
         ("message", "STRING"),
         ("severity", "STRING"),

@@ -1,4 +1,4 @@
-"""Broadcast-enrichment goldens — miss semantics mirror the
+"""Enrichment goldens — miss semantics mirror the
 reference's get_file_info identity default (logsender.py:375-381;
 golden tests/test_logsender.py:1199-1217)."""
 
@@ -14,12 +14,14 @@ def test_enrichment(spark):
         ("c1", 1, "tool", "x", "bash", t0),
         ("c1", 2, "tool", "x", "unknown-tool", t0),
         ("c1", 3, "mystery-role", "x", None, t0),
+        ("c1", 4, None, "x", "search", t0),
     ]
     df = spark.createDataFrame(
         rows,
         "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
     )
-    out = {r["turn_idx"]: r for r in with_enrichment(df, spark).collect()}
+    enriched = with_enrichment(df, spark)
+    out = {r["turn_idx"]: r for r in enriched.collect()}
     assert out[0]["pipeline"] == "check"
     assert out[0]["category"] is None and out[0]["tags"] == []
     assert out[1]["pipeline"] == "gate"
@@ -30,6 +32,13 @@ def test_enrichment(spark):
     assert out[2]["tags"] == ["unknown-tool"]
     # unknown role -> NONE (makeFields build_queue default)
     assert out[3]["pipeline"] == "NONE"
+    # null role -> NONE too; a known tool still enriches
+    assert out[4]["pipeline"] == "NONE"
+    assert out[4]["category"] == "retrieval"
+    assert out[4]["tags"] == ["query", "search"]
+    # constant lookups are expressions: no join, no exchange
+    plan = enriched._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan and "Exchange" not in plan, plan
 
 
 def test_suffix_tag_lookup_first_match_wins(spark):

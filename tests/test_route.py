@@ -18,6 +18,11 @@ def test_sink_partition(spark):
     # coverage: every row lands in exactly one sink
     assert sum(per_sink.values()) == total
     assert set(per_sink) == {"errors", "tool_calls", "agent_turns", "drop_queue"}
+    # sink is derived from drop_reason: drop_queue iff a reason is set
+    mismatched = routed.filter(
+        (F.col("sink") == "drop_queue") != F.col("drop_reason").isNotNull()
+    )
+    assert mismatched.count() == 0
 
 
 def test_precedence_and_reasons(spark):

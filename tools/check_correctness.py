@@ -9,7 +9,8 @@ Usage: python tools/check_correctness.py [sf_dir] [name_filter] [out_json]
 When out_json is given (e.g. GATE_LOCAL_r5.json) the full per-query
 result is ALSO written there in the driver CORRECTNESS_r{N}.json
 shape — {name: {rows_match, schema_match, hash_match, spark_rows,
-oracle_rows, err}} — so the judge can diff the local 222-query sweep
+oracle_rows, err}}, plus `rows_only: true` (and null matches) for a
+query with no DuckDB twin — so one can diff the local 222-query sweep
 against the driver's 50-query round artifact mechanically.
 """
 
@@ -71,7 +72,7 @@ def main():
     results: dict[str, dict] = {}
 
     def record(name, rows_match, schema_match, hash_match,
-               spark_rows, oracle_rows, err):
+               spark_rows, oracle_rows, err, **extra):
         results[name] = {
             "rows_match": rows_match,
             "schema_match": schema_match,
@@ -79,6 +80,7 @@ def main():
             "spark_rows": spark_rows,
             "oracle_rows": oracle_rows,
             "err": err,
+            **extra,
         }
 
     for name, fn in qs.items():
@@ -98,8 +100,9 @@ def main():
             continue
         if name not in sqls:
             print(f"ROWS-ONLY {name}: {len(sdf)} rows")
-            record(name, True, None, None, len(sdf), None,
-                   "rows-only (no oracle_sql twin)")
+            # nothing was compared: null, not a verified pass
+            record(name, None, None, None, len(sdf), None,
+                   "rows-only (no oracle_sql twin)", rows_only=True)
             continue
         try:
             ddf = con.execute(sqls[name]).fetchdf()
