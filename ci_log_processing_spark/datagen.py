@@ -224,3 +224,59 @@ def write_transcripts(
     with open(marker, "w") as f:
         f.write(f"n_turns={n} seed={seed}\n")
     return out_dir
+
+
+_VOCAB = [f"w{i}" for i in range(360)] + [
+    "the", "a", "and", "of", "to", "in", "is", "table", "scan", "row",
+    "batch", "merge", "sort", "hash", "join", "value", "query", "part",
+    "fast", "slow", "data", "line", "key", "agg", "window", "filter",
+    "stream", "group", "order", "column", "small", "big", "spark",
+    "vector", "customer", "date", "file", "disk", "node", "task",
+]
+
+
+def write_documents(out_dir: str, n_docs: int) -> str:
+    """`documents.parquet` (doc_id, text, lang, source, n_chars) in the
+    sf layout under out_dir, generated JVM-side: 61-120 words per doc
+    drawn from a 400-word vocabulary by xxhash64(doc_id, position).
+    `load_corpus` plants the exact and near copies. Cached by a marker."""
+    from pyspark.sql import SparkSession
+    from pyspark.sql import functions as F
+
+    from .session import get_spark
+
+    marker = os.path.join(out_dir, "_GENERATED")
+    if os.path.exists(marker):
+        return out_dir
+    own = SparkSession.getActiveSession() is None
+    spark = get_spark(app_name="write_documents")
+    v = F.array(*[F.lit(w) for w in _VOCAB])
+    doc_id = F.col("id")
+    text = F.concat_ws(
+        " ",
+        F.transform(
+            F.sequence(F.lit(0), F.lit(60) + F.pmod(doc_id, 60)),
+            lambda i: F.element_at(
+                v, F.pmod(F.xxhash64(doc_id, i), len(_VOCAB)).cast("int") + 1
+            ),
+        ),
+    )
+    langs = F.array(*[F.lit(x) for x in ("en", "zh", "es", "fr", "de")])
+    (
+        spark.range(n_docs)
+        .select(
+            doc_id.alias("doc_id"),
+            text.alias("text"),
+            F.element_at(langs, F.pmod(doc_id, 5).cast("int") + 1).alias("lang"),
+            F.concat(F.lit("s"), F.pmod(doc_id, 64)).alias("source"),
+        )
+        .withColumn("n_chars", F.length("text").cast("long"))
+        .repartition(spark.sparkContext.defaultParallelism * 2, "doc_id")
+        .write.mode("overwrite")
+        .parquet(os.path.join(out_dir, "documents.parquet"))
+    )
+    if own:
+        spark.stop()
+    with open(marker, "w") as f:
+        f.write(f"n_docs={n_docs}\n")
+    return out_dir

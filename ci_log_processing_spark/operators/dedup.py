@@ -860,7 +860,6 @@ def duplicate_components(
     pairs: DataFrame,
     nodes: DataFrame,
     max_iter: int = 25,
-    round_stats: list | None = None,
 ) -> DataFrame:
     """Connected components over a duplicate-pair edge list — the
     step that turns pairwise dedup output (exact / minhash / simhash
@@ -897,16 +896,11 @@ def duplicate_components(
     storage grows by O(|nodes|) per round. Only the final round's
     blocks remain, released when the returned DataFrame is GC'd.
 
-    `round_stats`, when given a list, receives one dict per
-    propagation round: {"round", "seconds"} — wall time of the
-    round's full propagate + checkpoint + convergence-probe cycle
-    (tools/run_components_scale.py uses it for the round-time
-    breakdown at multi-million-node sizes).
+    Per-round wall times at 8M and 24M nodes are in BASELINE.md,
+    "Round 2: training-data-tier scaling (600k synthetic docs)".
 
     Returns (doc_id, component, is_keeper).
     """
-    import time as _time
-
     edges0 = pairs.select("doc_a", "doc_b")
     edges = (
         edges0.select(
@@ -930,8 +924,7 @@ def duplicate_components(
     lbl_sum = F.sum(F.col("label").cast("decimal(38,0)"))
     prev_sum = labels.agg(lbl_sum).collect()[0][0]
     converged = False
-    for rnd in range(max_iter):
-        t0 = _time.time()
+    for _ in range(max_iter):
         nb = edges.join(labels, edges["dst"] == labels["node"]).select(
             edges["src"].alias("node"), "label"
         )
@@ -943,10 +936,6 @@ def duplicate_components(
         new_sum = new_labels.agg(lbl_sum).collect()[0][0]
         _release(labels_rdds)
         labels, labels_rdds = new_labels, new_rdds
-        if round_stats is not None:
-            round_stats.append(
-                {"round": rnd, "seconds": round(_time.time() - t0, 3)}
-            )
         if new_sum == prev_sum:
             converged = True
             break
@@ -1844,13 +1833,19 @@ def count_cosine_pairs(
     hex string. The key is pure plumbing (never in the output), and
     the tf aggregate + df band + pair join all shuffle it: 8-byte
     longs vs 40-byte strings measured 1.9× faster END TO END at both
-    8 and 32 cores (1M docs, ~90M distinct grams;
-    tools/_ccos_ab_worker.py, checksummed-identical pairs). Same
-    cross-engine h32/LSH-band precedent: DuckDB parses the identical
-    prefix, so a 60-bit collision (birthday ~3e-3 for one anywhere
-    at 9e7 grams) merges the SAME two grams in both engines —
+    8 and 32 cores (1M docs, ~90M distinct grams, checksummed-
+    identical pairs; BASELINE.md "Round 5: retrieval-tier scaling
+    legs + the count_cosine term-key fix"). Same cross-engine
+    h32/LSH-band precedent: DuckDB parses the identical prefix, so a
+    60-bit collision merges the SAME two grams in both engines —
     deterministic, and at most perturbs one dot product by a tf
     cross-term.
+
+    Validity bound: n distinct grams expect ~n^2/2^61 colliding key
+    pairs — ~3.5e-3 at 9e7 grams, ~0.4 at 1e9. Beyond ~1e9 distinct
+    grams collisions are no longer rare; widen the key to two
+    columns (a second 60-bit md5 slice) in operator and oracle
+    together.
 
     Output: (doc_a, doc_b, dot, norm_a2, norm_b2) for passing pairs.
     """

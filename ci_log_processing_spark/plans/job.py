@@ -9,8 +9,7 @@ Usage (local or cluster — only master/size differ):
       --input-dir /root/testdata/sf0.001 \
       --output-dir /tmp/clp_out \
       [--batch-ts "2024-01-01 00:00:00"] [--ref-year 2024] \
-      [--impl native|pandas] [--no-skip-debug] \
-      [--write-strategy repartition|salted] [--write-salt 8]
+      [--impl native|pandas] [--no-skip-debug]
 
 Writes:
   <out>/sinks/sink=<s>/event_date=<d>/
@@ -44,20 +43,6 @@ def main(argv=None):
     # --impl pandas stays as the mandated-path parity option.
     ap.add_argument("--impl", choices=["native", "pandas"], default="native")
     ap.add_argument("--no-skip-debug", action="store_true")
-    # fan-out write strategy (sinks.append_fanout; measured in
-    # BASELINE.md):
-    #   repartition — one exchange keyed on the table partition scheme;
-    #     cleanest file layout (files track sink x date), but a hot
-    #     date is one task — a skew/straggler risk at scale;
-    #   salted — same exchange plus a conv-hash salt: file layout
-    #     becomes (sink x date x salt) and a hot date spreads over
-    #     salt tasks, removing the one-task-per-date straggler.
-    ap.add_argument(
-        "--write-strategy",
-        choices=["repartition", "salted"],
-        default="repartition",
-    )
-    ap.add_argument("--write-salt", type=int, default=8)
     ap.add_argument("--no-write", action="store_true",
                     help="compute every sink row and count per-sink "
                          "rows, but write to Spark's noop sink instead "
@@ -156,7 +141,6 @@ def main(argv=None):
         *(F.count_if(F.col("sink") == s).alias(s) for s in SINKS),
     )
 
-    salt = args.write_salt if args.write_strategy == "salted" else None
     if args.no_write:
 
         def write(df):
@@ -174,7 +158,7 @@ def main(argv=None):
     else:
 
         def write(df):
-            append_fanout(df, sinks_dir, batch_id, salt=salt)
+            append_fanout(df, sinks_dir, batch_id)
 
     phases = {}
     t_w = time.time()

@@ -78,12 +78,7 @@ def fanout_rows(routed: DataFrame, batch_id: str) -> DataFrame:
     )
 
 
-def append_fanout(
-    routed: DataFrame,
-    path: str,
-    batch_id: str,
-    salt: int | None = None,
-) -> None:
+def append_fanout(routed: DataFrame, path: str, batch_id: str) -> None:
     """Route one batch into all four sinks in ONE write job — the
     reference's single pass per build (send_to_es,
     logsender.py:467-495), shared by the batch job and every follow
@@ -91,19 +86,12 @@ def append_fanout(
 
     One exchange keyed on the table partition scheme (sink,
     event_date), so files track (sink x date), not tasks x dates.
-    A `salt` adds a conv-hash salt key: files become
-    (sink x date x salt) and a hot date no longer lands in one task.
     The exchange has one partition per core (defaultParallelism):
     left to AQE, a small batch coalesces to a single task that writes
     every (sink, date) file serially."""
     spark = routed.sparkSession
-    keys = [F.col("sink"), F.col("event_date")]
-    if salt is not None:
-        # pmod, not %: xxhash64 is signed, and negative remainders
-        # would double the salt cells to 2*salt-1
-        keys.append(F.pmod(F.xxhash64("conv_id"), salt))
     w = fanout_rows(routed, batch_id).repartition(
-        spark.sparkContext.defaultParallelism, *keys
+        spark.sparkContext.defaultParallelism, "sink", "event_date"
     )
     # sink DDL seam: a real Iceberg catalog slots in as
     # IcebergTableSink without touching the plan (create_indices

@@ -22,9 +22,10 @@ plus its hourly aggregate to `<out>/agg_hourly/`. The reference's
 --follow likewise re-runs the one send_to_es pass
 (logsender.py:467-495).
 
-Checkpointing: Spark's own streaming checkpoint (offset tracking)
-+ our conv-manifest checkpoint both apply; a re-run neither
-re-reads files nor re-emits convs.
+Checkpointing: only Spark's own streaming checkpoint (file-source
+offsets under `<out>/_stream_ckpt`) stops a file from being re-read.
+The batch job's conv-manifest checkpoint is neither read nor written
+here, so a conv that reappears in a new file is emitted again.
 """
 
 from __future__ import annotations

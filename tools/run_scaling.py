@@ -1,18 +1,32 @@
 #!/usr/bin/env python
-"""Two-cluster-size scaling evidence (BASELINE.json north rule).
+"""Two-parallelism scaling harness: the same work at local[N] and
+local[4N], each in a fresh spark-submit JVM, normalised to the host's
+own N -> 4N scaling ceilings. 4N is this process's CPU affinity count
+and N = max(1, 4N // 4).
 
-No real cluster exists in this sandbox, so the criterion
-"throughput scaling efficiency >= 0.8 from N to 4N executors" is
-evidenced by running the IDENTICAL spark-submit job at local[8] and
-local[32] on the same input (fresh JVM per run so nothing is shared)
-and reporting throughput at both.
+  python tools/run_scaling.py job [n_turns] [--impl native|pandas] [--pinned]
+      the spark-submit job (run_pipeline.py) on n_turns generated
+      turns (default 20M), full and --no-write, best of 2 per level;
+  python tools/run_scaling.py queries NAME[,NAME...] [n_docs]
+      bench.py on the named queries (any bench or queries() name) at
+      $SPARK_GRAFT_SF_DIR, or on an n_docs-document generated corpus
+      (documents.parquet only, for the corpus tier).
 
-Usage: python tools/run_scaling.py [n_turns] [--impl native|pandas]
-Writes results into BENCH.md-ready JSON on stdout.
+Prints one JSON line. Efficiency is speedup / (4N / N); a ceiling is
+the same ratio for perfbench.calibrate's independent md5 (cpu) and
+numpy-sweep (membw) workers, so eff_vs_*_ceiling = 1.0 means the
+work scales as well as the host does. --pinned confines each job
+JVM, and each calibration, to its first N cpus: unpinned, the N leg's
+auxiliary threads (GC, netty, python workers) spill onto idle cores
+that a real N-core executor would not get.
+
+A/B of two checkouts: run the same leg in each and compare the
+reported times and bench.py checksums.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import shutil
@@ -23,303 +37,173 @@ import tempfile
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+CPUS = sorted(os.sched_getaffinity(0))
+HI = len(CPUS)
+LO = max(1, HI // 4)
+# tmpfs for sink output and shuffle dirs: wall times on a VM's
+# virtual disk vary +-35% run to run from writeback stalls
+SHM = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
 
-def run_job(
-    master_cores: int,
-    transcripts: str,
-    impl: str,
-    no_write: bool = False,
-    pin: bool = False,
-) -> dict:
-    # tmpfs for sink output AND shuffle dirs: measured wall times on
-    # the VM's virtual disk vary +-35% run-to-run from writeback
-    # stalls; tmpfs isolates the throughput metric from that noise
-    # (a real cluster writes to distributed storage whose behavior
-    # this disk does not model anyway)
-    shm = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
-    out_dir = tempfile.mkdtemp(prefix=f"scale_{master_cores}_", dir=shm)
-    local_dir = tempfile.mkdtemp(prefix="spark_local_", dir=shm)
-    summary = os.path.join(out_dir, "summary.json")
+
+def submit(cores: int, pinned: bool, args: list, env: dict):
+    local_dir = tempfile.mkdtemp(prefix="spark_local_", dir=SHM)
+    pin = ["taskset", "-c", ",".join(map(str, CPUS[:cores]))] if pinned else []
     try:
-        env = dict(os.environ)
-        # 4 shuffle partitions per core: the skewed long-transcript
-        # tail overlaps instead of straggling a single task wave
-        env["SPARK_GRAFT_SHUFFLE"] = str(master_cores * 4)
-        # --pinned: confine the WHOLE JVM (worker threads, GC, netty
-        # IO, python workers) to a cpuset of exactly master_cores
-        # cpus. Unpinned local[N] on a 4N-core box lets the N-leg's
-        # auxiliary threads spill onto idle cores — a real N-core
-        # executor (cgroup-capped by YARN/k8s) gets no such gift, so
-        # the unpinned 8->32 ratio UNDER-reads the engine's true
-        # N->4N scaling (the inverse of the python-worker artifact
-        # documented for the LSH tier in BASELINE.md).
-        pin_prefix = (
-            ["taskset", "-c", f"0-{master_cores - 1}"] if pin else []
+        return subprocess.run(
+            pin + [
+                "spark-submit", "--master", f"local[{cores}]",
+                # the same right-sized heap at both levels: an
+                # oversized one (48g) measured 2.5x slower at local[32]
+                "--driver-memory", "8g",
+                "--conf", f"spark.local.dir={local_dir}",
+                *args,
+            ],
+            capture_output=True, text=True, timeout=3600, cwd=REPO, env=env,
         )
-        proc = subprocess.run(
-            pin_prefix
-            + [
-                "spark-submit",
-                "--master",
-                f"local[{master_cores}]",
-                # identical, RIGHT-SIZED heap for both runs: an
-                # oversized heap (48g) measured 2.5x slower at
-                # local[32] — cold-page zeroing + G1 locality — so
-                # size like a real executor, not like the machine
-                "--driver-memory",
-                "8g",
-                "--conf",
-                f"spark.local.dir={local_dir}",
-                os.path.join(REPO, "run_pipeline.py"),
-                "--master",
-                f"local[{master_cores}]",
-                "--transcripts-parquet",
-                transcripts,
-                "--input-dir",
-                "unused",
-                "--output-dir",
-                out_dir,
-                "--impl",
-                impl,
-                "--summary-json",
-                summary,
-            ]
-            + (["--no-write"] if no_write else []),
-            capture_output=True,
-            text=True,
-            timeout=1800,
-            cwd=REPO,
-            env=env,
-        )
+    finally:
+        shutil.rmtree(local_dir, ignore_errors=True)
+
+
+def failed(what: str, proc) -> SystemExit:
+    return SystemExit(
+        f"{what} failed, rc={proc.returncode}\n{(proc.stderr or '')[-2000:]}"
+    )
+
+
+def run_job(cores, data_dir, impl, pinned, no_write) -> dict:
+    out_dir = tempfile.mkdtemp(prefix=f"scale_{cores}_", dir=SHM)
+    summary = os.path.join(out_dir, "summary.json")
+    # 4 shuffle partitions per core: the skewed long-transcript tail
+    # overlaps instead of straggling a single task wave
+    env = dict(os.environ, SPARK_GRAFT_SHUFFLE=str(cores * 4))
+    try:
+        proc = submit(cores, pinned, [
+            os.path.join(REPO, "run_pipeline.py"),
+            "--master", f"local[{cores}]",
+            "--transcripts-parquet", data_dir,
+            "--input-dir", "unused",
+            "--output-dir", out_dir,
+            "--impl", impl,
+            "--summary-json", summary,
+        ] + (["--no-write"] if no_write else []), env)
         if not os.path.exists(summary):
-            tail = (proc.stderr or "")[-2000:]
-            print(
-                f"# run_job(local[{master_cores}]) produced no summary; "
-                f"rc={proc.returncode}\n{tail}",
-                file=sys.stderr,
-            )
-            return None
+            raise failed(f"job at local[{cores}]", proc)
         with open(summary) as f:
             return json.load(f)
     finally:
         shutil.rmtree(out_dir, ignore_errors=True)
-        shutil.rmtree(local_dir, ignore_errors=True)
 
 
-def _work(_):
-    import hashlib
-
-    h = b"x" * 64
-    for _i in range(2_000_000):
-        h = hashlib.md5(h).digest()
-    return 1
-
-
-def _work_mem(_):
-    import numpy as np
-
-    a = np.zeros(32_000_000, dtype=np.int64)  # 256 MB
-    s = 0
-    for _i in range(8):
-        s += int(a.sum())
-        a += 1
-    return s
+def run_bench(cores, names, env) -> dict:
+    env = dict(env, SPARK_GRAFT_CPUS=str(cores))
+    proc = submit(cores, False, [os.path.join(REPO, "bench.py"), *names], env)
+    lines = [ln for ln in proc.stdout.splitlines() if ln.startswith("{")]
+    if proc.returncode or not lines:
+        raise failed(f"bench.py at local[{cores}]", proc)
+    return json.loads(lines[-1])
 
 
-def hardware_ceiling() -> dict:
-    """Measured pure-CPU 8->32-process scaling of THIS box.
+def ceilings(pinned: bool) -> dict:
+    from perfbench.calibrate import calibrate
 
-    On a real cluster, 4N executors means 4x machines at identical
-    clock; a single VM running 32 threads drops its all-core
-    frequency, so raw 8->32 thread scaling tops out well below 4x
-    for ANY software. This calibration (embarrassingly parallel
-    md5 in independent processes — no shared state, no GIL) gives
-    the machine's own ceiling, against which the pipeline's
-    efficiency is normalized.
-    """
-    import time
-    from multiprocessing import Pool
-
-    return _ceiling_inner(Pool, time, pin=False)
-
-
-def hardware_ceiling_pinned() -> dict:
-    """Same calibration, but each n-worker pool runs inside an
-    n-cpu affinity set (children inherit it) — the apples-to-apples
-    ceiling for --pinned job legs, where 8 means 8 cpus."""
-    import time
-    from multiprocessing import Pool
-
-    return _ceiling_inner(Pool, time, pin=True)
+    rates = {}
+    for n in (LO, HI):
+        if pinned:
+            os.sched_setaffinity(0, CPUS[:n])  # workers inherit it
+        try:
+            rates[n] = calibrate(n)
+        finally:
+            os.sched_setaffinity(0, CPUS)
+    return {
+        kind: round(rates[HI][key] / (HI / LO * rates[LO][key]), 3)
+        for kind, key in (("cpu", "cpu_mhash_per_s"), ("membw", "membw_gb_per_s"))
+    }
 
 
-def _ceiling_inner(Pool, time, pin: bool) -> dict:
-    all_cpus = set(range(os.cpu_count() or 32))
-    out = {}
-    for tag, fn in (("cpu", _work), ("membw", _work_mem)):
-        rates = {}
-        for n in (8, 32):
-            if pin:
-                os.sched_setaffinity(0, set(range(n)))
-            try:
-                t0 = time.time()
-                with Pool(n) as p:
-                    p.map(fn, range(n * 2))
-                rates[n] = n * 2 / (time.time() - t0)
-            finally:
-                if pin:
-                    os.sched_setaffinity(0, all_cpus)
-        out[f"hardware_ceiling_{tag}_8_to_32"] = round(
-            rates[32] / (4 * rates[8]), 3
-        )
+def scaling(speedup: float, ceiling: dict) -> dict:
+    eff = speedup / (HI / LO)
+    return {
+        "speedup": round(speedup, 3),
+        "efficiency_N_to_4N": round(eff, 3),
+        **{f"eff_vs_{k}_ceiling": round(eff / c, 3) for k, c in ceiling.items()},
+    }
+
+
+def walls(t_lo: float, t_hi: float, ceiling: dict) -> dict:
+    return {"wall_sec": [t_lo, t_hi], **scaling(t_lo / max(t_hi, 1e-3), ceiling)}
+
+
+def job_leg(args) -> dict:
+    from ci_log_processing_spark.datagen import write_transcripts_parallel
+
+    data_dir = os.path.join(REPO, ".bench_data", f"transcripts_{args.n_turns}")
+    write_transcripts_parallel(data_dir, args.n_turns)
+    best = {}
+    for no_write in (False, True):
+        for cores in (LO, HI):
+            # best of 2: single-VM wall times vary ~15% run to run
+            runs = [
+                run_job(cores, data_dir, args.impl, args.pinned, no_write)
+                for _ in range(2)
+            ]
+            best[no_write, cores] = max(runs, key=lambda r: r["rows_per_sec"] or 0)
+    ceiling = ceilings(args.pinned)
+    out = {
+        "leg": "job", "n_turns": args.n_turns, "impl": args.impl,
+        "pinned": args.pinned, "levels": [LO, HI], "ceiling": ceiling,
+    }
+    for no_write, key in ((False, "full"), (True, "compute_only")):
+        lo, hi = best[no_write, LO], best[no_write, HI]
+        out[key] = {
+            "wall_sec": [lo["wall_sec"], hi["wall_sec"]],
+            "rows_per_sec": [lo["rows_per_sec"], hi["rows_per_sec"]],
+            **scaling(hi["rows_per_sec"] / lo["rows_per_sec"], ceiling),
+        }
     return out
 
 
-def _rps(r: dict) -> float:
-    """rows_per_sec for best-of comparison; None (wall==0 in
-    no-write mode) sorts below every real measurement."""
-    v = r.get("rows_per_sec")
-    return float("-inf") if v is None else v
+def queries_leg(args) -> dict:
+    env = dict(os.environ)
+    if args.n_docs:
+        from ci_log_processing_spark.datagen import write_documents
+
+        env["SPARK_GRAFT_SF_DIR"] = write_documents(
+            os.path.join(REPO, ".bench_data", f"documents_{args.n_docs}"),
+            args.n_docs,
+        )
+    names = args.names.split(",")
+    lo, hi = (run_bench(c, names, env) for c in (LO, HI))
+    ceiling = ceilings(pinned=False)
+    return {
+        "leg": "queries", "sf": lo["sf"], "n_docs": args.n_docs,
+        "levels": [LO, HI], "ceiling": ceiling,
+        "per_query": {
+            n: walls(lo["queries"][n], hi["queries"][n], ceiling)
+            for n in names
+        },
+        "total": walls(lo["value"], hi["value"], ceiling),
+        "checksum_mismatch": [
+            n for n in names if lo["checksums"][n] != hi["checksums"][n]
+        ],
+    }
 
 
 def main():
-    n_turns = int(sys.argv[1]) if len(sys.argv) > 1 else 20_000_000
-    impl = "native" if "native" in sys.argv[1:] else "pandas"
-    pinned = "--pinned" in sys.argv[1:]
-    impl_key = f"{impl}_pinned" if pinned else impl
-
-    from ci_log_processing_spark.datagen import write_transcripts_parallel
-
-    data_dir = os.path.join(REPO, ".bench_data", f"transcripts_{n_turns}")
-    write_transcripts_parallel(data_dir, n_turns)
-
-    results = {}
-    compute = {}
-    for cores in (8, 32):
-        # best of 2 — single-VM wall times vary ~15% run to run
-        # (page-cache + host noise); each attempt gets a fresh
-        # output dir so the checkpoint never short-circuits it
-        best = None
-        for _attempt in range(3):
-            r = run_job(cores, data_dir, impl, pin=pinned)
-            if r is None:
-                continue
-            if best is None or _rps(r) > _rps(best):
-                best = r
-            if _attempt >= 1 and best is not None:
-                break
-        if best is None:
-            print(
-                f"# FATAL: all attempts at local[{cores}] failed to "
-                f"produce a summary; partial results: "
-                f"{json.dumps(results)}",
-                file=sys.stderr,
-            )
-            sys.exit(1)
-        results[cores] = best
-        r = best
-        print(
-            f"# local[{cores}]: {r['rows']} rows in {r['wall_sec']}s "
-            f"-> {r['rows_per_sec']} rows/s",
-            file=sys.stderr,
-        )
-        # compute-only (parse->enrich->route, no sink write): the
-        # engine's own scaling, isolated from the single shared VM
-        # disk that a real 4N cluster would not have
-        best = None
-        for _attempt in range(3):
-            r = run_job(cores, data_dir, impl, no_write=True, pin=pinned)
-            if r is None:
-                continue
-            if best is None or _rps(r) > _rps(best):
-                best = r
-            if _attempt >= 1 and best is not None:
-                break
-        if best is None:
-            print(
-                f"# FATAL: all compute-only attempts at local[{cores}] "
-                f"failed; partial results: {json.dumps(results)}",
-                file=sys.stderr,
-            )
-            sys.exit(1)
-        compute[cores] = best
-        print(
-            f"# local[{cores}] compute-only: {best['wall_sec']}s "
-            f"-> {best['rows_per_sec']} rows/s",
-            file=sys.stderr,
-        )
-
-    hw = hardware_ceiling_pinned() if pinned else hardware_ceiling()
-    print(f"# hardware ceiling (pinned={pinned}): {hw}", file=sys.stderr)
-
-    tp8 = results[8]["rows_per_sec"]
-    tp32 = results[32]["rows_per_sec"]
-    eff = tp32 / (4 * tp8)
-    ctp8 = compute[8]["rows_per_sec"]
-    ctp32 = compute[32]["rows_per_sec"]
-    ceff = ctp32 / (4 * ctp8)
-    payload = (
-            {
-                "n_turns": n_turns,
-                "impl": impl_key,
-                "pinned_cpuset": pinned,
-                "throughput_local8": tp8,
-                "throughput_local32": tp32,
-                "speedup_8_to_32": round(tp32 / tp8, 3),
-                "scaling_efficiency_N_to_4N": round(eff, 3),
-                "compute_only_throughput_local8": ctp8,
-                "compute_only_throughput_local32": ctp32,
-                "compute_only_scaling_efficiency": round(ceff, 3),
-                **hw,
-                "compute_eff_normalized_to_cpu_ceiling": round(
-                    ceff / hw["hardware_ceiling_cpu_8_to_32"], 3
-                ),
-                "compute_eff_normalized_to_membw_ceiling": round(
-                    ceff / hw["hardware_ceiling_membw_8_to_32"], 3
-                ),
-                "efficiency_normalized_to_cpu_ceiling": round(
-                    eff / hw["hardware_ceiling_cpu_8_to_32"], 3
-                ),
-                "efficiency_normalized_to_membw_ceiling": round(
-                    eff / hw["hardware_ceiling_membw_8_to_32"], 3
-                ),
-                "wall_local8_sec": results[8]["wall_sec"],
-                "wall_local32_sec": results[32]["wall_sec"],
-            }
+    ap = argparse.ArgumentParser(
+        description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter
     )
-    # cache for bench.py to surface in its JSON line — merged by
-    # impl so native and pandas runs coexist
-    cache = os.path.join(REPO, "SCALING.json")
-    merged = {}
-    if os.path.exists(cache):
-        try:
-            with open(cache) as f:
-                prev = json.load(f)
-            merged = prev if "impl" not in prev else {prev["impl"]: prev}
-        except Exception:
-            merged = {}
-    # keep the previous host's entry when the measured ceiling moved
-    # MATERIALLY (different VM placement): the calibration is itself
-    # noisy (same-host re-measures land within ~0.05-0.15), so exact
-    # float inequality would mislabel every same-host re-run as a
-    # host change and freeze a stale snapshot. Tolerance 0.2 on the
-    # membw ceiling separates placements (observed 0.625 vs 0.21)
-    # from noise; plain assignment (not setdefault) keeps the MOST
-    # RECENT superseded placement rather than the first forever.
-    prev_entry = merged.get(impl_key)
-    if prev_entry is not None:
-        prev_c = prev_entry.get("hardware_ceiling_membw_8_to_32")
-        new_c = payload.get("hardware_ceiling_membw_8_to_32")
-        if (
-            prev_c is not None
-            and new_c is not None
-            and abs(prev_c - new_c) > 0.2
-        ):
-            merged[f"{impl_key}_prev_host"] = prev_entry
-    merged[impl_key] = payload
-    with open(cache, "w") as f:
-        json.dump(merged, f)
-    print(json.dumps(payload))
+    legs = ap.add_subparsers(dest="leg", required=True)
+    job = legs.add_parser("job")
+    job.add_argument("n_turns", type=int, nargs="?", default=20_000_000)
+    job.add_argument("--impl", choices=["native", "pandas"], default="native")
+    job.add_argument("--pinned", action="store_true")
+    job.set_defaults(run=job_leg)
+    q = legs.add_parser("queries")
+    q.add_argument("names")
+    q.add_argument("n_docs", type=int, nargs="?")
+    q.set_defaults(run=queries_leg)
+    args = ap.parse_args()
+    print(json.dumps(args.run(args)))
 
 
 if __name__ == "__main__":
