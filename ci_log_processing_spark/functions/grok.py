@@ -19,8 +19,6 @@ Two implementations:
 
 from __future__ import annotations
 
-import pandas as pd
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
@@ -124,6 +122,13 @@ def make_grok_udf(ref_year: int = 2024):
     cascade's "first match wins" is preserved by masking rows already
     parsed by an earlier pattern (reference: logsender.py:362-365).
     """
+    # imported on first use, not with the module: only this path needs
+    # pandas. pandas_udf resolves the string annotations below (this
+    # module has `from __future__ import annotations`) through module
+    # globals, so `pd` is bound there.
+    global pd
+    import pandas as pd
+
     # (extract_rx, to_datetime_fmt, frac_group, yearless) mirrors
     # timestamps._SPARK_STEPS
     steps = [

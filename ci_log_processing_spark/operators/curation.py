@@ -1452,7 +1452,12 @@ def decontaminate_spans(
         [(i, s) for i, s in enumerate(benchmark_snippets)],
         f"snip_id long, {text_col} string",
     )
-    keys_df = (
+    from .dedup import _register_persist
+
+    # persisted (registry-scoped, released via
+    # dedup.release_persisted): the probe and the semi-join below
+    # share one computation of the key set
+    keys_df = _register_persist(
         _hashed_toks(snip_df, "snip_id")
         .select(F.explode(spans).alias("h"))
         .distinct()

@@ -46,8 +46,8 @@ def _lookup(mapping: dict) -> Column:
     return F.create_map(*(F.lit(x) for kv in mapping.items() for x in kv))
 
 
-def with_enrichment(df: DataFrame, spark: SparkSession) -> DataFrame:
-    """Add pipeline, category, tags via literal map lookups.
+def enrichment_cols() -> dict[str, Column]:
+    """pipeline, category, tags as literal map lookups over role/tool.
 
     Miss semantics:
       * unknown role -> pipeline 'NONE';
@@ -56,7 +56,6 @@ def with_enrichment(df: DataFrame, spark: SparkSession) -> DataFrame:
       * null tool   -> category NULL, tags [].
     Tags are emitted sorted for determinism (the reference's
     list(set(...)) ordering is nondeterministic — SURVEY.md §4).
-    `spark` is unused.
     """
     role, tool = F.col("role"), F.col("tool")
     pipeline = _lookup(ROLE_PIPELINE)[role]
@@ -66,13 +65,17 @@ def with_enrichment(df: DataFrame, spark: SparkSession) -> DataFrame:
     )[tool]
     no_tags = F.array().cast("array<string>")
     tags = F.array_union(F.coalesce(cat_tags, no_tags), F.array(tool))
-    return (
-        df.withColumn("pipeline", F.coalesce(pipeline, F.lit("NONE")))
-        .withColumn("category", F.coalesce(category, tool))
-        .withColumn(
-            "tags", F.when(tool.isNull(), no_tags).otherwise(F.array_sort(tags))
-        )
-    )
+    return {
+        "pipeline": F.coalesce(pipeline, F.lit("NONE")),
+        "category": F.coalesce(category, tool),
+        "tags": F.when(tool.isNull(), no_tags).otherwise(F.array_sort(tags)),
+    }
+
+
+def with_enrichment(df: DataFrame, spark: SparkSession) -> DataFrame:
+    """Add pipeline, category, tags (enrichment_cols). `spark` is
+    unused."""
+    return df.withColumns(enrichment_cols())
 
 
 # ---- J1: ordered suffix-match lookup (get_file_info parity) ----------

@@ -30,26 +30,34 @@ def _running_window():
     )
 
 
-def with_filled_ts(
-    df: DataFrame, batch_ts: str, event_ts_col: str = "event_ts"
-) -> DataFrame:
-    """Add `filled_ts`: forward-filled event_ts with batch_ts fallback."""
+def filled_ts_col(batch_ts: str, event_ts_col: str = "event_ts") -> Column:
+    """Forward-filled event_ts with batch_ts fallback."""
     ffill = F.last(F.col(event_ts_col), ignorenulls=True).over(_running_window())
-    return df.withColumn(
-        "filled_ts", F.coalesce(ffill, F.lit(batch_ts).cast("timestamp"))
-    )
+    return F.coalesce(ffill, F.lit(batch_ts).cast("timestamp"))
 
 
-def with_prior_ts_count(
-    df: DataFrame, event_ts_col: str = "event_ts"
-) -> DataFrame:
-    """Add `prior_ts_count`: parseable timestamps seen strictly before
-    this turn within the conversation. Drives the journald-preamble
-    rule (drop the '-- Logs begin at ' line only while nothing has
-    been timestamped yet — logsender.py:399-401)."""
+def prior_ts_count_col(event_ts_col: str = "event_ts") -> Column:
+    """Parseable timestamps seen strictly before this turn within the
+    conversation. Drives the journald-preamble rule (drop the
+    '-- Logs begin at ' line only while nothing has been timestamped
+    yet — logsender.py:399-401)."""
     w = (
         Window.partitionBy("conv_id")
         .orderBy("turn_idx")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    return df.withColumn("prior_ts_count", F.count(F.col(event_ts_col)).over(w))
+    return F.count(F.col(event_ts_col)).over(w)
+
+
+def with_filled_ts(
+    df: DataFrame, batch_ts: str, event_ts_col: str = "event_ts"
+) -> DataFrame:
+    """Add `filled_ts` (filled_ts_col)."""
+    return df.withColumn("filled_ts", filled_ts_col(batch_ts, event_ts_col))
+
+
+def with_prior_ts_count(
+    df: DataFrame, event_ts_col: str = "event_ts"
+) -> DataFrame:
+    """Add `prior_ts_count` (prior_ts_count_col)."""
+    return df.withColumn("prior_ts_count", prior_ts_count_col(event_ts_col))

@@ -56,13 +56,13 @@ def drop_reason_col(
     return c.otherwise(F.lit(None).cast("string"))
 
 
-def with_sink(
-    df: DataFrame,
-    skip_debug: bool = True,
-    has_metadata: Column | None = None,
-) -> DataFrame:
-    """Add drop_reason, then sink derived from it (precedence 5-7 need
-    severity, tool, role)."""
+def route_cols(
+    skip_debug: bool = True, has_metadata: Column | None = None
+) -> tuple[Column, Column]:
+    """(drop_reason, sink). The sink CASE reads the drop_reason column
+    and sends every row with a reason to drop_queue (precedence 5-7
+    need severity, tool, role); `with_route` adds them in that
+    order."""
     sink = (
         F.when(F.col("drop_reason").isNotNull(), F.lit("drop_queue"))
         .when(F.col("severity").isin("ERROR", "CRITICAL"), F.lit("errors"))
@@ -72,8 +72,23 @@ def with_sink(
         )
         .otherwise(F.lit("agent_turns"))
     )
+    return drop_reason_col(skip_debug, has_metadata), sink
+
+
+def with_route(df: DataFrame, route: tuple[Column, Column]) -> DataFrame:
+    """Add sink and drop_reason (route_cols), in that column order."""
+    drop_reason, sink = route
     return (
-        df.withColumn("drop_reason", drop_reason_col(skip_debug, has_metadata))
+        df.withColumn("drop_reason", drop_reason)
         .withColumn("sink", sink)
         .select(*df.columns, "sink", "drop_reason")
     )
+
+
+def with_sink(
+    df: DataFrame,
+    skip_debug: bool = True,
+    has_metadata: Column | None = None,
+) -> DataFrame:
+    """Add sink and drop_reason."""
+    return with_route(df, route_cols(skip_debug, has_metadata))

@@ -15,6 +15,19 @@ Trigger:
     re-run analog; used in tests);
   * processingTime=Ns  — the literal --follow loop.
 
+Once per stream (run_follow, before the first trigger): the
+RoutingPlan — every parse, ffill, enrich and route expression — and
+the meta-presence frame, persisted and materialized so each batch's
+broadcast join reads the cache instead of rescanning, aggregating
+and re-broadcasting the metadata table. The frame is released when
+the query ends: after awaitTermination for availableNow, through a
+query listener when a processingTime query stops or fails.
+
+Once per micro-batch (process_batch): the isEmpty guard, the plan
+applied to the batch (conv exchange at spark.sql.shuffle.partitions,
+the one Window, the presence join) and persisted, the fan-out write,
+the hourly aggregate write, and the unpersist.
+
 Writes: each micro-batch appends the batch job's own sink table,
 `<out>/sinks/sink=<s>/event_date=<d>/`, through the job's one
 fan-out write (sinks.append_fanout, batch_id = the micro-batch id),
@@ -31,18 +44,51 @@ here, so a conv that reappears in a new file is emitted again.
 from __future__ import annotations
 
 import os
+import threading
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQueryListener
 
 from ..operators.aggregate import hourly_agg
-from ..plans.pipeline import DEFAULT_BATCH_TS, DEFAULT_REF_YEAR, full_pipeline
+from ..plans.pipeline import DEFAULT_BATCH_TS, DEFAULT_REF_YEAR, RoutingPlan
 from ..sinks import append_fanout
 
 TRANSCRIPT_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, "
     "tool string, ts timestamp"
 )
+
+
+class _ReleaseOnTermination(StreamingQueryListener):
+    """Unpersists `frame` once query `q` stops or fails, then removes
+    itself (a processingTime query outlives run_follow)."""
+
+    def __init__(self, spark: SparkSession, q, frame: DataFrame):
+        self.spark = spark
+        self.run_id = str(q.runId)
+        self.frame = frame
+        self._lock = threading.Lock()
+        spark.streams.addListener(self)
+        if not q.isActive:  # terminated before the listener was added
+            self.release()
+
+    def onQueryStarted(self, event):
+        pass
+
+    def onQueryProgress(self, event):
+        pass
+
+    def onQueryTerminated(self, event):
+        if str(event.runId) == self.run_id:
+            self.release()
+
+    def release(self):
+        with self._lock:
+            frame, self.frame = self.frame, None
+        if frame is not None:
+            frame.unpersist()
+            self.spark.streams.removeListener(self)
 
 
 def run_follow(
@@ -61,18 +107,15 @@ def run_follow(
     rule exactly as in batch mode. Returns the StreamingQuery
     (already awaited when availableNow).
     """
+    plan = RoutingPlan(
+        spark, batch_ts=batch_ts, ref_year=ref_year, impl=impl, meta=meta
+    )
 
     def process_batch(batch_df, batch_id: int):
         if batch_df.isEmpty():
             return
-        routed = full_pipeline(
-            batch_df,
-            spark,
-            batch_ts=batch_ts,
-            ref_year=ref_year,
-            impl=impl,
-            meta=meta,
-        ).persist()  # the write and hourly_agg both consume it
+        # the write and hourly_agg both consume it
+        routed = plan(batch_df).persist()
         batch = str(batch_id)  # the sink table's batch_id is a string
         try:
             append_fanout(routed, os.path.join(output_dir, "sinks"), batch)
@@ -95,9 +138,28 @@ def run_follow(
             "checkpointLocation", os.path.join(output_dir, "_stream_ckpt")
         )
     )
-    if processing_time:
-        q = writer.trigger(processingTime=processing_time).start()
+
+    def start():
+        if processing_time:
+            return writer.trigger(processingTime=processing_time).start()
+        q = writer.trigger(availableNow=True).start()
+        q.awaitTermination()
         return q
-    q = writer.trigger(availableNow=True).start()
-    q.awaitTermination()
+
+    present = plan.present
+    if present is None:
+        return start()
+    present.persist()
+    present.count()  # materialized before the first trigger
+    if not processing_time:
+        try:
+            return start()
+        finally:
+            present.unpersist()
+    try:
+        q = start()
+    except BaseException:
+        present.unpersist()
+        raise
+    _ReleaseOnTermination(spark, q, present)
     return q

@@ -522,6 +522,7 @@ def test_decontaminate_spans_big_set_routes_to_semijoin(spark):
     from ci_log_processing_spark.operators.curation import (
         decontaminate_spans,
     )
+    from ci_log_processing_spark.operators.dedup import release_persisted
 
     docs = spark.createDataFrame(
         [
@@ -545,11 +546,14 @@ def test_decontaminate_spans_big_set_routes_to_semijoin(spark):
     # never appears as an IN-list in the plan
     assert "LeftSemi" in big_plan, big_plan
     assert " IN (" not in big_plan, big_plan
+    # the semi-join reads the key set the probe already computed
+    assert "InMemoryRelation" in big_plan, big_plan
 
     rows_lit = sorted(map(tuple, lit.collect()), key=lambda t: t[0])
     rows_big = sorted(map(tuple, big.collect()), key=lambda t: t[0])
     assert rows_lit == rows_big
     assert rows_big[0][3] == "keep jumps end"
+    release_persisted()
 
 
 def test_fuzzy_decontaminate_near_dup_and_plan(spark):

@@ -3,10 +3,12 @@ contents as the batch pipeline — the reference's --follow loop is a
 micro-batched run of the same logic (logsender.py:683-687)."""
 
 import os
+import time
 
+import pytest
 from pyspark.sql import functions as F
 
-from ci_log_processing_spark.plans.pipeline import full_pipeline
+from ci_log_processing_spark.plans.pipeline import RoutingPlan, full_pipeline
 from ci_log_processing_spark.sources.transcripts import load_transcripts
 from ci_log_processing_spark.streaming.follow import run_follow
 
@@ -67,6 +69,98 @@ def test_follow_matches_batch(spark, tmp_path):
             os.path.join(sinks_dir, f"sink={sink}")
         ).count()
         assert got == expected, ("after-restart", sink, got, expected)
+
+
+def _meta_without_every_tenth_conv(t):
+    convs = t.select("conv_id").distinct()
+    return convs.filter(F.abs(F.hash("conv_id")) % 10 != 0)
+
+
+def _persisted_rdds(spark):
+    """Ids of the session's persisted RDDs (earlier tests may leave
+    some behind, so callers compare against a snapshot)."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_follow_with_meta_matches_batch(spark, tmp_path):
+    """The no_metadata rule holds across micro-batches that share one
+    persisted presence frame, and the frame is released after the
+    drain."""
+    t = load_transcripts(spark, SF)
+    meta = _meta_without_every_tenth_conv(t)
+    in_dir = str(tmp_path / "transcripts")
+    out_dir = str(tmp_path / "out")
+    t.repartition(10, "conv_id").write.parquet(in_dir)
+    files = [f for f in os.listdir(in_dir) if f.endswith(".parquet")]
+    assert len(files) >= 9, files
+
+    before = _persisted_rdds(spark)
+    q = run_follow(spark, in_dir, out_dir, meta=meta)
+
+    batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
+    assert len(batches) >= 2, batches  # maxFilesPerTrigger is 8
+    assert _persisted_rdds(spark) == before
+    batch = full_pipeline(t, spark, meta=meta)
+    table = spark.read.parquet(os.path.join(out_dir, "sinks"))
+    for col in ("sink", "drop_reason"):
+        assert _counts_by(table, col) == _counts_by(batch, col), col
+    assert _counts_by(table, "drop_reason")["no_metadata"] > 0
+
+
+def test_follow_releases_presence_on_stop_and_error(spark, tmp_path):
+    """The persisted presence frame is gone once the query ends:
+    after a processingTime query is stopped, and after a micro-batch
+    raises (the error still reaches the caller)."""
+    t = load_transcripts(spark, SF)
+    meta = _meta_without_every_tenth_conv(t)
+    in_dir = str(tmp_path / "transcripts")
+    t.repartition(2, "conv_id").write.parquet(in_dir)
+
+    before = _persisted_rdds(spark)
+
+    def released(timeout_s=30.0):
+        deadline = time.monotonic() + timeout_s
+        while _persisted_rdds(spark) != before and time.monotonic() < deadline:
+            time.sleep(0.2)
+        return _persisted_rdds(spark) == before
+
+    q = run_follow(
+        spark, in_dir, str(tmp_path / "polled"), meta=meta,
+        processing_time="1 second",
+    )
+    q.processAllAvailable()
+    # the presence frame, while the query runs
+    assert len(_persisted_rdds(spark) - before) == 1
+    q.stop()
+    assert released()
+
+    # a sinks path that is a file makes every micro-batch's write fail
+    for name, trigger in (("drained", None), ("failing", "1 second")):
+        out_dir = tmp_path / name
+        out_dir.mkdir()
+        (out_dir / "sinks").write_text("not a directory")
+        with pytest.raises(Exception):
+            q = run_follow(
+                spark, in_dir, str(out_dir), meta=meta, processing_time=trigger
+            )
+            q.awaitTermination(60)
+        assert released(), name
+
+
+def test_routing_plan_reuse_matches_fresh_pipeline(spark):
+    """One RoutingPlan applied to two different frames routes each
+    exactly as a fresh full_pipeline call, with and without meta."""
+    t = load_transcripts(spark, SF)
+    meta = _meta_without_every_tenth_conv(t)
+    half = F.abs(F.hash("conv_id")) % 2 == 0
+    frames = (t.filter(half), t.filter(~half))
+    for m in (None, meta):
+        plan = RoutingPlan(spark, meta=m)
+        for df in frames:
+            reused, fresh = plan(df), full_pipeline(df, spark, meta=m)
+            assert reused.columns == fresh.columns
+            assert reused.exceptAll(fresh).count() == 0
+            assert fresh.exceptAll(reused).count() == 0
 
 
 def test_watermarked_window_counts(spark, tmp_path):
