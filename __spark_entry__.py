@@ -12,7 +12,10 @@ transcripts.py), so no external data is needed.
 
 from __future__ import annotations
 
+import glob
+import json
 import os
+import re
 import sys
 from collections.abc import Callable
 
@@ -3768,171 +3771,31 @@ def entry(spark: SparkSession) -> DataFrame:
     return q_agg_hourly(spark, "/root/testdata/sf0.001")
 
 
-# Rotation for round 5 (the driver checks 50 queries per round).
-# State going in: 222 gate queries; 84 have NO driver CORRECTNESS row
-# in any round (added during round 4) and 38 more are r2-stale.
-# Order, per VERDICT_r4 "Next round" items 1 and 5:
-#   (1) the four pipe_sink_* routed-row contracts — the product's
-#       core routing invariant, last driver-verified in round 2
-#       (VERDICT item 5 demands r5 rows for all four);
-#   (2) the 13 deferred bit-variants from the round-4 plan;
-#   (3) the remaining 71 never-verified queries in gate order —
-#       the first 33 of these fill the 50-slot budget;
-#   (4) the 34 other r2-stale rows as the freshness tail.
-# Trade-off, stated for the judge: giving 4 slots to the pipe_sink
-# refresh means 38 (not 34) never-verified remain after round 5 —
-# VERDICT items 1 and 5 cannot both fully fit in one 50-slot round,
-# and the sink contracts won. Every query, reached or not, is also
-# swept by the committed full-surface local gate artifact
-# (GATE_LOCAL_r5.json, tools/check_correctness.py, sf0.01).
-#
-# ROUND-6 ROTATION PLAN (mechanical): put these 38 still-never-
-# verified queries first, then the stale tail of this tuple:
-#   dedup_threshold_curve, pipe_slo_burn, text_hashed_features,
-#   cur_apply_cdc, pipe_scd2_intervals, pipe_agg_incremental,
-#   cur_dq_audit, pipe_skew_audit, cur_snapshot_asof,
-#   cur_compaction_plan, cur_column_profile, cur_merge_stats_refresh,
-#   text_html_clean, pipe_volume_trend, cur_chat_lint,
-#   cur_stratified_split, cur_length_batches, text_skipgram_pairs,
-#   ret_inverted_index, dedup_count_cosine, text_collocations,
-#   ret_index_incremental, stream_index_maintenance, mm_ahash_pairs,
-#   text_phrase_merge, cur_sft_examples, ret_rrf_fusion,
-#   dedup_symspell_pairs, cur_reliability_iso, mm_scene_cuts,
-#   sim_kcenter_select, text_watermark, cur_render_chat,
-#   text_source_keyness, pipe_agg_cube, op_salted_join,
-#   pipe_ewma_alerts, dedup_cluster_cards
-# The gate surface is FROZEN (no new queries) until the
-# never-verified backlog is below one round's 50-slot budget.
-_VERIFY_FIRST = (
-    "pipe_sink_errors",
-    "pipe_sink_tool_calls",
-    "pipe_sink_agent_turns",
-    "pipe_sink_drop_queue",
-    "text_bpe_token_counts_arrow",
-    "text_repetition_arrow",
-    "dedup_embedding_srp_capped",
-    "sim_knn_graph_multiprobe",
-    "cur_full_curation_v5",
-    "cur_token_budget_soft",
-    "cur_token_budget_bpe",
-    "cur_dsir_sample",
-    "stream_latency_hdr",
-    "stream_hll_distinct",
-    "stream_cms_heavy",
-    "cur_priority_sample",
-    "cur_contrastive_triplets",
-    "op_asof_forward",
-    "stream_agg_incremental",
-    "stream_ewma_alerts",
-    "stream_cdc_merge",
-    "src_csv_quarantine",
-    "text_eval_f1",
-    "pipe_pseudonymize",
-    "text_bpe_fertility",
-    "cur_pack_bfd",
-    "dedup_sorted_neighborhood",
-    "cur_ks_drift",
-    "pipe_error_spike_mad",
-    "text_vocab_stats",
-    "ret_bm25_topk",
-    "dedup_winnow_pairs",
-    "cur_full_curation_v6",
-    "pipe_tool_arg_outcomes",
-    "cur_rl_trajectories",
-    "cur_quantile_norm",
-    "dedup_cross_source_matrix",
-    "cur_zorder_audit",
-    "evt_retention_cohorts",
-    "pipe_log_templates",
-    "pipe_conv_dedup",
-    "stream_template_novelty",
-    "cur_full_curation_v7",
-    "evt_funnel_steps",
-    "cur_k_anon_audit",
-    "pipe_tool_cooccurrence",
-    "evt_json_schema_profile",
-    "pipe_cusum_drift",
-    "evt_sessionize",
-    "mm_resize",
-    "dedup_threshold_curve",
-    "pipe_slo_burn",
-    "text_hashed_features",
-    "cur_apply_cdc",
-    "pipe_scd2_intervals",
-    "pipe_agg_incremental",
-    "cur_dq_audit",
-    "pipe_skew_audit",
-    "cur_snapshot_asof",
-    "cur_compaction_plan",
-    "cur_column_profile",
-    "cur_merge_stats_refresh",
-    "text_html_clean",
-    "pipe_volume_trend",
-    "cur_chat_lint",
-    "cur_stratified_split",
-    "cur_length_batches",
-    "text_skipgram_pairs",
-    "ret_inverted_index",
-    "dedup_count_cosine",
-    "text_collocations",
-    "ret_index_incremental",
-    "stream_index_maintenance",
-    "mm_ahash_pairs",
-    "text_phrase_merge",
-    "cur_sft_examples",
-    "ret_rrf_fusion",
-    "dedup_symspell_pairs",
-    "cur_reliability_iso",
-    "mm_scene_cuts",
-    "sim_kcenter_select",
-    "text_watermark",
-    "cur_render_chat",
-    "text_source_keyness",
-    "pipe_agg_cube",
-    "op_salted_join",
-    "pipe_ewma_alerts",
-    "dedup_cluster_cards",
-    "pipe_iso_format",
-    "pipe_sessionize",
-    "pipe_multiline",
-    "pipe_perf_flatten",
-    "pipe_meta_normalize",
-    "pipe_subunit_durations",
-    "pipe_subunit_binary",
-    "pipe_file_tags",
-    "stream_follow_route",
-    "stream_session_evictions",
-    "stream_dedup_exact",
-    "dedup_exact",
-    "dedup_exact_apply",
-    "dedup_substring_spans",
-    "dedup_incremental",
-    "dedup_ngram_jaccard",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "dedup_simhash_pairs",
-    "dedup_components",
-    "dedup_components_star",
-    "dedup_semantic_apply",
-    "dedup_embedding_cosine",
-    "dedup_embedding_cosine_capped",
-    "sim_ann_brute_force",
-    "sim_ann_bucketed",
-    "sim_ann_ivf_multiprobe",
-    "cur_decontaminate",
-    "cur_overlap_decontaminate",
-    "cur_stratified_downsample",
-    "cur_token_histogram",
-    "cur_pack_sequences",
-    "cur_top_ngrams",
-    "cur_chunk_documents",
-)
+def _latest_driver_rounds() -> dict[str, int]:
+    """query -> freshest round whose committed CORRECTNESS_r<N>.json
+    (beside this file) has it fully green: rows, schema and hash."""
+    here = os.path.dirname(os.path.abspath(__file__))
+    latest: dict[str, int] = {}
+    for path in glob.glob(os.path.join(here, "CORRECTNESS_r*.json")):
+        rnd = int(re.search(r"r(\d+)", os.path.basename(path)).group(1))
+        with open(path) as f:
+            for name, row in json.load(f).items():
+                if (
+                    row.get("rows_match")
+                    and row.get("schema_match")
+                    and row.get("hash_match")
+                ):
+                    latest[name] = max(latest.get(name, 0), rnd)
+    return latest
 
 
-def _never_verified_first(d: dict) -> dict:
-    head = {k: d[k] for k in _VERIFY_FIRST if k in d}
-    head.update({k: v for k, v in d.items() if k not in head})
-    return head
+def _driver_rotation(d: dict) -> dict:
+    """The driver checks a budget of queries per round, in this order:
+    queries never fully green first, then the rest by ascending
+    freshest green round; ties (and everything, with no artifacts
+    present) keep registry order."""
+    latest = _latest_driver_rounds()
+    return {k: d[k] for k in sorted(d, key=lambda k: latest.get(k, 0))}
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -4185,7 +4048,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return wrapped
 
     qs = {k: _release_then(v) for k, v in qs.items()}
-    return _never_verified_first(qs)
+    return _driver_rotation(qs)
 
 
 def oracle_sql() -> dict[str, str]:
@@ -4524,5 +4387,5 @@ def oracle_sql() -> dict[str, str]:
             "dedup_cluster_cards": od.q_cluster_cards(threshold=0.6),
         }
     )
-    return _never_verified_first(sqls)
+    return _driver_rotation(sqls)
 

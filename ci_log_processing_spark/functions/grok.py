@@ -30,6 +30,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from .timestamps import _SPARK_STEPS
+
 # Keep RE2-compatible (no lookbehind) so the same pattern text runs
 # in Spark (java.util.regex), DuckDB (RE2) and pandas (re).
 SEVERITIES = ("AUDIT", "CRITICAL", "DEBUG", "INFO", "TRACE", "WARNING", "ERROR")
@@ -129,23 +131,10 @@ def make_grok_udf(ref_year: int = 2024):
     global pd
     import pandas as pd
 
-    # (extract_rx, to_datetime_fmt, frac_group, yearless) mirrors
-    # timestamps._SPARK_STEPS
+    # the Catalyst cascade's table, parsed with strptime formats
     steps = [
-        (r"^([0-9]{4}-[0-9]{2}-[0-9]{2}T[0-9]{2}:[0-9]{2}:[0-9]{2})\.([0-9]{1,6})Z(?:\s|$)",
-         "%Y-%m-%dT%H:%M:%S.%f", True, False),
-        (r"^([0-9]{4}-[0-9]{2}-[0-9]{2} [0-9]{2}:[0-9]{2}:[0-9]{2})\.([0-9]{1,6})(?:\s|$)",
-         "%Y-%m-%d %H:%M:%S.%f", True, False),
-        (r"^([A-Za-z]{3} [0-9]{2} [0-9]{2}:[0-9]{2}:[0-9]{2})\.([0-9]{5})",
-         "%b %d %H:%M:%S.%f", True, True),
-        (r"^([A-Za-z]{3} [0-9]{2} [0-9]{2}:[0-9]{2}:[0-9]{2})(?:\s|$)",
-         "%b %d %H:%M:%S", False, True),
-        (r"^([-0-9T:]{19})", "%Y-%m-%dT%H:%M:%S", False, False),
-        # no trailing anchor — the reference's 14-char window stops
-        # after the seconds regardless of what follows
-        (r"^((?:Monday|Tuesday|Wednesday|Thursday|Friday|Saturday|Sunday) "
-         r"[0-9]{2} [A-Za-z]+ [0-9]{4}  [0-9]{2}:[0-9]{2}:[0-9]{2})",
-         "%A %d %B %Y  %H:%M:%S", False, False),
+        (rx, pyfmt, ngroups == 2, yearless)
+        for rx, ngroups, _, pyfmt, yearless in _SPARK_STEPS
     ]
 
     @pandas_udf(PARSED_SCHEMA)
@@ -169,14 +158,12 @@ def make_grok_udf(ref_year: int = 2024):
             head = ext[0]
             if has_frac:
                 cand = head + "." + ext[1].str.pad(6, side="right", fillchar="0")
-                fmt_full = fmt
             else:
                 cand = head
-                fmt_full = fmt
             hit = head.notna()
             if not hit.any():
                 continue
-            parsed = pd.to_datetime(cand[hit], format=fmt_full, errors="coerce")
+            parsed = pd.to_datetime(cand[hit], format=fmt, errors="coerce")
             if yearless:
                 # pandas fills missing years with 1900 like strptime
                 parsed = parsed.map(

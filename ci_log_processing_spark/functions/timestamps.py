@@ -20,8 +20,9 @@ Three implementations, one semantics:
   * ``parse_timestamp_py``  — pure Python (test oracle);
   * ``ts_cascade_col``      — Catalyst column expression (JVM-side,
     whole-stage-codegen, the fast path at scale);
-  * ``make_parse_udf`` in grok.py — Arrow-vectorized pandas UDF
-    (the north-star-mandated grok path; never per-row Python).
+  * ``make_grok_udf`` in grok.py — Arrow-vectorized pandas UDF
+    (never per-row Python); it runs the same ``_SPARK_STEPS`` table
+    with each step's strptime format.
 """
 
 from __future__ import annotations
@@ -77,17 +78,21 @@ def parse_timestamp_py(
 
 # --- Catalyst-expression implementation ------------------------------
 
-# Anchored Java-regex shapes with an explicit fractional group so the
-# fraction can be right-padded to 6 digits before try_to_timestamp.
-# Each entry: (regex, groups, spark_format, yearless)
+# Anchored regex shapes (valid in Java and Python re) with an explicit
+# fractional group so the fraction can be right-padded to 6 digits
+# before parsing. Each entry:
+#   (regex, groups, spark_format, strptime_format, yearless)
 # where the candidate string is rebuilt as g1 + '.' + rpad(g2,6,'0')
-# when a frac group exists.
+# when a frac group exists. The Catalyst cascade parses it with
+# spark_format, the pandas UDF (grok.make_grok_udf) with
+# strptime_format.
 _SPARK_STEPS = [
     # 1: iso Z with fraction; \S+ token must be exactly this shape
     (
         r"^([0-9]{4}-[0-9]{2}-[0-9]{2}T[0-9]{2}:[0-9]{2}:[0-9]{2})\.([0-9]{1,6})Z(?:\s|$)",
         2,
         "yyyy-MM-dd'T'HH:mm:ss.SSSSSS",
+        "%Y-%m-%dT%H:%M:%S.%f",
         False,
     ),
     # 2: space-separated with fraction
@@ -95,6 +100,7 @@ _SPARK_STEPS = [
         r"^([0-9]{4}-[0-9]{2}-[0-9]{2} [0-9]{2}:[0-9]{2}:[0-9]{2})\.([0-9]{1,6})(?:\s|$)",
         2,
         "yyyy-MM-dd HH:mm:ss.SSSSSS",
+        "%Y-%m-%d %H:%M:%S.%f",
         False,
     ),
     # 3: syslog w/ micros truncated to 5 digits by the reference's
@@ -103,6 +109,7 @@ _SPARK_STEPS = [
         r"^([A-Za-z]{3} [0-9]{2} [0-9]{2}:[0-9]{2}:[0-9]{2})\.([0-9]{5})",
         2,
         "MMM dd HH:mm:ss.SSSSSS",
+        "%b %d %H:%M:%S.%f",
         True,
     ),
     # 4: syslog without fraction (third \S+ token must be a bare time)
@@ -110,10 +117,17 @@ _SPARK_STEPS = [
         r"^([A-Za-z]{3} [0-9]{2} [0-9]{2}:[0-9]{2}:[0-9]{2})(?:\s|$)",
         1,
         "MMM dd HH:mm:ss",
+        "%b %d %H:%M:%S",
         True,
     ),
     # 5: first 19 iso chars
-    (r"^([-0-9T:]{19})", 1, "yyyy-MM-dd'T'HH:mm:ss", False),
+    (
+        r"^([-0-9T:]{19})",
+        1,
+        "yyyy-MM-dd'T'HH:mm:ss",
+        "%Y-%m-%dT%H:%M:%S",
+        False,
+    ),
     # 6: ansible long date (weekday validated by regex; Spark cannot
     #    parse EEEE so the weekday token is stripped before parsing).
     #    NO trailing anchor: the reference's `[0-9: ]{14}` window
@@ -124,6 +138,7 @@ _SPARK_STEPS = [
         r"([0-9]{2} [A-Za-z]+ [0-9]{4}  [0-9]{2}:[0-9]{2}:[0-9]{2})",
         1,
         "dd MMMM yyyy  HH:mm:ss",
+        "%d %B %Y  %H:%M:%S",
         False,
     ),
 ]
@@ -149,7 +164,7 @@ def ts_cascade_col(text: Column, ref_year: int = 2024) -> Column:
     both succeed), exactly like the reference's try/except loop.
     """
     cols = []
-    for rx, ngroups, fmt, yearless in _SPARK_STEPS:
+    for rx, ngroups, fmt, _, yearless in _SPARK_STEPS:
         ts = _spark_step(text, rx, ngroups, fmt)
         if yearless:
             # Spark fills missing years with 1970 (Python: 1900);

@@ -108,15 +108,10 @@ class RoutingPlan:
         ref_year: int = DEFAULT_REF_YEAR,
         skip_debug: bool = True,
         impl: str = "native",
-        repartition: bool = True,
         meta: DataFrame | None = None,
     ):
         self.spark = spark
-        self.partitions = (
-            int(spark.conf.get("spark.sql.shuffle.partitions"))
-            if repartition
-            else None
-        )
+        self.partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
         self.parse = parse_cols(ref_year, impl)
         # both windows share one Window operator. Enrichment is a level
         # of its own, above the Window: in the same projection it would
@@ -140,22 +135,20 @@ class RoutingPlan:
         self.route = route_cols(skip_debug, has_metadata)
 
     def __call__(self, df: DataFrame) -> DataFrame:
-        if self.partitions is not None:
-            # parse must run BEHIND an exchange, not pipelined into
-            # the file scan (file-split packing caps scan
-            # parallelism); the ffill window reuses this exact
-            # hash(conv_id) distribution so no second shuffle appears
-            # (operators/skew.py).
-            #
-            # pandas caveat, measured and accepted: ArrowEvalPython
-            # does not propagate its child's output partitioning, so
-            # on the pandas path the window re-shuffles (3 exchanges
-            # total vs native's 2). The alternative — parse before
-            # the exchange — pins the Python workers to SCAN
-            # parallelism, which file-split packing collapses
-            # (measured 94 s vs 54 s at local[32] on 20M rows); the
-            # extra exchange of narrow raw rows is the cheaper evil.
-            df = repartition_by_conv(df, self.spark, self.partitions)
+        # parse must run BEHIND an exchange, not pipelined into the
+        # file scan (file-split packing caps scan parallelism); the
+        # ffill window reuses this exact hash(conv_id) distribution so
+        # no second shuffle appears (operators/skew.py).
+        #
+        # pandas caveat, measured and accepted: ArrowEvalPython does
+        # not propagate its child's output partitioning, so on the
+        # pandas path the window re-shuffles (3 exchanges total vs
+        # native's 2). The alternative — parse before the exchange —
+        # pins the Python workers to SCAN parallelism, which
+        # file-split packing collapses (measured 94 s vs 54 s at
+        # local[32] on 20M rows); the extra exchange of narrow raw
+        # rows is the cheaper evil.
+        df = repartition_by_conv(df, self.spark, self.partitions)
         out = (
             _with_parse(df, self.parse)
             .withColumns(self.windows)
@@ -174,7 +167,6 @@ def full_pipeline(
     ref_year: int = DEFAULT_REF_YEAR,
     skip_debug: bool = True,
     impl: str = "native",
-    repartition: bool = True,
     meta: DataFrame | None = None,
 ) -> DataFrame:
     """transcripts -> parsed/enriched/routed rows (pre-fan-out): a
@@ -185,6 +177,5 @@ def full_pipeline(
         ref_year=ref_year,
         skip_debug=skip_debug,
         impl=impl,
-        repartition=repartition,
         meta=meta,
     )(df)

@@ -59,10 +59,7 @@ def get_spark(
         # many threads (measured 1.8x job slowdown at local[32]);
         # zstd avoids it and compresses better. Cache compression is
         # likewise off — columnar cache build was dominated by it.
-        .config(
-            "spark.sql.parquet.compression.codec",
-            os.environ.get("SPARK_GRAFT_CODEC", "zstd"),
-        )
+        .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
         # v2 commit: per-task parallel rename instead of a serial
         # job-commit pass over every output file (matters once the

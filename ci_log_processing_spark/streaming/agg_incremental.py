@@ -14,10 +14,11 @@ Replay safety (foreachBatch is at-least-once): a replayed batch
 recomputes the identical partial — the file source's checkpointed
 offsets pin its input set — and the overwrite REPLACES the previous
 attempt's directory instead of double-counting beside it. This is
-the same batch-scoped-overwrite idempotence contract as
-ingest_curate.py, with one simplification: a partial aggregate has
-no cross-batch read dependency at write time (contrast the dedup
-index), so there is nothing to exclude on replay.
+the batch-addressed partial contract of streaming/partials.py,
+shared with ingest_curate.py, with one simplification: a partial
+aggregate has no cross-batch read dependency at write time
+(contrast the dedup index), so there is nothing to exclude on
+replay.
 
 Scale shape per batch: one partial-aggregated count shuffle whose
 volume is the batch's distinct keys. The fold on read is
@@ -36,8 +37,16 @@ from pyspark.sql import functions as F
 
 from ..plans.pipeline import parse_transcripts
 from .follow import TRANSCRIPT_SCHEMA
+from .partials import (
+    drain,
+    hadoop_fs,
+    list_partials,
+    read_partials,
+    write_partial,
+)
 
 _KEYS = ["severity", "window_start"]
+_PARTIAL_SCHEMA = "severity string, window_start timestamp, cnt long"
 
 
 def _partial(df: DataFrame) -> DataFrame:
@@ -55,10 +64,7 @@ def read_rollup(spark: SparkSession, agg_dir: str) -> DataFrame:
     """The served rollup: fold every batch partial through the
     monoid merge. Union of partial-sized inputs + one group-keyed
     exchange — never touches row-level data."""
-    parts = (
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(agg_dir)
-    )
+    parts = read_partials(spark, agg_dir, _PARTIAL_SCHEMA)
     return parts.groupBy(*_KEYS).agg(F.sum("cnt").alias("cnt"))
 
 
@@ -70,22 +76,16 @@ def compact_partials(spark: SparkSession, agg_dir: str) -> None:
     this under a metastore swap (the checkpoint.py expire pattern);
     here it documents the maintenance shape."""
     merged = read_rollup(spark, agg_dir).collect()
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(agg_dir)
-    fs = path.getFileSystem(conf)
     old = [
-        st.getPath()
-        for st in fs.listStatus(path)
-        if st.isDirectory() and st.getPath().getName() != "b_compact"
+        p for p in list_partials(spark, agg_dir)
+        if not p.endswith("/b_compact")
     ]
-    spark.createDataFrame(
-        merged, "severity string, window_start timestamp, cnt long"
-    ).write.mode("overwrite").parquet(
-        os.path.join(agg_dir, "b_compact")
-    )
+    spark.createDataFrame(merged, _PARTIAL_SCHEMA).write.mode(
+        "overwrite"
+    ).parquet(os.path.join(agg_dir, "b_compact"))
+    fs, Path = hadoop_fs(spark, agg_dir)
     for p in old:
-        fs.delete(p, True)
+        fs.delete(Path(p), True)
 
 
 def run_agg_maintenance(
@@ -101,20 +101,14 @@ def run_agg_maintenance(
     agg_dir = os.path.join(out_dir, "agg")
 
     def _process(batch: DataFrame, batch_id: int) -> None:
-        _partial(batch).write.mode("overwrite").parquet(
-            os.path.join(agg_dir, f"b{batch_id}")
-        )
+        write_partial(_partial(batch), agg_dir, batch_id)
 
-    stream = (
-        spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(transcripts_dir)
+    drain(
+        spark,
+        TRANSCRIPT_SCHEMA,
+        transcripts_dir,
+        os.path.join(out_dir, "chk"),
+        _process,
+        max_files_per_trigger,
     )
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", os.path.join(out_dir, "chk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return read_rollup(spark, agg_dir)

@@ -18,8 +18,9 @@ Versioning / replay contract (foreachBatch is at-least-once):
   * a batch READS each touched bucket at its latest version <= b
     (strictly below its own b+1), so a crashed attempt's partial
     v(b+1) directories are invisible to the replay, which re-derives
-    the identical merge and overwrites them — the ingest_curate
-    index-exclusion rule, generalized to versions.
+    the identical merge and overwrites them — the replay rule of
+    streaming/partials.py (read only what earlier batches wrote),
+    generalized to versions.
   * the merged output is staged under a batch-scoped directory and
     promoted bucket-by-bucket with a delete-then-rename; every
     failure window leaves either the old latest or a complete new
@@ -45,6 +46,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .partials import drain, hadoop_fs
+
 CDC_STREAM_SCHEMA = (
     "doc_id long, op string, seq long, text string"
 )
@@ -56,20 +59,13 @@ def _bucket(col, n_buckets: int):
     return F.pmod(F.xxhash64(col), F.lit(int(n_buckets)))
 
 
-def _fs(spark: SparkSession, some_path: str):
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(some_path)
-    return path.getFileSystem(conf), jvm
-
-
 def _latest_versions(
     spark: SparkSession, snap_dir: str, max_version: int
 ) -> dict[int, int]:
     """bucket -> latest version <= max_version (Hadoop FS listing,
     object-store safe)."""
-    fs, jvm = _fs(spark, snap_dir)
-    root = jvm.org.apache.hadoop.fs.Path(snap_dir)
+    fs, Path = hadoop_fs(spark, snap_dir)
+    root = Path(snap_dir)
     out: dict[int, int] = {}
     if not fs.exists(root):
         return out
@@ -112,8 +108,7 @@ def _promote(
     delete-then-rename per bucket: a crash leaves either the prior
     latest (rename not reached) or a complete new version (rename
     atomic per directory) — readers at version-1 never see halves."""
-    fs, jvm = _fs(spark, snap_dir)
-    Path = jvm.org.apache.hadoop.fs.Path
+    fs, Path = hadoop_fs(spark, snap_dir)
     sroot = Path(staged)
     for st in fs.listStatus(sroot):
         name = st.getPath().getName()
@@ -209,18 +204,14 @@ def run_cdc_merge(
         finally:
             delta.unpersist()
 
-    stream = (
-        spark.readStream.schema(CDC_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(changes_dir)
+    drain(
+        spark,
+        CDC_STREAM_SCHEMA,
+        changes_dir,
+        checkpoint_dir,
+        _process,
+        max_files_per_trigger,
     )
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return read_snapshot(spark, snap_dir)
 
 
@@ -234,8 +225,7 @@ def vacuum_snapshot(
     of the LATEST version by construction (the latest is never
     deleted); historical readers must finish inside the retention
     window, the same caveat every lakehouse vacuum carries."""
-    fs, jvm = _fs(spark, snap_dir)
-    Path = jvm.org.apache.hadoop.fs.Path
+    fs, Path = hadoop_fs(spark, snap_dir)
     root = Path(snap_dir)
     removed = 0
     if not fs.exists(root):

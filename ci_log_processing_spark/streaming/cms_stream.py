@@ -3,8 +3,8 @@ frequency twin of hll_stream.py's cardinality sketch.
 
 Per micro-batch (foreachBatch, availableNow): reduce the batch to its
 exact per-token counts AND its CMS cell partials, and write BOTH to
-batch-addressed subdirectories (`counts/b{batch_id}`,
-`cells/b{batch_id}`, mode overwrite). The final answer merges all
+batch-addressed partials (`counts/b<batch_id>`, `cells/b<batch_id>`,
+mode overwrite; streaming/partials.py). The final answer merges all
 partials: token counts sum, cells sum, then the shared
 curation.cms_estimate finish (heap top-k + min-over-depth-cells).
 
@@ -44,6 +44,10 @@ from pyspark.sql import functions as F
 from ..operators.curation import cms_cell_array, cms_estimate
 from ..operators.dedup import tokens_col
 from .neardup_ingest import DOC_STREAM_SCHEMA
+from .partials import drain, read_partials, write_partial
+
+_COUNTS_SCHEMA = "token string, exact_n long"
+_CELLS_SCHEMA = "i int, cell int, cell_n long"
 
 
 def run_streaming_cms(
@@ -77,50 +81,34 @@ def run_streaming_cms(
         # corpus-sized, so a plain in-batch persist is safe
         exact.persist()
         try:
-            exact.write.mode("overwrite").parquet(
-                os.path.join(counts_dir, f"b{batch_id}")
-            )
-            (
+            write_partial(exact, counts_dir, batch_id)
+            write_partial(
                 exact.select(
                     "exact_n", F.posexplode(cells).alias("i", "cell")
                 )
                 .groupBy("i", "cell")
-                .agg(F.sum("exact_n").alias("cell_n"))
-                .write.mode("overwrite")
-                .parquet(os.path.join(cells_dir, f"b{batch_id}"))
+                .agg(F.sum("exact_n").alias("cell_n")),
+                cells_dir,
+                batch_id,
             )
         finally:
             exact.unpersist()
 
-    stream = (
-        spark.readStream.schema(DOC_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(docs_dir)
+    drain(
+        spark,
+        DOC_STREAM_SCHEMA,
+        docs_dir,
+        os.path.join(output_dir, "_stream_ckpt"),
+        process_batch,
+        max_files_per_trigger,
     )
-    q = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option(
-            "checkpointLocation", os.path.join(output_dir, "_stream_ckpt")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    def _parts(d: str) -> list[str]:
-        return [
-            os.path.join(d, b)
-            for b in sorted(os.listdir(d))
-            if b.startswith("b")
-        ]
-
     exact = (
-        spark.read.parquet(*_parts(counts_dir))
+        read_partials(spark, counts_dir, _COUNTS_SCHEMA)
         .groupBy("token")
         .agg(F.sum("exact_n").alias("exact_n"))
     )
     sketch = (
-        spark.read.parquet(*_parts(cells_dir))
+        read_partials(spark, cells_dir, _CELLS_SCHEMA)
         .groupBy("i", "cell")
         .agg(F.sum("cell_n").alias("cell_n"))
     )

@@ -7,9 +7,9 @@ reference snapshot with exactly the batch operator's math
 
 Per micro-batch (foreachBatch, availableNow): the batch's embeddings
 posexplode to (label, dim) cells and reduce to per-cell partials
-(sum of values + row count) written to a batch-addressed
-subdirectory (`dims/b{batch_id}`, mode overwrite). The final answer
-sum-merges all partials into the streamed snapshot's per-dim sums,
+(sum of values + row count) written to a batch-addressed partial
+(`dims/b<batch_id>`, mode overwrite; streaming/partials.py). The
+final answer sum-merges all partials into the streamed snapshot's per-dim sums,
 derives the reference side's identical partials batch-side, and
 finishes with the same centroid cosine / L2 / round-5 arithmetic as
 snapshot_drift — so the streamed result hash-equals the single-pass
@@ -39,7 +39,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .partials import drain, read_partials, write_partial
+
 EMB_STREAM_SCHEMA = "vec_id long, label int, embedding array<float>"
+_DIMS_SCHEMA = "label int, _pos int, sv double, n long"
 
 
 def _dim_partials(df: DataFrame) -> DataFrame:
@@ -80,32 +83,18 @@ def run_streaming_drift(
     def process_batch(batch_df, batch_id: int):
         if batch_df.isEmpty():
             return
-        _dim_partials(batch_df).write.mode("overwrite").parquet(
-            os.path.join(dims_dir, f"b{batch_id}")
-        )
+        write_partial(_dim_partials(batch_df), dims_dir, batch_id)
 
-    stream = (
-        spark.readStream.schema(EMB_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(emb_dir)
+    drain(
+        spark,
+        EMB_STREAM_SCHEMA,
+        emb_dir,
+        os.path.join(output_dir, "_stream_ckpt"),
+        process_batch,
+        max_files_per_trigger,
     )
-    q = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option(
-            "checkpointLocation", os.path.join(output_dir, "_stream_ckpt")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    parts = [
-        os.path.join(dims_dir, b)
-        for b in sorted(os.listdir(dims_dir))
-        if b.startswith("b")
-    ]
     b_dims = (
-        spark.read.parquet(*parts)
+        read_partials(spark, dims_dir, _DIMS_SCHEMA)
         .groupBy("label", "_pos")
         .agg(F.sum("sv").alias("sb"), F.sum("n").alias("nb"))
     )

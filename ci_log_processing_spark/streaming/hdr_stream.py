@@ -17,13 +17,14 @@ Per micro-batch (foreachBatch, like follow.py/hll_stream.py):
      belongs to the turn it starts at, exactly as in the window);
   4. quantize intra + bridge gaps with the shared HDR bucket math
      (operators/aggregate.py hdr_bucket_counts) and write the counts
-     to `buckets/b{batch_id}` (mode overwrite);
+     to `buckets/b<batch_id>` (mode overwrite);
   5. write each conversation's new last-turn row to
-     `state/b{batch_id}` (mode overwrite).
+     `state/b<batch_id>` (mode overwrite).
 
-Replay safety is the batch-scoped-write pattern (ingest_curate.py):
-a replayed batch overwrites its OWN two subdirectories, and the
-state read at step 3 only unions subdirectories with id < batch_id,
+Replay safety is the batch-addressed partial pattern
+(streaming/partials.py): a replayed batch overwrites its OWN two
+partials, and the state read at step 3 only unions partials with
+id < batch_id,
 so a half-written failed attempt can neither double-count buckets
 nor poison the state it reads. Count partials sum-merge, so the
 final estimate is one groupBy over the union of bucket files.
@@ -51,7 +52,6 @@ operators/checkpoint.py.
 from __future__ import annotations
 
 import os
-import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -63,24 +63,13 @@ from ..operators.aggregate import (
 )
 from ..plans.pipeline import DEFAULT_BATCH_TS, DEFAULT_REF_YEAR, full_pipeline
 from .follow import TRANSCRIPT_SCHEMA
+from .partials import drain, read_partials, write_partial
 
 _STATE_SCHEMA = (
     "conv_id string, turn_idx int, filled_ts timestamp, sink string, "
     "batch long"
 )
-
-
-def _prior_state_dirs(state_dir: str, batch_id: int) -> list[str]:
-    """Subdirectories written by batches STRICTLY BEFORE batch_id —
-    a replayed batch must not read its own failed attempt."""
-    if not os.path.isdir(state_dir):
-        return []
-    out = []
-    for d in os.listdir(state_dir):
-        m = re.fullmatch(r"b(\d+)", d)
-        if m and int(m.group(1)) < batch_id:
-            out.append(os.path.join(state_dir, d))
-    return sorted(out)
+_BUCKETS_SCHEMA = "sink string, bucket long, c long"
 
 
 def run_streaming_hdr(
@@ -133,68 +122,56 @@ def run_streaming_hdr(
             ).alias("last"),
         ).persist()
 
-        prior = _prior_state_dirs(state_dir, batch_id)
-        if prior:
-            latest = (
-                spark.read.schema(_STATE_SCHEMA)
-                .parquet(*prior)
-                .groupBy("conv_id")
-                .agg(
-                    F.max_by(
-                        F.struct("turn_idx", "filled_ts", "sink"),
-                        F.col("batch"),
-                    ).alias("prev")
-                )
+        # state of batches strictly before this one: a replay never
+        # reads its own failed attempt (streaming/partials.py)
+        latest = (
+            read_partials(spark, state_dir, _STATE_SCHEMA, before=batch_id)
+            .groupBy("conv_id")
+            .agg(
+                F.max_by(
+                    F.struct("turn_idx", "filled_ts", "sink"),
+                    F.col("batch"),
+                ).alias("prev")
             )
-            bridge = (
-                edge.join(latest, "conv_id")
-                .select(
-                    F.col("prev.sink").alias("sink"),
-                    (
-                        F.unix_millis("first.filled_ts")
-                        - F.unix_millis("prev.filled_ts")
-                    ).alias("gap_ms"),
-                )
-            )
-            gaps = intra.unionAll(bridge)
-        else:
-            gaps = intra
-        hdr_bucket_counts(gaps, "sink", "gap_ms", sub_bits).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(buckets_dir, f"b{batch_id}"))
-        edge.select(
-            "conv_id",
-            F.col("last.turn_idx").alias("turn_idx"),
-            F.col("last.filled_ts").alias("filled_ts"),
-            F.col("last.sink").alias("sink"),
-            F.lit(batch_id).alias("batch"),
-        ).write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"b{batch_id}")
+        )
+        bridge = edge.join(latest, "conv_id").select(
+            F.col("prev.sink").alias("sink"),
+            (
+                F.unix_millis("first.filled_ts")
+                - F.unix_millis("prev.filled_ts")
+            ).alias("gap_ms"),
+        )
+        write_partial(
+            hdr_bucket_counts(
+                intra.unionAll(bridge), "sink", "gap_ms", sub_bits
+            ),
+            buckets_dir,
+            batch_id,
+        )
+        write_partial(
+            edge.select(
+                "conv_id",
+                F.col("last.turn_idx").alias("turn_idx"),
+                F.col("last.filled_ts").alias("filled_ts"),
+                F.col("last.sink").alias("sink"),
+                F.lit(batch_id).alias("batch"),
+            ),
+            state_dir,
+            batch_id,
         )
         turns.unpersist()
         edge.unpersist()
 
-    stream = (
-        spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(transcripts_dir)
+    drain(
+        spark,
+        TRANSCRIPT_SCHEMA,
+        transcripts_dir,
+        os.path.join(output_dir, "_stream_ckpt"),
+        process_batch,
+        max_files_per_trigger,
     )
-    q = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option(
-            "checkpointLocation", os.path.join(output_dir, "_stream_ckpt")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    parts = [
-        os.path.join(buckets_dir, d)
-        for d in sorted(os.listdir(buckets_dir))
-        if d.startswith("b")
-    ]
     merged = (
-        spark.read.parquet(*parts)
+        read_partials(spark, buckets_dir, _BUCKETS_SCHEMA)
         .groupBy("sink", "bucket")
         .agg(F.sum("c").alias("c"))
     )

@@ -7,9 +7,9 @@ Per micro-batch: run the batch pipeline (foreachBatch, same
 rationale as follow.py — the ffill window is conversation-ordered
 and a conversation's turns arrive together), reduce the batch to
 its (sink, j, mj) register PARTIALS, and write them to a
-batch-addressed subdirectory (`registers/b{batch_id}`, mode
-overwrite). The estimate is computed from the union of all partial
-files.
+batch-addressed partial (`registers/b<batch_id>`, mode overwrite;
+streaming/partials.py). The estimate is computed from the union of
+all partial files.
 
 Crash/replay safety comes from the algebra, not bookkeeping:
 register max() is associative, commutative and IDEMPOTENT, so a
@@ -36,6 +36,9 @@ from pyspark.sql import functions as F
 from ..operators.aggregate import hll_estimate, hll_partial_registers
 from ..plans.pipeline import DEFAULT_BATCH_TS, DEFAULT_REF_YEAR, full_pipeline
 from .follow import TRANSCRIPT_SCHEMA
+from .partials import drain, read_partials, write_partial
+
+_REGISTERS_SCHEMA = "sink string, j long, mj int"
 
 
 def run_streaming_hll(
@@ -60,30 +63,17 @@ def run_streaming_hll(
         )
         # overwrite the batch's own subdir: a replayed batch lands in
         # the same place, and max-merge absorbs it either way
-        hll_partial_registers(routed).write.mode("overwrite").parquet(
-            os.path.join(regs_dir, f"b{batch_id}")
-        )
+        write_partial(hll_partial_registers(routed), regs_dir, batch_id)
 
-    stream = (
-        spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(transcripts_dir)
+    drain(
+        spark,
+        TRANSCRIPT_SCHEMA,
+        transcripts_dir,
+        os.path.join(output_dir, "_stream_ckpt"),
+        process_batch,
+        max_files_per_trigger,
     )
-    q = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option(
-            "checkpointLocation", os.path.join(output_dir, "_stream_ckpt")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    parts = [
-        os.path.join(regs_dir, d)
-        for d in sorted(os.listdir(regs_dir))
-        if d.startswith("b")
-    ]
-    partials = spark.read.parquet(*parts)
+    partials = read_partials(spark, regs_dir, _REGISTERS_SCHEMA)
     return hll_estimate(partials).select(
         "sink", F.col("hll_distinct").cast("double").alias("hll_distinct")
     )

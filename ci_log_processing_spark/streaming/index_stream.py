@@ -21,7 +21,7 @@ Unlike ingest_curate's dedup index there is no cross-batch READ at
 write time (a batch's postings don't depend on what is already
 indexed), so there is nothing to exclude on replay — the simple end
 of the spectrum, stated so the contrast with the dedup gate's
-b<batch_id> exclusion is explicit.
+`before=batch_id` read (streaming/partials.py) is explicit.
 
 Scale shape per batch: posting_rows' zero-shuffle posexplode + one
 (term, doc)-keyed partial+final aggregate over the BATCH, never the
@@ -38,8 +38,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.retrieval import finalize_index, posting_rows
+from .partials import drain, read_partials, write_partial
 
 INDEX_STREAM_SCHEMA = "doc_id long, text string"
+_POSTINGS_SCHEMA = (
+    "term string, doc_id long, _plist array<int>, _n_occ long"
+)
 
 
 def read_index(
@@ -51,11 +55,7 @@ def read_index(
     """The served index: finalize over the union of batch partials.
     Doc-disjoint batches make the union itself the merge — the df
     band and posting serialization run on the folded grain."""
-    td = (
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(index_dir)
-        .select("term", "doc_id", "_plist", "_n_occ")
-    )
+    td = read_partials(spark, index_dir, _POSTINGS_SCHEMA)
     return finalize_index(td, min_df=min_df, max_df=max_df)
 
 
@@ -76,20 +76,14 @@ def run_index_maintenance(
     index_dir = os.path.join(out_dir, "index")
 
     def _process(batch: DataFrame, batch_id: int) -> None:
-        posting_rows(batch).write.mode("overwrite").parquet(
-            os.path.join(index_dir, f"b{batch_id}")
-        )
+        write_partial(posting_rows(batch), index_dir, batch_id)
 
-    stream = (
-        spark.readStream.schema(INDEX_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(docs_dir)
+    drain(
+        spark,
+        INDEX_STREAM_SCHEMA,
+        docs_dir,
+        os.path.join(out_dir, "chk"),
+        _process,
+        max_files_per_trigger,
     )
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", os.path.join(out_dir, "chk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return read_index(spark, index_dir, min_df=min_df, max_df=max_df)

@@ -18,14 +18,16 @@ Failure semantics, stated exactly: foreachBatch is at-least-once —
 a batch may replay after a crash mid-write. Two independent appends
 (corpus, then index) would break under replay in BOTH orders: crash
 between them re-admits the batch's docs (duplicate corpus rows) or
-loses them (hashes committed, docs absent). So each batch writes to
-BATCH-SCOPED directories in OVERWRITE mode (`b<batch_id>/` under
-corpus and index): the file source replays a failed batch with the
-identical file set (its offsets are checkpointed before _process
-runs), the anti-join reads the index WITH the batch's own
-b<batch_id>/ subdirectory excluded (a failed attempt may have left
-its hashes there; including them would empty the survivor set and
-the overwrite would destroy the docs) — so the replay sees exactly
+loses them (hashes committed, docs absent). So each batch writes
+batch-addressed partials (`b<batch_id>/` under corpus and index,
+OVERWRITE; layout and replay rule in streaming/partials.py): the
+file source replays a failed batch with the identical file set (its
+offsets are checkpointed before _process runs), and the anti-join
+reads only the index partials of batches BEFORE this one (a failed
+attempt may have left its hashes in its own b<batch_id>/; including
+them would empty the survivor set and the overwrite would destroy
+the docs; after a full replay with a fresh checkpoint, later
+batches' hashes would do the same) — so the replay sees exactly
 the pre-batch index, re-derives the identical survivor set, and the
 overwrite replaces any partial output instead of appending beside
 it. Batch-level idempotence from plain parquet,
@@ -45,50 +47,16 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
+
+from .partials import drain, read_partials, write_partial
 
 DOC_STREAM_SCHEMA = "doc_id long, text string, event_ts timestamp"
 
-_INDEX_SCHEMA = StructType([StructField("h", StringType())])
-
-
-def _known_hashes(
-    spark: SparkSession, index_dir: str, batch_id: int
-) -> DataFrame:
-    """The persisted content-hash index; empty on first batch. The
-    directory listing goes through the Hadoop FS API so it works on
-    object stores, not just local paths (and avoids the noisy
-    AnalysisException a read-then-catch would log).
-
-    CRITICAL for replay correctness: the current batch's own
-    `b<batch_id>/` subdirectory is EXCLUDED. A crash after this
-    batch's index write but before the streaming commit leaves its
-    hashes on disk; on replay, reading them back would make the
-    anti-join treat the batch's own docs as already-known, empty the
-    survivor set, and let the corpus overwrite delete the
-    previously-written rows — permanent loss (hashes present, docs
-    absent). Excluding b<batch_id> makes the replay see exactly the
-    pre-batch index, re-derive the identical survivor set, and
-    overwrite the partial output with it."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(index_dir)
-    fs = path.getFileSystem(conf)
-    if not fs.exists(path):
-        return spark.createDataFrame([], _INDEX_SCHEMA)
-    own = f"b{batch_id}"
-    prior = [
-        st.getPath().toString()
-        for st in fs.listStatus(path)
-        if st.isDirectory() and st.getPath().getName() != own
-    ]
-    if not prior:
-        return spark.createDataFrame([], _INDEX_SCHEMA)
-    return (
-        spark.read.schema(_INDEX_SCHEMA)
-        .option("recursiveFileLookup", "true")
-        .parquet(*prior)
-    )
+_INDEX_SCHEMA = "h string"
+_CORPUS_SCHEMA = (
+    "h string, doc_id long, text string, event_ts timestamp, "
+    "quality double"
+)
 
 
 def run_ingest_curation(
@@ -114,7 +82,9 @@ def run_ingest_curation(
         ).filter(F.col("quality") >= min_quality)
         fresh = incremental_dedup(
             scored.select("doc_id", "text", "event_ts", "quality"),
-            _known_hashes(batch.sparkSession, index_dir, batch_id),
+            read_partials(
+                batch.sparkSession, index_dir, _INDEX_SCHEMA, before=batch_id
+            ),
         )
         # persist ONCE so corpus and index writes share the compute;
         # released before the batch returns. Batch-scoped OVERWRITE
@@ -122,28 +92,17 @@ def run_ingest_curation(
         # (see module docstring) instead of appending duplicates.
         fresh.persist()
         try:
-            fresh.write.mode("overwrite").parquet(
-                os.path.join(corpus_dir, f"b{batch_id}")
-            )
-            fresh.select("h").write.mode("overwrite").parquet(
-                os.path.join(index_dir, f"b{batch_id}")
-            )
+            write_partial(fresh, corpus_dir, batch_id)
+            write_partial(fresh.select("h"), index_dir, batch_id)
         finally:
             fresh.unpersist()
 
-    stream = (
-        spark.readStream.schema(DOC_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(docs_dir)
+    drain(
+        spark,
+        DOC_STREAM_SCHEMA,
+        docs_dir,
+        os.path.join(out_dir, "chk"),
+        _process,
+        max_files_per_trigger,
     )
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", os.path.join(out_dir, "chk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return (
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(corpus_dir)
-    )
+    return read_partials(spark, corpus_dir, _CORPUS_SCHEMA)

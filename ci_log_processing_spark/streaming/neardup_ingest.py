@@ -25,11 +25,11 @@ re-derived — band join cost is one co-partitioned equi-join, verify
 cost is candidate-sized.
 
 Replay semantics mirror ingest_curate.py exactly: all three writes
-are batch-scoped OVERWRITE dirs (b<batch_id>/), and the index reads
-EXCLUDE the replaying batch's own subdirectories, so a batch killed
-after any subset of its three writes re-derives the identical
-survivor set against the pre-batch index and replaces its partial
-output.
+are batch-addressed partials (b<batch_id>/, streaming/partials.py),
+and the index reads see only batches BEFORE the replaying one, so a
+batch killed after any subset of its three writes re-derives the
+identical survivor set against the pre-batch index and replaces its
+partial output.
 
 Intra-batch NEAR-dups (two distinct-text near-dups arriving in one
 micro-batch) both survive by design — the index only holds PRIOR
@@ -43,59 +43,13 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+
+from .partials import drain, read_partials, write_partial
 
 DOC_STREAM_SCHEMA = "doc_id long, text string"
 
-_BANDS_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("band", IntegerType()),
-        StructField("key", StringType()),
-    ]
-)
-_SH_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("shingles", ArrayType(StringType())),
-    ]
-)
-
-
-def _prior_batches(
-    spark: SparkSession, root: str, batch_id: int, schema: StructType
-) -> DataFrame:
-    """Read every b<id>/ subdirectory EXCEPT the replaying batch's
-    own (same replay-correctness rule as ingest_curate._known_hashes:
-    a crashed attempt's leftover index rows must not make the replay
-    treat its own docs as already-known)."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(root)
-    fs = path.getFileSystem(conf)
-    if not fs.exists(path):
-        return spark.createDataFrame([], schema)
-    own = f"b{batch_id}"
-    prior = [
-        st.getPath().toString()
-        for st in fs.listStatus(path)
-        if st.isDirectory() and st.getPath().getName() != own
-    ]
-    if not prior:
-        return spark.createDataFrame([], schema)
-    return (
-        spark.read.schema(schema)
-        .option("recursiveFileLookup", "true")
-        .parquet(*prior)
-    )
+_BANDS_SCHEMA = "doc_id long, band int, key string"
+_SH_SCHEMA = "doc_id long, shingles array<string>"
 
 
 def run_neardup_ingestion(
@@ -131,8 +85,8 @@ def run_neardup_ingestion(
         dup_ids = neardup_ids_against_index(
             arr_b,
             bands_b,
-            _prior_batches(ss, sh_dir, batch_id, _SH_SCHEMA),
-            _prior_batches(ss, bands_dir, batch_id, _BANDS_SCHEMA),
+            read_partials(ss, sh_dir, _SH_SCHEMA, before=batch_id),
+            read_partials(ss, bands_dir, _BANDS_SCHEMA, before=batch_id),
             threshold,
             candidate_cap,
         )
@@ -140,33 +94,20 @@ def run_neardup_ingestion(
         # one materialization feeds all three batch-scoped writes
         fresh.persist()
         try:
-            fresh.write.mode("overwrite").parquet(
-                os.path.join(corpus_dir, f"b{batch_id}")
-            )
+            write_partial(fresh, corpus_dir, batch_id)
             arr_f, bands_f = _lsh_shingles_and_bands(fresh, k)
-            bands_f.write.mode("overwrite").parquet(
-                os.path.join(bands_dir, f"b{batch_id}")
-            )
-            arr_f.write.mode("overwrite").parquet(
-                os.path.join(sh_dir, f"b{batch_id}")
-            )
+            write_partial(bands_f, bands_dir, batch_id)
+            write_partial(arr_f, sh_dir, batch_id)
         finally:
             fresh.unpersist()
             release_persisted()
 
-    stream = (
-        spark.readStream.schema(DOC_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(docs_dir)
+    drain(
+        spark,
+        DOC_STREAM_SCHEMA,
+        docs_dir,
+        os.path.join(out_dir, "chk"),
+        _process,
+        max_files_per_trigger,
     )
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", os.path.join(out_dir, "chk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return (
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(corpus_dir)
-    )
+    return read_partials(spark, corpus_dir, DOC_STREAM_SCHEMA)

@@ -5,9 +5,9 @@ log_templates miner (operators/aggregate.py).
 
 Per micro-batch (foreachBatch, availableNow): mask + aggregate the
 batch's VISIBLE turns to (template, n_msgs, n_convs, example) with
-the batch id attached, and OVERWRITE the batch-addressed
-subdirectory `tmpl/b{batch_id}` — the linear-merge replay-safety
-pattern shared with cms_stream.py/drift_stream.py: counts are
+the batch id attached, and OVERWRITE the batch-addressed partial
+`tmpl/b<batch_id>` (streaming/partials.py) — the linear-merge
+replay-safety pattern shared with cms_stream.py/drift_stream.py: counts are
 summed, sum is not idempotent, so a replayed batch must REPLACE its
 contribution, not add to it.
 
@@ -33,8 +33,14 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .partials import drain, read_partials, write_partial
+
 TURN_STREAM_SCHEMA = (
     "conv_id string, turn_idx int, message string, sink string"
+)
+_TEMPLATE_SCHEMA = (
+    "template string, n_msgs long, n_convs long, example string, "
+    "first_batch long"
 )
 
 
@@ -75,32 +81,20 @@ def run_streaming_templates(
     def process_batch(batch_df, batch_id: int):
         if batch_df.isEmpty():
             return
-        _template_partial(batch_df, batch_id).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(tmpl_dir, f"b{batch_id}"))
-
-    stream = (
-        spark.readStream.schema(TURN_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(turns_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option(
-            "checkpointLocation", os.path.join(output_dir, "_stream_ckpt")
+        write_partial(
+            _template_partial(batch_df, batch_id), tmpl_dir, batch_id
         )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
-    parts = [
-        os.path.join(tmpl_dir, b)
-        for b in sorted(os.listdir(tmpl_dir))
-        if b.startswith("b")
-    ]
+    drain(
+        spark,
+        TURN_STREAM_SCHEMA,
+        turns_dir,
+        os.path.join(output_dir, "_stream_ckpt"),
+        process_batch,
+        max_files_per_trigger,
+    )
     return (
-        spark.read.parquet(*parts)
+        read_partials(spark, tmpl_dir, _TEMPLATE_SCHEMA)
         .groupBy("template")
         .agg(
             F.sum("n_msgs").alias("n_msgs"),

@@ -1,7 +1,8 @@
 """Generate CATALOG.md — the operator catalog VERDICT_r4 item 6 asked
 for: one row per gate query mapping query name -> entry callable ->
-operator function file:line -> oracle twin -> freshest driver
-CORRECTNESS round -> local-gate status.
+operator functions (`module.function`) -> oracle twin -> freshest
+driver CORRECTNESS round -> local-gate status. Names, not line
+numbers, so an edit that only moves lines leaves the file in sync.
 
 Everything is derived mechanically from `__spark_entry__.queries()` /
 `oracle_sql()`, the committed CORRECTNESS_r*.json artifacts and (when
@@ -34,16 +35,13 @@ _IMPORT_RE = re.compile(
 )
 
 
-def _relpath(path: str) -> str:
-    try:
-        return os.path.relpath(path, REPO)
-    except ValueError:
-        return path
+def _qualname(obj) -> str:
+    return getattr(obj, "__qualname__", "").replace("<locals>.", "")
 
 
 def _operator_targets(fn, _depth: int = 0) -> list[str]:
     """Resolve the package functions a gate-query callable uses, as
-    file:line strings, by reading its own source for package imports;
+    `module.function` names, by reading its own source for package imports;
     recurses two levels into same-module helper functions (the
     _routed/_q_sink_rows style shared pipeline builders)."""
     out: list[str] = []
@@ -54,17 +52,12 @@ def _operator_targets(fn, _depth: int = 0) -> list[str]:
         if obj is None or not callable(obj):
             return
         mod = getattr(obj, "__module__", "") or ""
-        if not mod.startswith("ci_log_processing_spark"):
+        if not mod.startswith("ci_log_processing_spark."):
             return
-        try:
-            f = _relpath(inspect.getsourcefile(obj) or "")
-            ln = inspect.getsourcelines(obj)[1]
-        except (OSError, TypeError):
-            return
-        key = f"{name}@{f}:{ln}"
+        key = f"{mod.split('.', 1)[1]}.{_qualname(obj) or name}"
         if key not in seen:
             seen.add(key)
-            out.append(f"`{name}` {f}:{ln}")
+            out.append(f"`{key}`")
 
     try:
         src = inspect.getsource(fn)
@@ -107,22 +100,6 @@ def _operator_targets(fn, _depth: int = 0) -> list[str]:
     return out
 
 
-def _latest_driver_rounds() -> dict[str, int]:
-    latest: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
-        rnd = int(re.search(r"r(\d+)", os.path.basename(path)).group(1))
-        with open(path) as f:
-            for name, row in json.load(f).items():
-                ok = bool(
-                    row.get("rows_match")
-                    and row.get("schema_match")
-                    and row.get("hash_match")
-                )
-                if ok:
-                    latest[name] = max(latest.get(name, 0), rnd)
-    return latest
-
-
 def _local_gate() -> tuple[str, dict[str, dict]]:
     paths = sorted(glob.glob(os.path.join(REPO, "GATE_LOCAL_r*.json")))
     if not paths:
@@ -134,7 +111,7 @@ def _local_gate() -> tuple[str, dict[str, dict]]:
 def build_catalog() -> str:
     qs = entrymod.queries()
     sqls = entrymod.oracle_sql()
-    driver = _latest_driver_rounds()
+    driver = entrymod._latest_driver_rounds()
     gate_name, gate = _local_gate()
 
     lines = [
@@ -159,11 +136,7 @@ def build_catalog() -> str:
     ]
     for i, (name, fn) in enumerate(qs.items(), 1):
         inner = inspect.unwrap(fn)  # strip the _release_then wrapper
-        code = getattr(inner, "__code__", None)
-        if code is not None:
-            entry_loc = f"{_relpath(code.co_filename)}:{code.co_firstlineno}"
-        else:
-            entry_loc = "?"
+        entry_loc = f"`{_qualname(inner) or '?'}`"
         ops = _operator_targets(inner)
         ops_cell = "; ".join(ops) if ops else "(inline DataFrame plan)"
         oracle = "yes" if name in sqls else "rows-only"
