@@ -16,7 +16,9 @@ import glob
 import json
 import os
 import re
+import shutil
 import sys
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -416,6 +418,36 @@ def q_subunit_binary(spark, sf_dir):
 # --- streaming queries (gate-checked) -----------------------------------
 
 
+def _collect_in_scratch(
+    spark: SparkSession,
+    prefix: str,
+    run: Callable[[str], DataFrame],
+    schema: str,
+) -> DataFrame:
+    """`run(work)` in a fresh scratch directory `work`; the frame it
+    returns is collected before the directory is removed, and its rows
+    come back as a frame of `schema`."""
+    work = tempfile.mkdtemp(prefix=prefix)
+    try:
+        rows = run(work).collect()
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+    return spark.createDataFrame(rows, schema)
+
+
+def _write_wave(df: DataFrame, in_dir: str, name: str, mtime: int) -> None:
+    """`df` as the single file `<in_dir>/<name>.parquet` with
+    modification time `mtime`: the file source orders micro-batches by
+    mtime, so waves written with rising mtimes arrive in that order."""
+    tmp = os.path.join(os.path.dirname(in_dir), "w_" + name)
+    df.coalesce(1).write.parquet(tmp)
+    pq = [f for f in os.listdir(tmp) if f.endswith(".parquet")]
+    os.makedirs(in_dir, exist_ok=True)
+    dst = os.path.join(in_dir, name + ".parquet")
+    shutil.copy(os.path.join(tmp, pq[0]), dst)
+    os.utime(dst, (mtime, mtime))
+
+
 def q_stream_follow(spark, sf_dir):
     """§2.8 follow loop as a GATE-CHECKED query: a deterministic
     subset of conversations (user_id % 29 == 1) is streamed through
@@ -424,9 +456,6 @@ def q_stream_follow(spark, sf_dir):
     streaming and batch semantics must be identical
     (reference --follow is literally a re-run loop,
     logsender.py:683-687)."""
-    import shutil
-    import tempfile
-
     from ci_log_processing_spark.sources.derived import conv_meta_sql
     from ci_log_processing_spark.streaming.follow import run_follow
 
@@ -435,8 +464,8 @@ def q_stream_follow(spark, sf_dir):
     subset = t.filter(
         F.substring("conv_id", 6, 10).cast("int") % 29 == 1
     )
-    work = tempfile.mkdtemp(prefix="gate_follow_")
-    try:
+
+    def _run(work):
         in_dir = os.path.join(work, "in")
         out_dir = os.path.join(work, "out")
         # convs must not straddle files (the conv is the readiness
@@ -444,15 +473,14 @@ def q_stream_follow(spark, sf_dir):
         subset.repartition(2, "conv_id").write.parquet(in_dir)
         run_follow(spark, in_dir, out_dir, meta=meta)
         # follow appends the job's one sink table
-        rows = (
+        return (
             spark.read.parquet(os.path.join(out_dir, "sinks"))
             .select("conv_id", "turn_idx", "sink", "drop_reason")
-            .collect()
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "conv_id string, turn_idx int, sink string, drop_reason string"
+
+    return _collect_in_scratch(
+        spark, "gate_follow_", _run,
+        "conv_id string, turn_idx int, sink string, drop_reason string",
     )
 
 
@@ -461,9 +489,6 @@ def q_stream_session_evictions(spark, sf_dir):
     rows-only gate entry (state timeouts are not SQL-expressible):
     stream 3 convs in 2 conv-aligned files, wait for all evictions,
     return the final (deterministic) evicted summaries."""
-    import shutil
-    import tempfile
-
     from ci_log_processing_spark.streaming.session_state import (
         run_stateful_sessionize,
     )
@@ -472,8 +497,8 @@ def q_stream_session_evictions(spark, sf_dir):
         F.substring("conv_id", 6, 10).cast("int") % 50 == 1
     )
     n_convs = t.select("conv_id").distinct().count()
-    work = tempfile.mkdtemp(prefix="gate_sess_")
-    try:
+
+    def _run(work):
         in_dir = os.path.join(work, "in")
         t.repartition(2, "conv_id").write.parquet(in_dir)
         out = run_stateful_sessionize(
@@ -484,15 +509,14 @@ def q_stream_session_evictions(spark, sf_dir):
             wait_evictions=n_convs,
             eviction_deadline_sec=180.0,  # headroom on loaded machines
         )
-        rows = (
+        return (
             out.filter(F.col("status") == "evicted")
             .select("conv_id", "turns", "first_us", "last_us")
-            .collect()
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "conv_id string, turns long, first_us long, last_us long"
+
+    return _collect_in_scratch(
+        spark, "gate_sess_", _run,
+        "conv_id string, turns long, first_us long, last_us long",
     )
 
 
@@ -504,9 +528,6 @@ def q_stream_watermark_agg(spark, sf_dir):
     window whose end passed the final watermark. Emitted rows must
     therefore equal the batch aggregate restricted to finalized
     windows (the SQL twin)."""
-    import shutil
-    import tempfile
-
     from ci_log_processing_spark.streaming.watermark import (
         streaming_severity_window_counts,
     )
@@ -514,18 +535,16 @@ def q_stream_watermark_agg(spark, sf_dir):
     sub = load_transcripts(spark, sf_dir).filter(
         F.substring("conv_id", 6, 10).cast("int") % 23 == 1
     )
-    work = tempfile.mkdtemp(prefix="gate_wm_")
-    try:
+
+    def _run(work):
         in_dir = os.path.join(work, "in")
         sub.repartition(1).write.parquet(in_dir)
-        out = streaming_severity_window_counts(
+        return streaming_severity_window_counts(
             spark, in_dir, os.path.join(work, "out")
         )
-        rows = out.collect()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(
-        rows,
+
+    return _collect_in_scratch(
+        spark, "gate_wm_", _run,
         "window_start timestamp, window_end timestamp, "
         "severity string, cnt long",
     )
@@ -537,9 +556,6 @@ def q_stream_cdc_merge(spark, sf_dir):
     payload) arrives as THREE files routed by key hash — every key's
     ops share one batch, so the sequentially-merged snapshot equals
     the global last-writer merge the SQL twin computes."""
-    import shutil
-    import tempfile
-
     from ci_log_processing_spark.streaming.cdc_merge import (
         bootstrap_snapshot,
         run_cdc_merge,
@@ -547,22 +563,22 @@ def q_stream_cdc_merge(spark, sf_dir):
 
     docs = _docs(spark, sf_dir)
     changes = _cdc_changes(docs).select("doc_id", "op", "seq", "text")
-    work = tempfile.mkdtemp(prefix="gate_cdcm_")
-    try:
+
+    def _run(work):
         ch_dir = os.path.join(work, "changes")
         changes.repartition(3, F.col("doc_id")).write.parquet(ch_dir)
         snap = os.path.join(work, "snap")
         bootstrap_snapshot(
             docs.select("doc_id", "text"), snap, n_buckets=8
         )
-        out = run_cdc_merge(
+        return run_cdc_merge(
             spark, ch_dir, snap, os.path.join(work, "chk"),
             n_buckets=8,
         )
-        rows = out.collect()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(rows, "doc_id long, text string")
+
+    return _collect_in_scratch(
+        spark, "gate_cdcm_", _run, "doc_id long, text string"
+    )
 
 
 def q_stream_agg_incremental(spark, sf_dir):
@@ -572,9 +588,6 @@ def q_stream_agg_incremental(spark, sf_dir):
     folded rollup must equal the flat batch aggregate (the SQL
     twin), which is the streaming statement of the
     merge_agg_deltas monoid identity."""
-    import shutil
-    import tempfile
-
     from ci_log_processing_spark.streaming.agg_incremental import (
         run_agg_maintenance,
     )
@@ -582,18 +595,17 @@ def q_stream_agg_incremental(spark, sf_dir):
     sub = load_transcripts(spark, sf_dir).filter(
         F.substring("conv_id", 6, 10).cast("int") % 23 == 7
     )
-    work = tempfile.mkdtemp(prefix="gate_agginc_")
-    try:
+
+    def _run(work):
         in_dir = os.path.join(work, "in")
         sub.repartition(3).write.parquet(in_dir)
-        out = run_agg_maintenance(
+        return run_agg_maintenance(
             spark, in_dir, os.path.join(work, "out")
         )
-        rows = out.collect()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "severity string, window_start timestamp, cnt long"
+
+    return _collect_in_scratch(
+        spark, "gate_agginc_", _run,
+        "severity string, window_start timestamp, cnt long",
     )
 
 
@@ -605,9 +617,6 @@ def q_stream_ewma(spark, sf_dir):
     detector runs over the monoid fold on read — the composition
     must equal the batch detector over the same rows, which is what
     the SQL twin computes flat."""
-    import shutil
-    import tempfile
-
     from ci_log_processing_spark.operators.aggregate import (
         ewma_over_counts,
     )
@@ -618,19 +627,17 @@ def q_stream_ewma(spark, sf_dir):
     sub = load_transcripts(spark, sf_dir).filter(
         F.substring("conv_id", 6, 10).cast("int") % 23 == 11
     )
-    work = tempfile.mkdtemp(prefix="gate_ewmastream_")
-    try:
+
+    def _run(work):
         in_dir = os.path.join(work, "in")
         sub.repartition(3).write.parquet(in_dir)
         rollup = run_agg_maintenance(
             spark, in_dir, os.path.join(work, "out")
         )
-        out = ewma_over_counts(rollup, group_col="severity")
-        rows = out.collect()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(
-        rows,
+        return ewma_over_counts(rollup, group_col="severity")
+
+    return _collect_in_scratch(
+        spark, "gate_ewmastream_", _run,
         "severity string, window_start timestamp, cnt long, "
         "ewma_milli long, alert boolean",
     )
@@ -643,9 +650,6 @@ def q_stream_session_window(spark, sf_dir):
     session is emitted iff its end (last event + gap) <= watermark —
     verified empirically at the exact boundary. The twin computes the
     same gaps-and-islands sessions in SQL and applies that filter."""
-    import shutil
-    import tempfile
-
     from ci_log_processing_spark.streaming.watermark import (
         streaming_session_counts,
     )
@@ -653,18 +657,16 @@ def q_stream_session_window(spark, sf_dir):
     sub = load_transcripts(spark, sf_dir).filter(
         F.substring("conv_id", 6, 10).cast("int") % 23 == 2
     )
-    work = tempfile.mkdtemp(prefix="gate_sess_")
-    try:
+
+    def _run(work):
         in_dir = os.path.join(work, "in")
         sub.repartition(1).write.parquet(in_dir)
-        out = streaming_session_counts(
+        return streaming_session_counts(
             spark, in_dir, os.path.join(work, "out")
         )
-        rows = out.collect()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(
-        rows,
+
+    return _collect_in_scratch(
+        spark, "gate_sess_", _run,
         "conv_id string, session_start timestamp, "
         "session_end timestamp, n_turns long, "
         "first_turn int, last_turn int",
@@ -677,9 +679,6 @@ def q_stream_interval_join(spark, sf_dir):
     sides, each streamed as one in-order file: inner-join matches are
     emitted as both sides arrive, so the emitted set equals the batch
     join of the same inputs — the SQL twin."""
-    import shutil
-    import tempfile
-
     from ci_log_processing_spark.sources.derived import config_updates_sql
     from ci_log_processing_spark.streaming.stream_join import (
         streaming_interval_join,
@@ -693,23 +692,21 @@ def q_stream_interval_join(spark, sf_dir):
         .withColumnRenamed("conv_id", "cfg_conv_id")
         .filter(F.substring("cfg_conv_id", 6, 10).cast("int") % 23 == 3)
     )
-    work = tempfile.mkdtemp(prefix="gate_ssj_")
-    try:
+
+    def _run(work):
         l_dir = os.path.join(work, "l")
         r_dir = os.path.join(work, "r")
         sub.repartition(1).write.parquet(l_dir)
         cfg.select("cfg_conv_id", "cfg_ts", "cfg_state", "cfg_seq").repartition(
             1
         ).write.parquet(r_dir)
-        out = streaming_interval_join(
+        return streaming_interval_join(
             spark, l_dir, r_dir, os.path.join(work, "out"),
             lookback_sec=21600,
         )
-        rows = out.collect()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(
-        rows,
+
+    return _collect_in_scratch(
+        spark, "gate_ssj_", _run,
         "conv_id string, turn_idx int, cfg_seq long, cfg_state string",
     )
 
@@ -1078,6 +1075,19 @@ def q_ann_ivf_multiprobe(spark, sf_dir):
     )
 
 
+def _write_docs_and_copies(docs: DataFrame, in_dir: str) -> None:
+    """The documents, then exact copies of every doc_id % 10 == 0 (ids
+    +1000000), as two files under `in_dir`, each row stamped with an
+    `event_ts` inside one hour."""
+    ts = F.timestamp_seconds(
+        F.lit(1709287200) + (F.col("doc_id") % 3600)
+    ).alias("event_ts")
+    docs.select("doc_id", "text", ts).coalesce(1).write.parquet(in_dir)
+    docs.filter(F.col("doc_id") % 10 == 0).select(
+        (F.col("doc_id") + 1000000).alias("doc_id"), "text", ts
+    ).coalesce(1).write.mode("append").parquet(in_dir)
+
+
 def q_stream_dedup(spark, sf_dir):
     """Streaming ingest dedup as a GATE-CHECKED query: documents plus
     exact copies (doc_id % 10 == 0, the corpus planting rule) arrive
@@ -1085,33 +1095,18 @@ def q_stream_dedup(spark, sf_dir):
     keep each text exactly once. The surviving HASH SET is compared
     against batch SQL (which copy of a pair survives depends on file
     arrival order, so the gate checks the order-insensitive set)."""
-    import shutil
-    import tempfile
-
     from ci_log_processing_spark.streaming.dedup_stream import (
         streaming_exact_dedup,
     )
 
-    docs = _docs(spark, sf_dir)
-    ts = F.timestamp_seconds(
-        F.lit(1709287200) + (F.col("doc_id") % 3600)
-    ).alias("event_ts")
-    base = docs.select("doc_id", "text", ts)
-    dups = docs.filter(F.col("doc_id") % 10 == 0).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"), "text", ts
-    )
-    work = tempfile.mkdtemp(prefix="gate_sdedup_")
-    try:
+    def _run(work):
         in_dir = os.path.join(work, "in")
-        base.coalesce(1).write.parquet(in_dir)
-        dups.coalesce(1).write.mode("append").parquet(in_dir)
-        out = streaming_exact_dedup(
+        _write_docs_and_copies(_docs(spark, sf_dir), in_dir)
+        return streaming_exact_dedup(
             spark, in_dir, os.path.join(work, "out")
-        )
-        rows = out.select("h").collect()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(rows, "h string")
+        ).select("h")
+
+    return _collect_in_scratch(spark, "gate_sdedup_", _run, "h string")
 
 
 def q_stream_ingest_curation(spark, sf_dir):
@@ -1125,33 +1120,20 @@ def q_stream_ingest_curation(spark, sf_dir):
     ordering is not guaranteed for same-millisecond files — so the
     gate compares the order-INDEPENDENT columns (h, quality), which
     both copies share."""
-    import shutil
-    import tempfile
-
     from ci_log_processing_spark.streaming.ingest_curate import (
         run_ingest_curation,
     )
 
-    docs = _docs(spark, sf_dir)
-    ts = F.timestamp_seconds(
-        F.lit(1709287200) + (F.col("doc_id") % 3600)
-    ).alias("event_ts")
-    base = docs.select("doc_id", "text", ts)
-    dups = docs.filter(F.col("doc_id") % 10 == 0).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"), "text", ts
-    )
-    work = tempfile.mkdtemp(prefix="gate_singest_")
-    try:
+    def _run(work):
         in_dir = os.path.join(work, "in")
-        base.coalesce(1).write.parquet(in_dir)
-        dups.coalesce(1).write.mode("append").parquet(in_dir)
-        out = run_ingest_curation(
+        _write_docs_and_copies(_docs(spark, sf_dir), in_dir)
+        return run_ingest_curation(
             spark, in_dir, os.path.join(work, "out"), min_quality=0.45
-        )
-        rows = out.select("h", "quality").collect()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(rows, "h string, quality double")
+        ).select("h", "quality")
+
+    return _collect_in_scratch(
+        spark, "gate_singest_", _run, "h string, quality double"
+    )
 
 
 def q_stream_neardup(spark, sf_dir):
@@ -1164,9 +1146,6 @@ def q_stream_neardup(spark, sf_dir):
     against batch 0's persisted band index iff banded + verified at
     Jaccard >= 0.6 under the capped candidate rule; output is the
     surviving doc_id set."""
-    import shutil
-    import tempfile
-
     from ci_log_processing_spark.streaming.neardup_ingest import (
         run_neardup_ingestion,
     )
@@ -1182,28 +1161,16 @@ def q_stream_neardup(spark, sf_dir):
             "text"
         ),
     )
-    work = tempfile.mkdtemp(prefix="gate_sneardup_")
-    try:
+
+    def _run(work):
         in_dir = os.path.join(work, "in")
-        os.makedirs(in_dir)
-
-        def _write_wave(df, name, mtime):
-            tmp = os.path.join(work, "w_" + name)
-            df.coalesce(1).write.parquet(tmp)
-            pq = [f for f in os.listdir(tmp) if f.endswith(".parquet")]
-            dst = os.path.join(in_dir, name + ".parquet")
-            shutil.copy(os.path.join(tmp, pq[0]), dst)
-            os.utime(dst, (mtime, mtime))
-
-        _write_wave(base, "w0", 1_000_000)
-        _write_wave(exact.unionAll(near), "w1", 2_000_000)
-        out = run_neardup_ingestion(
+        _write_wave(base, in_dir, "w0", 1_000_000)
+        _write_wave(exact.unionAll(near), in_dir, "w1", 2_000_000)
+        return run_neardup_ingestion(
             spark, in_dir, os.path.join(work, "out"), threshold=0.6
-        )
-        rows = out.select("doc_id").collect()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(rows, "doc_id long")
+        ).select("doc_id")
+
+    return _collect_in_scratch(spark, "gate_sneardup_", _run, "doc_id long")
 
 
 def q_stream_cms(spark, sf_dir):
@@ -1213,35 +1180,24 @@ def q_stream_cms(spark, sf_dir):
     exact-count + CMS-cell partials sum-merge, and the result must
     hash-equal the single-pass DuckDB sketch over all docs — the
     linearity proof, not just plumbing."""
-    import shutil
-    import tempfile
-
     from ci_log_processing_spark.streaming.cms_stream import (
         run_streaming_cms,
     )
 
     docs = _docs(spark, sf_dir).select("doc_id", "text")
-    work = tempfile.mkdtemp(prefix="gate_scms_")
-    try:
+
+    def _run(work):
         in_dir = os.path.join(work, "in")
-        os.makedirs(in_dir)
+        _write_wave(
+            docs.filter(F.col("doc_id") % 2 == 0), in_dir, "w0", 1_000_000
+        )
+        _write_wave(
+            docs.filter(F.col("doc_id") % 2 == 1), in_dir, "w1", 2_000_000
+        )
+        return run_streaming_cms(spark, in_dir, os.path.join(work, "out"))
 
-        def _write_wave(df, name, mtime):
-            tmp = os.path.join(work, "w_" + name)
-            df.coalesce(1).write.parquet(tmp)
-            pq = [f for f in os.listdir(tmp) if f.endswith(".parquet")]
-            dst = os.path.join(in_dir, name + ".parquet")
-            shutil.copy(os.path.join(tmp, pq[0]), dst)
-            os.utime(dst, (mtime, mtime))
-
-        _write_wave(docs.filter(F.col("doc_id") % 2 == 0), "w0", 1_000_000)
-        _write_wave(docs.filter(F.col("doc_id") % 2 == 1), "w1", 2_000_000)
-        out = run_streaming_cms(spark, in_dir, os.path.join(work, "out"))
-        rows = out.collect()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(
-        rows,
+    return _collect_in_scratch(
+        spark, "gate_scms_", _run,
         "token string, exact_n long, cms_n long, inflation long, rank int",
     )
 
@@ -1254,40 +1210,29 @@ def q_stream_snapshot_drift(spark, sf_dir):
     the even-vec_id reference must hash-equal the SINGLE-PASS batch
     operator's DuckDB twin (the same oracle sim_snapshot_drift uses)
     — linear-merge correctness, not just plumbing."""
-    import shutil
-    import tempfile
-
     from ci_log_processing_spark.streaming.drift_stream import (
         run_streaming_drift,
     )
 
     emb = _emb(spark, sf_dir).select("vec_id", "label", "embedding")
-    work = tempfile.mkdtemp(prefix="gate_sdrift_")
-    try:
+
+    def _run(work):
         in_dir = os.path.join(work, "in")
-        os.makedirs(in_dir)
-
-        def _write_wave(df, name, mtime):
-            tmp = os.path.join(work, "w_" + name)
-            df.coalesce(1).write.parquet(tmp)
-            pq = [f for f in os.listdir(tmp) if f.endswith(".parquet")]
-            dst = os.path.join(in_dir, name + ".parquet")
-            shutil.copy(os.path.join(tmp, pq[0]), dst)
-            os.utime(dst, (mtime, mtime))
-
         odd = emb.filter(F.col("vec_id") % 2 != 0)
-        _write_wave(odd.filter(F.col("vec_id") % 4 == 1), "w0", 1_000_000)
-        _write_wave(odd.filter(F.col("vec_id") % 4 == 3), "w1", 2_000_000)
+        _write_wave(
+            odd.filter(F.col("vec_id") % 4 == 1), in_dir, "w0", 1_000_000
+        )
+        _write_wave(
+            odd.filter(F.col("vec_id") % 4 == 3), in_dir, "w1", 2_000_000
+        )
         ref_dir = os.path.join(work, "ref")
         emb.filter(F.col("vec_id") % 2 == 0).write.parquet(ref_dir)
-        out = run_streaming_drift(
+        return run_streaming_drift(
             spark, in_dir, ref_dir, os.path.join(work, "out")
         )
-        rows = out.collect()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(
-        rows,
+
+    return _collect_in_scratch(
+        spark, "gate_sdrift_", _run,
         "label int, n_a long, n_b long, "
         "centroid_cosine double, centroid_l2 double",
     )
@@ -1572,9 +1517,6 @@ def q_jsonl_quarantine(spark, sf_dir):
     the PERMISSIVE reader must parse the rest and flag exactly the
     planted records (fields NULL there) — record-granular analog of
     the reference's broken-file skip (logsender.py:527-529)."""
-    import shutil
-    import tempfile
-
     from ci_log_processing_spark.sources.jsonl import read_documents_jsonl
 
     docs = _docs(spark, sf_dir)
@@ -1587,20 +1529,20 @@ def q_jsonl_quarantine(spark, sf_dir):
         .otherwise(line)
         .alias("value")
     )
-    work = tempfile.mkdtemp(prefix="gate_jsonl_")
-    try:
+
+    def _run(work):
         path = os.path.join(work, "shard")
         lines.coalesce(2).write.text(path)
-        out = read_documents_jsonl(
+        return read_documents_jsonl(
             spark,
             path,
             "doc_id long, text string, lang string, source string, "
             "n_chars long",
-        )
-        rows = out.select("doc_id", "is_corrupt").collect()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(rows, "doc_id long, is_corrupt boolean")
+        ).select("doc_id", "is_corrupt")
+
+    return _collect_in_scratch(
+        spark, "gate_jsonl_", _run, "doc_id long, is_corrupt boolean"
+    )
 
 
 def q_ks_drift(spark, sf_dir):
@@ -1706,9 +1648,6 @@ def q_csv_quarantine(spark, sf_dir):
     are ALSO quarantined, the token-count contract flags both ways
     with parsed prefix fields kept for triage); the PERMISSIVE
     from_csv reader must flag exactly the planted rows."""
-    import shutil
-    import tempfile
-
     from ci_log_processing_spark.sources.jsonl import read_documents_csv
 
     docs = _docs(spark, sf_dir)
@@ -1728,20 +1667,20 @@ def q_csv_quarantine(spark, sf_dir):
         .otherwise(line)
         .alias("value")
     )
-    work = tempfile.mkdtemp(prefix="gate_csv_")
-    try:
+
+    def _run(work):
         path = os.path.join(work, "shard")
         lines.coalesce(2).write.text(path)
-        out = read_documents_csv(
+        return read_documents_csv(
             spark,
             path,
             "doc_id long, text string, lang string, source string, "
             "n_chars long",
-        )
-        rows = out.select("doc_id", "is_corrupt").collect()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(rows, "doc_id long, is_corrupt boolean")
+        ).select("doc_id", "is_corrupt")
+
+    return _collect_in_scratch(
+        spark, "gate_csv_", _run, "doc_id long, is_corrupt boolean"
+    )
 
 
 def q_full_curation(spark, sf_dir):
@@ -1931,8 +1870,8 @@ def q_full_curation_v5(spark, sf_dir):
     against one DuckDB CTE pipeline.
 
     The cleaned corpus is persisted between stages here; at 100 TB
-    the excision pass is an ETL WRITE (TrainingShardSink-style
-    materialization) that downstream stages re-scan — the cache
+    the excision pass is an ETL WRITE (a materialized table) that
+    downstream stages re-scan — the cache
     stands in for that boundary, not for a driver-side shortcut."""
     from ci_log_processing_spark.operators.curation import (
         decontaminate_spans,
@@ -2823,38 +2762,28 @@ def q_stream_index(spark, sf_dir):
     posting-grain partial, and the served index must hash-equal the
     ONE-PASS inverted_index oracle over all docs — the disjoint-
     union merge identity, not just plumbing."""
-    import shutil
-    import tempfile
-
     from ci_log_processing_spark.streaming.index_stream import (
         run_index_maintenance,
     )
 
     docs = _docs(spark, sf_dir).select("doc_id", "text")
-    work = tempfile.mkdtemp(prefix="gate_sidx_")
-    try:
+
+    def _run(work):
         in_dir = os.path.join(work, "in")
-        os.makedirs(in_dir)
-
-        def _write_wave(df, name, mtime):
-            tmp = os.path.join(work, "w_" + name)
-            df.coalesce(1).write.parquet(tmp)
-            pq = [f for f in os.listdir(tmp) if f.endswith(".parquet")]
-            dst = os.path.join(in_dir, name + ".parquet")
-            shutil.copy(os.path.join(tmp, pq[0]), dst)
-            os.utime(dst, (mtime, mtime))
-
-        _write_wave(docs.filter(F.col("doc_id") % 2 == 0), "w0", 1_000_000)
-        _write_wave(docs.filter(F.col("doc_id") % 2 == 1), "w1", 2_000_000)
-        out = run_index_maintenance(
+        _write_wave(
+            docs.filter(F.col("doc_id") % 2 == 0), in_dir, "w0", 1_000_000
+        )
+        _write_wave(
+            docs.filter(F.col("doc_id") % 2 == 1), in_dir, "w1", 2_000_000
+        )
+        return run_index_maintenance(
             spark, in_dir, os.path.join(work, "out"),
             min_df=2, max_df=1000000,
         )
-        rows = out.collect()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "term string, df long, n_occurrences long, postings string"
+
+    return _collect_in_scratch(
+        spark, "gate_sidx_", _run,
+        "term string, df long, n_occurrences long, postings string",
     )
 
 
@@ -3122,9 +3051,6 @@ def q_stream_templates(spark, sf_dir):
     counts stay mergeable), per-batch template partials sum-merge,
     and the merged table must hash-equal the single-pass miner plus
     the first-seen-batch attribution column."""
-    import shutil
-    import tempfile
-
     from ci_log_processing_spark.streaming.template_stream import (
         run_streaming_templates,
     )
@@ -3133,29 +3059,17 @@ def q_stream_templates(spark, sf_dir):
         "conv_id", "turn_idx", "message", "sink"
     )
     parity = F.ascii(F.substring(F.col("conv_id"), -1, 1)) % 2
-    work = tempfile.mkdtemp(prefix="gate_stmpl_")
-    try:
+
+    def _run(work):
         in_dir = os.path.join(work, "in")
-        os.makedirs(in_dir)
-
-        def _write_wave(df, name, mtime):
-            tmp = os.path.join(work, "w_" + name)
-            df.coalesce(1).write.parquet(tmp)
-            pq = [f for f in os.listdir(tmp) if f.endswith(".parquet")]
-            dst = os.path.join(in_dir, name + ".parquet")
-            shutil.copy(os.path.join(tmp, pq[0]), dst)
-            os.utime(dst, (mtime, mtime))
-
-        _write_wave(turns.filter(parity == 0), "w0", 1_000_000)
-        _write_wave(turns.filter(parity == 1), "w1", 2_000_000)
-        out = run_streaming_templates(
+        _write_wave(turns.filter(parity == 0), in_dir, "w0", 1_000_000)
+        _write_wave(turns.filter(parity == 1), in_dir, "w1", 2_000_000)
+        return run_streaming_templates(
             spark, in_dir, os.path.join(work, "out")
         )
-        rows = out.collect()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(
-        rows,
+
+    return _collect_in_scratch(
+        spark, "gate_stmpl_", _run,
         "template string, n_msgs long, n_convs long, example string, "
         "first_batch long",
     )
@@ -3503,9 +3417,6 @@ def q_stream_hll(spark, sf_dir):
     per-batch register PARTIALS merged by max must equal the
     single-pass batch sketch — the mergeable-sketch property, gate-
     checked against the same DuckDB twin minus the exact column."""
-    import shutil
-    import tempfile
-
     from ci_log_processing_spark.sources.derived import conv_meta_sql
     from ci_log_processing_spark.streaming.hll_stream import (
         run_streaming_hll,
@@ -3513,19 +3424,19 @@ def q_stream_hll(spark, sf_dir):
 
     t = load_transcripts(spark, sf_dir)
     meta = spark.sql(conv_meta_sql("spark", "events"))
-    work = tempfile.mkdtemp(prefix="gate_shll_")
-    try:
+
+    def _run(work):
         in_dir = os.path.join(work, "in")
         # whole conversations per file (the readiness unit), several
         # files so availableNow actually produces multiple batches
         t.repartition(6, "conv_id").write.parquet(in_dir)
-        out = run_streaming_hll(
+        return run_streaming_hll(
             spark, in_dir, os.path.join(work, "out"), meta=meta
         )
-        rows = out.collect()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(rows, "sink string, hll_distinct double")
+
+    return _collect_in_scratch(
+        spark, "gate_shll_", _run, "sink string, hll_distinct double"
+    )
 
 
 def q_stream_hdr(spark, sf_dir):
@@ -3540,9 +3451,6 @@ def q_stream_hdr(spark, sf_dir):
     ts makes the per-batch forward-fill and preamble routing
     byte-identical to the global run, so the only cross-batch
     information is the bridge gap the persisted state carries."""
-    import shutil
-    import tempfile
-
     from ci_log_processing_spark.plans.pipeline import DEFAULT_REF_YEAR
     from ci_log_processing_spark.sources.derived import conv_meta_sql
     from ci_log_processing_spark.streaming.hdr_stream import (
@@ -3567,29 +3475,17 @@ def q_stream_hdr(spark, sf_dir):
     w1 = tt.filter(
         F.col("turn_idx") >= F.coalesce(F.col("_split"), F.lit(1 << 30))
     ).drop("_split")
-    work = tempfile.mkdtemp(prefix="gate_shdr_")
-    try:
+
+    def _run(work):
         in_dir = os.path.join(work, "in")
-        os.makedirs(in_dir)
-
-        def _write_wave(df, name, mtime):
-            tmp = os.path.join(work, "w_" + name)
-            df.coalesce(1).write.parquet(tmp)
-            pq = [f for f in os.listdir(tmp) if f.endswith(".parquet")]
-            dst = os.path.join(in_dir, name + ".parquet")
-            shutil.copy(os.path.join(tmp, pq[0]), dst)
-            os.utime(dst, (mtime, mtime))
-
-        _write_wave(w0, "w0", 1_000_000)
-        _write_wave(w1, "w1", 2_000_000)
-        out = run_streaming_hdr(
+        _write_wave(w0, in_dir, "w0", 1_000_000)
+        _write_wave(w1, in_dir, "w1", 2_000_000)
+        return run_streaming_hdr(
             spark, in_dir, os.path.join(work, "out"), sub_bits=4, meta=meta
         )
-        rows = out.collect()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(
-        rows,
+
+    return _collect_in_scratch(
+        spark, "gate_shdr_", _run,
         "sink string, n_gaps long, p50_ms_lb long, p95_ms_lb long, "
         "p99_ms_lb long",
     )

@@ -201,31 +201,6 @@ def write_transcripts_parallel(
     return out_dir
 
 
-def write_transcripts(
-    out_dir: str, n_turns: int, seed: int = SEED, n_files: int = 64
-) -> str:
-    """Generate once, cache as multi-file parquet. Returns out_dir."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    marker = os.path.join(out_dir, "_GENERATED")
-    if os.path.exists(marker):
-        return out_dir
-    os.makedirs(out_dir, exist_ok=True)
-    pdf = generate_transcripts(n_turns, seed)
-    table = pa.Table.from_pandas(pdf, preserve_index=False)
-    n = len(pdf)
-    per = (n + n_files - 1) // n_files
-    for i in range(n_files):
-        lo, hi = i * per, min((i + 1) * per, n)
-        if lo >= hi:
-            break
-        pq.write_table(table.slice(lo, hi - lo), os.path.join(out_dir, f"part-{i:04d}.parquet"))
-    with open(marker, "w") as f:
-        f.write(f"n_turns={n} seed={seed}\n")
-    return out_dir
-
-
 _VOCAB = [f"w{i}" for i in range(360)] + [
     "the", "a", "and", "of", "to", "in", "is", "table", "scan", "row",
     "batch", "merge", "sort", "hash", "join", "value", "query", "part",

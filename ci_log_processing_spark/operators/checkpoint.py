@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import hadoop_fs
+
 
 def _fs_rename(fs, src, dst) -> bool:
     """Single rename seam — every rename in the expiry swap goes
@@ -42,13 +44,10 @@ def read_checkpoint(spark: SparkSession, ckpt_dir: str) -> DataFrame | None:
     duplicate sink output. Restoring (rename old -> ckpt_dir) here
     makes the swap recoverable at every kill point; the only cost is
     that the expiry is redone (keep-set filtering is idempotent)."""
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(ckpt_dir)
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, Path = hadoop_fs(spark, ckpt_dir)
+    path = Path(ckpt_dir)
     if not fs.exists(path):
-        old = jvm.org.apache.hadoop.fs.Path(
-            ckpt_dir.rstrip("/") + ".expire_old"
-        )
+        old = Path(ckpt_dir.rstrip("/") + ".expire_old")
         if not (fs.exists(old) and _fs_rename(fs, old, path)):
             return None
     try:
@@ -102,12 +101,10 @@ def expire_checkpoint(
         .write.mode("overwrite")
         .parquet(tmp_dir)
     )
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(ckpt_dir)
-    tmp = jvm.org.apache.hadoop.fs.Path(tmp_dir)
-    old = jvm.org.apache.hadoop.fs.Path(ckpt_dir.rstrip("/") + ".expire_old")
-    fs = path.getFileSystem(conf)
+    fs, Path = hadoop_fs(spark, ckpt_dir)
+    path = Path(ckpt_dir)
+    tmp = Path(tmp_dir)
+    old = Path(ckpt_dir.rstrip("/") + ".expire_old")
     # Hadoop FS reports failure via boolean returns, not exceptions.
     # Swap order matters: set the OLD manifest aside first, then move
     # the new one in, then delete the old — every failure point leaves

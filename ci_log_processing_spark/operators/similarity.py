@@ -696,26 +696,6 @@ def contrastive_triplets(
     return pos.join(neg, "anchor_id")
 
 
-def _sqdist_to_lit(vec: Column, cent: list[float]) -> Column:
-    """Squared euclidean distance from an array column to a Python
-    centroid, rounded to 5 decimals (same cross-engine FP discipline
-    as cosine_col — both engines fold the same values in the same
-    order, the rounding absorbs any last-ulp libm divergence)."""
-    lit = F.array(*[F.lit(float(v)) for v in cent])
-    return F.round(
-        F.aggregate(
-            F.zip_with(
-                vec,
-                lit,
-                lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ),
-        5,
-    )
-
-
 def _argmin_centroid(vec: Column, cents: list[list[float]]) -> Column:
     """struct(d, b) of the nearest centroid: ONE nested k x dim
     literal + a transform over the centroid index, instead of k

@@ -15,12 +15,17 @@ by conv_id right after the scan
     window adds NO second shuffle;
   * evens out long-transcript skew across ~|convs| >> N keys.
 
-For a single pathological conversation (one conv >> one partition's
-budget) the window itself must see the whole conv, so splitting it
-is semantically impossible — AQE's skew handling plus the fact that
-conv sizes are bounded (10^4 turns) keeps the straggler bounded. A
-true salt (conv_id, turn_idx // B) bucket split IS available for
-salt-safe stages (aggregates), see salted_bucket().
+A single pathological conversation (one conv >> one partition's
+budget) still lands in one task today: the forward-fill window runs
+over the whole conv, and only AQE's skew handling plus bounded conv
+sizes (10^4 turns) keep that straggler bounded. Splitting the conv is
+possible, not ruled out by the window: both window columns are
+prefix scans with associative carries (`filled_ts` carries the
+chunk's last non-null event_ts, `prior_ts_count` its count of
+non-null timestamps), so a per-chunk window over (conv_id,
+turn_idx // B), salted_bucket()'s key, plus a small per-conv fold of
+chunk carries gives the same result. Order-insensitive stages
+(aggregates) can use salted_bucket() directly.
 """
 
 from __future__ import annotations

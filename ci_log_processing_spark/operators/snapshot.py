@@ -84,14 +84,6 @@ def corpus_diff(
     )
 
 
-def diff_summary(diff: DataFrame) -> DataFrame:
-    """Roll a corpus_diff up to per-status counts — the four-row
-    promotion-gate report (fails the promotion if e.g. 'removed'
-    exceeds a churn budget). One partial-aggregated shuffle over a
-    4-value key."""
-    return diff.groupBy("status").agg(F.count(F.lit(1)).alias("n_docs"))
-
-
 def apply_cdc(
     base: DataFrame,
     changes: DataFrame,

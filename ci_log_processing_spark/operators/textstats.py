@@ -84,10 +84,6 @@ def token_entropy(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def _ratio(num: Column, den: Column) -> Column:
-    return F.round(num / F.greatest(den.cast("double"), F.lit(1.0)), 6)
-
-
 def quality_scores(
     docs: DataFrame,
     text_col: str = "text",
@@ -379,99 +375,6 @@ def repetition_stats(docs: DataFrame, text_col: str = "ltext") -> DataFrame:
         )
         .otherwise(F.lit(0.0))
         .alias("top_bigram_frac"),
-    )
-
-
-def repetition_stats_exploded(
-    docs: DataFrame, text_col: str = "ltext"
-) -> DataFrame:
-    """repetition_stats re-expressed in the hashed partial-agg shape
-    line_dedup uses, as the A/B alternative to the per-row
-    sort+fold: posexplode lines/bigrams, count with map-side partial
-    aggregation (a doc's rows stay in one input partition, so the
-    partial agg collapses each doc's duplicates before the
-    exchange), then one doc-keyed agg. Identical output schema and
-    values to repetition_stats — equality is pytest-asserted and the
-    winner is chosen by measurement (see BASELINE.md repetition
-    study).
-
-    Shape: two partial-agg exchanges (doc+line, doc+bigram) + one
-    doc-keyed join, versus the fold version's ZERO shuffles. The
-    trade: the fold pays per-row array_sort allocation inside
-    interpreted higher-order exprs (membw-bound); this pays shuffle
-    bytes but stays in hash-agg codegen.
-    """
-    split_l = F.split(F.col(text_col), "\n")
-    lines = docs.select(
-        "doc_id", F.posexplode(split_l).alias("pos", "line")
-    )
-    line_stats = (
-        lines.groupBy("doc_id", "line")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .groupBy("doc_id")
-        .agg(
-            F.sum("c").alias("_n_lines"),
-            F.count(F.lit(1)).alias("_n_distinct"),
-            F.sum(
-                F.when(
-                    F.col("c") > 1, F.col("c") * F.length("line")
-                ).otherwise(F.lit(0))
-            ).alias("_dup_chars"),
-            F.sum(F.col("c") * F.length("line")).alias("_total_chars"),
-        )
-    )
-    toks = tokens(F.col(text_col))
-    bg = F.zip_with(
-        F.slice(toks, 1, F.size(toks) - 1),
-        F.slice(toks, 2, F.size(toks) - 1),
-        lambda x, y: F.struct(x.alias("a"), y.alias("b")),
-    )
-    bgx = docs.select(
-        "doc_id", F.size(toks).alias("_n_toks"), F.explode(bg).alias("b")
-    )
-    # min over struct(-count, a, b) == max count with the same
-    # lexicographically-smallest-bigram tie-break the fold's sorted
-    # first-run-at-max rule produces
-    bg_best = (
-        bgx.groupBy("doc_id", "_n_toks", "b")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .groupBy("doc_id", "_n_toks")
-        .agg(
-            F.min(
-                F.struct(
-                    (-F.col("c")).alias("neg"),
-                    F.col("b.a").alias("a"),
-                    F.col("b.b").alias("b2"),
-                )
-            ).alias("w")
-        )
-    )
-    w = F.col("w")
-    nl = F.col("_n_lines")
-    return (
-        line_stats.join(bg_best, "doc_id", "left")
-        .select(
-            "doc_id",
-            nl.cast("int").alias("n_lines"),
-            F.round(
-                (nl - F.col("_n_distinct")) / nl.cast("double"), 6
-            ).alias("dup_line_frac"),
-            F.round(
-                F.col("_dup_chars")
-                / F.greatest(F.col("_total_chars"), F.lit(1)).cast("double"),
-                6,
-            ).alias("dup_line_char_frac"),
-            F.when(
-                w.isNotNull(), F.concat(w["a"], F.lit(" "), w["b2"])
-            ).alias("top_bigram"),
-            F.coalesce(
-                F.round(
-                    (-w["neg"]) * F.lit(2.0) / F.col("_n_toks").cast("double"),
-                    6,
-                ),
-                F.lit(0.0),
-            ).alias("top_bigram_frac"),
-        )
     )
 
 

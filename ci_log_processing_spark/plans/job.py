@@ -60,7 +60,7 @@ def main(argv=None):
 
     from pyspark.sql import functions as F
 
-    from ..session import get_spark
+    from ..session import get_spark, hadoop_fs
     from ..sources.transcripts import load_transcripts
     from .pipeline import full_pipeline
     from ..operators.aggregate import hourly_agg
@@ -86,10 +86,8 @@ def main(argv=None):
         # HDFS/S3 URI in the deployment this job is designed for,
         # where os.path.exists would silently disable the
         # no_metadata rule
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(meta_path)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(hpath):
+        fs, Path = hadoop_fs(spark, meta_path)
+        if fs.exists(Path(meta_path)):
             meta = spark.read.parquet(meta_path)
     else:
         from ..sources.derived import conv_meta_sql

@@ -3,7 +3,8 @@
 Local testing runs on local[N]; the configs below are the ones that
 matter identically on a 1000-executor cluster: AQE (runtime
 re-planning + skew-join splitting), sane shuffle partitioning,
-Arrow batching for pandas UDFs, UTC session time.
+Arrow batching for pandas UDFs, UTC session time. `hadoop_fs` is the
+one way code here reaches a path's Hadoop FileSystem.
 """
 
 from __future__ import annotations
@@ -74,3 +75,10 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def hadoop_fs(spark: SparkSession, path: str):
+    """(FileSystem, Path class) for `path`'s scheme."""
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    conf = spark._jsc.hadoopConfiguration()
+    return Path(path).getFileSystem(conf), Path

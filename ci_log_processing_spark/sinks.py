@@ -17,6 +17,11 @@ IcebergTableSink emits real Spark SQL DDL and a writeTo append; it
 requires the iceberg-spark-runtime jar + a configured catalog, which
 this offline sandbox does not ship — `available()` reports that
 honestly, and tests golden-check the generated DDL instead.
+
+`append_fanout` is the one sink write of the job and of follow mode.
+BucketedTableSink is not on that path yet: it is the storage layer a
+conv_id-bucketed checkpoint manifest would use, so the resume
+anti-join rides the job's conv exchange instead of a broadcast.
 """
 
 from __future__ import annotations
@@ -174,38 +179,6 @@ class IcebergTableSink(TableSink):
         df.writeTo(self.table).append()
 
 
-class TrainingShardSink(TableSink):
-    """Fixed-shard training-data export: writes the output of
-    curation (typically shuffle_index's (.., global_idx, shard)
-    rows) as ONE file per shard, hive-partitioned by `shard`, rows
-    inside each file in global_idx order — the layout a training
-    dataloader consumes directly (open shard k, read sequentially =
-    the epoch's data order).
-
-    Scale shape: repartition on the shard column (one exchange —
-    shard count is chosen as rows/shard_size, so partitions are
-    uniform by construction) + sortWithinPartitions(global_idx); a
-    1000-executor cluster writes all shards concurrently, one task
-    per shard, no small-file explosion and no driver-side loop.
-    """
-
-    def __init__(self, path: str, order_col: str = "global_idx"):
-        self.path = path
-        self.order_col = order_col
-
-    def ensure(self, spark: SparkSession) -> None:
-        return None  # directory sinks materialize on first write
-
-    def append(self, df: DataFrame) -> None:
-        (
-            df.repartition("shard")
-            .sortWithinPartitions("shard", self.order_col)
-            .write.mode("append")
-            .partitionBy("shard")
-            .parquet(self.path)
-        )
-
-
 class BucketedTableSink(TableSink):
     """Warehouse table BUCKETED (and sorted) by a join key — the
     storage-side answer to the repeated large×large joins of the
@@ -252,113 +225,4 @@ class BucketedTableSink(TableSink):
             .bucketBy(self.n_buckets, self.bucket_col)
             .sortBy(self.bucket_col)
             .saveAsTable(self.table)
-        )
-
-
-class JsonlShardSink(TableSink):
-    """Training-data export in the trainer interchange format: one
-    .jsonl file per shard (a JSON object per line), rows inside each
-    shard in epoch order — what every dataloader outside the Spark
-    world (torch IterableDataset, HF datasets streaming) actually
-    reads. The parquet TrainingShardSink keeps the lakehouse copy;
-    this sink is the hand-off artifact.
-
-    Mechanics: serialize each row once with to_json(struct(*)) on
-    the JVM side (never Python), prefix the shard as a hive
-    directory via partitionBy on the TEXT datasource, repartition
-    on the shard column and sortWithinPartitions(order) — the exact
-    TrainingShardSink plan, so the scale argument carries over
-    verbatim: one exchange, one task per shard, no small files, no
-    driver loop. JSON field order is the struct order (stable);
-    line order inside a shard is the epoch order.
-    """
-
-    def __init__(self, path: str, order_col: str = "global_idx"):
-        self.path = path
-        self.order_col = order_col
-
-    def ensure(self, spark: SparkSession) -> None:
-        return None  # directory sinks materialize on first write
-
-    def append(self, df: DataFrame) -> None:
-        payload = [c for c in df.columns if c != "shard"]
-        (
-            df.repartition("shard")
-            .sortWithinPartitions("shard", self.order_col)
-            .select(
-                "shard",
-                F.to_json(F.struct(*payload)).alias("value"),
-            )
-            .write.mode("append")
-            .partitionBy("shard")
-            .text(self.path)
-        )
-
-
-class ZOrderSink(TableSink):
-    """Z-order-clustered parquet writer — the layout
-    zorder_layout_audit (operators/layout.py) quantifies, actually
-    materialized: rows are range-partitioned by their Morton key
-    and sorted by it inside each file, so every output file covers
-    a tight bounding box in BOTH clustering dimensions and a
-    rectangle predicate on either column skips most files via
-    parquet row-group min/max stats (the Delta/Iceberg OPTIMIZE
-    ZORDER BY effect, engine-side).
-
-    Mechanics: one global min/max aggregate rescales both columns
-    to `bits`-bit ranks (exact integer arithmetic, identical to the
-    audit's), the Morton key is a static shift/and/or codegen tree,
-    repartitionByRange(n_files, zkey) makes contiguous Z-ranges =
-    files (range boundaries from Spark's reservoir sample — layout
-    only, never values), and sortWithinPartitions(zkey) orders rows
-    for row-group-level skipping inside each file. One exchange +
-    per-partition sort; no global sort, no driver data.
-    """
-
-    def __init__(
-        self,
-        path: str,
-        x_col: str,
-        y_col: str,
-        n_files: int = 16,
-        bits: int = 16,
-    ):
-        self.path = path
-        self.x_col = x_col
-        self.y_col = y_col
-        self.n_files = n_files
-        self.bits = bits
-
-    def ensure(self, spark: SparkSession) -> None:
-        return None  # directory sinks materialize on first write
-
-    def append(self, df: DataFrame) -> None:
-        from .operators.layout import zorder_key
-
-        x = F.col(self.x_col).cast("long")
-        y = F.col(self.y_col).cast("long")
-        bounds = df.agg(
-            F.min(x).alias("_mnx"),
-            F.max(x).alias("_mxx"),
-            F.min(y).alias("_mny"),
-            F.max(y).alias("_mxy"),
-        )
-        top = (1 << self.bits) - 1
-        rx = F.expr(
-            f"(({self.x_col} - _mnx) * {top})"
-            " div greatest(_mxx - _mnx, 1)"
-        ).cast("long")
-        ry = F.expr(
-            f"(({self.y_col} - _mny) * {top})"
-            " div greatest(_mxy - _mny, 1)"
-        ).cast("long")
-        (
-            df.crossJoin(F.broadcast(bounds))
-            .withColumn("_zkey", zorder_key(rx, ry, self.bits))
-            .drop("_mnx", "_mxx", "_mny", "_mxy")
-            .repartitionByRange(self.n_files, F.col("_zkey"))
-            .sortWithinPartitions("_zkey")
-            .drop("_zkey")
-            .write.mode("append")
-            .parquet(self.path)
         )

@@ -1,4 +1,4 @@
-"""Parquet table access for the synthetic test data.
+"""Names of the parquet tables in a synthetic test-data directory.
 
 The reference's "source" is the Zuul REST API plus a download
 directory (logscraper.py:414-440, logsender.py:175-198); ours is a
@@ -6,24 +6,7 @@ set of parquet tables (the Iceberg analog in this sandbox — the DDL
 surface is kept behind sinks.TableSink so a real Iceberg catalog
 slots in without touching the pipeline)."""
 
-from __future__ import annotations
-
-import os
-
-from pyspark.sql import DataFrame, SparkSession
-
 TABLES = (
     "region nation customer supplier part orders lineitem events "
     "documents embeddings"
 ).split()
-
-
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def register_views(spark: SparkSession, sf_dir: str, names=TABLES) -> None:
-    for name in names:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            spark.read.parquet(path).createOrReplaceTempView(name)

@@ -23,9 +23,10 @@ replay.
 Scale shape per batch: one partial-aggregated count shuffle whose
 volume is the batch's distinct keys. The fold on read is
 merge_agg_deltas' union + re-agg over PARTIAL-sized inputs — cost
-grows with (batches x keys), never with row volume, and a periodic
-compaction (rewrite all partials as one) bounds the batch count;
-`compact_partials` below is that maintenance op.
+grows with (batches x keys), never with row volume. There is no
+compaction, so the fold width grows with the batch count; a
+crash-safe compaction belongs to the batch commit (write, then
+promote before the stream commits), not to a write-then-delete pass.
 """
 
 from __future__ import annotations
@@ -37,13 +38,7 @@ from pyspark.sql import functions as F
 
 from ..plans.pipeline import parse_transcripts
 from .follow import TRANSCRIPT_SCHEMA
-from .partials import (
-    drain,
-    hadoop_fs,
-    list_partials,
-    read_partials,
-    write_partial,
-)
+from .partials import drain, read_partials, write_partial
 
 _KEYS = ["severity", "window_start"]
 _PARTIAL_SCHEMA = "severity string, window_start timestamp, cnt long"
@@ -66,26 +61,6 @@ def read_rollup(spark: SparkSession, agg_dir: str) -> DataFrame:
     exchange — never touches row-level data."""
     parts = read_partials(spark, agg_dir, _PARTIAL_SCHEMA)
     return parts.groupBy(*_KEYS).agg(F.sum("cnt").alias("cnt"))
-
-
-def compact_partials(spark: SparkSession, agg_dir: str) -> None:
-    """Rewrite all batch partials as a single partial (directory
-    `b_compact`), then remove the inputs — bounds the fold width.
-    Written first, deleted after: a crash between the two steps
-    leaves double-counted partials visible, so production would run
-    this under a metastore swap (the checkpoint.py expire pattern);
-    here it documents the maintenance shape."""
-    merged = read_rollup(spark, agg_dir).collect()
-    old = [
-        p for p in list_partials(spark, agg_dir)
-        if not p.endswith("/b_compact")
-    ]
-    spark.createDataFrame(merged, _PARTIAL_SCHEMA).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(agg_dir, "b_compact"))
-    fs, Path = hadoop_fs(spark, agg_dir)
-    for p in old:
-        fs.delete(Path(p), True)
 
 
 def run_agg_maintenance(

@@ -46,7 +46,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .partials import drain, hadoop_fs
+from ..session import hadoop_fs
+from .partials import drain
 
 CDC_STREAM_SCHEMA = (
     "doc_id long, op string, seq long, text string"
@@ -213,83 +214,3 @@ def run_cdc_merge(
         max_files_per_trigger,
     )
     return read_snapshot(spark, snap_dir)
-
-
-def vacuum_snapshot(
-    spark: SparkSession, snap_dir: str, keep_last: int = 1
-) -> int:
-    """Version GC: per bucket, delete all but the newest `keep_last`
-    version directories; returns the count removed. Old versions are
-    what time travel reads, so keep_last is the retention window —
-    exactly Delta VACUUM's contract. Safe against concurrent readers
-    of the LATEST version by construction (the latest is never
-    deleted); historical readers must finish inside the retention
-    window, the same caveat every lakehouse vacuum carries."""
-    fs, Path = hadoop_fs(spark, snap_dir)
-    root = Path(snap_dir)
-    removed = 0
-    if not fs.exists(root):
-        return 0
-    for st in fs.listStatus(root):
-        if not st.getPath().getName().startswith("bucket="):
-            continue
-        versions = sorted(
-            (
-                int(vst.getPath().getName()[1:])
-                for vst in fs.listStatus(st.getPath())
-                if vst.getPath().getName().startswith("v")
-            ),
-            reverse=True,
-        )
-        for v in versions[max(1, int(keep_last)):]:
-            fs.delete(
-                Path(os.path.join(snap_dir, st.getPath().getName(),
-                                  f"v{v}")),
-                True,
-            )
-            removed += 1
-    return removed
-
-
-def lookup(
-    spark: SparkSession,
-    snap_dir: str,
-    keys: list[int],
-    n_buckets: int = 16,
-    version: int = 1 << 60,
-) -> DataFrame:
-    """Point lookup against the merged table: hash each key to its
-    bucket and read ONLY those buckets at their latest version —
-    the secondary-index behaviour the bucketed, key-sorted layout
-    buys without an index structure (zone maps prune within the
-    bucket). Buckets for the requested keys are computed with a
-    1-job Spark expression so the hash matches the write path
-    exactly (no Python xxhash reimplementation to drift); the key
-    list is query-sized, so the job is trivial and only the needed
-    paths are ever opened."""
-    kdf = spark.createDataFrame(
-        [(int(k),) for k in keys], "doc_id long"
-    )
-    wanted = {
-        r.b
-        for r in kdf.select(
-            _bucket(F.col("doc_id"), n_buckets).alias("b")
-        )
-        .distinct()
-        .collect()
-    }
-    latest = _latest_versions(spark, snap_dir, version)
-    paths = [
-        os.path.join(snap_dir, f"bucket={b}", f"v{v}")
-        for b, v in sorted(latest.items())
-        if b in wanted
-    ]
-    if not paths:
-        return spark.createDataFrame(
-            [], f"doc_id long, {', '.join(c + ' string' for c in _PAYLOAD)}"
-        )
-    return (
-        spark.read.parquet(*paths)
-        .join(F.broadcast(kdf), "doc_id")
-        .select("doc_id", *_PAYLOAD)
-    )

@@ -26,9 +26,9 @@ of the spectrum, stated so the contrast with the dedup gate's
 Scale shape per batch: posting_rows' zero-shuffle posexplode + one
 (term, doc)-keyed partial+final aggregate over the BATCH, never the
 already-indexed corpus. The serve-time finalize folds partial-sized
-inputs; compaction (rewriting all partials as one, bounding fold
-width) is the same maintenance shape as agg_incremental's
-compact_partials and snapshot.compaction_plan.
+inputs. There is no compaction, so the fold width grows with the
+batch count; a crash-safe compaction belongs to the batch commit
+(write, then promote before the stream commits).
 """
 
 from __future__ import annotations

@@ -16,10 +16,12 @@ and, after a full replay with a fresh checkpoint, every later batch's
 output too — so the replay sees exactly the pre-batch state and
 re-derives the identical partial.
 
-Layout: `b<k>` per micro-batch, plus `b_compact` for a fold of
-earlier partials (agg_incremental.compact_partials). Every listing
-goes through the root's Hadoop FileSystem, so `file://`, HDFS and
-object-store URIs behave like local paths.
+Layout: one `b<k>` directory per micro-batch, and nothing else is a
+partial. There is no compaction, so a fold reads one partial per
+batch so far; a crash-safe compaction belongs to the batch commit
+that promotes a batch's output before the stream commits it. Every
+listing goes through the root's Hadoop FileSystem, so `file://`, HDFS
+and object-store URIs behave like local paths.
 """
 
 from __future__ import annotations
@@ -32,14 +34,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
+from ..session import hadoop_fs
+
 _BATCH_DIR = re.compile(r"b(\d+)")
-
-
-def hadoop_fs(spark: SparkSession, path: str):
-    """(FileSystem, Path class) for `path`'s scheme."""
-    Path = spark._jvm.org.apache.hadoop.fs.Path
-    conf = spark._jsc.hadoopConfiguration()
-    return Path(path).getFileSystem(conf), Path
 
 
 def drain(
@@ -76,7 +73,7 @@ def list_partials(
     spark: SparkSession, root: str, before: int | None = None
 ) -> list[str]:
     """Partial directories under `root` (Hadoop FS listing), in batch
-    order: every `b*` directory, or with `before` only the `b<k>` with
+    order: every `b<k>` directory, or with `before` only those with
     k < before. Empty when `root` does not exist."""
     fs, Path = hadoop_fs(spark, root)
     path = Path(root)
@@ -84,12 +81,11 @@ def list_partials(
         return []
     found = []
     for st in fs.listStatus(path):
-        name = st.getPath().getName()
-        if not (st.isDirectory() and name.startswith("b")):
+        m = _BATCH_DIR.fullmatch(st.getPath().getName())
+        if not (st.isDirectory() and m):
             continue
-        m = _BATCH_DIR.fullmatch(name)
-        k = int(m.group(1)) if m else -1
-        if before is None or (m and k < before):
+        k = int(m.group(1))
+        if before is None or k < before:
             found.append((k, st.getPath().toString()))
     return [p for _, p in sorted(found)]
 

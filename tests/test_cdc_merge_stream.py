@@ -133,50 +133,3 @@ def test_replay_excludes_own_partial_version(spark, work):
     assert 999 not in got  # garbage replaced, not merged
     assert got[0] == "zero-v2"
     assert len(got) == 10
-
-
-def test_vacuum_keeps_latest_versions(spark, work):
-    from ci_log_processing_spark.streaming.cdc_merge import (
-        vacuum_snapshot,
-    )
-
-    snap = os.path.join(work, "snap")
-    bootstrap_snapshot(_base(spark, 10), snap, n_buckets=2)
-    ch_dir = os.path.join(work, "ch")
-    _write_batches(
-        spark,
-        ch_dir,
-        [[(0, "U", 1, "a")], [(0, "U", 2, "b")], [(1, "U", 3, "c")]],
-    )
-    before = {
-        r.doc_id: r.text
-        for r in run_cdc_merge(
-            spark, ch_dir, snap, os.path.join(work, "chk"), n_buckets=2
-        ).collect()
-    }
-    removed = vacuum_snapshot(spark, snap, keep_last=1)
-    assert removed >= 1
-    latest = _latest_versions(spark, snap, 1 << 60)
-    # every bucket now holds exactly one version: the latest
-    for b in latest:
-        vdir = os.path.join(snap, f"bucket={b}")
-        vs = [d for d in os.listdir(vdir) if d.startswith("v")]
-        assert len(vs) == 1
-    after = {
-        r.doc_id: r.text for r in read_snapshot(spark, snap).collect()
-    }
-    assert after == before
-
-
-def test_lookup_reads_only_key_buckets(spark, work):
-    from ci_log_processing_spark.streaming.cdc_merge import lookup
-
-    snap = os.path.join(work, "snap")
-    bootstrap_snapshot(_base(spark, 30), snap, n_buckets=4)
-    got = {
-        r.doc_id: r.text
-        for r in lookup(spark, snap, [3, 17], n_buckets=4).collect()
-    }
-    assert got == {3: "base-3", 17: "base-17"}
-    # a missing key returns nothing rather than erroring
-    assert lookup(spark, snap, [999], n_buckets=4).count() == 0

@@ -1,17 +1,9 @@
-"""Tests for quality-based duplicate resolution (dedup_keep_best)
-and the fixed-shard training export sink (TrainingShardSink)."""
+"""Tests for quality-based duplicate resolution (dedup_keep_best)."""
 
-import os
-
-import pytest
-from pyspark.sql import functions as F
-
-from ci_log_processing_spark.operators.curation import shuffle_index
 from ci_log_processing_spark.operators.dedup import (
     dedup_keep_best,
     release_persisted,
 )
-from ci_log_processing_spark.sinks import TrainingShardSink
 
 
 def test_keep_best_prefers_quality_over_min_id(spark):
@@ -54,56 +46,3 @@ def test_keep_best_prefers_quality_over_min_id(spark):
     # exactly one best per component
     per_comp = out.groupby("component")["is_best"].sum()
     assert (per_comp == 1).all()
-
-
-def test_training_shard_sink_layout(spark, tmp_path):
-    docs = spark.createDataFrame(
-        [(i, f"text {i}") for i in range(100)], "doc_id long, text string"
-    )
-    idx = shuffle_index(docs, shard_size=25)
-    sink = TrainingShardSink(str(tmp_path / "shards"))
-    sink.append(idx)
-    release_persisted()
-    # hive layout: one directory per shard, ONE data file per shard
-    root = tmp_path / "shards"
-    shard_dirs = sorted(d for d in os.listdir(root) if d.startswith("shard="))
-    assert shard_dirs == ["shard=0", "shard=1", "shard=2", "shard=3"]
-    for d in shard_dirs:
-        files = [
-            f for f in os.listdir(root / d) if f.endswith(".parquet")
-        ]
-        assert len(files) == 1, (d, files)
-    # rows inside each shard file are in global_idx order and dense
-    import duckdb
-
-    con = duckdb.connect()
-    got = con.execute(
-        "SELECT shard, list(global_idx ORDER BY file_row_number) AS idxs "
-        "FROM read_parquet(?, hive_partitioning=true, "
-        "file_row_number=true) GROUP BY shard ORDER BY shard",
-        [str(root / "**" / "*.parquet")],
-    ).fetchall()
-    assert len(got) == 4
-    for shard, idxs in got:
-        assert idxs == list(range(shard * 25, shard * 25 + 25))
-
-
-def test_training_shard_sink_single_exchange(spark):
-    docs = spark.createDataFrame(
-        [(i, f"text {i}") for i in range(50)], "doc_id long, text string"
-    )
-    idx = shuffle_index(docs, shard_size=10)
-    written = idx.repartition("shard").sortWithinPartitions(
-        "shard", "global_idx"
-    )
-    plan = written._jdf.queryExecution().executedPlan().toString()
-    release_persisted()
-    # exactly one exchange above the cached rank: the shard
-    # repartition (the rank's own _bkt exchange lives in the cache)
-    import re
-
-    post_cache = plan.split("InMemoryRelation")[0]
-    ids = re.findall(
-        r"Exchange hashpartitioning\(shard.*?plan_id=(\d+)", post_cache
-    )
-    assert len(set(ids)) == 1, plan

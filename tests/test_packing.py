@@ -110,15 +110,14 @@ def test_repetition_single_token_doc(spark):
 
 
 def test_repetition_variants_bit_equal(spark):
-    """The three repetition implementations — Catalyst sort+fold,
-    exploded hash-agg, Arrow Counter — must be bit-identical on an
-    adversarial mix: dup lines, all-unique, tie-broken bigrams,
-    single-token docs, rounding-sensitive fractions (1/3, 2/7),
-    and newline-carrying tokens from line-doubling."""
+    """The two repetition implementations — Catalyst sort+fold and
+    Arrow Counter — must be bit-identical on an adversarial mix: dup
+    lines, all-unique, tie-broken bigrams, single-token docs,
+    rounding-sensitive fractions (1/3, 2/7), and newline-carrying
+    tokens from line-doubling."""
     from ci_log_processing_spark.operators.textstats import (
         repetition_stats,
         repetition_stats_arrow,
-        repetition_stats_exploded,
     )
 
     docs = spark.createDataFrame(
@@ -140,14 +139,13 @@ def test_repetition_variants_bit_equal(spark):
         .sort_values("doc_id")
         .reset_index(drop=True)
     )
-    for fn in (repetition_stats_exploded, repetition_stats_arrow):
-        alt = (
-            fn(docs)
-            .toPandas()
-            .sort_values("doc_id")
-            .reset_index(drop=True)[base.columns]
-        )
-        assert base.equals(alt), (fn.__name__, base, alt)
+    alt = (
+        repetition_stats_arrow(docs)
+        .toPandas()
+        .sort_values("doc_id")
+        .reset_index(drop=True)[base.columns]
+    )
+    assert base.equals(alt), (base, alt)
 
 
 def test_bfd_beats_next_fit_on_skewed_mix(spark):

@@ -74,100 +74,3 @@ def test_iceberg_unavailable_raises_with_ddl(spark):
     with pytest.raises(NotImplementedError) as e:
         s.ensure(spark)
     assert "CREATE TABLE IF NOT EXISTS" in str(e.value)
-
-
-def test_jsonl_shard_sink_roundtrip_and_order(spark, tmp_path):
-    """JsonlShardSink: one text file per shard, lines in epoch
-    order, JSON round-trips through spark.read.json equal to the
-    source rows."""
-    import glob
-    import json as _json
-    import os
-
-    from ci_log_processing_spark.sinks import JsonlShardSink
-
-    rows = [
-        (i, i % 3, f"doc {i}", i * 10) for i in range(30)
-    ]  # global_idx, shard, text, meta
-    df = spark.createDataFrame(
-        rows, "global_idx long, shard int, text string, meta long"
-    )
-    out = str(tmp_path / "jsonl")
-    JsonlShardSink(out).append(df)
-    # hive layout, ONE part file per shard
-    for s in range(3):
-        files = [
-            f for f in glob.glob(os.path.join(out, f"shard={s}", "part-*"))
-            if not f.endswith(".crc")
-        ]
-        assert len(files) == 1, files
-        with open(files[0]) as fh:
-            lines = [_json.loads(ln) for ln in fh]
-        # epoch order inside the shard
-        idxs = [ln["global_idx"] for ln in lines]
-        assert idxs == sorted(idxs)
-        assert all(ln["global_idx"] % 3 == s for ln in lines)
-    back = spark.read.json(os.path.join(out, "shard=*"))
-    assert back.count() == 30
-    got = {
-        (r["global_idx"], r["text"], r["meta"]) for r in back.collect()
-    }
-    assert got == {(i, f"doc {i}", i * 10) for i in range(30)}
-
-
-def test_zorder_sink_prunes_both_dimensions(spark, tmp_path):
-    """ZOrderSink: per-file bounding boxes must let a y-selective
-    rectangle probe skip files that an x-sorted linear layout
-    cannot skip at all."""
-    import glob
-    import os
-
-    from ci_log_processing_spark.sinks import ZOrderSink
-    from pyspark.sql import functions as F
-
-    # 64x64 grid
-    df = spark.range(64 * 64).select(
-        (F.col("id") % 64).alias("x"), (F.col("id") / 64).cast("long").alias("y")
-    )
-    zpath = str(tmp_path / "zorder")
-    ZOrderSink(zpath, "x", "y", n_files=16).append(df)
-    lpath = str(tmp_path / "linear")
-    (
-        df.repartitionByRange(16, F.col("x"))
-        .sortWithinPartitions("x")
-        .write.parquet(lpath)
-    )
-
-    def overlapping(path, x_lo, x_hi, y_lo, y_hi):
-        n = 0
-        files = [
-            f for f in glob.glob(os.path.join(path, "part-*"))
-            if f.endswith(".parquet")
-        ]
-        assert len(files) >= 8
-        for f in files:
-            st = (
-                spark.read.parquet(f)
-                .agg(
-                    F.min("x"), F.max("x"), F.min("y"), F.max("y")
-                )
-                .collect()[0]
-            )
-            if not (st[1] < x_lo or st[0] > x_hi
-                    or st[3] < y_lo or st[2] > y_hi):
-                n += 1
-        return n, len(files)
-
-    # y-selective probe: all x, narrow y band
-    zn, zf = overlapping(zpath, 0, 63, 8, 11)
-    ln, lf = overlapping(lpath, 0, 63, 8, 11)
-    # linear layout (sorted by x) cannot prune on y: reads everything
-    assert ln == lf
-    # z-order skips most files
-    assert zn <= zf // 2
-    # both layouts hold the same rows
-    assert spark.read.parquet(zpath).count() == 64 * 64
-    got = {
-        (r["x"], r["y"]) for r in spark.read.parquet(zpath).collect()
-    }
-    assert got == {(i % 64, i // 64) for i in range(64 * 64)}

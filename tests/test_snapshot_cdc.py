@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 from ci_log_processing_spark.operators.snapshot import (
     corpus_diff,
     derive_snapshot_b,
-    diff_summary,
 )
 
 
@@ -27,17 +26,6 @@ def test_corpus_diff_statuses(spark):
         3: "removed",
         4: "added",
     }
-
-
-def test_diff_summary_counts(spark):
-    a = _docs(spark, [(i, f"t{i}") for i in range(10)])
-    b = _docs(spark, [(i, f"t{i}" if i % 2 else "mut") for i in range(8)])
-    s = {
-        r["status"]: r["n_docs"]
-        for r in diff_summary(corpus_diff(a, b)).collect()
-    }
-    # ids 8,9 removed; even ids 0,2,4,6 mutated ('t0' != 'mut' ... all 4)
-    assert s == {"removed": 2, "changed": 4, "unchanged": 4}
 
 
 def test_derive_snapshot_b_rule(spark):

@@ -1,6 +1,6 @@
 """Streaming rollup maintenance (streaming/agg_incremental.py):
-fold == flat aggregate, replay idempotence of the batch-scoped
-partial, and compaction preserving the rollup."""
+fold == flat aggregate and replay idempotence of the batch-scoped
+partial."""
 
 import os
 import shutil
@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 
 from ci_log_processing_spark.streaming.agg_incremental import (
     _partial,
-    compact_partials,
     read_rollup,
     run_agg_maintenance,
 )
@@ -96,23 +95,3 @@ def test_replayed_batch_overwrites_not_doubles(spark, work):
         for r in read_rollup(spark, agg_dir).collect()
     }
     assert again == replay_all
-
-
-def test_compact_preserves_rollup(spark, work):
-    t = _transcripts(spark)
-    in_dir = os.path.join(work, "in")
-    t.repartition(3).write.parquet(in_dir)
-    out_dir = os.path.join(work, "out")
-    before = {
-        (r.severity, r.window_start): r.cnt
-        for r in run_agg_maintenance(spark, in_dir, out_dir).collect()
-    }
-    agg_dir = os.path.join(out_dir, "agg")
-    compact_partials(spark, agg_dir)
-    dirs = [d for d in os.listdir(agg_dir) if not d.startswith(".")]
-    assert dirs == ["b_compact"]
-    after = {
-        (r.severity, r.window_start): r.cnt
-        for r in read_rollup(spark, agg_dir).collect()
-    }
-    assert after == before

@@ -26,15 +26,16 @@ def test_read_partials_selects_by_batch(spark, tmp_path):
         write_partial(
             spark.createDataFrame([(k, f"b{k}")], SCHEMA), root, k
         )
-    compact = spark.createDataFrame([(-1, "compact")], SCHEMA)
-    compact.write.parquet(os.path.join(root, "b_compact"))
-    # not a partial: staging dirs and hidden dirs are never read
-    compact.write.parquet(os.path.join(root, "_stage_b3"))
+    # not partials: only b<k> directories are read, never a staging
+    # dir or any other b-prefixed name
+    stray = spark.createDataFrame([(-1, "stray")], SCHEMA)
+    stray.write.parquet(os.path.join(root, "b_compact"))
+    stray.write.parquet(os.path.join(root, "_stage_b3"))
 
     every = _rows(read_partials(spark, root, SCHEMA))
-    assert [r[0] for r in every] == [-1, 0, 1, 2, 10]
+    assert [r[0] for r in every] == [0, 1, 2, 10]
     # batch 2 sees strictly earlier batches: not its own attempt, not
-    # later ones (a full replay with a fresh checkpoint), no b_compact
+    # later ones (a full replay with a fresh checkpoint)
     assert _rows(read_partials(spark, root, SCHEMA, before=2)) == [
         (0, "b0"),
         (1, "b1"),
