@@ -1683,13 +1683,11 @@ def q_csv_quarantine(spark, sf_dir):
     )
 
 
-def q_full_curation(spark, sf_dir):
-    """Flagship composition for the training-data tier: C4 line
-    cleaning -> quality gate -> exact dedup keep-first -> next-fit
-    sequence packing, all operator-level (passthrough columns, no
-    rejoin). Plan cost: one scan, the dedup window's md5 shuffle,
-    and the pack group shuffle — 2 exchanges end to end."""
-    from ci_log_processing_spark.operators.curation import pack_sequences
+def _curation_prefix(spark, sf_dir):
+    """The shared head of the q_full_curation chains: C4 line
+    cleaning -> heuristic quality >= 0.45 -> exact dedup keep-first,
+    over `cleaned` text with `source` passed through (the oracle
+    side's od.q_full_curation builds the same head)."""
     from ci_log_processing_spark.operators.dedup import (
         exact_dedup_keep_first,
     )
@@ -1706,11 +1704,41 @@ def q_full_curation(spark, sf_dir):
         cleaned, text_col="cleaned", keep_cols=("source", "cleaned")
     )
     survivors = scored.filter(F.col("quality") >= 0.45)
-    deduped = exact_dedup_keep_first(
+    return exact_dedup_keep_first(
         survivors, text_col="cleaned", keep_cols=("source", "cleaned")
     )
+
+
+def _model_gate(deduped):
+    """The MODEL-quality gate of the v2/v3 chains (hashed-ngram
+    linear scorer, zero shuffle): (doc_id, source, cleaned) of the
+    docs it keeps."""
+    from ci_log_processing_spark.operators.textstats import (
+        model_quality_scores,
+    )
+
+    return (
+        model_quality_scores(
+            deduped, text_col="cleaned", keep_cols=("source", "cleaned")
+        )
+        .filter("model_keep")
+        .select("doc_id", "source", "cleaned")
+    )
+
+
+def q_full_curation(spark, sf_dir):
+    """Flagship composition for the training-data tier: C4 line
+    cleaning -> quality gate -> exact dedup keep-first -> next-fit
+    sequence packing, all operator-level (passthrough columns, no
+    rejoin). Plan cost: one scan, the dedup window's md5 shuffle,
+    and the pack group shuffle — 2 exchanges end to end."""
+    from ci_log_processing_spark.operators.curation import pack_sequences
+
     return pack_sequences(
-        deduped, capacity=128, group_col="source", text_col="cleaned"
+        _curation_prefix(spark, sf_dir),
+        capacity=128,
+        group_col="source",
+        text_col="cleaned",
     )
 
 
@@ -1727,33 +1755,8 @@ def q_full_curation_v2(spark, sf_dir):
         cap_per_group,
         pack_sequences,
     )
-    from ci_log_processing_spark.operators.dedup import (
-        exact_dedup_keep_first,
-    )
-    from ci_log_processing_spark.operators.textstats import (
-        attach_c4_lines,
-        c4_line_filter,
-        model_quality_scores,
-        quality_scores,
-    )
 
-    cleaned = c4_line_filter(
-        attach_c4_lines(_docs(spark, sf_dir)), keep_cols=("source",)
-    ).filter("doc_kept")
-    scored = quality_scores(
-        cleaned, text_col="cleaned", keep_cols=("source", "cleaned")
-    )
-    survivors = scored.filter(F.col("quality") >= 0.45)
-    deduped = exact_dedup_keep_first(
-        survivors, text_col="cleaned", keep_cols=("source", "cleaned")
-    )
-    modeled = (
-        model_quality_scores(
-            deduped, text_col="cleaned", keep_cols=("source", "cleaned")
-        )
-        .filter("model_keep")
-        .select("doc_id", "source", "cleaned")
-    )
+    modeled = _model_gate(_curation_prefix(spark, sf_dir))
     capped = cap_per_group(modeled, "source", cap=20)
     return pack_sequences(
         capped, capacity=128, group_col="source", text_col="cleaned"
@@ -1776,33 +1779,8 @@ def q_full_curation_v3(spark, sf_dir):
         pack_sequences,
         shuffle_index,
     )
-    from ci_log_processing_spark.operators.dedup import (
-        exact_dedup_keep_first,
-    )
-    from ci_log_processing_spark.operators.textstats import (
-        attach_c4_lines,
-        c4_line_filter,
-        model_quality_scores,
-        quality_scores,
-    )
 
-    cleaned = c4_line_filter(
-        attach_c4_lines(_docs(spark, sf_dir)), keep_cols=("source",)
-    ).filter("doc_kept")
-    scored = quality_scores(
-        cleaned, text_col="cleaned", keep_cols=("source", "cleaned")
-    )
-    survivors = scored.filter(F.col("quality") >= 0.45)
-    deduped = exact_dedup_keep_first(
-        survivors, text_col="cleaned", keep_cols=("source", "cleaned")
-    )
-    modeled = (
-        model_quality_scores(
-            deduped, text_col="cleaned", keep_cols=("source", "cleaned")
-        )
-        .filter("model_keep")
-        .select("doc_id", "source", "cleaned")
-    )
+    modeled = _model_gate(_curation_prefix(spark, sf_dir))
     mixed = mixture_sample(modeled, MIX_RATES, default_rate=0.6).drop("u32")
     capped = cap_per_group(mixed, "source", cap=20)
     packed = pack_sequences(

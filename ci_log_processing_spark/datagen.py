@@ -166,38 +166,35 @@ def _gen_chunk(args) -> None:
         )
 
 
-def write_transcripts_parallel(
-    out_dir: str,
-    n_turns: int,
-    seed: int = SEED,
-    n_chunks: int = 16,
-    n_files: int = 64,
-) -> str:
+_N_CHUNKS = 16
+_FILES_PER_CHUNK = 4
+
+
+def write_transcripts_parallel(out_dir: str, n_turns: int) -> str:
     """Multiprocess generator for large bench inputs (the
-    single-process path is ~30 s per million turns). Chunks use
-    disjoint seeds and conv-id prefixes; output is still fully
-    deterministic for a given (n_turns, seed, n_chunks)."""
+    single-process path is ~30 s per million turns). _N_CHUNKS chunks
+    of _FILES_PER_CHUNK files each use disjoint seeds (SEED + chunk)
+    and conv-id prefixes; output is still fully deterministic for a
+    given n_turns."""
     from multiprocessing import Pool
 
     marker = os.path.join(out_dir, "_GENERATED")
     if os.path.exists(marker):
         return out_dir
     os.makedirs(out_dir, exist_ok=True)
-    per = (n_turns + n_chunks - 1) // n_chunks
+    per = (n_turns + _N_CHUNKS - 1) // _N_CHUNKS
     jobs = []
     remaining = n_turns
-    for c in range(n_chunks):
+    for c in range(_N_CHUNKS):
         take = min(per, remaining)
         if take <= 0:
             break
-        jobs.append(
-            (out_dir, c, take, seed + c, max(1, n_files // n_chunks))
-        )
+        jobs.append((out_dir, c, take, SEED + c, _FILES_PER_CHUNK))
         remaining -= take
     with Pool(min(len(jobs), os.cpu_count() or 8)) as p:
         p.map(_gen_chunk, jobs)
     with open(marker, "w") as f:
-        f.write(f"n_turns={n_turns} seed={seed} chunks={len(jobs)}\n")
+        f.write(f"n_turns={n_turns} seed={SEED} chunks={len(jobs)}\n")
     return out_dir
 
 

@@ -45,13 +45,11 @@ def html_clean_col(c: Column) -> Column:
     return F.trim(F.regexp_replace(c, r"\s+", " "))
 
 
-def html_clean(
-    df: DataFrame, html_col: str = "html", id_col: str = "doc_id"
-) -> DataFrame:
+def html_clean(df: DataFrame) -> DataFrame:
     """(id, clean_text, n_chars_clean) from an HTML column."""
-    clean = html_clean_col(F.col(html_col))
+    clean = html_clean_col(F.col("html"))
     return df.select(
-        id_col,
+        "doc_id",
         clean.alias("clean_text"),
         F.length(clean).alias("n_chars_clean"),
     )

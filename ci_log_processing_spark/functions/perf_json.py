@@ -53,13 +53,13 @@ def _try_long(c: Column) -> Column:
     )
 
 
-def flatten_perf_json(df: DataFrame, json_col: str = "perf_json") -> DataFrame:
+def flatten_perf_json(df: DataFrame) -> DataFrame:
     """(conv_id, perf_json) -> exploded (conv_id, hostname, key, value).
 
     One from_json + array transforms + a single explode — all
     Catalyst; no shuffle (per-row work only).
     """
-    p = F.from_json(F.col(json_col), PERF_SCHEMA)
+    p = F.from_json(F.col("perf_json"), PERF_SCHEMA)
 
     svc = F.transform(
         F.coalesce(p["services"], F.array()),

@@ -16,14 +16,14 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def hourly_agg(df: DataFrame, ts_col: str = "filled_ts") -> DataFrame:
+def hourly_agg(df: DataFrame) -> DataFrame:
     """counts by (sink, severity, subsystem, hour)."""
     return (
         df.groupBy(
             "sink",
             "severity",
             "subsystem",
-            F.date_trunc("hour", F.col(ts_col)).alias("window_start"),
+            F.date_trunc("hour", F.col("filled_ts")).alias("window_start"),
         )
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -41,7 +41,7 @@ def conv_severity_counts(df: DataFrame) -> DataFrame:
     )
 
 
-def rollup_hourly(df: DataFrame, ts_col: str = "filled_ts") -> DataFrame:
+def rollup_hourly(df: DataFrame) -> DataFrame:
     """Multi-grain counts in ONE aggregate: (sink, severity, hour)
     detail plus per-(sink, severity), per-sink and grand-total
     subtotals via ROLLUP — the dashboard query family the reference
@@ -57,13 +57,11 @@ def rollup_hourly(df: DataFrame, ts_col: str = "filled_ts") -> DataFrame:
     return df.rollup(
         "sink",
         "severity",
-        F.date_trunc("hour", F.col(ts_col)).alias("window_start"),
+        F.date_trunc("hour", F.col("filled_ts")).alias("window_start"),
     ).agg(F.count(F.lit(1)).alias("cnt"), F.grouping_id().alias("grain"))
 
 
-def session_window_agg(
-    df: DataFrame, gap_sec: int = 1800, ts_col: str = "filled_ts"
-) -> DataFrame:
+def session_window_agg(df: DataFrame, gap_sec: int = 1800) -> DataFrame:
     """EVENT-TIME session windows: turns whose gap to the previous
     turn in the conversation is <= gap_sec merge into one session
     (Spark merges an event landing exactly at the current window end
@@ -81,9 +79,10 @@ def session_window_agg(
     if gap_sec <= 0:
         raise ValueError("session_window_agg: gap_sec must be positive")
     return (
-        df.filter(F.col(ts_col).isNotNull())
+        df.filter(F.col("filled_ts").isNotNull())
         .groupBy(
-            "conv_id", F.session_window(F.col(ts_col), f"{gap_sec} seconds")
+            "conv_id",
+            F.session_window(F.col("filled_ts"), f"{gap_sec} seconds"),
         )
         .agg(
             F.count(F.lit(1)).alias("n_turns"),
@@ -105,7 +104,6 @@ def sliding_window_agg(
     df: DataFrame,
     window_sec: int = 3600,
     slide_sec: int = 1800,
-    ts_col: str = "filled_ts",
 ) -> DataFrame:
     """Overlapping (sliding) event-time windows — the smoothed
     rate/error-budget series a monitoring dashboard draws. Each event
@@ -120,11 +118,13 @@ def sliding_window_agg(
             "sliding_window_agg: window_sec must be a multiple of slide_sec"
         )
     return (
-        df.filter(F.col(ts_col).isNotNull())
+        df.filter(F.col("filled_ts").isNotNull())
         .groupBy(
             "sink",
             F.window(
-                F.col(ts_col), f"{window_sec} seconds", f"{slide_sec} seconds"
+                F.col("filled_ts"),
+                f"{window_sec} seconds",
+                f"{slide_sec} seconds",
             ).alias("w"),
         )
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -137,7 +137,7 @@ def sliding_window_agg(
     )
 
 
-def severity_pivot_hourly(df: DataFrame, ts_col: str = "filled_ts") -> DataFrame:
+def severity_pivot_hourly(df: DataFrame) -> DataFrame:
     """Hour x severity WIDE counts — pivot with an EXPLICIT value
     list (the full grok taxonomy + NONE for unparsed lines), so no
     values-discovery job runs and the output schema is fixed at plan
@@ -149,7 +149,9 @@ def severity_pivot_hourly(df: DataFrame, ts_col: str = "filled_ts") -> DataFrame
     values = [*SEVERITIES, "NONE"]
     wide = (
         df.withColumn("_sev", F.coalesce(F.col("severity"), F.lit("NONE")))
-        .groupBy(F.date_trunc("hour", F.col(ts_col)).alias("window_start"))
+        .groupBy(
+            F.date_trunc("hour", F.col("filled_ts")).alias("window_start")
+        )
         .pivot("_sev", values)
         .agg(F.count(F.lit(1)))
     )
@@ -162,9 +164,7 @@ def severity_pivot_hourly(df: DataFrame, ts_col: str = "filled_ts") -> DataFrame
     )
 
 
-def error_spike_hours(
-    df: DataFrame, ts_col: str = "filled_ts", sink: str = "errors"
-) -> DataFrame:
+def error_spike_hours(df: DataFrame) -> DataFrame:
     """Hourly error-burst detection per subsystem: an hour is a
     SPIKE when its error count exceeds the subsystem's mean by more
     than two population standard deviations — the alerting query the
@@ -188,10 +188,10 @@ def error_spike_hours(
     from pyspark.sql.window import Window
 
     hourly = (
-        df.filter(F.col("sink") == sink)
+        df.filter(F.col("sink") == "errors")
         .groupBy(
             "subsystem",
-            F.date_trunc("hour", F.col(ts_col)).alias("window_start"),
+            F.date_trunc("hour", F.col("filled_ts")).alias("window_start"),
         )
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -217,7 +217,6 @@ def error_spike_hours(
 
 def turn_latency_percentiles(
     df: DataFrame,
-    ts_col: str = "filled_ts",
     group_col: str = "sink",
     where_sink: str | None = None,
 ) -> DataFrame:
@@ -250,7 +249,7 @@ def turn_latency_percentiles(
     from pyspark.sql.window import Window
 
     wc = Window.partitionBy("conv_id").orderBy("turn_idx")
-    gaps = df.withColumn("_next_ts", F.lead(ts_col).over(wc)).filter(
+    gaps = df.withColumn("_next_ts", F.lead("filled_ts").over(wc)).filter(
         F.col("_next_ts").isNotNull()
     )
     if where_sink is not None:
@@ -261,7 +260,7 @@ def turn_latency_percentiles(
             group_col,
             (
                 F.unix_millis(F.col("_next_ts"))
-                - F.unix_millis(F.col(ts_col))
+                - F.unix_millis(F.col("filled_ts"))
             ).alias("gap_ms"),
         )
     )
@@ -384,9 +383,7 @@ def hll_estimate(regs: DataFrame) -> DataFrame:
     return per_sink.select("sink", F.round(est, 2).alias("hll_distinct"))
 
 
-def agent_loop_runs(
-    df: DataFrame, min_run: int = 3, ts_col: str = "filled_ts"
-) -> DataFrame:
+def agent_loop_runs(df: DataFrame, min_run: int = 3) -> DataFrame:
     """Agent retry-loop detection: maximal runs of CONSECUTIVE turns
     in one conversation that repeat the identical (tool, message)
     pair — the "agent is stuck calling the same tool with the same
@@ -589,12 +586,7 @@ def tool_outcomes(df: DataFrame) -> DataFrame:
     )
 
 
-def hdr_partial_buckets(
-    df: DataFrame,
-    ts_col: str = "filled_ts",
-    group_col: str = "sink",
-    sub_bits: int = 4,
-) -> DataFrame:
+def hdr_partial_buckets(df: DataFrame, sub_bits: int = 4) -> DataFrame:
     """The mergeable half of the HDR-style latency sketch: per-group
     log-histogram bucket counts over inter-turn gaps. This is the
     operator `turn_latency_percentiles`' own docstring points to for
@@ -619,14 +611,14 @@ def hdr_partial_buckets(
 
     wc = Window.partitionBy("conv_id").orderBy("turn_idx")
     gap = (
-        F.unix_millis(F.col("_next_ts")) - F.unix_millis(F.col(ts_col))
+        F.unix_millis(F.col("_next_ts")) - F.unix_millis(F.col("filled_ts"))
     ).alias("gap_ms")
     gaps = (
-        df.withColumn("_next_ts", F.lead(ts_col).over(wc))
+        df.withColumn("_next_ts", F.lead("filled_ts").over(wc))
         .filter(F.col("_next_ts").isNotNull())
-        .select(group_col, gap)
+        .select("sink", gap)
     )
-    return hdr_bucket_counts(gaps, group_col, "gap_ms", sub_bits)
+    return hdr_bucket_counts(gaps, "sink", "gap_ms", sub_bits)
 
 
 def hdr_bucket_counts(
@@ -649,9 +641,7 @@ def hdr_bucket_counts(
     )
 
 
-def hdr_percentiles_from_buckets(
-    buckets: DataFrame, group_col: str = "sink"
-) -> DataFrame:
+def hdr_percentiles_from_buckets(buckets: DataFrame) -> DataFrame:
     """Finish the sketch: discrete quantiles over bucket lower
     bounds — smallest bucket whose cumulative count reaches
     ceil(p*n), the same integer rank rule as the exact operator, so
@@ -661,9 +651,9 @@ def hdr_percentiles_from_buckets(
     on turns."""
     from pyspark.sql.window import Window
 
-    wt = Window.partitionBy(group_col)
+    wt = Window.partitionBy("sink")
     cum = buckets.select(
-        group_col,
+        "sink",
         "bucket",
         F.sum("c")
         .over(wt.orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0))
@@ -677,7 +667,7 @@ def hdr_percentiles_from_buckets(
             name
         )
 
-    return cum.groupBy(group_col).agg(
+    return cum.groupBy("sink").agg(
         F.max("n").alias("n_gaps"),
         pick(1, 2, "p50_ms_lb"),
         pick(19, 20, "p95_ms_lb"),
@@ -685,12 +675,7 @@ def hdr_percentiles_from_buckets(
     )
 
 
-def hdr_latency_percentiles(
-    df: DataFrame,
-    ts_col: str = "filled_ts",
-    group_col: str = "sink",
-    sub_bits: int = 4,
-) -> DataFrame:
+def hdr_latency_percentiles(df: DataFrame, sub_bits: int = 4) -> DataFrame:
     """Single-pass composition of the two halves above — the
     production approximate-percentile path at 10^12 turns: one
     conv-keyed window (shared with the rest of the pipeline), one
@@ -699,7 +684,7 @@ def hdr_latency_percentiles(
     unbounded distinct-gap state) — both are gate queries so the
     error bound is visible in the artifacts."""
     return hdr_percentiles_from_buckets(
-        hdr_partial_buckets(df, ts_col, group_col, sub_bits), group_col
+        hdr_partial_buckets(df, sub_bits=sub_bits)
     )
 
 
@@ -736,9 +721,7 @@ def tool_health(df: DataFrame) -> DataFrame:
     )
 
 
-def error_spike_hours_mad(
-    df: DataFrame, ts_col: str = "filled_ts", sink: str = "errors"
-) -> DataFrame:
+def error_spike_hours_mad(df: DataFrame) -> DataFrame:
     """Robust hourly error-burst detection per subsystem: the
     median/MAD companion to error_spike_hours. Mean/sigma spike
     tests (error_spike_hours) are themselves dragged upward by the
@@ -769,10 +752,10 @@ def error_spike_hours_mad(
     size.
     """
     hourly = (
-        df.filter(F.col("sink") == sink)
+        df.filter(F.col("sink") == "errors")
         .groupBy(
             "subsystem",
-            F.date_trunc("hour", F.col(ts_col)).alias("window_start"),
+            F.date_trunc("hour", F.col("filled_ts")).alias("window_start"),
         )
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -870,12 +853,7 @@ def tool_arg_outcomes(df: DataFrame) -> DataFrame:
     )
 
 
-def retention_cohorts(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    horizon_days: int = 90,
-) -> DataFrame:
+def retention_cohorts(events: DataFrame, horizon_days: int = 90) -> DataFrame:
     """Cohort retention over the events table: cohort = each user's
     first-seen calendar day; for every (cohort_day, day_offset) cell,
     how many of that cohort's users were active `day_offset` days
@@ -893,9 +871,9 @@ def retention_cohorts(
     the day set is distinct, so count(*) IS count(distinct user).
     No join-back, no second user shuffle, no window.
     """
-    days = F.collect_set(F.to_date(F.col(ts_col))).alias("_days")
-    per_user = events.groupBy(F.col(user_col).alias("_u")).agg(
-        F.min(F.to_date(F.col(ts_col))).alias("cohort_day"), days
+    days = F.collect_set(F.to_date(F.col("ts"))).alias("_days")
+    per_user = events.groupBy(F.col("user_id").alias("_u")).agg(
+        F.min(F.to_date(F.col("ts"))).alias("cohort_day"), days
     )
     offsets = per_user.select(
         "cohort_day",
@@ -911,11 +889,7 @@ def retention_cohorts(
     )
 
 
-def log_templates(
-    routed: DataFrame,
-    message_col: str = "message",
-    min_count: int = 1,
-) -> DataFrame:
+def log_templates(routed: DataFrame, min_count: int = 1) -> DataFrame:
     """Drain-style log template mining (He 2017): collapse every
     whitespace-delimited token containing a digit to '<*>' and group
     identical masked messages — 'added port 808' / 'added port 1336'
@@ -944,12 +918,12 @@ def log_templates(
     """
     vis = routed.filter(F.col("sink") != "drop_queue")
     template = F.regexp_replace(
-        F.col(message_col), r"\S*[0-9]\S*", "<*>"
+        F.col("message"), r"\S*[0-9]\S*", "<*>"
     )
     out = (
         vis.select(
             template.alias("template"),
-            F.col(message_col).alias("_m"),
+            F.col("message").alias("_m"),
             "conv_id",
         )
         .groupBy("template")
@@ -967,9 +941,6 @@ def log_templates(
 def event_funnel(
     events: DataFrame,
     steps: tuple[str, ...] = ("view", "click", "purchase"),
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
 ) -> DataFrame:
     """Ordered conversion funnel over raw events: step i counts the
     users whose FIRST qualifying step-i event happens at-or-after
@@ -991,16 +962,16 @@ def event_funnel(
     """
     if len(steps) < 2:
         raise ValueError("event_funnel: need at least 2 steps")
-    u, t = F.col(user_col), F.col(ts_col)
+    u, t = F.col("user_id"), F.col("ts")
     cur = (
-        events.filter(F.col(type_col) == steps[0])
+        events.filter(F.col("event_type") == steps[0])
         .groupBy(u.alias("_u"))
         .agg(F.min(t).alias("_t"))
     )
     tiers = [cur]
     for s in steps[1:]:
         nxt = (
-            events.filter(F.col(type_col) == s)
+            events.filter(F.col("event_type") == s)
             .select(u.alias("_u"), t.alias("_ts"))
             .join(tiers[-1], "_u")
             .filter(F.col("_ts") >= F.col("_t"))
@@ -1093,12 +1064,7 @@ def cusum_error_drift(
     )
 
 
-def sessionize_events(
-    events: DataFrame,
-    gap_minutes: int = 30,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
+def sessionize_events(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     """Gaps-and-islands sessionization of the raw events table: a
     new session starts when a user's inter-event gap exceeds
     `gap_minutes`. The batch SQL twin of the engine's streaming
@@ -1118,7 +1084,7 @@ def sessionize_events(
     from pyspark.sql.window import Window
 
     base = events.select(
-        F.col(user_col).alias("_u"), F.col(ts_col).alias("_t")
+        F.col("user_id").alias("_u"), F.col("ts").alias("_t")
     )
     w = Window.partitionBy("_u").orderBy("_t")
     gap = F.lit(int(gap_minutes) * 60)
@@ -1148,7 +1114,7 @@ def sessionize_events(
     )
     return (
         flagged.groupBy(
-            F.col("_u").alias(user_col), "session_idx"
+            F.col("_u").alias("user_id"), "session_idx"
         )
         .agg(
             F.min("_t").alias("session_start"),
@@ -1167,7 +1133,6 @@ def slo_burn_alert(
     routed: DataFrame,
     slo_milli: int = 50,
     long_hours: int = 6,
-    ts_col: str = "filled_ts",
 ) -> DataFrame:
     """Multi-window error-budget burn alert (the SRE-book
     multiwindow-multiburn rule): per hour, the SHORT burn is that
@@ -1194,7 +1159,7 @@ def slo_burn_alert(
     hourly = (
         routed.filter(F.col("sink") != "drop_queue")
         .groupBy(
-            F.date_trunc("hour", F.col(ts_col)).alias("window_start")
+            F.date_trunc("hour", F.col("filled_ts")).alias("window_start")
         )
         .agg(
             F.count(F.lit(1)).alias("n_total"),
@@ -1237,7 +1202,6 @@ def merge_agg_deltas(
     stored: DataFrame,
     delta: DataFrame,
     key_cols: list[str],
-    cnt_col: str = "cnt",
 ) -> DataFrame:
     """Incremental aggregate maintenance: fold a DELTA batch's
     partial aggregate into a STORED rollup without re-reading the
@@ -1262,14 +1226,13 @@ def merge_agg_deltas(
     return (
         stored.unionByName(delta)
         .groupBy(*key_cols)
-        .agg(F.sum(cnt_col).alias(cnt_col))
+        .agg(F.sum("cnt").alias("cnt"))
     )
 
 
 def volume_trend(
     df: DataFrame,
     group_cols: list[str] | None = None,
-    ts_col: str = "filled_ts",
     sink: str | None = None,
 ) -> DataFrame:
     """Per-group daily volume TREND: the ordinary-least-squares
@@ -1312,7 +1275,7 @@ def volume_trend(
     daily = (
         df.groupBy(
             *group_cols,
-            F.to_date(F.col(ts_col)).alias("day"),
+            F.to_date(F.col("filled_ts")).alias("day"),
         )
         .agg(F.count(F.lit(1)).alias("n"))
         .select(
@@ -1350,7 +1313,7 @@ def volume_trend(
     )
 
 
-def cube_hourly(df: DataFrame, ts_col: str = "filled_ts") -> DataFrame:
+def cube_hourly(df: DataFrame) -> DataFrame:
     """CUBE companion to rollup_hourly: ALL 2^3 grouping-set
     combinations of (sink, severity, hour) in one aggregate — the
     slice-any-way dashboard cube, where ROLLUP only descends the
@@ -1364,17 +1327,11 @@ def cube_hourly(df: DataFrame, ts_col: str = "filled_ts") -> DataFrame:
     return df.cube(
         "sink",
         "severity",
-        F.date_trunc("hour", F.col(ts_col)).alias("window_start"),
+        F.date_trunc("hour", F.col("filled_ts")).alias("window_start"),
     ).agg(F.count(F.lit(1)).alias("cnt"), F.grouping_id().alias("grain"))
 
 
-def ewma_alerts(
-    df: DataFrame,
-    group_col: str = "sink",
-    ts_col: str = "filled_ts",
-    window: int = 16,
-    slack: int = 5,
-) -> DataFrame:
+def ewma_alerts(df: DataFrame, window: int = 16, slack: int = 5) -> DataFrame:
     """EWMA control chart over hourly volumes — the fourth classic
     of the anomaly family next to the two-sigma z (error_spike), MAD
     (error_spike_mad) and CUSUM (cusum_drift): smooth the recent
@@ -1405,11 +1362,11 @@ def ewma_alerts(
     from pyspark.sql.window import Window
 
     hourly = df.groupBy(
-        group_col,
-        F.date_trunc("hour", F.col(ts_col)).alias("window_start"),
+        "sink",
+        F.date_trunc("hour", F.col("filled_ts")).alias("window_start"),
     ).agg(F.count(F.lit(1)).alias("cnt"))
     return ewma_over_counts(
-        hourly, group_col=group_col, window=window, slack=slack
+        hourly, window=window, slack=slack
     )
 
 

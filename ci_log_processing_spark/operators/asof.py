@@ -43,21 +43,20 @@ def asof_join(
     right: DataFrame,
     on: list[str],
     value_cols: list[str],
-    left_ts: str = "ts",
-    right_ts: str = "ts",
     seq_col: str | None = None,
     tolerance_sec: int | None = None,
     direction: str = "backward",
 ) -> DataFrame:
     """As-of join: left rows gain `value_cols` from the closest
-    right row on equal `on` keys — backward (latest right_ts <=
-    left_ts, the default) or forward (earliest right_ts >= left_ts;
-    the "next scheduled event" / trade-vs-next-quote direction).
-    NULLs when no qualifying right row exists.
+    right row on equal `on` keys, both sides timed by their `ts`
+    column — backward (latest right ts <= left ts, the default) or
+    forward (earliest right ts >= left ts; the "next scheduled
+    event" / trade-vs-next-quote direction). NULLs when no
+    qualifying right row exists.
 
     seq_col: deterministic tie-breaker among right rows sharing
-    (on, right_ts) — the row with the greatest seq_col wins. When
-    None, (on, right_ts) must already be unique on `right`.
+    (on, ts) — the row with the greatest seq_col wins. When None,
+    (on, ts) must already be unique on `right`.
     tolerance_sec: when set, matches older than this many seconds
     are nulled out (pandas merge_asof `tolerance` semantics).
 
@@ -88,14 +87,14 @@ def asof_join(
     )
     r = right.select(
         *on,
-        F.col(right_ts).alias("_asof_ts"),
+        F.col("ts").alias("_asof_ts"),
         F.lit(0).alias("_side"),
         seq_expr.alias("_seq"),
         *[F.col(c) for c in value_cols],
     )
     l_tagged = left.select(
         "*",
-        F.col(left_ts).alias("_asof_ts"),
+        F.col("ts").alias("_asof_ts"),
         F.lit(1).alias("_side"),
         F.lit(None).cast("long").alias("_seq"),
         *[F.lit(None).cast(right.schema[c].dataType).alias(c) for c in value_cols],

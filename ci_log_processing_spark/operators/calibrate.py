@@ -49,12 +49,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def reliability_isotonic(
-    scored: DataFrame,
-    score_col: str = "score_bits",
-    label_col: str = "label",
-    n_bins: int = 8,
-) -> DataFrame:
+def reliability_isotonic(scored: DataFrame, n_bins: int = 8) -> DataFrame:
     """Per-bin reliability + exact isotonic calibration.
 
     Input: one row per document with an integer score column and a
@@ -78,8 +73,8 @@ def reliability_isotonic(
     if n_bins < 1:
         raise ValueError(f"reliability_isotonic: n_bins={n_bins} < 1")
     base = scored.select(
-        F.col(score_col).cast("long").alias("_s"),
-        F.col(label_col).cast("long").alias("_y"),
+        F.col("score_bits").cast("long").alias("_s"),
+        F.col("label").cast("long").alias("_y"),
     )
     span = base.agg(
         F.min("_s").alias("_mn"), F.max("_s").alias("_mx")

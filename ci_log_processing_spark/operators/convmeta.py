@@ -37,9 +37,9 @@ OLD_SCHEMA = (
 )
 
 
-def normalize_meta(df: DataFrame, json_col: str = "meta_json") -> DataFrame:
-    new = F.from_json(F.col(json_col), NEW_SCHEMA)
-    old = F.from_json(F.col(json_col), OLD_SCHEMA)
+def normalize_meta(df: DataFrame) -> DataFrame:
+    new = F.from_json(F.col("meta_json"), NEW_SCHEMA)
+    old = F.from_json(F.col("meta_json"), OLD_SCHEMA)
     change = F.coalesce(new["ref"]["change"], old["change"])
     return df.select(
         "conv_id",
@@ -71,11 +71,7 @@ def normalize_meta(df: DataFrame, json_col: str = "meta_json") -> DataFrame:
     )
 
 
-def json_schema_profile(
-    events: DataFrame,
-    json_col: str = "props",
-    group_col: str = "event_type",
-) -> DataFrame:
+def json_schema_profile(events: DataFrame) -> DataFrame:
     """Schema-on-read audit of a free-form JSON column: per
     (group, key), how many records carry the key, how many of its
     values LOOK integer / float / boolean (lexical classes on the
@@ -96,9 +92,9 @@ def json_schema_profile(
     n_distinct_values).
     """
     kv = events.select(
-        F.col(group_col).alias("grp"),
+        F.col("event_type").alias("grp"),
         F.explode(
-            F.from_json(F.col(json_col), "map<string,string>")
+            F.from_json(F.col("props"), "map<string,string>")
         ).alias("key", "val"),
     )
     is_int = F.col("val").rlike(r"^-?[0-9]+$")
@@ -121,5 +117,5 @@ def json_schema_profile(
             F.sum("_b").alias("n_bool"),
             F.countDistinct("val").alias("n_distinct_values"),
         )
-        .withColumnRenamed("grp", group_col)
+        .withColumnRenamed("grp", "event_type")
     )

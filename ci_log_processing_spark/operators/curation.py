@@ -33,11 +33,7 @@ def _seeded_key(seed: str, id_col: str) -> Column:
     )
 
 
-def decontaminate(
-    docs: DataFrame,
-    benchmark_snippets: list[str],
-    text_col: str = "text",
-) -> DataFrame:
+def decontaminate(docs: DataFrame, benchmark_snippets: list[str]) -> DataFrame:
     """Flag documents containing ANY benchmark snippet as a
     substring (test-set contamination check).
 
@@ -56,7 +52,7 @@ def decontaminate(
     hit: Column = F.lit(None).cast("string")
     # build WHEN chain in REVERSE so the first list entry wins
     for s in reversed(benchmark_snippets):
-        hit = F.when(F.col(text_col).contains(s), F.lit(s)).otherwise(hit)
+        hit = F.when(F.col("text").contains(s), F.lit(s)).otherwise(hit)
     return docs.select(
         "doc_id",
         hit.isNotNull().alias("contaminated"),
@@ -68,10 +64,9 @@ def stratified_downsample(
     docs: DataFrame,
     stratum_col: str,
     keep_one_in: int,
-    order_col: str = "doc_id",
 ) -> DataFrame:
     """Deterministic stratified downsampling: keep every
-    `keep_one_in`-th document per stratum, in `order_col` order
+    `keep_one_in`-th document per stratum, in doc_id order
     (training-mix rebalancing without RNG, so the oracle — and any
     re-run — reproduces it bit-for-bit; sampleBy's per-partition RNG
     cannot).
@@ -84,7 +79,7 @@ def stratified_downsample(
     # (ValueError, not assert — python -O strips asserts)
     if keep_one_in < 1:
         raise ValueError("keep_one_in must be >= 1")
-    w = Window.partitionBy(stratum_col).orderBy(order_col)
+    w = Window.partitionBy(stratum_col).orderBy("doc_id")
     return (
         docs.withColumn("_rn", F.row_number().over(w))
         .filter((F.col("_rn") - 1) % keep_one_in == 0)
@@ -97,7 +92,6 @@ def overlap_decontaminate(
     benchmark: DataFrame,
     k: int = 5,
     threshold: float = 0.5,
-    text_col: str = "text",
 ) -> DataFrame:
     """Overlap-RATIO decontamination: flag a document when >=
     `threshold` of its distinct k-token shingles appear anywhere in
@@ -120,7 +114,7 @@ def overlap_decontaminate(
     from .dedup import shingles_col, tokens_col
 
     sh = lambda df: (  # noqa: E731
-        df.select("doc_id", tokens_col(F.col(text_col)).alias("_lt"))
+        df.select("doc_id", tokens_col(F.col("text")).alias("_lt"))
         .select(
             "doc_id", shingles_col(F.col("_lt"), k).alias("shingles")
         )
@@ -219,12 +213,7 @@ def pack_sequences(
     return base.groupBy(group_col).applyInPandas(_pack, schema=schema)
 
 
-def top_ngrams(
-    docs: DataFrame,
-    n: int = 2,
-    k: int = 20,
-    text_col: str = "text",
-) -> DataFrame:
+def top_ngrams(docs: DataFrame, n: int = 2, k: int = 20) -> DataFrame:
     """Corpus-wide top-k n-grams with document frequency — the
     statistic behind stop-shingle cuts, contamination screens and
     boilerplate detection.
@@ -243,7 +232,7 @@ def top_ngrams(
 
     Output: (ngram, occurrences, doc_freq, rank), rank 1..k.
     """
-    toks = F.split(F.lower(F.col(text_col)), " ")
+    toks = F.split(F.lower(F.col("text")), " ")
     # docs with < n tokens yield no n-grams; clamp the slice length
     # at 0 (a negative length throws under ANSI)
     take = F.greatest(F.size(toks) - (n - 1), F.lit(0))
@@ -269,7 +258,6 @@ def chunk_documents(
     docs: DataFrame,
     chunk_tokens: int = 64,
     overlap: int = 16,
-    text_col: str = "text",
 ) -> DataFrame:
     """Split documents into fixed-token-window chunks with overlap —
     the standard pre-embedding step for retrieval indexes.
@@ -291,7 +279,7 @@ def chunk_documents(
             f"chunk_tokens={chunk_tokens}"
         )
     stride = chunk_tokens - overlap
-    toks = F.split(F.lower(F.col(text_col)), " ")
+    toks = F.split(F.lower(F.col("text")), " ")
     n = F.size(toks)
     # starts: 0, stride, 2*stride, ... while start < n AND the chunk
     # adds new tokens (start + overlap < n handles the final window)
@@ -320,14 +308,13 @@ def chunk_documents(
 
 def token_length_histogram(
     docs: DataFrame,
-    text_col: str = "text",
     bucket_size: int = 16,
 ) -> DataFrame:
     """Whitespace-token length distribution in fixed buckets:
     (bucket_lo, n_docs, total_tokens). Scan + one partial-aggregated
     shuffle on ~(max_len / bucket_size) groups — the canonical
     "what does my corpus look like" statistic."""
-    n_tok = _n_tokens(text_col)
+    n_tok = _n_tokens("text")
     lo = (F.floor(n_tok / bucket_size) * bucket_size).cast("long")
     return (
         docs.select(n_tok.alias("n"), lo.alias("bucket_lo"))
@@ -343,7 +330,6 @@ def cap_per_group(
     docs: DataFrame,
     group_col: str = "source",
     cap: int = 100,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Per-group document cap — the per-domain cap web curation
     applies so one hot domain cannot dominate the training mix
@@ -360,8 +346,8 @@ def cap_per_group(
     """
     if cap < 1:
         raise ValueError("cap_per_group: cap must be >= 1")
-    rank_key = F.md5(F.col(id_col).cast("string").cast("binary"))
-    w = Window.partitionBy(group_col).orderBy(rank_key, id_col)
+    rank_key = F.md5(F.col("doc_id").cast("string").cast("binary"))
+    w = Window.partitionBy(group_col).orderBy(rank_key, "doc_id")
     return (
         docs.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= cap)
@@ -374,8 +360,6 @@ def mixture_sample(
     rates: dict[str, float],
     default_rate: float = 1.0,
     group_col: str = "source",
-    id_col: str = "doc_id",
-    seed: str = "mix1",
 ) -> DataFrame:
     """Deterministic data-MIXTURE sampling: keep each document with a
     per-source probability (`rates`, falling back to `default_rate`)
@@ -384,7 +368,7 @@ def mixture_sample(
     bounds the tail; this shapes the proportions).
 
     Determinism instead of RNG: a document survives iff the 32-bit
-    md5 draw h32(seed || id) < rate * 2^32. The same (seed, id)
+    md5 draw h32('mix1' || id) < rate * 2^32. The same (seed, id)
     always draws the same uniform, so re-runs, the DuckDB oracle,
     and an incremental re-ingest all make identical decisions —
     sample()/sampleBy's per-partition RNG reproduces none of those.
@@ -413,14 +397,13 @@ def mixture_sample(
     cut: Column = _thresh(default_rate)
     for src, r in rates.items():
         cut = F.when(F.col(group_col) == src, _thresh(r)).otherwise(cut)
-    u32 = h32(F.concat(F.lit(seed), F.col(id_col).cast("string")))
+    u32 = h32(F.concat(F.lit("mix1"), F.col("doc_id").cast("string")))
     return docs.withColumn("u32", u32).filter(F.col("u32") < cut)
 
 
 def shuffle_index(
     docs: DataFrame,
     shard_size: int = 100,
-    id_col: str = "doc_id",
     seed: str = "shuf1",
     payload_cols: tuple[str, ...] = (),
 ) -> DataFrame:
@@ -449,11 +432,11 @@ def shuffle_index(
     Total: one data-sized exchange + one tiny agg/broadcast — the
     same shape at 500 docs or 100 TB.
 
-    Output: (id_col, global_idx, shard), global_idx dense from 0.
+    Output: (doc_id, global_idx, shard), global_idx dense from 0.
     """
     if shard_size < 1:
         raise ValueError("shuffle_index: shard_size must be >= 1")
-    key = _seeded_key(seed, id_col)
+    key = _seeded_key(seed, "doc_id")
     # The 32-char md5 sort key never crosses the wire: partition on
     # the 1-byte bucket FIRST (satisfying the window's required
     # hash distribution — no second exchange), then recompute the
@@ -463,7 +446,7 @@ def shuffle_index(
     # speedup 1.7 -> 2.0) vs projecting the key below the exchange.
     keyed = (
         docs.select(
-            id_col,
+            "doc_id",
             *payload_cols,
             F.conv(F.substring(key, 1, 2), 16, 10)
             .cast("int")
@@ -474,7 +457,7 @@ def shuffle_index(
     )
     from .dedup import _register_persist
 
-    w_in = Window.partitionBy("_bkt").orderBy("_key", id_col)
+    w_in = Window.partitionBy("_bkt").orderBy("_key", "doc_id")
     # ranked feeds BOTH the output join and the bucket-size aggregate;
     # persist it (released via dedup.release_persisted, spills to disk
     # past memory) so the second consumer reads the materialized rank,
@@ -499,7 +482,7 @@ def shuffle_index(
     return (
         ranked.join(F.broadcast(offsets), "_bkt")
         .select(
-            id_col,
+            "doc_id",
             *payload_cols,
             idx.alias("global_idx"),
             F.floor(idx / shard_size).cast("long").alias("shard"),
@@ -511,9 +494,6 @@ def quality_top_fraction(
     docs: DataFrame,
     frac_num: int,
     frac_den: int,
-    group_col: str = "source",
-    score_col: str = "quality",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Calibrated quality gate: keep the TOP frac (num/den) of each
     group by score — how real pipelines apply a quality classifier
@@ -530,10 +510,10 @@ def quality_top_fraction(
     """
     if not (0 < frac_num <= frac_den):
         raise ValueError("quality_top_fraction: need 0 < num <= den")
-    w_rank = Window.partitionBy(group_col).orderBy(
-        F.desc(score_col), F.asc(id_col)
+    w_rank = Window.partitionBy("source").orderBy(
+        F.desc("quality"), F.asc("doc_id")
     )
-    w_n = Window.partitionBy(group_col)
+    w_n = Window.partitionBy("source")
     keep_rank = F.expr(f"({frac_num} * _n + {frac_den - 1}) div {frac_den}")
     return (
         docs.withColumn("_rn", F.row_number().over(w_rank))
@@ -546,9 +526,6 @@ def quality_top_fraction(
 def token_budget_sample(
     docs: DataFrame,
     budget_tokens: int,
-    group_col: str = "source",
-    text_col: str = "text",
-    id_col: str = "doc_id",
     seed: str = "mix1",
     n_tok_col: str | None = None,
 ) -> DataFrame:
@@ -575,15 +552,15 @@ def token_budget_sample(
     """
     if budget_tokens < 0:
         raise ValueError("token_budget_sample: budget must be >= 0")
-    rank_key = _seeded_key(seed, id_col)
+    rank_key = _seeded_key(seed, "doc_id")
     n_tok = (
         F.col(n_tok_col).cast("long")
         if n_tok_col is not None
-        else _n_tokens(text_col).cast("long")
+        else _n_tokens("text").cast("long")
     )
     w = (
-        Window.partitionBy(group_col)
-        .orderBy(rank_key, id_col)
+        Window.partitionBy("source")
+        .orderBy(rank_key, "doc_id")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     return (
@@ -593,11 +570,7 @@ def token_budget_sample(
     )
 
 
-def length_quantiles(
-    docs: DataFrame,
-    group_col: str = "source",
-    text_col: str = "text",
-) -> DataFrame:
+def length_quantiles(docs: DataFrame, group_col: str = "source") -> DataFrame:
     """Per-group token-length p50/p90/p99 by the NEAREST-RANK rule
     (value at rank ceil(q*n) of the sorted lengths) — integer
     arithmetic end-to-end, so unlike interpolating percentiles the
@@ -611,7 +584,7 @@ def length_quantiles(
     One window + one aggregate on the same group key = ONE hash
     exchange (the aggregate reuses the window's partitioning).
     """
-    n_tok = _n_tokens(text_col)
+    n_tok = _n_tokens("text")
     w = Window.partitionBy(group_col).orderBy("_len", "doc_id")
     ranked = docs.select(
         group_col, "doc_id", n_tok.alias("_len")
@@ -638,9 +611,7 @@ def length_quantiles(
 def priority_sample(
     docs: DataFrame,
     k: int,
-    group_col: str = "source",
     weight_col: str = "n_chars",
-    id_col: str = "doc_id",
     seed: str = "prio",
 ) -> DataFrame:
     """Priority sampling (Duffield, Lund & Thorup 2007): a weighted
@@ -672,22 +643,22 @@ def priority_sample(
         raise ValueError("priority_sample: k >= 1 required")
     from .dedup import h32
 
-    h = h32(F.concat(F.lit(seed), F.col(id_col).cast("string")))
+    h = h32(F.concat(F.lit(seed), F.col("doc_id").cast("string")))
     q = (
         F.col(weight_col).cast("double")
         * F.lit(4294967296.0)
         / (h + F.lit(1)).cast("double")
     )
-    wg = Window.partitionBy(group_col)
+    wg = Window.partitionBy("source")
     ranked = docs.select(
-        group_col,
-        id_col,
+        "source",
+        "doc_id",
         F.col(weight_col).alias("w"),
         q.alias("priority"),
     ).withColumn(
         "_rn",
         F.row_number().over(
-            wg.orderBy(F.desc("priority"), F.asc(id_col))
+            wg.orderBy(F.desc("priority"), F.asc("doc_id"))
         ),
     )
     tau = F.max(F.when(F.col("_rn") == k + 1, F.col("priority"))).over(wg)
@@ -695,8 +666,8 @@ def priority_sample(
         ranked.withColumn("_tau", tau)
         .filter(F.col("_rn") <= k)
         .select(
-            group_col,
-            id_col,
+            "source",
+            "doc_id",
             "w",
             "priority",
             F.greatest(
@@ -706,12 +677,7 @@ def priority_sample(
     )
 
 
-def perplexity_buckets(
-    docs: DataFrame,
-    n_buckets: int = 3,
-    group_col: str = "source",
-    text_col: str = "text",
-) -> DataFrame:
+def perplexity_buckets(docs: DataFrame, n_buckets: int = 3) -> DataFrame:
     """CCNet-style perplexity bucketing (Wenzek et al. 2020): rank
     every document by its unigram-LM surprisal WITHIN its group and
     split the ranking into n_buckets equal-frequency buckets —
@@ -734,13 +700,13 @@ def perplexity_buckets(
         raise ValueError("perplexity_buckets: n_buckets >= 1 required")
     from .textstats import unigram_logprob
 
-    scored = unigram_logprob(docs, text_col=text_col).join(
-        docs.select("doc_id", group_col), "doc_id"
+    scored = unigram_logprob(docs).join(
+        docs.select("doc_id", "source"), "doc_id"
     )
-    wg = Window.partitionBy(group_col)
+    wg = Window.partitionBy("source")
     ranked = scored.select(
         "doc_id",
-        group_col,
+        "source",
         "bits_per_token",
         F.row_number()
         .over(wg.orderBy("bits_per_token", "doc_id"))
@@ -749,24 +715,27 @@ def perplexity_buckets(
     )
     return ranked.select(
         "doc_id",
-        group_col,
+        "source",
         "bits_per_token",
         F.expr(f"((_rn - 1) * {n_buckets}) div _n").alias("ppl_bucket"),
     )
 
 
-def bloom_bits(
-    benchmark_snippets: list[str],
-    m_bits: int = 4096,
-    k_hashes: int = 4,
-    shingle_k: int = 5,
-) -> list[int]:
+# Bloom filter geometry: BLOOM_M_BITS bits, BLOOM_K_HASHES salted md5
+# hashes per BLOOM_SHINGLE_K-token shingle
+BLOOM_M_BITS = 4096
+BLOOM_K_HASHES = 4
+BLOOM_SHINGLE_K = 5
+
+
+def bloom_bits(benchmark_snippets: list[str]) -> list[int]:
     """The Bloom filter BUILD: the sorted set-bit positions for a
-    benchmark suite's k-token shingles under k_hashes salted md5
-    hashes. One definition shared by bloom_decontaminate and its
-    DuckDB oracle twin so the filter cannot drift between the two
-    membership checkers. Python md5 here is bit-identical to the
-    engines' md5 (same bytes in, same hex out)."""
+    benchmark suite's BLOOM_SHINGLE_K-token shingles under
+    BLOOM_K_HASHES salted md5 hashes. One definition shared by
+    bloom_decontaminate and its DuckDB oracle twin so the filter
+    cannot drift between the two membership checkers. Python md5
+    here is bit-identical to the engines' md5 (same bytes in, same
+    hex out)."""
     if not benchmark_snippets:
         raise ValueError("need at least one snippet")
     import hashlib
@@ -777,13 +746,13 @@ def bloom_bits(
     bench_shingles: set[str] = set()
     for snip in benchmark_snippets:
         toks = snip.lower().split(" ")
-        for i in range(len(toks) - shingle_k + 1):
-            bench_shingles.add(" ".join(toks[i : i + shingle_k]))
+        for i in range(len(toks) - BLOOM_SHINGLE_K + 1):
+            bench_shingles.add(" ".join(toks[i : i + BLOOM_SHINGLE_K]))
     return sorted(
         {
-            _py_h32(f"{i}:{s}") % m_bits
+            _py_h32(f"{i}:{s}") % BLOOM_M_BITS
             for s in bench_shingles
-            for i in range(k_hashes)
+            for i in range(BLOOM_K_HASHES)
         }
     )
 
@@ -791,42 +760,40 @@ def bloom_bits(
 def bloom_decontaminate(
     docs: DataFrame,
     benchmark_snippets: list[str],
-    m_bits: int = 4096,
-    k_hashes: int = 4,
-    shingle_k: int = 5,
-    text_col: str = "text",
 ) -> DataFrame:
     """Benchmark decontamination through a BLOOM FILTER over
     k-token shingles — the sketch that replaces `decontaminate`'s
     literal substring chain when the benchmark suite is too large to
-    inline (millions of eval n-grams): the filter is m bits
-    regardless of suite size, membership is O(k_hashes) per shingle,
+    inline (millions of eval n-grams): the filter is m = BLOOM_M_BITS
+    bits regardless of suite size, membership is O(BLOOM_K_HASHES)
+    per shingle,
     and false positives only ever OVER-flag (a contaminated doc can
     never slip through — the safe direction for decontamination).
 
     Build (driver-side, the suite is read once): every snippet's
-    k-token shingles set bits h_i(s) = h32(f"{i}:{s}") mod m for
-    i < k_hashes. Check (per-row, zero shuffle): a doc is flagged
-    iff ANY of its shingles has ALL k_hashes bits set. Both engines
-    share h32/md5 and the whitespace shingling, so flags are
-    engine-exact INCLUDING false positives; `n_hit_shingles` rides
-    along to size the blast radius. Snippets shorter than shingle_k
-    tokens contribute no shingles (use `decontaminate` for those).
+    shingles set bits h_i(s) = h32(f"{i}:{s}") mod m for
+    i < BLOOM_K_HASHES. Check (per-row, zero shuffle): a doc is
+    flagged iff ANY of its shingles has ALL BLOOM_K_HASHES bits set.
+    Both engines share h32/md5 and the whitespace shingling, so flags
+    are engine-exact INCLUDING false positives; `n_hit_shingles`
+    rides along to size the blast radius. Snippets shorter than
+    BLOOM_SHINGLE_K tokens contribute no shingles (use
+    `decontaminate` for those).
 
     At 100 TB the bit set leaves the expression literal and becomes
     a broadcast (the array here is exactly the broadcast payload);
     the per-row check shape is unchanged.
     """
-    bits = bloom_bits(benchmark_snippets, m_bits, k_hashes, shingle_k)
+    bits = bloom_bits(benchmark_snippets)
     bits_lit = F.array(*[F.lit(b) for b in bits])
 
     from .dedup import h32, shingles_col, tokens_col
 
     def _member(s: Column) -> Column:
         cond = F.lit(True)
-        for i in range(k_hashes):
+        for i in range(BLOOM_K_HASHES):
             pos = F.pmod(
-                h32(F.concat(F.lit(f"{i}:"), s)), F.lit(m_bits)
+                h32(F.concat(F.lit(f"{i}:"), s)), F.lit(BLOOM_M_BITS)
             ).cast("int")
             cond = cond & F.array_contains(bits_lit, pos)
         return cond
@@ -838,9 +805,9 @@ def bloom_decontaminate(
     # whole shingle+filter pipeline twice per row (this exact shape
     # measured 87 s -> re-check per_op_sampling after the fix)
     shingled = docs.select(
-        "doc_id", tokens_col(F.col(text_col)).alias("_lt")
+        "doc_id", tokens_col(F.col("text")).alias("_lt")
     ).select(
-        "doc_id", shingles_col(F.col("_lt"), k=shingle_k).alias("_sh")
+        "doc_id", shingles_col(F.col("_lt"), BLOOM_SHINGLE_K).alias("_sh")
     )
     counted = shingled.select(
         "doc_id",
@@ -853,12 +820,7 @@ def bloom_decontaminate(
     )
 
 
-def sqrt_temperature_mixture(
-    docs: DataFrame,
-    group_col: str = "source",
-    seed: str = "temp",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def sqrt_temperature_mixture(docs: DataFrame) -> DataFrame:
     """Temperature-based mixture rebalancing at tau = 0.5 (the
     multilingual-BERT/XLM-R recipe: sample group g with probability
     proportional to p_g^tau, upweighting rare groups): keep each doc
@@ -874,7 +836,7 @@ def sqrt_temperature_mixture(
     sqrt if ever needed.
 
     Admission is the same deterministic md5 gate as mixture_sample:
-    keep iff h32(seed||id) < r_g * 2^32 — no RNG state, re-runs and
+    keep iff h32('temp'||id) < r_g * 2^32 — no RNG state, re-runs and
     the oracle reproduce the kept set exactly.
 
     Scale shape: one group-count aggregate (rows = distinct groups),
@@ -884,22 +846,27 @@ def sqrt_temperature_mixture(
     """
     from .dedup import h32
 
-    counts = docs.groupBy(group_col).agg(F.count(F.lit(1)).alias("_n"))
+    counts = docs.groupBy("source").agg(F.count(F.lit(1)).alias("_n"))
     nmin = counts.agg(F.min("_n").alias("_nmin"))
     rates = counts.crossJoin(F.broadcast(nmin)).select(
-        group_col,
+        "source",
         F.sqrt(F.col("_nmin").cast("double") / F.col("_n")).alias(
             "keep_rate"
         ),
     )
-    h = h32(F.concat(F.lit(seed), F.col(id_col).cast("string")))
+    h = h32(F.concat(F.lit("temp"), F.col("doc_id").cast("string")))
     return (
-        docs.join(F.broadcast(rates), group_col)
+        docs.join(F.broadcast(rates), "source")
         .filter(
             h.cast("double") < F.col("keep_rate") * F.lit(4294967296.0)
         )
-        .select(group_col, id_col, "keep_rate")
+        .select("source", "doc_id", "keep_rate")
     )
+
+
+# hash salt of the count-min sketch rows; the streaming twin
+# (streaming/cms_stream.py) must build the same cells
+CMS_SEED = "cms"
 
 
 def cms_token_counts(
@@ -907,8 +874,6 @@ def cms_token_counts(
     candidates_k: int = 20,
     width: int = 512,
     depth: int = 4,
-    text_col: str = "text",
-    seed: str = "cms",
 ) -> DataFrame:
     """Count-min sketch (Cormode & Muthukrishnan 2005) over corpus
     token frequencies, answered for the top-k tokens with the exact
@@ -918,7 +883,7 @@ def cms_token_counts(
     registers in aggregate.py play for distinct counts).
 
     Construction is deterministic and engine-exact: row i of the
-    sketch hashes a token to cell h32(seed||i||token) mod width and
+    sketch hashes a token to cell h32(CMS_SEED||i||token) mod width and
     sums occurrences; the estimate is min over the depth cells, so
     cms_n >= exact_n always (one-sided error, the CMS guarantee the
     gate asserts row-by-row via `inflation`).
@@ -936,16 +901,16 @@ def cms_token_counts(
     if width < 1 or depth < 1:
         raise ValueError("cms_token_counts: width/depth must be >= 1")
     toks = docs.select(
-        F.explode(tokens_col(F.col(text_col))).alias("token")
+        F.explode(tokens_col(F.col("text"))).alias("token")
     ).filter(F.col("token") != "")
     exact = toks.groupBy("token").agg(F.count(F.lit(1)).alias("exact_n"))
-    cells = cms_cell_array(width, depth, seed)
+    cells = cms_cell_array(width, depth, CMS_SEED)
     sketch = (
         exact.select("exact_n", F.posexplode(cells).alias("i", "cell"))
         .groupBy("i", "cell")
         .agg(F.sum("exact_n").alias("cell_n"))
     )
-    return cms_estimate(exact, sketch, candidates_k, width, depth, seed)
+    return cms_estimate(exact, sketch, candidates_k, width, depth, CMS_SEED)
 
 
 def cms_cell_array(width: int, depth: int, seed: str) -> Column:
@@ -995,12 +960,7 @@ def cms_estimate(
     )
 
 
-def curriculum_order(
-    docs: DataFrame,
-    stage_col: str = "stage",
-    id_col: str = "doc_id",
-    seed: str = "curr1",
-) -> DataFrame:
+def curriculum_order(docs: DataFrame, stage_col: str = "stage") -> DataFrame:
     """Curriculum training order: a dense global index 0..n-1 that
     visits every stage-0 document (in deterministic pseudo-random
     order) before any stage-1 document, and so on — the "easy
@@ -1012,18 +972,18 @@ def curriculum_order(
     the leading sort key: bucket = (stage, first md5 byte) — a
     PREFIX of the (stage, key, id) order — so within-bucket
     row_number + cumulated bucket offsets reproduce the exact global
-    rank ORDER BY (stage, md5(seed||id), id). The offset cumsum runs
+    rank ORDER BY (stage, md5('curr1'||id), id). The offset cumsum runs
     over <= n_stages*256 bucket-count rows (tiny by construction,
     same bound class as shuffle_index's 256), broadcast back; total
     ONE data-sized exchange at any corpus size.
 
-    Output: (id_col, stage, curriculum_idx), curriculum_idx dense
+    Output: (doc_id, stage, curriculum_idx), curriculum_idx dense
     from 0.
     """
-    key = _seeded_key(seed, id_col)
+    key = _seeded_key("curr1", "doc_id")
     keyed = (
         docs.select(
-            id_col,
+            "doc_id",
             F.col(stage_col).cast("int").alias("stage"),
             F.conv(F.substring(key, 1, 2), 16, 10)
             .cast("int")
@@ -1034,7 +994,7 @@ def curriculum_order(
     )
     from .dedup import _register_persist
 
-    w_in = Window.partitionBy("stage", "_bkt").orderBy("_key", id_col)
+    w_in = Window.partitionBy("stage", "_bkt").orderBy("_key", "doc_id")
     ranked = _register_persist(
         keyed.withColumn("_rn", F.row_number().over(w_in))
     )
@@ -1048,7 +1008,7 @@ def curriculum_order(
         .select("stage", "_bkt", "_off")
     )
     return ranked.join(F.broadcast(offsets), ["stage", "_bkt"]).select(
-        id_col,
+        "doc_id",
         "stage",
         (F.col("_off") + F.col("_rn") - 1).alias("curriculum_idx"),
     )
@@ -1058,16 +1018,13 @@ def leakage_safe_split(
     docs: DataFrame,
     test_permille: int = 100,
     group_col: str = "source",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 5,
     seed: str = "split1",
 ) -> DataFrame:
     """Held-out split with a contamination quarantine — the GPT-3
     appendix-C recipe: carve the evaluation set out at the GROUP
     level (hash of `group_col`, so a domain's near-identical pages
     can never straddle the boundary), then scrub the TRAIN side of
-    any document sharing a k-token shingle with ANY test document.
+    any document sharing a 5-token shingle with ANY test document.
     A naive per-doc random split fails both ways: same-source
     near-dups land on both sides, and verbatim n-gram overlap leaks
     eval text into training.
@@ -1083,8 +1040,8 @@ def leakage_safe_split(
     against it (hash join on the same key), then one doc-keyed
     DISTINCT. Nothing is collected; the test shingle set stays
     distributed (at 10% of a 100 TB corpus it is nowhere near
-    broadcastable). Docs with < k tokens carry no shingles and
-    cannot be quarantined — a sub-shingle doc cannot leak a k-gram.
+    broadcastable). Docs with < 5 tokens carry no shingles and
+    cannot be quarantined — a sub-shingle doc cannot leak a 5-gram.
 
     The shingled table is persisted (dedup registry; release with
     dedup.release_persisted() after the result is consumed): the
@@ -1107,30 +1064,30 @@ def leakage_safe_split(
     is_test = (u % 1000 < test_permille).alias("is_test")
     shingled = _register_persist(
         docs.select(
-            id_col,
+            "doc_id",
             is_test,
-            tokens_col(F.col(text_col)).alias("_lt"),
+            tokens_col(F.col("text")).alias("_lt"),
         ).select(
-            id_col,
+            "doc_id",
             "is_test",
             # shingle over the bound token attribute — never the
             # split() expression (per-element re-tokenization; see
             # _bigram_buckets)
-            shingles_col(F.col("_lt"), k).alias("sh"),
+            shingles_col(F.col("_lt")).alias("sh"),
         )
     )
-    ex = shingled.select(id_col, "is_test", F.explode("sh").alias("s"))
+    ex = shingled.select("doc_id", "is_test", F.explode("sh").alias("s"))
     test_sh = ex.filter(F.col("is_test")).select("s").distinct()
     hits = (
         ex.filter(~F.col("is_test"))
         .join(test_sh, "s", "left_semi")
-        .select(id_col)
+        .select("doc_id")
         .distinct()
         .withColumn("_hit", F.lit(True))
     )
-    meta = docs.select(id_col, F.col(group_col).alias("grp"), is_test)
-    return meta.join(hits, id_col, "left").select(
-        id_col,
+    meta = docs.select("doc_id", F.col(group_col).alias("grp"), is_test)
+    return meta.join(hits, "doc_id", "left").select(
+        "doc_id",
         F.col("grp").alias(group_col),
         F.when(F.col("is_test"), F.lit("test"))
         .when(F.col("_hit").isNotNull(), F.lit("quarantined"))
@@ -1175,8 +1132,6 @@ def dsir_importance(
     docs: DataFrame,
     target: DataFrame,
     n_buckets: int = 1024,
-    text_col: str = "text",
-    seed: str = "dsir1",
 ) -> DataFrame:
     """DSIR importance weights (Xie et al. 2023, "Data Selection for
     Language Models via Importance Resampling", NeurIPS): score every
@@ -1220,12 +1175,12 @@ def dsir_importance(
         # tokenize in ONE projection, bucket over the bound attribute
         # in the NEXT — _bigram_buckets' contract (see its docstring)
         toked = df.select(
-            "doc_id", tokens_col(F.col(text_col)).alias("_t")
+            "doc_id", tokens_col(F.col("text")).alias("_t")
         )
         return toked.select(
             "doc_id",
             F.explode(
-                _bigram_buckets(F.col("_t"), n_buckets, seed)
+                _bigram_buckets(F.col("_t"), n_buckets, "dsir1")
             ).alias("b"),
         )
 
@@ -1287,8 +1242,6 @@ def dsir_sample(
     target: DataFrame,
     keep_permille: int = 250,
     n_buckets: int = 1024,
-    text_col: str = "text",
-    seed: str = "dsir1",
 ) -> DataFrame:
     """DSIR selection: keep the top keep_permille/1000 of scoreable
     documents by importance weight (dsir_bits DESC, doc_id ASC tie
@@ -1323,7 +1276,7 @@ def dsir_sample(
     # release with dedup.release_persisted() after consuming
     w = _register_persist(
         dsir_importance(
-            docs, target, n_buckets=n_buckets, text_col=text_col, seed=seed
+            docs, target, n_buckets=n_buckets, 
         )
     )
     m_row = w.agg(F.count(F.lit(1)).alias("_n")).select(
@@ -1354,7 +1307,6 @@ def decontaminate_spans(
     docs: DataFrame,
     benchmark_snippets: list[str],
     k: int = 5,
-    text_col: str = "text",
     max_literal_keys: int = 50_000,
 ) -> DataFrame:
     """Span-level decontamination EXCISION: instead of dropping every
@@ -1424,7 +1376,7 @@ def decontaminate_spans(
         # token attribute, and the slice below over the BOUND hash
         # attribute (see _bigram_buckets / PLANS.md)
         return df.select(
-            keep, tokens_col(F.col(text_col)).alias("_lt")
+            keep, tokens_col(F.col("text")).alias("_lt")
         ).select(
             keep,
             F.transform("_lt", lambda t: F.xxhash64(t)).alias("_hs"),
@@ -1450,7 +1402,7 @@ def decontaminate_spans(
 
     snip_df = spark.createDataFrame(
         [(i, s) for i, s in enumerate(benchmark_snippets)],
-        f"snip_id long, {text_col} string",
+        "snip_id long, text string",
     )
     from .dedup import _register_persist
 
@@ -1529,7 +1481,7 @@ def decontaminate_spans(
             lambda sp: F.sequence(sp["s"], sp["e"]),
         )
     )
-    toks_orig = F.split(F.col(text_col), " ")
+    toks_orig = F.split(F.col("text"), " ")
     # covered staged into its own bound column: referencing the
     # flatten/transform chain inside the interpreted filter() lambda
     # would re-expand every merged span ONCE PER TOKEN of the doc
@@ -1539,11 +1491,11 @@ def decontaminate_spans(
     # referenced TWICE, which stops CollapseProject from inlining
     # the non-cheap chain back into the lambda.
     staged = (
-        docs.select("doc_id", text_col)
+        docs.select("doc_id", "text")
         .join(merged, "doc_id", "left")
         .select(
             "doc_id",
-            text_col,
+            "text",
             F.coalesce(F.col("n_spans"), F.lit(0)).alias("n_spans"),
             covered.alias("_cov"),
         )
@@ -1567,7 +1519,6 @@ def fuzzy_decontaminate(
     benchmark: DataFrame,
     threshold: float = 0.5,
     k: int = 5,
-    text_col: str = "text",
 ) -> DataFrame:
     """MinHash-LSH FUZZY decontamination: flag corpus documents that
     are NEAR-duplicates of any benchmark document — the
@@ -1606,10 +1557,8 @@ def fuzzy_decontaminate(
 
     if not 0.0 < threshold <= 1.0:
         raise ValueError("fuzzy_decontaminate: threshold in (0, 1]")
-    d = docs.select("doc_id", F.col(text_col).alias("text"))
-    b = benchmark.select(
-        F.col("doc_id").alias("bench_id"), F.col(text_col).alias("text")
-    )
+    d = docs.select("doc_id", "text")
+    b = benchmark.select(F.col("doc_id").alias("bench_id"), "text")
     arr_c, bands_c = _lsh_shingles_and_bands(d, k)
     arr_b, bands_b = _lsh_shingles_and_bands(
         b.withColumnRenamed("bench_id", "doc_id"), k
@@ -1670,7 +1619,7 @@ def fuzzy_decontaminate(
     )
 
 
-def data_card(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def data_card(docs: DataFrame) -> DataFrame:
     """Per-source corpus DATA CARD — the one-pass summary a corpus
     steward publishes next to a training mix (per source: volume,
     token mass, median length, mean heuristic quality, exact-dup
@@ -1700,7 +1649,7 @@ def data_card(docs: DataFrame, text_col: str = "text") -> DataFrame:
     from .textstats import quality_scores
 
     base = quality_scores(
-        docs, text_col=text_col, keep_cols=("source", "lang")
+        docs, keep_cols=("source", "lang")
     )
     main = base.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -1714,7 +1663,7 @@ def data_card(docs: DataFrame, text_col: str = "text") -> DataFrame:
         ).alias("mean_quality"),
     )
     dup = (
-        docs.select("source", F.md5(F.col(text_col)).alias("h"))
+        docs.select("source", F.md5(F.col("text")).alias("h"))
         .groupBy("source", "h")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .groupBy("source")
@@ -1756,8 +1705,6 @@ def data_card(docs: DataFrame, text_col: str = "text") -> DataFrame:
 def softdedup_weights(
     docs: DataFrame,
     clusters: DataFrame | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """SoftDeDup-style duplicate REWEIGHTING (He et al. 2024,
     "SoftDedup: an Efficient Data Reweighting Method for Speeding Up
@@ -1796,32 +1743,32 @@ def softdedup_weights(
     hash (exact mode) or the component id rendered as string
     (cluster mode).
     """
-    n_tok = _n_tokens(text_col).cast("long")
+    n_tok = _n_tokens("text").cast("long")
     if clusters is None:
         keyed = docs.select(
-            F.col(id_col),
-            F.md5(F.col(text_col)).alias("cluster_key"),
+            F.col("doc_id"),
+            F.md5(F.col("text")).alias("cluster_key"),
             n_tok.alias("n_tokens"),
         )
     else:
         keyed = docs.select(
-            F.col(id_col), n_tok.alias("n_tokens")
+            F.col("doc_id"), n_tok.alias("n_tokens")
         ).join(
             clusters.select(
-                F.col(id_col),
+                F.col("doc_id"),
                 F.col("component").cast("string").alias("cluster_key"),
             ),
-            on=id_col,
+            on="doc_id",
             how="inner",
         )
     w = Window.partitionBy("cluster_key")
     return keyed.select(
-        id_col,
+        "doc_id",
         "cluster_key",
         F.count(F.lit(1)).over(w).alias("cluster_n"),
         "n_tokens",
     ).select(
-        id_col,
+        "doc_id",
         "cluster_key",
         "cluster_n",
         F.round(F.lit(1.0) / F.col("cluster_n"), 5).alias("weight"),
@@ -1841,8 +1788,6 @@ def epoch_plan(
     weights: dict[str, float],
     default_weight: float = 1.0,
     max_epochs: float = 4.0,
-    group_col: str = "source",
-    text_col: str = "text",
 ) -> DataFrame:
     """Multi-epoch mixture plan: given a token budget LARGER than the
     corpus, decide how many epochs of each source to train on — the
@@ -1874,12 +1819,12 @@ def epoch_plan(
         raise ValueError("epoch_plan: max_epochs must be > 0")
     wexpr: Column = F.lit(float(default_weight))
     for src, w in weights.items():
-        wexpr = F.when(F.col(group_col) == src, F.lit(float(w))).otherwise(
+        wexpr = F.when(F.col("source") == src, F.lit(float(w))).otherwise(
             wexpr
         )
     avail = (
-        docs.groupBy(group_col)
-        .agg(F.sum(_n_tokens(text_col)).alias("available_tokens"))
+        docs.groupBy("source")
+        .agg(F.sum(_n_tokens("text")).alias("available_tokens"))
         .withColumn("weight", wexpr)
     )
     total_w = F.sum("weight").over(
@@ -1889,7 +1834,7 @@ def epoch_plan(
     )
     desired = F.lit(float(target_tokens)) * F.col("weight") / total_w
     return avail.select(
-        group_col,
+        "source",
         "available_tokens",
         "weight",
         F.round(
@@ -1905,17 +1850,11 @@ def epoch_plan(
     )
 
 
-def quantile_normalize(
-    docs: DataFrame,
-    score_col: str,
-    group_col: str = "source",
-    id_col: str = "doc_id",
-    n_buckets: int = 1000,
-) -> DataFrame:
+def quantile_normalize(docs: DataFrame, score_col: str) -> DataFrame:
     """Per-group quantile normalization of a score column: map each
     document's score to its WITHIN-GROUP quantile rank in integer
-    milli units — q_milli = ((rank - 1) * n_buckets) div (n - 1)
-    (0 for the group's minimum, n_buckets for its maximum; a
+    milli units — q_milli = ((rank - 1) * 1000) div (n - 1) over
+    each `source` (0 for the group's minimum, 1000 for its maximum; a
     singleton group maps to 0). The calibration step before mixing
     quality scores across sources: raw scores are not comparable
     between a code corpus and a web corpus, their quantiles are —
@@ -1931,33 +1870,31 @@ def quantile_normalize(
     """
     from pyspark.sql.window import Window
 
-    w = Window.partitionBy(group_col).orderBy(score_col, id_col)
-    wg = Window.partitionBy(group_col)
+    w = Window.partitionBy("source").orderBy(score_col, "doc_id")
+    wg = Window.partitionBy("source")
     ranked = docs.select(
-        id_col,
-        group_col,
+        "doc_id",
+        "source",
         score_col,
         F.row_number().over(w).alias("_rk"),
         F.count(F.lit(1)).over(wg).alias("_n"),
     )
     q = F.when(F.col("_n") > 1,
-        F.expr(f"((_rk - 1) * {int(n_buckets)}) div (_n - 1)")
+        F.expr("((_rk - 1) * 1000) div (_n - 1)")
     ).otherwise(F.lit(0).cast("long"))
     return ranked.select(
-        id_col, group_col, score_col, q.alias("q_milli")
+        "doc_id", "source", score_col, q.alias("q_milli")
     )
 
 
 def k_anonymity_audit(
     docs: DataFrame,
-    quasi_cols: tuple[str, ...] = ("source", "lang"),
     k: int = 5,
     bucket_col: str | None = "n_chars",
-    bucket_width: int = 100,
 ) -> DataFrame:
     """k-anonymity audit over quasi-identifier combinations
     (Sweeney 2002): group the corpus by the quasi-identifier tuple
-    (categorical columns plus an optional bucketized numeric — raw
+    (source, lang, plus an optional numeric bucketized by 100 — raw
     lengths are themselves identifying) and flag combinations with
     fewer than k members. The privacy companion to pii_scrub: PII
     regexes catch direct identifiers, this catches the doc whose
@@ -1969,16 +1906,12 @@ def k_anonymity_audit(
     exposure share (n_docs of at-risk combos) live in the output, so
     the release decision needs no second pass.
 
-    Output: (quasi cols..., [len_bucket], n_docs, at_risk).
+    Output: (source, lang, [len_bucket], n_docs, at_risk).
     """
-    keys = [F.col(c) for c in quasi_cols]
-    names = list(quasi_cols)
+    names = ["source", "lang"]
+    keys = [F.col(c) for c in names]
     if bucket_col is not None:
-        keys.append(
-            F.expr(f"{bucket_col} div {int(bucket_width)}").alias(
-                "len_bucket"
-            )
-        )
+        keys.append(F.expr(f"{bucket_col} div 100").alias("len_bucket"))
         names.append("len_bucket")
     return (
         docs.select(*keys)
@@ -1990,10 +1923,8 @@ def k_anonymity_audit(
 
 def stratified_split(
     docs: DataFrame,
-    strata_col: str = "source",
     val_pct: int = 10,
     test_pct: int = 10,
-    id_col: str = "doc_id",
     seed: str = "split1",
 ) -> DataFrame:
     """EXACT-proportion stratified train/val/test assignment: within
@@ -2021,7 +1952,7 @@ def stratified_split(
     arithmetic after it. No joins, no driver state; AQE splits a
     skewed stratum.
 
-    Output: (id_col, strata_col, split) — split in
+    Output: (doc_id, source, split) — split in
     {'train','val','test'}.
     """
     if val_pct < 0 or test_pct < 0 or val_pct + test_pct >= 100:
@@ -2031,22 +1962,22 @@ def stratified_split(
         )
     rank_key = F.md5(
         F.concat(
-            F.lit(seed), F.col(id_col).cast("string")
+            F.lit(seed), F.col("doc_id").cast("string")
         ).cast("binary")
     )
-    w = Window.partitionBy(strata_col).orderBy(rank_key, id_col)
-    wn = Window.partitionBy(strata_col)
+    w = Window.partitionBy("source").orderBy(rank_key, "doc_id")
+    wn = Window.partitionBy("source")
     ranked = docs.select(
-        id_col,
-        strata_col,
+        "doc_id",
+        "source",
         F.row_number().over(w).alias("_rk"),
         F.count(F.lit(1)).over(wn).alias("_n"),
     )
     n_test = F.expr(f"(_n * {int(test_pct)}) div 100")
     n_val = F.expr(f"(_n * {int(val_pct)}) div 100")
     return ranked.select(
-        id_col,
-        strata_col,
+        "doc_id",
+        "source",
         F.when(F.col("_rk") <= n_test, F.lit("test"))
         .when(F.col("_rk") <= n_test + n_val, F.lit("val"))
         .otherwise(F.lit("train"))
@@ -2054,13 +1985,7 @@ def stratified_split(
     )
 
 
-def length_batches(
-    docs: DataFrame,
-    batch_size: int = 8,
-    group_col: str = "source",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def length_batches(docs: DataFrame, batch_size: int = 8) -> DataFrame:
     """Length-bucketed training-batch construction with a padding-
     waste report: within every group, documents sort by token count
     DESCENDING (id tie-break) and chunk into fixed-size batches — the
@@ -2084,32 +2009,32 @@ def length_batches(
     Batch ids are per-group sequential integers: (rank - 1) div
     batch_size.
 
-    Output: (group_col, batch_id, n_docs, max_tokens, min_tokens,
+    Output: (source, batch_id, n_docs, max_tokens, min_tokens,
     sum_tokens, pad_waste_milli).
     """
     if batch_size < 1:
         raise ValueError("length_batches: batch_size must be >= 1")
-    n_tok = F.size(F.split(F.col(text_col), " ")).cast("long")
+    n_tok = F.size(F.split(F.col("text"), " ")).cast("long")
     w = (
-        Window.partitionBy(group_col)
-        .orderBy(F.col("_tok").desc(), F.col(id_col))
+        Window.partitionBy("source")
+        .orderBy(F.col("_tok").desc(), F.col("doc_id"))
     )
     toks = (
-        docs.select(id_col, group_col, n_tok.alias("_tok"))
+        docs.select("doc_id", "source", n_tok.alias("_tok"))
         .withColumn("_rk", F.row_number().over(w))
         .withColumn(
             "batch_id",
             F.expr(f"(_rk - 1) div {int(batch_size)}").cast("long"),
         )
     )
-    agg = toks.groupBy(group_col, "batch_id").agg(
+    agg = toks.groupBy("source", "batch_id").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.max("_tok").alias("max_tokens"),
         F.min("_tok").alias("min_tokens"),
         F.sum("_tok").alias("sum_tokens"),
     )
     return agg.select(
-        group_col,
+        "source",
         "batch_id",
         "n_docs",
         "max_tokens",
@@ -2122,12 +2047,7 @@ def length_batches(
     )
 
 
-def pack_sequences_bfd(
-    docs: DataFrame,
-    capacity: int = 256,
-    group_col: str = "source",
-    text_col: str = "text",
-) -> DataFrame:
+def pack_sequences_bfd(docs: DataFrame, capacity: int = 256) -> DataFrame:
     """Best-fit-decreasing sequence packing — the density upgrade
     over pack_sequences' next-fit: sort the shard's documents by
     token count DESC (doc_id tie-break), place each into the
@@ -2144,7 +2064,7 @@ def pack_sequences_bfd(
     list bounded by bins-per-shard. Oversized docs (n_tokens >
     capacity) open their own bin, never dropped.
 
-    Output: (group_col, doc_id, n_tokens, bin_idx, offset_in_bin);
+    Output: (source, doc_id, n_tokens, bin_idx, offset_in_bin);
     bin_idx numbers bins in OPEN order, offset_in_bin is the fill
     level at placement — deterministic, mirrored by a recursive-CTE
     oracle carrying the bin-load list as value state.
@@ -2152,9 +2072,9 @@ def pack_sequences_bfd(
     import pandas as pd
 
     base = docs.select(
-        group_col,
+        "source",
         "doc_id",
-        F.size(F.split(F.lower(F.col(text_col)), " "))
+        F.size(F.split(F.lower(F.col("text")), " "))
         .cast("long")
         .alias("n_tokens"),
     )
@@ -2182,9 +2102,9 @@ def pack_sequences_bfd(
         pdf["offset_in_bin"] = pd.Series(out_off, dtype="int64")
         return pdf
 
-    group_type = docs.schema[group_col].dataType.simpleString()
+    group_type = docs.schema["source"].dataType.simpleString()
     schema = (
-        f"{group_col} {group_type}, doc_id long, n_tokens long, "
+        f"source {group_type}, doc_id long, n_tokens long, "
         "bin_idx long, offset_in_bin long"
     )
-    return base.groupBy(group_col).applyInPandas(_pack, schema=schema)
+    return base.groupBy("source").applyInPandas(_pack, schema=schema)

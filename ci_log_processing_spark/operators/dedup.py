@@ -138,7 +138,7 @@ def shingles_col(toks: Column, k: int = 5) -> Column:
 
 
 def shingled_docs(
-    docs: DataFrame, k: int = 5, impl: str = "arrow"
+    docs: DataFrame, k: int, impl: str = "arrow"
 ) -> DataFrame:
     """(doc_id, shingles) for every doc with >= k tokens — the ONE
     shingling entry point all LSH/Jaccard operators share.
@@ -216,16 +216,25 @@ MINHASH_PARAMS = [
 ]
 N_BANDS = 4
 ROWS_PER_BAND = 4
+# shingle size of the LSH family (Jaccard, MinHash, incremental
+# near-dup ingest); index bands only verify against batches shingled
+# with the same k
+SHINGLE_K = 5
+# mega-bucket guard of the banded candidate join (see
+# minhash_lsh_pairs); the DuckDB twins use the same cap
+LSH_BUCKET_CAP = 64
+# index ids offered per band bucket by neardup_ids_against_index
+CANDIDATE_CAP = 64
 
 
 # ---- operators --------------------------------------------------------
 
 
-def exact_dup_groups(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def exact_dup_groups(docs: DataFrame) -> DataFrame:
     """Exact dedup: md5-groupBy; one partial-aggregated shuffle."""
     return (
         docs.select(
-            F.col("doc_id"), F.md5(F.col(text_col).cast("binary")).alias("h")
+            F.col("doc_id"), F.md5(F.col("text").cast("binary")).alias("h")
         )
         .groupBy("h")
         .agg(
@@ -260,7 +269,6 @@ def exact_dedup_keep_first(
 def incremental_dedup(
     incoming: DataFrame,
     known_hashes: DataFrame,
-    text_col: str = "text",
 ) -> DataFrame:
     """Ingestion-time dedup of a NEW batch against the corpus's
     persisted content-hash index (the manifest a real pipeline keeps
@@ -289,7 +297,6 @@ def incremental_dedup(
         )
     firsts = exact_dedup_keep_first(
         incoming,
-        text_col=text_col,
         keep_cols=tuple(c for c in incoming.columns if c != "doc_id"),
     )
     return firsts.join(known_hashes.select("h"), "h", "left_anti")
@@ -301,11 +308,9 @@ DEFAULT_SHINGLE_DF_CUT = 128
 def ngram_jaccard_pairs(
     docs: DataFrame,
     threshold: float = 0.6,
-    k: int = 5,
     df_cut: int | None = DEFAULT_SHINGLE_DF_CUT,
-    shingle_impl: str = "arrow",
 ) -> DataFrame:
-    """Near-dup pairs by Jaccard over distinct k-shingles.
+    """Near-dup pairs by Jaccard over distinct SHINGLE_K-token shingles.
 
     Two-phase shape that survives natural text at 100 TB:
 
@@ -326,16 +331,7 @@ def ngram_jaccard_pairs(
     DuckDB twin implements the identical rule). df_cut=None disables
     the cut for small corpora.
     """
-    arr = shingled_docs(docs, k, impl=shingle_impl)
-    if shingle_impl == "native":
-        # the Catalyst shingler is expensive enough that caching its
-        # output wins; the Arrow shingler is cheap enough that
-        # RECOMPUTING it beats the memory traffic of caching 600k+
-        # string arrays (measured at 600k docs, local[32]: persist
-        # 50-88 s vs recompute 25-27 s; local[8] within noise) — and
-        # at cluster scale a corpus-sized cache is exactly what a
-        # 100 TB job avoids
-        arr = _register_persist(arr)
+    arr = shingled_docs(docs, SHINGLE_K)
     sh = arr.select("doc_id", F.explode("shingles").alias("s"))
     idx = sh
     if df_cut is not None:
@@ -383,9 +379,7 @@ def ngram_jaccard_pairs(
     )
 
 
-def minhash_signatures(
-    docs: DataFrame, spark: SparkSession | None = None, k: int = 5
-) -> DataFrame:
+def minhash_signatures(docs: DataFrame) -> DataFrame:
     """doc_id -> minhash signature array (ordered by permutation id).
 
     Fully map-side: shingle-hash the doc's shingle array once, then
@@ -393,10 +387,10 @@ def minhash_signatures(
     array — 16 codegen'd expressions per row, ZERO shuffles and no
     16x row blowup (the previous explode+groupBy shape shuffled
     |shingles| x 16 rows twice; at 100 TB that shuffle dominates the
-    whole job). Docs with no shingles (< k tokens) are excluded,
+    whole job). Docs with no shingles (< SHINGLE_K tokens) are excluded,
     matching the oracle's semantics where they never appear in `sh`.
     """
-    hashed = shingled_docs(docs, k).select(
+    hashed = shingled_docs(docs, SHINGLE_K).select(
         "doc_id", F.transform("shingles", h32).alias("hs")
     )
     sig = F.array(
@@ -482,8 +476,6 @@ def _banded_candidate_pairs(
 def minhash_estimate_pairs(
     docs: DataFrame,
     threshold: float = 0.5,
-    k: int = 5,
-    bucket_cap: int | None = 64,
 ) -> DataFrame:
     """MinHash-LSH near-dup pairs scored by the SIGNATURE ESTIMATE
     instead of an exact-Jaccard verify: est = (matching signature
@@ -515,8 +507,8 @@ def minhash_estimate_pairs(
     materialization, which amortizes as |shingles| grows while the
     3x recompute it replaces does not).
     """
-    sigs = _register_persist(minhash_signatures(docs, k=k))
-    cand = _banded_candidate_pairs(_bands_from_sigs(sigs), bucket_cap)
+    sigs = _register_persist(minhash_signatures(docs))
+    cand = _banded_candidate_pairs(_bands_from_sigs(sigs), LSH_BUCKET_CAP)
     a = sigs.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sa"))
     b = sigs.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sb"))
     n_eq = F.size(
@@ -541,9 +533,6 @@ def minhash_lsh_pairs(
     docs: DataFrame,
     spark: SparkSession,
     threshold: float = 0.6,
-    k: int = 5,
-    bucket_cap: int | None = 64,
-    shingle_impl: str = "arrow",
 ) -> DataFrame:
     """MinHash-LSH candidate pairs, verified by true Jaccard.
 
@@ -552,66 +541,25 @@ def minhash_lsh_pairs(
     LSH-then-verify contract), so output == jaccard >= threshold
     among banded candidates.
 
-    `bucket_cap` is the MEGA-BUCKET guard (same deterministic rule as
-    similarity.embedding_near_dup_pairs_capped): a (band, key) bucket
-    of n docs otherwise emits n(n-1)/2 candidate rows, and a bucket
-    of near-identical boilerplate — exactly the LSH workload — makes
-    that quadratic. Buckets larger than the cap are split into
+    LSH_BUCKET_CAP is the MEGA-BUCKET guard (same deterministic rule
+    as similarity.embedding_near_dup_pairs_capped): a (band, key)
+    bucket of n docs otherwise emits n(n-1)/2 candidate rows, and a
+    bucket of near-identical boilerplate — exactly the LSH workload —
+    makes that quadratic. Buckets larger than the cap are split into
     ceil(n / cap) sub-buckets by hashing doc_id, and pairs are only
     generated inside a sub-bucket: expected per-cell cost ~cap^2
     regardless of skew. Recall trade, stated plainly: pairs straddling
     two sub-buckets of one bucket are dropped IN THAT BAND — they stay
     candidates wherever any of the other bands agrees, and LSH recall
     is probabilistic to begin with. The DuckDB oracle implements the
-    identical rule so the loss is measured, not hidden. Pass None to
-    disable (exact round-2 behavior); buckets at or under the cap are
-    unaffected either way.
+    identical rule so the loss is measured, not hidden; buckets at or
+    under the cap are unaffected.
     """
-    # Shingle once via the shared entry point. With the Catalyst
-    # shingler the arrays are persisted so the signature/band path
-    # and the verify path share one compute (recomputing THAT
-    # implementation 3x dominated profiling); the Arrow shingler is
-    # cheap enough that recompute beats caching corpus-sized string
-    # arrays — see shingled_docs and the conditional below.
-    arr = shingled_docs(docs, k, impl=shingle_impl)
-    if shingle_impl == "native":
-        # the Catalyst shingler is expensive enough that caching its
-        # output wins; the Arrow shingler is cheap enough that
-        # RECOMPUTING it beats the memory traffic of caching 600k+
-        # string arrays (measured at 600k docs, local[32]: persist
-        # 50-88 s vs recompute 25-27 s; local[8] within noise) — and
-        # at cluster scale a corpus-sized cache is exactly what a
-        # 100 TB job avoids
-        arr = _register_persist(arr)
-    hashed = arr.select("doc_id", F.transform("shingles", h32).alias("hs"))
-    sig = F.array(
-        *[
-            F.array_min(
-                F.transform(
-                    "hs", lambda h: (F.lit(a) * h + F.lit(b)) % MERSENNE_P
-                )
-            )
-            for a, b in MINHASH_PARAMS
-        ]
-    )
-    sigs = hashed.select("doc_id", sig.alias("sig"))
-    bands = sigs.select(
-        "doc_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(N_BANDS - 1)),
-                lambda b: F.md5(
-                    F.concat_ws(
-                        ",",
-                        F.slice(
-                            F.col("sig"), b * ROWS_PER_BAND + 1, ROWS_PER_BAND
-                        ).cast("array<string>"),
-                    )
-                ),
-            )
-        ).alias("band", "key"),
-    )
-    cand = _banded_candidate_pairs(bands, bucket_cap)
+    # the Arrow shingler is cheap enough that recomputing `arr` for
+    # the band path and the verify path beats caching corpus-sized
+    # string arrays (see shingled_docs)
+    arr, bands = _lsh_shingles_and_bands(docs, SHINGLE_K)
+    cand = _banded_candidate_pairs(bands, LSH_BUCKET_CAP)
     # exact-verify ONLY the banded candidates — join each side's
     # distinct-shingle ARRAY onto the pair and take array_intersect;
     # cost is O(|candidates|) with no shingle-level shuffle at all
@@ -645,24 +593,17 @@ def minhash_lsh_pairs(
 
 
 def _lsh_shingles_and_bands(
-    docs: DataFrame, k: int, shingle_impl: str = "arrow"
+    docs: DataFrame, k: int
 ) -> tuple[DataFrame, DataFrame]:
-    """Shared shingle/signature/band derivation for the incremental
-    near-dup path: returns (arr, bands) where arr = (doc_id,
-    shingles) persisted (it feeds both banding and verify) and
-    bands = (doc_id, band, key). Same MINHASH_PARAMS / N_BANDS /
-    ROWS_PER_BAND constants as minhash_lsh_pairs, so index bands
-    written by one release verify against batches from another."""
-    arr = shingled_docs(docs, k, impl=shingle_impl)
-    if shingle_impl == "native":
-        # the Catalyst shingler is expensive enough that caching its
-        # output wins; the Arrow shingler is cheap enough that
-        # RECOMPUTING it beats the memory traffic of caching 600k+
-        # string arrays (measured at 600k docs, local[32]: persist
-        # 50-88 s vs recompute 25-27 s; local[8] within noise) — and
-        # at cluster scale a corpus-sized cache is exactly what a
-        # 100 TB job avoids
-        arr = _register_persist(arr)
+    """Shared shingle/signature/band derivation of the LSH family
+    (minhash_lsh_pairs, the incremental near-dup path, fuzzy
+    decontamination): returns (arr, bands) where arr = (doc_id,
+    shingles), unpersisted (it feeds both banding and verify, and
+    the Arrow shingler is cheaper to recompute than to cache), and
+    bands = (doc_id, band, key). One MINHASH_PARAMS / N_BANDS /
+    ROWS_PER_BAND derivation, so index bands written by one release
+    verify against batches from another."""
+    arr = shingled_docs(docs, k)
     hashed = arr.select(
         "doc_id", F.transform("shingles", h32).alias("hs")
     )
@@ -710,8 +651,7 @@ def incremental_minhash_dedup(
     batch: DataFrame,
     index_docs: DataFrame,
     threshold: float = 0.6,
-    k: int = 5,
-    candidate_cap: int = 64,
+    candidate_cap: int = CANDIDATE_CAP,
 ) -> DataFrame:
     """NEAR-duplicate analog of incremental_dedup: a new batch is
     deduplicated against the ALREADY-INGESTED corpus — a batch doc
@@ -744,8 +684,8 @@ def incremental_minhash_dedup(
         raise ValueError(
             "incremental_minhash_dedup: candidate_cap must be >= 1"
         )
-    arr_b, bands_b = _lsh_shingles_and_bands(batch, k)
-    arr_i, bands_i = _lsh_shingles_and_bands(index_docs, k)
+    arr_b, bands_b = _lsh_shingles_and_bands(batch, SHINGLE_K)
+    arr_i, bands_i = _lsh_shingles_and_bands(index_docs, SHINGLE_K)
     dup_ids = neardup_ids_against_index(
         arr_b, bands_b, arr_i, bands_i, threshold, candidate_cap
     )
@@ -812,7 +752,7 @@ def neardup_ids_against_index(
     )
 
 
-def exact_star_edges(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def exact_star_edges(docs: DataFrame) -> DataFrame:
     """Exact-duplicate edges as a STAR (group-min doc_id -> member),
     not a clique: a group of n identical docs contributes n-1 edges
     instead of n(n-1)/2, which is what keeps the edge list linear in
@@ -820,7 +760,7 @@ def exact_star_edges(docs: DataFrame, text_col: str = "text") -> DataFrame:
     Components over star edges equal components over the clique."""
     from pyspark.sql.window import Window
 
-    h = F.md5(F.col(text_col).cast("binary"))
+    h = F.md5(F.col("text").cast("binary"))
     w = Window.partitionBy(h)
     return (
         docs.select(
@@ -1014,9 +954,11 @@ def dedup_keep_best(
     )
 
 
-def duplicate_components_star(
-    pairs: DataFrame, nodes: DataFrame, max_iter: int = 40
-) -> DataFrame:
+# O(log^2 n) rounds: 40 covers any graph this operator will meet
+STAR_MAX_ROUNDS = 40
+
+
+def duplicate_components_star(pairs: DataFrame, nodes: DataFrame) -> DataFrame:
     """Connected components by alternating large-star / small-star
     contraction (Kiveris et al., "Connected Components in MapReduce
     and Beyond", SoCC'14) — O(log^2 n) rounds on ANY graph shape,
@@ -1091,7 +1033,7 @@ def duplicate_components_star(
     )
     prev_sig = None
     converged = False
-    for _ in range(max_iter):
+    for _ in range(STAR_MAX_ROUNDS):
         new_edges, new_rdds = _checkpoint(small_star(large_star(edges)))
         sig = signature(new_edges)
         _release(edges_rdds)
@@ -1103,8 +1045,8 @@ def duplicate_components_star(
     if not converged:
         _release(edges_rdds)
         raise RuntimeError(
-            f"duplicate_components_star did not converge in {max_iter} "
-            "rounds"
+            "duplicate_components_star did not converge in "
+            f"{STAR_MAX_ROUNDS} rounds"
         )
     # fixed point: edges are (member -> component-min) stars
     members = edges.select(
@@ -1216,8 +1158,14 @@ def duplicate_spans(docs: DataFrame, k: int = 20) -> DataFrame:
     )
 
 
-def simhash_col(toks: Column, bits: int = 32) -> Column:
-    """32-bit SimHash over distinct tokens as one expression.
+SIMHASH_BITS = 32
+# simhash_pairs' bit-slices; SIMHASH_BITS % SIMHASH_BANDS == 0, so the
+# bands cover the whole fingerprint
+SIMHASH_BANDS = 4
+
+
+def simhash_col(toks: Column) -> Column:
+    """SIMHASH_BITS-bit SimHash over distinct tokens as one expression.
 
     bit_i(doc) = 1 iff sum over tokens of (+1 if token-hash bit i
     set else -1) > 0; computed with aggregate() over the token
@@ -1231,7 +1179,7 @@ def simhash_col(toks: Column, bits: int = 32) -> Column:
         ).cast("long"),
     )
     terms = []
-    for i in range(bits):
+    for i in range(SIMHASH_BITS):
         vote = F.aggregate(
             hashes,
             F.lit(0).cast("long"),
@@ -1247,31 +1195,28 @@ def simhash_col(toks: Column, bits: int = 32) -> Column:
     return out
 
 
-def simhash_fingerprints(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def simhash_fingerprints(docs: DataFrame) -> DataFrame:
     return docs.select(
-        "doc_id", simhash_col(tokens_col(F.col(text_col))).alias("simhash")
+        "doc_id", simhash_col(tokens_col(F.col("text"))).alias("simhash")
     )
 
 
 def simhash_pairs(
     docs: DataFrame,
-    text_col: str = "text",
     max_hamming: int = 3,
-    bits: int = 32,
-    n_bands: int = 4,
     bucket_cap: int | None = None,
 ) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance, found WITHOUT an
     all-pairs comparison.
 
     Banding with the pigeonhole guarantee: split the fingerprint
-    into n_bands equal bit-slices; any pair within Hamming distance
-    <= n_bands - 1 must agree EXACTLY on at least one slice, so
+    into SIMHASH_BANDS equal bit-slices; any pair within Hamming
+    distance <= SIMHASH_BANDS - 1 must agree EXACTLY on at least one slice, so
     candidates are generated by an equi-join on (band, slice value)
     — one shuffle on a small integer key, cost tracks duplicate
     density, never |docs|^2. Candidates are then verified with
     bit_count(xor) <= max_hamming (exact, no false positives;
-    recall is total for max_hamming <= n_bands - 1).
+    recall is total for max_hamming <= SIMHASH_BANDS - 1).
 
     `bucket_cap` (default None = off) applies the same deterministic
     mega-bucket sub-split as minhash_lsh_pairs to each (band, key)
@@ -1282,22 +1227,14 @@ def simhash_pairs(
     fingerprint value concentrates (all-identical boilerplate), where
     the uncapped join cell is quadratic.
     """
-    if max_hamming > n_bands - 1:
+    if max_hamming > SIMHASH_BANDS - 1:
         raise ValueError(
             f"pigeonhole guarantee broken: max_hamming={max_hamming} "
-            f"needs n_bands >= {max_hamming + 1}"
+            f"needs more than {SIMHASH_BANDS} bands"
         )
-    if bits % n_bands != 0:
-        # a remainder would silently leave the top bits % n_bands
-        # fingerprint bits outside every band — pairs differing only
-        # there would never become candidates (recall hole)
-        raise ValueError(
-            f"bits={bits} not divisible by n_bands={n_bands}; "
-            "the banding would not cover the full fingerprint"
-        )
-    band_w = bits // n_bands
+    band_w = SIMHASH_BITS // SIMHASH_BANDS
     mask = (1 << band_w) - 1
-    fps = _register_persist(simhash_fingerprints(docs, text_col))
+    fps = _register_persist(simhash_fingerprints(docs))
     bands = fps.select(
         "doc_id",
         "simhash",
@@ -1307,7 +1244,7 @@ def simhash_pairs(
                     F.shiftright("simhash", i * band_w).bitwiseAND(
                         F.lit(mask)
                     )
-                    for i in range(n_bands)
+                    for i in range(SIMHASH_BANDS)
                 ]
             )
         ).alias("band", "key"),
@@ -1354,7 +1291,6 @@ def cdc_chunk_stats(
     docs: DataFrame,
     window: int = 8,
     divisor: int = 16,
-    text_col: str = "text",
 ) -> DataFrame:
     """Content-defined-chunking dedup: how much of each document is
     byte-identical to SOME other document, robust to insertions.
@@ -1391,7 +1327,7 @@ def cdc_chunk_stats(
         raise ValueError("cdc_chunk_stats: window must be >= 2")
     if divisor < 2:
         raise ValueError("cdc_chunk_stats: divisor must be >= 2")
-    text = F.col(text_col)
+    text = F.col("text")
     n = F.length(text)
     # boundary AFTER char i (1-based), i in [window, n-1]: the end
     # position n is always a boundary and is appended separately
@@ -1444,7 +1380,6 @@ def winnow_fingerprints(
     docs: DataFrame,
     k: int = 4,
     window: int = 4,
-    text_col: str = "text",
 ) -> DataFrame:
     """Winnowed document fingerprints (Schleimer, Wilkerson, Aiken
     2003 — the MOSS local fingerprinting scheme): hash every k-token
@@ -1539,7 +1474,7 @@ def winnow_fingerprints(
         )
 
     kg = F.flatten(
-        F.transform(F.array(tokens_col(F.col(text_col))), _kgrams)
+        F.transform(F.array(tokens_col(F.col("text"))), _kgrams)
     )
     fps = F.flatten(F.transform(F.array(kg), _select))
     return docs.select("doc_id", fps.alias("fps")).select(
@@ -1552,8 +1487,6 @@ def winnow_pairs(
     overlap_milli: int = 500,
     k: int = 4,
     window: int = 4,
-    df_cut: int | None = DEFAULT_SHINGLE_DF_CUT,
-    text_col: str = "text",
 ) -> DataFrame:
     """Near-dup pairs by winnowed-fingerprint overlap — the MOSS
     report: candidate pairs from the fingerprint inverted index
@@ -1571,19 +1504,17 @@ def winnow_pairs(
     Output: (doc_a, doc_b, n_shared, overlap_milli).
     """
     arr = _register_persist(
-        winnow_fingerprints(docs, k=k, window=window, text_col=text_col)
+        winnow_fingerprints(docs, k=k, window=window)
         .filter(F.col("n_fps") > 0)
     )
     fp = arr.select("doc_id", F.explode("fps").alias("fp"))
-    idx = fp
-    if df_cut is not None:
-        rare = (
-            fp.groupBy("fp")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") <= df_cut)
-            .select("fp")
-        )
-        idx = fp.join(rare, "fp", "left_semi")
+    rare = (
+        fp.groupBy("fp")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .filter(F.col("df") <= DEFAULT_SHINGLE_DF_CUT)
+        .select("fp")
+    )
+    idx = fp.join(rare, "fp", "left_semi")
     a = idx.alias("a")
     b = idx.alias("b")
     cand = (
@@ -1624,12 +1555,7 @@ def winnow_pairs(
     )
 
 
-def cross_source_dup_matrix(
-    pairs: DataFrame,
-    docs: DataFrame,
-    group_col: str = "source",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def cross_source_dup_matrix(pairs: DataFrame, docs: DataFrame) -> DataFrame:
     """Cross-source duplication matrix: label a duplicate-PAIR table
     (any of this module's pair generators — exact, minhash, ngram
     jaccard, simhash, winnowing) with each side's corpus source and
@@ -1650,10 +1576,10 @@ def cross_source_dup_matrix(
     itself is broadcast-trivial.
     """
     meta_a = docs.select(
-        F.col(id_col).alias("doc_a"), F.col(group_col).alias("_ga")
+        F.col("doc_id").alias("doc_a"), F.col("source").alias("_ga")
     )
     meta_b = docs.select(
-        F.col(id_col).alias("doc_b"), F.col(group_col).alias("_gb")
+        F.col("doc_id").alias("doc_b"), F.col("source").alias("_gb")
     )
     labeled = (
         pairs.select("doc_a", "doc_b")
@@ -1727,11 +1653,11 @@ def conv_dedup(routed: DataFrame) -> DataFrame:
     )
 
 
-def dedup_threshold_curve(
-    docs: DataFrame,
-    cutoffs_sixteenths: tuple[int, ...] = (4, 8, 12, 16),
-    bucket_cap: int | None = 64,
-) -> DataFrame:
+# candidate thresholds of dedup_threshold_curve, in sixteenths, ascending
+CURVE_CUTOFFS = (4, 8, 12, 16)
+
+
+def dedup_threshold_curve(docs: DataFrame) -> DataFrame:
     """Dedup threshold SENSITIVITY curve: one MinHash estimate pass
     (minhash_estimate_pairs at the lowest cutoff), then for every
     candidate threshold c/16 the pair count and the distinct-doc
@@ -1750,13 +1676,10 @@ def dedup_threshold_curve(
 
     Output: (cutoff_sixteenths, n_pairs, n_docs).
     """
-    lo = min(cutoffs_sixteenths)
     pairs = minhash_estimate_pairs(
-        docs, threshold=lo / 16, bucket_cap=bucket_cap
+        docs, threshold=CURVE_CUTOFFS[0] / 16
     ).select("doc_a", "doc_b", "n_equal")
-    cuts = F.array(
-        *[F.lit(int(c)).cast("long") for c in sorted(cutoffs_sixteenths)]
-    )
+    cuts = F.array(*[F.lit(c).cast("long") for c in CURVE_CUTOFFS])
     cleared = pairs.select(
         F.explode(
             F.filter(cuts, lambda c: c <= F.col("n_equal"))
@@ -1786,8 +1709,6 @@ def count_cosine_pairs(
     threshold_milli: int = 800,
     df_cut: int = 128,
     ngram: int = 1,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Sparse token-count COSINE near-dup pairs — the bag-of-words
     complement of the set-based detectors (`ngram_jaccard_pairs`
@@ -1857,8 +1778,8 @@ def count_cosine_pairs(
         raise ValueError("count_cosine_pairs: ngram must be >= 1")
     if ngram == 1:
         terms = docs.select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(tokens_col(F.col(text_col))).alias("term"),
+            "doc_id",
+            F.explode(tokens_col(F.col("text"))).alias("term"),
         )
     else:
         toks = F.col("_lt")
@@ -1892,8 +1813,8 @@ def count_cosine_pairs(
             ),
         ).otherwise(F.array().cast("array<long>"))
         terms = docs.select(
-            F.col(id_col).alias("doc_id"),
-            tokens_col(F.col(text_col)).alias("_lt"),
+            "doc_id",
+            tokens_col(F.col("text")).alias("_lt"),
         ).select("doc_id", F.explode(grams).alias("term"))
     tf = _register_persist(
         terms.groupBy("doc_id", "term").agg(

@@ -80,10 +80,7 @@ def dq_audit(
     )
 
 
-def document_checks(
-    allowed_langs: tuple[str, ...],
-    max_chars: int = 1_000_000,
-) -> dict[str, Column]:
+def document_checks(allowed_langs: tuple[str, ...]) -> dict[str, Column]:
     """The standard constraint set for the documents corpus —
     null text, out-of-taxonomy lang, out-of-range n_chars, and the
     n_chars == length(text) cross-column consistency the generator
@@ -92,7 +89,7 @@ def document_checks(
         "not_null:text": F.col("text").isNull(),
         "accepted:lang": ~F.col("lang").isin(*allowed_langs),
         "range:n_chars": (F.col("n_chars") < 1)
-        | (F.col("n_chars") > int(max_chars)),
+        | (F.col("n_chars") > 1_000_000),
         "consistent:n_chars": F.col("n_chars") != F.length("text"),
     }
 

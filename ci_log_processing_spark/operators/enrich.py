@@ -94,9 +94,7 @@ SUBSYSTEM_TAG_CONFIG: list[tuple[str, list[str]]] = [
 ]
 
 
-def suffix_tag_cols(
-    subsystem: F.Column, config: list[tuple[str, list[str]]] | None = None
-) -> tuple[F.Column, F.Column]:
+def suffix_tag_cols(subsystem: F.Column) -> tuple[F.Column, F.Column]:
     """(file_name, file_tags) columns with the reference's exact
     lookup semantics, first-match-wins over the config order.
 
@@ -125,11 +123,10 @@ def suffix_tag_cols(
         tests/test_logsender.py:1199-1217);
       * null subsystem -> (NULL, []).
     """
-    if config is None:
-        config = SUBSYSTEM_TAG_CONFIG
     name = F.element_at(F.split(subsystem, r"\."), -1)
     chain = None
-    for key, ktags in config:  # WHEN order == config priority order
+    # WHEN order == config priority order
+    for key, ktags in SUBSYSTEM_TAG_CONFIG:
         hit = (subsystem == key) | subsystem.endswith("." + key)
         matched = F.concat(
             F.array(*[F.lit(x) for x in ktags]), F.array(name)
@@ -148,13 +145,7 @@ def with_file_tags(df: DataFrame) -> DataFrame:
     return df.withColumn("file_name", name).withColumn("file_tags", tags)
 
 
-def scd2_intervals(
-    updates: DataFrame,
-    key_col: str = "conv_id",
-    ts_col: str = "cfg_ts",
-    seq_col: str = "cfg_seq",
-    state_col: str = "cfg_state",
-) -> DataFrame:
+def scd2_intervals(updates: DataFrame) -> DataFrame:
     """Slowly-changing-dimension type-2 build: turn an update STREAM
     (key, ts, state) into validity INTERVALS (key, state, valid_from,
     valid_to, version, is_current) — valid_to = the next update's ts,
@@ -170,12 +161,12 @@ def scd2_intervals(
     """
     from pyspark.sql.window import Window
 
-    w = Window.partitionBy(key_col).orderBy(ts_col, seq_col)
+    w = Window.partitionBy("conv_id").orderBy("cfg_ts", "cfg_seq")
     return updates.select(
-        key_col,
-        F.col(state_col).alias("state"),
-        F.col(ts_col).alias("valid_from"),
-        F.lead(F.col(ts_col)).over(w).alias("valid_to"),
+        "conv_id",
+        F.col("cfg_state").alias("state"),
+        F.col("cfg_ts").alias("valid_from"),
+        F.lead(F.col("cfg_ts")).over(w).alias("valid_to"),
         F.row_number().over(w).alias("version"),
-        F.lead(F.col(ts_col)).over(w).isNull().alias("is_current"),
+        F.lead(F.col("cfg_ts")).over(w).isNull().alias("is_current"),
     )

@@ -125,7 +125,6 @@ def symspell_pairs(
     docs: DataFrame,
     max_dist: int = 1,
     key_len: int = 24,
-    text_col: str = "text",
     bucket_cap: int | None = None,
 ) -> DataFrame:
     """All doc pairs whose canonical keys are within Levenshtein
@@ -150,7 +149,7 @@ def symspell_pairs(
             f"symspell_pairs: max_dist={max_dist} out of range [1, 2]"
         )
     keys = docs.select(
-        "doc_id", canonical_key(F.col(text_col), key_len).alias("key")
+        "doc_id", canonical_key(F.col("text"), key_len).alias("key")
     )
     variants = keys.select(
         "doc_id",
@@ -237,15 +236,13 @@ def sorted_neighborhood_pairs(
     docs: DataFrame,
     window: int = 4,
     max_dist: int = 2,
-    key_len: int = 24,
-    text_col: str = "text",
 ) -> DataFrame:
     """Sorted-neighborhood blocking (Hernandez & Stolfo 1995) — the
     OTHER classic record-linkage blocking, complementing
     symspell_pairs: sort the corpus by canonical key, compare each
     record only to its `window` successors in sort order, verify
     with exact levenshtein. Where the delete neighborhood gives
-    TOTAL recall at distance <= d for O(key_len) index rows per doc,
+    TOTAL recall at distance <= d for O(key length) index rows per doc,
     sorted-neighborhood gives O(window) candidates per doc at ANY
     distance cutoff — the cheap wide-net pass (typos in the first
     characters sort far apart and are missed; that trade is the
@@ -270,7 +267,7 @@ def sorted_neighborhood_pairs(
     if window < 1:
         raise ValueError(f"sorted_neighborhood_pairs: window={window} < 1")
     keys = docs.select(
-        "doc_id", canonical_key(F.col(text_col), key_len).alias("key")
+        "doc_id", canonical_key(F.col("text")).alias("key")
     )
     keyed = keys.select(
         "doc_id", "key", F.substring("key", 1, 2).alias("_bkt")

@@ -216,10 +216,13 @@ def _parse_wav(b: bytes) -> tuple[int, int, int, bytes]:
     return sr, channels, bits, data
 
 
-def audio_chunks(
-    media: DataFrame, chunk_bytes: int = 32, max_chunks: int = 8
-) -> DataFrame:
-    """Fixed-size chunking + per-chunk features for WAV payloads —
+AUDIO_CHUNK_BYTES = 32
+AUDIO_MAX_CHUNKS = 8
+
+
+def audio_chunks(media: DataFrame) -> DataFrame:
+    """Fixed-size chunking (at most AUDIO_MAX_CHUNKS chunks of
+    AUDIO_CHUNK_BYTES) + per-chunk features for WAV payloads —
     parses the real RIFF chunk list for sample rate / width, then
     windows the real PCM data bytes.  rms_proxy = mean byte value of
     the chunk (stands in for spectral features; a pure function of
@@ -240,17 +243,19 @@ def audio_chunks(
                 n_samples = len(data) // (channels * bits // 8)
                 duration_us = n_samples * 1_000_000 // sr
                 n = min(
-                    max_chunks,
-                    max((len(data) + chunk_bytes - 1) // chunk_bytes, 1),
+                    AUDIO_MAX_CHUNKS,
+                    max((len(data) + AUDIO_CHUNK_BYTES - 1)
+                        // AUDIO_CHUNK_BYTES, 1),
                 )
                 for i in range(n):
-                    seg = data[i * chunk_bytes:(i + 1) * chunk_bytes]
+                    seg = data[i * AUDIO_CHUNK_BYTES:
+                               (i + 1) * AUDIO_CHUNK_BYTES]
                     rows["doc_id"].append(doc_id)
                     rows["sample_rate"].append(sr)
                     rows["n_samples"].append(n_samples)
                     rows["duration_us"].append(duration_us)
                     rows["chunk_idx"].append(i)
-                    rows["start_byte"].append(i * chunk_bytes)
+                    rows["start_byte"].append(i * AUDIO_CHUNK_BYTES)
                     rows["n_bytes"].append(len(seg))
                     rows["rms_proxy"].append(
                         round(sum(seg) / len(seg), 6) if seg else 0.0
@@ -516,16 +521,17 @@ SCENE_CUT_SCHEMA = (
     "doc_id long, frame_idx int, luma_milli long, delta_milli long, "
     "is_cut boolean"
 )
+SCENE_CUT_MILLI = 4000
 
 
-def scene_cuts(media: DataFrame, threshold_milli: int = 4000) -> DataFrame:
+def scene_cuts(media: DataFrame) -> DataFrame:
     """Scene-cut detection over Y4M payloads — the shot-boundary
     pass a video curation pipeline runs before frame dedup / caption
     alignment (split at cuts, sample within shots). The detector is
     the classic mean-luma difference: per frame, the Y-plane mean in
     integer MILLI units (1000 * sum(Y bytes) div (w*h) — the Y plane
     is the first w*h bytes of each 4:2:0 frame); a cut is flagged
-    where |mean_f - mean_{f-1}| > threshold_milli. All-integer, so
+    where |mean_f - mean_{f-1}| > SCENE_CUT_MILLI. All-integer, so
     the DuckDB twin (which recomputes the lumas from the cycled-text
     pixel stream the synthesiser embeds) matches hash-exactly.
 
@@ -571,7 +577,7 @@ def scene_cuts(media: DataFrame, threshold_milli: int = 4000) -> DataFrame:
                     rows["luma_milli"].append(luma)
                     rows["delta_milli"].append(delta)
                     rows["is_cut"].append(
-                        delta is not None and delta > threshold_milli
+                        delta is not None and delta > SCENE_CUT_MILLI
                     )
                     prev = luma
             yield pd.DataFrame(rows)

@@ -40,7 +40,7 @@ PII_RULES: list[tuple[str, str, str]] = [
 ]
 
 
-def attach_pii(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def attach_pii(docs: DataFrame) -> DataFrame:
     """Deterministically plant PII spans derived from doc_id.
 
     Independent modulus classes so some docs carry several kinds and
@@ -81,7 +81,7 @@ def attach_pii(docs: DataFrame, text_col: str = "text") -> DataFrame:
             ),
         ),
     ]
-    text = F.col(text_col)
+    text = F.col("text")
     for cond, span in spans:
         text = F.concat(text, F.when(cond, span).otherwise(F.lit("")))
     return docs.withColumn("pii_text", text)
@@ -113,14 +113,13 @@ def pseudonymize(
     df: DataFrame,
     cols: list[str],
     salt: str = "p1",
-    prefix: str = "p_",
 ) -> DataFrame:
     """Keyed pseudonymization of identifier columns — the privacy
     pass between pii_scrub (free-text redaction) and k_anon_audit
     (cohort-size verification): replace each identifier with a
     STABLE salted token so datasets remain joinable and group-by
     analytics keep working, while the raw identifier never leaves
-    the engine. token = prefix + first 16 hex chars of
+    the engine. token = 'p_' + first 16 hex chars of
     md5(salt || \\x01 || value): deterministic under a fixed salt
     (the join key survives across tables pseudonymized with the
     same salt), rotated wholesale by rotating the salt — the
@@ -139,7 +138,7 @@ def pseudonymize(
     out = df
     for c in cols:
         tok = F.concat(
-            F.lit(prefix),
+            F.lit("p_"),
             F.substring(
                 F.md5(
                     F.concat(

@@ -40,14 +40,12 @@ def range_join_binned(
     intervals: DataFrame,
     keys: list[str],
     point_ts: str = "ts",
-    start_col: str = "start_ts",
-    end_col: str = "end_ts",
     bin_sec: int = 3600,
     max_bins_per_interval: int = 1024,
     how: str = "inner",
 ) -> DataFrame:
     """Join each point row to every interval row (same `keys`) whose
-    [start_col, end_col] contains point_ts; inclusive both ends.
+    [start_ts, end_ts] contains point_ts; inclusive both ends.
     `how` is "inner" or "left" (left keeps unmatched points with
     NULL interval columns).
     """
@@ -69,8 +67,8 @@ def range_join_binned(
         # binning needs
         return F.col(c).cast("timestamp_ltz").cast("long")
 
-    s_bin = F.floor(_epoch(start_col) / bin_sec)
-    e_bin = F.floor(_epoch(end_col) / bin_sec)
+    s_bin = F.floor(_epoch("start_ts") / bin_sec)
+    e_bin = F.floor(_epoch("end_ts") / bin_sec)
     n_bins = e_bin - s_bin + F.lit(1)
     guarded = F.when(
         n_bins > max_bins_per_interval,
@@ -81,9 +79,9 @@ def range_join_binned(
                     f"{max_bins_per_interval} bins of {bin_sec}s — raise "
                     "bin_sec or split the interval: "
                 ),
-                F.col(start_col).cast("string"),
+                F.col("start_ts").cast("string"),
                 F.lit(" .. "),
-                F.col(end_col).cast("string"),
+                F.col("end_ts").cast("string"),
             )
         ).cast("long"),
     ).otherwise(s_bin)
@@ -96,8 +94,8 @@ def range_join_binned(
     cond = [binned_points[k] == binned_intervals[k] for k in keys] + [
         binned_points["_bin"] == binned_intervals["_bin"]
     ]
-    exact = (F.col(point_ts) >= F.col(start_col)) & (
-        F.col(point_ts) <= F.col(end_col)
+    exact = (F.col(point_ts) >= F.col("start_ts")) & (
+        F.col(point_ts) <= F.col("end_ts")
     )
     ival_cols = [c for c in intervals.columns if c not in keys]
     matched = (

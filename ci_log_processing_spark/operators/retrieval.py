@@ -43,16 +43,11 @@ from pyspark.sql.window import Window
 from .dedup import _register_persist, tokens_col
 
 
-def bm25_topk(
-    docs: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-    max_df_frac: float | None = None,
-    text_col: str = "text",
-    exclude_self: bool = True,
-) -> DataFrame:
+BM25_K1 = 1.2
+BM25_B = 0.75
+
+
+def bm25_topk(docs: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """Top-k BM25 matches per query document.
 
     `queries` carries (doc_id, text) — typically a filtered slice of
@@ -62,6 +57,9 @@ def bm25_topk(
         idf_bits = length(bin(N)) - length(bin(df))
         norm     = tf + k1*(1 - b + b*(dl/avgdl))    [pinned order]
         s_milli  = floor(1000 * idf_bits * (tf*(k1+1)) / norm)
+
+    with the textbook k1 = BM25_K1 = 1.2 and b = BM25_B = 0.75. A
+    query never matches its own doc_id.
 
     and score_milli = sum(s_milli) over matched terms. Query term
     frequency is intentionally ignored (distinct query terms), the
@@ -73,7 +71,7 @@ def bm25_topk(
     if k < 1:
         raise ValueError("bm25_topk: k must be >= 1")
     toks = docs.select(
-        "doc_id", F.explode(tokens_col(F.col(text_col))).alias("term")
+        "doc_id", F.explode(tokens_col(F.col("text"))).alias("term")
     )
     tf = _register_persist(
         toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
@@ -82,18 +80,14 @@ def bm25_topk(
     # df(term) = count(*) — vocabulary-sized, never corpus-sized
     df = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n_docs = docs.select(F.count(F.lit(1)).alias("n_docs"))
-    if max_df_frac is not None:
-        df = df.crossJoin(F.broadcast(n_docs)).filter(
-            F.col("df") <= F.lit(float(max_df_frac)) * F.col("n_docs")
-        ).select("term", "df")
     doclen = docs.select(
-        "doc_id", F.size(tokens_col(F.col(text_col))).alias("dl")
+        "doc_id", F.size(tokens_col(F.col("text"))).alias("dl")
     )
     total = doclen.select(F.sum("dl").alias("t_total"))
     qterms = queries.select(
         F.col("doc_id").alias("qid"),
         F.explode(
-            F.array_distinct(tokens_col(F.col(text_col)))
+            F.array_distinct(tokens_col(F.col("text")))
         ).alias("term"),
     )
     cand = (
@@ -103,21 +97,20 @@ def bm25_topk(
         .crossJoin(F.broadcast(n_docs))
         .crossJoin(F.broadcast(total))
     )
-    if exclude_self:
-        cand = cand.filter(F.col("qid") != F.col("doc_id"))
+    cand = cand.filter(F.col("qid") != F.col("doc_id"))
     idf_bits = F.length(F.bin(F.col("n_docs"))) - F.length(
         F.bin(F.col("df"))
     )
     # pinned-order IEEE chain — the oracle SQL parenthesizes
     # identically: avgdl division first, then the norm ladder
     avgdl = F.col("t_total") / F.col("n_docs")
-    norm = F.col("tf") + F.lit(float(k1)) * (
-        F.lit(1.0 - float(b)) + F.lit(float(b)) * (F.col("dl") / avgdl)
+    norm = F.col("tf") + F.lit(BM25_K1) * (
+        F.lit(1.0 - BM25_B) + F.lit(BM25_B) * (F.col("dl") / avgdl)
     )
     s_milli = F.floor(
         F.lit(1000.0)
         * idf_bits
-        * (F.col("tf") * F.lit(float(k1) + 1.0))
+        * (F.col("tf") * F.lit(BM25_K1 + 1.0))
         / norm
     )
     scored = (
@@ -142,8 +135,6 @@ def inverted_index(
     docs: DataFrame,
     min_df: int = 1,
     max_df: int = 64,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Positional inverted-index construction: term -> serialized
     posting list "doc:p1,p2|doc:p3" with 1-based token positions —
@@ -180,17 +171,13 @@ def inverted_index(
     Output: (term, df, n_occurrences, postings).
     """
     return finalize_index(
-        posting_rows(docs, text_col=text_col, id_col=id_col),
+        posting_rows(docs),
         min_df=min_df,
         max_df=max_df,
     )
 
 
-def posting_rows(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def posting_rows(docs: DataFrame) -> DataFrame:
     """The (term, doc) posting GRAIN of the inverted index — the
     mergeable intermediate: positions are doc-local, so posting rows
     from DOC-DISJOINT batches are disjoint and index maintenance is
@@ -201,8 +188,8 @@ def posting_rows(
     Output: (term, doc_id, _plist sorted positions, _n_occ).
     """
     pos = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(F.split(F.lower(F.col(text_col)), " ")).alias(
+        "doc_id",
+        F.posexplode(F.split(F.lower(F.col("text")), " ")).alias(
             "_p0", "term"
         ),
     ).select("doc_id", "term", (F.col("_p0") + 1).alias("pos"))

@@ -41,8 +41,8 @@ def _norm(a: Column) -> Column:
     )
 
 
-def cosine_col(a: Column, b: Column, decimals: int = 5) -> Column:
-    return F.round(_dot(a, b) / (_norm(a) * _norm(b)), decimals)
+def cosine_col(a: Column, b: Column) -> Column:
+    return F.round(_dot(a, b) / (_norm(a) * _norm(b)), 5)
 
 
 def brute_force_topk(
@@ -78,7 +78,7 @@ def brute_force_topk(
 
 
 def bucketed_ann_topk(
-    emb: DataFrame, queries: DataFrame, k: int = 10, bucket_col: str = "label"
+    emb: DataFrame, queries: DataFrame, k: int = 10
 ) -> DataFrame:
     """IVF-style ANN: probe only the query's own coarse bucket.
 
@@ -92,11 +92,11 @@ def bucketed_ann_topk(
     q = queries.select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
-        F.col(bucket_col).alias("q_bucket"),
+        F.col("label").alias("q_bucket"),
     )
     scored = (
         emb.join(
-            F.broadcast(q), emb[bucket_col] == q["q_bucket"], "inner"
+            F.broadcast(q), emb["label"] == q["q_bucket"], "inner"
         )
         .filter(F.col("vec_id") != F.col("query_id"))
         .select(
@@ -114,9 +114,7 @@ def bucketed_ann_topk(
     )
 
 
-def bucket_centroids(
-    emb: DataFrame, bucket_col: str = "label"
-) -> DataFrame:
+def bucket_centroids(emb: DataFrame) -> DataFrame:
     """Element-wise MEDIAN centroid per coarse bucket.
 
     Median (exact percentile 0.5), not mean, deliberately: a mean's
@@ -129,7 +127,7 @@ def bucket_centroids(
     over the dim table — tiny next to the corpus.
     """
     pos = emb.select(
-        F.col(bucket_col).alias("bkt"),
+        F.col("label").alias("bkt"),
         F.posexplode("embedding").alias("pos", "v"),
     )
     cent = pos.groupBy("bkt", "pos").agg(
@@ -148,7 +146,6 @@ def ivf_multiprobe_topk(
     queries: DataFrame,
     k: int = 10,
     nprobe: int = 2,
-    bucket_col: str = "label",
 ) -> DataFrame:
     """True IVF search: rank bucket centroids per query, probe the
     nprobe nearest buckets, exact top-k inside the probed set.
@@ -162,7 +159,7 @@ def ivf_multiprobe_topk(
     """
     from pyspark.sql.window import Window
 
-    cents = bucket_centroids(emb, bucket_col)
+    cents = bucket_centroids(emb)
     q = queries.select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
     )
@@ -187,7 +184,7 @@ def ivf_multiprobe_topk(
     )
     scored = (
         emb.join(
-            F.broadcast(ranked), emb[bucket_col] == ranked["bkt"], "inner"
+            F.broadcast(ranked), emb["label"] == ranked["bkt"], "inner"
         )
         .filter(F.col("vec_id") != F.col("query_id"))
         .select(
@@ -278,7 +275,7 @@ def embedding_near_dup_pairs_capped(
 
 
 def embedding_near_dup_pairs(
-    emb: DataFrame, threshold: float = 0.95, bucket_col: str = "label"
+    emb: DataFrame, threshold: float = 0.95
 ) -> DataFrame:
     """Near-duplicate vector pairs within coarse buckets.
 
@@ -288,7 +285,7 @@ def embedding_near_dup_pairs(
     see embedding_near_dup_pairs_capped.
     """
     keyed = emb.select(
-        F.col(bucket_col).alias("bkt"), "vec_id", "embedding"
+        F.col("label").alias("bkt"), "vec_id", "embedding"
     )
     return _bucket_pair_join(keyed, ["bkt"], threshold)
 
@@ -325,9 +322,6 @@ def srp_near_dup_pairs(
     n_bits: int = 24,
     bands: int = 8,
     bucket_cap: int | None = None,
-    seed: str = "srp",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Embedding near-dup pairs via signed-random-projection LSH —
     the cosine-metric sibling of minhash-LSH (Jaccard) and simhash
@@ -368,15 +362,15 @@ def srp_near_dup_pairs(
             f"srp_near_dup_pairs: bands={bands} must divide n_bits={n_bits}"
         )
     rpb = n_bits // bands
-    dim = len(emb.select(vec_col).first()[0])
-    planes = srp_planes(n_bits, dim, seed)
+    dim = len(emb.select("embedding").first()[0])
+    planes = srp_planes(n_bits, dim)
 
     def bit(p: int) -> Column:
         lit = F.array(*[F.lit(v) for v in planes[p]])
         dot = F.round(
             F.aggregate(
                 F.zip_with(
-                    F.col(vec_col),
+                    F.col("embedding"),
                     lit,
                     lambda x, y: x.cast("double") * y,
                 ),
@@ -388,8 +382,8 @@ def srp_near_dup_pairs(
         return F.when(dot >= 0, F.lit("1")).otherwise(F.lit("0"))
 
     sig = emb.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("embedding"),
+        "vec_id",
+        "embedding",
         *[bit(p).alias(f"b{p}") for p in range(n_bits)],
     )
     band_structs = F.array(
@@ -614,15 +608,7 @@ def ivfpq_ann_topk(
     )
 
 
-def contrastive_triplets(
-    emb: DataFrame,
-    t_pos: float = 0.35,
-    n_bits: int = 24,
-    bands: int = 8,
-    seed: str = "srp",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def contrastive_triplets(emb: DataFrame, t_pos: float = 0.35) -> DataFrame:
     """Mine (anchor, positive, hard-negative) training triplets for
     contrastive embedding training: per anchor, the BEST positive
     (highest cosine >= t_pos) and the HARDEST negative (highest
@@ -650,15 +636,7 @@ def contrastive_triplets(
     """
     from pyspark.sql.window import Window
 
-    cand = srp_near_dup_pairs(
-        emb,
-        threshold=-1.0,
-        n_bits=n_bits,
-        bands=bands,
-        seed=seed,
-        id_col=id_col,
-        vec_col=vec_col,
-    )
+    cand = srp_near_dup_pairs(emb, threshold=-1.0)
     both = cand.select(
         F.col("vec_a").alias("anchor_id"),
         F.col("vec_b").alias("other_id"),
@@ -736,8 +714,6 @@ def kmeans_fit(
     emb: DataFrame,
     k: int = 8,
     n_iter: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     keep_vec: bool = False,
 ) -> DataFrame:
     """Deterministic K-MEDIANS (Lloyd) fit — the "train the coarse
@@ -762,17 +738,17 @@ def kmeans_fit(
     aggregate — the same partial+final shape as bucket_centroids.
     Total: n_iter scans, n_iter aggregates, no joins.
 
-    Returns the final assignment: (id_col, bkt, dist).
+    Returns the final assignment: (vec_id, bkt, dist).
     """
-    cents = kmeans_centroids(emb, k, n_iter, id_col=id_col, vec_col=vec_col)
-    best = _argmin_centroid(F.col(vec_col), cents)
+    cents = kmeans_centroids(emb, k, n_iter)
+    best = _argmin_centroid(F.col("embedding"), cents)
     out = emb.select(
-        id_col,
-        vec_col,
+        "vec_id",
+        "embedding",
         best["b"].alias("bkt"),
         best["d"].alias("dist"),
     )
-    return out if keep_vec else out.drop(vec_col)
+    return out if keep_vec else out.drop("embedding")
 
 
 def kmeans_centroids(
@@ -829,8 +805,6 @@ def semantic_cluster_dedup(
     k: int = 8,
     n_iter: int = 2,
     threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     bucket_cap: int | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023):
@@ -856,17 +830,10 @@ def semantic_cluster_dedup(
     cost at ~cap^2. The loser set joins back on the id key — a hash
     join AQE converts to broadcast when duplicates are rare.
 
-    Output: (id_col, bkt, dist, is_kept) — one row per input vector.
+    Output: (vec_id, bkt, dist, is_kept) — one row per input vector.
     """
-    assigned = kmeans_fit(
-        emb, k, n_iter, id_col=id_col, vec_col=vec_col, keep_vec=True
-    )
-    # the shared pair tail expects (vec_id, embedding) names
-    keyed = assigned.select(
-        "bkt",
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("embedding"),
-    )
+    assigned = kmeans_fit(emb, k, n_iter, keep_vec=True)
+    keyed = assigned.select("bkt", "vec_id", "embedding")
     if bucket_cap is None:
         pairs = _bucket_pair_join(keyed, ["bkt"], threshold)
     else:
@@ -874,15 +841,15 @@ def semantic_cluster_dedup(
             keyed, threshold, bucket_col="bkt", bucket_cap=bucket_cap
         )
     losers = (
-        pairs.select(F.col("vec_b").alias(id_col))
+        pairs.select(F.col("vec_b").alias("vec_id"))
         .distinct()
         .withColumn("_dup", F.lit(1))
     )
     return (
-        assigned.drop(vec_col)
-        .join(losers, id_col, "left")
+        assigned.drop("embedding")
+        .join(losers, "vec_id", "left")
         .select(
-            id_col,
+            "vec_id",
             "bkt",
             "dist",
             F.col("_dup").isNull().alias("is_kept"),
@@ -896,8 +863,6 @@ def knn_graph(
     k_clusters: int = 8,
     n_iter: int = 2,
     nprobe: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate k-nearest-neighbor GRAPH over the corpus
     embeddings — the adjacency every graph-based curation step
@@ -937,15 +902,13 @@ def knn_graph(
         raise ValueError("knn_graph: 1 <= nprobe <= k_clusters required")
     from pyspark.sql.window import Window
 
-    cents = kmeans_centroids(
-        emb, k_clusters, n_iter, id_col=id_col, vec_col=vec_col
-    )
-    best = _argmin_centroid(F.col(vec_col), cents)
+    cents = kmeans_centroids(emb, k_clusters, n_iter)
+    best = _argmin_centroid(F.col("embedding"), cents)
     b = emb.select(
         best["b"].alias("bkt"),
-        F.col(id_col).alias("nbr"),
-        F.col(vec_col).alias("vb"),
-        _norm(F.col(vec_col)).alias("nb"),
+        F.col("vec_id").alias("nbr"),
+        F.col("embedding").alias("vb"),
+        _norm(F.col("embedding")).alias("nb"),
     )
     # source side: the nprobe nearest cells = first nprobe entries of
     # the (d, b)-sorted centroid struct array (nprobe=1 == argmin)
@@ -958,7 +921,7 @@ def knn_graph(
                     F.round(
                         F.aggregate(
                             F.zip_with(
-                                F.col(vec_col),
+                                F.col("embedding"),
                                 F.element_at(cl, j + 1),
                                 lambda x, y: (x.cast("double") - y)
                                 * (x.cast("double") - y),
@@ -976,9 +939,9 @@ def knn_graph(
         nprobe,
     )
     a = emb.select(
-        F.col(id_col).alias("src"),
-        F.col(vec_col).alias("va"),
-        _norm(F.col(vec_col)).alias("na"),
+        F.col("vec_id").alias("src"),
+        F.col("embedding").alias("va"),
+        _norm(F.col("embedding")).alias("na"),
         F.explode(F.transform(ranked, lambda s: s["b"])).alias("bkt"),
     )
     scored = (
@@ -1001,7 +964,7 @@ def knn_graph(
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k_nn)
         .select(
-            F.col("src").alias(id_col),
+            F.col("src").alias("vec_id"),
             F.col("nbr").alias("nbr_id"),
             "rank",
             "cos_sim",
@@ -1009,12 +972,7 @@ def knn_graph(
     )
 
 
-def embedding_diversity(
-    emb: DataFrame,
-    group_col: str = "label",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def embedding_diversity(emb: DataFrame) -> DataFrame:
     """Per-group semantic-diversity audit over an embedding column —
     the number a curation pipeline reads before deciding how hard to
     dedup or downsample a source (SemDeDup, Abbas et al. 2023, cuts
@@ -1043,27 +1001,27 @@ def embedding_diversity(
     cross-engine convention as cosine_col; summation-order ulp skew
     is absorbed by the rounding.
     """
-    v = F.col(vec_col)
+    v = F.col("embedding")
     sq = F.aggregate(
         F.transform(v, lambda x: x.cast("double") * x.cast("double")),
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-    norms = emb.groupBy(group_col).agg(
+    norms = emb.groupBy("label").agg(
         F.count(F.lit(1)).alias("n"), F.sum(sq).alias("_s2")
     )
     dims = (
-        emb.select(group_col, F.posexplode(v).alias("_pos", "_val"))
-        .groupBy(group_col, "_pos")
+        emb.select("label", F.posexplode(v).alias("_pos", "_val"))
+        .groupBy("label", "_pos")
         .agg(F.sum(F.col("_val").cast("double")).alias("_sv"))
-        .groupBy(group_col)
+        .groupBy("label")
         .agg(F.sum(F.col("_sv") * F.col("_sv")).alias("_q"))
     )
     n = F.col("n")
     return (
-        norms.join(dims, group_col)
+        norms.join(dims, "label")
         .select(
-            group_col,
+            "label",
             "n",
             F.round(F.col("_s2") / n, 5).alias("mean_sq_norm"),
             F.round(F.col("_q") / (n * n), 5).alias("centroid_sq_norm"),
@@ -1275,12 +1233,7 @@ def pq_ann_topk(
     )
 
 
-def snapshot_drift(
-    emb_a: DataFrame,
-    emb_b: DataFrame,
-    group_col: str = "label",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def snapshot_drift(emb_a: DataFrame, emb_b: DataFrame) -> DataFrame:
     """Per-group embedding DISTRIBUTION-SHIFT audit between two
     corpus snapshots — the monitoring table a continuously-ingesting
     training pipeline reads to catch a source drifting (crawl policy
@@ -1310,11 +1263,11 @@ def snapshot_drift(
     per group with rows in both snapshots (drift is undefined
     one-sided).
     """
-    v = F.col(vec_col)
+    v = F.col("embedding")
 
     def _tag(df: DataFrame, is_a: bool) -> DataFrame:
         return df.select(
-            F.col(group_col),
+            F.col("label"),
             F.lit(is_a).alias("_a"),
             F.posexplode(
                 F.transform(v, lambda x: x.cast("double"))
@@ -1324,7 +1277,7 @@ def snapshot_drift(
     dims = (
         _tag(emb_a, True)
         .unionAll(_tag(emb_b, False))
-        .groupBy(group_col, "_pos")
+        .groupBy("label", "_pos")
         .agg(
             F.sum(F.when(F.col("_a"), F.col("_val"))).alias("sa"),
             F.sum(F.when(~F.col("_a"), F.col("_val"))).alias("sb"),
@@ -1336,7 +1289,7 @@ def snapshot_drift(
     )
     ca = F.col("sa") / F.col("na").cast("double")
     cb = F.col("sb") / F.col("nb").cast("double")
-    cent = dims.groupBy(group_col).agg(
+    cent = dims.groupBy("label").agg(
         F.max("na").alias("n_a"),
         F.max("nb").alias("n_b"),
         F.sum(ca * cb).alias("_dot"),
@@ -1345,7 +1298,7 @@ def snapshot_drift(
         F.sum((ca - cb) * (ca - cb)).alias("_d2"),
     )
     return cent.filter((F.col("n_a") > 0) & (F.col("n_b") > 0)).select(
-        group_col,
+        "label",
         "n_a",
         "n_b",
         F.round(
@@ -1355,12 +1308,7 @@ def snapshot_drift(
     )
 
 
-def kcenter_select(
-    emb: DataFrame,
-    k: int = 6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def kcenter_select(emb: DataFrame, k: int = 6) -> DataFrame:
     """Greedy k-center coreset selection (farthest-point traversal,
     Gonzalez 1985) — the diversity-maximizing data-selection pass:
     pick the vector farthest from everything picked so far, k times.
@@ -1387,26 +1335,26 @@ def kcenter_select(
     """
     if k < 1:
         raise ValueError(f"kcenter_select: k={k} < 1")
-    base = emb.select(id_col, vec_col)
-    seed = base.orderBy(F.col(id_col)).limit(1).collect()
+    base = emb.select("vec_id", "embedding")
+    seed = base.orderBy(F.col("vec_id")).limit(1).collect()
     if not seed:
         raise ValueError("kcenter_select: empty input")
-    chosen = [(0, seed[0][id_col], None)]
-    cents = [list(seed[0][vec_col])]
+    chosen = [(0, seed[0]["vec_id"], None)]
+    cents = [list(seed[0]["embedding"])]
     for r in range(1, k):
-        best = _argmin_centroid(F.col(vec_col), cents)
+        best = _argmin_centroid(F.col("embedding"), cents)
         far = (
             base.select(
-                F.col(id_col).alias("_id"),
+                F.col("vec_id").alias("_id"),
                 best["d"].alias("_d"),
-                vec_col,
+                "embedding",
             )
             .orderBy(F.desc("_d"), F.asc("_id"))
             .limit(1)
             .collect()[0]
         )
         chosen.append((r, far["_id"], float(far["_d"])))
-        cents.append(list(far[vec_col]))
+        cents.append(list(far["embedding"]))
     return emb.sparkSession.createDataFrame(
         chosen, "round_idx int, vec_id long, radius double"
     )

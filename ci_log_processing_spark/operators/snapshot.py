@@ -50,12 +50,7 @@ def derive_snapshot_b(docs: DataFrame) -> DataFrame:
     return mutated.select(*docs.columns).unionByName(added)
 
 
-def corpus_diff(
-    a: DataFrame,
-    b: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def corpus_diff(a: DataFrame, b: DataFrame) -> DataFrame:
     """Per-document delta between corpus snapshots A and B.
 
     Output: (doc_id, status) with status in
@@ -67,15 +62,15 @@ def corpus_diff(
     join so raw text never crosses the exchange.
     """
     ha = a.select(
-        F.col(id_col),
-        F.md5(F.col(text_col).cast("binary")).alias("_ha"),
+        F.col("doc_id"),
+        F.md5(F.col("text").cast("binary")).alias("_ha"),
     )
     hb = b.select(
-        F.col(id_col),
-        F.md5(F.col(text_col).cast("binary")).alias("_hb"),
+        F.col("doc_id"),
+        F.md5(F.col("text").cast("binary")).alias("_hb"),
     )
-    return ha.join(hb, id_col, "full_outer").select(
-        id_col,
+    return ha.join(hb, "doc_id", "full_outer").select(
+        "doc_id",
         F.when(F.col("_ha").isNull(), F.lit("added"))
         .when(F.col("_hb").isNull(), F.lit("removed"))
         .when(F.col("_ha") != F.col("_hb"), F.lit("changed"))
@@ -84,13 +79,7 @@ def corpus_diff(
     )
 
 
-def apply_cdc(
-    base: DataFrame,
-    changes: DataFrame,
-    id_col: str = "doc_id",
-    op_col: str = "op",
-    seq_col: str = "seq",
-) -> DataFrame:
+def apply_cdc(base: DataFrame, changes: DataFrame) -> DataFrame:
     """MERGE/upsert application — the lakehouse write path corpus_diff
     is the read path of: apply a CDC change set (op = 'I' insert,
     'U' update, 'D' delete, with a monotone per-key sequence) onto a
@@ -117,20 +106,20 @@ def apply_cdc(
     """
     from pyspark.sql.window import Window
 
-    payload_cols = [c for c in base.columns if c != id_col]
-    w = Window.partitionBy(id_col).orderBy(F.col(seq_col).desc())
+    payload_cols = [c for c in base.columns if c != "doc_id"]
+    w = Window.partitionBy("doc_id").orderBy(F.col("seq").desc())
     last = (
         changes.select(
-            id_col, op_col, seq_col, *payload_cols
+            "doc_id", "op", "seq", *payload_cols
         )
         .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
-    touched = last.select(id_col)
-    kept = base.join(touched, id_col, "left_anti")
-    applied = last.filter(F.col(op_col) != "D").select(
-        id_col, *payload_cols
+    touched = last.select("doc_id")
+    kept = base.join(touched, "doc_id", "left_anti")
+    applied = last.filter(F.col("op") != "D").select(
+        "doc_id", *payload_cols
     )
     return kept.unionByName(applied)
 
@@ -139,9 +128,6 @@ def snapshot_asof(
     base: DataFrame,
     changes: DataFrame,
     as_of_seq: int,
-    id_col: str = "doc_id",
-    op_col: str = "op",
-    seq_col: str = "seq",
 ) -> DataFrame:
     """Time-travel read: reconstruct the snapshot AS OF a sequence
     number by replaying only the change-set prefix `seq <=
@@ -154,18 +140,12 @@ def snapshot_asof(
     """
     return apply_cdc(
         base,
-        changes.filter(F.col(seq_col) <= int(as_of_seq)),
-        id_col=id_col,
-        op_col=op_col,
-        seq_col=seq_col,
+        changes.filter(F.col("seq") <= int(as_of_seq)),
     )
 
 
 def compaction_plan(
     files: DataFrame,
-    part_col: str = "source",
-    id_col: str = "doc_id",
-    size_col: str = "n_chars",
     target_bytes: int = 64 * 1024,
 ) -> DataFrame:
     """Small-file compaction planner — which files to rewrite
@@ -188,17 +168,17 @@ def compaction_plan(
     from pyspark.sql.window import Window
 
     w = (
-        Window.partitionBy(part_col)
-        .orderBy(id_col)
+        Window.partitionBy("source")
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     # integer `div`, not float floor: cumulative byte counts reach
     # 2^50+ at fleet scale, past double's exact range
     return files.select(
-        F.col(part_col).alias("part"),
-        F.col(id_col).alias("file_id"),
-        F.col(size_col).alias("bytes"),
-        F.coalesce(F.sum(size_col).over(w), F.lit(0)).alias(
+        F.col("source").alias("part"),
+        F.col("doc_id").alias("file_id"),
+        F.col("n_chars").alias("bytes"),
+        F.coalesce(F.sum("n_chars").over(w), F.lit(0)).alias(
             "_cum_before"
         ),
     ).select(

@@ -144,11 +144,7 @@ def make_subunit_parse_udf():
     return parse
 
 
-def parse_subunit_stream(
-    df: DataFrame,
-    payload_col: str = "payload",
-    file_col: str | None = "file_name",
-) -> DataFrame:
+def parse_subunit_stream(df: DataFrame) -> DataFrame:
     """(conv_id, file_name, payload binary) -> one row per parsed
     test: conv_id, test_name, test_status, start_ts, end_ts.
 
@@ -156,18 +152,15 @@ def parse_subunit_stream(
       * P8 broken-file name (BROKEN_FILE, logsender.py:527-529);
       * P9 empty payloads (logsender.py:535-537).
     """
-    if file_col is not None:
-        # NULL-tolerant: plain != would evaluate NULL for a row with
-        # no file name and silently drop a valid payload
-        df = df.filter(
-            F.coalesce(F.col(file_col), F.lit("")) != BROKEN_FILE
-        )
+    # NULL-tolerant: plain != would evaluate NULL for a row with no
+    # file name and silently drop a valid payload
+    df = df.filter(F.coalesce(F.col("file_name"), F.lit("")) != BROKEN_FILE)
     df = df.filter(
-        F.col(payload_col).isNotNull() & (F.length(payload_col) > 0)
+        F.col("payload").isNotNull() & (F.length("payload") > 0)
     )
     parse = make_subunit_parse_udf()
     rows = df.select(
-        "conv_id", F.explode(parse(F.col(payload_col))).alias("t")
+        "conv_id", F.explode(parse(F.col("payload"))).alias("t")
     )
     return rows.select(
         "conv_id",

@@ -34,17 +34,17 @@ def tokens(text: Column) -> Column:
     return F.split(F.lower(text), " ")
 
 
-def token_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    t = tokens(F.col(text_col))
+def token_counts(docs: DataFrame) -> DataFrame:
+    t = tokens(F.col("text"))
     return docs.select(
         "doc_id",
         F.size(t).alias("n_tokens_ws"),
-        F.regexp_count(F.col(text_col), F.lit(BPE_RX)).alias("n_tokens_bpe"),
-        F.length(F.col(text_col)).alias("n_chars_actual"),
+        F.regexp_count(F.col("text"), F.lit(BPE_RX)).alias("n_tokens_bpe"),
+        F.length(F.col("text")).alias("n_chars_actual"),
     )
 
 
-def token_entropy(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def token_entropy(docs: DataFrame) -> DataFrame:
     """Unigram token entropy per document — the low-entropy spam
     filter (repeated-token pages score near 0, natural prose near
     ln(vocab)): H = ln(n) - (Σ c·ln c)/n over per-doc token counts.
@@ -59,7 +59,7 @@ def token_entropy(docs: DataFrame, text_col: str = "text") -> DataFrame:
     cannot matter). Output: (doc_id, n_tok, token_entropy).
     """
     terms = docs.select(
-        "doc_id", F.explode(tokens(F.col(text_col))).alias("term")
+        "doc_id", F.explode(tokens(F.col("text"))).alias("term")
     ).filter(F.col("term") != "")
     tf = terms.groupBy("doc_id", "term").agg(
         F.count(F.lit(1)).alias("c")
@@ -146,10 +146,10 @@ def quality_scores(
     )
 
 
-def lang_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def lang_id(docs: DataFrame) -> DataFrame:
     """Marker-hit language guess; ties break by language code order
     (argmax via array_sort of (−hits, lang) structs)."""
-    t = tokens(F.col(text_col))
+    t = tokens(F.col("text"))
     scores = []
     for lang in sorted(LANG_MARKERS):
         hits = F.size(
@@ -164,12 +164,12 @@ def lang_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def attach_lines(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def attach_lines(docs: DataFrame) -> DataFrame:
     """Plant multi-line structure for the repetition gate query: the
     synthetic documents are single-line, so every doc_id % 4 == 0 is
     doubled with a newline separator (a guaranteed duplicate line).
     Mirrored by the DuckDB oracle (oracle_data.q_repetition)."""
-    t = F.col(text_col)
+    t = F.col("text")
     return docs.withColumn(
         "ltext",
         F.when(
@@ -178,7 +178,7 @@ def attach_lines(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def attach_boilerplate(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def attach_boilerplate(docs: DataFrame) -> DataFrame:
     """Plant CROSS-document repeated lines for the corpus-wide line
     dedup gate query (the synthetic docs are single-line and unique,
     so shared boilerplate must be synthesized): most docs get one of
@@ -186,7 +186,7 @@ def attach_boilerplate(docs: DataFrame, text_col: str = "text") -> DataFrame:
     footer appended, and every doc_id % 97 == 0 is REPLACED by the
     bare footer (an all-boilerplate doc that line dedup must drop
     entirely). Mirrored by oracle_data.q_line_dedup."""
-    t = F.col(text_col)
+    t = F.col("text")
     banner = F.concat(
         F.lit("boilerplate banner "), (F.col("doc_id") % 16).cast("string")
     )
@@ -201,12 +201,7 @@ def attach_boilerplate(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def line_dedup(
-    docs: DataFrame,
-    min_count: int = 3,
-    text_col: str = "btext",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def line_dedup(docs: DataFrame, min_count: int = 3) -> DataFrame:
     """Corpus-wide repeated-LINE removal (the RefinedWeb / CCNet
     boilerplate pass): delete every line whose total occurrence
     count across the corpus is >= min_count, rebuild each document
@@ -226,14 +221,14 @@ def line_dedup(
     broadcast, drop the hint and the same plan runs as a shuffle
     anti-join co-partitioned on the line hash.
 
-    Output: (id_col, n_lines, n_kept, clean_text), only docs with
+    Output: (doc_id, n_lines, n_kept, clean_text), only docs with
     n_kept >= 1.
     """
     if min_count < 2:
         raise ValueError("line_dedup: min_count must be >= 2")
-    split = F.split(F.col(text_col), "\n")
+    split = F.split(F.col("btext"), "\n")
     lines = docs.select(
-        id_col,
+        "doc_id",
         F.size(split).alias("n_lines"),
         F.posexplode(split).alias("pos", "line"),
     ).withColumn("_h", F.md5(F.col("line").cast("binary")))
@@ -244,7 +239,7 @@ def line_dedup(
         .select("_h")
     )
     kept = lines.join(F.broadcast(hot), "_h", "left_anti")
-    return kept.groupBy(id_col).agg(
+    return kept.groupBy("doc_id").agg(
         F.max("n_lines").alias("n_lines"),
         F.count(F.lit(1)).alias("n_kept"),
         F.array_join(
@@ -257,7 +252,7 @@ def line_dedup(
     )
 
 
-def repetition_stats(docs: DataFrame, text_col: str = "ltext") -> DataFrame:
+def repetition_stats(docs: DataFrame) -> DataFrame:
     """Gopher-style repetition filters (Rae et al. 2021, table A1):
     duplicate-line fraction, duplicate-line CHARACTER fraction, and
     most-frequent-bigram token fraction.
@@ -274,7 +269,7 @@ def repetition_stats(docs: DataFrame, text_col: str = "ltext") -> DataFrame:
     every doc. Results match the oracle's (-count, bigram)
     struct-sort formula exactly.
     """
-    t = F.col(text_col)
+    t = F.col("ltext")
     lines = F.split(t, "\n")
     n_lines = F.size(lines)
     dup_line_frac = F.round(
@@ -378,9 +373,7 @@ def repetition_stats(docs: DataFrame, text_col: str = "ltext") -> DataFrame:
     )
 
 
-def repetition_stats_arrow(
-    docs: DataFrame, text_col: str = "ltext"
-) -> DataFrame:
+def repetition_stats_arrow(docs: DataFrame) -> DataFrame:
     """repetition_stats as one Arrow-batched mapInPandas pass: a
     Counter per doc replaces the per-row array_sort+fold. Zero
     shuffles like the fold version, but the per-doc work runs in
@@ -426,7 +419,7 @@ def repetition_stats_arrow(
 
         for pdf in it:
             out = []
-            for did, txt in zip(pdf["doc_id"], pdf[text_col]):
+            for did, txt in zip(pdf["doc_id"], pdf["ltext"]):
                 lns = txt.split("\n")
                 n = len(lns)
                 cnt = Counter(lns)
@@ -457,7 +450,7 @@ def repetition_stats_arrow(
                 out, columns=[f.name for f in out_schema.fields]
             )
 
-    return docs.select("doc_id", text_col).mapInPandas(
+    return docs.select("doc_id", "ltext").mapInPandas(
         _batches, out_schema
     )
 
@@ -465,7 +458,7 @@ def repetition_stats_arrow(
 C4_BLOCKLIST = ["lorem ipsum", "javascript", "{"]
 
 
-def attach_c4_lines(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def attach_c4_lines(docs: DataFrame) -> DataFrame:
     """Plant line structure for the C4-cleaner gate query: the
     synthetic docs are single-line and unpunctuated, so derive three
     deterministic lines per doc — a terminal-punctuated prefix (kept
@@ -473,7 +466,7 @@ def attach_c4_lines(docs: DataFrame, text_col: str = "text") -> DataFrame:
     unpunctuated suffix (no terminal punctuation). doc_id % 9 == 0
     additionally gets a blocklisted line. Mirrored by
     oracle_data.q_c4_clean."""
-    t = F.col(text_col)
+    t = F.col("text")
     l1 = F.concat(F.substring(t, 1, 40), F.lit("."))
     l2 = F.lit("too short")
     l3 = F.substring(t, 41, 40)
@@ -489,23 +482,20 @@ def attach_c4_lines(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 def c4_line_filter(
     docs: DataFrame,
-    text_col: str = "ltext",
-    min_words: int = 5,
-    min_kept_lines: int = 1,
     keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """C4-style line-level cleaning (Raffel et al. 2020, §2.2
     heuristics, public description): keep a line iff it ends in
-    terminal punctuation (. ! ? ") AND has >= min_words words AND
-    contains no blocklisted phrase (case-insensitive); a document
-    survives iff >= min_kept_lines lines remain.
+    terminal punctuation (. ! ? ") AND has >= 5 words AND contains
+    no blocklisted phrase (case-insensitive); a document survives
+    iff at least one line remains.
 
     Pure per-row array expressions (split / filter / array_join) —
     zero shuffles, scan-bound at any corpus size.
 
     Output: (doc_id, n_lines, n_kept, cleaned, doc_kept).
     """
-    lines = F.split(F.col(text_col), "\n")
+    lines = F.split(F.col("ltext"), "\n")
 
     def keep(x):
         ends_punct = (
@@ -514,7 +504,7 @@ def c4_line_filter(
             | x.endswith("?")
             | x.endswith('"')
         )
-        enough_words = F.size(F.split(x, " ")) >= min_words
+        enough_words = F.size(F.split(x, " ")) >= 5
         blocked = F.lit(False)
         for phrase in C4_BLOCKLIST:
             blocked = blocked | F.lower(x).contains(phrase)
@@ -527,14 +517,14 @@ def c4_line_filter(
         F.size(lines).alias("n_lines"),
         F.size(kept).alias("n_kept"),
         F.array_join(kept, "\n").alias("cleaned"),
-        (F.size(kept) >= min_kept_lines).alias("doc_kept"),
+        (F.size(kept) >= 1).alias("doc_kept"),
     )
 
 
-def fingerprints(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def fingerprints(docs: DataFrame) -> DataFrame:
     """OpenRefine-style fingerprint: md5 over the sorted distinct
     token set — canonicalizes word order + duplication."""
-    t = tokens(F.col(text_col))
+    t = tokens(F.col("text"))
     canon = F.concat_ws(" ", F.array_sort(F.array_distinct(t)))
     return docs.select(
         "doc_id",
@@ -545,7 +535,6 @@ def fingerprints(docs: DataFrame, text_col: str = "text") -> DataFrame:
 def tfidf_top_terms(
     docs: DataFrame,
     k: int = 3,
-    text_col: str = "text",
     max_df_frac: float | None = None,
 ) -> DataFrame:
     """Top-k salient terms per document — the corpus-keyword /
@@ -589,7 +578,7 @@ def tfidf_top_terms(
         raise ValueError("tfidf_top_terms: max_df_frac must be in (0, 1]")
     n_docs = docs.agg(F.count(F.lit(1)).alias("_n_docs"))
     terms = docs.select(
-        "doc_id", F.explode(tokens(F.col(text_col))).alias("term")
+        "doc_id", F.explode(tokens(F.col("text"))).alias("term")
     ).filter(F.col("term") != "")
     tf = _register_persist(
         terms.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
@@ -682,7 +671,7 @@ def model_quality_scores(
     )
 
 
-def unigram_logprob(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def unigram_logprob(docs: DataFrame) -> DataFrame:
     """Unigram language-model quality score — the CCNet/Gopher-style
     "how surprising is this document under the corpus itself" signal
     used to rank crawl text before training. The corpus IS the LM:
@@ -706,7 +695,7 @@ def unigram_logprob(docs: DataFrame, text_col: str = "text") -> DataFrame:
     combine-friendly; nothing is ever collected to the driver.
     """
     toks = docs.select(
-        "doc_id", F.explode(tokens(F.col(text_col))).alias("tok")
+        "doc_id", F.explode(tokens(F.col("text"))).alias("tok")
     )
     vocab = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt"))
     # n_total = total token INSTANCES — summing doc lengths gives the
@@ -715,7 +704,7 @@ def unigram_logprob(docs: DataFrame, text_col: str = "text") -> DataFrame:
     # original vocab.agg(sum(cnt)) form planned THREE full corpus
     # explodes + two tok exchanges; this is one explode-free scan)
     total = docs.select(
-        F.sum(F.size(tokens(F.col(text_col)))).alias("n_total")
+        F.sum(F.size(tokens(F.col("text")))).alias("n_total")
     )
     bits = F.length(F.bin(F.col("n_total"))) - F.length(F.bin(F.col("cnt")))
     return (
@@ -738,18 +727,13 @@ def unigram_logprob(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def bigram_logprob(
-    docs: DataFrame,
-    text_col: str = "text",
-    min_count: int = 2,
-    backoff_bits: int = 2,
-) -> DataFrame:
+def bigram_logprob(docs: DataFrame) -> DataFrame:
     """Bigram language-model score with Stupid Backoff (Brants et
     al. 2007, "Large Language Models in Machine Translation") — the
     distributed web-scale LM recipe: no normalization, no smoothing,
     a pruned count table, and a flat backoff penalty to the unigram
     estimate. The corpus is its own LM; bigrams seen fewer than
-    `min_count` times are PRUNED from the model (the paper's
+    2 times are PRUNED from the model (the paper's
     singleton cutoff), so rare transitions genuinely back off —
     training on the scored corpus itself would otherwise make the
     backoff arm dead code.
@@ -757,7 +741,7 @@ def bigram_logprob(
     Same whole-bit quantization as unigram_logprob, so the score is
     integer-exact across engines: a kept bigram costs
     floor-log2(count(w1)) - floor-log2(count(w1 w2)) bits (the
-    conditional surprisal), a pruned one costs `backoff_bits` (the
+    conditional surprisal), a pruned one costs 2 bits (the
     integer stand-in for -log2(alpha), alpha=0.4 -> 2 bits) plus the
     unigram surprisal of w2. Floor-log2 is a binary-digit-count
     difference — no libm anywhere.
@@ -781,7 +765,7 @@ def bigram_logprob(
     bits_per_bigram)."""
     from .dedup import _register_persist
 
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     n = F.size(toks)
     bi_arr = F.zip_with(
         F.slice(toks, 1, F.greatest(n - 1, F.lit(0))),
@@ -800,7 +784,7 @@ def bigram_logprob(
     bi_model = (
         pairs.groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("bcnt"))
-        .filter(F.col("bcnt") >= min_count)
+        .filter(F.col("bcnt") >= 2)
     )
     scored = (
         pairs.join(
@@ -816,7 +800,7 @@ def bigram_logprob(
     )
     kept = F.length(F.bin(F.col("c1"))) - F.length(F.bin(F.col("bcnt")))
     backed = (
-        F.lit(backoff_bits)
+        F.lit(2)
         + F.length(F.bin(F.col("n_total")))
         - F.length(F.bin(F.col("c2")))
     )
@@ -858,21 +842,14 @@ _BULLET_RX = r"^\s*[-*•]"
 _ELLIPSIS_RX = r"(\.\.\.|…)\s*$"
 
 
-def gopher_rules(
-    docs: DataFrame,
-    text_col: str = "text",
-    min_words: int = 50,
-    max_words: int = 100_000,
-    min_mean_word_len: float = 3.0,
-    max_mean_word_len: float = 10.0,
-) -> DataFrame:
+def gopher_rules(docs: DataFrame, min_words: int = 50) -> DataFrame:
     """Gopher rule-based quality filter — per-document rule flags
     plus the conjunction `keep`.
 
     Rules (each emitted as its own 0/1 column so the attrition
     funnel can attribute drops to a specific rule):
-      r_word_count   min_words <= n_words <= max_words
-      r_mean_word_len  min <= mean word length <= max
+      r_word_count   min_words <= n_words <= 100,000
+      r_mean_word_len  3 <= mean word length <= 10
       r_symbol       (# + ...) per word < 0.1
       r_bullet       < 90% of lines start with a bullet
       r_ellipsis     < 30% of lines end with an ellipsis
@@ -888,7 +865,7 @@ def gopher_rules(
     lines by fixed rules (logsender.py:394-428); this is the same
     rule-gate pattern at document granularity.
     """
-    t = F.col(text_col)
+    t = F.col("text")
     words = F.filter(tokens(t), lambda x: x != "")
     n_words = F.size(words)
     nw_d = F.greatest(n_words.cast("double"), F.lit(1.0))
@@ -933,9 +910,8 @@ def gopher_rules(
         hit = F.array_contains(words, s).cast("int")
         stop_hits = hit if stop_hits is None else stop_hits + hit
     rules = {
-        "r_word_count": (n_words >= min_words) & (n_words <= max_words),
-        "r_mean_word_len": (mean_wl >= min_mean_word_len)
-        & (mean_wl <= max_mean_word_len),
+        "r_word_count": (n_words >= min_words) & (n_words <= 100_000),
+        "r_mean_word_len": (mean_wl >= 3.0) & (mean_wl <= 10.0),
         "r_symbol": symbol_ratio < 0.1,
         "r_bullet": bullet_ratio < 0.9,
         "r_ellipsis": ellipsis_ratio < 0.3,
@@ -973,7 +949,7 @@ GOPHER_RULE_ORDER = (
 )
 
 
-def gopher_funnel(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def gopher_funnel(docs: DataFrame) -> DataFrame:
     """Filter-attrition funnel over the Gopher rules: for each rule,
     how many documents fail it IN ISOLATION, and how many survive
     rules 1..i applied CUMULATIVELY in GOPHER_RULE_ORDER. The
@@ -986,7 +962,7 @@ def gopher_funnel(docs: DataFrame, text_col: str = "text") -> DataFrame:
     single result row. Nothing after the scan touches more than one
     row per partition.
     """
-    flags = gopher_rules(docs, text_col=text_col)
+    flags = gopher_rules(docs)
     aggs = [F.count(F.lit(1)).alias("n_docs")]
     cum = None
     for i, r in enumerate(GOPHER_RULE_ORDER):
@@ -1007,13 +983,7 @@ def gopher_funnel(docs: DataFrame, text_col: str = "text") -> DataFrame:
     ).select("stage_idx", "stage", "n_fail_alone", "n_survive_cum", "n_docs")
 
 
-def nb_quality_classifier(
-    docs: DataFrame,
-    text_col: str = "text",
-    label_col: str = "label",
-    id_col: str = "doc_id",
-    min_df: int = 2,
-) -> DataFrame:
+def nb_quality_classifier(docs: DataFrame) -> DataFrame:
     """CCNet-style learned quality classifier, trained IN-ENGINE
     (Wenzek et al. 2020 train a fastText model on a high-quality
     reference vs the crawl, then keep documents the model scores
@@ -1042,7 +1012,7 @@ def nb_quality_classifier(
     where pos_c/neg_c are the token's instance counts inside
     positive/negative docs, pos_tot/neg_tot the class instance
     totals over the KEPT vocabulary, and V the kept-vocab size
-    (Laplace α=1). Tokens with total instance count < min_df are
+    (Laplace α=1). Tokens with total instance count < 2 are
     pruned (the Zipf tail carries no class signal and would triple
     the join side); out-of-vocab tokens contribute 0 bits (equal
     smoothed mass under both classes at bit granularity).
@@ -1064,11 +1034,11 @@ def nb_quality_classifier(
     Output: (doc_id, label, n_vocab_tokens, llr_bits, prior_bits,
     score_bits, predicted) — predicted = 1 iff score_bits > 0.
     """
-    t = F.col(text_col)
+    t = F.col("text")
     words = F.filter(tokens(t), lambda x: x != "")
     toks = docs.select(
-        F.col(id_col),
-        F.col(label_col).cast("long").alias("_lbl"),
+        F.col("doc_id"),
+        F.col("label").cast("long").alias("_lbl"),
         F.explode(words).alias("tok"),
     )
     bits = lambda c: F.length(F.bin(c))  # noqa: E731
@@ -1084,7 +1054,7 @@ def nb_quality_classifier(
             F.sum("_lbl").alias("pos_c"),
             (F.count(F.lit(1)) - F.sum("_lbl")).alias("neg_c"),
         )
-        .where(F.col("pos_c") + F.col("neg_c") >= F.lit(min_df))
+        .where(F.col("pos_c") + F.col("neg_c") >= F.lit(2))
     )
     totals = vocab.agg(
         F.sum("pos_c").alias("pos_tot"),
@@ -1099,26 +1069,26 @@ def nb_quality_classifier(
     )
     scored = (
         toks.join(model, "tok")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.sum("llr_tok").alias("llr_bits"),
             F.count(F.lit(1)).alias("n_vocab_tokens"),
         )
     )
     priors = docs.agg(
-        F.sum(F.col(label_col).cast("long")).alias("n_pos_docs"),
-        F.sum(F.lit(1) - F.col(label_col).cast("long")).alias("n_neg_docs"),
+        F.sum(F.col("label").cast("long")).alias("n_pos_docs"),
+        F.sum(F.lit(1) - F.col("label").cast("long")).alias("n_neg_docs"),
     ).select(
         (bits(F.col("n_pos_docs")) - bits(F.col("n_neg_docs")))
         .cast("long")
         .alias("prior_bits")
     )
     return (
-        docs.select(id_col, F.col(label_col).cast("long").alias("label"))
-        .join(scored, id_col, "left")
+        docs.select("doc_id", F.col("label").cast("long").alias("label"))
+        .join(scored, "doc_id", "left")
         .crossJoin(F.broadcast(priors))
         .select(
-            id_col,
+            "doc_id",
             "label",
             F.coalesce(F.col("n_vocab_tokens"), F.lit(0)).alias(
                 "n_vocab_tokens"
@@ -1141,7 +1111,7 @@ def nb_quality_classifier(
     )
 
 
-def attach_mess(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def attach_mess(docs: DataFrame) -> DataFrame:
     """Plant deterministic Unicode/whitespace mess for the
     normalization gate query — the synthetic docs are ASCII-clean,
     so there would otherwise be nothing to normalize:
@@ -1154,7 +1124,7 @@ def attach_mess(docs: DataFrame, text_col: str = "text") -> DataFrame:
       * doc_id % 4 == 3: untouched (the changed=false control)
 
     Mirrored verbatim by oracle_data.q_normalize."""
-    t = F.col(text_col)
+    t = F.col("text")
     m = F.col("doc_id") % 4
     return docs.withColumn(
         "mtext",
@@ -1165,7 +1135,7 @@ def attach_mess(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def normalize_text(docs: DataFrame, text_col: str = "mtext") -> DataFrame:
+def normalize_text(docs: DataFrame) -> DataFrame:
     """Canonical text normalization — the first pass every corpus
     runs before hashing/dedup, because byte-different spellings of
     the SAME rendered text (composed vs decomposed accents, NBSP vs
@@ -1200,7 +1170,7 @@ def normalize_text(docs: DataFrame, text_col: str = "mtext") -> DataFrame:
             else unicodedata.normalize("NFC", x)
         )
 
-    t = _nfc(F.col(text_col))
+    t = _nfc(F.col("mtext"))
     t = F.regexp_replace(t, "\u00a0", " ")
     t = F.regexp_replace(t, "[\u200b\u200c\u200d\ufeff]", "")
     t = F.regexp_replace(t, "[\t\r\n\x0b\x0c]", " ")
@@ -1208,7 +1178,7 @@ def normalize_text(docs: DataFrame, text_col: str = "mtext") -> DataFrame:
     t = F.trim(t)
     return docs.select(
         "doc_id",
-        F.col(text_col).alias("_raw"),
+        F.col("mtext").alias("_raw"),
         t.alias("text_norm"),
     ).select(
         "doc_id",
@@ -1218,9 +1188,7 @@ def normalize_text(docs: DataFrame, text_col: str = "mtext") -> DataFrame:
     )
 
 
-def vocab_stats(
-    docs: DataFrame, group_col: str = "source", text_col: str = "text"
-) -> DataFrame:
+def vocab_stats(docs: DataFrame) -> DataFrame:
     """Per-source vocabulary health report: type count, token count,
     hapax-legomenon count (types seen exactly once in the source),
     and integer-milli type-token and hapax ratios. The lexical
@@ -1241,8 +1209,8 @@ def vocab_stats(
     """
     vocab = (
         docs.select(
-            F.col(group_col).alias("grp"),
-            F.explode(tokens(F.col(text_col))).alias("tok"),
+            F.col("source").alias("grp"),
+            F.explode(tokens(F.col("text"))).alias("tok"),
         )
         .groupBy("grp", "tok")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -1257,7 +1225,7 @@ def vocab_stats(
             ),
         )
         .select(
-            F.col("grp").alias(group_col),
+            F.col("grp").alias("source"),
             "n_types",
             "n_tokens",
             "n_hapax",
@@ -1267,12 +1235,7 @@ def vocab_stats(
     )
 
 
-def hashed_features(
-    docs: DataFrame,
-    dim: int = 64,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def hashed_features(docs: DataFrame, dim: int = 64) -> DataFrame:
     """Feature-hashing doc vectors (the hashing trick, Weinberger
     2009 / VW): every token maps to bucket h32(token) mod dim with a
     sign from an INDEPENDENT hash bit, and the doc's vector is the
@@ -1296,8 +1259,8 @@ def hashed_features(
     from ..operators.dedup import h32, tokens_col
 
     tok = docs.select(
-        F.col(id_col),
-        F.explode(tokens_col(F.col(text_col))).alias("_t"),
+        F.col("doc_id"),
+        F.explode(tokens_col(F.col("text"))).alias("_t"),
     ).filter(F.col("_t") != "")
     bucket = (h32(F.col("_t")) % dim).alias("bucket")
     sign = (
@@ -1305,8 +1268,8 @@ def hashed_features(
         - F.lit(2) * (h32(F.concat(F.lit("s|"), F.col("_t"))) % 2)
     ).alias("_sg")
     return (
-        tok.select(F.col(id_col), bucket, sign)
-        .groupBy(id_col, "bucket")
+        tok.select(F.col("doc_id"), bucket, sign)
+        .groupBy("doc_id", "bucket")
         .agg(F.sum("_sg").alias("weight"))
     )
 
@@ -1315,7 +1278,6 @@ def skipgram_pairs(
     docs: DataFrame,
     window: int = 3,
     min_count: int = 2,
-    text_col: str = "text",
 ) -> DataFrame:
     """Skip-gram co-occurrence pair counts — the word2vec/GloVe
     preprocessing table: for every token position i, the ordered
@@ -1353,7 +1315,7 @@ def skipgram_pairs(
     )
     return (
         docs.select(
-            F.split(F.lower(F.col(text_col)), " ").alias("_toks")
+            F.split(F.lower(F.col("text")), " ").alias("_toks")
         )
         .select(F.explode(pairs).alias("p"))
         .groupBy(
@@ -1368,7 +1330,6 @@ def collocations(
     docs: DataFrame,
     window: int = 3,
     min_count: int = 5,
-    text_col: str = "text",
 ) -> DataFrame:
     """Collocation mining by association LIFT over the skip-gram
     pair table: lift = P(a,b) / (P(a)·P(b)) — the log-free face of
@@ -1397,12 +1358,12 @@ def collocations(
     Output: (tok_a, tok_b, n_ab, n_a, n_b, lift_milli).
     """
     pairs = skipgram_pairs(
-        docs, window=window, min_count=min_count, text_col=text_col
+        docs, window=window, min_count=min_count
     ).withColumnRenamed("n", "n_ab")
     uni = (
         docs.select(
             F.explode(
-                F.split(F.lower(F.col(text_col)), " ")
+                F.split(F.lower(F.col("text")), " ")
             ).alias("tok")
         )
         .groupBy("tok")
@@ -1461,12 +1422,7 @@ def collocations(
     )
 
 
-def phrase_merge(
-    docs: DataFrame,
-    phrases: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def phrase_merge(docs: DataFrame, phrases: DataFrame) -> DataFrame:
     """word2phrase-style GREEDY phrase merging: re-tokenize every
     document with adjacent token pairs from the `phrases` table
     (tok_a, tok_b — typically `collocations` survivors above a lift
@@ -1493,13 +1449,13 @@ def phrase_merge(
     ONE doc-keyed exchange (identical partition key). Token order in
     the rebuild is FORCED via array_sort over (pos, token) structs.
 
-    Output: (id_col, text, n_phrases) — text re-tokenized, phrases
+    Output: (doc_id, text, n_phrases) — text re-tokenized, phrases
     joined with '_'.
     """
     toks = docs.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         F.posexplode(
-            F.split(F.lower(F.col(text_col)), " ")
+            F.split(F.lower(F.col("text")), " ")
         ).alias("_p0", "tok"),
     ).select("doc_id", (F.col("_p0") + 1).alias("i"), "tok")
     w = Window.partitionBy("doc_id").orderBy("i")
@@ -1556,7 +1512,7 @@ def phrase_merge(
         )
     )
     return rebuilt.select(
-        F.col("doc_id").alias(id_col),
+        "doc_id",
         F.array_join(
             F.transform(F.col("_arr"), lambda s: s["t"]), " "
         ).alias("text"),
@@ -1564,12 +1520,7 @@ def phrase_merge(
     )
 
 
-def watermark_scores(
-    docs: DataFrame,
-    text_col: str = "text",
-    z2_thresh: int = 4,
-    seed: str = "wm1",
-) -> DataFrame:
+def watermark_scores(docs: DataFrame) -> DataFrame:
     """Greenlist watermark detector (Kirchenbauer et al. 2023, "A
     Watermark for Large Language Models") — the SYNTHETIC-TEXT
     screening pass a training-data pipeline runs before mixing
@@ -1579,7 +1530,7 @@ def watermark_scores(
     z-tests the green fraction against the gamma = 1/2 null.
 
     Green rule (both engines bit-for-bit): token i is scored green
-    iff h32(seed || prev_tok || \\x01 || tok) is even — the same
+    iff h32('wm1' || prev_tok || \\x01 || tok) is even — the same
     md5-prefix hash family as every sampler in curation.py. Exactly
     n_tokens - 1 positions are scored (i >= 2); docs with < 2
     tokens score 0 positions and are never suspect.
@@ -1587,8 +1538,8 @@ def watermark_scores(
     The z-test avoids sqrt entirely: with gamma = 1/2,
         z = (g - n/2) / sqrt(n/4) > lambda
       <=>  2g > n  AND  (2g - n)^2 > lambda^2 * n
-    so `suspect` is an exact int64 predicate (z2_thresh = lambda^2;
-    the default 4 flags z > 2, ~p < 0.023 one-sided). green_milli
+    so `suspect` is an exact int64 predicate (lambda^2 = 4 flags
+    z > 2, ~p < 0.023 one-sided). green_milli
     (1000g div n) is exposed for threshold sweeps downstream.
 
     Scale shape: one per-row array fold — zero shuffles, zero joins;
@@ -1596,7 +1547,7 @@ def watermark_scores(
     skipgram/bigram contrast: those need corpus-wide aggregation,
     this is a pure per-document statistic).
     """
-    t = tokens(F.col(text_col))
+    t = tokens(F.col("text"))
     pair_green = F.transform(
         F.sequence(F.lit(2), F.size(t)),
         lambda i: (
@@ -1604,7 +1555,7 @@ def watermark_scores(
                 F.substring(
                     F.md5(
                         F.concat(
-                            F.lit(seed),
+                            F.lit("wm1"),
                             F.element_at(t, i - 1),
                             F.lit("\x01"),
                             F.element_at(t, i),
@@ -1646,7 +1597,7 @@ def watermark_scores(
             & (
                 (2 * F.col("n_green") - F.col("n_scored"))
                 * (2 * F.col("n_green") - F.col("n_scored"))
-                > F.lit(z2_thresh) * F.col("n_scored")
+                > F.lit(4) * F.col("n_scored")
             )
         ).alias("suspect"),
     )
@@ -1656,8 +1607,6 @@ def source_keyness(
     docs: DataFrame,
     k: int = 5,
     min_count: int = 5,
-    text_col: str = "text",
-    group_col: str = "source",
 ) -> DataFrame:
     """Distinctive-term keyness per source — the data-card audit
     "which terms characterize THIS slice vs the rest of the corpus"
@@ -1695,8 +1644,8 @@ def source_keyness(
         raise ValueError(f"source_keyness: k={k} < 1")
     st = (
         docs.select(
-            F.col(group_col).alias("source"),
-            F.explode(tokens(F.col(text_col))).alias("term"),
+            "source",
+            F.explode(tokens(F.col("text"))).alias("term"),
         )
         .filter(F.col("term") != "")
         .groupBy("source", "term")
@@ -1743,11 +1692,7 @@ def source_keyness(
     )
 
 
-def eval_token_f1(
-    pairs: DataFrame,
-    pred_col: str = "prediction",
-    ref_col: str = "reference",
-) -> DataFrame:
+def eval_token_f1(pairs: DataFrame) -> DataFrame:
     """Token-overlap F1 scoring — the SQuAD-style eval metric
     (Rajpurkar et al. 2016) run at corpus scale: a training-data
     pipeline is also the EVAL pipeline (score a model's predictions
@@ -1772,8 +1717,8 @@ def eval_token_f1(
     aggregates; the cost is O(distinct_pred_tokens x ref_len) per
     row, the same class as the repetition/quality scanners.
     """
-    p = F.filter(tokens(F.col(pred_col)), lambda x: x != "")
-    r = F.filter(tokens(F.col(ref_col)), lambda x: x != "")
+    p = F.filter(tokens(F.col("prediction")), lambda x: x != "")
+    r = F.filter(tokens(F.col("reference")), lambda x: x != "")
     common = F.aggregate(
         F.array_distinct(p),
         F.lit(0).cast("long"),
@@ -1792,7 +1737,10 @@ def eval_token_f1(
     )
     both_empty = (F.col("n_pred") == 0) & (F.col("n_ref") == 0)
     return out.select(
-        *[c for c in pairs.columns if c not in (pred_col, ref_col)],
+        *[
+            c for c in pairs.columns
+            if c not in ("prediction", "reference")
+        ],
         "n_pred",
         "n_ref",
         "n_common",

@@ -70,12 +70,12 @@ MERGES_SCHEMA = StructType(
 )
 
 
-def word_freq(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def word_freq(docs: DataFrame) -> DataFrame:
     """(word, freq) over whitespace-split words — the single
     corpus-sized pass. Words containing the \\x01 framing byte are
     dropped (they cannot be framed; real corpora never contain
     control bytes after C4-style cleaning, operators/textstats.py)."""
-    w = F.explode(F.split(F.col(text_col), " ")).alias("word")
+    w = F.explode(F.split(F.col("text"), " ")).alias("word")
     return (
         docs.select(w)
         .filter((F.col("word") != "") & ~F.col("word").contains(SEP))
@@ -84,9 +84,9 @@ def word_freq(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def _framed(word_col: str = "word") -> F.Column:
+def _framed() -> F.Column:
     """word -> '^^c1^^c2^^...^^</w>^^' symbol string (^ = \\x01)."""
-    syms = F.concat(F.split(F.col(word_col), ""), F.array(F.lit(EOW)))
+    syms = F.concat(F.split(F.col("word"), ""), F.array(F.lit(EOW)))
     return F.concat(
         F.lit(SEP2), F.array_join(syms, SEP2), F.lit(SEP2)
     )
@@ -127,7 +127,7 @@ def _pair_counts(words: DataFrame) -> DataFrame:
 
 
 def bpe_train_words(
-    docs: DataFrame, n_merges: int = 8, text_col: str = "text"
+    docs: DataFrame, n_merges: int = 8
 ) -> tuple[list[dict], DataFrame]:
     """Run `n_merges` BPE merge rounds; return (merges, word table
     with final symbol strings). Each round collects exactly ONE row
@@ -140,7 +140,7 @@ def bpe_train_words(
     n_merges to the corpus.
     """
     words = _register_persist(
-        word_freq(docs, text_col).select(
+        word_freq(docs).select(
             "word", "freq", _framed().alias("s")
         )
     )
@@ -178,19 +178,15 @@ def bpe_train_words(
     return merges, cur
 
 
-def bpe_merges(
-    docs: DataFrame, n_merges: int = 8, text_col: str = "text"
-) -> DataFrame:
+def bpe_merges(docs: DataFrame, n_merges: int = 8) -> DataFrame:
     """The learned merge table (merge_rank, lhs, rhs, merged,
     pair_freq) — n_merges rows, the tokenizer model artifact."""
     spark = SparkSession.getActiveSession()
-    merges, _ = bpe_train_words(docs, n_merges, text_col)
+    merges, _ = bpe_train_words(docs, n_merges)
     return spark.createDataFrame(merges, MERGES_SCHEMA)
 
 
-def bpe_token_counts(
-    docs: DataFrame, n_merges: int = 8, text_col: str = "text"
-) -> DataFrame:
+def bpe_token_counts(docs: DataFrame, n_merges: int = 8) -> DataFrame:
     """Per-document token count under the learned BPE vocabulary.
 
     Encoding does NOT re-apply merges per document: the training
@@ -204,7 +200,7 @@ def bpe_token_counts(
     consistent in the oracle, and a constant offset per word either
     way. Words dropped by word_freq's \\x01 guard count 0.
     """
-    _, final_words = bpe_train_words(docs, n_merges, text_col)
+    _, final_words = bpe_train_words(docs, n_merges)
     per_word = final_words.select(
         "word",
         F.size(
@@ -216,7 +212,7 @@ def bpe_token_counts(
     exploded = (
         docs.select(
             "doc_id",
-            F.explode(F.split(F.col(text_col), " ")).alias("word"),
+            F.explode(F.split(F.col("text"), " ")).alias("word"),
         )
         .filter((F.col("word") != "") & ~F.col("word").contains(SEP))
     )
@@ -227,9 +223,7 @@ def bpe_token_counts(
     )
 
 
-def bpe_token_counts_arrow(
-    docs: DataFrame, n_merges: int = 8, text_col: str = "text"
-) -> DataFrame:
+def bpe_token_counts_arrow(docs: DataFrame, n_merges: int = 8) -> DataFrame:
     """Arrow closure-dict variant of bpe_token_counts — the
     hot-vocab-cache shape (BASELINE.md BPE-tier legs): the trained
     per-word segment counts ship to the Python workers as a dict
@@ -251,7 +245,7 @@ def bpe_token_counts_arrow(
     """
     import pandas as pd
 
-    _, final_words = bpe_train_words(docs, n_merges, text_col)
+    _, final_words = bpe_train_words(docs, n_merges)
     rows = final_words.select(
         "word",
         F.size(
@@ -271,23 +265,18 @@ def bpe_token_counts_arrow(
 
     def gen(batches):
         for pdf in batches:
-            n = pdf[text_col].map(_count)
+            n = pdf["text"].map(_count)
             out = pd.DataFrame(
                 {"doc_id": pdf["doc_id"], "n_bpe_tokens": n}
             )
             yield out[out["n_bpe_tokens"] > 0]
 
-    return docs.select("doc_id", text_col).mapInPandas(
+    return docs.select("doc_id", "text").mapInPandas(
         gen, "doc_id long, n_bpe_tokens long"
     )
 
 
-def bpe_fertility(
-    docs: DataFrame,
-    n_merges: int = 8,
-    text_col: str = "text",
-    group_col: str = "source",
-) -> DataFrame:
+def bpe_fertility(docs: DataFrame, n_merges: int = 8) -> DataFrame:
     """Tokenizer FERTILITY audit per corpus slice — the
     tokenizer-engineering acceptance metric: BPE tokens per
     whitespace word (fertility; ~1.0 = the vocab covers the slice,
@@ -307,22 +296,22 @@ def bpe_fertility(
     group-keyed partial+final aggregate onto |groups| rows. Nothing
     new is corpus-sized.
     """
-    per_doc = bpe_token_counts(docs, n_merges, text_col)
+    per_doc = bpe_token_counts(docs, n_merges)
     base = docs.select(
         "doc_id",
-        group_col,
+        "source",
         F.size(
             F.filter(
-                F.split(F.col(text_col), " "), lambda x: x != ""
+                F.split(F.col("text"), " "), lambda x: x != ""
             )
         )
         .cast("long")
         .alias("_n_ws"),
-        F.length(text_col).cast("long").alias("_n_chars"),
+        F.length("text").cast("long").alias("_n_chars"),
     )
     return (
         base.join(per_doc, "doc_id")
-        .groupBy(group_col)
+        .groupBy("source")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("_n_ws").alias("n_ws_tokens"),
@@ -330,7 +319,7 @@ def bpe_fertility(
             F.sum("_n_chars").alias("n_chars"),
         )
         .select(
-            group_col,
+            "source",
             "n_docs",
             "n_ws_tokens",
             "n_bpe_tokens",

@@ -103,9 +103,7 @@ def _iterate_ranks(
     return rank
 
 
-def tool_pagerank(
-    routed: DataFrame, n_iter: int = 5, damping_pct: int = 85
-) -> DataFrame:
+def tool_pagerank(routed: DataFrame, n_iter: int = 5) -> DataFrame:
     """Weighted PageRank over the tool-transition graph. Returns
     (tool, pagerank_scaled, pagerank) — pagerank is the scaled rank
     divided by SCALE once (a single int64→double division, identical
@@ -119,7 +117,7 @@ def tool_pagerank(
             "tool_pagerank: no tool→tool transitions in input"
         )
     edges = [(r["src"], r["dst"], int(r["n"])) for r in edge_rows]
-    rank = _iterate_ranks(edges, n_iter, damping_pct)
+    rank = _iterate_ranks(edges, n_iter, 85)
     rows = [
         {
             "tool": t,

@@ -53,12 +53,10 @@ def _norm_query(url: Column) -> Column:
     return F.array_join(F.array_sort(kept), "&")
 
 
-def normalize_urls(
-    docs: DataFrame, url_col: str = "url"
-) -> DataFrame:
+def normalize_urls(docs: DataFrame) -> DataFrame:
     """Append url_norm + domain. Per-row expressions only — this is
     a zero-shuffle scan at any corpus size."""
-    url = F.col(url_col)
+    url = F.col("url")
     host = _norm_host(url)
     q = _norm_query(url)
     norm = F.concat(
@@ -70,11 +68,7 @@ def normalize_urls(
     return docs.withColumn("url_norm", norm).withColumn("domain", host)
 
 
-def url_dedup(
-    docs: DataFrame,
-    url_col: str = "url",
-    blocklist: tuple[str, ...] = DEFAULT_DOMAIN_BLOCKLIST,
-) -> DataFrame:
+def url_dedup(docs: DataFrame) -> DataFrame:
     """Normalize, drop blocklisted domains (exact host or any
     subdomain of a listed registrable domain), keep the LOWEST
     doc_id per canonical URL.
@@ -89,9 +83,9 @@ def url_dedup(
 
     Output: surviving rows + (url_norm, domain).
     """
-    normed = normalize_urls(docs, url_col)
+    normed = normalize_urls(docs)
     blocked = F.lit(False)
-    for d in blocklist:
+    for d in DEFAULT_DOMAIN_BLOCKLIST:
         blocked = (
             blocked
             | (F.col("domain") == d)

@@ -93,7 +93,7 @@ def main(argv=None):
         from ..sources.derived import conv_meta_sql
 
         transcripts = load_transcripts(spark, args.input_dir)
-        meta = spark.sql(conv_meta_sql("spark", "events"))
+        meta = spark.sql(conv_meta_sql("spark"))
 
     ckpt_dir = os.path.join(args.output_dir, "checkpoint")
     transcripts, already = filter_unprocessed(spark, transcripts, ckpt_dir)

@@ -51,9 +51,8 @@ class ParquetDirSink(TableSink):
     One write job covers all four logical sinks; files track
     (sink x date), not tasks x dates."""
 
-    def __init__(self, path: str, partition_cols: tuple[str, ...] = ("sink", "event_date")):
+    def __init__(self, path: str):
         self.path = path
-        self.partition_cols = tuple(partition_cols)
 
     def ensure(self, spark: SparkSession) -> None:
         return None  # directory sinks materialize on first write
@@ -61,7 +60,7 @@ class ParquetDirSink(TableSink):
     def append(self, df: DataFrame) -> None:
         (
             df.write.mode("append")
-            .partitionBy(*self.partition_cols)
+            .partitionBy("sink", "event_date")
             .parquet(self.path)
         )
 

@@ -48,7 +48,7 @@ _SUBSYSTEMS = [
 _TOOLS = ["bash", "search", "python"]
 
 
-def _case(expr: str, values: list[str], alias: str | None = None) -> str:
+def _case(expr: str, values: list[str]) -> str:
     n = len(values)
     arms = " ".join(
         f"WHEN {expr} % {n} = {i} THEN '{v}'" for i, v in enumerate(values)
@@ -164,4 +164,4 @@ def load_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.read.parquet(os.path.join(sf_dir, "events.parquet")).createOrReplaceTempView(
         "events"
     )
-    return spark.sql(transcripts_sql("spark", "events"))
+    return spark.sql(transcripts_sql())

@@ -67,7 +67,6 @@ def run_agg_maintenance(
     spark: SparkSession,
     transcripts_dir: str,
     out_dir: str,
-    max_files_per_trigger: int = 1,
 ) -> DataFrame:
     """Drain `transcripts_dir` (availableNow); each micro-batch
     writes its hourly severity partial to <out>/agg/b<batch_id>.
@@ -84,6 +83,6 @@ def run_agg_maintenance(
         transcripts_dir,
         os.path.join(out_dir, "chk"),
         _process,
-        max_files_per_trigger,
+        max_files_per_trigger=1,
     )
     return read_rollup(spark, agg_dir)

@@ -149,7 +149,6 @@ def run_cdc_merge(
     snap_dir: str,
     checkpoint_dir: str,
     n_buckets: int = 16,
-    max_files_per_trigger: int = 1,
 ) -> DataFrame:
     """Drain a CDC change stream (availableNow) into the bucketed
     snapshot; returns the final merged table read back."""
@@ -211,6 +210,6 @@ def run_cdc_merge(
         changes_dir,
         checkpoint_dir,
         _process,
-        max_files_per_trigger,
+        max_files_per_trigger=1,
     )
     return read_snapshot(spark, snap_dir)

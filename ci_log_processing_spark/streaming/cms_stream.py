@@ -41,7 +41,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.curation import cms_cell_array, cms_estimate
+from ..operators.curation import CMS_SEED, cms_cell_array, cms_estimate
 from ..operators.dedup import tokens_col
 from .neardup_ingest import DOC_STREAM_SCHEMA
 from .partials import drain, read_partials, write_partial
@@ -57,8 +57,6 @@ def run_streaming_cms(
     candidates_k: int = 20,
     width: int = 512,
     depth: int = 4,
-    seed: str = "cms",
-    max_files_per_trigger: int = 1,
 ) -> DataFrame:
     """Drain `docs_dir` (availableNow), accumulating per-batch exact
     token counts and CMS cell partials, and return the merged top-k
@@ -66,7 +64,7 @@ def run_streaming_cms(
     cms_token_counts over the union of all batches."""
     counts_dir = os.path.join(output_dir, "counts")
     cells_dir = os.path.join(output_dir, "cells")
-    cells = cms_cell_array(width, depth, seed)
+    cells = cms_cell_array(width, depth, CMS_SEED)
 
     def process_batch(batch_df, batch_id: int):
         if batch_df.isEmpty():
@@ -100,7 +98,7 @@ def run_streaming_cms(
         docs_dir,
         os.path.join(output_dir, "_stream_ckpt"),
         process_batch,
-        max_files_per_trigger,
+        max_files_per_trigger=1,
     )
     exact = (
         read_partials(spark, counts_dir, _COUNTS_SCHEMA)
@@ -112,4 +110,4 @@ def run_streaming_cms(
         .groupBy("i", "cell")
         .agg(F.sum("cell_n").alias("cell_n"))
     )
-    return cms_estimate(exact, sketch, candidates_k, width, depth, seed)
+    return cms_estimate(exact, sketch, candidates_k, width, depth, CMS_SEED)

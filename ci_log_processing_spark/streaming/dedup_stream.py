@@ -31,8 +31,6 @@ def streaming_exact_dedup(
     spark: SparkSession,
     docs_dir: str,
     output_dir: str,
-    delay: str = "2 hours",
-    max_files_per_trigger: int = 1,
 ) -> DataFrame:
     """Drain `docs_dir` with an availableNow trigger, keep the first
     arrival of every md5(text) within the watermark horizon, write
@@ -44,12 +42,12 @@ def streaming_exact_dedup(
     """
     stream = (
         spark.readStream.schema(DOC_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 1)
         .parquet(docs_dir)
     )
     survivors = (
         stream.withColumn("h", F.md5(F.col("text").cast("binary")))
-        .withWatermark("event_ts", delay)
+        .withWatermark("event_ts", "2 hours")
         .dropDuplicatesWithinWatermark(["h"])
     )
     q = (

@@ -71,7 +71,6 @@ def run_streaming_drift(
     emb_dir: str,
     ref_dir: str,
     output_dir: str,
-    max_files_per_trigger: int = 1,
 ) -> DataFrame:
     """Drain `emb_dir` (availableNow), accumulating per-batch
     (label, dim) sum/count partials; return the drift table of the
@@ -91,7 +90,7 @@ def run_streaming_drift(
         emb_dir,
         os.path.join(output_dir, "_stream_ckpt"),
         process_batch,
-        max_files_per_trigger,
+        max_files_per_trigger=1,
     )
     b_dims = (
         read_partials(spark, dims_dir, _DIMS_SCHEMA)

@@ -51,7 +51,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQueryListener
 
 from ..operators.aggregate import hourly_agg
-from ..plans.pipeline import DEFAULT_BATCH_TS, DEFAULT_REF_YEAR, RoutingPlan
+from ..plans.pipeline import DEFAULT_BATCH_TS, RoutingPlan
 from ..sinks import append_fanout
 
 TRANSCRIPT_SCHEMA = (
@@ -96,8 +96,6 @@ def run_follow(
     transcripts_dir: str,
     output_dir: str,
     batch_ts: str = DEFAULT_BATCH_TS,
-    ref_year: int = DEFAULT_REF_YEAR,
-    impl: str = "native",
     processing_time: str | None = None,
     meta=None,
 ):
@@ -107,9 +105,7 @@ def run_follow(
     rule exactly as in batch mode. Returns the StreamingQuery
     (already awaited when availableNow).
     """
-    plan = RoutingPlan(
-        spark, batch_ts=batch_ts, ref_year=ref_year, impl=impl, meta=meta
-    )
+    plan = RoutingPlan(spark, batch_ts=batch_ts, meta=meta)
 
     def process_batch(batch_df, batch_id: int):
         if batch_df.isEmpty():

@@ -61,7 +61,7 @@ from ..operators.aggregate import (
     hdr_bucket_counts,
     hdr_percentiles_from_buckets,
 )
-from ..plans.pipeline import DEFAULT_BATCH_TS, DEFAULT_REF_YEAR, full_pipeline
+from ..plans.pipeline import full_pipeline
 from .follow import TRANSCRIPT_SCHEMA
 from .partials import drain, read_partials, write_partial
 
@@ -77,9 +77,6 @@ def run_streaming_hdr(
     transcripts_dir: str,
     output_dir: str,
     sub_bits: int = 4,
-    batch_ts: str = DEFAULT_BATCH_TS,
-    ref_year: int = DEFAULT_REF_YEAR,
-    max_files_per_trigger: int = 1,
     meta=None,
 ) -> DataFrame:
     """Drain `transcripts_dir` (availableNow), accumulating HDR
@@ -92,9 +89,7 @@ def run_streaming_hdr(
     def process_batch(batch_df, batch_id: int):
         if batch_df.isEmpty():
             return
-        routed = full_pipeline(
-            batch_df, spark, batch_ts=batch_ts, ref_year=ref_year, meta=meta
-        )
+        routed = full_pipeline(batch_df, spark, meta=meta)
         turns = routed.select(
             "conv_id", "turn_idx", "sink", "filled_ts"
         ).persist()
@@ -168,7 +163,7 @@ def run_streaming_hdr(
         transcripts_dir,
         os.path.join(output_dir, "_stream_ckpt"),
         process_batch,
-        max_files_per_trigger,
+        max_files_per_trigger=1,
     )
     merged = (
         read_partials(spark, buckets_dir, _BUCKETS_SCHEMA)

@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.aggregate import hll_estimate, hll_partial_registers
-from ..plans.pipeline import DEFAULT_BATCH_TS, DEFAULT_REF_YEAR, full_pipeline
+from ..plans.pipeline import full_pipeline
 from .follow import TRANSCRIPT_SCHEMA
 from .partials import drain, read_partials, write_partial
 
@@ -45,8 +45,6 @@ def run_streaming_hll(
     spark: SparkSession,
     transcripts_dir: str,
     output_dir: str,
-    batch_ts: str = DEFAULT_BATCH_TS,
-    ref_year: int = DEFAULT_REF_YEAR,
     max_files_per_trigger: int = 2,
     meta=None,
 ) -> DataFrame:
@@ -58,9 +56,7 @@ def run_streaming_hll(
     def process_batch(batch_df, batch_id: int):
         if batch_df.isEmpty():
             return
-        routed = full_pipeline(
-            batch_df, spark, batch_ts=batch_ts, ref_year=ref_year, meta=meta
-        )
+        routed = full_pipeline(batch_df, spark, meta=meta)
         # overwrite the batch's own subdir: a replayed batch lands in
         # the same place, and max-merge absorbs it either way
         write_partial(hll_partial_registers(routed), regs_dir, batch_id)

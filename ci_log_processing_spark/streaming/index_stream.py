@@ -65,7 +65,6 @@ def run_index_maintenance(
     out_dir: str,
     min_df: int = 1,
     max_df: int = 64,
-    max_files_per_trigger: int = 1,
 ) -> DataFrame:
     """Drain `docs_dir` (availableNow); each micro-batch writes its
     posting-grain partial to <out>/index/b<batch_id> (overwrite —
@@ -84,6 +83,6 @@ def run_index_maintenance(
         docs_dir,
         os.path.join(out_dir, "chk"),
         _process,
-        max_files_per_trigger,
+        max_files_per_trigger=1,
     )
     return read_index(spark, index_dir, min_df=min_df, max_df=max_df)

@@ -64,7 +64,6 @@ def run_ingest_curation(
     docs_dir: str,
     out_dir: str,
     min_quality: float = 0.30,
-    max_files_per_trigger: int = 1,
 ) -> DataFrame:
     """Drain `docs_dir` with an availableNow trigger; per batch:
     quality-gate, dedup against <out>/index, append survivors to
@@ -103,6 +102,6 @@ def run_ingest_curation(
         docs_dir,
         os.path.join(out_dir, "chk"),
         _process,
-        max_files_per_trigger,
+        max_files_per_trigger=1,
     )
     return read_partials(spark, corpus_dir, _CORPUS_SCHEMA)

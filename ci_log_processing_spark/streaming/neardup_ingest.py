@@ -8,8 +8,8 @@ them at per-batch cost).
 Per-batch plan, stated exactly:
   1. exact intra-batch keep-first (md5 window — one batch-sized
      exchange),
-  2. shingle+sign the batch ONCE (the persisted arr feeds banding
-     and verification),
+  2. shingle+sign the batch (dedup._lsh_shingles_and_bands, shingle
+     size dedup.SHINGLE_K),
   3. join the batch's (band, key) rows against the stored band index
      — candidates only where a bucket collides; per-bucket candidate
      cap bounds mega-bucket fan-out (operators/dedup.py
@@ -33,9 +33,10 @@ partial output.
 
 Intra-batch NEAR-dups (two distinct-text near-dups arriving in one
 micro-batch) both survive by design — the index only holds PRIOR
-batches. This is the standard batch-granularity trade: tighten it by
-lowering maxFilesPerTrigger, or run the batch-tier pair generator
-(minhash_lsh_pairs + components) as a periodic compaction pass.
+batches. This is the standard batch-granularity trade (one input file
+per micro-batch here); run the batch-tier pair generator
+(minhash_lsh_pairs + components) as a periodic compaction pass to
+close it.
 """
 
 from __future__ import annotations
@@ -57,15 +58,14 @@ def run_neardup_ingestion(
     docs_dir: str,
     out_dir: str,
     threshold: float = 0.6,
-    k: int = 5,
-    candidate_cap: int = 64,
-    max_files_per_trigger: int = 1,
 ) -> DataFrame:
     """Drain `docs_dir` with an availableNow trigger; per batch:
     exact intra-batch dedup, near-dup anti-join against the persisted
     band index, append survivors + their band/shingle index rows.
     Returns the curated corpus read back."""
     from ..operators.dedup import (
+        CANDIDATE_CAP,
+        SHINGLE_K,
         _lsh_shingles_and_bands,
         exact_dedup_keep_first,
         neardup_ids_against_index,
@@ -79,23 +79,23 @@ def run_neardup_ingestion(
     def _process(batch: DataFrame, batch_id: int) -> None:
         ss = batch.sparkSession
         firsts = exact_dedup_keep_first(
-            batch, text_col="text", keep_cols=("text",)
+            batch, keep_cols=("text",)
         ).drop("h")
-        arr_b, bands_b = _lsh_shingles_and_bands(firsts, k)
+        arr_b, bands_b = _lsh_shingles_and_bands(firsts, SHINGLE_K)
         dup_ids = neardup_ids_against_index(
             arr_b,
             bands_b,
             read_partials(ss, sh_dir, _SH_SCHEMA, before=batch_id),
             read_partials(ss, bands_dir, _BANDS_SCHEMA, before=batch_id),
             threshold,
-            candidate_cap,
+            CANDIDATE_CAP,
         )
         fresh = firsts.join(dup_ids, "doc_id", "left_anti")
         # one materialization feeds all three batch-scoped writes
         fresh.persist()
         try:
             write_partial(fresh, corpus_dir, batch_id)
-            arr_f, bands_f = _lsh_shingles_and_bands(fresh, k)
+            arr_f, bands_f = _lsh_shingles_and_bands(fresh, SHINGLE_K)
             write_partial(bands_f, bands_dir, batch_id)
             write_partial(arr_f, sh_dir, batch_id)
         finally:
@@ -108,6 +108,6 @@ def run_neardup_ingestion(
         docs_dir,
         os.path.join(out_dir, "chk"),
         _process,
-        max_files_per_trigger,
+        max_files_per_trigger=1,
     )
     return read_partials(spark, corpus_dir, DOC_STREAM_SCHEMA)

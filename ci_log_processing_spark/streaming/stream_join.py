@@ -40,23 +40,21 @@ def streaming_interval_join(
     config_dir: str,
     output_dir: str,
     lookback_sec: int = 3600,
-    delay: str = "2 hours",
-    max_files_per_trigger: int = 1,
 ) -> DataFrame:
     """Join each streamed turn to every streamed config update of the
     same conversation with cfg_ts in [ts - lookback_sec, ts]
     (inclusive both ends), availableNow trigger, append sink."""
     left = (
         spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 1)
         .parquet(transcripts_dir)
-        .withWatermark("ts", delay)
+        .withWatermark("ts", "2 hours")
     )
     right = (
         spark.readStream.schema(CONFIG_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 1)
         .parquet(config_dir)
-        .withWatermark("cfg_ts", delay)
+        .withWatermark("cfg_ts", "2 hours")
     )
     joined = left.join(
         right,

@@ -69,7 +69,6 @@ def run_streaming_templates(
     spark: SparkSession,
     turns_dir: str,
     output_dir: str,
-    max_files_per_trigger: int = 1,
 ) -> DataFrame:
     """Drain `turns_dir` (availableNow), accumulating per-batch
     template partials, and return the merged template table with
@@ -91,7 +90,7 @@ def run_streaming_templates(
         turns_dir,
         os.path.join(output_dir, "_stream_ckpt"),
         process_batch,
-        max_files_per_trigger,
+        max_files_per_trigger=1,
     )
     return (
         read_partials(spark, tmpl_dir, _TEMPLATE_SCHEMA)

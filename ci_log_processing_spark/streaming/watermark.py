@@ -35,9 +35,6 @@ def streaming_severity_window_counts(
     spark: SparkSession,
     transcripts_dir: str,
     output_dir: str,
-    delay: str = "2 hours",
-    window: str = "1 hour",
-    max_files_per_trigger: int = 1,
 ) -> DataFrame:
     """Run the watermarked windowed count over a transcript directory
     (availableNow trigger: drain existing files, then stop) and
@@ -49,13 +46,13 @@ def streaming_severity_window_counts(
     """
     stream = (
         spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 1)
         .parquet(transcripts_dir)
     )
     parsed = parse_transcripts(stream)  # stateless exprs only — no ffill
     agg = (
-        parsed.withWatermark("ts", delay)
-        .groupBy(F.window("ts", window).alias("w"), "severity")
+        parsed.withWatermark("ts", "2 hours")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "severity")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .select(
             F.col("w.start").alias("window_start"),
@@ -88,9 +85,6 @@ def streaming_session_counts(
     spark: SparkSession,
     transcripts_dir: str,
     output_dir: str,
-    gap_sec: int = 1800,
-    delay: str = "2 hours",
-    max_files_per_trigger: int = 1,
 ) -> DataFrame:
     """Watermarked SESSION windows over the raw transcript stream —
     the same F.session_window operator as the batch
@@ -102,13 +96,13 @@ def streaming_session_counts(
     """
     stream = (
         spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 1)
         .parquet(transcripts_dir)
     )
     agg = (
-        stream.withWatermark("ts", delay)
+        stream.withWatermark("ts", "2 hours")
         .groupBy(
-            F.session_window(F.col("ts"), f"{gap_sec} seconds").alias("w"),
+            F.session_window(F.col("ts"), "1800 seconds").alias("w"),
             "conv_id",
         )
         .agg(
