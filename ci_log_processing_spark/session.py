@@ -62,6 +62,11 @@ def get_spark(
         # likewise off — columnar cache build was dominated by it.
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
+        # INT64 microseconds, as Iceberg stores timestamptz, instead of
+        # the deprecated 12-byte INT96. A session conf, not a write
+        # option: ParquetFileFormat.prepareWrite overwrites any
+        # per-write value with the session's.
+        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         # v2 commit: per-task parallel rename instead of a serial
         # job-commit pass over every output file (matters once the
         # sink fan-out writes date-partitioned files at high task

@@ -45,6 +45,13 @@ class TableSink(abc.ABC):
         """Append a batch (helpers.bulk analog, logsender.py:481)."""
 
 
+# sink columns whose values barely repeat within one file: a
+# dictionary page costs more than it saves, so they are written
+# plain. parquet-mr ignores a `#col` key that names no column, so a
+# test pins these names to IcebergTableSink.COLUMNS.
+NO_DICTIONARY_COLUMNS = ("message", "turn_idx")
+
+
 class ParquetDirSink(TableSink):
     """Hive-layout parquet directory partitioned by
     (sink, event_date) — the sandbox stand-in for the Iceberg table.
@@ -60,6 +67,12 @@ class ParquetDirSink(TableSink):
     def append(self, df: DataFrame) -> None:
         (
             df.write.mode("append")
+            .options(
+                **{
+                    f"parquet.enable.dictionary#{c}": "false"
+                    for c in NO_DICTIONARY_COLUMNS
+                }
+            )
             .partitionBy("sink", "event_date")
             .parquet(self.path)
         )

@@ -260,10 +260,24 @@ def test_stateful_sessionize_with_eviction(spark, tmp_path):
         1
     ).write.parquet(os.path.join(in_dir, "f1"))
 
-    # wait until BOTH convs have idled out (all state drained)
-    out = run_stateful_sessionize(
-        spark, in_dir + "/*", str(tmp_path / "stream_out"), wait_evictions=2
-    )
+    # wait until BOTH convs have idled out (all state drained). The
+    # session's shuffle count is raised above the core count so the
+    # state store's one-partition-per-core layout is visible.
+    key = "spark.sql.shuffle.partitions"
+    fixture_parts = spark.conf.get(key)
+    cores = spark.sparkContext.defaultParallelism
+    spark.conf.set(key, str(cores * 2 + 1))
+    try:
+        out = run_stateful_sessionize(
+            spark, in_dir + "/*", str(tmp_path / "stream_out"),
+            wait_evictions=2,
+        )
+        assert spark.conf.get(key) == str(cores * 2 + 1)
+    finally:
+        spark.conf.set(key, fixture_parts)
+    state_dir = tmp_path / "stream_out" / "_sess_ckpt" / "state" / "0"
+    parts = [p.name for p in state_dir.iterdir() if p.name.isdigit()]
+    assert sorted(map(int, parts)) == list(range(cores))
     rows_out = out.collect()
     evicted = {
         r["conv_id"]: r for r in rows_out if r["status"] == "evicted"
