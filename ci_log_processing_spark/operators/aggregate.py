@@ -12,6 +12,8 @@ that makes this viable at 10^12 turns.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -27,6 +29,16 @@ def hourly_agg(df: DataFrame) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
+
+
+def append_hourly_agg(df: DataFrame, output_dir: str, batch_id: str) -> None:
+    """Append hourly_agg(df), tagged with `batch_id`, to
+    `<output_dir>/agg_hourly/`. The batch job and every follow
+    micro-batch write this one flat table: top-level *.parquet files,
+    no partition or staging subdirectories, which readers glob."""
+    hourly_agg(df).withColumn("batch_id", F.lit(batch_id)).write.mode(
+        "append"
+    ).parquet(os.path.join(output_dir, "agg_hourly"))
 
 
 def sink_counts(df: DataFrame) -> DataFrame:
@@ -61,9 +73,13 @@ def rollup_hourly(df: DataFrame) -> DataFrame:
     ).agg(F.count(F.lit(1)).alias("cnt"), F.grouping_id().alias("grain"))
 
 
-def session_window_agg(df: DataFrame, gap_sec: int = 1800) -> DataFrame:
+# idle gap (seconds) that closes a session_window_agg session
+SESSION_GAP_SEC = 1800
+
+
+def session_window_agg(df: DataFrame) -> DataFrame:
     """EVENT-TIME session windows: turns whose gap to the previous
-    turn in the conversation is <= gap_sec merge into one session
+    turn in the conversation is <= SESSION_GAP_SEC merge into one session
     (Spark merges an event landing exactly at the current window end
     — verified empirically; the oracle's island rule is `diff > gap
     starts a new session` to match). Complements the count-based
@@ -76,13 +92,13 @@ def session_window_agg(df: DataFrame, gap_sec: int = 1800) -> DataFrame:
     exchange on conv_id + sort, same class as every other conv-keyed
     stage. session_end = last event + gap (Spark's window.end).
     """
-    if gap_sec <= 0:
-        raise ValueError("session_window_agg: gap_sec must be positive")
     return (
         df.filter(F.col("filled_ts").isNotNull())
         .groupBy(
             "conv_id",
-            F.session_window(F.col("filled_ts"), f"{gap_sec} seconds"),
+            F.session_window(
+                F.col("filled_ts"), f"{SESSION_GAP_SEC} seconds"
+            ),
         )
         .agg(
             F.count(F.lit(1)).alias("n_turns"),
@@ -100,31 +116,29 @@ def session_window_agg(df: DataFrame, gap_sec: int = 1800) -> DataFrame:
     )
 
 
-def sliding_window_agg(
-    df: DataFrame,
-    window_sec: int = 3600,
-    slide_sec: int = 1800,
-) -> DataFrame:
+# sliding_window_agg's window length and slide, in seconds; the
+# length must stay a multiple of the slide so the window set is
+# exactly the aligned grid both engines can enumerate
+SLIDING_WINDOW_SEC = 3600
+SLIDING_SLIDE_SEC = 1800
+
+
+def sliding_window_agg(df: DataFrame) -> DataFrame:
     """Overlapping (sliding) event-time windows — the smoothed
     rate/error-budget series a monitoring dashboard draws. Each event
-    lands in window_sec/slide_sec windows (2 here); F.window expands
-    them BEFORE the partial aggregate, so the exchange carries
+    lands in SLIDING_WINDOW_SEC/SLIDING_SLIDE_SEC windows (2); F.window
+    expands them BEFORE the partial aggregate, so the exchange carries
     groups x overlap rows, the same Expand-then-combine shape as the
-    rollup. window_sec must be a multiple of slide_sec so the window
-    set is exactly the aligned grid both engines can enumerate.
+    rollup.
     """
-    if window_sec % slide_sec != 0:
-        raise ValueError(
-            "sliding_window_agg: window_sec must be a multiple of slide_sec"
-        )
     return (
         df.filter(F.col("filled_ts").isNotNull())
         .groupBy(
             "sink",
             F.window(
                 F.col("filled_ts"),
-                f"{window_sec} seconds",
-                f"{slide_sec} seconds",
+                f"{SLIDING_WINDOW_SEC} seconds",
+                f"{SLIDING_SLIDE_SEC} seconds",
             ).alias("w"),
         )
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -889,7 +903,7 @@ def retention_cohorts(events: DataFrame, horizon_days: int = 90) -> DataFrame:
     )
 
 
-def log_templates(routed: DataFrame, min_count: int = 1) -> DataFrame:
+def log_templates(routed: DataFrame) -> DataFrame:
     """Drain-style log template mining (He 2017): collapse every
     whitespace-delimited token containing a digit to '<*>' and group
     identical masked messages — 'added port 808' / 'added port 1336'
@@ -920,7 +934,7 @@ def log_templates(routed: DataFrame, min_count: int = 1) -> DataFrame:
     template = F.regexp_replace(
         F.col("message"), r"\S*[0-9]\S*", "<*>"
     )
-    out = (
+    return (
         vis.select(
             template.alias("template"),
             F.col("message").alias("_m"),
@@ -933,15 +947,13 @@ def log_templates(routed: DataFrame, min_count: int = 1) -> DataFrame:
             F.min("_m").alias("example"),
         )
     )
-    if min_count > 1:
-        out = out.filter(F.col("n_msgs") >= min_count)
-    return out
 
 
-def event_funnel(
-    events: DataFrame,
-    steps: tuple[str, ...] = ("view", "click", "purchase"),
-) -> DataFrame:
+# event_funnel's ordered steps (event_type values)
+FUNNEL_STEPS = ("view", "click", "purchase")
+
+
+def event_funnel(events: DataFrame) -> DataFrame:
     """Ordered conversion funnel over raw events: step i counts the
     users whose FIRST qualifying step-i event happens at-or-after
     their first qualifying step-(i-1) event — the sequential rule
@@ -960,16 +972,14 @@ def event_funnel(
     Output: (step, step_name, n_users, conv_milli) where conv_milli
     = (n_users * 1000) div previous step's n_users (NULL for step 1).
     """
-    if len(steps) < 2:
-        raise ValueError("event_funnel: need at least 2 steps")
     u, t = F.col("user_id"), F.col("ts")
     cur = (
-        events.filter(F.col("event_type") == steps[0])
+        events.filter(F.col("event_type") == FUNNEL_STEPS[0])
         .groupBy(u.alias("_u"))
         .agg(F.min(t).alias("_t"))
     )
     tiers = [cur]
-    for s in steps[1:]:
+    for s in FUNNEL_STEPS[1:]:
         nxt = (
             events.filter(F.col("event_type") == s)
             .select(u.alias("_u"), t.alias("_ts"))
@@ -982,7 +992,7 @@ def event_funnel(
     from pyspark.sql.window import Window
 
     counts = None
-    for i, (s, tier) in enumerate(zip(steps, tiers)):
+    for i, (s, tier) in enumerate(zip(FUNNEL_STEPS, tiers)):
         one = tier.agg(
             F.lit(i + 1).alias("step"),
             F.lit(s).alias("step_name"),
@@ -1007,11 +1017,12 @@ def event_funnel(
     )
 
 
-def cusum_error_drift(
-    routed: DataFrame,
-    k_per_hour: int = 2,
-    h_threshold: int = 6,
-) -> DataFrame:
+# cusum_error_drift's allowance k (errors per hour) and alarm level h
+CUSUM_K_PER_HOUR = 2
+CUSUM_H_THRESHOLD = 6
+
+
+def cusum_error_drift(routed: DataFrame) -> DataFrame:
     """CUSUM (Page 1954) level-shift detection on per-subsystem
     hourly error counts: S_t = max(0, S_{t-1} + x_t - k), alarm when
     S_t > h. The sequential complement of the z-score / MAD SPIKE
@@ -1049,7 +1060,7 @@ def cusum_error_drift(
         .orderBy("window_start")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    p = F.sum(F.col("cnt") - F.lit(int(k_per_hour))).over(w)
+    p = F.sum(F.col("cnt") - F.lit(CUSUM_K_PER_HOUR)).over(w)
     stepped = hourly.select(
         "subsystem", "window_start", "cnt", p.alias("_p"),
         F.min(p).over(w).alias("_rmin"),
@@ -1060,7 +1071,7 @@ def cusum_error_drift(
         "window_start",
         "cnt",
         cusum.alias("cusum"),
-        (cusum > int(h_threshold)).alias("alarm"),
+        (cusum > CUSUM_H_THRESHOLD).alias("alarm"),
     )
 
 
@@ -1129,15 +1140,15 @@ def sessionize_events(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     )
 
 
-def slo_burn_alert(
-    routed: DataFrame,
-    slo_milli: int = 50,
-    long_hours: int = 6,
-) -> DataFrame:
+# trailing window of slo_burn_alert's long burn rate, in hours
+SLO_LONG_HOURS = 6
+
+
+def slo_burn_alert(routed: DataFrame, slo_milli: int = 50) -> DataFrame:
     """Multi-window error-budget burn alert (the SRE-book
     multiwindow-multiburn rule): per hour, the SHORT burn is that
     hour's error fraction and the LONG burn is the trailing
-    `long_hours` fraction; the alert fires only when BOTH exceed the
+    SLO_LONG_HOURS fraction; the alert fires only when BOTH exceed the
     SLO — the short window gives fast detection, the long window
     stops a single noisy hour from paging. Rates are exact integer
     milli (errors * 1000 div total).
@@ -1168,7 +1179,7 @@ def slo_burn_alert(
             ).alias("n_errors"),
         )
     )
-    span = (int(long_hours) - 1) * 3600
+    span = (SLO_LONG_HOURS - 1) * 3600
     w = (
         Window.orderBy(
             F.expr(
@@ -1230,12 +1241,8 @@ def merge_agg_deltas(
     )
 
 
-def volume_trend(
-    df: DataFrame,
-    group_cols: list[str] | None = None,
-    sink: str | None = None,
-) -> DataFrame:
-    """Per-group daily volume TREND: the ordinary-least-squares
+def volume_trend(df: DataFrame) -> DataFrame:
+    """Per-sink daily volume TREND: the ordinary-least-squares
     slope of daily row counts against the day index — the
     capacity-planning companion to the three burst detectors
     (`error_spike_hours` finds hours that jump, the MAD variant
@@ -1243,9 +1250,8 @@ def volume_trend(
     finds sustained level SHIFTS; this one quantifies the steady
     drift itself: "volume in group X grows by N/day"). The
     reference answers this by eyeballing its dashboard time series
-    (logscraper.py:295-304 gauges). Group on sink for the routing
-    fan-out's growth, or on (subsystem, severity) with sink='errors'
-    for the error drill-down.
+    (logscraper.py:295-304 gauges); grouped on sink, it is the routing
+    fan-out's growth.
 
     The slope runs in EXACT integer arithmetic so the DuckDB oracle
     matches bit-for-bit: with x = days-since-epoch and y = daily
@@ -1260,26 +1266,22 @@ def volume_trend(
     daily errors. Singleton subsystems (n == 1, den == 0) emit NULL.
 
     Scale shape: one partial+final hash aggregate on
-    (group_cols, day) — shuffled volume is distinct groups, not rows
-    — then a group-keyed rollup over those GROUP rows computes the
+    (sink, day) — shuffled volume is distinct groups, not rows
+    — then a sink-keyed rollup over those GROUP rows computes the
     five OLS sums. Nothing row-sized crosses the second exchange;
     the plan class is independent of corpus size.
 
-    Output: (group_cols..., n_days, first_day, last_day, total_rows,
+    Output: (sink, n_days, first_day, last_day, total_rows,
     slope_milli).
     """
-    if group_cols is None:
-        group_cols = ["sink"]
-    if sink is not None:
-        df = df.filter(F.col("sink") == sink)
     daily = (
         df.groupBy(
-            *group_cols,
+            "sink",
             F.to_date(F.col("filled_ts")).alias("day"),
         )
         .agg(F.count(F.lit(1)).alias("n"))
         .select(
-            *group_cols,
+            "sink",
             "day",
             "n",
             F.datediff(F.col("day"), F.lit("1970-01-01")).cast(
@@ -1287,7 +1289,7 @@ def volume_trend(
             ).alias("x"),
         )
     )
-    sums = daily.groupBy(*group_cols).agg(
+    sums = daily.groupBy("sink").agg(
         F.count(F.lit(1)).alias("n_days"),
         F.min("day").alias("first_day"),
         F.max("day").alias("last_day"),
@@ -1299,7 +1301,7 @@ def volume_trend(
     )
     den = F.col("n_days") * F.col("_sxx") - F.col("_sx") * F.col("_sx")
     return sums.select(
-        *group_cols,
+        "sink",
         "n_days",
         # serialized yyyy-MM-dd so both engines emit the same string
         # (a DATE cell round-trips through pandas differently)
@@ -1331,7 +1333,13 @@ def cube_hourly(df: DataFrame) -> DataFrame:
     ).agg(F.count(F.lit(1)).alias("cnt"), F.grouping_id().alias("grain"))
 
 
-def ewma_alerts(df: DataFrame, window: int = 16, slack: int = 5) -> DataFrame:
+# EWMA detector: lags in the smoothing frame, and the alert's
+# absolute floor in events per hour
+EWMA_WINDOW = 16
+EWMA_SLACK = 5
+
+
+def ewma_alerts(df: DataFrame) -> DataFrame:
     """EWMA control chart over hourly volumes — the fourth classic
     of the anomaly family next to the two-sigma z (error_spike), MAD
     (error_spike_mad) and CUSUM (cusum_drift): smooth the recent
@@ -1341,7 +1349,7 @@ def ewma_alerts(df: DataFrame, window: int = 16, slack: int = 5) -> DataFrame:
     CUSUM, needs no target mean.
 
     Integer-exact formulation (alpha = 1/2): the truncated EWMA over
-    the last m <= `window` OBSERVED hours (row lags, not calendar
+    the last m <= EWMA_WINDOW OBSERVED hours (row lags, not calendar
     lags — gaps in the series are documented semantics, matching the
     other three detectors) with weights 2^(i-1) for the i-th oldest
     lag, renormalized over the available mass:
@@ -1350,13 +1358,13 @@ def ewma_alerts(df: DataFrame, window: int = 16, slack: int = 5) -> DataFrame:
 
     (geometric halving: the newest lag carries ~half the mass). The
     alert is a pure int64 predicate — 1000*cnt > 2*ewma_milli +
-    1000*slack — i.e. the hour more than DOUBLES the smoothed
-    baseline with an absolute floor of `slack` to mute cold groups.
+    1000*EWMA_SLACK — i.e. the hour more than DOUBLES the smoothed
+    baseline with an absolute floor of EWMA_SLACK to mute cold groups.
     First observed hour per group has no lags: ewma NULL, no alert.
 
     Scale shape: one partial+final count aggregate (hours x groups
     shuffled, never rows), then one group-keyed window whose frame
-    holds <= `window` int64s — bounded state per row, the same
+    holds <= EWMA_WINDOW int64s — bounded state per row, the same
     bounded-frame argument as context_windows.
     """
     from pyspark.sql.window import Window
@@ -1365,17 +1373,10 @@ def ewma_alerts(df: DataFrame, window: int = 16, slack: int = 5) -> DataFrame:
         "sink",
         F.date_trunc("hour", F.col("filled_ts")).alias("window_start"),
     ).agg(F.count(F.lit(1)).alias("cnt"))
-    return ewma_over_counts(
-        hourly, window=window, slack=slack
-    )
+    return ewma_over_counts(hourly)
 
 
-def ewma_over_counts(
-    hourly: DataFrame,
-    group_col: str = "sink",
-    window: int = 16,
-    slack: int = 5,
-) -> DataFrame:
+def ewma_over_counts(hourly: DataFrame, group_col: str = "sink") -> DataFrame:
     """The EWMA window stage alone, over a PRECOMPUTED
     (group, window_start, cnt) series — factored out so any counts
     source feeds the same detector: the batch aggregate above, OR
@@ -1387,12 +1388,10 @@ def ewma_over_counts(
     detector bit-for-bit)."""
     from pyspark.sql.window import Window
 
-    if window < 1:
-        raise ValueError(f"ewma_alerts: window={window} < 1")
     w = (
         Window.partitionBy(group_col)
         .orderBy("window_start")
-        .rowsBetween(-window, -1)
+        .rowsBetween(-EWMA_WINDOW, -1)
     )
     lags = F.collect_list("cnt").over(w)
     # Horner fold over the reversed frame: acc*2 + x walked from the
@@ -1423,7 +1422,7 @@ def ewma_over_counts(
             (F.col("_m") > 0)
             & (
                 1000 * F.col("cnt")
-                > 2 * ewma + F.lit(1000 * slack)
+                > 2 * ewma + F.lit(1000 * EWMA_SLACK)
             )
         ).alias("alert"),
     )

@@ -44,7 +44,6 @@ def asof_join(
     on: list[str],
     value_cols: list[str],
     seq_col: str | None = None,
-    tolerance_sec: int | None = None,
     direction: str = "backward",
 ) -> DataFrame:
     """As-of join: left rows gain `value_cols` from the closest
@@ -57,8 +56,6 @@ def asof_join(
     seq_col: deterministic tie-breaker among right rows sharing
     (on, ts) — the row with the greatest seq_col wins. When None,
     (on, ts) must already be unique on `right`.
-    tolerance_sec: when set, matches older than this many seconds
-    are nulled out (pandas merge_asof `tolerance` semantics).
 
     A NULL in a right row's value column is treated as "no update"
     (the forward-fill skips it to the previous non-null state) — the
@@ -125,31 +122,8 @@ def asof_join(
         F.last(F.col(c), ignorenulls=True).over(w).alias(c)
         for c in value_cols
     ]
-    matched_ts = F.last(
-        F.when(F.col("_side") == 0, F.col("_asof_ts")), ignorenulls=True
-    ).over(w)
-
     out = merged.select(
         *[c for c in merged.columns if c not in value_cols],
         *filled,
-        matched_ts.alias("_matched_ts"),
     ).filter(F.col("_side") == 1)
-
-    if tolerance_sec is not None:
-        # the ltz hop keeps the epoch cast legal under ANSI when the
-        # inputs are TIMESTAMP_NTZ (no-op for ltz)
-        gap = (
-            F.col("_asof_ts").cast("timestamp_ltz").cast("long")
-            - F.col("_matched_ts").cast("timestamp_ltz").cast("long")
-        )
-        stale = (gap if direction == "backward" else -gap) > F.lit(
-            tolerance_sec
-        )
-        out = out.select(
-            *[c for c in out.columns if c not in value_cols],
-            *[
-                F.when(stale, F.lit(None)).otherwise(F.col(c)).alias(c)
-                for c in value_cols
-            ],
-        )
-    return out.drop("_asof_ts", "_side", "_seq", "_matched_ts")
+    return out.drop("_asof_ts", "_side", "_seq")

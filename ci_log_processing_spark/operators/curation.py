@@ -306,16 +306,19 @@ def chunk_documents(
     )
 
 
-def token_length_histogram(
-    docs: DataFrame,
-    bucket_size: int = 16,
-) -> DataFrame:
+# token_length_histogram's bucket width, in tokens
+TOKEN_BUCKET_SIZE = 16
+
+
+def token_length_histogram(docs: DataFrame) -> DataFrame:
     """Whitespace-token length distribution in fixed buckets:
     (bucket_lo, n_docs, total_tokens). Scan + one partial-aggregated
-    shuffle on ~(max_len / bucket_size) groups — the canonical
+    shuffle on ~(max_len / TOKEN_BUCKET_SIZE) groups — the canonical
     "what does my corpus look like" statistic."""
     n_tok = _n_tokens("text")
-    lo = (F.floor(n_tok / bucket_size) * bucket_size).cast("long")
+    lo = (
+        F.floor(n_tok / TOKEN_BUCKET_SIZE) * TOKEN_BUCKET_SIZE
+    ).cast("long")
     return (
         docs.select(n_tok.alias("n"), lo.alias("bucket_lo"))
         .groupBy("bucket_lo")
@@ -404,11 +407,10 @@ def mixture_sample(
 def shuffle_index(
     docs: DataFrame,
     shard_size: int = 100,
-    seed: str = "shuf1",
     payload_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Deterministic GLOBAL training-order shuffle: assign every
-    document a dense permutation index 0..n-1 in md5(seed || id)
+    document a dense permutation index 0..n-1 in md5('shuf1' || id)
     order, plus its output shard — the "shuffle the corpus once,
     write fixed-size shards" step that fixes an epoch's data order.
 
@@ -436,7 +438,7 @@ def shuffle_index(
     """
     if shard_size < 1:
         raise ValueError("shuffle_index: shard_size must be >= 1")
-    key = _seeded_key(seed, "doc_id")
+    key = _seeded_key("shuf1", "doc_id")
     # The 32-char md5 sort key never crosses the wire: partition on
     # the 1-byte bucket FIRST (satisfying the window's required
     # hash distribution — no second exchange), then recompute the
@@ -608,12 +610,7 @@ def length_quantiles(docs: DataFrame, group_col: str = "source") -> DataFrame:
     )
 
 
-def priority_sample(
-    docs: DataFrame,
-    k: int,
-    weight_col: str = "n_chars",
-    seed: str = "prio",
-) -> DataFrame:
+def priority_sample(docs: DataFrame, k: int) -> DataFrame:
     """Priority sampling (Duffield, Lund & Thorup 2007): a weighted
     sample WITHOUT replacement of k items per group whose
     subset-sum estimator is unbiased — the principled way to keep
@@ -621,12 +618,13 @@ def priority_sample(
     be kept proportionally more often than short ones, while still
     being able to estimate any total over the dropped mass.
 
-    Priority q_i = w_i / u_i with u_i uniform in (0, 1]; keep the k
-    largest priorities; tau = the (k+1)-th priority; each survivor
+    Priority q_i = w_i / u_i with weight w_i = n_chars and u_i
+    uniform in (0, 1]; keep the k largest priorities; tau = the
+    (k+1)-th priority; each survivor
     estimates its weight class as w_hat = max(w_i, tau). Groups
     with <= k members keep everything (tau undefined -> w_hat = w).
 
-    Deterministic and engine-exact: u_i = (h32(seed||id) + 1) / 2^32
+    Deterministic and engine-exact: u_i = (h32('prio'||id) + 1) / 2^32
     so q_i = w_i * 2^32 / (h + 1) — the numerator w*2^32 stays below
     2^53 for any realistic weight (exactly representable), the
     denominator is an exact integer, and the single IEEE division is
@@ -643,9 +641,9 @@ def priority_sample(
         raise ValueError("priority_sample: k >= 1 required")
     from .dedup import h32
 
-    h = h32(F.concat(F.lit(seed), F.col("doc_id").cast("string")))
+    h = h32(F.concat(F.lit("prio"), F.col("doc_id").cast("string")))
     q = (
-        F.col(weight_col).cast("double")
+        F.col("n_chars").cast("double")
         * F.lit(4294967296.0)
         / (h + F.lit(1)).cast("double")
     )
@@ -653,7 +651,7 @@ def priority_sample(
     ranked = docs.select(
         "source",
         "doc_id",
-        F.col(weight_col).alias("w"),
+        F.col("n_chars").alias("w"),
         q.alias("priority"),
     ).withColumn(
         "_rn",
@@ -867,14 +865,14 @@ def sqrt_temperature_mixture(docs: DataFrame) -> DataFrame:
 # hash salt of the count-min sketch rows; the streaming twin
 # (streaming/cms_stream.py) must build the same cells
 CMS_SEED = "cms"
+# sketch shape (cells per row, rows) and the number of top tokens
+# a CMS query answers
+CMS_WIDTH = 512
+CMS_DEPTH = 4
+CMS_CANDIDATES_K = 20
 
 
-def cms_token_counts(
-    docs: DataFrame,
-    candidates_k: int = 20,
-    width: int = 512,
-    depth: int = 4,
-) -> DataFrame:
+def cms_token_counts(docs: DataFrame) -> DataFrame:
     """Count-min sketch (Cormode & Muthukrishnan 2005) over corpus
     token frequencies, answered for the top-k tokens with the exact
     count alongside — the MERGEABLE fixed-size frequency summary a
@@ -883,8 +881,9 @@ def cms_token_counts(
     registers in aggregate.py play for distinct counts).
 
     Construction is deterministic and engine-exact: row i of the
-    sketch hashes a token to cell h32(CMS_SEED||i||token) mod width and
-    sums occurrences; the estimate is min over the depth cells, so
+    sketch hashes a token to cell h32(CMS_SEED||i||token) mod CMS_WIDTH
+    and sums occurrences; the estimate is min over the CMS_DEPTH
+    cells, so
     cms_n >= exact_n always (one-sided error, the CMS guarantee the
     gate asserts row-by-row via `inflation`).
 
@@ -895,25 +894,24 @@ def cms_token_counts(
     BROADCAST of the tiny sketch back onto the k candidates. Nothing
     data-sized moves twice.
 
-    Output: (token, exact_n, cms_n, inflation, rank), rank 1..k by
-    exact count desc, token asc.
+    Output: (token, exact_n, cms_n, inflation, rank), rank
+    1..CMS_CANDIDATES_K by exact count desc, token asc.
     """
-    if width < 1 or depth < 1:
-        raise ValueError("cms_token_counts: width/depth must be >= 1")
     toks = docs.select(
         F.explode(tokens_col(F.col("text"))).alias("token")
     ).filter(F.col("token") != "")
     exact = toks.groupBy("token").agg(F.count(F.lit(1)).alias("exact_n"))
-    cells = cms_cell_array(width, depth, CMS_SEED)
     sketch = (
-        exact.select("exact_n", F.posexplode(cells).alias("i", "cell"))
+        exact.select(
+            "exact_n", F.posexplode(cms_cell_array()).alias("i", "cell")
+        )
         .groupBy("i", "cell")
         .agg(F.sum("exact_n").alias("cell_n"))
     )
-    return cms_estimate(exact, sketch, candidates_k, width, depth, CMS_SEED)
+    return cms_estimate(exact, sketch)
 
 
-def cms_cell_array(width: int, depth: int, seed: str) -> Column:
+def cms_cell_array() -> Column:
     """The depth hash cells of F.col('token') — ONE definition shared
     by the batch sketch, the streaming per-batch partials, and the
     DuckDB twin, so the cell layout can never drift between them."""
@@ -922,31 +920,27 @@ def cms_cell_array(width: int, depth: int, seed: str) -> Column:
     return F.array(
         *[
             F.pmod(
-                h32(F.concat(F.lit(f"{seed}{i}:"), F.col("token"))),
-                F.lit(width),
+                h32(F.concat(F.lit(f"{CMS_SEED}{i}:"), F.col("token"))),
+                F.lit(CMS_WIDTH),
             ).cast("int")
-            for i in range(depth)
+            for i in range(CMS_DEPTH)
         ]
     )
 
 
-def cms_estimate(
-    exact: DataFrame,
-    sketch: DataFrame,
-    candidates_k: int,
-    width: int,
-    depth: int,
-    seed: str,
-) -> DataFrame:
+def cms_estimate(exact: DataFrame, sketch: DataFrame) -> DataFrame:
     """Finish a CMS query: top-k candidates from the exact (token,
     exact_n) table (heap TakeOrderedAndProject, never a global sort),
     min over the candidate's depth cells from the broadcast sketch.
     Shared by cms_token_counts and the streaming partial merge."""
-    cells = cms_cell_array(width, depth, seed)
     order = [F.desc("exact_n"), F.asc("token")]
-    top = exact.orderBy(*order).limit(candidates_k)
+    top = exact.orderBy(*order).limit(CMS_CANDIDATES_K)
     est = (
-        top.select("token", "exact_n", F.posexplode(cells).alias("i", "cell"))
+        top.select(
+            "token",
+            "exact_n",
+            F.posexplode(cms_cell_array()).alias("i", "cell"),
+        )
         .join(F.broadcast(sketch), ["i", "cell"])
         .groupBy("token", "exact_n")
         .agg(F.min("cell_n").alias("cms_n"))
@@ -960,7 +954,7 @@ def cms_estimate(
     )
 
 
-def curriculum_order(docs: DataFrame, stage_col: str = "stage") -> DataFrame:
+def curriculum_order(docs: DataFrame) -> DataFrame:
     """Curriculum training order: a dense global index 0..n-1 that
     visits every stage-0 document (in deterministic pseudo-random
     order) before any stage-1 document, and so on — the "easy
@@ -984,7 +978,7 @@ def curriculum_order(docs: DataFrame, stage_col: str = "stage") -> DataFrame:
     keyed = (
         docs.select(
             "doc_id",
-            F.col(stage_col).cast("int").alias("stage"),
+            F.col("stage").cast("int").alias("stage"),
             F.conv(F.substring(key, 1, 2), 16, 10)
             .cast("int")
             .alias("_bkt"),
@@ -1014,15 +1008,14 @@ def curriculum_order(docs: DataFrame, stage_col: str = "stage") -> DataFrame:
     )
 
 
-def leakage_safe_split(
-    docs: DataFrame,
-    test_permille: int = 100,
-    group_col: str = "source",
-    seed: str = "split1",
-) -> DataFrame:
+# share of source groups leakage_safe_split draws into the test side
+LEAKAGE_TEST_PERMILLE = 100
+
+
+def leakage_safe_split(docs: DataFrame) -> DataFrame:
     """Held-out split with a contamination quarantine — the GPT-3
     appendix-C recipe: carve the evaluation set out at the GROUP
-    level (hash of `group_col`, so a domain's near-identical pages
+    level (hash of `source`, so a domain's near-identical pages
     can never straddle the boundary), then scrub the TRAIN side of
     any document sharing a 5-token shingle with ANY test document.
     A naive per-doc random split fails both ways: same-source
@@ -1030,8 +1023,9 @@ def leakage_safe_split(
     eval text into training.
 
     Deterministic like mixture_sample: a group is test iff
-    h32(seed || group) % 1000 < test_permille — re-runs, incremental
-    re-ingest, and the DuckDB oracle all draw the same split.
+    h32('split1' || source) % 1000 < LEAKAGE_TEST_PERMILLE — re-runs,
+    incremental re-ingest, and the DuckDB oracle all draw the same
+    split.
 
     Scale shape: the split draw is one codegen md5 per row (zero
     shuffles); the quarantine is the overlap_decontaminate shape —
@@ -1056,12 +1050,12 @@ def leakage_safe_split(
     steady-state): 13.1 s -> 1.2 s (~11x; persist kills the repeated
     shingle passes, the lean output join kills the array shuffle).
 
-    Output: every input doc as (id, group, split) with split in
+    Output: every input doc as (id, source, split) with split in
     {'test', 'train', 'quarantined'}."""
     from .dedup import _register_persist, h32, shingles_col
 
-    u = h32(F.concat(F.lit(seed), F.col(group_col)))
-    is_test = (u % 1000 < test_permille).alias("is_test")
+    u = h32(F.concat(F.lit("split1"), F.col("source")))
+    is_test = (u % 1000 < LEAKAGE_TEST_PERMILLE).alias("is_test")
     shingled = _register_persist(
         docs.select(
             "doc_id",
@@ -1085,10 +1079,10 @@ def leakage_safe_split(
         .distinct()
         .withColumn("_hit", F.lit(True))
     )
-    meta = docs.select("doc_id", F.col(group_col).alias("grp"), is_test)
+    meta = docs.select("doc_id", "source", is_test)
     return meta.join(hits, "doc_id", "left").select(
         "doc_id",
-        F.col("grp").alias(group_col),
+        "source",
         F.when(F.col("is_test"), F.lit("test"))
         .when(F.col("_hit").isNotNull(), F.lit("quarantined"))
         .otherwise(F.lit("train"))
@@ -1096,9 +1090,13 @@ def leakage_safe_split(
     )
 
 
-def _bigram_buckets(toks: Column, n_buckets: int, seed: str) -> Column:
+# hashed-bigram feature buckets of the DSIR model
+DSIR_BUCKETS = 1024
+
+
+def _bigram_buckets(toks: Column) -> Column:
     """Hashed-bigram feature buckets for DSIR: bucket(w1, w2) =
-    h32(seed || ':' || w1 || ' ' || w2) mod n_buckets, one int per
+    h32('dsir1:' || w1 || ' ' || w2) mod DSIR_BUCKETS, one int per
     bigram INSTANCE (positions matter — repeated bigrams vote
     repeatedly, the paper's bag-of-hashed-ngrams). Empty array for
     docs with < 2 tokens. Pure per-row expression — zero shuffle.
@@ -1121,18 +1119,14 @@ def _bigram_buckets(toks: Column, n_buckets: int, seed: str) -> Column:
             F.slice(toks, 1, n - 1),
             F.slice(toks, 2, n - 1),
             lambda a, b: F.pmod(
-                h32(F.concat(F.lit(f"{seed}:"), a, F.lit(" "), b)),
-                F.lit(n_buckets),
+                h32(F.concat(F.lit("dsir1:"), a, F.lit(" "), b)),
+                F.lit(DSIR_BUCKETS),
             ).cast("int"),
         ),
     ).otherwise(F.array().cast("array<int>"))
 
 
-def dsir_importance(
-    docs: DataFrame,
-    target: DataFrame,
-    n_buckets: int = 1024,
-) -> DataFrame:
+def dsir_importance(docs: DataFrame, target: DataFrame) -> DataFrame:
     """DSIR importance weights (Xie et al. 2023, "Data Selection for
     Language Models via Importance Resampling", NeurIPS): score every
     raw document by how much more likely its hashed-bigram features
@@ -1148,17 +1142,17 @@ def dsir_importance(
     weight is exact integer arithmetic both engines reproduce
     bit-for-bit:
 
-      bits_side(b)   = length(bin(total_side + n_buckets))
+      bits_side(b)   = length(bin(total_side + DSIR_BUCKETS))
                        - length(bin(cnt_side[b] + 1))
       dbits(b)       = bits_raw(b) - bits_target(b)      # log-ratio
       dsir_bits(doc) = sum over the doc's bigram instances of dbits
 
     Scale shape: per-row bucket arrays (zero shuffle), then TWO
     bucket-keyed partial+final aggregates whose outputs are <=
-    n_buckets rows each — the "model" is tiny BY CONSTRUCTION (the
-    hashing collapses any vocabulary into n_buckets cells; same
+    DSIR_BUCKETS rows each — the "model" is tiny BY CONSTRUCTION (the
+    hashing collapses any vocabulary into DSIR_BUCKETS cells; same
     bounded-state argument as the HDR sketch and kmeans centroids).
-    The <= n_buckets-row log-ratio table broadcasts back onto the
+    The <= DSIR_BUCKETS-row log-ratio table broadcasts back onto the
     instance stream (map-side, no shuffle), and the per-doc sum is
     ONE doc-keyed combine-friendly aggregate. The raw corpus is
     scanned twice (model build + scoring) — the deliberate trade at
@@ -1168,9 +1162,6 @@ def dsir_importance(
     Output: (doc_id, n_pairs, dsir_bits, bits_per_pair); docs with
     < 2 tokens are absent (no bigram evidence to weigh).
     """
-    if n_buckets < 1:
-        raise ValueError("dsir_importance: n_buckets must be >= 1")
-
     def _inst(df: DataFrame) -> DataFrame:
         # tokenize in ONE projection, bucket over the bound attribute
         # in the NEXT — _bigram_buckets' contract (see its docstring)
@@ -1180,7 +1171,7 @@ def dsir_importance(
         return toked.select(
             "doc_id",
             F.explode(
-                _bigram_buckets(F.col("_t"), n_buckets, "dsir1")
+                _bigram_buckets(F.col("_t"))
             ).alias("b"),
         )
 
@@ -1207,11 +1198,11 @@ def dsir_importance(
             "b",
             (
                 (
-                    blen(F.col("raw_total") + F.lit(n_buckets))
+                    blen(F.col("raw_total") + F.lit(DSIR_BUCKETS))
                     - blen(F.col("raw_n") + 1)
                 )
                 - (
-                    blen(F.col("tgt_total") + F.lit(n_buckets))
+                    blen(F.col("tgt_total") + F.lit(DSIR_BUCKETS))
                     - blen(F.coalesce(F.col("tgt_n"), F.lit(0)) + 1)
                 )
             )
@@ -1241,7 +1232,6 @@ def dsir_sample(
     docs: DataFrame,
     target: DataFrame,
     keep_permille: int = 250,
-    n_buckets: int = 1024,
 ) -> DataFrame:
     """DSIR selection: keep the top keep_permille/1000 of scoreable
     documents by importance weight (dsir_bits DESC, doc_id ASC tie
@@ -1274,11 +1264,7 @@ def dsir_sample(
     # subtree — persist the doc-sized result so the corpus-scan
     # pipeline underneath runs once (tfidf's tf-table pattern);
     # release with dedup.release_persisted() after consuming
-    w = _register_persist(
-        dsir_importance(
-            docs, target, n_buckets=n_buckets, 
-        )
-    )
+    w = _register_persist(dsir_importance(docs, target))
     m_row = w.agg(F.count(F.lit(1)).alias("_n")).select(
         F.expr(f"(_n * {keep_permille} + 999) div 1000").alias("_m")
     )
@@ -1786,7 +1772,6 @@ def epoch_plan(
     docs: DataFrame,
     target_tokens: float,
     weights: dict[str, float],
-    default_weight: float = 1.0,
     max_epochs: float = 4.0,
 ) -> DataFrame:
     """Multi-epoch mixture plan: given a token budget LARGER than the
@@ -1795,7 +1780,8 @@ def epoch_plan(
     Pretraining mixes repeat small high-quality sources several times
     but cap repetition (quality degrades past ~4 epochs), so:
 
-        desired_s = target_tokens * w_s / sum(w)     (over observed sources)
+        desired_s = target_tokens * w_s / sum(w)     (over observed sources;
+                                                      w_s = 1 when unlisted)
         epochs_s  = min(max_epochs, desired_s / available_s)
         planned_s = min(desired_s, max_epochs * available_s)
 
@@ -1813,11 +1799,9 @@ def epoch_plan(
     for src, w in weights.items():
         if w <= 0:
             raise ValueError(f"epoch_plan: weight for {src!r} must be > 0")
-    if default_weight <= 0:
-        raise ValueError("epoch_plan: default_weight must be > 0")
     if max_epochs <= 0:
         raise ValueError("epoch_plan: max_epochs must be > 0")
-    wexpr: Column = F.lit(float(default_weight))
+    wexpr: Column = F.lit(1.0)
     for src, w in weights.items():
         wexpr = F.when(F.col("source") == src, F.lit(float(w))).otherwise(
             wexpr
@@ -1887,15 +1871,11 @@ def quantile_normalize(docs: DataFrame, score_col: str) -> DataFrame:
     )
 
 
-def k_anonymity_audit(
-    docs: DataFrame,
-    k: int = 5,
-    bucket_col: str | None = "n_chars",
-) -> DataFrame:
+def k_anonymity_audit(docs: DataFrame, k: int = 5) -> DataFrame:
     """k-anonymity audit over quasi-identifier combinations
     (Sweeney 2002): group the corpus by the quasi-identifier tuple
-    (source, lang, plus an optional numeric bucketized by 100 — raw
-    lengths are themselves identifying) and flag combinations with
+    (source, lang, n_chars bucketized by 100 — raw lengths are
+    themselves identifying) and flag combinations with
     fewer than k members. The privacy companion to pii_scrub: PII
     regexes catch direct identifiers, this catches the doc whose
     (source, lang, length-bucket) combination is unique enough to
@@ -1906,31 +1886,28 @@ def k_anonymity_audit(
     exposure share (n_docs of at-risk combos) live in the output, so
     the release decision needs no second pass.
 
-    Output: (source, lang, [len_bucket], n_docs, at_risk).
+    Output: (source, lang, len_bucket, n_docs, at_risk).
     """
-    names = ["source", "lang"]
-    keys = [F.col(c) for c in names]
-    if bucket_col is not None:
-        keys.append(F.expr(f"{bucket_col} div 100").alias("len_bucket"))
-        names.append("len_bucket")
     return (
-        docs.select(*keys)
-        .groupBy(*names)
+        docs.select(
+            "source", "lang", F.expr("n_chars div 100").alias("len_bucket")
+        )
+        .groupBy("source", "lang", "len_bucket")
         .agg(F.count(F.lit(1)).alias("n_docs"))
         .withColumn("at_risk", F.col("n_docs") < k)
     )
 
 
-def stratified_split(
-    docs: DataFrame,
-    val_pct: int = 10,
-    test_pct: int = 10,
-    seed: str = "split1",
-) -> DataFrame:
+# stratified_split's per-stratum val and test shares, in percent
+STRATIFIED_VAL_PCT = 10
+STRATIFIED_TEST_PCT = 10
+
+
+def stratified_split(docs: DataFrame) -> DataFrame:
     """EXACT-proportion stratified train/val/test assignment: within
-    every stratum, exactly floor(n * test_pct / 100) documents go to
-    test and floor(n * val_pct / 100) to val, chosen in
-    deterministic md5 pseudo-random order — the held-out-set
+    every stratum, exactly floor(n * STRATIFIED_TEST_PCT / 100)
+    documents go to test and floor(n * STRATIFIED_VAL_PCT / 100) to
+    val, chosen in deterministic md5 pseudo-random order — the held-out-set
     construction an eval pipeline needs when per-stratum proportions
     must be exact, not expected. This is the exact-count complement
     of `leakage_safe_split` (hash-threshold draw: unbiased but only
@@ -1942,9 +1919,8 @@ def stratified_split(
     cut-offs, not by hash threshold, so proportions hold exactly in
     every stratum however skewed the stratum sizes: rank <= n_test ->
     test, <= n_test + n_val -> val, else train. The rank key is
-    md5(seed || id) with the id as tie-break — re-runs and the oracle
-    reproduce the assignment bit-for-bit, and changing the seed
-    redraws the split without touching the code.
+    md5('split1' || id) with the id as tie-break — re-runs and the
+    oracle reproduce the assignment bit-for-bit.
 
     Scale shape: ONE stratum-keyed exchange shared by the row_number
     window and the count window (same partition key); the md5 rank
@@ -1955,16 +1931,7 @@ def stratified_split(
     Output: (doc_id, source, split) — split in
     {'train','val','test'}.
     """
-    if val_pct < 0 or test_pct < 0 or val_pct + test_pct >= 100:
-        raise ValueError(
-            "stratified_split: need val_pct, test_pct >= 0 and "
-            "val_pct + test_pct < 100"
-        )
-    rank_key = F.md5(
-        F.concat(
-            F.lit(seed), F.col("doc_id").cast("string")
-        ).cast("binary")
-    )
+    rank_key = _seeded_key("split1", "doc_id")
     w = Window.partitionBy("source").orderBy(rank_key, "doc_id")
     wn = Window.partitionBy("source")
     ranked = docs.select(
@@ -1973,8 +1940,8 @@ def stratified_split(
         F.row_number().over(w).alias("_rk"),
         F.count(F.lit(1)).over(wn).alias("_n"),
     )
-    n_test = F.expr(f"(_n * {int(test_pct)}) div 100")
-    n_val = F.expr(f"(_n * {int(val_pct)}) div 100")
+    n_test = F.expr(f"(_n * {STRATIFIED_TEST_PCT}) div 100")
+    n_val = F.expr(f"(_n * {STRATIFIED_VAL_PCT}) div 100")
     return ranked.select(
         "doc_id",
         "source",
@@ -1985,7 +1952,11 @@ def stratified_split(
     )
 
 
-def length_batches(docs: DataFrame, batch_size: int = 8) -> DataFrame:
+# documents per length_batches training batch
+LENGTH_BATCH_SIZE = 8
+
+
+def length_batches(docs: DataFrame) -> DataFrame:
     """Length-bucketed training-batch construction with a padding-
     waste report: within every group, documents sort by token count
     DESCENDING (id tie-break) and chunk into fixed-size batches — the
@@ -2007,13 +1978,11 @@ def length_batches(docs: DataFrame, batch_size: int = 8) -> DataFrame:
     key is a superset of the window's partition key, so co-location
     is already satisfied — subset-key reuse, no second exchange).
     Batch ids are per-group sequential integers: (rank - 1) div
-    batch_size.
+    LENGTH_BATCH_SIZE.
 
     Output: (source, batch_id, n_docs, max_tokens, min_tokens,
     sum_tokens, pad_waste_milli).
     """
-    if batch_size < 1:
-        raise ValueError("length_batches: batch_size must be >= 1")
     n_tok = F.size(F.split(F.col("text"), " ")).cast("long")
     w = (
         Window.partitionBy("source")
@@ -2024,7 +1993,7 @@ def length_batches(docs: DataFrame, batch_size: int = 8) -> DataFrame:
         .withColumn("_rk", F.row_number().over(w))
         .withColumn(
             "batch_id",
-            F.expr(f"(_rk - 1) div {int(batch_size)}").cast("long"),
+            F.expr(f"(_rk - 1) div {LENGTH_BATCH_SIZE}").cast("long"),
         )
     )
     agg = toks.groupBy("source", "batch_id").agg(

@@ -137,37 +137,19 @@ def shingles_col(toks: Column, k: int = 5) -> Column:
     )
 
 
-def shingled_docs(
-    docs: DataFrame, k: int, impl: str = "arrow"
-) -> DataFrame:
+def shingled_docs(docs: DataFrame, k: int) -> DataFrame:
     """(doc_id, shingles) for every doc with >= k tokens — the ONE
     shingling entry point all LSH/Jaccard operators share.
 
-    impl="arrow" (default): one mapInPandas pass building each doc's
-    distinct-shingle list with a plain Python set — profiling showed
-    shingling IS the whole LSH cost (the signature/band/verify tiers
-    are noise next to it), and the Catalyst version's per-shingle
+    One mapInPandas pass builds each doc's distinct-shingle list with
+    a plain Python set — profiling showed shingling IS the whole LSH
+    cost (the signature/band/verify tiers are noise next to it), and
+    the pure-Catalyst shingles_col expression's per-shingle
     slice+concat allocations inside interpreted lambdas measured
-    13.7x slower at 600k docs. Same first-occurrence order, same
-    set (pytest-asserted equal); downstream consumers are
+    13.7x slower at 600k docs. Same first-occurrence order, same set
+    as shingles_col (pytest-asserted equal); downstream consumers are
     order-insensitive anyway (array_min, array_intersect, unnest).
-
-    impl="native": the pure-Catalyst shingles_col expression.
     """
-    if impl == "native":
-        # tokens in their own projection: shingles_col's interpreted
-        # lambda re-evaluates captured children per element, so
-        # passing split(text) directly re-tokenizes at every shingle
-        # position (part of the measured 13.7x vs Arrow)
-        return (
-            docs.select(
-                "doc_id", tokens_col(F.col("text")).alias("_lt")
-            )
-            .select(
-                "doc_id", shingles_col(F.col("_lt"), k).alias("shingles")
-            )
-            .filter(F.size("shingles") > 0)
-        )
     from pyspark.sql.types import (
         ArrayType,
         LongType,
@@ -302,46 +284,41 @@ def incremental_dedup(
     return firsts.join(known_hashes.select("h"), "h", "left_anti")
 
 
-DEFAULT_SHINGLE_DF_CUT = 128
+# shingles held by more documents than this generate no candidates
+SHINGLE_DF_CUT = 128
 
 
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    threshold: float = 0.6,
-    df_cut: int | None = DEFAULT_SHINGLE_DF_CUT,
-) -> DataFrame:
+def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.6) -> DataFrame:
     """Near-dup pairs by Jaccard over distinct SHINGLE_K-token shingles.
 
     Two-phase shape that survives natural text at 100 TB:
 
       1. CANDIDATE GENERATION over the inverted index restricted to
-         shingles with document frequency <= df_cut. Without the cut,
-         one stop-shingle appearing in f docs creates f^2 candidate
-         pairs — quadratic blow-up on exactly the corpora dedup is
-         for. With it, per-shingle fan-out is bounded by df_cut^2.
+         shingles with document frequency <= SHINGLE_DF_CUT. Without
+         the cut, one stop-shingle appearing in f docs creates f^2
+         candidate pairs — quadratic blow-up on exactly the corpora
+         dedup is for. With it, per-shingle fan-out is bounded by
+         SHINGLE_DF_CUT^2.
       2. EXACT VERIFY of candidates only: join each side's distinct
          shingle ARRAY and compute true Jaccard via array_intersect
          (all shingles, including frequent ones, count here — the
          cut only gates which pairs get looked at).
 
     Recall impact: a pair is missed only when EVERY shingle it
-    shares has df > df_cut; near-duplicates at jaccard >= 0.6 share
-    most of their shingles, which are overwhelmingly rare, so recall
-    loss is negligible (and zero on the oracle-checked corpus — the
-    DuckDB twin implements the identical rule). df_cut=None disables
-    the cut for small corpora.
+    shares has df > SHINGLE_DF_CUT; near-duplicates at jaccard >= 0.6
+    share most of their shingles, which are overwhelmingly rare, so
+    recall loss is negligible (and zero on the oracle-checked corpus —
+    the DuckDB twin implements the identical rule).
     """
     arr = shingled_docs(docs, SHINGLE_K)
     sh = arr.select("doc_id", F.explode("shingles").alias("s"))
-    idx = sh
-    if df_cut is not None:
-        rare = (
-            sh.groupBy("s")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") <= df_cut)
-            .select("s")
-        )
-        idx = sh.join(rare, "s", "left_semi")
+    rare = (
+        sh.groupBy("s")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .filter(F.col("df") <= SHINGLE_DF_CUT)
+        .select("s")
+    )
+    idx = sh.join(rare, "s", "left_semi")
     a = idx.alias("a")
     b = idx.alias("b")
     cand = (
@@ -796,11 +773,11 @@ def _release(fresh) -> None:
         rdd.unpersist(False)
 
 
-def duplicate_components(
-    pairs: DataFrame,
-    nodes: DataFrame,
-    max_iter: int = 25,
-) -> DataFrame:
+# propagation rounds duplicate_components runs before it gives up
+COMPONENTS_MAX_ITER = 25
+
+
+def duplicate_components(pairs: DataFrame, nodes: DataFrame) -> DataFrame:
     """Connected components over a duplicate-pair edge list — the
     step that turns pairwise dedup output (exact / minhash / simhash
     pairs) into keep-drop decisions: one component = one duplicate
@@ -820,7 +797,7 @@ def duplicate_components(
     detected by sum(label): labels only ever decrease, so the sum
     is strictly monotone until the fixed point — one cheap global
     aggregate per round instead of a join against the previous
-    labels. If max_iter rounds pass without reaching the fixed
+    labels. If COMPONENTS_MAX_ITER rounds pass without reaching the fixed
     point the result would be silently wrong (one cluster split
     into several, extra keepers), so the operator RAISES instead.
 
@@ -864,7 +841,7 @@ def duplicate_components(
     lbl_sum = F.sum(F.col("label").cast("decimal(38,0)"))
     prev_sum = labels.agg(lbl_sum).collect()[0][0]
     converged = False
-    for _ in range(max_iter):
+    for _ in range(COMPONENTS_MAX_ITER):
         nb = edges.join(labels, edges["dst"] == labels["node"]).select(
             edges["src"].alias("node"), "label"
         )
@@ -884,9 +861,9 @@ def duplicate_components(
     if not converged:
         _release(labels_rdds)
         raise RuntimeError(
-            f"duplicate_components did not converge in {max_iter} rounds "
-            "(graph diameter exceeds max_iter); raise max_iter or use a "
-            "small-star/large-star formulation for chain-shaped graphs"
+            "duplicate_components did not converge in "
+            f"{COMPONENTS_MAX_ITER} rounds (graph diameter exceeds it); "
+            "chain-shaped graphs need a small-star/large-star formulation"
         )
     return labels.select(
         F.col("node").alias("doc_id"),
@@ -1376,18 +1353,20 @@ def cdc_chunk_stats(
     )
 
 
-def winnow_fingerprints(
-    docs: DataFrame,
-    k: int = 4,
-    window: int = 4,
-) -> DataFrame:
+# winnowing's gram length k (tokens) and frame width (grams)
+WINNOW_K = 4
+WINNOW_WINDOW = 4
+
+
+def winnow_fingerprints(docs: DataFrame) -> DataFrame:
     """Winnowed document fingerprints (Schleimer, Wilkerson, Aiken
-    2003 — the MOSS local fingerprinting scheme): hash every k-token
-    gram, slide a `window`-wide frame over the hash sequence, and
-    keep the RIGHTMOST MINIMUM of each frame. Guarantees: any shared
-    run of window+k-1 tokens yields at least one shared fingerprint
-    (no blind spots, unlike minhash which is whole-doc), while
-    storing only ~2/(window+1) of the grams — the index stays a
+    2003 — the MOSS local fingerprinting scheme): hash every
+    WINNOW_K-token gram, slide a WINNOW_WINDOW-wide frame over the
+    hash sequence, and keep the RIGHTMOST MINIMUM of each frame.
+    Guarantees: any shared run of WINNOW_WINDOW+WINNOW_K-1 tokens
+    yields at least one shared fingerprint (no blind spots, unlike
+    minhash which is whole-doc), while storing only
+    ~2/(WINNOW_WINDOW+1) of the grams — the index stays a
     constant fraction of corpus size however long documents get.
 
     The rightmost-min rule is the tie-breaker that makes the
@@ -1397,7 +1376,7 @@ def winnow_fingerprints(
     positions with the frame start as init, DuckDB list_reduce over
     the same list (whose first element is the init).
 
-    Degenerate docs: fewer than k tokens -> no grams -> empty set;
+    Degenerate docs: fewer than WINNOW_K tokens -> no grams -> empty set;
     fewer hashes than the window -> every hash is selected (the
     whole doc is one frame).
 
@@ -1413,18 +1392,13 @@ def winnow_fingerprints(
     is evaluated once per outer element, i.e. exactly once.
 
     Scale shape: per-row array expressions only — zero shuffle; the
-    O(m*window) element_at fold is the Catalyst-twin reference
+    O(m*WINNOW_WINDOW) element_at fold is the Catalyst-twin reference
     formulation (a monotone-deque mapInPandas kernel is the
     single-pass production variant, same output by construction).
     Output: (doc_id, fps array<long>, n_fps).
     """
-    if k < 1:
-        raise ValueError("winnow_fingerprints: k must be >= 1")
-    if window < 1:
-        raise ValueError("winnow_fingerprints: window must be >= 1")
-
     def _kgrams(tv):
-        m = F.size(tv) - F.lit(k - 1)
+        m = F.size(tv) - F.lit(WINNOW_K - 1)
         return F.when(
             m >= 1,
             F.transform(
@@ -1434,7 +1408,7 @@ def winnow_fingerprints(
                         " ",
                         *[
                             F.element_at(tv, i + F.lit(off))
-                            for off in range(k)
+                            for off in range(WINNOW_K)
                         ],
                     )
                 ),
@@ -1446,27 +1420,23 @@ def winnow_fingerprints(
         all_pos = F.when(mm >= 1, F.sequence(F.lit(1), mm)).otherwise(
             F.array().cast("array<int>")
         )
-        if window == 1:
-            sel = all_pos
-        else:
-            # rightmost min of each frame: fold left->right over the
-            # frame positions with the frame start as init, replace
-            # on <= (a later equal hash wins — the MOSS rule)
-            sel = F.when(
-                mm >= F.lit(window),
-                F.transform(
-                    F.sequence(F.lit(1), mm - F.lit(window - 1)),
-                    lambda j: F.aggregate(
-                        F.sequence(j + 1, j + F.lit(window - 1)),
-                        j,
-                        lambda acc, p: F.when(
-                            F.element_at(kgv, p)
-                            <= F.element_at(kgv, acc),
-                            p,
-                        ).otherwise(acc),
-                    ),
+        # rightmost min of each frame: fold left->right over the
+        # frame positions with the frame start as init, replace on
+        # <= (a later equal hash wins — the MOSS rule)
+        sel = F.when(
+            mm >= F.lit(WINNOW_WINDOW),
+            F.transform(
+                F.sequence(F.lit(1), mm - F.lit(WINNOW_WINDOW - 1)),
+                lambda j: F.aggregate(
+                    F.sequence(j + 1, j + F.lit(WINNOW_WINDOW - 1)),
+                    j,
+                    lambda acc, p: F.when(
+                        F.element_at(kgv, p) <= F.element_at(kgv, acc),
+                        p,
+                    ).otherwise(acc),
                 ),
-            ).otherwise(all_pos)
+            ),
+        ).otherwise(all_pos)
         return F.array_distinct(
             F.transform(
                 F.array_distinct(sel), lambda p: F.element_at(kgv, p)
@@ -1482,12 +1452,7 @@ def winnow_fingerprints(
     )
 
 
-def winnow_pairs(
-    docs: DataFrame,
-    overlap_milli: int = 500,
-    k: int = 4,
-    window: int = 4,
-) -> DataFrame:
+def winnow_pairs(docs: DataFrame, overlap_milli: int = 500) -> DataFrame:
     """Near-dup pairs by winnowed-fingerprint overlap — the MOSS
     report: candidate pairs from the fingerprint inverted index
     (df-cut bounded, same quadratic-blow-up guard as
@@ -1498,20 +1463,20 @@ def winnow_pairs(
     it; that asymmetry is why plagiarism/provenance tooling uses
     containment.
 
-    Scale: the inverted index carries only the winnowed ~2/(w+1)
-    fraction of grams (vs EVERY gram in ngram_jaccard's index) —
-    same two-phase plan, index an order smaller.
+    Scale: the inverted index carries only the winnowed
+    ~2/(WINNOW_WINDOW+1) fraction of grams (vs EVERY gram in
+    ngram_jaccard's index) — same two-phase plan, index an order
+    smaller.
     Output: (doc_a, doc_b, n_shared, overlap_milli).
     """
     arr = _register_persist(
-        winnow_fingerprints(docs, k=k, window=window)
-        .filter(F.col("n_fps") > 0)
+        winnow_fingerprints(docs).filter(F.col("n_fps") > 0)
     )
     fp = arr.select("doc_id", F.explode("fps").alias("fp"))
     rare = (
         fp.groupBy("fp")
         .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") <= DEFAULT_SHINGLE_DF_CUT)
+        .filter(F.col("df") <= SHINGLE_DF_CUT)
         .select("fp")
     )
     idx = fp.join(rare, "fp", "left_semi")

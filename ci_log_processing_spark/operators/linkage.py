@@ -31,8 +31,8 @@ classic single-character edit distance, integer); pair identity is
 
 Scale shape (the 100 TB audit):
 - variant generation is a per-row array expression — key length is
-  capped at `key_len`, so fan-out is <= key_len + 1 rows per doc at
-  d=1 (<= ~key_len^2/2 at d=2, documented below), independent of
+  capped at KEY_LEN, so fan-out is <= KEY_LEN + 1 rows per doc at
+  d=1 (<= ~KEY_LEN^2/2 at d=2, documented below), independent of
   document size;
 - the join key is the 64-bit xxhash64 of the variant, NOT the
   variant string — the candidate shuffle moves (hash, doc_id) pairs
@@ -40,13 +40,9 @@ Scale shape (the 100 TB audit):
   exact verify discards;
 - candidate generation is one hash-aggregate on that hash (collect
   per bucket, expand i < j pairs in-bucket — no self-join, no sort)
-  — cost tracks fuzzy-duplicate density, never |docs|^2; `bucket_cap`
-  applies the same deterministic sub-bucket split as
-  minhash_lsh_pairs / simhash_pairs for corpora where one key
-  dominates (boilerplate titles), with the same documented recall
-  trade;
+  — cost tracks fuzzy-duplicate density, never |docs|^2;
 - verify is one codegen `levenshtein` per candidate pair on <=
-  key_len-char strings — bounded constant work per pair.
+  KEY_LEN-char strings — bounded constant work per pair.
 """
 
 from __future__ import annotations
@@ -56,31 +52,35 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def canonical_key(text_col: Column, key_len: int = 24) -> Column:
+# length cap of the canonical linkage key, in characters
+KEY_LEN = 24
+
+
+def canonical_key(text_col: Column) -> Column:
     """Short canonical linkage key: lowercase, alnum+space only,
-    single-spaced, first `key_len` chars. Pure Catalyst; the DuckDB
+    single-spaced, first KEY_LEN chars. Pure Catalyst; the DuckDB
     twin runs the identical chain (RE2-portable patterns).
 
-    The raw text is cut to 4*key_len chars BEFORE the regex chain:
+    The raw text is cut to 4*KEY_LEN chars BEFORE the regex chain:
     the key is a head-of-document identity (title/lead), and the
     regex replace is the operator's entire corpus-scale cost —
     measured 48 s of a 62 s end-to-end run at 1M x ~700-char docs
     when it scanned full texts (BASELINE.md round-4f), i.e. O(doc)
-    per row for a key that needs O(key_len). The 4x slack absorbs
+    per row for a key that needs O(KEY_LEN). The 4x slack absorbs
     junk characters the canonicalization deletes; a head with > 75%
     junk yields a shorter key (documented semantics, mirrored
     bit-for-bit by the oracle twin and test reference)."""
-    t = F.lower(F.substring(text_col, 1, 4 * key_len))
+    t = F.lower(F.substring(text_col, 1, 4 * KEY_LEN))
     t = F.regexp_replace(t, "[^a-z0-9 ]", "")
     t = F.regexp_replace(t, "  +", " ")
-    return F.substring(F.trim(t), 1, key_len)
+    return F.substring(F.trim(t), 1, KEY_LEN)
 
 
-def _delete_variants(key: Column, max_dist: int, key_len: int = 24) -> Column:
+def _delete_variants(key: Column, max_dist: int) -> Column:
     """All strings reachable by deleting <= max_dist characters,
     including the key itself — as one per-row array expression.
 
-    d=1 is UNROLLED into key_len static concat(substring, substring)
+    d=1 is UNROLLED into KEY_LEN static concat(substring, substring)
     expressions instead of a transform() lambda: higher-order
     functions run INTERPRETED in Spark (no codegen), and the
     interpreted string slicing was measured at ~65% of the whole
@@ -91,17 +91,17 @@ def _delete_variants(key: Column, max_dist: int, key_len: int = 24) -> Column:
     def deletes1_unrolled(s: Column) -> list[Column]:
         return [
             F.concat(
-                F.substring(s, 1, i - 1), F.substring(s, i + 1, key_len)
+                F.substring(s, 1, i - 1), F.substring(s, i + 1, KEY_LEN)
             )
-            for i in range(1, key_len + 1)
+            for i in range(1, KEY_LEN + 1)
         ]
 
     d1 = F.array_distinct(F.array(key, *deletes1_unrolled(key)))
     if max_dist == 1:
         return d1
     # d=2: deletes of every d<=1 variant via a transform lambda —
-    # the unrolled form would need key_len^2 static exprs. Fan-out is
-    # O(key_len^2 / 2) rows per doc and the lambda is interpreted;
+    # the unrolled form would need KEY_LEN^2 static exprs. Fan-out is
+    # O(KEY_LEN^2 / 2) rows per doc and the lambda is interpreted;
     # opt in only where recall at distance 2 pays the ~12x.
     def deletes1_lambda(s: Column) -> Column:
         return F.transform(
@@ -124,8 +124,6 @@ def _delete_variants(key: Column, max_dist: int, key_len: int = 24) -> Column:
 def symspell_pairs(
     docs: DataFrame,
     max_dist: int = 1,
-    key_len: int = 24,
-    bucket_cap: int | None = None,
 ) -> DataFrame:
     """All doc pairs whose canonical keys are within Levenshtein
     distance `max_dist`, via delete-neighborhood blocking.
@@ -149,13 +147,13 @@ def symspell_pairs(
             f"symspell_pairs: max_dist={max_dist} out of range [1, 2]"
         )
     keys = docs.select(
-        "doc_id", canonical_key(F.col("text"), key_len).alias("key")
+        "doc_id", canonical_key(F.col("text")).alias("key")
     )
     variants = keys.select(
         "doc_id",
         "key",
         F.explode(
-            _delete_variants(F.col("key"), max_dist, key_len)
+            _delete_variants(F.col("key"), max_dist)
         ).alias("variant"),
     ).select(
         "doc_id",
@@ -183,26 +181,8 @@ def symspell_pairs(
     # density, not corpus size. sort_array orders each bucket by
     # doc_id, so i < j gives doc_a < doc_b; the strict filter also
     # drops the (rare, hash-collision) self-pair.
-    group_keys = ["vh"]
-    if bucket_cap is not None:
-        wn = Window.partitionBy("vh")
-        nsub = F.ceil(
-            F.count(F.lit(1)).over(wn) / F.lit(float(bucket_cap))
-        ).cast("long")
-        variants = variants.withColumn(
-            "sub",
-            F.pmod(
-                F.conv(
-                    F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8),
-                    16,
-                    10,
-                ).cast("long"),
-                nsub,
-            ),
-        )
-        group_keys.append("sub")
     buckets = (
-        variants.groupBy(*group_keys)
+        variants.groupBy("vh")
         .agg(
             F.sort_array(
                 F.collect_list(F.struct("doc_id", "key"))

@@ -267,9 +267,13 @@ def audio_chunks(media: DataFrame) -> DataFrame:
     return audio.mapInPandas(chunk, AUDIO_CHUNK_SCHEMA)
 
 
-def frame_sample(media: DataFrame, n_frames: int = 4) -> DataFrame:
+# keyframes frame_sample takes from each video
+SAMPLED_FRAMES = 4
+
+
+def frame_sample(media: DataFrame) -> DataFrame:
     """Keyframe sampling for Y4M payloads: parse the real YUV4MPEG2
-    header for geometry, walk the FRAME markers, pick n_frames evenly
+    header for geometry, walk the FRAME markers, pick SAMPLED_FRAMES evenly
     spaced frames, and hash each sampled frame's real pixel bytes.
     `offset` is the byte position of the frame's pixel data inside
     the payload — what a real seek-based reader would use."""
@@ -293,8 +297,8 @@ def frame_sample(media: DataFrame, n_frames: int = 4) -> DataFrame:
                 w, h = int(params["W"]), int(params["H"])
                 fsz = w * h * 3 // 2
                 total = (len(b) - (nl + 1)) // (6 + fsz)
-                for i in range(n_frames):
-                    src = i * total // n_frames
+                for i in range(SAMPLED_FRAMES):
+                    src = i * total // SAMPLED_FRAMES
                     off = (nl + 1) + src * (6 + fsz) + 6
                     if b[off - 6:off] != b"FRAME\n":
                         raise ValueError(

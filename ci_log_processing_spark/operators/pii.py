@@ -87,13 +87,14 @@ def attach_pii(docs: DataFrame) -> DataFrame:
     return docs.withColumn("pii_text", text)
 
 
-def pii_scrub(docs: DataFrame, text_col: str = "pii_text") -> DataFrame:
-    """Per-kind PII counts (over the ORIGINAL text) + redacted text.
+def pii_scrub(docs: DataFrame) -> DataFrame:
+    """Per-kind PII counts (over the ORIGINAL `pii_text`, the column
+    attach_pii writes) + redacted text.
 
     Returns (doc_id, n_emails, n_ipv4, n_phones, n_ssns, n_pii,
     redacted).
     """
-    text = F.col(text_col)
+    text = F.col("pii_text")
     raw = [F.regexp_count(text, F.lit(rx)) for _, rx, _ in PII_RULES]
     counts = [
         c.alias(f"n_{stem}") for c, (stem, _, _) in zip(raw, PII_RULES)

@@ -19,7 +19,7 @@ Each (point, interval) pair can only meet in the point's one bin, so
 no post-join dedup is needed. Cost: the interval side is replicated
 ceil(len/W)+1 times — pick W near the typical interval length so the
 replication factor stays O(1). A deliberately hostile interval
-(len >> W) would silently explode rows, so `max_bins_per_interval`
+(len >> W) would silently explode rows, so MAX_BINS_PER_INTERVAL
 fails fast at runtime instead (raise_error inside the plan — the
 same guard style as the LSH bucket cap, operators/dedup.py).
 
@@ -34,6 +34,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# bins one interval may span before the join fails
+MAX_BINS_PER_INTERVAL = 1024
+
 
 def range_join_binned(
     points: DataFrame,
@@ -41,18 +44,12 @@ def range_join_binned(
     keys: list[str],
     point_ts: str = "ts",
     bin_sec: int = 3600,
-    max_bins_per_interval: int = 1024,
-    how: str = "inner",
 ) -> DataFrame:
-    """Join each point row to every interval row (same `keys`) whose
-    [start_ts, end_ts] contains point_ts; inclusive both ends.
-    `how` is "inner" or "left" (left keeps unmatched points with
-    NULL interval columns).
+    """Inner-join each point row to every interval row (same `keys`)
+    whose [start_ts, end_ts] contains point_ts; inclusive both ends.
     """
     if bin_sec <= 0:
         raise ValueError("range_join_binned: bin_sec must be positive")
-    if how not in ("inner", "left"):
-        raise ValueError("range_join_binned: how must be inner|left")
     clash = (set(intervals.columns) - set(keys)) & set(points.columns)
     if clash:
         raise ValueError(
@@ -71,12 +68,12 @@ def range_join_binned(
     e_bin = F.floor(_epoch("end_ts") / bin_sec)
     n_bins = e_bin - s_bin + F.lit(1)
     guarded = F.when(
-        n_bins > max_bins_per_interval,
+        n_bins > MAX_BINS_PER_INTERVAL,
         F.raise_error(
             F.concat(
                 F.lit(
                     "range_join_binned: interval spans more than "
-                    f"{max_bins_per_interval} bins of {bin_sec}s — raise "
+                    f"{MAX_BINS_PER_INTERVAL} bins of {bin_sec}s — raise "
                     "bin_sec or split the interval: "
                 ),
                 F.col("start_ts").cast("string"),
@@ -98,7 +95,7 @@ def range_join_binned(
         F.col(point_ts) <= F.col("end_ts")
     )
     ival_cols = [c for c in intervals.columns if c not in keys]
-    matched = (
+    return (
         binned_points.join(binned_intervals, cond, "inner")
         .filter(exact)
         .select(
@@ -106,20 +103,3 @@ def range_join_binned(
             *[binned_intervals[c] for c in ival_cols],
         )
     )
-    if how == "inner":
-        return matched
-    # left: unmatched points re-derived with a null-safe anti-join on
-    # every point column (plain equality would mis-keep matched rows
-    # that carry NULLs), then padded with NULL interval columns.
-    seen = matched.select(*points.columns).dropDuplicates()
-    anti_cond = [
-        points[c].eqNullSafe(seen[c]) for c in points.columns
-    ]
-    unmatched = points.join(seen, anti_cond, "left_anti").select(
-        "*",
-        *[
-            F.lit(None).cast(intervals.schema[c].dataType).alias(c)
-            for c in ival_cols
-        ],
-    )
-    return matched.unionByName(unmatched)

@@ -257,18 +257,21 @@ def finalize_index(
     )
 
 
-def rrf_fuse(
-    rankings: list[DataFrame], k0: int = 60, topk: int = 10
-) -> DataFrame:
+# rrf_fuse's rank damping k0 (the published default) and output depth
+RRF_K0 = 60
+RRF_TOPK = 10
+
+
+def rrf_fuse(rankings: list[DataFrame]) -> DataFrame:
     """Reciprocal-rank fusion (Cormack et al. 2009) — the standard
     hybrid-retrieval combiner: each input ranking contributes
-    1/(k0 + rank) per (query, doc) and documents re-rank by the
+    1/(RRF_K0 + rank) per (query, doc) and documents re-rank by the
     summed score, so lexical BM25 and dense ANN lists fuse without
     any score calibration (ranks are comparable, raw scores are
-    not). k0=60 is the published default damping.
+    not).
 
-    EXACT integer rule: the contribution is 1000000 div (k0 + rank)
-    in micro-units — at k0=60 every distinct rank maps to a distinct
+    EXACT integer rule: the contribution is 1000000 div (RRF_K0 + rank)
+    in micro-units — at RRF_K0=60 every distinct rank maps to a distinct
     integer well past rank 900, and the sum over systems is exact,
     so the fused ORDER is deterministic and the oracle hash-matches
     with no float tolerance. Final rank = (rrf_micro DESC, doc_id).
@@ -278,17 +281,15 @@ def rrf_fuse(
     a qid-keyed row_number window over candidate-sized rows — the
     corpus never appears, cost tracks k x queries x systems.
 
-    Output: (qid, doc_id, rrf_micro, n_systems, rank), rank <= topk.
+    Output: (qid, doc_id, rrf_micro, n_systems, rank), rank <= RRF_TOPK.
     """
     if not rankings:
         raise ValueError("rrf_fuse: need at least one ranking")
-    if k0 < 1 or topk < 1:
-        raise ValueError("rrf_fuse: k0 and topk must be >= 1")
     u = rankings[0].select("qid", "doc_id", "rank")
     for r in rankings[1:]:
         u = u.unionByName(r.select("qid", "doc_id", "rank"))
     scored = u.groupBy("qid", "doc_id").agg(
-        F.sum(F.expr(f"1000000 div ({int(k0)} + rank)")).alias(
+        F.sum(F.expr(f"1000000 div ({RRF_K0} + rank)")).alias(
             "rrf_micro"
         ),
         F.count(F.lit(1)).alias("n_systems"),
@@ -298,6 +299,6 @@ def rrf_fuse(
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
+        .filter(F.col("rank") <= RRF_TOPK)
         .select("qid", "doc_id", "rrf_micro", "n_systems", "rank")
     )

@@ -234,11 +234,10 @@ def _bucket_pair_join(
 def embedding_near_dup_pairs_capped(
     emb: DataFrame,
     threshold: float = 0.95,
-    bucket_col: str = "label",
     bucket_cap: int = 32,
 ) -> DataFrame:
-    """embedding_near_dup_pairs with a MEGA-BUCKET guard: any bucket
-    larger than `bucket_cap` is deterministically split into
+    """embedding_near_dup_pairs with a MEGA-BUCKET guard: any `label`
+    bucket larger than `bucket_cap` is deterministically split into
     ceil(size / cap) sub-buckets by hashing vec_id, and the all-pairs
     comparison stays inside a (bucket, sub) cell — EXPECTED per-cell
     cost ~cap^2 regardless of clustering skew (hash placement
@@ -260,12 +259,12 @@ def embedding_near_dup_pairs_capped(
     """
     from .dedup import h32
 
-    sizes = emb.groupBy(bucket_col).agg(F.count(F.lit(1)).alias("n"))
+    sizes = emb.groupBy("label").agg(F.count(F.lit(1)).alias("n"))
     nsub = F.ceil(F.col("n") / F.lit(float(bucket_cap))).cast("long")
     keyed = (
-        emb.join(F.broadcast(sizes), bucket_col)
+        emb.join(F.broadcast(sizes), "label")
         .select(
-            F.col(bucket_col).alias("bkt"),
+            F.col("label").alias("bkt"),
             F.pmod(h32(F.col("vec_id").cast("string")), nsub).alias("sub"),
             "vec_id",
             "embedding",
@@ -805,7 +804,6 @@ def semantic_cluster_dedup(
     k: int = 8,
     n_iter: int = 2,
     threshold: float = 0.95,
-    bucket_cap: int | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023):
     cluster the corpus embeddings with the deterministic k-medians
@@ -823,23 +821,16 @@ def semantic_cluster_dedup(
     Scale shape: kmeans_fit is n_iter scans + tiny aggregates
     (centroids are k x dim driver literals by design); assignment is
     per-row codegen; the pair step is the shared _bucket_pair_join
-    keyed on the cluster id — one hash exchange on `bkt`. With
-    `bucket_cap` set, a mega-cluster (boilerplate-heavy corpora
-    concentrate mass in one centroid) is deterministically sub-split
-    exactly like embedding_near_dup_pairs_capped, bounding per-cell
-    cost at ~cap^2. The loser set joins back on the id key — a hash
+    keyed on the cluster id — one hash exchange on `bkt`. The loser
+    set joins back on the id key — a hash
     join AQE converts to broadcast when duplicates are rare.
 
     Output: (vec_id, bkt, dist, is_kept) — one row per input vector.
     """
     assigned = kmeans_fit(emb, k, n_iter, keep_vec=True)
-    keyed = assigned.select("bkt", "vec_id", "embedding")
-    if bucket_cap is None:
-        pairs = _bucket_pair_join(keyed, ["bkt"], threshold)
-    else:
-        pairs = embedding_near_dup_pairs_capped(
-            keyed, threshold, bucket_col="bkt", bucket_cap=bucket_cap
-        )
+    pairs = _bucket_pair_join(
+        assigned.select("bkt", "vec_id", "embedding"), ["bkt"], threshold
+    )
     losers = (
         pairs.select(F.col("vec_b").alias("vec_id"))
         .distinct()

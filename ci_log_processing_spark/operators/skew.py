@@ -99,9 +99,8 @@ def salted_join(
     dim: DataFrame,
     key: str,
     n_salts: int = 8,
-    how: str = "inner",
 ) -> DataFrame:
-    """Hot-key JOIN salting for when the dim side is too large to
+    """Hot-key inner JOIN salting for when the dim side is too large to
     broadcast and the fact side's key distribution is skewed: a
     plain shuffle join sends every row of the hottest key to ONE
     reducer; salting splits that key across `n_salts` reducers.
@@ -125,18 +124,13 @@ def salted_join(
     operator is the deterministic-plan alternative when AQE's
     runtime stats are unavailable, e.g. under a fixed plan cache).
     Only inner/left joins are salt-safe with this scatter (a right/
-    full join would multiply unmatched dim rows); guarded below.
+    full join would multiply unmatched dim rows).
 
     Output: the joined frame, salt column dropped — bit-identical
-    rows to fact.join(dim, key, how), which is what the oracle gate
+    rows to fact.join(dim, key), which is what the oracle gate
     checks (the plan difference is the point, asserted in
     tests/test_plan_shape.py).
     """
-    if how not in ("inner", "left"):
-        raise ValueError(
-            f"salted_join: how={how!r} is not salt-safe "
-            "(dim replication would multiply unmatched rows)"
-        )
     if n_salts < 1:
         raise ValueError(f"salted_join: n_salts={n_salts} < 1")
     from .dedup import h32
@@ -152,4 +146,4 @@ def salted_join(
         "_salt",
         F.explode(F.array(*[F.lit(i) for i in range(n_salts)])),
     )
-    return f.join(d, [key, "_salt"], how).drop("_salt")
+    return f.join(d, [key, "_salt"]).drop("_salt")

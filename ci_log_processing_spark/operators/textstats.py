@@ -1603,11 +1603,11 @@ def watermark_scores(docs: DataFrame) -> DataFrame:
     )
 
 
-def source_keyness(
-    docs: DataFrame,
-    k: int = 5,
-    min_count: int = 5,
-) -> DataFrame:
+# fewest instances of a term in a source for source_keyness to rank it
+KEYNESS_MIN_COUNT = 5
+
+
+def source_keyness(docs: DataFrame, k: int = 5) -> DataFrame:
     """Distinctive-term keyness per source — the data-card audit
     "which terms characterize THIS slice vs the rest of the corpus"
     (Dunning/Kilgarriff keyness; the per-source face of the
@@ -1626,7 +1626,7 @@ def source_keyness(
     deterministic ranking (chi2_milli DESC, term ASC), so a last-ulp
     divergence could only ever flip a rank across an exact tie the
     tie-break already owns. `overrep` (a*d > b*c, exact int64 at
-    min_count'd vocab scale... evaluated in double for the same
+    KEYNESS_MIN_COUNT'd vocab scale... evaluated in double for the same
     pinning) distinguishes over- from under-representation, which
     chi2 alone cannot.
 
@@ -1635,7 +1635,7 @@ def source_keyness(
     vocab-sized re-aggregate of THAT table, source totals and the
     grand total from the same lineage (broadcast back); the final
     top-k is a rank window partitioned by source over the
-    vocab x sources table. min_count prunes the Zipf tail before
+    vocab x sources table. KEYNESS_MIN_COUNT prunes the Zipf tail before
     the window.
 
     Output: (source, term, n_in, n_out, overrep, chi2_milli, rank).
@@ -1661,7 +1661,7 @@ def source_keyness(
         st.join(term_tot, "term")
         .join(src_tot, "source")
         .crossJoin(F.broadcast(grand))
-        .filter(F.col("a") >= min_count)
+        .filter(F.col("a") >= KEYNESS_MIN_COUNT)
         .select(
             "source",
             "term",

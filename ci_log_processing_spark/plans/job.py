@@ -11,6 +11,10 @@ Usage (local or cluster — only master/size differ):
       [--batch-ts "2024-01-01 00:00:00"] [--ref-year 2024] \
       [--impl native|pandas] [--no-skip-debug]
 
+  --transcripts-parquet PATH replaces --input-dir: it reads a
+  materialized transcripts table, and a conv_meta.parquet beside it
+  (if any) drives the no_metadata rule.
+
 Writes:
   <out>/sinks/sink=<s>/event_date=<d>/
                               the one sink table (Iceberg analog,
@@ -33,7 +37,7 @@ import time
 
 def main(argv=None):
     ap = argparse.ArgumentParser()
-    ap.add_argument("--input-dir", required=True)
+    ap.add_argument("--input-dir", default=None)
     ap.add_argument("--output-dir", required=True)
     ap.add_argument("--batch-ts", default="2024-01-01 00:00:00")
     ap.add_argument("--ref-year", type=int, default=2024)
@@ -57,13 +61,15 @@ def main(argv=None):
                     help="also write the run summary JSON to this file "
                          "(stdout can interleave with JVM GC logs)")
     args = ap.parse_args(argv)
+    if args.input_dir is None and args.transcripts_parquet is None:
+        ap.error("one of --input-dir or --transcripts-parquet is required")
 
     from pyspark.sql import functions as F
 
     from ..session import get_spark, hadoop_fs
     from ..sources.transcripts import load_transcripts
     from .pipeline import full_pipeline
-    from ..operators.aggregate import hourly_agg
+    from ..operators.aggregate import append_hourly_agg
     from ..operators.checkpoint import filter_unprocessed, write_checkpoint
 
     spark = get_spark(master=args.master)
@@ -172,11 +178,7 @@ def main(argv=None):
             written = spark.read.parquet(sinks_dir).filter(
                 F.col("batch_id") == batch_id
             )
-            hourly_agg(written).withColumn(
-                "batch_id", F.lit(batch_id)
-            ).write.mode("append").parquet(
-                os.path.join(args.output_dir, "agg_hourly")
-            )
+            append_hourly_agg(written, args.output_dir, batch_id)
             # per-partition lineage/throughput metrics
             # (reference analog: Prometheus per-job gauges,
             # logscraper.py:295-304)

@@ -22,11 +22,12 @@ both in the engine:
   ingest_curate.py pattern).
 
 State: ZERO rows in the streaming state store; the per-batch partial
-is <= (distinct tokens in batch) + depth*width rows in the sink. At
-10^12 turns the cells partial is still exactly depth*width rows per
-batch; the exact-counts partial is vocabulary-sized, kept only to
-answer the candidate set exactly (drop it and answer top-k from the
-sketch alone when even the vocabulary is too big to keep).
+is <= (distinct tokens in batch) + CMS_DEPTH*CMS_WIDTH rows in the
+sink. At 10^12 turns the cells partial is still exactly
+CMS_DEPTH*CMS_WIDTH rows per batch; the exact-counts partial is
+vocabulary-sized, kept only to answer the candidate set exactly (drop
+it and answer top-k from the sketch alone when even the vocabulary is
+too big to keep).
 
 The gate (stream_cms_heavy) splits the corpus across micro-batches so
 every hot token's count straddles batches, and asserts the streamed
@@ -41,7 +42,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.curation import CMS_SEED, cms_cell_array, cms_estimate
+from ..operators.curation import cms_cell_array, cms_estimate
 from ..operators.dedup import tokens_col
 from .neardup_ingest import DOC_STREAM_SCHEMA
 from .partials import drain, read_partials, write_partial
@@ -54,9 +55,6 @@ def run_streaming_cms(
     spark: SparkSession,
     docs_dir: str,
     output_dir: str,
-    candidates_k: int = 20,
-    width: int = 512,
-    depth: int = 4,
 ) -> DataFrame:
     """Drain `docs_dir` (availableNow), accumulating per-batch exact
     token counts and CMS cell partials, and return the merged top-k
@@ -64,7 +62,7 @@ def run_streaming_cms(
     cms_token_counts over the union of all batches."""
     counts_dir = os.path.join(output_dir, "counts")
     cells_dir = os.path.join(output_dir, "cells")
-    cells = cms_cell_array(width, depth, CMS_SEED)
+    cells = cms_cell_array()
 
     def process_batch(batch_df, batch_id: int):
         if batch_df.isEmpty():
@@ -110,4 +108,4 @@ def run_streaming_cms(
         .groupBy("i", "cell")
         .agg(F.sum("cell_n").alias("cell_n"))
     )
-    return cms_estimate(exact, sketch, candidates_k, width, depth, CMS_SEED)
+    return cms_estimate(exact, sketch)

@@ -47,10 +47,9 @@ import os
 import threading
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQueryListener
 
-from ..operators.aggregate import hourly_agg
+from ..operators.aggregate import append_hourly_agg
 from ..plans.pipeline import DEFAULT_BATCH_TS, RoutingPlan
 from ..sinks import append_fanout
 
@@ -115,11 +114,7 @@ def run_follow(
         batch = str(batch_id)  # the sink table's batch_id is a string
         try:
             append_fanout(routed, os.path.join(output_dir, "sinks"), batch)
-            hourly_agg(routed).withColumn(
-                "batch_id", F.lit(batch)
-            ).write.mode("append").parquet(
-                os.path.join(output_dir, "agg_hourly")
-            )
+            append_hourly_agg(routed, output_dir, batch)
         finally:
             routed.unpersist()
 

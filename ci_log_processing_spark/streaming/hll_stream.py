@@ -45,7 +45,6 @@ def run_streaming_hll(
     spark: SparkSession,
     transcripts_dir: str,
     output_dir: str,
-    max_files_per_trigger: int = 2,
     meta=None,
 ) -> DataFrame:
     """Drain `transcripts_dir` (availableNow), accumulating per-batch
@@ -67,7 +66,7 @@ def run_streaming_hll(
         transcripts_dir,
         os.path.join(output_dir, "_stream_ckpt"),
         process_batch,
-        max_files_per_trigger,
+        max_files_per_trigger=1,
     )
     partials = read_partials(spark, regs_dir, _REGISTERS_SCHEMA)
     return hll_estimate(partials).select(

@@ -111,6 +111,7 @@ def run_stateful_sessionize(
     has no defined stopping point once processing-time timeouts keep
     scheduling wake-up batches.
     """
+    import threading
     import time
 
     stream = (
@@ -129,9 +130,12 @@ def run_stateful_sessionize(
 
     # parquet rejects update output mode; foreachBatch appends each
     # micro-batch's emitted (updated/evicted) rows instead
+    batch_done = threading.Event()
+
     def write_batch(batch_df, batch_id: int):
         if not batch_df.isEmpty():
             batch_df.write.mode("append").parquet(sink)
+        batch_done.set()
 
     # The state store keeps the shuffle partition count of the
     # query's first start for its whole life, and AQE never coalesces
@@ -187,6 +191,19 @@ def run_stateful_sessionize(
                     break
             time.sleep(0.25)
     finally:
+        # Stop just after a micro-batch's write returns, not during
+        # it. A processing-time timeout makes every trigger run a
+        # batch, so batches run back to back and the query is never
+        # between triggers for long. Stopping inside the foreachBatch
+        # call cancels its jobs, and Spark's test of the Python error
+        # text (StreamExecution.isInterruptionException, a regex that
+        # recurses once per character) overflows the stream thread's
+        # stack.
+        batch_done.clear()
+        done_by = time.time() + 30
+        while (q.isActive and time.time() < done_by
+               and not batch_done.wait(0.1)):
+            pass
         q.stop()
         q.awaitTermination()
     try:

@@ -101,9 +101,11 @@ def test_tfidf_k_validation(spark):
 
 def test_session_window_gap_semantics(spark):
     from ci_log_processing_spark.operators.aggregate import (
+        SESSION_GAP_SEC,
         session_window_agg,
     )
 
+    assert SESSION_GAP_SEC == 1800
     df = spark.createDataFrame(
         [
             ("c", 0, T(2024, 1, 1, 0, 0)),
@@ -117,7 +119,7 @@ def test_session_window_gap_semantics(spark):
         (r["conv_id"], r["session_start"]): (
             r["session_end"], r["n_turns"], r["first_turn"], r["last_turn"]
         )
-        for r in session_window_agg(df, gap_sec=1800).collect()
+        for r in session_window_agg(df).collect()
     }
     assert rows == {
         ("c", T(2024, 1, 1, 0, 0)): (T(2024, 1, 1, 1, 0), 2, 0, 1),
@@ -127,26 +129,25 @@ def test_session_window_gap_semantics(spark):
 
 def test_sliding_window_overlap(spark):
     from ci_log_processing_spark.operators.aggregate import (
+        SLIDING_SLIDE_SEC,
+        SLIDING_WINDOW_SEC,
         sliding_window_agg,
     )
 
+    assert (SLIDING_WINDOW_SEC, SLIDING_SLIDE_SEC) == (3600, 1800)
     df = spark.createDataFrame(
         [("errors", T(2024, 1, 1, 0, 45))],
         "sink string, filled_ts timestamp",
     )
     rows = {
         (r["window_start"], r["window_end"]): r["cnt"]
-        for r in sliding_window_agg(df, 3600, 1800).collect()
+        for r in sliding_window_agg(df).collect()
     }
     # one event -> exactly the two 1 h windows on the 30 min grid
     assert rows == {
         (T(2024, 1, 1, 0, 0), T(2024, 1, 1, 1, 0)): 1,
         (T(2024, 1, 1, 0, 30), T(2024, 1, 1, 1, 30)): 1,
     }
-    import pytest as _pt
-
-    with _pt.raises(ValueError, match="multiple"):
-        sliding_window_agg(df, 3600, 1700)
 
 
 def test_approx_count_distinct_within_rsd(spark):
@@ -174,6 +175,7 @@ def test_session_window_fuzz_vs_islands(spark):
     import pandas as pd
 
     from ci_log_processing_spark.operators.aggregate import (
+        SESSION_GAP_SEC,
         session_window_agg,
     )
 
@@ -186,12 +188,12 @@ def test_session_window_fuzz_vs_islands(spark):
     df = spark.createDataFrame(
         rows, "conv_id string, turn_idx int, filled_ts timestamp"
     )
-    gap = 900
+    gap = SESSION_GAP_SEC
     got = {
         (r["conv_id"], r["session_start"]): (
             r["session_end"], r["n_turns"], r["first_turn"], r["last_turn"]
         )
-        for r in session_window_agg(df, gap_sec=gap).collect()
+        for r in session_window_agg(df).collect()
     }
 
     pdf = pd.DataFrame(rows, columns=["conv_id", "turn_idx", "ts"]).sort_values(
@@ -495,7 +497,11 @@ def test_ewma_alerts_reference_and_spike(spark):
     and the first hour has NULL ewma and no alert."""
     import datetime as dt
 
-    from ci_log_processing_spark.operators.aggregate import ewma_alerts
+    from ci_log_processing_spark.operators.aggregate import (
+        EWMA_SLACK,
+        EWMA_WINDOW,
+        ewma_alerts,
+    )
 
     rows = []
     # 6 flat hours of 10 events, then a 100-event spike at hour 7
@@ -505,18 +511,18 @@ def test_ewma_alerts_reference_and_spike(spark):
     df = spark.createDataFrame(rows, "sink string, filled_ts timestamp")
     got = {
         r["window_start"].hour: r
-        for r in ewma_alerts(df, window=16, slack=5).collect()
+        for r in ewma_alerts(df).collect()
     }
     assert got[0]["ewma_milli"] is None and got[0]["alert"] is False
     # python reference
     series = [10, 10, 10, 10, 10, 10, 100]
     for t in range(1, 7):
-        lags = series[max(0, t - 16):t]
+        lags = series[max(0, t - EWMA_WINDOW):t]
         m = len(lags)
         ws = sum(x * (1 << (i)) for i, x in enumerate(lags))
         want = (1000 * ws) // ((1 << m) - 1)
         assert got[t]["ewma_milli"] == want
-        want_alert = 1000 * series[t] > 2 * want + 5000
+        want_alert = 1000 * series[t] > 2 * want + 1000 * EWMA_SLACK
         assert got[t]["alert"] is want_alert
     assert got[6]["alert"] is True
     assert not any(got[t]["alert"] for t in range(6))

@@ -4,6 +4,7 @@ convergence on a path graph (worst diameter case for propagation)."""
 from pyspark.sql import functions as F
 
 from ci_log_processing_spark.operators.dedup import (
+    COMPONENTS_MAX_ITER,
     duplicate_components,
     exact_star_edges,
 )
@@ -44,14 +45,17 @@ def test_components_path_graph_needs_iterations(spark):
 def test_components_raises_when_not_converged(spark):
     import pytest
 
+    # a path longer than COMPONENTS_MAX_ITER hops: the min label
+    # travels one hop per round, so the rounds run out first
+    n = COMPONENTS_MAX_ITER + 2
     pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(9)], "doc_a long, doc_b long"
+        [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long"
     )
     nodes = spark.createDataFrame(
-        [(i,) for i in range(10)], "doc_id long"
+        [(i,) for i in range(n)], "doc_id long"
     )
     with pytest.raises(RuntimeError, match="did not converge"):
-        duplicate_components(pairs, nodes, max_iter=3)
+        duplicate_components(pairs, nodes)
 
 
 def test_components_frees_superseded_checkpoints(spark):

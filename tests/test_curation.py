@@ -4,10 +4,20 @@ wins), deterministic stratified downsampling, token histogram."""
 from pyspark.sql import functions as F
 
 from ci_log_processing_spark.operators.curation import (
+    DSIR_BUCKETS,
+    LEAKAGE_TEST_PERMILLE,
     decontaminate,
     stratified_downsample,
     token_length_histogram,
 )
+
+
+def _is_test_group(source):
+    """Python twin of leakage_safe_split's group draw."""
+    import hashlib
+
+    h = int(hashlib.md5(f"split1{source}".encode()).hexdigest()[:8], 16)
+    return h % 1000 < LEAKAGE_TEST_PERMILLE
 
 
 def test_decontaminate_first_snippet_wins(spark):
@@ -170,7 +180,7 @@ def test_token_histogram_conserves_totals(spark):
         [(i, " ".join(["tok"] * (i + 1))) for i in range(40)],
         "doc_id long, text string",
     )
-    h = token_length_histogram(docs, bucket_size=16).collect()
+    h = token_length_histogram(docs).collect()
     assert sum(r["n_docs"] for r in h) == 40
     assert sum(r["total_tokens"] for r in h) == sum(range(1, 41))
     los = sorted(r["bucket_lo"] for r in h)
@@ -184,7 +194,7 @@ def test_priority_sample_keeps_k_and_estimator(spark):
         [(i, "g" if i < 30 else "small", (i % 7) + 1) for i in range(34)],
         "doc_id long, source string, n_chars long",
     )
-    out = priority_sample(docs, k=5, weight_col="n_chars").collect()
+    out = priority_sample(docs, k=5).collect()
     by_src = {}
     for r in out:
         by_src.setdefault(r["source"], []).append(r)
@@ -196,7 +206,7 @@ def test_priority_sample_keeps_k_and_estimator(spark):
     # big group: every survivor's w_hat >= its weight (max(w, tau))
     assert all(r["w_hat"] >= r["w"] for r in by_src["g"])
     # deterministic: a re-run picks the identical id set
-    again = priority_sample(docs, k=5, weight_col="n_chars").collect()
+    again = priority_sample(docs, k=5).collect()
     assert {r["doc_id"] for r in again} == {r["doc_id"] for r in out}
 
 
@@ -213,7 +223,7 @@ def test_priority_sample_weight_bias(spark):
         [(0, "s", 100000)] + [(i, "s", 1) for i in range(1, 21)],
         "doc_id long, source string, n_chars long",
     )
-    out = priority_sample(docs, k=3, weight_col="n_chars").collect()
+    out = priority_sample(docs, k=3).collect()
     assert 0 in {r["doc_id"] for r in out}  # the heavy doc survives
 
 
@@ -318,7 +328,7 @@ def test_leakage_safe_split_invariants(spark):
     docs = spark.createDataFrame(
         rows, "doc_id long, source string, text string"
     )
-    out = leakage_safe_split(docs, test_permille=300).collect()
+    out = leakage_safe_split(docs).collect()
     assert len(out) == 600
     by_src: dict[str, set] = {}
     split_of = {}
@@ -330,6 +340,7 @@ def test_leakage_safe_split_invariants(spark):
     for s, splits in by_src.items():
         assert splits == {"test"} or "test" not in splits
     test_srcs = {s for s, sp in by_src.items() if sp == {"test"}}
+    assert test_srcs == {s for s in by_src if _is_test_group(s)}
     assert 0 < len(test_srcs) < 30  # both sides populated
     # every train-side copy of the leaked sentence is quarantined
     for s in range(30):
@@ -349,33 +360,23 @@ def test_leakage_safe_split_short_docs_never_quarantined(spark):
     )
 
     # sub-k (k=5) docs carry no shingles -> cannot be quarantined
-    # even when their full text appears inside a test doc
+    # even when their full text appears inside a test doc, while a
+    # train copy of the whole test doc is
+    groups = [f"g{j}" for j in range(100)]
+    test_grp = next(g for g in groups if _is_test_group(g))
+    train_grp = next(g for g in groups if not _is_test_group(g))
     docs = spark.createDataFrame(
-        [(0, "t", "one two three four five six seven"),
-         (1, "u", "one two three"),
-         (2, "v", "one two three four five six seven")],
+        [(0, test_grp, "one two three four five six seven"),
+         (1, train_grp, "one two three"),
+         (2, train_grp, "one two three four five six seven")],
         "doc_id long, source string, text string",
     )
-    out = {r["doc_id"]: r["split"] for r in
-           leakage_safe_split(docs, test_permille=1000,
-                              group_col="source").collect()}
-    assert set(out.values()) == {"test"}  # permille=1000: all test
-    out2 = {
-        r["doc_id"]: r["split"]
-        for r in leakage_safe_split(
-            docs.withColumn(
-                "source",
-                F.when(F.col("doc_id") == 0, "t").otherwise("zz"),
-            ),
-            test_permille=0,
-            seed="forced",
-        ).collect()
-    }
-    # permille=0: nobody is test -> nobody can be quarantined
-    assert set(out2.values()) == {"train"}
+    out = {r["doc_id"]: r["split"]
+           for r in leakage_safe_split(docs).collect()}
+    assert out == {0: "test", 1: "train", 2: "quarantined"}
 
 
-def _py_dsir_weights(rows, target_ids, n_buckets=64, seed="dsir1"):
+def _py_dsir_weights(rows, target_ids):
     """Pure-Python reference for dsir_importance: same h32 bucket,
     same Laplace whole-bit quantization."""
     import hashlib
@@ -389,7 +390,7 @@ def _py_dsir_weights(rows, target_ids, n_buckets=64, seed="dsir1"):
     def buckets(text):
         toks = text.lower().split(" ")
         return [
-            h32(f"{seed}:{toks[i]} {toks[i + 1]}") % n_buckets
+            h32(f"dsir1:{toks[i]} {toks[i + 1]}") % DSIR_BUCKETS
             for i in range(len(toks) - 1)
         ]
 
@@ -406,8 +407,8 @@ def _py_dsir_weights(rows, target_ids, n_buckets=64, seed="dsir1"):
         if not bs:
             continue
         s = sum(
-            (bl(rt + n_buckets) - bl(raw_cnt[b] + 1))
-            - (bl(tt + n_buckets) - bl(tgt_cnt.get(b, 0) + 1))
+            (bl(rt + DSIR_BUCKETS) - bl(raw_cnt[b] + 1))
+            - (bl(tt + DSIR_BUCKETS) - bl(tgt_cnt.get(b, 0) + 1))
             for b in bs
         )
         out[doc_id] = (len(bs), s)
@@ -433,7 +434,7 @@ def test_dsir_weights_match_python_reference(spark):
     target = docs.filter(F.col("doc_id").isin(list(target_ids)))
     got = {
         r["doc_id"]: (r["n_pairs"], r["dsir_bits"])
-        for r in dsir_importance(docs, target, n_buckets=64).collect()
+        for r in dsir_importance(docs, target).collect()
     }
     assert got == _py_dsir_weights(rows, target_ids)
     # target-like docs must outrank the junk docs per pair
@@ -442,9 +443,7 @@ def test_dsir_weights_match_python_reference(spark):
     assert per_pair[3] > per_pair[2] and per_pair[0] > per_pair[5]
 
     # selection: m = ceil(kp * n_scoreable / 1000) rows, the top ones
-    sel = dsir_sample(
-        docs, target, keep_permille=400, n_buckets=64
-    ).collect()
+    sel = dsir_sample(docs, target, keep_permille=400).collect()
     n_scoreable = len(ref)  # 5 docs have bigrams
     m = -(-(400 * n_scoreable) // 1000)
     assert len(sel) == m

@@ -4,6 +4,8 @@ semantics vs hand-computed expectations."""
 from datetime import datetime
 
 from ci_log_processing_spark.operators.aggregate import (
+    CUSUM_H_THRESHOLD,
+    CUSUM_K_PER_HOUR,
     cusum_error_drift,
     sessionize_events,
 )
@@ -15,11 +17,12 @@ ROUTED_SCHEMA = (
 
 
 def test_cusum_accumulates_sustained_drift(spark):
+    assert (CUSUM_K_PER_HOUR, CUSUM_H_THRESHOLD) == (2, 6)
     ts = datetime
-    # subsystem 'nova': 3 errors/hour for 4 hours with k=2 ->
-    # S = 1, 2, 3, 4 (alarm at S > 3 in hour 4)
+    # subsystem 'nova': 3 errors/hour for 7 hours with k=2 ->
+    # S = 1, 2, ..., 7 (alarm at S > 6 in hour 7)
     rows = []
-    for h in range(4):
+    for h in range(7):
         for i in range(3):
             rows.append(
                 ("c", h * 10 + i, "nova", ts(2024, 1, 1, h), "errors")
@@ -31,12 +34,11 @@ def test_cusum_accumulates_sustained_drift(spark):
     df = spark.createDataFrame(rows, ROUTED_SCHEMA)
     out = {
         (r.subsystem, r.window_start.hour): (r.cusum, r.alarm)
-        for r in cusum_error_drift(df, k_per_hour=2, h_threshold=3).collect()
+        for r in cusum_error_drift(df).collect()
     }
-    assert out[("nova", 0)] == (1, False)
-    assert out[("nova", 1)] == (2, False)
-    assert out[("nova", 2)] == (3, False)
-    assert out[("nova", 3)] == (4, True)
+    for h in range(6):
+        assert out[("nova", h)] == (h + 1, False)
+    assert out[("nova", 6)] == (7, True)
     # CUSUM floors at zero: the deficit hour never goes negative
     assert out[("glance", 0)] == (0, False)
 
@@ -52,7 +54,7 @@ def test_cusum_resets_after_deficit(spark):
     df = spark.createDataFrame(rows, ROUTED_SCHEMA)
     out = {
         r.window_start.hour: r.cusum
-        for r in cusum_error_drift(df, k_per_hour=2).collect()
+        for r in cusum_error_drift(df).collect()
     }
     assert out[0] == 3
     assert out[2] == 2

@@ -105,23 +105,28 @@ def test_simhash_pairs_banding(spark, corpus):
 
 
 def test_ngram_df_cut_bounds_candidates(spark):
-    from ci_log_processing_spark.operators.dedup import ngram_jaccard_pairs
+    from ci_log_processing_spark.operators.dedup import (
+        SHINGLE_DF_CUT,
+        ngram_jaccard_pairs,
+    )
 
-    # 40 docs sharing ONE planted stop-shingle (plus unique tails):
-    # without a df-cut the inverted index pairs all 40*39/2 of them;
-    # with df_cut < 40 the stop-shingle is dropped and no pair
-    # survives (their true jaccard is ~0 anyway)
+    # n docs sharing ONE planted stop phrase (its three shingles are
+    # all any two docs share: jaccard 3/15): while n <= SHINGLE_DF_CUT
+    # the inverted index pairs all n*(n-1)/2 of them; one doc more and
+    # the stop shingles are cut, so no pair survives
     stop = "the quick brown fox jumps"
-    rows = [
-        (i, f"{stop} unique tail {i} alpha beta gamma delta {i}")
-        for i in range(40)
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    with_cut = ngram_jaccard_pairs(docs, threshold=0.1, df_cut=16).collect()
-    assert with_cut == []
-    # sanity: disabling the cut re-admits the quadratic candidates
-    no_cut = ngram_jaccard_pairs(docs, threshold=0.01, df_cut=None).collect()
-    assert len(no_cut) == 40 * 39 / 2
+
+    def pairs(n):
+        rows = [
+            (i, f"{stop} unique tail {i} alpha beta gamma delta {i}")
+            for i in range(n)
+        ]
+        docs = spark.createDataFrame(rows, "doc_id long, text string")
+        return ngram_jaccard_pairs(docs, threshold=0.01).collect()
+
+    n = SHINGLE_DF_CUT
+    assert len(pairs(n)) == n * (n - 1) // 2
+    assert pairs(n + 1) == []
 
 
 def test_release_persisted_frees_registry(spark, corpus):
@@ -279,10 +284,15 @@ def test_incremental_minhash_candidate_cap(spark):
 
 
 def test_shingle_impls_equal(spark):
-    """Arrow and Catalyst shingling produce the same (doc_id,
-    shingle-list) — including first-occurrence order — on repeated,
-    short (< k tokens), and mixed-case docs."""
-    from ci_log_processing_spark.operators.dedup import shingled_docs
+    """Arrow (shingled_docs) and Catalyst (shingles_col) shingling
+    produce the same (doc_id, shingle-list) — including
+    first-occurrence order — on repeated, short (< k tokens), and
+    mixed-case docs."""
+    from ci_log_processing_spark.operators.dedup import (
+        shingled_docs,
+        shingles_col,
+        tokens_col,
+    )
 
     docs = spark.createDataFrame(
         [
@@ -295,12 +305,16 @@ def test_shingle_impls_equal(spark):
     ).repartition(2)
     a = {
         r["doc_id"]: r["shingles"]
-        for r in shingled_docs(docs, 5, impl="arrow").collect()
+        for r in shingled_docs(docs, 5).collect()
     }
-    n = {
-        r["doc_id"]: r["shingles"]
-        for r in shingled_docs(docs, 5, impl="native").collect()
-    }
+    # tokens in their own projection: shingles_col's interpreted
+    # lambda re-evaluates captured children per element
+    native = (
+        docs.select("doc_id", tokens_col(F.col("text")).alias("_lt"))
+        .select("doc_id", shingles_col(F.col("_lt"), 5).alias("shingles"))
+        .filter(F.size("shingles") > 0)
+    )
+    n = {r["doc_id"]: r["shingles"] for r in native.collect()}
     assert a == n
     assert set(a) == {1, 3, 4}
     assert a[3] == ["r r r r r"]

@@ -59,19 +59,6 @@ def test_asof_backward_with_ties_and_seq(left, right):
     assert out.count() == 4  # every left row exactly once
 
 
-def test_asof_tolerance_nulls_stale_matches(left, right):
-    out = asof_join(
-        left, right, on=["k"], value_cols=["state"], seq_col="seq",
-        tolerance_sec=1800,
-    )
-    assert _states(out) == {
-        ("a", 0): "c0b",   # 0 s old
-        ("a", 1): None,    # 3600 s > 1800 s: stale
-        ("a", 2): "c1",    # 1800 s, inclusive boundary kept
-        ("b", 0): None,
-    }
-
-
 def test_asof_matches_pandas_merge_asof(spark):
     """Randomized parity vs pandas merge_asof(direction='backward')."""
     import numpy as np
@@ -169,12 +156,6 @@ def test_range_join_boundaries_inclusive(spark, ivals):
     assert got == {(1, "s1"), (2, "s1")}
 
 
-def test_range_join_left_pads_unmatched(pts, ivals):
-    out = range_join_binned(pts, ivals, keys=["k"], bin_sec=600, how="left")
-    rows = {(r["pid"], r["sid"]) for r in out.collect()}
-    assert rows == {(100, "s1"), (100, "s2"), (101, None), (102, None)}
-
-
 def test_range_join_bin_width_invariance(pts, ivals):
     """Match set must not depend on the bin width chosen."""
     base = {
@@ -196,9 +177,7 @@ def test_range_join_guard_fires_on_hostile_interval(spark, pts, ivals):
         "end_ts", F.expr("end_ts + INTERVAL 400 DAYS")
     )
     with pytest.raises(Exception, match="spans more than"):
-        range_join_binned(
-            pts, wide, keys=["k"], bin_sec=60, max_bins_per_interval=100
-        ).collect()
+        range_join_binned(pts, wide, keys=["k"], bin_sec=60).collect()
 
 
 def test_asof_forward_direction_and_tolerance(spark):
@@ -228,15 +207,6 @@ def test_asof_forward_direction_and_tolerance(spark):
     # turn 1 -> next flip at 11:00 ('a'); turn 2 -> exact match at
     # 12:00 with max-seq winner 'b2'; turn 3 -> nothing follows
     assert fwd == {1: "a", 2: "b2", 3: None}
-    tol = {
-        r["turn_idx"]: r["state"]
-        for r in asof_join(
-            left, right, on=["conv_id"], value_cols=["state"],
-            seq_col="seq", direction="forward", tolerance_sec=1800,
-        ).collect()
-    }
-    # 10:00 -> 11:00 is 3600 s > 1800 -> nulled; exact match stays
-    assert tol == {1: None, 2: "b2", 3: None}
     import pytest as _pt
 
     with _pt.raises(ValueError):

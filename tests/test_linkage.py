@@ -1,12 +1,13 @@
 """SymSpell delete-neighborhood fuzzy linkage
 (operators/linkage.py): total recall vs brute-force Levenshtein on
-planted typo corpora, d=2 neighborhood, bucket cap, guards."""
+planted typo corpora, d=2 neighborhood, key-length cap, guards."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from ci_log_processing_spark.operators.dedup import release_persisted
 from ci_log_processing_spark.operators.linkage import (
+    KEY_LEN,
     canonical_key,
     symspell_pairs,
 )
@@ -16,14 +17,14 @@ def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def _brute(rows, max_dist, key_len=24):
+def _brute(rows, max_dist):
     """Pure-Python reference: canonicalize + all-pairs Levenshtein."""
     import re
 
     def canon(t):
-        t = re.sub("[^a-z0-9 ]", "", t[: 4 * key_len].lower())
+        t = re.sub("[^a-z0-9 ]", "", t[: 4 * KEY_LEN].lower())
         t = re.sub("  +", " ", t).strip()
-        return t[:key_len]
+        return t[:KEY_LEN]
 
     def lev(a, b):
         if len(a) < len(b):
@@ -88,27 +89,10 @@ def test_symspell_total_recall_d2(spark):
     assert (1, 3, 2) in got and (3, 4, 2) in got
 
 
-def test_symspell_bucket_cap_keeps_planted_pair(spark):
-    # 40 docs sharing one canonical key (mega-bucket) + one typo pair
-    rows = [(i, "same boilerplate title") for i in range(40)]
-    rows += [(100, "unique needle phrase"), (101, "unique needle phrases")]
-    uncapped = symspell_pairs(_docs(spark, rows), max_dist=1)
-    capped = symspell_pairs(_docs(spark, rows), max_dist=1, bucket_cap=8)
-    n_unc = uncapped.count()
-    got = {(r["doc_a"], r["doc_b"]) for r in capped.collect()}
-    release_persisted()
-    assert n_unc == 40 * 39 // 2 + 1
-    # the cap bounds the mega-bucket's pair fan-out...
-    assert len(got) < n_unc
-    # ...but the needle pair lands in the same sub-bucket stream
-    # via its own (uncrowded) variants
-    assert (100, 101) in got
-
-
 def test_symspell_key_len_cap_bounds_fanout(spark):
     long = "word " * 200
     rows = [(1, long), (2, long + "tail difference beyond the cap")]
-    out = symspell_pairs(_docs(spark, rows), max_dist=1, key_len=16).collect()
+    out = symspell_pairs(_docs(spark, rows), max_dist=1).collect()
     release_persisted()
     assert {(r["doc_a"], r["doc_b"], r["dist"]) for r in out} == {(1, 2, 0)}
 

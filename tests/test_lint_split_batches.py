@@ -3,11 +3,13 @@
 (operators/curation.py): semantics vs hand-computed expectations."""
 
 import datetime
-
-import pytest
+import hashlib
 
 from ci_log_processing_spark.operators.aggregate import volume_trend
 from ci_log_processing_spark.operators.curation import (
+    LENGTH_BATCH_SIZE,
+    STRATIFIED_TEST_PCT,
+    STRATIFIED_VAL_PCT,
     length_batches,
     stratified_split,
 )
@@ -90,22 +92,6 @@ def test_volume_trend_slope(spark):
     assert out["one"].slope_milli is None and out["one"].n_days == 1
 
 
-def test_volume_trend_sink_filter_and_groups(spark):
-    rows = [
-        ("errors", "a", _ts(1)),
-        ("errors", "a", _ts(2)),
-        ("errors", "b", _ts(1)),
-        ("agent_turns", "a", _ts(1)),
-    ]
-    out = volume_trend(
-        spark.createDataFrame(rows, TREND_SCHEMA),
-        group_cols=["subsystem"],
-        sink="errors",
-    ).collect()
-    got = {r.subsystem: r.total_rows for r in out}
-    assert got == {"a": 2, "b": 1}  # agent_turns row filtered out
-
-
 DOCS_SCHEMA = "doc_id long, source string, text string"
 
 
@@ -120,16 +106,17 @@ def _docs(spark, per_source):
 
 
 def test_stratified_split_exact_proportions(spark):
+    assert (STRATIFIED_VAL_PCT, STRATIFIED_TEST_PCT) == (10, 10)
     docs = _docs(spark, {"a": 20, "b": 10, "c": 3})
-    out = stratified_split(docs, val_pct=10, test_pct=20).collect()
+    out = stratified_split(docs).collect()
     counts = {}
     for r in out:
         counts.setdefault(r.source, {}).setdefault(r.split, 0)
         counts[r.source][r.split] += 1
-    # exact floors: a: 4 test / 2 val / 14 train; b: 2/1/7;
-    # c (n=3): floor(0.6)=0 test, floor(0.3)=0 val -> all train
-    assert counts["a"] == {"test": 4, "val": 2, "train": 14}
-    assert counts["b"] == {"test": 2, "val": 1, "train": 7}
+    # exact floors: a: 2 test / 2 val / 16 train; b: 1/1/8;
+    # c (n=3): floor(0.3)=0 test, floor(0.3)=0 val -> all train
+    assert counts["a"] == {"test": 2, "val": 2, "train": 16}
+    assert counts["b"] == {"test": 1, "val": 1, "train": 8}
     assert counts["c"] == {"train": 3}
     assert len(out) == 33  # complete: every doc assigned exactly once
 
@@ -139,46 +126,42 @@ def test_stratified_split_deterministic_and_seeded(spark):
     one = sorted((r.doc_id, r.split) for r in stratified_split(docs).collect())
     two = sorted((r.doc_id, r.split) for r in stratified_split(docs).collect())
     assert one == two
-    other = sorted(
-        (r.doc_id, r.split)
-        for r in stratified_split(docs, seed="other").collect()
+    # the draw is the md5('split1' || id) rank order: of 12 docs,
+    # floor(1.2) = 1 goes to test and the next 1 to val
+    ranked = sorted(
+        range(12),
+        key=lambda i: (hashlib.md5(f"split1{i}".encode()).hexdigest(), i),
     )
-    assert one != other  # a new seed redraws the assignment
-
-    with pytest.raises(ValueError):
-        stratified_split(docs, val_pct=60, test_pct=40)
+    want = {i: "train" for i in range(12)}
+    want[ranked[0]], want[ranked[1]] = "test", "val"
+    assert one == sorted(want.items())
 
 
 def test_length_batches_chunking_and_waste(spark):
+    assert LENGTH_BATCH_SIZE == 8
     rows = [
-        # source a: token counts 4,3,2,1 -> desc order, batch_size=2:
-        # batch 0 = (4,3): waste = (8-7)*1000 div 8 = 125
+        # source a: token counts 10..1 -> desc order, 8 per batch:
+        # batch 0 = (10..3): waste = (80-52)*1000 div 80 = 350
         # batch 1 = (2,1): waste = (4-3)*1000 div 4 = 250
-        (0, "a", "w w w w"),
-        (1, "a", "w w w"),
-        (2, "a", "w w"),
-        (3, "a", "w"),
+        *[(10 - n, "a", " ".join(["w"] * n)) for n in range(10, 0, -1)],
         # source b: equal lengths -> zero waste, one short batch
-        (4, "b", "x y"),
-        (5, "b", "x y"),
-        (6, "b", "x y"),
+        (10, "b", "x y"),
+        (11, "b", "x y"),
+        (12, "b", "x y"),
     ]
     out = {
         (r.source, r.batch_id): r
         for r in length_batches(
-            spark.createDataFrame(rows, DOCS_SCHEMA), batch_size=2
+            spark.createDataFrame(rows, DOCS_SCHEMA)
         ).collect()
     }
+    assert set(out) == {("a", 0), ("a", 1), ("b", 0)}
     a0, a1 = out[("a", 0)], out[("a", 1)]
-    assert (a0.max_tokens, a0.min_tokens, a0.sum_tokens) == (4, 3, 7)
-    assert a0.pad_waste_milli == 125
-    assert (a1.max_tokens, a1.pad_waste_milli) == (2, 250)
-    b0, b1 = out[("b", 0)], out[("b", 1)]
-    assert (b0.n_docs, b0.pad_waste_milli) == (2, 0)
-    assert (b1.n_docs, b1.pad_waste_milli) == (1, 0)
-
-    with pytest.raises(ValueError):
-        length_batches(spark.createDataFrame(rows, DOCS_SCHEMA), 0)
+    assert (a0.n_docs, a0.max_tokens, a0.min_tokens) == (8, 10, 3)
+    assert (a0.sum_tokens, a0.pad_waste_milli) == (52, 350)
+    assert (a1.n_docs, a1.max_tokens, a1.pad_waste_milli) == (2, 2, 250)
+    b0 = out[("b", 0)]
+    assert (b0.n_docs, b0.pad_waste_milli) == (3, 0)
 
 
 def test_sft_composition_gates_conversations(spark):

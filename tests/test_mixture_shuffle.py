@@ -192,23 +192,6 @@ def test_semantic_cluster_dedup_keep_rule(spark):
         assert pdf.loc[g * 10, "is_kept"]
 
 
-def test_semantic_cluster_dedup_capped_subsplit(spark):
-    # with every vector identical, the uncapped pair set is quadratic;
-    # the cap keeps the survivor semantics for the lowest id and one
-    # row per vector either way
-    rows = [(i, [1.0, 0.0, 0.0, 0.0]) for i in range(40)]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = semantic_cluster_dedup(
-        emb, k=2, n_iter=1, threshold=0.999, bucket_cap=8
-    ).toPandas()
-    assert len(out) == 40
-    # sub-splitting keeps at most one survivor PER SUB-CELL (bounded
-    # recall contract) but never more than ceil(40/8)+1 cells' worth
-    assert 1 <= out["is_kept"].sum() <= 6
-    kept = out[out["is_kept"]]["vec_id"]
-    assert 0 in set(kept)  # the global lowest id always survives
-
-
 def test_quality_top_fraction_integer_cut(spark):
     from ci_log_processing_spark.operators.curation import (
         quality_top_fraction,

@@ -79,10 +79,10 @@ def test_wav_roundtrip():
 
 
 def test_frame_sample_shape(spark, media):
-    frames = mm.frame_sample(media, n_frames=4)
+    frames = mm.frame_sample(media)
     rows = frames.collect()
     n_videos = media.filter(F.col("kind") == "video").count()
-    assert len(rows) == 4 * n_videos
+    assert len(rows) == mm.SAMPLED_FRAMES * n_videos
     by_doc = {}
     for r in rows:
         by_doc.setdefault(r["doc_id"], []).append(r)
@@ -100,13 +100,13 @@ def test_frame_hashes_match_pixel_stream(spark):
     docs = spark.createDataFrame(
         [(2, text, "s")], "doc_id long, text string, source string"
     )
-    rows = mm.frame_sample(mm.attach_media(docs), n_frames=4).collect()
+    rows = mm.frame_sample(mm.attach_media(docs)).collect()
     w, h, total = mm._y4m_geometry(len(text))
     fsz = w * h * 3 // 2
     stream = _cycle(text.encode(), total * fsz)
-    assert len(rows) == 4
+    assert len(rows) == mm.SAMPLED_FRAMES
     for r in sorted(rows, key=lambda r: r["frame_idx"]):
-        src = r["frame_idx"] * total // 4
+        src = r["frame_idx"] * total // mm.SAMPLED_FRAMES
         assert r["src_frame"] == src
         exp = hashlib.md5(stream[src * fsz:(src + 1) * fsz]).hexdigest()
         assert r["frame_hash"] == exp

@@ -12,11 +12,23 @@ A use inside a package definition counts only while that definition is
 itself used, so a helper whose sole caller is dead is found as well.
 
 Parameters: a parameter with a default, of any function or method in
-the package outside ``oracle*.py``, fails when no call sets it, unless
-``KEEP_PARAMS`` names it with a reason. Here tests count as callers: a
-test that passes a value exercises behaviour the option exists for.
-Parameters of definitions ``KEEP`` lists are exempt. The rules, again
-by name (a call matches every definition of its callee's name):
+the package outside ``oracle*.py``, fails when no call in a product
+file sets it. Tests do not count as callers: an option is worth its
+doubled test matrix only when product code needs a second value. A
+parameter only tests set gets one of three outcomes:
+
+- it becomes a module constant at its default, and the test asserts
+  the same property at that constant;
+- it becomes a constant, and the branch only the other value reached
+  is deleted together with the test case that reached it;
+- ``KEEP_PARAMS`` names it with a one-line reason and the test that
+  sets it, because that test needs another value to reach behaviour
+  the operator must keep and nothing else reaches it.
+
+A ``KEEP_PARAMS`` entry is stale, and fails, once a product call sets
+the option or no test sets it either. Parameters of definitions
+``KEEP`` lists are exempt. The rules, again by name (a call matches
+every definition of its callee's name):
 
 - a call sets a parameter when it passes it by keyword, or passes
   enough positional arguments to reach it (``self``/``cls`` are not
@@ -55,8 +67,24 @@ KEEP = {
     "scoped_persists": "persist lifecycle scope that releases on error",
 }
 
-# Options kept although no call sets them, as "module:def(param)".
-KEEP_PARAMS: dict[str, str] = {}
+# Options only tests set, as "module:def(param)": reason, and the test.
+KEEP_PARAMS = {
+    "ci_log_processing_spark.operators.curation:"
+    "decontaminate_spans(max_literal_keys)":
+        "input size picks the literal or the semi-join path and the gate "
+        "never reaches the semi-join; test_curation.py::"
+        "test_decontaminate_spans_big_set_routes_to_semijoin",
+    "ci_log_processing_spark.operators.pii:pseudonymize(salt)":
+        "a deployment secret; test_pii.py::"
+        "test_pseudonymize_stable_joinable_and_null_safe",
+    "ci_log_processing_spark.streaming.cdc_merge:read_snapshot(version)":
+        "time travel, the documented read of the merged table; "
+        "test_cdc_merge_stream.py::test_time_travel_at_version_boundaries",
+    "ci_log_processing_spark.streaming.follow:run_follow(processing_time)":
+        "SURVEY.md section 0 maps the reference's --follow loop onto this "
+        "trigger; test_streaming.py::"
+        "test_follow_releases_presence_on_stop_and_error",
+}
 
 _IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 
@@ -217,26 +245,35 @@ def unset_parameters(defining, calling, exempt=frozenset()):
 
 
 def _package_parameters():
-    """(defining sources, calling sources) of the real repository."""
+    """(defining sources, product sources, test sources) of the real
+    repository."""
     defining = {
         ".".join(p.relative_to(ROOT).with_suffix("").parts): p.read_text()
         for p in PACKAGE.rglob("*.py") if not p.name.startswith("oracle")
     }
-    callers = _product_files() + list((ROOT / "tests").rglob("*.py"))
-    callers += (ROOT / "perfbench" / "tests").rglob("*.py")
-    return defining, [p.read_text() for p in callers]
+    tests = list((ROOT / "tests").rglob("*.py"))
+    tests += (ROOT / "perfbench" / "tests").rglob("*.py")
+    return (defining, [p.read_text() for p in _product_files()],
+            [p.read_text() for p in tests])
+
+
+def option_findings(defining, product, tests, keep_params):
+    """Sorted options no product call sets and ``keep_params`` does
+    not name, then the stale ``keep_params`` entries: those a product
+    call sets, or that no test sets either."""
+    exempt = frozenset(KEEP)
+    unset = set(unset_parameters(defining, product, exempt))
+    test_only = unset - set(unset_parameters(defining, product + tests,
+                                             exempt))
+    return sorted(unset - set(keep_params)) + sorted(
+        set(keep_params) - test_only)
 
 
 def test_every_package_option_is_set_by_some_call():
-    # lists unset options, and KEEP_PARAMS entries that name no
-    # defaulted parameter
-    defining, calling = _package_parameters()
-    every = set(unset_parameters(defining, [], frozenset(KEEP)))
-    unset = set(unset_parameters(defining, calling, frozenset(KEEP)))
-    stale = sorted(set(KEEP_PARAMS) - every)
-    unset = sorted(unset - set(KEEP_PARAMS))
-    assert not stale + unset, (
-        "no call sets:\n" + "\n".join(stale + unset))
+    # lists options no product call sets, and stale KEEP_PARAMS entries
+    found = option_findings(*_package_parameters(), KEEP_PARAMS)
+    assert not found, (
+        "no product call sets, or stale KEEP_PARAMS:\n" + "\n".join(found))
 
 
 def test_parameter_scan_rules():
@@ -284,4 +321,23 @@ only_kw(0, c=1)
         "m:part2(c)",
         "m:pos(c)",
         "m:st(b)",
+    ]
+
+
+def test_test_calls_do_not_count_as_product_calls():
+    defining = {"m": """
+def opt(a, b=1): ...
+def both(a, b=1): ...
+def kept(a, b=1): ...
+def unused(a, b=1): ...
+"""}
+    product = ["both(0, b=2)\nkept(0)\nunused(0)\nopt(0)"]
+    tests = ["opt(0, b=2)\nboth(0, b=3)\nkept(0, b=2)"]
+    keep = {"m:kept(b)": "needed", "m:both(b)": "set by product",
+            "m:unused(b)": "set by nothing", "m:gone(b)": "no such def"}
+    assert option_findings(defining, product, tests, keep) == [
+        "m:opt(b)",
+        "m:both(b)",
+        "m:gone(b)",
+        "m:unused(b)",
     ]

@@ -13,11 +13,9 @@ def test_pii_scrub_counts_and_redaction(spark):
             (4, "ssn on file: 123-45-6789"),
             (5, "nothing sensitive here at all"),
         ],
-        "doc_id long, text string",
+        "doc_id long, pii_text string",
     )
-    out = {
-        r["doc_id"]: r for r in pii_scrub(docs, text_col="text").collect()
-    }
+    out = {r["doc_id"]: r for r in pii_scrub(docs).collect()}
     assert out[1]["n_emails"] == 1 and "<EMAIL>" in out[1]["redacted"]
     assert "bob.smith" not in out[1]["redacted"]
     assert out[2]["n_ipv4"] == 2

@@ -337,9 +337,7 @@ def test_dsir_no_shuffle_join_no_global_sort(spark, tmp_path):
         "doc_id long, text string, source string",
     ).write.parquet(p)
     docs = spark.read.parquet(p)
-    out = dsir_sample(
-        docs, docs.filter(F.col("source") == "s0"), n_buckets=64
-    )
+    out = dsir_sample(docs, docs.filter(F.col("source") == "s0"))
     try:
         out.collect()
         plan = out._jdf.queryExecution().executedPlan().toString()
@@ -605,8 +603,6 @@ def test_salted_join_scatters_without_broadcast(spark, tmp_path):
         assert n_salt_vals == 500
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    with _pt.raises(ValueError):
-        salted_join(fact, dim, "conv_id", how="full")
     with _pt.raises(ValueError):
         salted_join(fact, dim, "conv_id", n_salts=0)
 

@@ -85,11 +85,9 @@ PII_ALPHABET = "aZ09.@-+_% m"
 )
 def test_pii_counts_match_python_re(spark, texts):
     docs = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
+        [(i, t) for i, t in enumerate(texts)], "doc_id long, pii_text string"
     )
-    got = {
-        r["doc_id"]: r for r in pii_scrub(docs, text_col="text").collect()
-    }
+    got = {r["doc_id"]: r for r in pii_scrub(docs).collect()}
     for i, t in enumerate(texts):
         for stem, rx, _ in PII_RULES:
             expect = len(re.findall(rx, t))
@@ -104,11 +102,10 @@ def test_pii_counts_match_python_re(spark, texts):
 @given(
     n=st.integers(min_value=1, max_value=400),
     shard=st.integers(min_value=1, max_value=64),
-    seed=st.sampled_from(["shuf1", "shuf2", "epoch3"]),
 )
-def test_shuffle_index_equals_global_window(spark, n, shard, seed):
+def test_shuffle_index_equals_global_window(spark, n, shard):
     """The two-level bucket rank must equal the single-partition
-    global window rank for ANY size, shard width, and seed."""
+    global window rank for ANY size and shard width."""
     import hashlib
 
     from ci_log_processing_spark.operators.curation import shuffle_index
@@ -117,12 +114,12 @@ def test_shuffle_index_equals_global_window(spark, n, shard, seed):
     docs = spark.range(n).selectExpr("id AS doc_id")
     out = {
         r["doc_id"]: (r["global_idx"], r["shard"])
-        for r in shuffle_index(docs, shard_size=shard, seed=seed).collect()
+        for r in shuffle_index(docs, shard_size=shard).collect()
     }
     release_persisted()
     ref = sorted(
         range(n),
-        key=lambda i: (hashlib.md5(f"{seed}{i}".encode()).hexdigest(), i),
+        key=lambda i: (hashlib.md5(f"shuf1{i}".encode()).hexdigest(), i),
     )
     assert len(out) == n
     for rank, doc in enumerate(ref):
@@ -196,7 +193,7 @@ def test_priority_sample_matches_python_reference(spark, weights, k):
     )
     out = {
         r["doc_id"]: r
-        for r in priority_sample(docs, k=k, seed="prio").collect()
+        for r in priority_sample(docs, k=k).collect()
     }
 
     def h32(s):

@@ -9,6 +9,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from ci_log_processing_spark.operators.dedup import (
+    WINNOW_K,
+    WINNOW_WINDOW,
     release_persisted,
     winnow_fingerprints,
     winnow_pairs,
@@ -85,6 +87,7 @@ def test_bm25_length_normalization(spark):
 def test_winnow_guarantee_shared_run_shares_fingerprint(spark):
     # MOSS guarantee: any shared run of window+k-1 tokens yields at
     # least one shared fingerprint. k=4, window=4 -> runs of 7.
+    assert (WINNOW_K, WINNOW_WINDOW) == (4, 4)
     shared_run = "alpha beta gamma delta epsilon zeta eta"  # 7 tokens
     docs = _docs(
         spark,
@@ -95,7 +98,7 @@ def test_winnow_guarantee_shared_run_shares_fingerprint(spark):
     )
     fps = {
         r["doc_id"]: set(r["fps"])
-        for r in winnow_fingerprints(docs, k=4, window=4).collect()
+        for r in winnow_fingerprints(docs).collect()
     }
     assert fps[1] & fps[2], "shared 7-token run must share a fingerprint"
 
@@ -109,10 +112,11 @@ def test_winnow_degenerate_docs(spark):
         ],
     )
     out = {
-        r["doc_id"]: r for r in winnow_fingerprints(docs, k=4, window=4).collect()
+        r["doc_id"]: r for r in winnow_fingerprints(docs).collect()
     }
     assert out[1]["n_fps"] == 0 and out[1]["fps"] == []
-    assert out[2]["n_fps"] == len(set(out[2]["fps"])) > 0
+    # 5 tokens -> 2 distinct grams, fewer than the window: both kept
+    assert out[2]["n_fps"] == len(set(out[2]["fps"])) == 2
 
 
 def test_winnow_pairs_containment(spark):
@@ -125,25 +129,11 @@ def test_winnow_pairs_containment(spark):
             (3, " ".join(f"other{i}" for i in range(40))),
         ],
     )
-    out = winnow_pairs(docs, overlap_milli=800, k=4, window=4).collect()
+    out = winnow_pairs(docs, overlap_milli=800).collect()
     release_persisted()
     pairs = {(r["doc_a"], r["doc_b"]): r["overlap_milli"] for r in out}
     assert (1, 2) in pairs and pairs[(1, 2)] >= 800
     assert not any(3 in p for p in pairs)
-
-
-def test_winnow_validation(spark):
-    docs = _docs(spark, [(1, "a b c")])
-    with pytest.raises(ValueError):
-        winnow_fingerprints(docs, k=0)
-    with pytest.raises(ValueError):
-        winnow_fingerprints(docs, window=0)
-
-
-def test_winnow_window_one_keeps_every_gram(spark):
-    docs = _docs(spark, [(1, "a b c d e f")])
-    out = winnow_fingerprints(docs, k=2, window=1).collect()[0]
-    assert out["n_fps"] == 5  # all 5 distinct 2-grams kept
 
 
 def test_vocab_stats_exact(spark):

@@ -258,8 +258,9 @@ def test_phrase_merge_greedy_islands(spark):
 
 
 def test_rrf_fuse_math_and_order(spark):
-    from ci_log_processing_spark.operators.retrieval import rrf_fuse
+    from ci_log_processing_spark.operators.retrieval import RRF_K0, rrf_fuse
 
+    assert RRF_K0 == 60
     schema = "qid long, doc_id long, rank int"
     lex = spark.createDataFrame(
         [(1, 10, 1), (1, 11, 2), (1, 12, 3)], schema
@@ -267,10 +268,7 @@ def test_rrf_fuse_math_and_order(spark):
     dense = spark.createDataFrame(
         [(1, 11, 1), (1, 13, 2), (1, 10, 3)], schema
     )
-    out = {
-        r.doc_id: r
-        for r in rrf_fuse([lex, dense], k0=60, topk=10).collect()
-    }
+    out = {r.doc_id: r for r in rrf_fuse([lex, dense]).collect()}
     # doc 11: 1e6//62 + 1e6//61 = 16129 + 16393 = 32522 — fused to
     # the top though neither system ranked it first
     assert out[11].rrf_micro == 1000000 // 62 + 1000000 // 61
@@ -286,5 +284,3 @@ def test_rrf_fuse_math_and_order(spark):
 
     with _pytest.raises(ValueError):
         rrf_fuse([])
-    with _pytest.raises(ValueError):
-        rrf_fuse([lex], k0=0)

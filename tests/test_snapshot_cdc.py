@@ -204,6 +204,4 @@ def test_epoch_plan_validation(spark):
     with pytest.raises(ValueError):
         epoch_plan(docs, 10.0, {"s": -1.0})
     with pytest.raises(ValueError):
-        epoch_plan(docs, 10.0, {}, default_weight=0.0)
-    with pytest.raises(ValueError):
         epoch_plan(docs, 10.0, {}, max_epochs=0.0)

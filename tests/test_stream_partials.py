@@ -68,9 +68,7 @@ def _hll(spark, work):
     load_transcripts(spark, SF).repartition(2, "conv_id").write.parquet(
         in_dir
     )
-    return lambda out: run_streaming_hll(
-        spark, in_dir, out, max_files_per_trigger=1
-    )
+    return lambda out: run_streaming_hll(spark, in_dir, out)
 
 
 def _hdr(spark, work):
@@ -97,9 +95,7 @@ def _cms(spark, work):
         "doc_id long, text string",
     )
     _write_waves(docs, in_dir, 2)
-    return lambda out: run_streaming_cms(
-        spark, in_dir, out, candidates_k=5, width=32, depth=3
-    )
+    return lambda out: run_streaming_cms(spark, in_dir, out)
 
 
 def _drift(spark, work):

@@ -626,7 +626,7 @@ def test_streaming_hll_equals_batch_sketch(spark, tmp_path):
     streamed = {
         r["sink"]: r["hll_distinct"]
         for r in run_streaming_hll(
-            spark, in_dir, str(tmp_path / "out"), max_files_per_trigger=2
+            spark, in_dir, str(tmp_path / "out")
         ).collect()
     }
     batch = {
@@ -735,12 +735,8 @@ def test_streaming_cms_equals_batch_and_survives_replay(spark, tmp_path):
         os.utime(dst, (mt, mt))
 
     out_dir = str(tmp_path / "out")
-    got = run_streaming_cms(
-        spark, str(in_dir), out_dir, candidates_k=5, width=32, depth=3
-    ).collect()
-    want = cms_token_counts(
-        docs, candidates_k=5, width=32, depth=3
-    ).collect()
+    got = run_streaming_cms(spark, str(in_dir), out_dir).collect()
+    want = cms_token_counts(docs).collect()
     key = lambda r: (r["rank"], r["token"])  # noqa: E731
     assert sorted(got, key=key) == sorted(want, key=key)
     # CMS one-sided error: estimate never undercounts
@@ -749,9 +745,7 @@ def test_streaming_cms_equals_batch_and_survives_replay(spark, tmp_path):
     # full replay: wipe ONLY the checkpoint; both batches re-run and
     # overwrite their own partial dirs — double-merge would inflate
     shutil.rmtree(os.path.join(out_dir, "_stream_ckpt"))
-    again = run_streaming_cms(
-        spark, str(in_dir), out_dir, candidates_k=5, width=32, depth=3
-    ).collect()
+    again = run_streaming_cms(spark, str(in_dir), out_dir).collect()
     assert sorted(again, key=key) == sorted(want, key=key)
 
 

@@ -40,11 +40,6 @@ def test_log_templates_masks_digit_tokens(routed_df):
     assert "dropped" not in out
 
 
-def test_log_templates_min_count_filter(routed_df):
-    out = [r.template for r in log_templates(routed_df, min_count=2).collect()]
-    assert out == ["added port <*>"]
-
-
 def test_conv_dedup_marks_exact_copies(spark):
     rows = [
         # A and C are byte-identical transcripts; B differs in turn 1

@@ -5,7 +5,10 @@ from datetime import datetime
 
 from pyspark.sql import functions as F
 
-from ci_log_processing_spark.operators.aggregate import slo_burn_alert
+from ci_log_processing_spark.operators.aggregate import (
+    SLO_LONG_HOURS,
+    slo_burn_alert,
+)
 from ci_log_processing_spark.operators.dedup import (
     dedup_threshold_curve,
     release_persisted,
@@ -48,6 +51,7 @@ def test_threshold_curve_is_monotone_and_consistent(spark):
 
 
 def test_slo_burn_multiwindow_rule(spark):
+    assert SLO_LONG_HOURS == 6
     ts = datetime
     rows = []
     # hours 0-5: 10 turns, 1 error each (100 milli > 50 slo)
@@ -62,7 +66,7 @@ def test_slo_burn_multiwindow_rule(spark):
     df = spark.createDataFrame(rows, ROUTED_SCHEMA)
     out = {
         r.window_start.hour: r
-        for r in slo_burn_alert(df, slo_milli=50, long_hours=6).collect()
+        for r in slo_burn_alert(df, slo_milli=50).collect()
     }
     assert out[0].short_burn_milli == 100
     assert out[5].long_burn_milli == 100
@@ -83,7 +87,7 @@ def test_slo_burn_range_frame_respects_calendar_gaps(spark):
     df = spark.createDataFrame(rows, ROUTED_SCHEMA)
     out = {
         r.window_start.hour: r
-        for r in slo_burn_alert(df, long_hours=6).collect()
+        for r in slo_burn_alert(df).collect()
     }
     assert out[0].long_burn_milli == 1000
     # a ROWS frame would have dragged hour 0's errors in here
