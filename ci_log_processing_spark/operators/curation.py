@@ -404,6 +404,40 @@ def mixture_sample(
     return docs.withColumn("u32", u32).filter(F.col("u32") < cut)
 
 
+def _bucket_rank(keyed: DataFrame, order: list[str]) -> DataFrame:
+    """`keyed` plus `_idx`, the dense global rank from 0 in (`_bkt`,
+    *order) order, computed without a global sort. `keyed` is
+    hash-partitioned on `_bkt`, a prefix of the sort key: a
+    within-bucket row_number rides that partitioning, and each
+    bucket's offset is a cumsum over the bucket-count table,
+    broadcast back."""
+    from .dedup import _register_persist
+
+    w_in = Window.partitionBy("_bkt").orderBy(*order)
+    # ranked feeds BOTH the output join and the bucket-size aggregate;
+    # persist it (released via dedup.release_persisted, spills to disk
+    # past memory) so the second consumer reads the materialized rank,
+    # never re-executing the upstream plan — fatal when shuffle_index
+    # caps a long curation composition. Bucket sizes are max(_rn) over
+    # the ranked output, so no second scan of `keyed` exists at all.
+    ranked = _register_persist(
+        keyed.withColumn("_rn", F.row_number().over(w_in))
+    )
+    # the cumsum window is over the bucket-count table, never the data
+    w_off = Window.orderBy("_bkt").rowsBetween(
+        Window.unboundedPreceding, -1
+    )
+    offsets = (
+        ranked.groupBy("_bkt")
+        .agg(F.max("_rn").alias("_n"))
+        .withColumn("_off", F.coalesce(F.sum("_n").over(w_off), F.lit(0)))
+        .select("_bkt", "_off")
+    )
+    return ranked.join(F.broadcast(offsets), "_bkt").withColumn(
+        "_idx", F.col("_off") + F.col("_rn") - 1
+    )
+
+
 def shuffle_index(
     docs: DataFrame,
     shard_size: int = 100,
@@ -457,38 +491,12 @@ def shuffle_index(
         .repartition(F.col("_bkt"))
         .withColumn("_key", key)
     )
-    from .dedup import _register_persist
-
-    w_in = Window.partitionBy("_bkt").orderBy("_key", "doc_id")
-    # ranked feeds BOTH the output join and the bucket-size aggregate;
-    # persist it (released via dedup.release_persisted, spills to disk
-    # past memory) so the second consumer reads the materialized rank,
-    # never re-executing the upstream plan — fatal when shuffle_index
-    # caps a long curation composition. Bucket sizes are max(_rn) over
-    # the ranked output, so no second scan of `keyed` exists at all.
-    ranked = _register_persist(
-        keyed.withColumn("_rn", F.row_number().over(w_in))
-    )
-    # the cumsum window is over the <=256-row bucket-count table,
-    # never the data
-    w_off = Window.orderBy("_bkt").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = (
-        ranked.groupBy("_bkt")
-        .agg(F.max("_rn").alias("_n"))
-        .withColumn("_off", F.coalesce(F.sum("_n").over(w_off), F.lit(0)))
-        .select("_bkt", "_off")
-    )
-    idx = F.col("_off") + F.col("_rn") - 1
-    return (
-        ranked.join(F.broadcast(offsets), "_bkt")
-        .select(
-            "doc_id",
-            *payload_cols,
-            idx.alias("global_idx"),
-            F.floor(idx / shard_size).cast("long").alias("shard"),
-        )
+    idx = F.col("_idx")
+    return _bucket_rank(keyed, ["_key", "doc_id"]).select(
+        "doc_id",
+        *payload_cols,
+        idx.alias("global_idx"),
+        F.floor(idx / shard_size).cast("long").alias("shard"),
     )
 
 

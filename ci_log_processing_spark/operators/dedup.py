@@ -288,6 +288,44 @@ def incremental_dedup(
 SHINGLE_DF_CUT = 128
 
 
+def _jaccard_verify(
+    cand: DataFrame, arr: DataFrame, threshold: float
+) -> DataFrame:
+    """Exact-verify candidate (doc_a, doc_b) pairs against the
+    distinct-shingle arrays `arr` (doc_id, shingles): join each
+    side's ARRAY onto the pair and take array_intersect — cost is
+    O(|candidates|) with no shingle-level shuffle at all (the
+    oracle's count(*) over matched distinct shingles is the same
+    number as |array_intersect| because shingles are distinct).
+    Output: (doc_a, doc_b, jaccard >= threshold), jaccard rounded
+    to 6."""
+    a = arr.select(
+        F.col("doc_id").alias("doc_a"),
+        F.col("shingles").alias("sh_a"),
+        F.size("shingles").alias("na"),
+    )
+    b = arr.select(
+        F.col("doc_id").alias("doc_b"),
+        F.col("shingles").alias("sh_b"),
+        F.size("shingles").alias("nb"),
+    )
+    return (
+        cand.join(a, "doc_a")
+        .join(b, "doc_b")
+        .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")))
+        .withColumn(
+            "jaccard",
+            F.round(
+                F.col("inter")
+                / (F.col("na") + F.col("nb") - F.col("inter")).cast("double"),
+                6,
+            ),
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select("doc_a", "doc_b", "jaccard")
+    )
+
+
 def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.6) -> DataFrame:
     """Near-dup pairs by Jaccard over distinct SHINGLE_K-token shingles.
 
@@ -329,47 +367,23 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.6) -> DataFrame:
         )
         .distinct()
     )
-    av = arr.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("shingles").alias("sh_a"),
-        F.size("shingles").alias("na"),
-    )
-    bv = arr.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("shingles").alias("sh_b"),
-        F.size("shingles").alias("nb"),
-    )
-    return (
-        cand.join(av, "doc_a")
-        .join(bv, "doc_b")
-        .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter")
-                / (F.col("na") + F.col("nb") - F.col("inter")).cast("double"),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    return _jaccard_verify(cand, arr, threshold)
 
 
-def minhash_signatures(docs: DataFrame) -> DataFrame:
-    """doc_id -> minhash signature array (ordered by permutation id).
+def minhash_signatures(arr: DataFrame) -> DataFrame:
+    """(doc_id, sig) from shingle arrays (doc_id, shingles): the
+    minhash signature array, ordered by permutation id.
 
     Fully map-side: shingle-hash the doc's shingle array once, then
     each permutation is an `array_min(transform(...))` over that
     array — 16 codegen'd expressions per row, ZERO shuffles and no
     16x row blowup (the previous explode+groupBy shape shuffled
     |shingles| x 16 rows twice; at 100 TB that shuffle dominates the
-    whole job). Docs with no shingles (< SHINGLE_K tokens) are excluded,
-    matching the oracle's semantics where they never appear in `sh`.
+    whole job). Docs with no shingles (fewer tokens than the shingle
+    width) are excluded, matching the oracle's semantics where they
+    never appear in `sh`.
     """
-    hashed = shingled_docs(docs, SHINGLE_K).select(
-        "doc_id", F.transform("shingles", h32).alias("hs")
-    )
+    hashed = arr.select("doc_id", F.transform("shingles", h32).alias("hs"))
     sig = F.array(
         *[
             F.array_min(
@@ -484,7 +498,9 @@ def minhash_estimate_pairs(
     materialization, which amortizes as |shingles| grows while the
     3x recompute it replaces does not).
     """
-    sigs = _register_persist(minhash_signatures(docs))
+    sigs = _register_persist(
+        minhash_signatures(shingled_docs(docs, SHINGLE_K))
+    )
     cand = _banded_candidate_pairs(_bands_from_sigs(sigs), LSH_BUCKET_CAP)
     a = sigs.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sa"))
     b = sigs.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sb"))
@@ -537,36 +553,7 @@ def minhash_lsh_pairs(
     # string arrays (see shingled_docs)
     arr, bands = _lsh_shingles_and_bands(docs, SHINGLE_K)
     cand = _banded_candidate_pairs(bands, LSH_BUCKET_CAP)
-    # exact-verify ONLY the banded candidates — join each side's
-    # distinct-shingle ARRAY onto the pair and take array_intersect;
-    # cost is O(|candidates|) with no shingle-level shuffle at all
-    # (the oracle's count(*) over matched distinct shingles is the
-    # same number as |array_intersect| because shingles are distinct)
-    a = arr.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("shingles").alias("sh_a"),
-        F.size("shingles").alias("na"),
-    )
-    b = arr.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("shingles").alias("sh_b"),
-        F.size("shingles").alias("nb"),
-    )
-    return (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
-        .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter")
-                / (F.col("na") + F.col("nb") - F.col("inter")).cast("double"),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    return _jaccard_verify(cand, arr, threshold)
 
 
 def _lsh_shingles_and_bands(
@@ -581,21 +568,7 @@ def _lsh_shingles_and_bands(
     ROWS_PER_BAND derivation, so index bands written by one release
     verify against batches from another."""
     arr = shingled_docs(docs, k)
-    hashed = arr.select(
-        "doc_id", F.transform("shingles", h32).alias("hs")
-    )
-    sig = F.array(
-        *[
-            F.array_min(
-                F.transform(
-                    "hs", lambda h: (F.lit(a) * h + F.lit(b)) % MERSENNE_P
-                )
-            )
-            for a, b in MINHASH_PARAMS
-        ]
-    )
-    bands = _bands_from_sigs(hashed.select("doc_id", sig.alias("sig")))
-    return arr, bands
+    return arr, _bands_from_sigs(minhash_signatures(arr))
 
 
 def _bands_from_sigs(sigs: DataFrame) -> DataFrame:

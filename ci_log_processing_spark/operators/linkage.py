@@ -49,7 +49,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 
 # length cap of the canonical linkage key, in characters
@@ -252,28 +251,10 @@ def sorted_neighborhood_pairs(
     keyed = keys.select(
         "doc_id", "key", F.substring("key", 1, 2).alias("_bkt")
     ).repartition(F.col("_bkt"))
-    w_in = Window.partitionBy("_bkt").orderBy("key", "doc_id")
-    from .dedup import _register_persist
+    from .curation import _bucket_rank
 
-    ranked = _register_persist(
-        keyed.withColumn("_rn", F.row_number().over(w_in))
-    )
-    w_off = Window.orderBy("_bkt").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = (
-        ranked.groupBy("_bkt")
-        .agg(F.max("_rn").alias("_n"))
-        .withColumn("_off", F.coalesce(F.sum("_n").over(w_off), F.lit(0)))
-        .select("_bkt", "_off")
-    )
-    idx = (
-        ranked.join(F.broadcast(offsets), "_bkt")
-        .select(
-            "doc_id",
-            "key",
-            (F.col("_off") + F.col("_rn") - 1).alias("rnk"),
-        )
+    idx = _bucket_rank(keyed, ["key", "doc_id"]).select(
+        "doc_id", "key", F.col("_idx").alias("rnk")
     )
     a = idx.select(
         F.col("doc_id").alias("id_a"),

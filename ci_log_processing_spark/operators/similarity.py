@@ -1,26 +1,37 @@
-"""Similarity search over embedding columns (array<float>).
+"""Similarity search, near-dup and quantizers over embedding columns
+(array<float>): exact and bucketed/IVF/PQ top-k, cosine and SRP
+near-dup pairs, k-medians and PQ fits, the kNN graph, and per-group
+diversity and drift audits.
 
-Two tiers:
-  * brute-force cosine top-k — broadcast the (small) query set
-    against the full corpus; exact baseline;
-  * bucketed ANN — restrict comparisons to a coarse partition
-    (label = IVF-style coarse centroid id here; at scale: a learned
-    clustering or LSH hyperplane bucket). The plan shape is the one
-    that matters: per-bucket joins, never an all-pairs shuffle.
+Every operator is assembled from one set of private helpers, so a
+distance, a ranking or a stage has one definition:
 
-Embedding cosine near-dup (dedup-by-embedding) reuses the bucketed
-pair join with a similarity threshold.
+  * `_dot`, `_sq_norm`/`_norm`, `cosine_col` and `_sq_dist` (round-5
+    squared L2, one linear fold) are the distance arithmetic;
+  * `_centroid_dists` ranks a vector against one nested centroid
+    literal — `_argmin_centroid` takes its minimum and
+    `_probed_lists` its nprobe nearest;
+  * `_top_k` is the per-key row_number cut, `_cosine_top_k` the
+    exact-cosine query tail and `_adc_top_k` the PQ/ADC ranking with
+    its optional exact re-rank;
+  * `_median_centroids` is the element-wise median update,
+    `_hash_subsplit` the mega-bucket guard of the near-dup pair
+    joins, `_seed_vectors` the (md5(id), id) seed draw and `_dim` the
+    vector length (both raise one ValueError on an empty input), and
+    `_centroid_drift` the drift statistics that
+    streaming/drift_stream.py shares.
 
-Dot products run as Catalyst array expressions (zip_with +
-aggregate) — JVM-side, no Python. Elements are cast to double
-before arithmetic so Spark and the DuckDB oracle agree bit-for-bit
-after rounding.
+Arithmetic runs as Catalyst array expressions (zip_with + aggregate)
+— JVM-side, no Python. Elements are cast to double before arithmetic
+and results rounded to 5 decimals so Spark and the DuckDB oracle
+agree bit-for-bit.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -31,18 +42,69 @@ def _dot(a: Column, b: Column) -> Column:
     )
 
 
-def _norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
+def _sq_norm(a: Column) -> Column:
+    return F.aggregate(
+        F.transform(a, lambda x: x.cast("double") * x.cast("double")),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
     )
+
+
+def _norm(a: Column) -> Column:
+    return F.sqrt(_sq_norm(a))
 
 
 def cosine_col(a: Column, b: Column) -> Column:
     return F.round(_dot(a, b) / (_norm(a) * _norm(b)), 5)
+
+
+def _sq_dist(a: Column, b: Column) -> Column:
+    """round(squared L2, 5) as ONE linear fold, so the float addition
+    order matches the DuckDB twins' list_sum. Both sides are cast to
+    double; on a side that already is double the cast is a no-op."""
+    return F.round(
+        F.aggregate(
+            F.zip_with(
+                a,
+                b,
+                lambda x, y: (x.cast("double") - y.cast("double"))
+                * (x.cast("double") - y.cast("double")),
+            ),
+            F.lit(0.0),
+            lambda acc, v: acc + v,
+        ),
+        5,
+    )
+
+
+def _top_k(
+    df: DataFrame, part: str, order: list[Column], k: int
+) -> DataFrame:
+    """`df` plus `rank` (row_number per `part` in `order`), cut to
+    rank <= k."""
+    w = Window.partitionBy(part).orderBy(*order)
+    return df.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
+    )
+
+
+def _queries(queries: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    return queries.select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_emb")
+    )
+
+
+def _cosine_top_k(joined: DataFrame, k: int) -> DataFrame:
+    """Exact top-k by cosine over (query, corpus vector) candidate
+    rows, ties by neighbor id: (query_id, neighbor_id, cosine, rank)."""
+    scored = joined.filter(F.col("vec_id") != F.col("query_id")).select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        cosine_col(F.col("q_emb"), F.col("embedding")).alias("cosine"),
+    )
+    return _top_k(
+        scored, "query_id", [F.desc("cosine"), F.asc("neighbor_id")], k
+    )
 
 
 def brute_force_topk(
@@ -54,27 +116,8 @@ def brute_force_topk(
     rank via window per query. Output: (query_id, neighbor_id,
     cosine, rank).
     """
-    from pyspark.sql.window import Window
-
-    q = queries.select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
-    scored = (
-        emb.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            cosine_col(F.col("q_emb"), F.col("embedding")).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    q = _queries(queries, "vec_id", "embedding")
+    return _cosine_top_k(emb.crossJoin(F.broadcast(q)), k)
 
 
 def bucketed_ann_topk(
@@ -87,30 +130,31 @@ def bucketed_ann_topk(
     Recall < 1.0 by construction — compare against brute_force_topk
     to measure it (see tests).
     """
-    from pyspark.sql.window import Window
-
     q = queries.select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
         F.col("label").alias("q_bucket"),
     )
-    scored = (
-        emb.join(
-            F.broadcast(q), emb["label"] == q["q_bucket"], "inner"
-        )
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            cosine_col(F.col("q_emb"), F.col("embedding")).alias("cosine"),
-        )
+    return _cosine_top_k(
+        emb.join(F.broadcast(q), emb["label"] == q["q_bucket"], "inner"), k
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
+
+
+def _median_centroids(keyed: DataFrame, vec_col: str) -> DataFrame:
+    """(bkt, centroid): the element-wise median of `vec_col` per `bkt`
+    — one posexplode + (bkt, pos) aggregate, then the per-bucket
+    array in pos order."""
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        keyed.select("bkt", F.posexplode(vec_col).alias("pos", "v"))
+        .groupBy("bkt", "pos")
+        .agg(F.expr("percentile(CAST(v AS DOUBLE), 0.5)").alias("cv"))
+        .groupBy("bkt")
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("pos", "cv"))),
+                lambda x: x["cv"],
+            ).alias("centroid")
+        )
     )
 
 
@@ -126,18 +170,8 @@ def bucket_centroids(emb: DataFrame) -> DataFrame:
     representative). Cost: posexplode + one (bucket, pos) aggregate
     over the dim table — tiny next to the corpus.
     """
-    pos = emb.select(
-        F.col("label").alias("bkt"),
-        F.posexplode("embedding").alias("pos", "v"),
-    )
-    cent = pos.groupBy("bkt", "pos").agg(
-        F.expr("percentile(CAST(v AS DOUBLE), 0.5)").alias("cv")
-    )
-    return cent.groupBy("bkt").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "cv"))),
-            lambda x: x["cv"],
-        ).alias("centroid")
+    return _median_centroids(
+        emb.select(F.col("label").alias("bkt"), "embedding"), "embedding"
     )
 
 
@@ -157,48 +191,22 @@ def ivf_multiprobe_topk(
     partition pruning, not a scan). Recall rises with nprobe and is
     measured against brute force in tests.
     """
-    from pyspark.sql.window import Window
-
     cents = bucket_centroids(emb)
-    q = queries.select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
-    ranked = (
-        q.crossJoin(F.broadcast(cents))
-        .select(
+    q = _queries(queries, "vec_id", "embedding")
+    ranked = _top_k(
+        q.crossJoin(F.broadcast(cents)).select(
             "query_id",
             "q_emb",
             F.col("bkt"),
             cosine_col(F.col("q_emb"), F.col("centroid")).alias("c_cos"),
-        )
-        .withColumn(
-            "c_rank",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.desc("c_cos"), F.asc("bkt")
-                )
-            ),
-        )
-        .filter(F.col("c_rank") <= nprobe)
-        .select("query_id", "q_emb", "bkt")
-    )
-    scored = (
-        emb.join(
-            F.broadcast(ranked), emb["label"] == ranked["bkt"], "inner"
-        )
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            cosine_col(F.col("q_emb"), F.col("embedding")).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        ),
+        "query_id",
+        [F.desc("c_cos"), F.asc("bkt")],
+        nprobe,
+    ).select("query_id", "q_emb", "bkt")
+    return _cosine_top_k(
+        emb.join(F.broadcast(ranked), emb["label"] == ranked["bkt"], "inner"),
+        k,
     )
 
 
@@ -231,6 +239,24 @@ def _bucket_pair_join(
     )
 
 
+def _hash_subsplit(
+    keyed: DataFrame, keys: list[str], bucket_cap: int
+) -> DataFrame:
+    """The mega-bucket guard: (*keys, sub, vec_id, embedding), where a
+    `keys` cell of n rows is split into ceil(n / bucket_cap)
+    sub-buckets by hashing vec_id. The cell-size table is broadcast."""
+    from .dedup import h32
+
+    sizes = keyed.groupBy(*keys).agg(F.count(F.lit(1)).alias("n"))
+    nsub = F.ceil(F.col("n") / F.lit(float(bucket_cap))).cast("long")
+    return keyed.join(F.broadcast(sizes), keys).select(
+        *keys,
+        F.pmod(h32(F.col("vec_id").cast("string")), nsub).alias("sub"),
+        "vec_id",
+        "embedding",
+    )
+
+
 def embedding_near_dup_pairs_capped(
     emb: DataFrame,
     threshold: float = 0.95,
@@ -257,20 +283,10 @@ def embedding_near_dup_pairs_capped(
     with millions of buckets it becomes a shuffle join on the bucket
     key, co-partitioned with the pair join that follows.
     """
-    from .dedup import h32
-
-    sizes = emb.groupBy("label").agg(F.count(F.lit(1)).alias("n"))
-    nsub = F.ceil(F.col("n") / F.lit(float(bucket_cap))).cast("long")
-    keyed = (
-        emb.join(F.broadcast(sizes), "label")
-        .select(
-            F.col("label").alias("bkt"),
-            F.pmod(h32(F.col("vec_id").cast("string")), nsub).alias("sub"),
-            "vec_id",
-            "embedding",
-        )
+    keyed = emb.select(F.col("label").alias("bkt"), "vec_id", "embedding")
+    return _bucket_pair_join(
+        _hash_subsplit(keyed, ["bkt"], bucket_cap), ["bkt", "sub"], threshold
     )
-    return _bucket_pair_join(keyed, ["bkt", "sub"], threshold)
 
 
 def embedding_near_dup_pairs(
@@ -361,23 +377,12 @@ def srp_near_dup_pairs(
             f"srp_near_dup_pairs: bands={bands} must divide n_bits={n_bits}"
         )
     rpb = n_bits // bands
-    dim = len(emb.select("embedding").first()[0])
+    dim = _dim(emb, "embedding")
     planes = srp_planes(n_bits, dim)
 
     def bit(p: int) -> Column:
         lit = F.array(*[F.lit(v) for v in planes[p]])
-        dot = F.round(
-            F.aggregate(
-                F.zip_with(
-                    F.col("embedding"),
-                    lit,
-                    lambda x, y: x.cast("double") * y,
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ),
-            5,
-        )
+        dot = F.round(_dot(F.col("embedding"), lit), 5)
         return F.when(dot >= 0, F.lit("1")).otherwise(F.lit("0"))
 
     sig = emb.select(
@@ -415,21 +420,10 @@ def srp_near_dup_pairs(
         )
     )
     if bucket_cap is not None:
-        from .dedup import h32
-
-        sizes = keyed.groupBy("band", "key").agg(
-            F.count(F.lit(1)).alias("n")
-        )
-        nsub = F.ceil(F.col("n") / F.lit(float(bucket_cap))).cast("long")
-        keyed = keyed.join(F.broadcast(sizes), ["band", "key"]).select(
-            "band",
-            "key",
-            F.pmod(h32(F.col("vec_id").cast("string")), nsub).alias("sub"),
-            "vec_id",
-            "embedding",
-        )
         return _bucket_pair_join(
-            keyed, ["band", "key", "sub"], threshold
+            _hash_subsplit(keyed, ["band", "key"], bucket_cap),
+            ["band", "key", "sub"],
+            threshold,
         ).distinct()
     return _bucket_pair_join(keyed, ["band", "key"], threshold).distinct()
 
@@ -474,8 +468,6 @@ def ivfpq_ann_topk(
     all of it — the two knobs (nprobe, rerank) trade recall for
     scan fraction and are measured in bench extras.
     """
-    from pyspark.sql.window import Window
-
     coarse = kmeans_centroids(
         emb, k=k_coarse, n_iter=n_iter, id_col=id_col, vec_col=vec_col
     )
@@ -483,8 +475,8 @@ def ivfpq_ann_topk(
         emb, m=m, k=k_codes, n_iter=n_iter, id_col=id_col, vec_col=vec_col
     )
     # ONE zero-shuffle corpus projection: PQ codes + reconstruction
-    # (keep_vec carries the raw vector for the rerank fetch) chained
-    # with the coarse-list assignment — no self-join anywhere
+    # (keep_vec carries the raw vector for the coarse assignment)
+    # chained with the coarse-list assignment — no self-join anywhere
     assigned = pq_encode(
         emb, books, id_col=id_col, vec_col=vec_col, keep_vec=True
     ).select(
@@ -492,118 +484,15 @@ def ivfpq_ann_topk(
         _argmin_centroid(F.col(vec_col), coarse)["b"].alias("bkt"),
         "recon",
     )
-
-    # per-query probe list: rank ALL coarse centroids by round-5
-    # distance with index tie-break (the same (d, b) struct order
-    # _argmin_centroid uses), keep the nprobe best, explode
-    cl = F.array(*[F.array(*[F.lit(float(v)) for v in c]) for c in coarse])
-    ranked = F.slice(
-        F.array_sort(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(len(coarse) - 1)),
-                lambda j: F.struct(
-                    F.round(
-                        F.aggregate(
-                            F.zip_with(
-                                F.col("q_emb"),
-                                F.element_at(cl, j + 1),
-                                lambda x, y: (x.cast("double") - y)
-                                * (x.cast("double") - y),
-                            ),
-                            F.lit(0.0),
-                            lambda acc, v: acc + v,
-                        ),
-                        5,
-                    ).alias("d"),
-                    j.alias("b"),
-                ),
-            )
-        ),
-        1,
-        nprobe,
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_emb")
-    ).select(
+    q = _queries(queries, id_col, vec_col)
+    probed = q.select(
         "query_id",
         "q_emb",
-        F.explode(F.transform(ranked, lambda s: s["b"])).alias("bkt"),
+        _probed_lists(F.col("q_emb"), coarse, nprobe).alias("bkt"),
     )
-    adc = F.round(
-        F.aggregate(
-            F.zip_with(
-                F.col("q_emb"),
-                F.col("recon"),
-                lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ),
-        5,
-    )
-    scored = (
-        assigned.join(F.broadcast(q), "bkt")
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            adc.alias("adc_dist"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_dist"), F.asc("neighbor_id")
-    )
-    if rerank is None:
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-        )
-
-    # same re-fetch shape as pq_ann_topk: the (n_queries x R)
-    # shortlist broadcasts back against the corpus for exact vectors
-    # instead of dragging two dim-sized arrays through the ADC
-    # window exchange
-    shortlist = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= rerank)
-        .select("query_id", "neighbor_id")
-    )
-    exact = F.round(
-        F.aggregate(
-            F.zip_with(
-                F.col("q_emb"),
-                F.col("n_emb"),
-                lambda x, y: (x.cast("double") - y.cast("double"))
-                * (x.cast("double") - y.cast("double")),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ),
-        5,
-    )
-    cand = (
-        emb.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("n_emb"),
-        )
-        .join(F.broadcast(shortlist), "neighbor_id")
-        .join(
-            F.broadcast(
-                queries.select(
-                    F.col(id_col).alias("query_id"),
-                    F.col(vec_col).alias("q_emb"),
-                )
-            ),
-            "query_id",
-        )
-        .select("query_id", "neighbor_id", exact.alias("exact_dist"))
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.asc("exact_dist"), F.asc("neighbor_id")
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
+    return _adc_top_k(
+        assigned.join(F.broadcast(probed), "bkt"),
+        emb, q, k, rerank, id_col, vec_col,
     )
 
 
@@ -633,8 +522,6 @@ def contrastive_triplets(emb: DataFrame, t_pos: float = 0.35) -> DataFrame:
 
     Output: (anchor_id, pos_id, pos_cos, neg_id, neg_cos).
     """
-    from pyspark.sql.window import Window
-
     cand = srp_near_dup_pairs(emb, threshold=-1.0)
     both = cand.select(
         F.col("vec_a").alias("anchor_id"),
@@ -647,66 +534,90 @@ def contrastive_triplets(emb: DataFrame, t_pos: float = 0.35) -> DataFrame:
             "cosine",
         )
     )
-    w = Window.partitionBy("anchor_id").orderBy(
-        F.desc("cosine"), F.asc("other_id")
+    order = [F.desc("cosine"), F.asc("other_id")]
+    pos = _top_k(
+        both.filter(F.col("cosine") >= t_pos), "anchor_id", order, 1
+    ).select(
+        "anchor_id",
+        F.col("other_id").alias("pos_id"),
+        F.col("cosine").alias("pos_cos"),
     )
-    pos = (
-        both.filter(F.col("cosine") >= t_pos)
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") == 1)
-        .select(
-            "anchor_id",
-            F.col("other_id").alias("pos_id"),
-            F.col("cosine").alias("pos_cos"),
-        )
-    )
-    neg = (
-        both.filter(F.col("cosine") < t_pos)
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") == 1)
-        .select(
-            "anchor_id",
-            F.col("other_id").alias("neg_id"),
-            F.col("cosine").alias("neg_cos"),
-        )
+    neg = _top_k(
+        both.filter(F.col("cosine") < t_pos), "anchor_id", order, 1
+    ).select(
+        "anchor_id",
+        F.col("other_id").alias("neg_id"),
+        F.col("cosine").alias("neg_cos"),
     )
     return pos.join(neg, "anchor_id")
 
 
-def _argmin_centroid(vec: Column, cents: list[list[float]]) -> Column:
-    """struct(d, b) of the nearest centroid: ONE nested k x dim
-    literal + a transform over the centroid index, instead of k
-    separate zip_with trees. Bit-identical output (same fold order,
-    same round-5, same index tie-break via array_min on (d, b)
-    structs) but ~4x fewer expression nodes — measured 17 s -> 5.5 s
-    on the first (analysis-cold) run of an 8x64 assignment, which is
-    the case kmeans_fit always pays: every iteration's centroids are
-    new literals, so every iteration's plan is analysis-cold."""
-    cl = F.array(*[F.array(*[F.lit(float(v)) for v in c]) for c in cents])
+def _centroid_lit(cents: list[list[float]]) -> Column:
+    """The centroid list as ONE nested k x dim double literal."""
+    return F.array(*[F.array(*[F.lit(float(v)) for v in c]) for c in cents])
 
-    def sq(c: Column) -> Column:
-        return F.round(
-            F.aggregate(
-                F.zip_with(
-                    vec,
-                    c,
-                    lambda x, y: (x.cast("double") - y)
-                    * (x.cast("double") - y),
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ),
-            5,
-        )
 
-    return F.array_min(
-        F.transform(
-            F.sequence(F.lit(0), F.lit(len(cents) - 1)),
-            lambda j: F.struct(
-                sq(F.element_at(cl, j + 1)).alias("d"), j.alias("b")
-            ),
-        )
+def _centroid_dists(vec: Column, cents: list[list[float]]) -> Column:
+    """array of struct(d, b): the round-5 squared distance `d` from
+    `vec` to every centroid `b`, in index order. One nested literal +
+    a transform over the centroid index instead of k separate
+    zip_with trees: bit-identical values but ~4x fewer expression
+    nodes — measured 17 s -> 5.5 s on the first (analysis-cold) run
+    of an 8x64 assignment, which is the case kmeans_fit always pays:
+    every iteration's centroids are new literals, so every
+    iteration's plan is analysis-cold. Ordering the structs ranks by
+    (d, b), i.e. distance with index tie-break."""
+    cl = _centroid_lit(cents)
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(len(cents) - 1)),
+        lambda j: F.struct(
+            _sq_dist(vec, F.element_at(cl, j + 1)).alias("d"), j.alias("b")
+        ),
     )
+
+
+def _argmin_centroid(vec: Column, cents: list[list[float]]) -> Column:
+    """struct(d, b) of the nearest centroid."""
+    return F.array_min(_centroid_dists(vec, cents))
+
+
+def _probed_lists(
+    vec: Column, cents: list[list[float]], nprobe: int
+) -> Column:
+    """explode of the ids of the nprobe nearest centroids (nprobe=1 is
+    the argmin)."""
+    ranked = F.slice(F.array_sort(_centroid_dists(vec, cents)), 1, nprobe)
+    return F.explode(F.transform(ranked, lambda s: s["b"]))
+
+
+_EMPTY = "the embedding input is empty: no vector to seed or size from"
+
+
+def _dim(emb: DataFrame, vec_col: str) -> int:
+    """Length of the first vector of `emb`."""
+    first = emb.select(vec_col).first()
+    if first is None:
+        raise ValueError(_EMPTY)
+    return len(first[0])
+
+
+def _seed_vectors(
+    emb: DataFrame, n: int, id_col: str, vec_col: str
+) -> list[list[float]]:
+    """The (up to) n vectors with the smallest (md5(id), id) — a
+    reproducible pseudo-random draw the DuckDB twins replay."""
+    seeds = (
+        emb.select(id_col, vec_col)
+        .orderBy(
+            F.md5(F.col(id_col).cast("string").cast("binary")),
+            F.col(id_col),
+        )
+        .limit(n)
+        .collect()
+    )
+    if not seeds:
+        raise ValueError(_EMPTY)
+    return [list(r[vec_col]) for r in seeds]
 
 
 def kmeans_fit(
@@ -759,43 +670,22 @@ def kmeans_centroids(
 ) -> list[list[float]]:
     """The fitted quantizer itself: the k x dim centroid list after
     n_iter k-medians rounds (the loop kmeans_fit runs, factored out
-    so multiprobe consumers — knn_graph_multiprobe — can rank a
-    vector against ALL centroids, not just take the argmin).
+    so multiprobe consumers — knn_graph at nprobe > 1 and
+    ivfpq_ann_topk — can rank a vector against ALL centroids, not
+    just take the argmin). A corpus of fewer than k vectors fits
+    one centroid per vector, as the DuckDB twin's LIMIT k does.
     Collecting it is the point: the quantizer is driver-sized by
     design and becomes broadcast literals downstream."""
     if k < 1 or n_iter < 0:
-        raise ValueError("kmeans_fit: k >= 1 and n_iter >= 0 required")
-    seeds = (
-        emb.select(id_col, vec_col)
-        .orderBy(
-            F.md5(F.col(id_col).cast("string").cast("binary")),
-            F.col(id_col),
-        )
-        .limit(k)
-        .collect()
-    )
-    cents = [list(r[vec_col]) for r in seeds]
-
+        raise ValueError("kmeans_centroids: k >= 1 and n_iter >= 0 required")
+    cents = _seed_vectors(emb, k, id_col, vec_col)
     for _ in range(n_iter):
         best = _argmin_centroid(F.col(vec_col), cents)
-        assigned = emb.select(vec_col, best["b"].alias("bkt"))
-        med = (
-            assigned.select(
-                "bkt", F.posexplode(vec_col).alias("pos", "v")
-            )
-            .groupBy("bkt", "pos")
-            .agg(F.expr("percentile(CAST(v AS DOUBLE), 0.5)").alias("cv"))
-            .groupBy("bkt")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "cv"))),
-                    lambda x: x["cv"],
-                ).alias("centroid")
-            )
-            .collect()
-        )
+        med = _median_centroids(
+            emb.select(vec_col, best["b"].alias("bkt")), vec_col
+        ).collect()
         new = {r["bkt"]: list(r["centroid"]) for r in med}
-        cents = [new.get(j, cents[j]) for j in range(k)]
+        cents = [new.get(j, c) for j, c in enumerate(cents)]
     return cents
 
 
@@ -891,8 +781,6 @@ def knn_graph(
         raise ValueError("knn_graph: k_nn >= 1 required")
     if not 1 <= nprobe <= k_clusters:
         raise ValueError("knn_graph: 1 <= nprobe <= k_clusters required")
-    from pyspark.sql.window import Window
-
     cents = kmeans_centroids(emb, k_clusters, n_iter)
     best = _argmin_centroid(F.col("embedding"), cents)
     b = emb.select(
@@ -901,39 +789,12 @@ def knn_graph(
         F.col("embedding").alias("vb"),
         _norm(F.col("embedding")).alias("nb"),
     )
-    # source side: the nprobe nearest cells = first nprobe entries of
-    # the (d, b)-sorted centroid struct array (nprobe=1 == argmin)
-    cl = F.array(*[F.array(*[F.lit(float(v)) for v in c]) for c in cents])
-    ranked = F.slice(
-        F.array_sort(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(k_clusters - 1)),
-                lambda j: F.struct(
-                    F.round(
-                        F.aggregate(
-                            F.zip_with(
-                                F.col("embedding"),
-                                F.element_at(cl, j + 1),
-                                lambda x, y: (x.cast("double") - y)
-                                * (x.cast("double") - y),
-                            ),
-                            F.lit(0.0),
-                            lambda acc, v: acc + v,
-                        ),
-                        5,
-                    ).alias("d"),
-                    j.alias("b"),
-                ),
-            )
-        ),
-        1,
-        nprobe,
-    )
+    # source side: the nprobe nearest cells (nprobe=1 == argmin)
     a = emb.select(
         F.col("vec_id").alias("src"),
         F.col("embedding").alias("va"),
         _norm(F.col("embedding")).alias("na"),
-        F.explode(F.transform(ranked, lambda s: s["b"])).alias("bkt"),
+        _probed_lists(F.col("embedding"), cents, nprobe).alias("bkt"),
     )
     scored = (
         a.join(b, "bkt")
@@ -948,18 +809,13 @@ def knn_graph(
             ).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("src").orderBy(
-        F.col("cos_sim").desc(), F.col("nbr").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k_nn)
-        .select(
-            F.col("src").alias("vec_id"),
-            F.col("nbr").alias("nbr_id"),
-            "rank",
-            "cos_sim",
-        )
+    return _top_k(
+        scored, "src", [F.col("cos_sim").desc(), F.col("nbr").asc()], k_nn
+    ).select(
+        F.col("src").alias("vec_id"),
+        F.col("nbr").alias("nbr_id"),
+        "rank",
+        "cos_sim",
     )
 
 
@@ -993,13 +849,8 @@ def embedding_diversity(emb: DataFrame) -> DataFrame:
     is absorbed by the rounding.
     """
     v = F.col("embedding")
-    sq = F.aggregate(
-        F.transform(v, lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
     norms = emb.groupBy("label").agg(
-        F.count(F.lit(1)).alias("n"), F.sum(sq).alias("_s2")
+        F.count(F.lit(1)).alias("n"), F.sum(_sq_norm(v)).alias("_s2")
     )
     dims = (
         emb.select("label", F.posexplode(v).alias("_pos", "_val"))
@@ -1051,7 +902,7 @@ def pq_codebooks(
     at 100 TB the fit runs on a deterministic md5-threshold sample,
     the encode pass below is what touches the full corpus.
     """
-    dim = len(emb.select(vec_col).first()[0])
+    dim = _dim(emb, vec_col)
     if m < 1 or dim % m != 0:
         raise ValueError(
             f"pq_codebooks: m={m} must divide the embedding dim {dim}"
@@ -1096,16 +947,59 @@ def pq_encode(
         sub = F.slice(F.col(vec_col), j * d_sub + 1, d_sub)
         code = _argmin_centroid(sub, book)["b"]
         code_cols.append(code.alias(f"c{j}"))
-        book_lit = F.array(
-            *[F.array(*[F.lit(float(v)) for v in c]) for c in book]
-        )
-        recon_parts.append(F.element_at(book_lit, code + 1))
+        recon_parts.append(F.element_at(_centroid_lit(book), code + 1))
     keep = [F.col(vec_col)] if keep_vec else []
     return emb.select(
         id_col,
         *code_cols,
         F.concat(*recon_parts).alias("recon"),
         *keep,
+    )
+
+
+def _adc_top_k(
+    joined: DataFrame,
+    emb: DataFrame,
+    q: DataFrame,
+    k: int,
+    rerank: int | None,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """The ranking stage of pq_ann_topk and ivfpq_ann_topk over
+    (query, encoded corpus row) candidates: top-k by ADC distance to
+    `recon` (neighbor-id tie-break), or with `rerank=R` a per-query
+    shortlist of R that is re-ranked by exact distance. The
+    (n_queries x R) shortlist and the query side `q` broadcast back
+    against the corpus `emb` for the exact vectors, instead of
+    dragging two dim-sized arrays through the ADC window exchange.
+    Output: (query_id, neighbor_id, adc_dist | exact_dist, rank)."""
+    scored = joined.filter(F.col(id_col) != F.col("query_id")).select(
+        "query_id",
+        F.col(id_col).alias("neighbor_id"),
+        _sq_dist(F.col("q_emb"), F.col("recon")).alias("adc_dist"),
+    )
+    order = [F.asc("adc_dist"), F.asc("neighbor_id")]
+    if rerank is None:
+        return _top_k(scored, "query_id", order, k)
+    shortlist = _top_k(scored, "query_id", order, rerank).select(
+        "query_id", "neighbor_id"
+    )
+    cand = (
+        emb.select(
+            F.col(id_col).alias("neighbor_id"),
+            F.col(vec_col).alias("n_emb"),
+        )
+        .join(F.broadcast(shortlist), "neighbor_id")
+        .join(F.broadcast(q), "query_id")
+        .select(
+            "query_id",
+            "neighbor_id",
+            _sq_dist(F.col("q_emb"), F.col("n_emb")).alias("exact_dist"),
+        )
+    )
+    return _top_k(
+        cand, "query_id", [F.asc("exact_dist"), F.asc("neighbor_id")], k
     )
 
 
@@ -1149,78 +1043,40 @@ def pq_ann_topk(
     force is measured in bench extras next to the IVF/bucketed
     variants.
     """
-    from pyspark.sql.window import Window
-
     books = pq_codebooks(
         emb, m=m, k=k_codes, n_iter=n_iter, id_col=id_col, vec_col=vec_col
     )
     coded = pq_encode(emb, books, id_col=id_col, vec_col=vec_col)
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_emb")
+    q = _queries(queries, id_col, vec_col)
+    return _adc_top_k(
+        coded.crossJoin(F.broadcast(q)), emb, q, k, rerank, id_col, vec_col
     )
-    adc = F.round(
-        F.aggregate(
-            F.zip_with(
-                F.col("q_emb"),
-                F.col("recon"),
-                lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ),
-        5,
-    )
-    scored = (
-        coded.crossJoin(F.broadcast(q))
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            adc.alias("adc_dist"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_dist"), F.asc("neighbor_id")
-    )
-    if rerank is None:
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-        )
 
-    shortlist = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= rerank)
-        .select("query_id", "neighbor_id")
+
+def _centroid_drift(dims: DataFrame) -> DataFrame:
+    """The drift statistics from per-(label, dim) sums and counts of
+    two snapshots (label, sa, sb, na, nb): per-dim means divide
+    before the group fold, snapshot size = max count over the dims,
+    labels empty on either side dropped, outputs rounded to 5.
+    Output: (label, n_a, n_b, centroid_cosine, centroid_l2)."""
+    ca = F.col("sa") / F.col("na").cast("double")
+    cb = F.col("sb") / F.col("nb").cast("double")
+    cent = dims.groupBy("label").agg(
+        F.max("na").alias("n_a"),
+        F.max("nb").alias("n_b"),
+        F.sum(ca * cb).alias("_dot"),
+        F.sum(ca * ca).alias("_qa"),
+        F.sum(cb * cb).alias("_qb"),
+        F.sum((ca - cb) * (ca - cb)).alias("_d2"),
     )
-    exact = F.round(
-        F.aggregate(
-            F.zip_with(
-                F.col("q_emb"),
-                F.col("n_emb"),
-                lambda x, y: (x.cast("double") - y.cast("double"))
-                * (x.cast("double") - y.cast("double")),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ),
-        5,
-    )
-    cand = (
-        emb.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("n_emb"),
-        )
-        .join(F.broadcast(shortlist), "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .select("query_id", "neighbor_id", exact.alias("exact_dist"))
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.asc("exact_dist"), F.asc("neighbor_id")
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
+    return cent.filter((F.col("n_a") > 0) & (F.col("n_b") > 0)).select(
+        "label",
+        "n_a",
+        "n_b",
+        F.round(
+            F.col("_dot") / F.sqrt(F.col("_qa") * F.col("_qb")), 5
+        ).alias("centroid_cosine"),
+        F.round(F.sqrt(F.col("_d2")), 5).alias("centroid_l2"),
     )
 
 
@@ -1278,25 +1134,7 @@ def snapshot_drift(emb_a: DataFrame, emb_b: DataFrame) -> DataFrame:
             ),
         )
     )
-    ca = F.col("sa") / F.col("na").cast("double")
-    cb = F.col("sb") / F.col("nb").cast("double")
-    cent = dims.groupBy("label").agg(
-        F.max("na").alias("n_a"),
-        F.max("nb").alias("n_b"),
-        F.sum(ca * cb).alias("_dot"),
-        F.sum(ca * ca).alias("_qa"),
-        F.sum(cb * cb).alias("_qb"),
-        F.sum((ca - cb) * (ca - cb)).alias("_d2"),
-    )
-    return cent.filter((F.col("n_a") > 0) & (F.col("n_b") > 0)).select(
-        "label",
-        "n_a",
-        "n_b",
-        F.round(
-            F.col("_dot") / F.sqrt(F.col("_qa") * F.col("_qb")), 5
-        ).alias("centroid_cosine"),
-        F.round(F.sqrt(F.col("_d2")), 5).alias("centroid_l2"),
-    )
+    return _centroid_drift(dims)
 
 
 def kcenter_select(emb: DataFrame, k: int = 6) -> DataFrame:

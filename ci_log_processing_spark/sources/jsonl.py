@@ -22,10 +22,30 @@ keeps the raw line for free, and the parse still runs JVM-side
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 CORRUPT_COL = "_corrupt_record"
+
+
+def _quarantine_read(
+    spark: SparkSession, path: str, parsed: Column, is_corrupt: Column
+) -> DataFrame:
+    """The record-level quarantine projection shared by the JSONL and
+    CSV readers: read `path` as text, parse each line with `parsed`
+    (a struct `r` carrying CORRUPT_COL), and return the struct's
+    fields plus `is_corrupt` and `raw_line` (the raw line, kept only
+    for quarantined records)."""
+    return (
+        spark.read.text(path)
+        .select(parsed.alias("r"), F.col("value"))
+        .select(
+            "r.*",
+            is_corrupt.alias("is_corrupt"),
+            F.when(is_corrupt, F.col("value")).alias("raw_line"),
+        )
+        .drop(CORRUPT_COL)
+    )
 
 
 def read_documents_jsonl(
@@ -44,16 +64,7 @@ def read_documents_jsonl(
     # arm a blank line would sail through as a phantom all-NULL
     # "good" document
     is_corrupt = F.col("r").isNull() | F.col(f"r.{CORRUPT_COL}").isNotNull()
-    return (
-        spark.read.text(path)
-        .select(parsed.alias("r"), F.col("value"))
-        .select(
-            "r.*",
-            is_corrupt.alias("is_corrupt"),
-            F.when(is_corrupt, F.col("value")).alias("raw_line"),
-        )
-        .drop(CORRUPT_COL)
-    )
+    return _quarantine_read(spark, path, parsed, is_corrupt)
 
 
 def split_quarantine(df: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -96,13 +107,4 @@ def read_documents_csv(
         | F.col(f"r.{CORRUPT_COL}").isNotNull()
         | (F.trim(F.col("value")) == "")
     )
-    return (
-        spark.read.text(path)
-        .select(parsed.alias("r"), F.col("value"))
-        .select(
-            "r.*",
-            is_corrupt.alias("is_corrupt"),
-            F.when(is_corrupt, F.col("value")).alias("raw_line"),
-        )
-        .drop(CORRUPT_COL)
-    )
+    return _quarantine_read(spark, path, parsed, is_corrupt)

@@ -39,6 +39,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.similarity import _centroid_drift
 from .partials import drain, read_partials, write_partial
 
 EMB_STREAM_SCHEMA = "vec_id long, label int, embedding array<float>"
@@ -112,22 +113,4 @@ def run_streaming_drift(
         F.coalesce("na", F.lit(0)).alias("na"),
         F.coalesce("nb", F.lit(0)).alias("nb"),
     )
-    ca = F.col("sa") / F.col("na").cast("double")
-    cb = F.col("sb") / F.col("nb").cast("double")
-    cent = merged.groupBy("label").agg(
-        F.max("na").alias("n_a"),
-        F.max("nb").alias("n_b"),
-        F.sum(ca * cb).alias("_dot"),
-        F.sum(ca * ca).alias("_qa"),
-        F.sum(cb * cb).alias("_qb"),
-        F.sum((ca - cb) * (ca - cb)).alias("_d2"),
-    )
-    return cent.filter((F.col("n_a") > 0) & (F.col("n_b") > 0)).select(
-        "label",
-        "n_a",
-        "n_b",
-        F.round(
-            F.col("_dot") / F.sqrt(F.col("_qa") * F.col("_qb")), 5
-        ).alias("centroid_cosine"),
-        F.round(F.sqrt(F.col("_d2")), 5).alias("centroid_l2"),
-    )
+    return _centroid_drift(merged)

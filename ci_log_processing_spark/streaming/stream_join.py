@@ -25,9 +25,9 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.errors import AnalysisException
 
 from .follow import TRANSCRIPT_SCHEMA
+from .watermark import _append_drain
 
 CONFIG_SCHEMA = (
     "cfg_conv_id string, cfg_ts timestamp, cfg_state string, cfg_seq long"
@@ -67,20 +67,9 @@ def streaming_interval_join(
         ),
         "inner",
     ).select("conv_id", "turn_idx", "cfg_seq", "cfg_state")
-    sink = os.path.join(output_dir, "interval_join")
-    q = (
-        joined.writeStream.outputMode("append")
-        .option(
-            "checkpointLocation", os.path.join(output_dir, "_ssj_ckpt")
-        )
-        .trigger(availableNow=True)
-        .start(sink)
+    return _append_drain(
+        joined,
+        os.path.join(output_dir, "interval_join"),
+        os.path.join(output_dir, "_ssj_ckpt"),
+        "conv_id string, turn_idx int, cfg_seq long, cfg_state string",
     )
-    q.awaitTermination()
-    try:
-        return spark.read.parquet(sink)
-    except AnalysisException:  # no matches -> sink path absent
-        return spark.createDataFrame(
-            [],
-            "conv_id string, turn_idx int, cfg_seq long, cfg_state string",
-        )

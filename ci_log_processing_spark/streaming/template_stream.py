@@ -33,6 +33,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.aggregate import log_templates
 from .partials import drain, read_partials, write_partial
 
 TURN_STREAM_SCHEMA = (
@@ -42,27 +43,6 @@ _TEMPLATE_SCHEMA = (
     "template string, n_msgs long, n_convs long, example string, "
     "first_batch long"
 )
-
-
-def _template_partial(batch_df: DataFrame, batch_id: int) -> DataFrame:
-    """The batch miner: same mask + aggregate as
-    operators.aggregate.log_templates, plus the batch id."""
-    vis = batch_df.filter(F.col("sink") != "drop_queue")
-    template = F.regexp_replace(F.col("message"), r"\S*[0-9]\S*", "<*>")
-    return (
-        vis.select(
-            template.alias("template"),
-            F.col("message").alias("_m"),
-            "conv_id",
-        )
-        .groupBy("template")
-        .agg(
-            F.count(F.lit(1)).alias("n_msgs"),
-            F.countDistinct("conv_id").alias("n_convs"),
-            F.min("_m").alias("example"),
-            F.min(F.lit(batch_id).cast("long")).alias("first_batch"),
-        )
-    )
 
 
 def run_streaming_templates(
@@ -80,9 +60,11 @@ def run_streaming_templates(
     def process_batch(batch_df, batch_id: int):
         if batch_df.isEmpty():
             return
-        write_partial(
-            _template_partial(batch_df, batch_id), tmpl_dir, batch_id
+        # the batch miner, log_templates, plus the batch id
+        partial = log_templates(batch_df).withColumn(
+            "first_batch", F.lit(batch_id).cast("long")
         )
+        write_partial(partial, tmpl_dir, batch_id)
 
     drain(
         spark,

@@ -31,6 +31,27 @@ from ..plans.pipeline import parse_transcripts
 from .follow import TRANSCRIPT_SCHEMA
 
 
+def _append_drain(
+    agg: DataFrame, sink: str, ckpt_dir: str, empty_schema: str
+) -> DataFrame:
+    """Append the streaming frame `agg` to the parquet `sink`
+    (availableNow: drain the files already there, then stop) and
+    return what the sink holds — an empty frame of `empty_schema`
+    when nothing was emitted and the sink path does not exist."""
+    q = (
+        agg.writeStream.outputMode("append")
+        .option("checkpointLocation", ckpt_dir)
+        .trigger(availableNow=True)
+        .start(sink)
+    )
+    q.awaitTermination()
+    spark = agg.sparkSession
+    try:
+        return spark.read.parquet(sink)
+    except AnalysisException:
+        return spark.createDataFrame([], empty_schema)
+
+
 def streaming_severity_window_counts(
     spark: SparkSession,
     transcripts_dir: str,
@@ -61,24 +82,13 @@ def streaming_severity_window_counts(
             "cnt",
         )
     )
-    sink = os.path.join(output_dir, "severity_windows")
-    q = (
-        agg.writeStream.outputMode("append")
-        .option(
-            "checkpointLocation", os.path.join(output_dir, "_wm_ckpt")
-        )
-        .trigger(availableNow=True)
-        .start(sink)
+    return _append_drain(
+        agg,
+        os.path.join(output_dir, "severity_windows"),
+        os.path.join(output_dir, "_wm_ckpt"),
+        "window_start timestamp, window_end timestamp, "
+        "severity string, cnt long",
     )
-    q.awaitTermination()
-    try:
-        return spark.read.parquet(sink)
-    except AnalysisException:  # no window finalized -> sink path absent
-        return spark.createDataFrame(
-            [],
-            "window_start timestamp, window_end timestamp, "
-            "severity string, cnt long",
-        )
 
 
 def streaming_session_counts(
@@ -119,22 +129,11 @@ def streaming_session_counts(
             "last_turn",
         )
     )
-    sink = os.path.join(output_dir, "sessions")
-    q = (
-        agg.writeStream.outputMode("append")
-        .option(
-            "checkpointLocation", os.path.join(output_dir, "_sess_ckpt")
-        )
-        .trigger(availableNow=True)
-        .start(sink)
+    return _append_drain(
+        agg,
+        os.path.join(output_dir, "sessions"),
+        os.path.join(output_dir, "_sess_ckpt"),
+        "conv_id string, session_start timestamp, "
+        "session_end timestamp, n_turns long, "
+        "first_turn int, last_turn int",
     )
-    q.awaitTermination()
-    try:
-        return spark.read.parquet(sink)
-    except AnalysisException:  # no session finalized -> sink path absent
-        return spark.createDataFrame(
-            [],
-            "conv_id string, session_start timestamp, "
-            "session_end timestamp, n_turns long, "
-            "first_turn int, last_turn int",
-        )
