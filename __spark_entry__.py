@@ -1173,6 +1173,31 @@ def q_stream_neardup(spark, sf_dir):
     return _collect_in_scratch(spark, "gate_sneardup_", _run, "doc_id long")
 
 
+def _docs_in_two_waves(
+    spark: SparkSession,
+    sf_dir: str,
+    prefix: str,
+    run: Callable[[str, str], DataFrame],
+    schema: str,
+) -> DataFrame:
+    """The corpus docs (doc_id, text) as two micro-batch waves, even
+    then odd doc_id, streamed by `run(in_dir, out_dir)` in a scratch
+    directory (`_collect_in_scratch`)."""
+    docs = _docs(spark, sf_dir).select("doc_id", "text")
+
+    def _run(work):
+        in_dir = os.path.join(work, "in")
+        _write_wave(
+            docs.filter(F.col("doc_id") % 2 == 0), in_dir, "w0", 1_000_000
+        )
+        _write_wave(
+            docs.filter(F.col("doc_id") % 2 == 1), in_dir, "w1", 2_000_000
+        )
+        return run(in_dir, os.path.join(work, "out"))
+
+    return _collect_in_scratch(spark, prefix, _run, schema)
+
+
 def q_stream_cms(spark, sf_dir):
     """Streaming count-min heavy hitters (streaming/cms_stream.py):
     the corpus arrives as TWO micro-batches (odd/even doc_id, so
@@ -1184,20 +1209,9 @@ def q_stream_cms(spark, sf_dir):
         run_streaming_cms,
     )
 
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-
-    def _run(work):
-        in_dir = os.path.join(work, "in")
-        _write_wave(
-            docs.filter(F.col("doc_id") % 2 == 0), in_dir, "w0", 1_000_000
-        )
-        _write_wave(
-            docs.filter(F.col("doc_id") % 2 == 1), in_dir, "w1", 2_000_000
-        )
-        return run_streaming_cms(spark, in_dir, os.path.join(work, "out"))
-
-    return _collect_in_scratch(
-        spark, "gate_scms_", _run,
+    return _docs_in_two_waves(
+        spark, sf_dir, "gate_scms_",
+        lambda in_dir, out_dir: run_streaming_cms(spark, in_dir, out_dir),
         "token string, exact_n long, cms_n long, inflation long, rank int",
     )
 
@@ -2238,21 +2252,7 @@ def q_asof_state(spark, sf_dir):
     """As-of join (operators/asof.py): each turn picks up the latest
     config state flipped at-or-before its ts within the conversation
     (union + one keyed window — never a range join)."""
-    from ci_log_processing_spark.operators.asof import asof_join
-    from ci_log_processing_spark.sources.derived import config_updates_sql
-
-    t = load_transcripts(spark, sf_dir)  # registers the events view
-    cfg = spark.sql(config_updates_sql("spark", "events"))
-    out = asof_join(
-        t.select("conv_id", "turn_idx", "ts"),
-        cfg.withColumnRenamed("cfg_ts", "ts"),
-        on=["conv_id"],
-        value_cols=["cfg_state"],
-        seq_col="cfg_seq",
-    )
-    return out.select(
-        "conv_id", "turn_idx", F.coalesce("cfg_state", F.lit("")).alias("cfg_state")
-    )
+    return _cfg_state_asof(spark, sf_dir, "backward")
 
 
 def q_asof_forward(spark, sf_dir):
@@ -2260,6 +2260,12 @@ def q_asof_forward(spark, sf_dir):
     each turn picks up the NEXT config state flipped at-or-after its
     ts — the same union + one keyed window plan scanned in reverse
     time order, checked against DuckDB's native forward ASOF."""
+    return _cfg_state_asof(spark, sf_dir, "forward")
+
+
+def _cfg_state_asof(spark, sf_dir, direction):
+    """Each turn's config state as-of its ts, looking `direction`
+    ('' when there is none)."""
     from ci_log_processing_spark.operators.asof import asof_join
     from ci_log_processing_spark.sources.derived import config_updates_sql
 
@@ -2271,12 +2277,10 @@ def q_asof_forward(spark, sf_dir):
         on=["conv_id"],
         value_cols=["cfg_state"],
         seq_col="cfg_seq",
-        direction="forward",
+        direction=direction,
     )
     return out.select(
-        "conv_id",
-        "turn_idx",
-        F.coalesce("cfg_state", F.lit("")).alias("cfg_state"),
+        "conv_id", "turn_idx", F.coalesce("cfg_state", F.lit("")).alias("cfg_state")
     )
 
 
@@ -2744,23 +2748,11 @@ def q_stream_index(spark, sf_dir):
         run_index_maintenance,
     )
 
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-
-    def _run(work):
-        in_dir = os.path.join(work, "in")
-        _write_wave(
-            docs.filter(F.col("doc_id") % 2 == 0), in_dir, "w0", 1_000_000
-        )
-        _write_wave(
-            docs.filter(F.col("doc_id") % 2 == 1), in_dir, "w1", 2_000_000
-        )
-        return run_index_maintenance(
-            spark, in_dir, os.path.join(work, "out"),
-            min_df=2, max_df=1000000,
-        )
-
-    return _collect_in_scratch(
-        spark, "gate_sidx_", _run,
+    return _docs_in_two_waves(
+        spark, sf_dir, "gate_sidx_",
+        lambda in_dir, out_dir: run_index_maintenance(
+            spark, in_dir, out_dir, min_df=2, max_df=1000000
+        ),
         "term string, df long, n_occurrences long, postings string",
     )
 

@@ -24,7 +24,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -57,6 +58,11 @@ def main(names):
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(
         os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    )
+    # the session's Python workers import the package too; they get
+    # the JVM's PYTHONPATH, not this process's sys.path
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        filter(None, (ROOT, os.environ.get("PYTHONPATH")))
     )
     spark = get_spark(
         app_name="bench", master=f"local[{cpus}]", shuffle_partitions=cpus

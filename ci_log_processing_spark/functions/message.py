@@ -2,7 +2,9 @@
 
 Exact semantics (golden: tests/test_logsender.py:1170-1175):
   * text after the FIRST '|' (multi-pipe lines keep later pipes),
-    newline removed, left-stripped;
+    newline removed, left-stripped of every `str.isspace()` character
+    (`WS`: tabs, vertical tab, no-break and ideographic spaces too,
+    not just ' ');
   * no pipe -> whole line with newline removed, NOT stripped.
 """
 
@@ -10,6 +12,14 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+# the 29 code points str.lstrip() strips: those `str.isspace()` is
+# True for
+WS = (
+    "\t\n\x0b\x0c\r\x1c\x1d\x1e\x1f \x85\xa0\u1680"
+    "\u2000\u2001\u2002\u2003\u2004\u2005\u2006\u2007\u2008\u2009\u200a"
+    "\u2028\u2029\u202f\u205f\u3000"
+)
 
 
 def get_message_py(line: str) -> str:
@@ -32,7 +42,7 @@ def message_col(text: Column) -> Column:
     # 2-element array per line)
     no_nl = F.replace(text, F.lit("\n"), F.lit(""))
     pipe_at = F.instr(no_nl, "|")
-    after_pipe = F.ltrim(F.substr(no_nl, pipe_at + 1))
+    after_pipe = F.ltrim(F.substr(no_nl, pipe_at + 1), F.lit(WS))
     return F.when(pipe_at > 0, after_pipe).otherwise(no_nl)
 
 
@@ -41,7 +51,7 @@ def message_sql_duckdb(text_expr: str) -> str:
     no_nl = f"replace({text_expr}, chr(10), '')"
     return (
         f"CASE WHEN strpos({no_nl}, '|') > 0 "
-        f"THEN ltrim(substr({no_nl}, strpos({no_nl}, '|') + 1)) "
+        f"THEN ltrim(substr({no_nl}, strpos({no_nl}, '|') + 1), '{WS}') "
         f"ELSE {no_nl} END"
     )
 

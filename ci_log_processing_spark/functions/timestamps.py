@@ -9,20 +9,18 @@ year 1900 (formats without a year) has its year replaced.
 
 Two deliberate determinism changes vs the reference (SURVEY.md §4):
   * the reference fills the missing year with *today's* year
-    (logsender.py:354-356); we take an explicit ``ref_year`` job
-    parameter;
+    (logsender.py:354-356); the job takes the year of its
+    ``batch_ts`` (plans/pipeline.RoutingPlan), so a rerun of the same
+    batch parses the same instants;
   * Python's ``%f`` right-pads fractional digits ('.596' ->
     596000 us). All engine paths normalize the fraction to exactly
     six digits before parsing so Spark ('SSSSSS'), DuckDB ('%f')
     and Python agree bit-for-bit.
 
-Three implementations, one semantics:
+Two implementations, one semantics, plus the DuckDB oracle twin:
   * ``parse_timestamp_py``  — pure Python (test oracle);
   * ``ts_cascade_col``      — Catalyst column expression (JVM-side,
-    whole-stage-codegen, the fast path at scale);
-  * ``make_grok_udf`` in grok.py — Arrow-vectorized pandas UDF
-    (never per-row Python); it runs the same ``_SPARK_STEPS`` table
-    with each step's strptime format.
+    whole-stage-codegen); both parse engines use it.
 """
 
 from __future__ import annotations
@@ -81,18 +79,15 @@ def parse_timestamp_py(
 # Anchored regex shapes (valid in Java and Python re) with an explicit
 # fractional group so the fraction can be right-padded to 6 digits
 # before parsing. Each entry:
-#   (regex, groups, spark_format, strptime_format, yearless)
+#   (regex, groups, spark_format, yearless)
 # where the candidate string is rebuilt as g1 + '.' + rpad(g2,6,'0')
-# when a frac group exists. The Catalyst cascade parses it with
-# spark_format, the pandas UDF (grok.make_grok_udf) with
-# strptime_format.
+# when a frac group exists, then parsed with spark_format.
 _SPARK_STEPS = [
     # 1: iso Z with fraction; \S+ token must be exactly this shape
     (
         r"^([0-9]{4}-[0-9]{2}-[0-9]{2}T[0-9]{2}:[0-9]{2}:[0-9]{2})\.([0-9]{1,6})Z(?:\s|$)",
         2,
         "yyyy-MM-dd'T'HH:mm:ss.SSSSSS",
-        "%Y-%m-%dT%H:%M:%S.%f",
         False,
     ),
     # 2: space-separated with fraction
@@ -100,7 +95,6 @@ _SPARK_STEPS = [
         r"^([0-9]{4}-[0-9]{2}-[0-9]{2} [0-9]{2}:[0-9]{2}:[0-9]{2})\.([0-9]{1,6})(?:\s|$)",
         2,
         "yyyy-MM-dd HH:mm:ss.SSSSSS",
-        "%Y-%m-%d %H:%M:%S.%f",
         False,
     ),
     # 3: syslog w/ micros truncated to 5 digits by the reference's
@@ -109,7 +103,6 @@ _SPARK_STEPS = [
         r"^([A-Za-z]{3} [0-9]{2} [0-9]{2}:[0-9]{2}:[0-9]{2})\.([0-9]{5})",
         2,
         "MMM dd HH:mm:ss.SSSSSS",
-        "%b %d %H:%M:%S.%f",
         True,
     ),
     # 4: syslog without fraction (third \S+ token must be a bare time)
@@ -117,7 +110,6 @@ _SPARK_STEPS = [
         r"^([A-Za-z]{3} [0-9]{2} [0-9]{2}:[0-9]{2}:[0-9]{2})(?:\s|$)",
         1,
         "MMM dd HH:mm:ss",
-        "%b %d %H:%M:%S",
         True,
     ),
     # 5: first 19 iso chars
@@ -125,7 +117,6 @@ _SPARK_STEPS = [
         r"^([-0-9T:]{19})",
         1,
         "yyyy-MM-dd'T'HH:mm:ss",
-        "%Y-%m-%dT%H:%M:%S",
         False,
     ),
     # 6: ansible long date (weekday validated by regex; Spark cannot
@@ -138,7 +129,6 @@ _SPARK_STEPS = [
         r"([0-9]{2} [A-Za-z]+ [0-9]{4}  [0-9]{2}:[0-9]{2}:[0-9]{2})",
         1,
         "dd MMMM yyyy  HH:mm:ss",
-        "%d %B %Y  %H:%M:%S",
         False,
     ),
 ]
@@ -155,7 +145,7 @@ def _spark_step(text: Column, rx: str, ngroups: int, fmt: str) -> Column:
     return F.try_to_timestamp(candidate, F.lit(fmt))
 
 
-def ts_cascade_col(text: Column, ref_year: int = 2024) -> Column:
+def ts_cascade_col(text: Column, ref_year: int) -> Column:
     """The six-pattern cascade as a single Catalyst expression.
 
     Stays inside whole-stage codegen — no Python in the hot path.
@@ -164,7 +154,7 @@ def ts_cascade_col(text: Column, ref_year: int = 2024) -> Column:
     both succeed), exactly like the reference's try/except loop.
     """
     cols = []
-    for rx, ngroups, fmt, _, yearless in _SPARK_STEPS:
+    for rx, ngroups, fmt, yearless in _SPARK_STEPS:
         ts = _spark_step(text, rx, ngroups, fmt)
         if yearless:
             # Spark fills missing years with 1970 (Python: 1900);
@@ -190,7 +180,7 @@ def ts_cascade_col(text: Column, ref_year: int = 2024) -> Column:
 # --- portable SQL (oracle) -------------------------------------------
 
 
-def ts_cascade_sql_duckdb(text_expr: str, ref_year: int = 2024) -> str:
+def ts_cascade_sql_duckdb(text_expr: str, ref_year: int) -> str:
     """The same cascade as DuckDB SQL (driver-side oracle).
 
     DuckDB's %f is value-left-padded (.596 == 596us) while Python

@@ -30,13 +30,13 @@ def _running_window():
     )
 
 
-def filled_ts_col(batch_ts: str, event_ts_col: str = "event_ts") -> Column:
+def filled_ts_col(batch_ts: str) -> Column:
     """Forward-filled event_ts with batch_ts fallback."""
-    ffill = F.last(F.col(event_ts_col), ignorenulls=True).over(_running_window())
+    ffill = F.last(F.col("event_ts"), ignorenulls=True).over(_running_window())
     return F.coalesce(ffill, F.lit(batch_ts).cast("timestamp"))
 
 
-def prior_ts_count_col(event_ts_col: str = "event_ts") -> Column:
+def prior_ts_count_col() -> Column:
     """Parseable timestamps seen strictly before this turn within the
     conversation. Drives the journald-preamble rule (drop the
     '-- Logs begin at ' line only while nothing has been timestamped
@@ -46,18 +46,14 @@ def prior_ts_count_col(event_ts_col: str = "event_ts") -> Column:
         .orderBy("turn_idx")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    return F.count(F.col(event_ts_col)).over(w)
+    return F.count(F.col("event_ts")).over(w)
 
 
-def with_filled_ts(
-    df: DataFrame, batch_ts: str, event_ts_col: str = "event_ts"
-) -> DataFrame:
+def with_filled_ts(df: DataFrame, batch_ts: str) -> DataFrame:
     """Add `filled_ts` (filled_ts_col)."""
-    return df.withColumn("filled_ts", filled_ts_col(batch_ts, event_ts_col))
+    return df.withColumn("filled_ts", filled_ts_col(batch_ts))
 
 
-def with_prior_ts_count(
-    df: DataFrame, event_ts_col: str = "event_ts"
-) -> DataFrame:
+def with_prior_ts_count(df: DataFrame) -> DataFrame:
     """Add `prior_ts_count` (prior_ts_count_col)."""
-    return df.withColumn("prior_ts_count", prior_ts_count_col(event_ts_col))
+    return df.withColumn("prior_ts_count", prior_ts_count_col())

@@ -13,6 +13,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .dedup import tokens_col
+
 # tiny per-language stopword marker lists (n-gram heuristic tier;
 # a production lang-id swaps in fastText — same plan shape, the
 # scoring becomes a pandas UDF over the same column)
@@ -30,12 +32,8 @@ STOPWORDS = LANG_MARKERS["en"]
 BPE_RX = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
 
-def tokens(text: Column) -> Column:
-    return F.split(F.lower(text), " ")
-
-
 def token_counts(docs: DataFrame) -> DataFrame:
-    t = tokens(F.col("text"))
+    t = tokens_col(F.col("text"))
     return docs.select(
         "doc_id",
         F.size(t).alias("n_tokens_ws"),
@@ -59,7 +57,7 @@ def token_entropy(docs: DataFrame) -> DataFrame:
     cannot matter). Output: (doc_id, n_tok, token_entropy).
     """
     terms = docs.select(
-        "doc_id", F.explode(tokens(F.col("text"))).alias("term")
+        "doc_id", F.explode(tokens_col(F.col("text"))).alias("term")
     ).filter(F.col("term") != "")
     tf = terms.groupBy("doc_id", "term").agg(
         F.count(F.lit(1)).alias("c")
@@ -108,7 +106,7 @@ def quality_scores(
     sf0.1). quality_micro rides along as an exact BIGINT for
     downstream integer consumers (data_card's deterministic mean).
     """
-    t = tokens(F.col(text_col))
+    t = tokens_col(F.col(text_col))
     n_tok = F.size(t)
     # count stopword OCCURRENCES (array_intersect would dedup)
     n_stop_occ = F.size(F.filter(t, lambda x: x.isin(*STOPWORDS)))
@@ -149,7 +147,7 @@ def quality_scores(
 def lang_id(docs: DataFrame) -> DataFrame:
     """Marker-hit language guess; ties break by language code order
     (argmax via array_sort of (−hits, lang) structs)."""
-    t = tokens(F.col("text"))
+    t = tokens_col(F.col("text"))
     scores = []
     for lang in sorted(LANG_MARKERS):
         hits = F.size(
@@ -324,7 +322,7 @@ def repetition_stats(docs: DataFrame) -> DataFrame:
     # (attach_lines plants them; \n < ' ') — so the oracle ranks by
     # a chr(1)-joined key. Divergence would need a NUL inside a
     # token.
-    toks = tokens(t)
+    toks = tokens_col(t)
     bg = F.zip_with(
         F.slice(toks, 1, F.size(toks) - 1),
         F.slice(toks, 2, F.size(toks) - 1),
@@ -524,7 +522,7 @@ def c4_line_filter(
 def fingerprints(docs: DataFrame) -> DataFrame:
     """OpenRefine-style fingerprint: md5 over the sorted distinct
     token set — canonicalizes word order + duplication."""
-    t = tokens(F.col("text"))
+    t = tokens_col(F.col("text"))
     canon = F.concat_ws(" ", F.array_sort(F.array_distinct(t)))
     return docs.select(
         "doc_id",
@@ -578,7 +576,7 @@ def tfidf_top_terms(
         raise ValueError("tfidf_top_terms: max_df_frac must be in (0, 1]")
     n_docs = docs.agg(F.count(F.lit(1)).alias("_n_docs"))
     terms = docs.select(
-        "doc_id", F.explode(tokens(F.col("text"))).alias("term")
+        "doc_id", F.explode(tokens_col(F.col("text"))).alias("term")
     ).filter(F.col("term") != "")
     tf = _register_persist(
         terms.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
@@ -643,7 +641,7 @@ def model_quality_scores(
     aggregate) — zero shuffles, whole-stage codegen, scan-bound like
     the rest of the text tier; nothing leaves the row.
     """
-    toks = tokens(F.col(text_col))
+    toks = tokens_col(F.col(text_col))
 
     def w(c: Column) -> Column:
         h = F.conv(F.substring(F.md5(c.cast("binary")), 1, 8), 16, 10).cast(
@@ -695,7 +693,7 @@ def unigram_logprob(docs: DataFrame) -> DataFrame:
     combine-friendly; nothing is ever collected to the driver.
     """
     toks = docs.select(
-        "doc_id", F.explode(tokens(F.col("text"))).alias("tok")
+        "doc_id", F.explode(tokens_col(F.col("text"))).alias("tok")
     )
     vocab = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt"))
     # n_total = total token INSTANCES — summing doc lengths gives the
@@ -704,7 +702,7 @@ def unigram_logprob(docs: DataFrame) -> DataFrame:
     # original vocab.agg(sum(cnt)) form planned THREE full corpus
     # explodes + two tok exchanges; this is one explode-free scan)
     total = docs.select(
-        F.sum(F.size(tokens(F.col("text")))).alias("n_total")
+        F.sum(F.size(tokens_col(F.col("text")))).alias("n_total")
     )
     bits = F.length(F.bin(F.col("n_total"))) - F.length(F.bin(F.col("cnt")))
     return (
@@ -765,7 +763,7 @@ def bigram_logprob(docs: DataFrame) -> DataFrame:
     bits_per_bigram)."""
     from .dedup import _register_persist
 
-    toks = tokens(F.col("text"))
+    toks = tokens_col(F.col("text"))
     n = F.size(toks)
     bi_arr = F.zip_with(
         F.slice(toks, 1, F.greatest(n - 1, F.lit(0))),
@@ -866,7 +864,7 @@ def gopher_rules(docs: DataFrame, min_words: int = 50) -> DataFrame:
     rule-gate pattern at document granularity.
     """
     t = F.col("text")
-    words = F.filter(tokens(t), lambda x: x != "")
+    words = F.filter(tokens_col(t), lambda x: x != "")
     n_words = F.size(words)
     nw_d = F.greatest(n_words.cast("double"), F.lit(1.0))
     mean_wl = F.round(
@@ -1035,7 +1033,7 @@ def nb_quality_classifier(docs: DataFrame) -> DataFrame:
     score_bits, predicted) — predicted = 1 iff score_bits > 0.
     """
     t = F.col("text")
-    words = F.filter(tokens(t), lambda x: x != "")
+    words = F.filter(tokens_col(t), lambda x: x != "")
     toks = docs.select(
         F.col("doc_id"),
         F.col("label").cast("long").alias("_lbl"),
@@ -1210,7 +1208,7 @@ def vocab_stats(docs: DataFrame) -> DataFrame:
     vocab = (
         docs.select(
             F.col("source").alias("grp"),
-            F.explode(tokens(F.col("text"))).alias("tok"),
+            F.explode(tokens_col(F.col("text"))).alias("tok"),
         )
         .groupBy("grp", "tok")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -1256,7 +1254,7 @@ def hashed_features(docs: DataFrame, dim: int = 64) -> DataFrame:
     h32 (md5-prefix) primitive, mirrored bit-for-bit in the DuckDB
     twin.
     """
-    from ..operators.dedup import h32, tokens_col
+    from ..operators.dedup import h32
 
     tok = docs.select(
         F.col("doc_id"),
@@ -1547,7 +1545,7 @@ def watermark_scores(docs: DataFrame) -> DataFrame:
     skipgram/bigram contrast: those need corpus-wide aggregation,
     this is a pure per-document statistic).
     """
-    t = tokens(F.col("text"))
+    t = tokens_col(F.col("text"))
     pair_green = F.transform(
         F.sequence(F.lit(2), F.size(t)),
         lambda i: (
@@ -1645,7 +1643,7 @@ def source_keyness(docs: DataFrame, k: int = 5) -> DataFrame:
     st = (
         docs.select(
             "source",
-            F.explode(tokens(F.col("text"))).alias("term"),
+            F.explode(tokens_col(F.col("text"))).alias("term"),
         )
         .filter(F.col("term") != "")
         .groupBy("source", "term")
@@ -1717,8 +1715,8 @@ def eval_token_f1(pairs: DataFrame) -> DataFrame:
     aggregates; the cost is O(distinct_pred_tokens x ref_len) per
     row, the same class as the repetition/quality scanners.
     """
-    p = F.filter(tokens(F.col("prediction")), lambda x: x != "")
-    r = F.filter(tokens(F.col("reference")), lambda x: x != "")
+    p = F.filter(tokens_col(F.col("prediction")), lambda x: x != "")
+    r = F.filter(tokens_col(F.col("reference")), lambda x: x != "")
     common = F.aggregate(
         F.array_distinct(p),
         F.lit(0).cast("long"),

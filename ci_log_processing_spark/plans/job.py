@@ -8,7 +8,7 @@ Usage (local or cluster — only master/size differ):
       -m ci_log_processing_spark.plans.job \
       --input-dir /root/testdata/sf0.001 \
       --output-dir /tmp/clp_out \
-      [--batch-ts "2024-01-01 00:00:00"] [--ref-year 2024] \
+      [--batch-ts "2024-01-01 00:00:00"] \
       [--impl native|pandas] [--no-skip-debug]
 
   --transcripts-parquet PATH replaces --input-dir: it reads a
@@ -40,10 +40,10 @@ def main(argv=None):
     ap.add_argument("--input-dir", default=None)
     ap.add_argument("--output-dir", required=True)
     ap.add_argument("--batch-ts", default="2024-01-01 00:00:00")
-    ap.add_argument("--ref-year", type=int, default=2024)
     # native is the default: measured faster than the pandas grok at
     # BOTH local[8] (948k vs 537k compute rows/s) and local[32]
-    # (2.41M vs 1.42M) with better N->4N efficiency (BASELINE.md).
+    # (2.41M vs 1.42M) with better N->4N efficiency (BASELINE.md; the
+    # UDF then also parsed the timestamp, message and program/pid).
     # --impl pandas stays as the mandated-path parity option.
     ap.add_argument("--impl", choices=["native", "pandas"], default="native")
     ap.add_argument("--no-skip-debug", action="store_true")
@@ -108,7 +108,6 @@ def main(argv=None):
         transcripts,
         spark,
         batch_ts=args.batch_ts,
-        ref_year=args.ref_year,
         skip_debug=not args.no_skip_debug,
         impl=args.impl,
         meta=meta,

@@ -7,20 +7,24 @@ pipeline (logsender.py `send` lifecycle, SURVEY.md §3.1):
   enrich (literal map lookups) -> route (disjoint CASE) ->
   one fan-out write (sinks.append_fanout) + grouped aggregates
 
-`impl` selects the parse engine:
-  * 'native' — pure Catalyst expressions (whole-stage codegen,
+`impl` selects where severity and subsystem come from; the
+timestamp cascade, message split and program/pid are Catalyst
+expressions in both:
+  * 'native' — Catalyst regexp_extract (whole-stage codegen,
     fastest; the 100 TB default);
-  * 'pandas' — one Arrow-vectorized pandas UDF (the north-star
-    grok path; same results, exercised by tests for parity).
+  * 'pandas' — one Arrow-vectorized pandas UDF over `message` (the
+    north-star grok path; same results, exercised by tests for
+    parity).
 """
 
 from __future__ import annotations
+
+import datetime
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.grok import (
-    PARSED_SCHEMA,
     make_grok_udf,
     pid_col,
     program_col,
@@ -38,30 +42,31 @@ DEFAULT_BATCH_TS = "2024-01-01 00:00:00"
 DEFAULT_REF_YEAR = 2024
 
 
-def parse_cols(
-    ref_year: int = DEFAULT_REF_YEAR, impl: str = "native"
-) -> list[dict[str, Column]]:
+def parse_cols(ref_year: int, impl: str) -> list[dict[str, Column]]:
     """parse_transcripts' columns, one dict per dependency level (a
-    level only reads columns of the input or of earlier levels). The
-    pandas path adds a `_p` struct that `_with_parse` drops."""
+    level only reads columns of the input or of earlier levels).
+    Yearless timestamps get `ref_year`. The pandas engine stages the
+    message in `_m` and the UDF struct in `_g`, which `_with_parse`
+    drops, so that its output keeps its column order (severity and
+    subsystem before message)."""
     text = F.col("text")
+    ts = ts_cascade_col(text, ref_year)
+    syslog = {"program": program_col(text), "pid": pid_col(text)}
     if impl == "pandas":
-        p = F.col("_p")
+        m, g = F.col("_m"), F.col("_g")
         return [
-            {"_p": make_grok_udf(ref_year)(text)},
-            {f: p[f] for f in PARSED_SCHEMA.fieldNames()},
+            {"event_ts": ts, "_m": message_col(text)},
+            {"_g": make_grok_udf()(m)},
+            {"severity": g["severity"], "subsystem": g["subsystem"],
+             "message": m, **syslog},
         ]
     message = F.col("message")
     return [
-        {
-            "event_ts": ts_cascade_col(text, ref_year),
-            "message": message_col(text),
-        },
+        {"event_ts": ts, "message": message_col(text)},
         {
             "severity": severity_col(message),
             "subsystem": subsystem_col(message),
-            "program": program_col(text),
-            "pid": pid_col(text),
+            **syslog,
         },
     ]
 
@@ -69,18 +74,15 @@ def parse_cols(
 def _with_parse(df: DataFrame, levels: list[dict[str, Column]]) -> DataFrame:
     for level in levels:
         df = df.withColumns(level)
-    return df.drop("_p") if "_p" in levels[0] else df
+    return df.drop("_m", "_g") if "_g" in levels[1] else df
 
 
-def parse_transcripts(
-    df: DataFrame,
-    ref_year: int = DEFAULT_REF_YEAR,
-    impl: str = "native",
-) -> DataFrame:
+def parse_transcripts(df: DataFrame, impl: str = "native") -> DataFrame:
     """Add event_ts, message, severity, subsystem, program, pid
     (the oslofmt grok field set incl. syslog_program/syslog_pid,
-    openstack-filters.conf:49)."""
-    return _with_parse(df, parse_cols(ref_year, impl))
+    openstack-filters.conf:49); yearless timestamps get
+    DEFAULT_REF_YEAR."""
+    return _with_parse(df, parse_cols(DEFAULT_REF_YEAR, impl))
 
 
 class RoutingPlan:
@@ -97,6 +99,9 @@ class RoutingPlan:
     the turns table), so the fact side never shuffles for it. A
     caller routing many frames may persist `present` once.
 
+    Yearless timestamps take the year of `batch_ts`, as the
+    reference takes it from its clock (logsender.py:354-356).
+
     Columns hold JVM references: build a plan per session, never
     cache one across sessions.
     """
@@ -105,13 +110,13 @@ class RoutingPlan:
         self,
         spark: SparkSession,
         batch_ts: str = DEFAULT_BATCH_TS,
-        ref_year: int = DEFAULT_REF_YEAR,
         skip_debug: bool = True,
         impl: str = "native",
         meta: DataFrame | None = None,
     ):
         self.spark = spark
         self.partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        ref_year = datetime.datetime.fromisoformat(batch_ts).year
         self.parse = parse_cols(ref_year, impl)
         # both windows share one Window operator. Enrichment is a level
         # of its own, above the Window: in the same projection it would
@@ -164,7 +169,6 @@ def full_pipeline(
     df: DataFrame,
     spark: SparkSession,
     batch_ts: str = DEFAULT_BATCH_TS,
-    ref_year: int = DEFAULT_REF_YEAR,
     skip_debug: bool = True,
     impl: str = "native",
     meta: DataFrame | None = None,
@@ -174,7 +178,6 @@ def full_pipeline(
     return RoutingPlan(
         spark,
         batch_ts=batch_ts,
-        ref_year=ref_year,
         skip_debug=skip_debug,
         impl=impl,
         meta=meta,

@@ -1,11 +1,14 @@
 """Message-split goldens — reference tests/test_logsender.py:1170-1175."""
 
+import duckdb
 import pytest
 from pyspark.sql import functions as F
 
 from ci_log_processing_spark.functions.message import (
+    WS,
     get_message_py,
     message_col,
+    message_sql_duckdb,
 )
 
 CASES = [
@@ -20,7 +23,18 @@ CASES = [
     # empty after pipe
     ("2022-02-28 09:39:11.0 | ", ""),
     ("", ""),
+    # every str.isspace() character is stripped, not only ' '
+    ("ts |\tERROR [nova.compute] tab", "ERROR [nova.compute] tab"),
+    ("ts |\r\x0bINFO y", "INFO y"),
+    ("ts |\xa0\u3000 INFO z", "INFO z"),
+    ("ts |\t", ""),
+    # a non-space character stops the strip
+    ("ts |\u3001x", "\u3001x"),
 ]
+
+
+def test_ws_is_the_isspace_set():
+    assert WS == "".join(c for c in map(chr, range(0x110000)) if c.isspace())
 
 
 @pytest.mark.parametrize("line,expected", CASES)
@@ -33,6 +47,16 @@ def test_catalyst(spark):
     got = {r["i"]: r["m"] for r in df.select("i", message_col(F.col("text")).alias("m")).collect()}
     for i, (_, expected) in enumerate(CASES):
         assert got[i] == expected, CASES[i]
+
+
+def test_duckdb():
+    con = duckdb.connect()
+    for line, expected in CASES:
+        got = con.execute(
+            f"SELECT {message_sql_duckdb('text')} FROM (SELECT ? AS text)",
+            [line],
+        ).fetchone()[0]
+        assert got == expected, line
 
 
 def test_url_join(spark):

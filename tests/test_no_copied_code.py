@@ -1,7 +1,10 @@
 """Tripwire: each computation is written once.
 
-The scan covers the package outside ``oracle*.py``; the DuckDB twins
-are independent of the Spark operators on purpose. Each file is
+The scan covers every product file: the package, ``__spark_entry__.py``,
+``bench.py``, ``run_pipeline.py`` and ``tools/``. It skips
+``oracle*.py``, whose DuckDB twins are independent of the Spark
+operators on purpose, and ``perfbench/``, the benchmark harness that
+is kept byte-stable between the commits it compares. Each file is
 reduced to its code lines: comments, docstrings and blank lines are
 dropped, and runs of whitespace become one space. Any run of ``RUN``
 consecutive code lines that occurs twice, in one file or in two, is a
@@ -25,7 +28,7 @@ PACKAGE = ROOT / "ci_log_processing_spark"
 RUN = 10
 
 # Copies that must stay copies, as "group name": reason. Empty: the
-# package has none.
+# product files have none.
 KEEP_CLONES = {}
 
 
@@ -133,17 +136,18 @@ def clone_findings(groups, keep):
                     for name in sorted(set(keep) - set(groups))]
 
 
-def _package_sources():
-    return {
-        str(p.relative_to(ROOT)): p.read_text()
-        for p in sorted(PACKAGE.rglob("*.py"))
-        if not p.name.startswith("oracle")
-    }
+def _product_sources():
+    files = [p for p in PACKAGE.rglob("*.py")
+             if not p.name.startswith("oracle")]
+    files += [ROOT / n for n in ("__spark_entry__.py", "bench.py",
+                                 "run_pipeline.py")]
+    files += (ROOT / "tools").rglob("*.py")
+    return {str(p.relative_to(ROOT)): p.read_text() for p in sorted(files)}
 
 
 def test_no_copied_code():
     # lists each copied group with its places, and stale KEEP_CLONES
-    groups = clone_groups(_package_sources())
+    groups = clone_groups(_product_sources())
     found = clone_findings(groups, KEEP_CLONES)
     copied = sum(n for g in groups.values() for *_, n in g)
     assert not found, (

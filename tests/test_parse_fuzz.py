@@ -1,9 +1,10 @@
-"""Seeded fuzz parity: on randomized log lines, the three parse
-implementations — pure-Python reference cascade, Catalyst
-expressions, Arrow pandas UDF — must agree exactly (timestamp AND
-message/severity/subsystem/program/pid). This is the cross-impl
-guard the reference has no analog of (its one implementation IS the
-spec); here three implementations exist and must never drift."""
+"""Seeded fuzz parity: on randomized log lines, the pure-Python
+reference (cascade and message split) and both parse engines — all
+Catalyst, and Catalyst plus the Arrow pandas grok UDF — must agree
+exactly (timestamp AND message/severity/subsystem/program/pid). This
+is the cross-impl guard the reference has no analog of (its one
+implementation IS the spec); here several exist and must never
+drift."""
 
 import datetime as dt
 import random
@@ -32,6 +33,11 @@ PAYLOADS = [
     " | TOOL bash invoke",
     "garbage trailing | with | pipes",
     " | DEBUG detail",
+    # whitespace str.lstrip() strips after the pipe, beyond ' '
+    " |\tERROR [nova.compute] tab",
+    " |\x0bINFO [vt.mod] vertical tab",
+    " |\xa0WARNING no-break space",
+    " |\u3000INFO ideographic space",
     "    raise ValueError('x')",
     "-- Logs begin at Mon 2024-01-01 00:00:00 UTC. --",
 ]

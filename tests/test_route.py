@@ -37,6 +37,8 @@ def test_precedence_and_reasons(spark):
         ("c1", 4, "assistant", "2022-02-28 09:39:09.5 | plain INFO msg", None, t0),
         # tool-role ERROR routes to errors (severity precedence)
         ("c1", 5, "tool", "2022-02-28 09:39:09.5 | CRITICAL [x] y", "bash", t0),
+        # only whitespace after the pipe: empty, like str.lstrip()
+        ("c1", 6, "user", "2022-02-28 09:39:09.5 |\t", None, t0),
     ]
     df = spark.createDataFrame(
         rows,
@@ -50,6 +52,7 @@ def test_precedence_and_reasons(spark):
     assert out[3] == ("drop_queue", "empty_message")
     assert out[4] == ("agent_turns", None)
     assert out[5] == ("errors", None)
+    assert out[6] == ("drop_queue", "empty_message")
 
 
 def test_no_metadata_routing(spark):

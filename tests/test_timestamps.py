@@ -3,8 +3,9 @@
 Cases mirror the reference's table test
 (tests/test_logsender.py:1177-1194) and its fixture line classes:
 six formats, year fill, the 14-char micro truncation quirk, and
-non-matching lines. All three implementations (pure Python oracle,
-Catalyst expression, pandas UDF) must agree on every case.
+non-matching lines. The pure-Python oracle, the Catalyst expression
+and both parse engines must agree on every case; the job fills a
+missing year from its batch_ts.
 """
 
 import datetime
@@ -12,10 +13,13 @@ import datetime
 import pytest
 from pyspark.sql import functions as F
 
-from ci_log_processing_spark.functions.grok import make_grok_udf
 from ci_log_processing_spark.functions.timestamps import (
     parse_timestamp_py,
     ts_cascade_col,
+)
+from ci_log_processing_spark.plans.pipeline import (
+    full_pipeline,
+    parse_transcripts,
 )
 
 REF_YEAR = 2024
@@ -78,10 +82,23 @@ def test_catalyst_cascade(spark):
         assert by_text[line] == expected, line
 
 
-def test_pandas_udf_cascade(spark):
-    grok = make_grok_udf(REF_YEAR)
+@pytest.mark.parametrize("impl", ["native", "pandas"])
+def test_parse_engines(spark, impl):
     df = spark.createDataFrame([(line,) for line, _ in GOLDEN], "text string")
-    got = df.select("text", grok(F.col("text")).alias("p")).collect()
-    by_text = {r["text"]: r["p"]["event_ts"] for r in got}
+    got = parse_transcripts(df, impl=impl).collect()
+    by_text = {r["text"]: r["event_ts"] for r in got}
     for line, expected in GOLDEN:
         assert by_text[line] == expected, line
+
+
+def test_year_from_batch_ts(spark):
+    # the reference fills a missing year from its clock
+    # (logsender.py:354-356); the job's clock is its batch_ts
+    t0 = datetime.datetime(2025, 3, 1)
+    df = spark.createDataFrame(
+        [("c", 0, "assistant", "Mar 21 09:33:23 host sudo[1]: x", None, t0)],
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp",
+    )
+    row = full_pipeline(df, spark, batch_ts="2025-03-01 00:00:00").first()
+    assert row["event_ts"] == datetime.datetime(2025, 3, 21, 9, 33, 23)

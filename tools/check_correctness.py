@@ -22,7 +22,8 @@ import sys
 
 import duckdb
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entrymod  # noqa: E402
 from ci_log_processing_spark.session import get_spark  # noqa: E402
@@ -55,6 +56,11 @@ def main():
     name_filter = sys.argv[2] if len(sys.argv) > 2 else ""
     out_json = sys.argv[3] if len(sys.argv) > 3 else ""
 
+    # the session's Python workers import the package too; they get
+    # the JVM's PYTHONPATH, not this process's sys.path
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        filter(None, (ROOT, os.environ.get("PYTHONPATH")))
+    )
     # get_spark now pins spark.sql.ansi.enabled=true — the same
     # strict mode the grading driver runs — so no override is needed
     # here; the gate and the job share one session config.
