@@ -55,7 +55,7 @@ def _routed(spark: SparkSession, sf_dir: str, impl: str = "native") -> DataFrame
     from ci_log_processing_spark.sources.derived import conv_meta_sql
 
     t = load_transcripts(spark, sf_dir)  # registers the events view
-    meta = spark.sql(conv_meta_sql("spark", "events"))
+    meta = spark.sql(conv_meta_sql("spark"))
     return full_pipeline(t, spark, impl=impl, meta=meta)
 
 
@@ -158,7 +158,6 @@ def q_dq_audit(spark, sf_dir):
     return dq_audit(
         docs,
         document_checks(allowed_langs=("en", "de", "es", "zh")),
-        unique_key="doc_id",
     )
 
 
@@ -179,7 +178,7 @@ def q_skew_audit(spark, sf_dir):
     diagnostic, keyed by conv_id over the routed turns."""
     from ci_log_processing_spark.operators.skew import key_skew_audit
 
-    return key_skew_audit(_routed(spark, sf_dir), "conv_id", top_n=20)
+    return key_skew_audit(_routed(spark, sf_dir), "conv_id")
 
 
 def q_agg_rollup(spark, sf_dir):
@@ -251,7 +250,7 @@ def q_jobs_semijoin(spark, sf_dir):
     requested = spark.createDataFrame(
         [(s,) for s in surviving], "tool string"
     )
-    return semi_join_requested(t, requested, key="tool").select(
+    return semi_join_requested(t, requested).select(
         "conv_id", "turn_idx", "role", "tool"
     )
 
@@ -328,7 +327,7 @@ def q_perf_flatten(spark, sf_dir):
     from ci_log_processing_spark.sources.derived import perf_reports_sql
 
     _events_view(spark, sf_dir)
-    pr = spark.sql(perf_reports_sql("spark", "events"))
+    pr = spark.sql(perf_reports_sql("spark"))
     return flatten_perf_json(pr)
 
 
@@ -337,7 +336,7 @@ def q_meta_normalize(spark, sf_dir):
     from ci_log_processing_spark.sources.derived import conv_meta_sql
 
     _events_view(spark, sf_dir)
-    return normalize_meta(spark.sql(conv_meta_sql("spark", "events")))
+    return normalize_meta(spark.sql(conv_meta_sql("spark")))
 
 
 def q_subunit(spark, sf_dir):
@@ -345,7 +344,7 @@ def q_subunit(spark, sf_dir):
     from ci_log_processing_spark.sources.derived import subunit_results_sql
 
     _events_view(spark, sf_dir)
-    return test_durations(spark.sql(subunit_results_sql("spark", "events")))
+    return test_durations(spark.sql(subunit_results_sql("spark")))
 
 
 def q_subunit_binary(spark, sf_dir):
@@ -365,7 +364,7 @@ def q_subunit_binary(spark, sf_dir):
     from ci_log_processing_spark.sources.derived import subunit_results_sql
 
     _events_view(spark, sf_dir)
-    su = spark.sql(subunit_results_sql("spark", "events"))
+    su = spark.sql(subunit_results_sql("spark"))
     pkt = packet_hex_col(
         F.col("test_name"),
         F.col("test_status"),
@@ -460,7 +459,7 @@ def q_stream_follow(spark, sf_dir):
     from ci_log_processing_spark.streaming.follow import run_follow
 
     t = load_transcripts(spark, sf_dir)
-    meta = spark.sql(conv_meta_sql("spark", "events"))
+    meta = spark.sql(conv_meta_sql("spark"))
     subset = t.filter(
         F.substring("conv_id", 6, 10).cast("int") % 29 == 1
     )
@@ -505,9 +504,7 @@ def q_stream_session_evictions(spark, sf_dir):
             spark,
             in_dir,
             os.path.join(work, "out"),
-            max_files_per_trigger=1,
             wait_evictions=n_convs,
-            eviction_deadline_sec=180.0,  # headroom on loaded machines
         )
         return (
             out.filter(F.col("status") == "evicted")
@@ -568,12 +565,9 @@ def q_stream_cdc_merge(spark, sf_dir):
         ch_dir = os.path.join(work, "changes")
         changes.repartition(3, F.col("doc_id")).write.parquet(ch_dir)
         snap = os.path.join(work, "snap")
-        bootstrap_snapshot(
-            docs.select("doc_id", "text"), snap, n_buckets=8
-        )
+        bootstrap_snapshot(docs.select("doc_id", "text"), snap)
         return run_cdc_merge(
             spark, ch_dir, snap, os.path.join(work, "chk"),
-            n_buckets=8,
         )
 
     return _collect_in_scratch(
@@ -688,7 +682,7 @@ def q_stream_interval_join(spark, sf_dir):
         F.substring("conv_id", 6, 10).cast("int") % 23 == 3
     )
     cfg = (
-        spark.sql(config_updates_sql("spark", "events"))
+        spark.sql(config_updates_sql("spark"))
         .withColumnRenamed("conv_id", "cfg_conv_id")
         .filter(F.substring("cfg_conv_id", 6, 10).cast("int") % 23 == 3)
     )
@@ -702,7 +696,6 @@ def q_stream_interval_join(spark, sf_dir):
         ).write.parquet(r_dir)
         return streaming_interval_join(
             spark, l_dir, r_dir, os.path.join(work, "out"),
-            lookback_sec=21600,
         )
 
     return _collect_in_scratch(
@@ -740,14 +733,14 @@ def q_dedup_ngram_jaccard(spark, sf_dir):
     from ci_log_processing_spark.operators.dedup import ngram_jaccard_pairs
     from ci_log_processing_spark.sources.corpus import load_corpus
 
-    return ngram_jaccard_pairs(load_corpus(spark, sf_dir), threshold=0.6)
+    return ngram_jaccard_pairs(load_corpus(spark, sf_dir))
 
 
 def q_dedup_minhash_lsh(spark, sf_dir):
     from ci_log_processing_spark.operators.dedup import minhash_lsh_pairs
     from ci_log_processing_spark.sources.corpus import load_corpus
 
-    return minhash_lsh_pairs(load_corpus(spark, sf_dir), spark, threshold=0.6)
+    return minhash_lsh_pairs(load_corpus(spark, sf_dir), spark)
 
 
 def q_incremental_minhash_dedup(spark, sf_dir):
@@ -763,9 +756,7 @@ def q_incremental_minhash_dedup(spark, sf_dir):
     corpus = load_corpus(spark, sf_dir)
     batch = corpus.filter(F.col("doc_id") >= 1000000)
     index_docs = corpus.filter(F.col("doc_id") < 1000000)
-    return incremental_minhash_dedup(
-        batch, index_docs, threshold=0.6, candidate_cap=64
-    )
+    return incremental_minhash_dedup(batch, index_docs)
 
 
 def q_dedup_simhash(spark, sf_dir):
@@ -779,7 +770,7 @@ def q_dedup_simhash_pairs(spark, sf_dir):
     from ci_log_processing_spark.operators.dedup import simhash_pairs
     from ci_log_processing_spark.sources.corpus import load_corpus
 
-    return simhash_pairs(load_corpus(spark, sf_dir), max_hamming=3)
+    return simhash_pairs(load_corpus(spark, sf_dir))
 
 
 def q_dedup_simhash_pairs_capped(spark, sf_dir):
@@ -788,9 +779,7 @@ def q_dedup_simhash_pairs_capped(spark, sf_dir):
     from ci_log_processing_spark.operators.dedup import simhash_pairs
     from ci_log_processing_spark.sources.corpus import load_corpus
 
-    return simhash_pairs(
-        load_corpus(spark, sf_dir), max_hamming=3, bucket_cap=16
-    )
+    return simhash_pairs(load_corpus(spark, sf_dir), bucket_cap=16)
 
 
 def q_dedup_keep_best(spark, sf_dir):
@@ -800,7 +789,7 @@ def q_dedup_keep_best(spark, sf_dir):
     from ci_log_processing_spark.operators.dedup import dedup_keep_best
     from ci_log_processing_spark.sources.corpus import load_corpus
 
-    return dedup_keep_best(load_corpus(spark, sf_dir), spark, threshold=0.6)
+    return dedup_keep_best(load_corpus(spark, sf_dir), spark)
 
 
 def q_embed_near_dup(spark, sf_dir):
@@ -808,7 +797,7 @@ def q_embed_near_dup(spark, sf_dir):
         embedding_near_dup_pairs,
     )
 
-    return embedding_near_dup_pairs(_emb(spark, sf_dir), threshold=0.30)
+    return embedding_near_dup_pairs(_emb(spark, sf_dir))
 
 
 def q_embed_near_dup_capped(spark, sf_dir):
@@ -818,9 +807,7 @@ def q_embed_near_dup_capped(spark, sf_dir):
 
     # cap 20 < every sf0.01 bucket size (44-59), so sub-splitting is
     # actually exercised in the gate, not just the nsub=1 fast path
-    return embedding_near_dup_pairs_capped(
-        _emb(spark, sf_dir), threshold=0.30, bucket_cap=20
-    )
+    return embedding_near_dup_pairs_capped(_emb(spark, sf_dir))
 
 
 def q_srp_near_dup(spark, sf_dir):
@@ -834,9 +821,7 @@ def q_srp_near_dup(spark, sf_dir):
         srp_near_dup_pairs,
     )
 
-    return srp_near_dup_pairs(
-        _emb(spark, sf_dir), threshold=0.30, n_bits=24, bands=8
-    )
+    return srp_near_dup_pairs(_emb(spark, sf_dir), threshold=0.30)
 
 
 def q_srp_near_dup_capped(spark, sf_dir):
@@ -851,8 +836,6 @@ def q_srp_near_dup_capped(spark, sf_dir):
     return srp_near_dup_pairs(
         _emb(spark, sf_dir),
         threshold=0.30,
-        n_bits=24,
-        bands=8,
         bucket_cap=24,
     )
 
@@ -887,7 +870,7 @@ def q_contrastive_triplets(spark, sf_dir):
         contrastive_triplets,
     )
 
-    return contrastive_triplets(_emb(spark, sf_dir), t_pos=0.35)
+    return contrastive_triplets(_emb(spark, sf_dir))
 
 
 def q_ann_brute_force(spark, sf_dir):
@@ -901,7 +884,7 @@ def q_ann_bucketed(spark, sf_dir):
     from ci_log_processing_spark.operators.similarity import bucketed_ann_topk
 
     emb = _emb(spark, sf_dir)
-    return bucketed_ann_topk(emb, emb.filter(F.col("vec_id") < 5), k=10)
+    return bucketed_ann_topk(emb, emb.filter(F.col("vec_id") < 5))
 
 
 def q_ann_pq(spark, sf_dir):
@@ -929,7 +912,7 @@ def q_kmeans_fit(spark, sf_dir):
     oracle-replayable (seed draw + 3 unrolled Lloyd iterations)."""
     from ci_log_processing_spark.operators.similarity import kmeans_fit
 
-    return kmeans_fit(_emb(spark, sf_dir), k=8, n_iter=3)
+    return kmeans_fit(_emb(spark, sf_dir), n_iter=3)
 
 
 def q_semantic_cluster_dedup(spark, sf_dir):
@@ -940,9 +923,7 @@ def q_semantic_cluster_dedup(spark, sf_dir):
         semantic_cluster_dedup,
     )
 
-    return semantic_cluster_dedup(
-        _emb(spark, sf_dir), k=8, n_iter=2, threshold=0.30
-    )
+    return semantic_cluster_dedup(_emb(spark, sf_dir))
 
 
 # per-source keep rates for the mixture gate query: exercises full
@@ -1046,7 +1027,7 @@ def q_token_budget_bpe(spark, sf_dir):
     )
 
     docs = _docs(spark, sf_dir)
-    counts = bpe_token_counts(docs, n_merges=8)
+    counts = bpe_token_counts(docs)
     with_counts = docs.select("doc_id", "source").join(counts, "doc_id")
     return token_budget_sample(
         with_counts, 3000, n_tok_col="n_bpe_tokens"
@@ -1061,7 +1042,7 @@ def q_line_dedup(spark, sf_dir):
         line_dedup,
     )
 
-    return line_dedup(attach_boilerplate(_docs(spark, sf_dir)), min_count=3)
+    return line_dedup(attach_boilerplate(_docs(spark, sf_dir)))
 
 
 def q_ann_ivf_multiprobe(spark, sf_dir):
@@ -1070,9 +1051,7 @@ def q_ann_ivf_multiprobe(spark, sf_dir):
     )
 
     emb = _emb(spark, sf_dir)
-    return ivf_multiprobe_topk(
-        emb, emb.filter(F.col("vec_id") < 5), k=10, nprobe=2
-    )
+    return ivf_multiprobe_topk(emb, emb.filter(F.col("vec_id") < 5), nprobe=2)
 
 
 def _write_docs_and_copies(docs: DataFrame, in_dir: str) -> None:
@@ -1128,7 +1107,7 @@ def q_stream_ingest_curation(spark, sf_dir):
         in_dir = os.path.join(work, "in")
         _write_docs_and_copies(_docs(spark, sf_dir), in_dir)
         return run_ingest_curation(
-            spark, in_dir, os.path.join(work, "out"), min_quality=0.45
+            spark, in_dir, os.path.join(work, "out")
         ).select("h", "quality")
 
     return _collect_in_scratch(
@@ -1167,7 +1146,7 @@ def q_stream_neardup(spark, sf_dir):
         _write_wave(base, in_dir, "w0", 1_000_000)
         _write_wave(exact.unionAll(near), in_dir, "w1", 2_000_000)
         return run_neardup_ingestion(
-            spark, in_dir, os.path.join(work, "out"), threshold=0.6
+            spark, in_dir, os.path.join(work, "out")
         ).select("doc_id")
 
     return _collect_in_scratch(spark, "gate_sneardup_", _run, "doc_id long")
@@ -1270,7 +1249,7 @@ def q_dedup_substring_spans(spark, sf_dir):
     from ci_log_processing_spark.operators.dedup import duplicate_spans
     from ci_log_processing_spark.sources.corpus import load_corpus
 
-    return duplicate_spans(load_corpus(spark, sf_dir), k=20)
+    return duplicate_spans(load_corpus(spark, sf_dir))
 
 
 def q_dedup_components(spark, sf_dir):
@@ -1281,7 +1260,7 @@ def q_dedup_components(spark, sf_dir):
     from ci_log_processing_spark.sources.corpus import load_corpus
 
     corpus = load_corpus(spark, sf_dir)
-    pairs = dedup_pair_edges(corpus, spark, threshold=0.6)
+    pairs = dedup_pair_edges(corpus, spark)
     return duplicate_components(pairs, corpus.select("doc_id"))
 
 
@@ -1297,7 +1276,7 @@ def q_dedup_components_star(spark, sf_dir):
     from ci_log_processing_spark.sources.corpus import load_corpus
 
     corpus = load_corpus(spark, sf_dir)
-    pairs = dedup_pair_edges(corpus, spark, threshold=0.6)
+    pairs = dedup_pair_edges(corpus, spark)
     return duplicate_components_star(pairs, corpus.select("doc_id"))
 
 
@@ -1312,7 +1291,7 @@ def q_dedup_semantic_apply(spark, sf_dir):
     )
 
     emb = _emb(spark, sf_dir)
-    pairs = embedding_near_dup_pairs(emb, threshold=0.30).select(
+    pairs = embedding_near_dup_pairs(emb).select(
         F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
     )
     nodes = emb.select(F.col("vec_id").alias("doc_id"))
@@ -1413,7 +1392,7 @@ def q_cdc_chunks(spark, sf_dir):
     dedup, one chunk-hash shuffle."""
     from ci_log_processing_spark.operators.dedup import cdc_chunk_stats
 
-    return cdc_chunk_stats(_docs(spark, sf_dir), window=8, divisor=16)
+    return cdc_chunk_stats(_docs(spark, sf_dir))
 
 
 def q_normalize_text(spark, sf_dir):
@@ -1441,7 +1420,6 @@ def q_epoch_plan(spark, sf_dir):
         _docs(spark, sf_dir),
         target_tokens=60_000.0,
         weights=EPOCH_WEIGHTS,
-        max_epochs=4.0,
     )
 
 
@@ -1452,7 +1430,7 @@ def q_overlap_decontaminate(spark, sf_dir):
 
     docs = _docs(spark, sf_dir)
     bench = docs.filter(F.col("doc_id") % 31 == 0)
-    return overlap_decontaminate(docs, bench, k=5, threshold=0.5)
+    return overlap_decontaminate(docs, bench)
 
 
 def q_conv_select(spark, sf_dir):
@@ -1463,9 +1441,6 @@ def q_conv_select(spark, sf_dir):
 
     return conversation_select(
         _routed(spark, sf_dir),
-        min_turns=5,
-        max_error_frac=0.2,
-        min_tool_calls=1,
     )
 
 
@@ -1475,7 +1450,7 @@ def q_context_windows(spark, sf_dir):
     context for every visible assistant turn."""
     from ci_log_processing_spark.operators.sft import context_windows
 
-    return context_windows(_routed(spark, sf_dir), n_context=4)
+    return context_windows(_routed(spark, sf_dir))
 
 
 def q_preference_pairs(spark, sf_dir):
@@ -1503,7 +1478,7 @@ def q_softdedup_weights(spark, sf_dir):
     from ci_log_processing_spark.sources.corpus import load_corpus
 
     corpus = load_corpus(spark, sf_dir)
-    pairs = dedup_pair_edges(corpus, spark, threshold=0.6)
+    pairs = dedup_pair_edges(corpus, spark)
     comps = duplicate_components(pairs, corpus.select("doc_id"))
     return softdedup_weights(corpus, clusters=comps)
 
@@ -1516,13 +1491,13 @@ def q_fuzzy_decontaminate(spark, sf_dir):
 
     corpus = load_corpus(spark, sf_dir)
     bench = _docs(spark, sf_dir).filter(F.col("doc_id") % 31 == 0)
-    return fuzzy_decontaminate(corpus, bench, threshold=0.5, k=5)
+    return fuzzy_decontaminate(corpus, bench)
 
 
 def q_top_ngrams(spark, sf_dir):
     from ci_log_processing_spark.operators.curation import top_ngrams
 
-    return top_ngrams(_docs(spark, sf_dir), n=2, k=20)
+    return top_ngrams(_docs(spark, sf_dir))
 
 
 def q_jsonl_quarantine(spark, sf_dir):
@@ -1585,9 +1560,7 @@ def q_sorted_neighborhood(spark, sf_dir):
         sorted_neighborhood_pairs,
     )
 
-    return sorted_neighborhood_pairs(
-        _docs(spark, sf_dir), window=4, max_dist=2
-    )
+    return sorted_neighborhood_pairs(_docs(spark, sf_dir))
 
 
 def q_pack_bfd(spark, sf_dir):
@@ -1599,7 +1572,7 @@ def q_pack_bfd(spark, sf_dir):
         pack_sequences_bfd,
     )
 
-    return pack_sequences_bfd(_docs(spark, sf_dir), capacity=256)
+    return pack_sequences_bfd(_docs(spark, sf_dir))
 
 
 def q_bpe_fertility(spark, sf_dir):
@@ -1612,7 +1585,7 @@ def q_bpe_fertility(spark, sf_dir):
         bpe_fertility,
     )
 
-    return bpe_fertility(_docs(spark, sf_dir), n_merges=8)
+    return bpe_fertility(_docs(spark, sf_dir))
 
 
 def q_pseudonymize(spark, sf_dir):
@@ -1751,7 +1724,6 @@ def q_full_curation(spark, sf_dir):
     return pack_sequences(
         _curation_prefix(spark, sf_dir),
         capacity=128,
-        group_col="source",
         text_col="cleaned",
     )
 
@@ -1771,10 +1743,8 @@ def q_full_curation_v2(spark, sf_dir):
     )
 
     modeled = _model_gate(_curation_prefix(spark, sf_dir))
-    capped = cap_per_group(modeled, "source", cap=20)
-    return pack_sequences(
-        capped, capacity=128, group_col="source", text_col="cleaned"
-    )
+    capped = cap_per_group(modeled, cap=20)
+    return pack_sequences(capped, capacity=128, text_col="cleaned")
 
 
 def q_full_curation_v3(spark, sf_dir):
@@ -1796,10 +1766,8 @@ def q_full_curation_v3(spark, sf_dir):
 
     modeled = _model_gate(_curation_prefix(spark, sf_dir))
     mixed = mixture_sample(modeled, MIX_RATES, default_rate=0.6).drop("u32")
-    capped = cap_per_group(mixed, "source", cap=20)
-    packed = pack_sequences(
-        capped, capacity=128, group_col="source", text_col="cleaned"
-    )
+    capped = cap_per_group(mixed, cap=20)
+    packed = pack_sequences(capped, capacity=128, text_col="cleaned")
     return shuffle_index(
         packed,
         shard_size=8,
@@ -1834,7 +1802,7 @@ def q_full_curation_v4(spark, sf_dir):
     # and semi-join the id sets, the production shape.
     docs = _docs(spark, sf_dir)
     head = _register_persist(
-        perplexity_buckets(docs, 3)
+        perplexity_buckets(docs)
         .filter(F.col("ppl_bucket") <= 1)
         .select("doc_id")
     )
@@ -1874,7 +1842,7 @@ def q_full_curation_v5(spark, sf_dir):
 
     docs = _docs(spark, sf_dir)
     cleaned = _register_persist(
-        decontaminate_spans(docs, SPAN_SNIPPETS, k=3)
+        decontaminate_spans(docs, SPAN_SNIPPETS)
         .join(docs.select("doc_id", "source"), "doc_id")
         .select("doc_id", F.col("clean_text").alias("text"), "source")
     )
@@ -1902,7 +1870,7 @@ def q_c4_clean(spark, sf_dir):
 def q_chunk_documents(spark, sf_dir):
     from ci_log_processing_spark.operators.curation import chunk_documents
 
-    return chunk_documents(_docs(spark, sf_dir), chunk_tokens=64, overlap=16)
+    return chunk_documents(_docs(spark, sf_dir))
 
 
 CONTAM_SNIPPETS = ["merge batch part", "scan slow fast", "vector table fast"]
@@ -1950,7 +1918,7 @@ def q_decontaminate_spans(spark, sf_dir):
         decontaminate_spans,
     )
 
-    return decontaminate_spans(_docs(spark, sf_dir), SPAN_SNIPPETS, k=3)
+    return decontaminate_spans(_docs(spark, sf_dir), SPAN_SNIPPETS)
 
 
 def q_priority_sample(spark, sf_dir):
@@ -1968,7 +1936,7 @@ def q_perplexity_buckets(spark, sf_dir):
         perplexity_buckets,
     )
 
-    return perplexity_buckets(_docs(spark, sf_dir), n_buckets=3)
+    return perplexity_buckets(_docs(spark, sf_dir))
 
 
 def q_data_card(spark, sf_dir):
@@ -1999,7 +1967,7 @@ def q_source_caps(spark, sf_dir):
     pseudo-random md5 order (operators/curation.py cap_per_group)."""
     from ci_log_processing_spark.operators.curation import cap_per_group
 
-    return cap_per_group(_docs(spark, sf_dir), "source", cap=40).select(
+    return cap_per_group(_docs(spark, sf_dir), cap=40).select(
         "doc_id", "source"
     )
 
@@ -2010,7 +1978,7 @@ def q_length_quantiles(spark, sf_dir):
     exact cross-engine parity, unlike interpolating percentiles."""
     from ci_log_processing_spark.operators.curation import length_quantiles
 
-    q = length_quantiles(_docs(spark, sf_dir), "source")
+    q = length_quantiles(_docs(spark, sf_dir))
     return q.select(
         "source",
         F.col("p50_tokens").cast("long").alias("p50_tokens"),
@@ -2049,7 +2017,7 @@ def q_model_quality(spark, sf_dir):
 def q_tfidf(spark, sf_dir):
     from ci_log_processing_spark.operators.textstats import tfidf_top_terms
 
-    return tfidf_top_terms(_docs(spark, sf_dir), k=3)
+    return tfidf_top_terms(_docs(spark, sf_dir))
 
 
 def q_tfidf_pruned(spark, sf_dir):
@@ -2059,7 +2027,7 @@ def q_tfidf_pruned(spark, sf_dir):
     lockstep."""
     from ci_log_processing_spark.operators.textstats import tfidf_top_terms
 
-    return tfidf_top_terms(_docs(spark, sf_dir), k=3, max_df_frac=0.5)
+    return tfidf_top_terms(_docs(spark, sf_dir), max_df_frac=0.5)
 
 
 def q_lang_id(spark, sf_dir):
@@ -2233,7 +2201,7 @@ def q_mm_resize(spark, sf_dir):
         resize_images,
     )
 
-    return resize_images(attach_media(_docs(spark, sf_dir)), 4, 4)
+    return resize_images(attach_media(_docs(spark, sf_dir)))
 
 
 def q_file_tags(spark, sf_dir):
@@ -2270,13 +2238,12 @@ def _cfg_state_asof(spark, sf_dir, direction):
     from ci_log_processing_spark.sources.derived import config_updates_sql
 
     t = load_transcripts(spark, sf_dir)  # registers the events view
-    cfg = spark.sql(config_updates_sql("spark", "events"))
+    cfg = spark.sql(config_updates_sql("spark"))
     out = asof_join(
         t.select("conv_id", "turn_idx", "ts"),
         cfg.withColumnRenamed("cfg_ts", "ts"),
         on=["conv_id"],
         value_cols=["cfg_state"],
-        seq_col="cfg_seq",
         direction=direction,
     )
     return out.select(
@@ -2293,13 +2260,11 @@ def q_range_join_incidents(spark, sf_dir):
     from ci_log_processing_spark.sources.derived import incident_windows_sql
 
     t = load_transcripts(spark, sf_dir)
-    inc = spark.sql(incident_windows_sql("spark", "events"))
+    inc = spark.sql(incident_windows_sql("spark"))
     out = range_join_binned(
         t.select("conv_id", "turn_idx", "ts"),
         inc,
         keys=["conv_id"],
-        point_ts="ts",
-        bin_sec=21600,
     )
     return out.select("conv_id", "turn_idx", "incident_id")
 
@@ -2345,7 +2310,7 @@ def q_winnow_pairs(spark, sf_dir):
     index, exact containment verify."""
     from ci_log_processing_spark.operators.dedup import winnow_pairs
 
-    return winnow_pairs(_docs(spark, sf_dir), overlap_milli=400)
+    return winnow_pairs(_docs(spark, sf_dir))
 
 
 def q_full_curation_v6(spark, sf_dir):
@@ -2455,7 +2420,7 @@ def q_k_anon_audit(spark, sf_dir):
         k_anonymity_audit,
     )
 
-    return k_anonymity_audit(_docs(spark, sf_dir), k=5)
+    return k_anonymity_audit(_docs(spark, sf_dir))
 
 
 def q_tool_cooccurrence(spark, sf_dir):
@@ -2501,7 +2466,7 @@ def q_sessionize_events(spark, sf_dir):
     events = spark.read.parquet(
         os.path.join(sf_dir, "events.parquet")
     )
-    return sessionize_events(events, gap_minutes=30)
+    return sessionize_events(events)
 
 
 def q_apply_cdc(spark, sf_dir):
@@ -2582,9 +2547,7 @@ def q_compaction_plan(spark, sf_dir):
     )
 
     docs = _docs(spark, sf_dir)
-    return compaction_summary(
-        compaction_plan(docs, target_bytes=4096)
-    )
+    return compaction_summary(compaction_plan(docs))
 
 
 def q_html_clean(spark, sf_dir):
@@ -2674,16 +2637,16 @@ def q_skipgram_pairs(spark, sf_dir):
 def q_inverted_index(spark, sf_dir):
     """Positional inverted-index build (operators/retrieval.py
     inverted_index): term -> 'doc:p1,p2|doc:p3' posting strings with
-    forced ordering. The gate opens the df band wide (the synthetic
-    vocabulary is a ~30-term closed set, so every term is a head
-    term); the max_df state cap is pytest-exercised."""
+    forced ordering. The gate runs at the df band [INDEX_MIN_DF,
+    INDEX_MAX_DF] = [2, 1000000] (the synthetic vocabulary is a
+    ~30-term closed set, so every term is a head term and the cap is
+    never reached); tests pin the INDEX_MAX_DF state cap by lowering
+    it."""
     from ci_log_processing_spark.operators.retrieval import (
         inverted_index,
     )
 
-    return inverted_index(
-        _docs(spark, sf_dir), min_df=2, max_df=1000000
-    )
+    return inverted_index(_docs(spark, sf_dir))
 
 
 def q_count_cosine_pairs(spark, sf_dir):
@@ -2696,10 +2659,7 @@ def q_count_cosine_pairs(spark, sf_dir):
     )
     from ci_log_processing_spark.sources.corpus import load_corpus
 
-    return count_cosine_pairs(
-        load_corpus(spark, sf_dir), threshold_milli=800, df_cut=128,
-        ngram=4,
-    )
+    return count_cosine_pairs(load_corpus(spark, sf_dir))
 
 
 def q_collocations(spark, sf_dir):
@@ -2731,9 +2691,7 @@ def q_index_incremental(spark, sf_dir):
     docs = _docs(spark, sf_dir)
     base = posting_rows(docs.filter(F.col("doc_id") % 2 == 0))
     delta = posting_rows(docs.filter(F.col("doc_id") % 2 == 1))
-    return finalize_index(
-        merge_posting_rows(base, delta), min_df=2, max_df=1000000
-    )
+    return finalize_index(merge_posting_rows(base, delta))
 
 
 def q_stream_index(spark, sf_dir):
@@ -2750,9 +2708,7 @@ def q_stream_index(spark, sf_dir):
 
     return _docs_in_two_waves(
         spark, sf_dir, "gate_sidx_",
-        lambda in_dir, out_dir: run_index_maintenance(
-            spark, in_dir, out_dir, min_df=2, max_df=1000000
-        ),
+        lambda in_dir, out_dir: run_index_maintenance(spark, in_dir, out_dir),
         "term string, df long, n_occurrences long, postings string",
     )
 
@@ -2765,8 +2721,8 @@ def q_mm_ahash_pairs(spark, sf_dir):
     run through the real BMP decode -> integer aHash -> banded
     Hamming plan; the oracle recomputes the hashes from the cycled
     text bytes in SQL and compares ALL pairs (banding at
-    max_hamming <= n_bands - 1 is total-recall, so the sets must
-    hash-equal)."""
+    AHASH_MAX_HAMMING <= AHASH_BANDS - 1 is total-recall, so the sets
+    must hash-equal)."""
     from ci_log_processing_spark.operators.multimodal import (
         ahash_near_dup_pairs,
         attach_media,
@@ -2795,7 +2751,7 @@ def q_mm_ahash_pairs(spark, sf_dir):
         )
     )
     ah = image_ahash(attach_media(corpus))
-    return ahash_near_dup_pairs(ah, max_hamming=7, n_bands=8)
+    return ahash_near_dup_pairs(ah)
 
 
 def q_phrase_merge(spark, sf_dir):
@@ -2896,7 +2852,7 @@ def q_scd2_intervals(spark, sf_dir):
     from ci_log_processing_spark.sources.derived import config_updates_sql
 
     _events_view(spark, sf_dir)
-    cfg = spark.sql(config_updates_sql("spark", "events"))
+    cfg = spark.sql(config_updates_sql("spark"))
     return scd2_intervals(cfg)
 
 
@@ -2907,7 +2863,7 @@ def q_hashed_features(spark, sf_dir):
         hashed_features,
     )
 
-    return hashed_features(_docs(spark, sf_dir), dim=64)
+    return hashed_features(_docs(spark, sf_dir))
 
 
 def q_dedup_threshold_curve(spark, sf_dir):
@@ -2927,7 +2883,7 @@ def q_slo_burn_alert(spark, sf_dir):
     slo_burn_alert)."""
     from ci_log_processing_spark.operators.aggregate import slo_burn_alert
 
-    return slo_burn_alert(_routed(spark, sf_dir), slo_milli=50)
+    return slo_burn_alert(_routed(spark, sf_dir))
 
 
 def q_tool_arg_outcomes(spark, sf_dir):
@@ -2976,7 +2932,7 @@ def q_cross_source_dup_matrix(spark, sf_dir):
     from ci_log_processing_spark.sources.corpus import load_corpus
 
     corpus = load_corpus(spark, sf_dir)
-    pairs = ngram_jaccard_pairs(corpus, threshold=0.6)
+    pairs = ngram_jaccard_pairs(corpus)
     return cross_source_dup_matrix(pairs, _docs(spark, sf_dir))
 
 
@@ -2992,9 +2948,6 @@ def q_zorder_audit(spark, sf_dir):
         _docs(spark, sf_dir),
         "n_chars",
         "doc_id",
-        bits=8,
-        bucket_bits=6,
-        probe=(150, 300, 100, 250),
     )
 
 
@@ -3055,7 +3008,7 @@ def q_retention_cohorts(spark, sf_dir):
     events = spark.read.parquet(
         os.path.join(sf_dir, "events.parquet")
     )
-    out = retention_cohorts(events, horizon_days=90)
+    out = retention_cohorts(events)
     # date -> ISO string for the driver's stringified value compare
     # (pandas renders a DuckDB DATE as a midnight timestamp)
     return out.select(
@@ -3109,7 +3062,7 @@ def q_agent_loops(spark, sf_dir):
         agent_loop_runs,
     )
 
-    return agent_loop_runs(_routed(spark, sf_dir), min_run=2)
+    return agent_loop_runs(_routed(spark, sf_dir))
 
 
 def q_tool_outcomes(spark, sf_dir):
@@ -3143,9 +3096,7 @@ def q_turn_transitions(spark, sf_dir):
         turn_transition_matrix,
     )
 
-    return turn_transition_matrix(
-        _routed(spark, sf_dir), state_col="role", sink=None
-    )
+    return turn_transition_matrix(_routed(spark, sf_dir))
 
 
 def q_bpe_merges(spark, sf_dir):
@@ -3157,7 +3108,7 @@ def q_bpe_merges(spark, sf_dir):
     rounds as CTEs — hash-exact."""
     from ci_log_processing_spark.operators.tokenizer import bpe_merges
 
-    return bpe_merges(_docs(spark, sf_dir), n_merges=8)
+    return bpe_merges(_docs(spark, sf_dir))
 
 
 def q_bpe_token_counts(spark, sf_dir):
@@ -3169,7 +3120,7 @@ def q_bpe_token_counts(spark, sf_dir):
         bpe_token_counts,
     )
 
-    return bpe_token_counts(_docs(spark, sf_dir), n_merges=8)
+    return bpe_token_counts(_docs(spark, sf_dir))
 
 
 def q_bpe_token_counts_arrow(spark, sf_dir):
@@ -3181,7 +3132,7 @@ def q_bpe_token_counts_arrow(spark, sf_dir):
         bpe_token_counts_arrow,
     )
 
-    return bpe_token_counts_arrow(_docs(spark, sf_dir), n_merges=8)
+    return bpe_token_counts_arrow(_docs(spark, sf_dir))
 
 
 def q_tool_pagerank(spark, sf_dir):
@@ -3195,7 +3146,7 @@ def q_tool_pagerank(spark, sf_dir):
         tool_pagerank,
     )
 
-    return tool_pagerank(_routed(spark, sf_dir), n_iter=5)
+    return tool_pagerank(_routed(spark, sf_dir))
 
 
 def q_cms_tokens(spark, sf_dir):
@@ -3313,7 +3264,7 @@ def q_knn_graph(spark, sf_dir):
     (operators/similarity.py knn_graph)."""
     from ci_log_processing_spark.operators.similarity import knn_graph
 
-    return knn_graph(_emb(spark, sf_dir), k_nn=5, k_clusters=8, n_iter=2)
+    return knn_graph(_emb(spark, sf_dir))
 
 
 def q_embed_diversity(spark, sf_dir):
@@ -3374,12 +3325,12 @@ def q_latency_hdr(spark, sf_dir):
     """Mergeable HDR-style log-histogram latency percentiles
     (operators/aggregate.py hdr_latency_percentiles) — the bounded-
     state approximate twin of pipe_latency_pctl; bucket state per
-    group <= 64 << sub_bits at any corpus size."""
+    group <= 64 << HDR_SUB_BITS at any corpus size."""
     from ci_log_processing_spark.operators.aggregate import (
         hdr_latency_percentiles,
     )
 
-    return hdr_latency_percentiles(_routed(spark, sf_dir), sub_bits=4)
+    return hdr_latency_percentiles(_routed(spark, sf_dir))
 
 
 def q_stream_hll(spark, sf_dir):
@@ -3393,7 +3344,7 @@ def q_stream_hll(spark, sf_dir):
     )
 
     t = load_transcripts(spark, sf_dir)
-    meta = spark.sql(conv_meta_sql("spark", "events"))
+    meta = spark.sql(conv_meta_sql("spark"))
 
     def _run(work):
         in_dir = os.path.join(work, "in")
@@ -3428,7 +3379,7 @@ def q_stream_hdr(spark, sf_dir):
     )
 
     t = load_transcripts(spark, sf_dir)
-    meta = spark.sql(conv_meta_sql("spark", "events"))
+    meta = spark.sql(conv_meta_sql("spark"))
     ok = (
         ts_cascade_col(F.col("text"), DEFAULT_REF_YEAR).isNotNull()
         & (F.col("turn_idx") >= 40)
@@ -3451,7 +3402,7 @@ def q_stream_hdr(spark, sf_dir):
         _write_wave(w0, in_dir, "w0", 1_000_000)
         _write_wave(w1, in_dir, "w1", 2_000_000)
         return run_streaming_hdr(
-            spark, in_dir, os.path.join(work, "out"), sub_bits=4, meta=meta
+            spark, in_dir, os.path.join(work, "out"), meta=meta
         )
 
     return _collect_in_scratch(
@@ -3477,9 +3428,7 @@ def q_knn_graph_multiprobe(spark, sf_dir):
     variant; corpus vectors stay in their argmin cell."""
     from ci_log_processing_spark.operators.similarity import knn_graph
 
-    return knn_graph(
-        _emb(spark, sf_dir), k_nn=5, k_clusters=8, n_iter=2, nprobe=2
-    )
+    return knn_graph(_emb(spark, sf_dir), nprobe=2)
 
 
 def q_cluster_cards(spark, sf_dir):
@@ -3495,7 +3444,7 @@ def q_cluster_cards(spark, sf_dir):
     from ci_log_processing_spark.sources.corpus import load_corpus
 
     corpus = load_corpus(spark, sf_dir)
-    pairs = dedup_pair_edges(corpus, spark, threshold=0.6)
+    pairs = dedup_pair_edges(corpus, spark)
     comp = duplicate_components(pairs, corpus.select("doc_id"))
     return cluster_cards(comp, corpus)
 
@@ -3524,7 +3473,7 @@ def q_agg_cube(spark, sf_dir):
 def q_salted_join(spark, sf_dir):
     """Hot-key salted join (operators/skew.py salted_join): the
     deterministic-plan skew scatter — fact salt from row-content
-    h32, dim replicated n_salts ways, join on (key, salt). The gate
+    h32, dim replicated N_SALTS ways, join on (key, salt). The gate
     proves row equality with the plain join (the oracle IS the
     unsalted join); the plan difference is asserted in
     tests/test_plan_shape.py."""
@@ -3536,7 +3485,7 @@ def q_salted_join(spark, sf_dir):
     dim = routed.groupBy("conv_id").agg(
         F.count(F.lit(1)).alias("n_conv_turns")
     )
-    return salted_join(routed, dim, "conv_id", n_salts=8)
+    return salted_join(routed, dim, "conv_id")
 
 
 def q_source_keyness(spark, sf_dir):
@@ -3549,7 +3498,7 @@ def q_source_keyness(spark, sf_dir):
         source_keyness,
     )
 
-    return source_keyness(_docs(spark, sf_dir), k=5)
+    return source_keyness(_docs(spark, sf_dir))
 
 
 def q_render_chat(spark, sf_dir):
@@ -3559,7 +3508,7 @@ def q_render_chat(spark, sf_dir):
     order from array_sort over (turn_idx, ...) structs."""
     from ci_log_processing_spark.operators.sft import render_chat
 
-    return render_chat(_routed(spark, sf_dir), template="chatml")
+    return render_chat(_routed(spark, sf_dir))
 
 
 def q_watermark(spark, sf_dir):
@@ -3583,7 +3532,7 @@ def q_kcenter_select(spark, sf_dir):
         kcenter_select,
     )
 
-    return kcenter_select(_emb(spark, sf_dir), k=6)
+    return kcenter_select(_emb(spark, sf_dir))
 
 
 def q_mm_scene_cuts(spark, sf_dir):
@@ -3617,7 +3566,7 @@ def q_reliability_iso(spark, sf_dir):
         "label",
         F.col("source").isin("src0", "src1", "src2").cast("int"),
     )
-    return reliability_isotonic(nb_quality_classifier(docs), n_bins=8)
+    return reliability_isotonic(nb_quality_classifier(docs))
 
 
 def q_symspell_pairs(spark, sf_dir):
@@ -3629,7 +3578,7 @@ def q_symspell_pairs(spark, sf_dir):
     prefilter), so the gate proves the blocking's total recall."""
     from ci_log_processing_spark.operators.linkage import symspell_pairs
 
-    return symspell_pairs(_docs(spark, sf_dir), max_dist=1)
+    return symspell_pairs(_docs(spark, sf_dir))
 
 
 def entry(spark: SparkSession) -> DataFrame:

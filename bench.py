@@ -147,7 +147,7 @@ def _routed(impl):
         from ci_log_processing_spark.sources.derived import conv_meta_sql
 
         transcripts = load_transcripts(spark, sf_dir)  # events view
-        meta = spark.sql(conv_meta_sql("spark", "events"))
+        meta = spark.sql(conv_meta_sql("spark"))
         return full_pipeline(transcripts, spark, impl=impl, meta=meta)
 
     return q
@@ -182,13 +182,12 @@ def _op_asof_join(spark, sf_dir):
     from ci_log_processing_spark.sources.derived import config_updates_sql
 
     transcripts = load_transcripts(spark, sf_dir)  # events view
-    cfg = spark.sql(config_updates_sql("spark", "events"))
+    cfg = spark.sql(config_updates_sql("spark"))
     return asof_join(
         transcripts.select("conv_id", "turn_idx", "ts"),
         cfg.withColumnRenamed("cfg_ts", "ts"),
         on=["conv_id"],
         value_cols=["cfg_state"],
-        seq_col="cfg_seq",
     ).withColumn("cfg_state", F.coalesce("cfg_state", F.lit("")))
 
 
@@ -271,10 +270,10 @@ def recall_extras(spark, sf_dir) -> dict:
     )
     pq = dict(m=4, k_codes=8, n_iter=2, k=10)
     out = {"ann_recall_at_10": {
-        "bucketed_1probe": recall(truth, bucketed_ann_topk(emb, ann_q, k=10)),
+        "bucketed_1probe": recall(truth, bucketed_ann_topk(emb, ann_q)),
         **{
             f"ivf_nprobe{p}": recall(
-                truth, ivf_multiprobe_topk(emb, ann_q, k=10, nprobe=p)
+                truth, ivf_multiprobe_topk(emb, ann_q, nprobe=p)
             )
             for p in (2, 4, 8, 16)
         },
@@ -304,7 +303,7 @@ def recall_extras(spark, sf_dir) -> dict:
     out["knn_graph_recall_at_5"] = {
         f"nprobe{p}": recall(
             g_truth,
-            knn_graph(emb, k_nn=5, k_clusters=8, n_iter=2, nprobe=p)
+            knn_graph(emb, nprobe=p)
             .filter(F.col("vec_id") < 64)
             .select(
                 F.col("vec_id").alias("query_id"),

@@ -31,6 +31,8 @@ import re
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .message import WS
+
 # (python_regex, strptime_format) — ordered; first match wins.
 # Reference: logsender.py:332-346.
 TIMESTAMP_PATTERNS: list[tuple[str, str]] = [
@@ -76,23 +78,32 @@ def parse_timestamp_py(
 
 # --- Catalyst-expression implementation ------------------------------
 
+# The reference's \S+ token ends at any str.isspace() character, and
+# its \s (step 3's day-time join) is any of them; Java's and RE2's \s
+# are ASCII-only, so both engines spell the class out.
+_WS = f"[{WS}]"
+_END = f"(?:{_WS}|$)"
+
 # Anchored regex shapes (valid in Java and Python re) with an explicit
 # fractional group so the fraction can be right-padded to 6 digits
 # before parsing. Each entry:
 #   (regex, groups, spark_format, yearless)
-# where the candidate string is rebuilt as g1 + '.' + rpad(g2,6,'0')
-# when a frac group exists, then parsed with spark_format.
+# where, when a frac group (the last) exists, the candidate string is
+# rebuilt as the other groups joined by a space + '.' +
+# rpad(frac,6,'0'), then parsed with spark_format.
 _SPARK_STEPS = [
     # 1: iso Z with fraction; \S+ token must be exactly this shape
     (
-        r"^([0-9]{4}-[0-9]{2}-[0-9]{2}T[0-9]{2}:[0-9]{2}:[0-9]{2})\.([0-9]{1,6})Z(?:\s|$)",
+        r"^([0-9]{4}-[0-9]{2}-[0-9]{2}T[0-9]{2}:[0-9]{2}:[0-9]{2})\.([0-9]{1,6})Z"
+        + _END,
         2,
         "yyyy-MM-dd'T'HH:mm:ss.SSSSSS",
         False,
     ),
     # 2: space-separated with fraction
     (
-        r"^([0-9]{4}-[0-9]{2}-[0-9]{2} [0-9]{2}:[0-9]{2}:[0-9]{2})\.([0-9]{1,6})(?:\s|$)",
+        r"^([0-9]{4}-[0-9]{2}-[0-9]{2} [0-9]{2}:[0-9]{2}:[0-9]{2})\.([0-9]{1,6})"
+        + _END,
         2,
         "yyyy-MM-dd HH:mm:ss.SSSSSS",
         False,
@@ -100,14 +111,15 @@ _SPARK_STEPS = [
     # 3: syslog w/ micros truncated to 5 digits by the reference's
     #    14-char window (logsender.py:338-339)
     (
-        r"^([A-Za-z]{3} [0-9]{2} [0-9]{2}:[0-9]{2}:[0-9]{2})\.([0-9]{5})",
-        2,
+        r"^([A-Za-z]{3} [0-9]{2})" + _WS + r"([0-9]{2}:[0-9]{2}:[0-9]{2})"
+        r"\.([0-9]{5})",
+        3,
         "MMM dd HH:mm:ss.SSSSSS",
         True,
     ),
     # 4: syslog without fraction (third \S+ token must be a bare time)
     (
-        r"^([A-Za-z]{3} [0-9]{2} [0-9]{2}:[0-9]{2}:[0-9]{2})(?:\s|$)",
+        r"^([A-Za-z]{3} [0-9]{2} [0-9]{2}:[0-9]{2}:[0-9]{2})" + _END,
         1,
         "MMM dd HH:mm:ss",
         True,
@@ -135,11 +147,14 @@ _SPARK_STEPS = [
 
 
 def _spark_step(text: Column, rx: str, ngroups: int, fmt: str) -> Column:
-    if ngroups == 2:
-        head = F.regexp_extract(text, rx, 1)
-        frac = F.regexp_extract(text, rx, 2)
-        candidate = F.nullif(F.concat(head, F.lit("."), F.rpad(frac, 6, "0")),
-                             F.lit(".000000"))
+    if ngroups > 1:
+        heads = [F.regexp_extract(text, rx, i) for i in range(1, ngroups)]
+        head = heads[0] if len(heads) == 1 else F.concat_ws(" ", *heads)
+        frac = F.regexp_extract(text, rx, ngroups)
+        # frac is empty exactly when the step does not match
+        candidate = F.when(
+            frac != "", F.concat(head, F.lit("."), F.rpad(frac, 6, "0"))
+        )
     else:
         candidate = F.nullif(F.regexp_extract(text, rx, 1), F.lit(""))
     return F.try_to_timestamp(candidate, F.lit(fmt))
@@ -190,9 +205,11 @@ def ts_cascade_sql_duckdb(text_expr: str, ref_year: int) -> str:
     t = text_expr
     yshift = f"to_years(CAST({ref_year} - 1900 AS INT))"
 
-    def frac_step(rx: str, fmt: str, yearless: bool) -> str:
-        head = f"regexp_extract({t}, '{rx}', 1)"
-        frac = f"regexp_extract({t}, '{rx}', 2)"
+    def frac_step(rx: str, fmt: str, yearless: bool, heads: int = 1) -> str:
+        head = ", ' ', ".join(
+            f"regexp_extract({t}, '{rx}', {i})" for i in range(1, heads + 1)
+        )
+        frac = f"regexp_extract({t}, '{rx}', {heads + 1})"
         cand = f"concat({head}, '.', rpad({frac}, 6, '0'))"
         ts = f"try_strptime({cand}, '{fmt}')"
         return f"({ts} + {yshift})" if yearless else ts
@@ -204,22 +221,26 @@ def ts_cascade_sql_duckdb(text_expr: str, ref_year: int) -> str:
 
     steps = [
         frac_step(
-            r"^([0-9]{4}-[0-9]{2}-[0-9]{2}T[0-9]{2}:[0-9]{2}:[0-9]{2})\.([0-9]{1,6})Z(\s|$)",
+            r"^([0-9]{4}-[0-9]{2}-[0-9]{2}T[0-9]{2}:[0-9]{2}:[0-9]{2})\.([0-9]{1,6})Z"
+            + _END,
             "%Y-%m-%dT%H:%M:%S.%f",
             False,
         ),
         frac_step(
-            r"^([0-9]{4}-[0-9]{2}-[0-9]{2} [0-9]{2}:[0-9]{2}:[0-9]{2})\.([0-9]{1,6})(\s|$)",
+            r"^([0-9]{4}-[0-9]{2}-[0-9]{2} [0-9]{2}:[0-9]{2}:[0-9]{2})\.([0-9]{1,6})"
+            + _END,
             "%Y-%m-%d %H:%M:%S.%f",
             False,
         ),
         frac_step(
-            r"^([A-Za-z]{3} [0-9]{2} [0-9]{2}:[0-9]{2}:[0-9]{2})\.([0-9]{5})",
+            r"^([A-Za-z]{3} [0-9]{2})" + _WS + r"([0-9]{2}:[0-9]{2}:[0-9]{2})"
+            r"\.([0-9]{5})",
             "%b %d %H:%M:%S.%f",
             True,
+            heads=2,
         ),
         plain_step(
-            r"^([A-Za-z]{3} [0-9]{2} [0-9]{2}:[0-9]{2}:[0-9]{2})(\s|$)",
+            r"^([A-Za-z]{3} [0-9]{2} [0-9]{2}:[0-9]{2}:[0-9]{2})" + _END,
             "%b %d %H:%M:%S",
             True,
         ),

@@ -397,7 +397,11 @@ def hll_estimate(regs: DataFrame) -> DataFrame:
     return per_sink.select("sink", F.round(est, 2).alias("hll_distinct"))
 
 
-def agent_loop_runs(df: DataFrame, min_run: int = 3) -> DataFrame:
+# shortest run of identical consecutive turns agent_loop_runs reports
+LOOP_MIN_RUN = 2
+
+
+def agent_loop_runs(df: DataFrame) -> DataFrame:
     """Agent retry-loop detection: maximal runs of CONSECUTIVE turns
     in one conversation that repeat the identical (tool, message)
     pair — the "agent is stuck calling the same tool with the same
@@ -416,10 +420,8 @@ def agent_loop_runs(df: DataFrame, min_run: int = 3) -> DataFrame:
 
     Output: one row per qualifying run —
     (conv_id, tool, run_len, start_turn, end_turn), run_len >=
-    min_run; drop-queue turns never form runs.
+    LOOP_MIN_RUN; drop-queue turns never form runs.
     """
-    if min_run < 2:
-        raise ValueError("agent_loop_runs: min_run must be >= 2")
     from pyspark.sql.window import Window
 
     base = df.filter(F.col("sink") != "drop_queue").select(
@@ -450,7 +452,7 @@ def agent_loop_runs(df: DataFrame, min_run: int = 3) -> DataFrame:
             F.min("turn_idx").alias("start_turn"),
             F.max("turn_idx").alias("end_turn"),
         )
-        .filter(F.col("run_len") >= min_run)
+        .filter(F.col("run_len") >= LOOP_MIN_RUN)
         .select("conv_id", "tool", "run_len", "start_turn", "end_turn")
     )
 
@@ -488,17 +490,12 @@ def conversation_funnel(df: DataFrame) -> DataFrame:
     )
 
 
-def turn_transition_matrix(
-    df: DataFrame, state_col: str = "tool", sink: str | None = "tool_calls"
-) -> DataFrame:
-    """First-order state-transition (Markov) counts over each
-    conversation's turns in turn order: count prev_state -> state
-    transitions corpus-wide, with the transition probability as an
-    EXACT rational rounded once (count/row_total at 5 dp) so the
-    DuckDB twin matches bit-for-bit. `state_col` picks the chain
-    (tool for tool-call sequences, role for dialogue structure);
-    `sink` optionally restricts to one route (None = every routed
-    turn).
+def turn_transition_matrix(df: DataFrame) -> DataFrame:
+    """First-order role-transition (Markov) counts over each
+    conversation's routed turns (drop_queue excluded) in turn order:
+    count prev_state -> state transitions corpus-wide, with the
+    transition probability as an EXACT rational rounded once
+    (count/row_total at 5 dp) so the DuckDB twin matches bit-for-bit.
 
     Shape: the lag window reuses the conv_id partitioning (one
     data-sized exchange), then the transition aggregate collapses to
@@ -512,13 +509,9 @@ def turn_transition_matrix(
     """
     from pyspark.sql.window import Window
 
-    keep = F.col(state_col).isNotNull() & (
-        F.lit(True) if sink is None else (F.col("sink") == sink)
-    )
-    if sink is None:
-        keep = keep & (F.col("sink") != "drop_queue")
+    keep = F.col("role").isNotNull() & (F.col("sink") != "drop_queue")
     states = df.filter(keep).select(
-        "conv_id", "turn_idx", F.col(state_col).alias("state")
+        "conv_id", "turn_idx", F.col("role").alias("state")
     )
     w = Window.partitionBy("conv_id").orderBy("turn_idx")
     pairs = states.withColumn("prev_state", F.lag("state").over(w)).filter(
@@ -600,17 +593,21 @@ def tool_outcomes(df: DataFrame) -> DataFrame:
     )
 
 
-def hdr_partial_buckets(df: DataFrame, sub_bits: int = 4) -> DataFrame:
+# significant bits kept below an HDR bucket's leading bit
+HDR_SUB_BITS = 4
+
+
+def hdr_partial_buckets(df: DataFrame) -> DataFrame:
     """The mergeable half of the HDR-style latency sketch: per-group
     log-histogram bucket counts over inter-turn gaps. This is the
     operator `turn_latency_percentiles`' own docstring points to for
     10^12 turns: the exact value-histogram shuffles distinct gap
     values (unbounded — microsecond timestamps make most gaps
     unique), while this quantizes each gap to its HdrHistogram
-    bucket — top (1 + sub_bits) significant bits kept, the rest
+    bucket — top (1 + HDR_SUB_BITS) significant bits kept, the rest
     zeroed — so the aggregate state per group is AT MOST
-    64 << sub_bits rows no matter the corpus, with relative value
-    error < 2^-sub_bits by construction.
+    64 << HDR_SUB_BITS rows no matter the corpus, with relative value
+    error < 2^-HDR_SUB_BITS by construction.
 
     count is associative/commutative, so partials from partitions,
     days, or replayed micro-batches sum into exactly the single-pass
@@ -618,7 +615,7 @@ def hdr_partial_buckets(df: DataFrame, sub_bits: int = 4) -> DataFrame:
 
     All bucket math is integer bit arithmetic identical in both
     engines: e = length(bin(gap)) (unpadded in Spark and DuckDB),
-    shift = max(e - 1 - sub_bits, 0), bucket = (gap >> shift) <<
+    shift = max(e - 1 - HDR_SUB_BITS, 0), bucket = (gap >> shift) <<
     shift — the bucket LOWER BOUND is its own key and representative.
     """
     from pyspark.sql.window import Window
@@ -632,18 +629,18 @@ def hdr_partial_buckets(df: DataFrame, sub_bits: int = 4) -> DataFrame:
         .filter(F.col("_next_ts").isNotNull())
         .select("sink", gap)
     )
-    return hdr_bucket_counts(gaps, "sink", "gap_ms", sub_bits)
+    return hdr_bucket_counts(gaps, "sink", "gap_ms")
 
 
 def hdr_bucket_counts(
-    gaps: DataFrame, group_col: str, gap_col: str, sub_bits: int
+    gaps: DataFrame, group_col: str, gap_col: str
 ) -> DataFrame:
     """Quantize a (group, gap) relation to HDR bucket counts — the
     shared bucket math for the batch sketch and the streaming
     per-micro-batch partials (streaming/hdr_stream.py). Pure-SQL
     expression (the python shiftright/shiftleft wrappers only take
     literal shift counts; the SQL functions accept expressions)."""
-    sh = f"greatest(length(bin({gap_col})) - 1 - {sub_bits}, 0)"
+    sh = f"greatest(length(bin({gap_col})) - 1 - {HDR_SUB_BITS}, 0)"
     bucket = F.expr(
         f"CASE WHEN {gap_col} <= 0 THEN {gap_col} "
         f"ELSE shiftleft(shiftright({gap_col}, {sh}), {sh}) END"
@@ -660,9 +657,9 @@ def hdr_percentiles_from_buckets(buckets: DataFrame) -> DataFrame:
     bounds — smallest bucket whose cumulative count reaches
     ceil(p*n), the same integer rank rule as the exact operator, so
     approx vs exact differ ONLY by the in-bucket quantization
-    (< 2^-sub_bits relative, asserted in tests). The window runs on
-    GROUP x bucket rows (bounded by 64 << sub_bits per group), never
-    on turns."""
+    (< 2^-HDR_SUB_BITS relative, asserted in tests). The window runs
+    on GROUP x bucket rows (bounded by 64 << HDR_SUB_BITS per group),
+    never on turns."""
     from pyspark.sql.window import Window
 
     wt = Window.partitionBy("sink")
@@ -689,7 +686,7 @@ def hdr_percentiles_from_buckets(buckets: DataFrame) -> DataFrame:
     )
 
 
-def hdr_latency_percentiles(df: DataFrame, sub_bits: int = 4) -> DataFrame:
+def hdr_latency_percentiles(df: DataFrame) -> DataFrame:
     """Single-pass composition of the two halves above — the
     production approximate-percentile path at 10^12 turns: one
     conv-keyed window (shared with the rest of the pipeline), one
@@ -697,9 +694,7 @@ def hdr_latency_percentiles(df: DataFrame, sub_bits: int = 4) -> DataFrame:
     group-row-sized window. Compare pipe_latency_pctl (exact twin,
     unbounded distinct-gap state) — both are gate queries so the
     error bound is visible in the artifacts."""
-    return hdr_percentiles_from_buckets(
-        hdr_partial_buckets(df, sub_bits=sub_bits)
-    )
+    return hdr_percentiles_from_buckets(hdr_partial_buckets(df))
 
 
 def tool_health(df: DataFrame) -> DataFrame:
@@ -867,7 +862,11 @@ def tool_arg_outcomes(df: DataFrame) -> DataFrame:
     )
 
 
-def retention_cohorts(events: DataFrame, horizon_days: int = 90) -> DataFrame:
+# last day offset after joining that retention_cohorts counts
+RETENTION_HORIZON_DAYS = 90
+
+
+def retention_cohorts(events: DataFrame) -> DataFrame:
     """Cohort retention over the events table: cohort = each user's
     first-seen calendar day; for every (cohort_day, day_offset) cell,
     how many of that cohort's users were active `day_offset` days
@@ -876,7 +875,8 @@ def retention_cohorts(events: DataFrame, horizon_days: int = 90) -> DataFrame:
 
     Scale shape: ONE user-keyed exchange — groupBy(user) collects
     min(day) and the distinct active-day set in the same partial
-    aggregate (per-user state is bounded by horizon_days after the
+    aggregate (per-user state is bounded by RETENTION_HORIZON_DAYS
+    after the
     post-agg filter; the collect_set itself is bounded by the
     retention horizon because offsets past it are dropped before the
     final rollup) — then explode + a partial-aggregated rollup onto
@@ -897,7 +897,7 @@ def retention_cohorts(events: DataFrame, horizon_days: int = 90) -> DataFrame:
         F.datediff(F.col("_d"), F.col("cohort_day")).alias("day_offset"),
     )
     return (
-        offsets.filter(F.col("day_offset") <= horizon_days)
+        offsets.filter(F.col("day_offset") <= RETENTION_HORIZON_DAYS)
         .groupBy("cohort_day", "day_offset")
         .agg(F.count(F.lit(1)).alias("n_users"))
     )
@@ -1075,10 +1075,10 @@ def cusum_error_drift(routed: DataFrame) -> DataFrame:
     )
 
 
-def sessionize_events(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
+def sessionize_events(events: DataFrame) -> DataFrame:
     """Gaps-and-islands sessionization of the raw events table: a
     new session starts when a user's inter-event gap exceeds
-    `gap_minutes`. The batch SQL twin of the engine's streaming
+    SESSION_GAP_SEC. The batch SQL twin of the engine's streaming
     session operators (F.session_window / applyInPandasWithState in
     streaming/) — same session boundaries, computed with the classic
     lag + boundary-flag + running-sum island id, so the technique
@@ -1098,7 +1098,7 @@ def sessionize_events(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
         F.col("user_id").alias("_u"), F.col("ts").alias("_t")
     )
     w = Window.partitionBy("_u").orderBy("_t")
-    gap = F.lit(int(gap_minutes) * 60)
+    gap = F.lit(SESSION_GAP_SEC)
     # three projections over the SAME (user ORDER BY ts) frame — one
     # sort, one exchange; Spark disallows a window inside a window's
     # argument, but lag and the running sum share the physical Sort.
@@ -1142,9 +1142,11 @@ def sessionize_events(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
 
 # trailing window of slo_burn_alert's long burn rate, in hours
 SLO_LONG_HOURS = 6
+# error budget, in thousandths of routed turns, that both burns exceed
+SLO_MILLI = 50
 
 
-def slo_burn_alert(routed: DataFrame, slo_milli: int = 50) -> DataFrame:
+def slo_burn_alert(routed: DataFrame) -> DataFrame:
     """Multi-window error-budget burn alert (the SRE-book
     multiwindow-multiburn rule): per hour, the SHORT burn is that
     hour's error fraction and the LONG burn is the trailing
@@ -1203,9 +1205,7 @@ def slo_burn_alert(routed: DataFrame, slo_milli: int = 50) -> DataFrame:
         "n_errors",
         short.alias("short_burn_milli"),
         long_.alias("long_burn_milli"),
-        (
-            (short > int(slo_milli)) & (long_ > int(slo_milli))
-        ).alias("alert"),
+        ((short > SLO_MILLI) & (long_ > SLO_MILLI)).alias("alert"),
     )
 
 

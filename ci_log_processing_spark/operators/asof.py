@@ -27,7 +27,7 @@ explosion. Ties: a right row with ts == left ts IS visible
 (side 0 sorts first), matching DuckDB/pandas `ASOF JOIN` /
 `merge_asof(direction="backward", allow_exact_matches=True)`.
 Duplicate right rows on the same (key, ts) resolve to the one with
-the greatest `seq_col` — the seq is simply the window's third sort
+the greatest ASOF_SEQ_COL — the seq is simply the window's third sort
 key, so determinism costs zero extra exchanges.
 """
 
@@ -38,12 +38,16 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
+# right-side column whose greatest value wins among right rows
+# sharing (on, ts): the config-update table's sequence number
+ASOF_SEQ_COL = "cfg_seq"
+
+
 def asof_join(
     left: DataFrame,
     right: DataFrame,
     on: list[str],
     value_cols: list[str],
-    seq_col: str | None = None,
     direction: str = "backward",
 ) -> DataFrame:
     """As-of join: left rows gain `value_cols` from the closest
@@ -53,9 +57,8 @@ def asof_join(
     event" / trade-vs-next-quote direction). NULLs when no
     qualifying right row exists.
 
-    seq_col: deterministic tie-breaker among right rows sharing
-    (on, ts) — the row with the greatest seq_col wins. When None,
-    (on, ts) must already be unique on `right`.
+    `right` carries ASOF_SEQ_COL, the deterministic tie-breaker among
+    right rows sharing (on, ts): the row with the greatest one wins.
 
     A NULL in a right row's value column is treated as "no update"
     (the forward-fill skips it to the previous non-null state) — the
@@ -73,20 +76,17 @@ def asof_join(
             f"asof_join: value_cols {sorted(clash)} already exist on left"
         )
 
-    # seq_col becomes a third sort key instead of a pre-dedup
+    # the seq column becomes a third sort key instead of a pre-dedup
     # groupBy: among right rows sharing (key, ts) the max-seq row
     # sorts LAST inside the running frame, so last(ignorenulls)
     # picks exactly the deterministic survivor — zero extra
     # exchanges (a groupBy on (key, ts) would not ride the (key)
     # partitioning of the window and costs its own shuffle)
-    seq_expr = (
-        F.col(seq_col).cast("long") if seq_col is not None else F.lit(None).cast("long")
-    )
     r = right.select(
         *on,
         F.col("ts").alias("_asof_ts"),
         F.lit(0).alias("_side"),
-        seq_expr.alias("_seq"),
+        F.col(ASOF_SEQ_COL).cast("long").alias("_seq"),
         *[F.col(c) for c in value_cols],
     )
     l_tagged = left.select(

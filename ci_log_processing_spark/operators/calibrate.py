@@ -11,7 +11,7 @@ regression (monotone non-parametric calibration; Zadrozny & Elkan
 
 Spark-first shape: the ONLY corpus-sized work is one partial+final
 aggregate to per-bin (n, positives) counts; everything after runs on
-the <= n_bins-row bin table. Isotonic regression is NOT computed by
+the <= CALIBRATION_BINS-row bin table. Isotonic regression is NOT computed by
 the sequential PAVA sweep (driver-side recursion) but by its exact
 closed form — for bin i the fitted value is
 
@@ -49,7 +49,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def reliability_isotonic(scored: DataFrame, n_bins: int = 8) -> DataFrame:
+# equal-width score bins of the reliability table
+CALIBRATION_BINS = 8
+
+
+def reliability_isotonic(scored: DataFrame) -> DataFrame:
     """Per-bin reliability + exact isotonic calibration.
 
     Input: one row per document with an integer score column and a
@@ -58,10 +62,11 @@ def reliability_isotonic(scored: DataFrame, n_bins: int = 8) -> DataFrame:
     trained gate).
 
     Binning is equal-WIDTH over the observed [min, max] score span:
-    bin = ((score - min) * n_bins) div (max - min + 1), an exact
-    integer in [0, n_bins). Equal-width (not quantile) keeps the
-    corpus pass one aggregate — quantile edges would need a second
-    distributed pass and add nothing to the calibration contract.
+    bin = ((score - min) * CALIBRATION_BINS) div (max - min + 1), an
+    exact integer in [0, CALIBRATION_BINS). Equal-width (not quantile)
+    keeps the corpus pass one aggregate — quantile edges would need a
+    second distributed pass and add nothing to the calibration
+    contract.
 
     Output, one row per NON-EMPTY bin, ordered by bin:
       (bin, score_lo, n, pos, rate_micro, iso_micro)
@@ -70,8 +75,6 @@ def reliability_isotonic(scored: DataFrame, n_bins: int = 8) -> DataFrame:
     same micro units. score_lo is the bin's inclusive lower score
     edge, for applying the table as a calibrator downstream.
     """
-    if n_bins < 1:
-        raise ValueError(f"reliability_isotonic: n_bins={n_bins} < 1")
     base = scored.select(
         F.col("score_bits").cast("long").alias("_s"),
         F.col("label").cast("long").alias("_y"),
@@ -82,7 +85,7 @@ def reliability_isotonic(scored: DataFrame, n_bins: int = 8) -> DataFrame:
     bins = (
         base.crossJoin(F.broadcast(span))
         .select(
-            F.expr(f"((_s - _mn) * {n_bins}) div (_mx - _mn + 1)")
+            F.expr(f"((_s - _mn) * {CALIBRATION_BINS}) div (_mx - _mn + 1)")
             .cast("long")
             .alias("bin"),
             "_y",
@@ -95,7 +98,8 @@ def reliability_isotonic(scored: DataFrame, n_bins: int = 8) -> DataFrame:
             "bin",
             # inclusive lower edge: smallest s with that bin index
             F.expr(
-                f"_mn + (bin * (_mx - _mn + 1) + {n_bins} - 1) div {n_bins}"
+                f"_mn + (bin * (_mx - _mn + 1) + {CALIBRATION_BINS} - 1)"
+                f" div {CALIBRATION_BINS}"
             )
             .cast("long")
             .alias("score_lo"),
@@ -103,7 +107,7 @@ def reliability_isotonic(scored: DataFrame, n_bins: int = 8) -> DataFrame:
             "pos",
         )
     )
-    # bin table is <= n_bins rows from here on — bounded window
+    # bin table is <= CALIBRATION_BINS rows from here on — bounded window
     w = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)
     cum = bins.select(
         "bin",

@@ -14,7 +14,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .dedup import tokens_col
+from .dedup import SHINGLE_K, tokens_col
 
 
 def _n_tokens(text_col: str) -> Column:
@@ -87,17 +87,19 @@ def stratified_downsample(
     )
 
 
+# the share of a doc's shingles found in the benchmark that flags it
+# in overlap_decontaminate
+OVERLAP_THRESHOLD = 0.5
+
+
 def overlap_decontaminate(
-    docs: DataFrame,
-    benchmark: DataFrame,
-    k: int = 5,
-    threshold: float = 0.5,
+    docs: DataFrame, benchmark: DataFrame
 ) -> DataFrame:
     """Overlap-RATIO decontamination: flag a document when >=
-    `threshold` of its distinct k-token shingles appear anywhere in
-    the benchmark set — the stricter n-gram-overlap rule modern eval
-    decontamination uses, vs `decontaminate`'s exact-substring
-    check.
+    OVERLAP_THRESHOLD of its distinct SHINGLE_K-token shingles appear
+    anywhere in the benchmark set — the stricter n-gram-overlap rule
+    modern eval decontamination uses, vs `decontaminate`'s
+    exact-substring check.
 
     Scale shape: the benchmark shingle set is DISTINCT'd (small —
     eval suites are MBs, corpora are TBs), marked, and BROADCAST
@@ -108,15 +110,16 @@ def overlap_decontaminate(
     broadcast, or rejoined.
 
     Output: (doc_id, n_shingles, n_overlap, overlap_frac,
-    contaminated). Docs with < k tokens have no shingles and are
-    never flagged.
+    contaminated). Docs with < SHINGLE_K tokens have no shingles and
+    are never flagged.
     """
     from .dedup import shingles_col, tokens_col
 
     sh = lambda df: (  # noqa: E731
         df.select("doc_id", tokens_col(F.col("text")).alias("_lt"))
         .select(
-            "doc_id", shingles_col(F.col("_lt"), k).alias("shingles")
+            "doc_id",
+            shingles_col(F.col("_lt")).alias("shingles"),
         )
         .filter(F.size("shingles") > 0)
     )
@@ -146,14 +149,13 @@ def overlap_decontaminate(
         "n_shingles",
         "n_overlap",
         frac.alias("overlap_frac"),
-        (frac >= threshold).alias("contaminated"),
+        (frac >= OVERLAP_THRESHOLD).alias("contaminated"),
     )
 
 
 def pack_sequences(
     docs: DataFrame,
     capacity: int = 256,
-    group_col: str = "source",
     text_col: str = "text",
 ) -> DataFrame:
     """Next-fit sequence packing: assign documents to fixed-capacity
@@ -176,12 +178,12 @@ def pack_sequences(
     n_tokens > capacity: oversized docs get a bin of their own and
     are truncated downstream, not dropped here).
 
-    Output: (group_col, doc_id, n_tokens, bin_idx, offset_in_bin).
+    Output: (source, doc_id, n_tokens, bin_idx, offset_in_bin).
     """
     import pandas as pd
 
     base = docs.select(
-        group_col,
+        "source",
         "doc_id",
         F.size(F.split(F.lower(F.col(text_col)), " "))
         .cast("long")
@@ -203,20 +205,22 @@ def pack_sequences(
         pdf["offset_in_bin"] = pd.Series(offs, dtype="int64")
         return pdf
 
-    # derive the group column's real type: callers pass non-string
-    # keys too (e.g. a bigint stratum from stratified_downsample)
-    group_type = docs.schema[group_col].dataType.simpleString()
     schema = (
-        f"{group_col} {group_type}, doc_id long, n_tokens long, "
-        "bin_idx long, offset_in_bin long"
+        "source string, doc_id long, n_tokens long, bin_idx long, "
+        "offset_in_bin long"
     )
-    return base.groupBy(group_col).applyInPandas(_pack, schema=schema)
+    return base.groupBy("source").applyInPandas(_pack, schema=schema)
 
 
-def top_ngrams(docs: DataFrame, n: int = 2, k: int = 20) -> DataFrame:
-    """Corpus-wide top-k n-grams with document frequency — the
-    statistic behind stop-shingle cuts, contamination screens and
-    boilerplate detection.
+# top_ngrams' n-gram length and how many it reports
+TOP_NGRAM_N = 2
+TOP_NGRAM_K = 20
+
+
+def top_ngrams(docs: DataFrame) -> DataFrame:
+    """Corpus-wide top-k n-grams (n = TOP_NGRAM_N, k = TOP_NGRAM_K)
+    with document frequency — the statistic behind stop-shingle cuts,
+    contamination screens and boilerplate detection.
 
     Shape: per-row n-gram array (zip of shifted token slices, no
     Python), explode, ONE partial-aggregated shuffle on the n-gram
@@ -235,8 +239,8 @@ def top_ngrams(docs: DataFrame, n: int = 2, k: int = 20) -> DataFrame:
     toks = F.split(F.lower(F.col("text")), " ")
     # docs with < n tokens yield no n-grams; clamp the slice length
     # at 0 (a negative length throws under ANSI)
-    take = F.greatest(F.size(toks) - (n - 1), F.lit(0))
-    arrs = [F.slice(toks, i + 1, take) for i in range(n)]
+    take = F.greatest(F.size(toks) - (TOP_NGRAM_N - 1), F.lit(0))
+    arrs = [F.slice(toks, i + 1, take) for i in range(TOP_NGRAM_N)]
     grams = arrs[0]
     for a in arrs[1:]:
         grams = F.zip_with(
@@ -248,22 +252,23 @@ def top_ngrams(docs: DataFrame, n: int = 2, k: int = 20) -> DataFrame:
         F.countDistinct("doc_id").alias("doc_freq"),
     )
     order = [F.desc("occurrences"), F.asc("ngram")]
-    topk = counts.orderBy(*order).limit(k)
+    topk = counts.orderBy(*order).limit(TOP_NGRAM_K)
     return topk.withColumn(
         "rank", F.row_number().over(Window.orderBy(*order))
     )
 
 
-def chunk_documents(
-    docs: DataFrame,
-    chunk_tokens: int = 64,
-    overlap: int = 16,
-) -> DataFrame:
+# chunk_documents' window and the tokens consecutive windows share
+CHUNK_TOKENS = 64
+CHUNK_OVERLAP = 16
+
+
+def chunk_documents(docs: DataFrame) -> DataFrame:
     """Split documents into fixed-token-window chunks with overlap —
     the standard pre-embedding step for retrieval indexes.
 
-    Stride = chunk_tokens - overlap; chunk i covers tokens
-    [i*stride, i*stride + chunk_tokens). Every token is covered, the
+    Stride = CHUNK_TOKENS - CHUNK_OVERLAP; chunk i covers tokens
+    [i*stride, i*stride + CHUNK_TOKENS). Every token is covered, the
     last chunk may be short, and a doc shorter than one chunk yields
     exactly one chunk. Per-row sequence + explode — the only data
     growth is the intended ~1/(1-overlap/chunk) duplication factor,
@@ -273,18 +278,14 @@ def chunk_documents(
     chunk_hash) — the hash stands in for shipping chunk text to a
     downstream embedder.
     """
-    if not 0 <= overlap < chunk_tokens:
-        raise ValueError(
-            f"overlap={overlap} must satisfy 0 <= overlap < "
-            f"chunk_tokens={chunk_tokens}"
-        )
-    stride = chunk_tokens - overlap
+    stride = CHUNK_TOKENS - CHUNK_OVERLAP
     toks = F.split(F.lower(F.col("text")), " ")
     n = F.size(toks)
     # starts: 0, stride, 2*stride, ... while start < n AND the chunk
     # adds new tokens (start + overlap < n handles the final window)
     n_chunks = F.greatest(
-        F.ceil((n - F.lit(overlap)) / F.lit(stride)).cast("int"), F.lit(1)
+        F.ceil((n - F.lit(CHUNK_OVERLAP)) / F.lit(stride)).cast("int"),
+        F.lit(1),
     )
     starts = F.transform(
         F.sequence(F.lit(0), n_chunks - 1), lambda i: i * stride
@@ -294,9 +295,7 @@ def chunk_documents(
         toks.alias("_toks"),
         F.posexplode(starts).alias("chunk_idx", "start_tok"),
     )
-    piece = F.slice(
-        F.col("_toks"), F.col("start_tok") + 1, chunk_tokens
-    )
+    piece = F.slice(F.col("_toks"), F.col("start_tok") + 1, CHUNK_TOKENS)
     return exploded.select(
         "doc_id",
         "chunk_idx",
@@ -331,7 +330,6 @@ def token_length_histogram(docs: DataFrame) -> DataFrame:
 
 def cap_per_group(
     docs: DataFrame,
-    group_col: str = "source",
     cap: int = 100,
 ) -> DataFrame:
     """Per-group document cap — the per-domain cap web curation
@@ -350,7 +348,7 @@ def cap_per_group(
     if cap < 1:
         raise ValueError("cap_per_group: cap must be >= 1")
     rank_key = F.md5(F.col("doc_id").cast("string").cast("binary"))
-    w = Window.partitionBy(group_col).orderBy(rank_key, "doc_id")
+    w = Window.partitionBy("source").orderBy(rank_key, "doc_id")
     return (
         docs.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= cap)
@@ -580,7 +578,7 @@ def token_budget_sample(
     )
 
 
-def length_quantiles(docs: DataFrame, group_col: str = "source") -> DataFrame:
+def length_quantiles(docs: DataFrame) -> DataFrame:
     """Per-group token-length p50/p90/p99 by the NEAREST-RANK rule
     (value at rank ceil(q*n) of the sorted lengths) — integer
     arithmetic end-to-end, so unlike interpolating percentiles the
@@ -595,9 +593,9 @@ def length_quantiles(docs: DataFrame, group_col: str = "source") -> DataFrame:
     exchange (the aggregate reuses the window's partitioning).
     """
     n_tok = _n_tokens("text")
-    w = Window.partitionBy(group_col).orderBy("_len", "doc_id")
+    w = Window.partitionBy("source").orderBy("_len", "doc_id")
     ranked = docs.select(
-        group_col, "doc_id", n_tok.alias("_len")
+        "source", "doc_id", n_tok.alias("_len")
     ).withColumn("_rn", F.row_number().over(w))
 
     def _at(q_num: int, q_den: int, name: str) -> Column:
@@ -608,9 +606,9 @@ def length_quantiles(docs: DataFrame, group_col: str = "source") -> DataFrame:
         return F.max(F.when(F.col("_rn") == r, F.col("_len"))).alias(name)
 
     counted = ranked.withColumn(
-        "_n", F.count(F.lit(1)).over(Window.partitionBy(group_col))
+        "_n", F.count(F.lit(1)).over(Window.partitionBy("source"))
     )
-    return counted.groupBy(group_col).agg(
+    return counted.groupBy("source").agg(
         _at(1, 2, "p50_tokens"),
         _at(9, 10, "p90_tokens"),
         _at(99, 100, "p99_tokens"),
@@ -683,17 +681,21 @@ def priority_sample(docs: DataFrame, k: int) -> DataFrame:
     )
 
 
-def perplexity_buckets(docs: DataFrame, n_buckets: int = 3) -> DataFrame:
+# equal-frequency buckets perplexity_buckets splits each source into
+PPL_BUCKETS = 3
+
+
+def perplexity_buckets(docs: DataFrame) -> DataFrame:
     """CCNet-style perplexity bucketing (Wenzek et al. 2020): rank
     every document by its unigram-LM surprisal WITHIN its group and
-    split the ranking into n_buckets equal-frequency buckets —
+    split the ranking into PPL_BUCKETS equal-frequency buckets —
     bucket 0 ("head") is the most fluent third, the slice CCNet
     keeps outright; the tail is reviewed or dropped. Runs on the
     corpus's own LM (textstats.unigram_logprob), so no external
     model and no RNG.
 
     Bucket rule, integer-exact in both engines:
-    bucket = ((rank - 1) * n_buckets) div n with rank ordered by
+    bucket = ((rank - 1) * PPL_BUCKETS) div n with rank ordered by
     (bits_per_token, doc_id) — a deterministic ntile that cannot
     drift on ties the way engine-native NTILE edge rules can.
 
@@ -702,8 +704,6 @@ def perplexity_buckets(docs: DataFrame, n_buckets: int = 3) -> DataFrame:
     recover the group column, then ONE group-keyed exchange feeding
     both the rank and count windows. Nothing collected.
     """
-    if n_buckets < 1:
-        raise ValueError("perplexity_buckets: n_buckets >= 1 required")
     from .textstats import unigram_logprob
 
     scored = unigram_logprob(docs).join(
@@ -723,20 +723,19 @@ def perplexity_buckets(docs: DataFrame, n_buckets: int = 3) -> DataFrame:
         "doc_id",
         "source",
         "bits_per_token",
-        F.expr(f"((_rn - 1) * {n_buckets}) div _n").alias("ppl_bucket"),
+        F.expr(f"((_rn - 1) * {PPL_BUCKETS}) div _n").alias("ppl_bucket"),
     )
 
 
 # Bloom filter geometry: BLOOM_M_BITS bits, BLOOM_K_HASHES salted md5
-# hashes per BLOOM_SHINGLE_K-token shingle
+# hashes per SHINGLE_K-token shingle
 BLOOM_M_BITS = 4096
 BLOOM_K_HASHES = 4
-BLOOM_SHINGLE_K = 5
 
 
 def bloom_bits(benchmark_snippets: list[str]) -> list[int]:
     """The Bloom filter BUILD: the sorted set-bit positions for a
-    benchmark suite's BLOOM_SHINGLE_K-token shingles under
+    benchmark suite's SHINGLE_K-token shingles under
     BLOOM_K_HASHES salted md5 hashes. One definition shared by
     bloom_decontaminate and its DuckDB oracle twin so the filter
     cannot drift between the two membership checkers. Python md5
@@ -752,8 +751,8 @@ def bloom_bits(benchmark_snippets: list[str]) -> list[int]:
     bench_shingles: set[str] = set()
     for snip in benchmark_snippets:
         toks = snip.lower().split(" ")
-        for i in range(len(toks) - BLOOM_SHINGLE_K + 1):
-            bench_shingles.add(" ".join(toks[i : i + BLOOM_SHINGLE_K]))
+        for i in range(len(toks) - SHINGLE_K + 1):
+            bench_shingles.add(" ".join(toks[i : i + SHINGLE_K]))
     return sorted(
         {
             _py_h32(f"{i}:{s}") % BLOOM_M_BITS
@@ -768,7 +767,7 @@ def bloom_decontaminate(
     benchmark_snippets: list[str],
 ) -> DataFrame:
     """Benchmark decontamination through a BLOOM FILTER over
-    k-token shingles — the sketch that replaces `decontaminate`'s
+    SHINGLE_K-token shingles — the sketch that replaces `decontaminate`'s
     literal substring chain when the benchmark suite is too large to
     inline (millions of eval n-grams): the filter is m = BLOOM_M_BITS
     bits regardless of suite size, membership is O(BLOOM_K_HASHES)
@@ -783,7 +782,7 @@ def bloom_decontaminate(
     Both engines share h32/md5 and the whitespace shingling, so flags
     are engine-exact INCLUDING false positives; `n_hit_shingles`
     rides along to size the blast radius. Snippets shorter than
-    BLOOM_SHINGLE_K tokens contribute no shingles (use
+    SHINGLE_K tokens contribute no shingles (use
     `decontaminate` for those).
 
     At 100 TB the bit set leaves the expression literal and becomes
@@ -813,7 +812,7 @@ def bloom_decontaminate(
     shingled = docs.select(
         "doc_id", tokens_col(F.col("text")).alias("_lt")
     ).select(
-        "doc_id", shingles_col(F.col("_lt"), BLOOM_SHINGLE_K).alias("_sh")
+        "doc_id", shingles_col(F.col("_lt")).alias("_sh")
     )
     counted = shingled.select(
         "doc_id",
@@ -1025,7 +1024,8 @@ def leakage_safe_split(docs: DataFrame) -> DataFrame:
     appendix-C recipe: carve the evaluation set out at the GROUP
     level (hash of `source`, so a domain's near-identical pages
     can never straddle the boundary), then scrub the TRAIN side of
-    any document sharing a 5-token shingle with ANY test document.
+    any document sharing a SHINGLE_K-token shingle with ANY test
+    document.
     A naive per-doc random split fails both ways: same-source
     near-dups land on both sides, and verbatim n-gram overlap leaks
     eval text into training.
@@ -1297,10 +1297,13 @@ def dsir_sample(
     )
 
 
+# decontaminate_spans' shingle length, in tokens
+SPAN_SHINGLE_K = 3
+
+
 def decontaminate_spans(
     docs: DataFrame,
     benchmark_snippets: list[str],
-    k: int = 5,
     max_literal_keys: int = 50_000,
 ) -> DataFrame:
     """Span-level decontamination EXCISION: instead of dropping every
@@ -1311,10 +1314,11 @@ def decontaminate_spans(
     of Lee et al. 2022's substring excision, aimed at a TEST set
     rather than at corpus-internal duplicates.
 
-    A position is contaminated iff its k-token shingle (lowercased)
-    appears anywhere in the benchmark suite's own k-token shingles
-    (keyed by xxhash64 over per-token hashes — long arithmetic, no
-    per-position string allocation); overlapping/touching flagged
+    A position is contaminated iff its k-token shingle (k =
+    SPAN_SHINGLE_K, lowercased) appears anywhere in the benchmark
+    suite's own k-token shingles (keyed by xxhash64 over per-token
+    hashes — long arithmetic, no per-position string allocation);
+    overlapping/touching flagged
     positions merge into maximal intervals via the same
     gaps-and-islands window dedup.duplicate_spans uses, and the
     ORIGINAL-case tokens inside merged intervals are removed.
@@ -1341,9 +1345,6 @@ def decontaminate_spans(
     n_tokens_removed, clean_text) — clean docs pass through with 0 /
     0 / original text.
     """
-    if k < 1:
-        raise ValueError("decontaminate_spans: k must be >= 1")
-
     # Span keys are LONG-typed: per-token xxhash64, then xxhash64
     # over each k-slice of the token-hash array. The earlier
     # md5(concat_ws(slice)) key allocated a joined string AND a
@@ -1379,9 +1380,9 @@ def decontaminate_spans(
     hs = F.col("_hs")
     n = F.size(hs)
     spans = F.when(
-        n >= k,
+        n >= SPAN_SHINGLE_K,
         F.transform(
-            F.sequence(F.lit(1), n - (k - 1)),
+            F.sequence(F.lit(1), n - (SPAN_SHINGLE_K - 1)),
             # the k-window is unrolled into k element_at arguments:
             # interpreted Slice with a lambda-var start allocates a
             # boxed window copy at EVERY position — the A/B on this
@@ -1389,7 +1390,7 @@ def decontaminate_spans(
             # docs, local[32]). element_at reads in place; the key
             # is pure long arithmetic with zero per-position allocs.
             lambda i: F.xxhash64(
-                *[F.element_at(hs, i + j) for j in range(k)]
+                *[F.element_at(hs, i + j) for j in range(SPAN_SHINGLE_K)]
             ),
         ),
     ).otherwise(F.array().cast("array<long>"))
@@ -1415,7 +1416,8 @@ def decontaminate_spans(
     probe = keys_df.limit(max_literal_keys + 1).collect()
     if not probe:
         raise ValueError(
-            f"decontaminate_spans: no snippet has >= {k} tokens"
+            "decontaminate_spans: no snippet has >= "
+            f"{SPAN_SHINGLE_K} tokens"
         )
 
     positional = _hashed_toks(docs, "doc_id").select(
@@ -1435,7 +1437,7 @@ def decontaminate_spans(
         .orderBy("pos")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    prev_end = F.max(F.col("pos") + (k - 1)).over(w_prev)
+    prev_end = F.max(F.col("pos") + (SPAN_SHINGLE_K - 1)).over(w_prev)
     islands = hits.select(
         "doc_id",
         "pos",
@@ -1455,7 +1457,7 @@ def decontaminate_spans(
         islands.groupBy("doc_id", "island")
         .agg(
             F.min("pos").alias("s"),
-            (F.max("pos") + (k - 1)).alias("e"),
+            (F.max("pos") + (SPAN_SHINGLE_K - 1)).alias("e"),
         )
         .groupBy("doc_id")
         .agg(
@@ -1508,12 +1510,13 @@ def decontaminate_spans(
     )
 
 
-def fuzzy_decontaminate(
-    docs: DataFrame,
-    benchmark: DataFrame,
-    threshold: float = 0.5,
-    k: int = 5,
-) -> DataFrame:
+# fuzzy_decontaminate's shingle length, in tokens, and the shingle
+# Jaccard that flags a corpus doc
+FUZZY_SHINGLE_K = 5
+FUZZY_THRESHOLD = 0.5
+
+
+def fuzzy_decontaminate(docs: DataFrame, benchmark: DataFrame) -> DataFrame:
     """MinHash-LSH FUZZY decontamination: flag corpus documents that
     are NEAR-duplicates of any benchmark document — the
     Brown et al. 2020 / Touvron et al. 2023 recipe for test-set
@@ -1529,7 +1532,7 @@ def fuzzy_decontaminate(
     minhash_lsh_pairs, so the decontamination tier can never drift
     from the dedup tier. Candidates are exact-verified with true
     shingle Jaccard (LSH-then-verify), so a flag means
-    jaccard >= threshold among banded candidates; band recall is
+    jaccard >= FUZZY_THRESHOLD among banded candidates; band recall is
     probabilistic by construction and the DuckDB oracle twin
     implements the identical rule so the loss is measured, not
     hidden.
@@ -1549,13 +1552,11 @@ def fuzzy_decontaminate(
     """
     from .dedup import _lsh_shingles_and_bands
 
-    if not 0.0 < threshold <= 1.0:
-        raise ValueError("fuzzy_decontaminate: threshold in (0, 1]")
     d = docs.select("doc_id", "text")
     b = benchmark.select(F.col("doc_id").alias("bench_id"), "text")
-    arr_c, bands_c = _lsh_shingles_and_bands(d, k)
+    arr_c, bands_c = _lsh_shingles_and_bands(d, FUZZY_SHINGLE_K)
     arr_b, bands_b = _lsh_shingles_and_bands(
-        b.withColumnRenamed("bench_id", "doc_id"), k
+        b.withColumnRenamed("bench_id", "doc_id"), FUZZY_SHINGLE_K
     )
     cand = (
         bands_c.join(
@@ -1591,7 +1592,7 @@ def fuzzy_decontaminate(
                 6,
             ).alias("jaccard"),
         )
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= FUZZY_THRESHOLD)
     )
     flags = matched.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_bench_matches"),
@@ -1776,11 +1777,12 @@ def softdedup_weights(
     )
 
 
+# most epochs epoch_plan repeats any source
+EPOCH_CAP = 4.0
+
+
 def epoch_plan(
-    docs: DataFrame,
-    target_tokens: float,
-    weights: dict[str, float],
-    max_epochs: float = 4.0,
+    docs: DataFrame, target_tokens: float, weights: dict[str, float]
 ) -> DataFrame:
     """Multi-epoch mixture plan: given a token budget LARGER than the
     corpus, decide how many epochs of each source to train on — the
@@ -1790,8 +1792,8 @@ def epoch_plan(
 
         desired_s = target_tokens * w_s / sum(w)     (over observed sources;
                                                       w_s = 1 when unlisted)
-        epochs_s  = min(max_epochs, desired_s / available_s)
-        planned_s = min(desired_s, max_epochs * available_s)
+        epochs_s  = min(EPOCH_CAP, desired_s / available_s)
+        planned_s = min(desired_s, EPOCH_CAP * available_s)
 
     Scale shape: ONE partial-aggregated shuffle (per-source token
     sums); everything after runs on the <=|sources| row table — the
@@ -1807,8 +1809,6 @@ def epoch_plan(
     for src, w in weights.items():
         if w <= 0:
             raise ValueError(f"epoch_plan: weight for {src!r} must be > 0")
-    if max_epochs <= 0:
-        raise ValueError("epoch_plan: max_epochs must be > 0")
     wexpr: Column = F.lit(1.0)
     for src, w in weights.items():
         wexpr = F.when(F.col("source") == src, F.lit(float(w))).otherwise(
@@ -1830,13 +1830,11 @@ def epoch_plan(
         "available_tokens",
         "weight",
         F.round(
-            F.least(F.lit(float(max_epochs)), desired / F.col("available_tokens")),
+            F.least(F.lit(EPOCH_CAP), desired / F.col("available_tokens")),
             6,
         ).alias("epochs"),
         F.round(
-            F.least(
-                desired, F.lit(float(max_epochs)) * F.col("available_tokens")
-            ),
+            F.least(desired, F.lit(EPOCH_CAP) * F.col("available_tokens")),
             6,
         ).alias("planned_tokens"),
     )
@@ -1879,12 +1877,16 @@ def quantile_normalize(docs: DataFrame, score_col: str) -> DataFrame:
     )
 
 
-def k_anonymity_audit(docs: DataFrame, k: int = 5) -> DataFrame:
+# smallest quasi-identifier group k_anonymity_audit does not flag
+K_ANONYMITY_K = 5
+
+
+def k_anonymity_audit(docs: DataFrame) -> DataFrame:
     """k-anonymity audit over quasi-identifier combinations
     (Sweeney 2002): group the corpus by the quasi-identifier tuple
     (source, lang, n_chars bucketized by 100 — raw lengths are
     themselves identifying) and flag combinations with
-    fewer than k members. The privacy companion to pii_scrub: PII
+    fewer than K_ANONYMITY_K members. The privacy companion to pii_scrub: PII
     regexes catch direct identifiers, this catches the doc whose
     (source, lang, length-bucket) combination is unique enough to
     re-identify.
@@ -1902,7 +1904,7 @@ def k_anonymity_audit(docs: DataFrame, k: int = 5) -> DataFrame:
         )
         .groupBy("source", "lang", "len_bucket")
         .agg(F.count(F.lit(1)).alias("n_docs"))
-        .withColumn("at_risk", F.col("n_docs") < k)
+        .withColumn("at_risk", F.col("n_docs") < K_ANONYMITY_K)
     )
 
 
@@ -2024,7 +2026,11 @@ def length_batches(docs: DataFrame) -> DataFrame:
     )
 
 
-def pack_sequences_bfd(docs: DataFrame, capacity: int = 256) -> DataFrame:
+# pack_sequences_bfd's bin size, in tokens
+BFD_CAPACITY = 256
+
+
+def pack_sequences_bfd(docs: DataFrame) -> DataFrame:
     """Best-fit-decreasing sequence packing — the density upgrade
     over pack_sequences' next-fit: sort the shard's documents by
     token count DESC (doc_id tie-break), place each into the
@@ -2039,7 +2045,7 @@ def pack_sequences_bfd(docs: DataFrame, capacity: int = 256) -> DataFrame:
     WITHIN a shard by nature, so one group-key shuffle +
     applyInPandas linear pass per shard; bin state is a per-group
     list bounded by bins-per-shard. Oversized docs (n_tokens >
-    capacity) open their own bin, never dropped.
+    BFD_CAPACITY) open their own bin, never dropped.
 
     Output: (source, doc_id, n_tokens, bin_idx, offset_in_bin);
     bin_idx numbers bins in OPEN order, offset_in_bin is the fill
@@ -2065,7 +2071,7 @@ def pack_sequences_bfd(docs: DataFrame, capacity: int = 256) -> DataFrame:
         for nt in pdf["n_tokens"]:
             best_i, best_used = None, -1
             for i, used in enumerate(bins):
-                if used + nt <= capacity and used > best_used:
+                if used + nt <= BFD_CAPACITY and used > best_used:
                     best_i, best_used = i, used
             if best_i is None:
                 out_bin.append(len(bins))

@@ -113,13 +113,14 @@ def tokens_col(text: Column) -> Column:
     return F.split(F.lower(text), " ")
 
 
-def shingles_col(toks: Column, k: int = 5) -> Column:
-    """Distinct k-token shingles; [] when the doc has < k tokens.
+def shingles_col(toks: Column) -> Column:
+    """Distinct SHINGLE_K-token shingles; [] when the doc has fewer
+    tokens.
 
     Catalyst reference implementation, kept as the pure-JVM twin the
     parity test checks the Arrow path against. The per-shingle slice
-    is UNROLLED into k element_at arguments: inside an interpreted
-    HOF lambda, Slice with a non-literal start allocates a boxed
+    is UNROLLED into SHINGLE_K element_at arguments: inside an
+    interpreted HOF lambda, Slice with a non-literal start allocates a boxed
     copy of the window at every position, and the A/B on the
     (identical-shape) decontaminate_spans flag scan measured 12.7x
     (16.0 s -> 1.26 s at 650k docs, local[32]) for exactly this
@@ -127,12 +128,12 @@ def shingles_col(toks: Column, k: int = 5) -> Column:
     remaining allocation is the joined shingle string itself.
     """
     sh = F.transform(
-        F.sequence(F.lit(1), F.size(toks) - (k - 1)),
+        F.sequence(F.lit(1), F.size(toks) - (SHINGLE_K - 1)),
         lambda i: F.concat_ws(
-            " ", *[F.element_at(toks, i + j) for j in range(k)]
+            " ", *[F.element_at(toks, i + j) for j in range(SHINGLE_K)]
         ),
     )
-    return F.when(F.size(toks) >= k, F.array_distinct(sh)).otherwise(
+    return F.when(F.size(toks) >= SHINGLE_K, F.array_distinct(sh)).otherwise(
         F.array().cast("array<string>")
     )
 
@@ -199,14 +200,19 @@ MINHASH_PARAMS = [
 N_BANDS = 4
 ROWS_PER_BAND = 4
 # shingle size of the LSH family (Jaccard, MinHash, incremental
-# near-dup ingest); index bands only verify against batches shingled
-# with the same k
+# near-dup ingest; index bands only verify against batches shingled
+# with the same k) and of shingles_col's users (overlap and Bloom
+# decontamination, the leakage split)
 SHINGLE_K = 5
 # mega-bucket guard of the banded candidate join (see
 # minhash_lsh_pairs); the DuckDB twins use the same cap
 LSH_BUCKET_CAP = 64
 # index ids offered per band bucket by neardup_ids_against_index
 CANDIDATE_CAP = 64
+# shingle Jaccard at which the Jaccard/MinHash pair operators, the
+# dedup edge list and the incremental near-dup gate call a pair a
+# near-duplicate
+JACCARD_THRESHOLD = 0.6
 
 
 # ---- operators --------------------------------------------------------
@@ -288,9 +294,7 @@ def incremental_dedup(
 SHINGLE_DF_CUT = 128
 
 
-def _jaccard_verify(
-    cand: DataFrame, arr: DataFrame, threshold: float
-) -> DataFrame:
+def _jaccard_verify(cand: DataFrame, arr: DataFrame) -> DataFrame:
     """Exact-verify candidate (doc_a, doc_b) pairs against the
     distinct-shingle arrays `arr` (doc_id, shingles): join each
     side's ARRAY onto the pair and take array_intersect — cost is
@@ -321,12 +325,12 @@ def _jaccard_verify(
                 6,
             ),
         )
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
         .select("doc_a", "doc_b", "jaccard")
     )
 
 
-def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.6) -> DataFrame:
+def ngram_jaccard_pairs(docs: DataFrame) -> DataFrame:
     """Near-dup pairs by Jaccard over distinct SHINGLE_K-token shingles.
 
     Two-phase shape that survives natural text at 100 TB:
@@ -343,7 +347,8 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.6) -> DataFrame:
          cut only gates which pairs get looked at).
 
     Recall impact: a pair is missed only when EVERY shingle it
-    shares has df > SHINGLE_DF_CUT; near-duplicates at jaccard >= 0.6
+    shares has df > SHINGLE_DF_CUT; near-duplicates at jaccard >=
+    JACCARD_THRESHOLD
     share most of their shingles, which are overwhelmingly rare, so
     recall loss is negligible (and zero on the oracle-checked corpus —
     the DuckDB twin implements the identical rule).
@@ -367,7 +372,7 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.6) -> DataFrame:
         )
         .distinct()
     )
-    return _jaccard_verify(cand, arr, threshold)
+    return _jaccard_verify(cand, arr)
 
 
 def minhash_signatures(arr: DataFrame) -> DataFrame:
@@ -522,16 +527,13 @@ def minhash_estimate_pairs(
     )
 
 
-def minhash_lsh_pairs(
-    docs: DataFrame,
-    spark: SparkSession,
-    threshold: float = 0.6,
-) -> DataFrame:
+def minhash_lsh_pairs(docs: DataFrame, spark: SparkSession) -> DataFrame:
     """MinHash-LSH candidate pairs, verified by true Jaccard.
 
     Banding: 4 bands x 4 rows; same md5(band values) in any band ->
     candidate. Candidates are then exact-verified (the standard
-    LSH-then-verify contract), so output == jaccard >= threshold
+    LSH-then-verify contract), so output == jaccard >=
+    JACCARD_THRESHOLD
     among banded candidates.
 
     LSH_BUCKET_CAP is the MEGA-BUCKET guard (same deterministic rule
@@ -553,7 +555,7 @@ def minhash_lsh_pairs(
     # string arrays (see shingled_docs)
     arr, bands = _lsh_shingles_and_bands(docs, SHINGLE_K)
     cand = _banded_candidate_pairs(bands, LSH_BUCKET_CAP)
-    return _jaccard_verify(cand, arr, threshold)
+    return _jaccard_verify(cand, arr)
 
 
 def _lsh_shingles_and_bands(
@@ -598,15 +600,13 @@ def _bands_from_sigs(sigs: DataFrame) -> DataFrame:
 
 
 def incremental_minhash_dedup(
-    batch: DataFrame,
-    index_docs: DataFrame,
-    threshold: float = 0.6,
-    candidate_cap: int = CANDIDATE_CAP,
+    batch: DataFrame, index_docs: DataFrame
 ) -> DataFrame:
     """NEAR-duplicate analog of incremental_dedup: a new batch is
     deduplicated against the ALREADY-INGESTED corpus — a batch doc
     is dropped iff some index doc shares an LSH band bucket with it
-    AND true shingle-Jaccard >= threshold. This is the ingestion-time
+    AND true shingle-Jaccard >= JACCARD_THRESHOLD. This is the
+    ingestion-time
     near-dup gate a training pipeline runs on every arriving shard
     (exact-hash incremental_dedup misses one-word edits; this
     catches them at the same per-batch cost shape).
@@ -620,9 +620,9 @@ def incremental_minhash_dedup(
     co-partitioned on the band key, and a verify join that touches
     only candidate index docs' shingle rows.
 
-    `candidate_cap` bounds the mega-bucket blow-up (the boilerplate
+    CANDIDATE_CAP bounds the mega-bucket blow-up (the boilerplate
     bucket where thousands of index docs share a band key): per
-    (band, key) bucket only the `cap` smallest index doc_ids are
+    (band, key) bucket only the CANDIDATE_CAP smallest index doc_ids are
     offered as candidates — existence is all the anti-join needs, so
     losing the 65th near-identical candidate only matters if the
     first 64 all fail verification (band-collided non-dups), a
@@ -630,15 +630,9 @@ def incremental_minhash_dedup(
 
     Output: the surviving batch rows (all batch columns).
     """
-    if candidate_cap < 1:
-        raise ValueError(
-            "incremental_minhash_dedup: candidate_cap must be >= 1"
-        )
     arr_b, bands_b = _lsh_shingles_and_bands(batch, SHINGLE_K)
     arr_i, bands_i = _lsh_shingles_and_bands(index_docs, SHINGLE_K)
-    dup_ids = neardup_ids_against_index(
-        arr_b, bands_b, arr_i, bands_i, threshold, candidate_cap
-    )
+    dup_ids = neardup_ids_against_index(arr_b, bands_b, arr_i, bands_i)
     return batch.join(dup_ids, "doc_id", "left_anti")
 
 
@@ -647,8 +641,6 @@ def neardup_ids_against_index(
     bands_b: DataFrame,
     arr_i: DataFrame,
     bands_i: DataFrame,
-    threshold: float,
-    candidate_cap: int,
 ) -> DataFrame:
     """Core of the incremental near-dup gate, taking the index side
     as PRECOMPUTED artifacts — (doc_id, shingles) and (doc_id, band,
@@ -659,12 +651,12 @@ def neardup_ids_against_index(
     with a verified near-dup in the index.
 
     Cap rule is shared with incremental_minhash_dedup: per (band,
-    key) bucket only the candidate_cap smallest index ids are
+    key) bucket only the CANDIDATE_CAP smallest index ids are
     offered; the cap is applied INSIDE the bucket aggregate so pair
     fan-out is bounded at |batch-in-bucket| * cap."""
     idx_buckets = bands_i.groupBy("band", "key").agg(
         F.slice(
-            F.sort_array(F.collect_list("doc_id")), 1, candidate_cap
+            F.sort_array(F.collect_list("doc_id")), 1, CANDIDATE_CAP
         ).alias("idx")
     )
     cand = (
@@ -695,7 +687,7 @@ def neardup_ids_against_index(
                 ),
                 6,
             )
-            >= threshold
+            >= JACCARD_THRESHOLD
         )
         .select("doc_id")
         .distinct()
@@ -845,29 +837,19 @@ def duplicate_components(pairs: DataFrame, nodes: DataFrame) -> DataFrame:
     )
 
 
-def dedup_pair_edges(
-    corpus: DataFrame, spark: SparkSession, threshold: float = 0.6
-) -> DataFrame:
+def dedup_pair_edges(corpus: DataFrame, spark: SparkSession) -> DataFrame:
     """The canonical dedup edge list: exact-duplicate star edges
     unioned with verified minhash-LSH near-dup pairs. Shared by the
     components gate queries, the bench, and the scaling worker so
     the edge definition cannot drift between them."""
     return (
         exact_star_edges(corpus)
-        .unionAll(
-            minhash_lsh_pairs(corpus, spark, threshold=threshold).select(
-                "doc_a", "doc_b"
-            )
-        )
+        .unionAll(minhash_lsh_pairs(corpus, spark).select("doc_a", "doc_b"))
         .distinct()
     )
 
 
-def dedup_keep_best(
-    corpus: DataFrame,
-    spark: SparkSession,
-    threshold: float = 0.6,
-) -> DataFrame:
+def dedup_keep_best(corpus: DataFrame, spark: SparkSession) -> DataFrame:
     """Duplicate-cluster resolution keeping the BEST document per
     component — highest heuristic quality score, doc_id tie-break —
     instead of duplicate_components' lowest-id rule. This is the
@@ -886,7 +868,7 @@ def dedup_keep_best(
     """
     from .textstats import quality_scores
 
-    pairs = dedup_pair_edges(corpus, spark, threshold=threshold)
+    pairs = dedup_pair_edges(corpus, spark)
     comps = duplicate_components(pairs, corpus.select("doc_id"))
     q = quality_scores(corpus).select("doc_id", "quality")
     w = Window.partitionBy("component").orderBy(
@@ -1012,10 +994,14 @@ def duplicate_components_star(pairs: DataFrame, nodes: DataFrame) -> DataFrame:
     )
 
 
-def duplicate_spans(docs: DataFrame, k: int = 20) -> DataFrame:
+# span length, in tokens, that duplicate_spans reports repeats of
+DUP_SPAN_K = 20
+
+
+def duplicate_spans(docs: DataFrame) -> DataFrame:
     """Substring-level exact dedup report (Lee et al., "Deduplicating
     Training Data Makes Language Models Better", 2022): find every
-    k-token span occurring MORE THAN ONCE anywhere in the corpus and
+    DUP_SPAN_K-token span occurring MORE THAN ONCE anywhere in the corpus and
     merge each document's flagged positions into maximal intervals —
     the per-doc excision plan span-level dedup applies before
     training. All occurrences are flagged; keep-one policies are the
@@ -1047,16 +1033,17 @@ def duplicate_spans(docs: DataFrame, k: int = 20) -> DataFrame:
     # explicit short-doc guard: sequence(1, 0) DESCENDS in Spark
     # (it would yield [1, 0], then slice(_, 0, _) throws)
     spans = F.when(
-        n >= k,
+        n >= DUP_SPAN_K,
         F.transform(
-            F.sequence(F.lit(1), n - (k - 1)),
+            F.sequence(F.lit(1), n - (DUP_SPAN_K - 1)),
             # slice unrolled into k element_at args — interpreted
             # Slice with a lambda-var start allocates a boxed window
             # copy per position (12.7x measured; see shingles_col).
             # Same joined string -> same md5 -> same oracle key.
             lambda i: F.md5(
                 F.concat_ws(
-                    " ", *[F.element_at(toks, i + j) for j in range(k)]
+                    " ",
+                    *[F.element_at(toks, i + j) for j in range(DUP_SPAN_K)],
                 ).cast("binary")
             ),
         ),
@@ -1078,7 +1065,7 @@ def duplicate_spans(docs: DataFrame, k: int = 20) -> DataFrame:
         .orderBy("pos")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    prev_end = F.max(F.col("pos") + (k - 1)).over(w)
+    prev_end = F.max(F.col("pos") + (DUP_SPAN_K - 1)).over(w)
     islands = flagged.select(
         "doc_id",
         "pos",
@@ -1100,7 +1087,7 @@ def duplicate_spans(docs: DataFrame, k: int = 20) -> DataFrame:
     )
     merged = islands.groupBy("doc_id", "island").agg(
         F.min("pos").alias("s"),
-        (F.max("pos") + (k - 1)).alias("e"),
+        (F.max("pos") + (DUP_SPAN_K - 1)).alias("e"),
     )
     return merged.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_spans"),
@@ -1151,11 +1138,12 @@ def simhash_fingerprints(docs: DataFrame) -> DataFrame:
     )
 
 
-def simhash_pairs(
-    docs: DataFrame,
-    max_hamming: int = 3,
-    bucket_cap: int | None = None,
-) -> DataFrame:
+# largest fingerprint Hamming distance simhash_pairs reports; the
+# pigeonhole guarantee needs it below SIMHASH_BANDS
+SIMHASH_MAX_HAMMING = 3
+
+
+def simhash_pairs(docs: DataFrame, bucket_cap: int | None = None) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance, found WITHOUT an
     all-pairs comparison.
 
@@ -1165,8 +1153,8 @@ def simhash_pairs(
     candidates are generated by an equi-join on (band, slice value)
     — one shuffle on a small integer key, cost tracks duplicate
     density, never |docs|^2. Candidates are then verified with
-    bit_count(xor) <= max_hamming (exact, no false positives;
-    recall is total for max_hamming <= SIMHASH_BANDS - 1).
+    bit_count(xor) <= SIMHASH_MAX_HAMMING (exact, no false positives;
+    recall is total because SIMHASH_MAX_HAMMING <= SIMHASH_BANDS - 1).
 
     `bucket_cap` (default None = off) applies the same deterministic
     mega-bucket sub-split as minhash_lsh_pairs to each (band, key)
@@ -1177,11 +1165,6 @@ def simhash_pairs(
     fingerprint value concentrates (all-identical boilerplate), where
     the uncapped join cell is quadratic.
     """
-    if max_hamming > SIMHASH_BANDS - 1:
-        raise ValueError(
-            f"pigeonhole guarantee broken: max_hamming={max_hamming} "
-            f"needs more than {SIMHASH_BANDS} bands"
-        )
     band_w = SIMHASH_BITS // SIMHASH_BANDS
     mask = (1 << band_w) - 1
     fps = _register_persist(simhash_fingerprints(docs))
@@ -1232,28 +1215,30 @@ def simhash_pairs(
         # filter BEFORE distinct: hamming is a function of the pair,
         # so the output is identical, but the dedup exchange now only
         # carries surviving pairs instead of every band collision
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
         .distinct()
     )
 
 
-def cdc_chunk_stats(
-    docs: DataFrame,
-    window: int = 8,
-    divisor: int = 16,
-) -> DataFrame:
+# content-defined chunking: the hashed window, in chars, and the
+# modulus whose zero residue cuts a chunk (expected chunk length)
+CDC_WINDOW = 8
+CDC_DIVISOR = 16
+
+
+def cdc_chunk_stats(docs: DataFrame) -> DataFrame:
     """Content-defined-chunking dedup: how much of each document is
     byte-identical to SOME other document, robust to insertions.
 
     Fixed-offset chunking (chunk_documents) breaks on a one-char
     insertion — every downstream chunk shifts and nothing matches.
     CDC cuts where the content itself says to: a boundary lands
-    after position i whenever the hash of the `window`-char slice
-    ending at i is ≡ 0 (mod `divisor`), so an edit only perturbs
+    after position i whenever the hash of the CDC_WINDOW-char slice
+    ending at i is ≡ 0 (mod CDC_DIVISOR), so an edit only perturbs
     the chunks it touches and identical regions re-align on the
     next content-chosen cut (the dedup trick behind LBFS/restic/
     casync storage and near-identical-page dedup in crawl corpora).
-    Expected chunk length ≈ `divisor` chars.
+    Expected chunk length ≈ CDC_DIVISOR chars.
 
     The boundary predicate here depends ONLY on the w-char window —
     not on previous cuts (no min/max chunk clamp) — which keeps it a
@@ -1273,21 +1258,17 @@ def cdc_chunk_stats(
     Output: (doc_id, n_chunks, shared_chunks, shared_chars) where
     'shared' counts chunks whose content occurs in >1 distinct doc.
     """
-    if window < 2:
-        raise ValueError("cdc_chunk_stats: window must be >= 2")
-    if divisor < 2:
-        raise ValueError("cdc_chunk_stats: divisor must be >= 2")
     text = F.col("text")
     n = F.length(text)
     # boundary AFTER char i (1-based), i in [window, n-1]: the end
     # position n is always a boundary and is appended separately
     cuts = F.when(
-        n - 1 >= F.lit(window),
+        n - 1 >= F.lit(CDC_WINDOW),
         F.filter(
-            F.sequence(F.lit(window), n - 1),
+            F.sequence(F.lit(CDC_WINDOW), n - 1),
             lambda i: F.pmod(
-                h32(text.substr(i - F.lit(window - 1), F.lit(window))),
-                F.lit(divisor),
+                h32(text.substr(i - F.lit(CDC_WINDOW - 1), F.lit(CDC_WINDOW))),
+                F.lit(CDC_DIVISOR),
             )
             == 0,
         ),
@@ -1425,7 +1406,11 @@ def winnow_fingerprints(docs: DataFrame) -> DataFrame:
     )
 
 
-def winnow_pairs(docs: DataFrame, overlap_milli: int = 500) -> DataFrame:
+# containment, in thousandths, at which winnow_pairs reports a pair
+WINNOW_OVERLAP_MILLI = 400
+
+
+def winnow_pairs(docs: DataFrame) -> DataFrame:
     """Near-dup pairs by winnowed-fingerprint overlap — the MOSS
     report: candidate pairs from the fingerprint inverted index
     (df-cut bounded, same quadratic-blow-up guard as
@@ -1489,7 +1474,7 @@ def winnow_pairs(docs: DataFrame, overlap_milli: int = 500) -> DataFrame:
                 "(n_shared * 1000) div least(_na, _nb)"
             ).alias("overlap_milli"),
         )
-        .filter(F.col("overlap_milli") >= overlap_milli)
+        .filter(F.col("overlap_milli") >= WINNOW_OVERLAP_MILLI)
     )
 
 
@@ -1642,12 +1627,15 @@ def dedup_threshold_curve(docs: DataFrame) -> DataFrame:
     return n_pairs.join(n_docs, "cutoff_sixteenths")
 
 
-def count_cosine_pairs(
-    docs: DataFrame,
-    threshold_milli: int = 800,
-    df_cut: int = 128,
-    ngram: int = 1,
-) -> DataFrame:
+# count_cosine_pairs: the cosine, in thousandths, a pair reaches; the
+# document frequency above which a term generates no candidates; and
+# the term, a positional token n-gram of this length
+COSINE_THRESHOLD_MILLI = 800
+COSINE_DF_CUT = 128
+COSINE_NGRAM = 4
+
+
+def count_cosine_pairs(docs: DataFrame) -> DataFrame:
     """Sparse token-count COSINE near-dup pairs — the bag-of-words
     complement of the set-based detectors (`ngram_jaccard_pairs`
     ignores multiplicity, `embedding_near_dup_pairs` needs dense
@@ -1661,6 +1649,7 @@ def count_cosine_pairs(
     SHARED terms of tf_a*tf_b and na2/nb2 the full squared norms,
 
         cos >= t/1000  <=>  1e6 * dot^2 >= t^2 * na2 * nb2
+        (t = COSINE_THRESHOLD_MILLI)
 
     (dot >= 0, so squaring preserves the inequality). The products
     are evaluated in DECIMAL(38,0) — Spark decimal128 == DuckDB
@@ -1670,8 +1659,8 @@ def count_cosine_pairs(
 
     Two-phase scale shape (the ngram_jaccard plan, weighted):
     a persisted (doc, term) tf aggregate feeds (1) the vocabulary-
-    sized df table whose df <= df_cut band gates CANDIDATE
-    generation — per-term pair fan-out is bounded by df_cut^2, the
+    sized df table whose df <= COSINE_DF_CUT band gates CANDIDATE
+    generation — per-term pair fan-out is bounded by COSINE_DF_CUT^2, the
     stop-term guard — and (2) the per-doc squared norms. The dot
     product accumulates in the SAME term-keyed pair join that
     generates candidates (no second lookup of either side's vector:
@@ -1680,12 +1669,12 @@ def count_cosine_pairs(
     head-trim the threshold sees symmetrically). Norms use ALL
     terms: the denominator is the true vector length.
 
-    `ngram` > 1 counts POSITIONAL n-gram occurrences (multiplicity
-    kept — unlike shingles_col's distinct sets) instead of unigrams:
-    the right granularity when the unigram vocabulary is so small
-    that every term's df exceeds any sane cut (tiny closed
-    vocabularies, log templates), and what makes the df_cut a real
-    candidate gate rather than an all-or-nothing switch.
+    Terms are POSITIONAL COSINE_NGRAM-gram occurrences (multiplicity
+    kept — unlike shingles_col's distinct sets), not unigrams: the
+    right granularity when the unigram vocabulary is so small that
+    every term's df exceeds any sane cut (tiny closed vocabularies,
+    log templates), and what makes the df cut a real candidate gate
+    rather than an all-or-nothing switch.
 
     N-gram term KEY (round 5): the 60-bit integer prefix of the
     gram's md5 — conv(substr(md5, 1, 15), 16, 10) — not the 32-char
@@ -1708,52 +1697,40 @@ def count_cosine_pairs(
 
     Output: (doc_a, doc_b, dot, norm_a2, norm_b2) for passing pairs.
     """
-    if not 0 < threshold_milli <= 1000:
-        raise ValueError(
-            "count_cosine_pairs: threshold_milli must be in (0, 1000]"
-        )
-    if ngram < 1:
-        raise ValueError("count_cosine_pairs: ngram must be >= 1")
-    if ngram == 1:
-        terms = docs.select(
-            "doc_id",
-            F.explode(tokens_col(F.col("text"))).alias("term"),
-        )
-    else:
-        toks = F.col("_lt")
-        n = F.size(toks)
-        grams = F.when(
-            n >= ngram,
-            F.transform(
-                F.sequence(F.lit(1), n - (ngram - 1)),
-                # slice unrolled into element_at args (see
-                # shingles_col: interpreted Slice with a lambda-var
-                # start boxes a window copy per position); the key
-                # is the 60-bit md5 prefix as a LONG (docstring:
-                # measured 1.9x over the hex-string key)
-                lambda i: F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat_ws(
-                                " ",
-                                *[
-                                    F.element_at(toks, i + j)
-                                    for j in range(ngram)
-                                ],
-                            ).cast("binary")
-                        ),
-                        1,
-                        15,
+    toks = F.col("_lt")
+    n = F.size(toks)
+    grams = F.when(
+        n >= COSINE_NGRAM,
+        F.transform(
+            F.sequence(F.lit(1), n - (COSINE_NGRAM - 1)),
+            # slice unrolled into element_at args (see
+            # shingles_col: interpreted Slice with a lambda-var
+            # start boxes a window copy per position); the key
+            # is the 60-bit md5 prefix as a LONG (docstring:
+            # measured 1.9x over the hex-string key)
+            lambda i: F.conv(
+                F.substring(
+                    F.md5(
+                        F.concat_ws(
+                            " ",
+                            *[
+                                F.element_at(toks, i + j)
+                                for j in range(COSINE_NGRAM)
+                            ],
+                        ).cast("binary")
                     ),
-                    16,
-                    10,
-                ).cast("long"),
-            ),
-        ).otherwise(F.array().cast("array<long>"))
-        terms = docs.select(
-            "doc_id",
-            tokens_col(F.col("text")).alias("_lt"),
-        ).select("doc_id", F.explode(grams).alias("term"))
+                    1,
+                    15,
+                ),
+                16,
+                10,
+            ).cast("long"),
+        ),
+    ).otherwise(F.array().cast("array<long>"))
+    terms = docs.select(
+        "doc_id",
+        tokens_col(F.col("text")).alias("_lt"),
+    ).select("doc_id", F.explode(grams).alias("term"))
     tf = _register_persist(
         terms.groupBy("doc_id", "term").agg(
             F.count(F.lit(1)).alias("tf")
@@ -1765,7 +1742,7 @@ def count_cosine_pairs(
     rare = (
         tf.groupBy("term")
         .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") <= df_cut)
+        .filter(F.col("df") <= COSINE_DF_CUT)
         .select("term")
     )
     idx = tf.join(rare, "term", "left_semi")
@@ -1793,7 +1770,7 @@ def count_cosine_pairs(
         * F.col("dot").cast(dec)
     )
     rhs = (
-        F.lit(int(threshold_milli) ** 2).cast(dec)
+        F.lit(int(COSINE_THRESHOLD_MILLI) ** 2).cast(dec)
         * F.col("norm_a2").cast(dec)
         * F.col("norm_b2").cast(dec)
     )

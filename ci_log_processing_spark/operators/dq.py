@@ -12,7 +12,7 @@ violation count.
 Scale shape: every check compiles to a conditional aggregate over
 ONE table scan (a single Aggregate node; Catalyst plans the partial
 agg map-side, so the shuffled volume is one row per partition). The
-optional uniqueness check adds a count(DISTINCT key), which Catalyst
+uniqueness check adds a count(DISTINCT key), which Catalyst
 plans via Expand over the same single scan — no extra pass, no join.
 The per-constraint output rows are exploded from the one aggregate
 row, so the result is constraint-count-sized, never data-sized.
@@ -24,18 +24,17 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def dq_audit(
-    df: DataFrame,
-    checks: dict[str, Column],
-    unique_key: str | None = None,
-) -> DataFrame:
+# the key column dq_audit's uniqueness constraint counts
+DQ_UNIQUE_KEY = "doc_id"
+
+
+def dq_audit(df: DataFrame, checks: dict[str, Column]) -> DataFrame:
     """Run named constraint checks in one scan.
 
     `checks` maps constraint name -> boolean Column that is TRUE for
     a VIOLATING row (nulls count as violations — a row that can't
-    prove it passes, fails). `unique_key` adds a
-    `unique:<col>` constraint whose violation count is
-    n_rows - n_distinct.
+    prove it passes, fails). A `unique:<DQ_UNIQUE_KEY>` constraint
+    is always added; its violation count is n_rows - n_distinct.
 
     Returns one row per constraint:
     (check_name, n_violations, n_rows, passed).
@@ -47,10 +46,7 @@ def dq_audit(
                 F.when(F.coalesce(cond, F.lit(True)), 1).otherwise(0)
             ).alias(f"v_{name}")
         )
-    if unique_key is not None:
-        aggs.append(
-            F.count_distinct(F.col(unique_key)).alias("_n_distinct")
-        )
+    aggs.append(F.count_distinct(F.col(DQ_UNIQUE_KEY)).alias("_n_distinct"))
     agg = df.agg(*aggs)
 
     structs = [
@@ -60,15 +56,12 @@ def dq_audit(
         )
         for name in checks
     ]
-    if unique_key is not None:
-        structs.append(
-            F.struct(
-                F.lit(f"unique:{unique_key}").alias("check_name"),
-                (F.col("n_rows") - F.col("_n_distinct")).alias(
-                    "n_violations"
-                ),
-            )
+    structs.append(
+        F.struct(
+            F.lit(f"unique:{DQ_UNIQUE_KEY}").alias("check_name"),
+            (F.col("n_rows") - F.col("_n_distinct")).alias("n_violations"),
         )
+    )
     return (
         agg.select("n_rows", F.explode(F.array(*structs)).alias("c"))
         .select(

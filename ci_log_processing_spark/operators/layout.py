@@ -40,24 +40,28 @@ def zorder_key(x: Column, y: Column, bits: int) -> Column:
     return z
 
 
+# Morton key bits per dimension, the key's top bits that name a file
+# bucket, and the (x_lo, x_hi, y_lo, y_hi) rectangle the audit probes
+ZORDER_BITS = 8
+ZORDER_BUCKET_BITS = 6
+ZORDER_PROBE = (150, 300, 100, 250)
+
+
 def zorder_layout_audit(
     df: DataFrame,
     x_col: str,
     y_col: str,
-    bits: int = 8,
-    bucket_bits: int = 6,
-    probe: tuple[int, int, int, int] | None = None,
 ) -> DataFrame:
     """Assign every row to a file bucket under TWO layouts — `zorder`
-    (top `bucket_bits` bits of the Morton key) and `linear` (top
-    `bucket_bits` bits of the x rank alone, i.e. "sorted by x") —
+    (top ZORDER_BUCKET_BITS bits of the Morton key) and `linear` (top
+    ZORDER_BUCKET_BITS bits of the x rank alone, i.e. "sorted by x") —
     and emit the per-(layout, bucket) min/max audit a file-skipping
     scan planner would consult:
 
-      (layout, bucket, n_rows, min_x, max_x, min_y, max_y
-       [, overlaps_probe])
+      (layout, bucket, n_rows, min_x, max_x, min_y, max_y,
+       overlaps_probe)
 
-    With `probe` = (x_lo, x_hi, y_lo, y_hi), `overlaps_probe` marks
+    With ZORDER_PROBE = (x_lo, x_hi, y_lo, y_hi), `overlaps_probe` marks
     buckets whose bounding box intersects the rectangle — the files
     a predicate `x BETWEEN ... AND y BETWEEN ...` must read. Summing
     n_rows where overlaps_probe over each layout quantifies the
@@ -67,13 +71,11 @@ def zorder_layout_audit(
     driver), broadcast back as literals via crossJoin of a 1-row
     frame; then a zero-shuffle projection computing ranks + Morton
     key in codegen; then one bucket-keyed partial aggregate onto at
-    most 2 * 2^bucket_bits rows. No window, no sort, no sampling —
+    most 2 * 2^ZORDER_BUCKET_BITS rows. No window, no sort, no sampling —
     deterministic at any scale. (A production writer would follow
     with repartitionByRange(zbucket) + sortWithinPartitions(zval);
     the audit is the part with checkable semantics.)
     """
-    if bucket_bits > bits:
-        raise ValueError("zorder_layout_audit: bucket_bits > bits")
     x = F.col(x_col).cast("long")
     y = F.col(y_col).cast("long")
     bounds = df.agg(
@@ -82,7 +84,7 @@ def zorder_layout_audit(
         F.min(y).alias("_mny"),
         F.max(y).alias("_mxy"),
     )
-    top = (1 << bits) - 1
+    top = (1 << ZORDER_BITS) - 1
     withb = df.select(x.alias("_x"), y.alias("_y")).crossJoin(
         F.broadcast(bounds)
     )
@@ -96,11 +98,11 @@ def zorder_layout_audit(
     keyed = withb.select(
         "_x",
         "_y",
-        zorder_key(rx, ry, bits).alias("_z"),
+        zorder_key(rx, ry, ZORDER_BITS).alias("_z"),
         rx.alias("_rx"),
     )
-    zbucket = F.shiftright(F.col("_z"), 2 * bits - bucket_bits)
-    lbucket = F.shiftright(F.col("_rx"), bits - bucket_bits)
+    zbucket = F.shiftright(F.col("_z"), 2 * ZORDER_BITS - ZORDER_BUCKET_BITS)
+    lbucket = F.shiftright(F.col("_rx"), ZORDER_BITS - ZORDER_BUCKET_BITS)
     # ONE scan emits both layout labels (inline explode of a 2-struct
     # array) instead of a union of two scans — at 100 TB the second
     # full pass over the corpus is the cost that matters, and the
@@ -128,13 +130,11 @@ def zorder_layout_audit(
         F.min("_y").alias("min_y"),
         F.max("_y").alias("max_y"),
     )
-    if probe is not None:
-        x_lo, x_hi, y_lo, y_hi = (int(v) for v in probe)
-        out = out.withColumn(
-            "overlaps_probe",
-            (F.col("min_x") <= x_hi)
-            & (F.col("max_x") >= x_lo)
-            & (F.col("min_y") <= y_hi)
-            & (F.col("max_y") >= y_lo),
-        )
-    return out
+    x_lo, x_hi, y_lo, y_hi = ZORDER_PROBE
+    return out.withColumn(
+        "overlaps_probe",
+        (F.col("min_x") <= x_hi)
+        & (F.col("max_x") >= x_lo)
+        & (F.col("min_y") <= y_hi)
+        & (F.col("max_y") >= y_lo),
+    )

@@ -75,11 +75,11 @@ def canonical_key(text_col: Column) -> Column:
     return F.substring(F.trim(t), 1, KEY_LEN)
 
 
-def _delete_variants(key: Column, max_dist: int) -> Column:
-    """All strings reachable by deleting <= max_dist characters,
-    including the key itself — as one per-row array expression.
+def _delete_variants(key: Column) -> Column:
+    """All strings reachable by deleting <= 1 character, including
+    the key itself — as one per-row array expression.
 
-    d=1 is UNROLLED into KEY_LEN static concat(substring, substring)
+    The deletes are UNROLLED into KEY_LEN static concat(substring, substring)
     expressions instead of a transform() lambda: higher-order
     functions run INTERPRETED in Spark (no codegen), and the
     interpreted string slicing was measured at ~65% of the whole
@@ -95,37 +95,16 @@ def _delete_variants(key: Column, max_dist: int) -> Column:
             for i in range(1, KEY_LEN + 1)
         ]
 
-    d1 = F.array_distinct(F.array(key, *deletes1_unrolled(key)))
-    if max_dist == 1:
-        return d1
-    # d=2: deletes of every d<=1 variant via a transform lambda —
-    # the unrolled form would need KEY_LEN^2 static exprs. Fan-out is
-    # O(KEY_LEN^2 / 2) rows per doc and the lambda is interpreted;
-    # opt in only where recall at distance 2 pays the ~12x.
-    def deletes1_lambda(s: Column) -> Column:
-        return F.transform(
-            F.sequence(F.lit(1), F.greatest(F.length(s), F.lit(1))),
-            lambda i: F.concat(
-                F.substring(s, F.lit(1), i - 1),
-                s.substr(i + 1, F.length(s)),
-            ),
-        )
-
-    return F.array_distinct(
-        F.flatten(
-            F.transform(
-                d1, lambda v: F.array_union(F.array(v), deletes1_lambda(v))
-            )
-        )
-    )
+    return F.array_distinct(F.array(key, *deletes1_unrolled(key)))
 
 
-def symspell_pairs(
-    docs: DataFrame,
-    max_dist: int = 1,
-) -> DataFrame:
+# Levenshtein distance within which symspell_pairs links two keys
+SYMSPELL_MAX_DIST = 1
+
+
+def symspell_pairs(docs: DataFrame) -> DataFrame:
     """All doc pairs whose canonical keys are within Levenshtein
-    distance `max_dist`, via delete-neighborhood blocking.
+    distance SYMSPELL_MAX_DIST, via delete-neighborhood blocking.
 
     Output: (doc_a, doc_b, dist) with doc_a < doc_b, dist the exact
     Levenshtein distance between the two canonical keys (0 = keys
@@ -136,24 +115,18 @@ def symspell_pairs(
     Completeness: for classic Levenshtein distance d, any two
     strings within distance d share a common string reachable by
     <= d deletions from each (delete the edited positions), so the
-    variant equi-join has TOTAL recall at the configured max_dist;
-    precision comes from the exact verify. max_dist is capped at 2 —
-    beyond that the neighborhood explodes combinatorially and
-    blocking should switch to the n-gram/LSH family instead.
+    variant equi-join has TOTAL recall at SYMSPELL_MAX_DIST;
+    precision comes from the exact verify. Distance 1 keeps the
+    neighborhood O(key length) per doc — at 2 it grows quadratically
+    and blocking should switch to the n-gram/LSH family instead.
     """
-    if not 1 <= max_dist <= 2:
-        raise ValueError(
-            f"symspell_pairs: max_dist={max_dist} out of range [1, 2]"
-        )
     keys = docs.select(
         "doc_id", canonical_key(F.col("text")).alias("key")
     )
     variants = keys.select(
         "doc_id",
         "key",
-        F.explode(
-            _delete_variants(F.col("key"), max_dist)
-        ).alias("variant"),
+        F.explode(_delete_variants(F.col("key"))).alias("variant"),
     ).select(
         "doc_id",
         "key",
@@ -206,23 +179,25 @@ def symspell_pairs(
             F.col("p.db").alias("doc_b"),
             F.levenshtein(F.col("p.ka"), F.col("p.kb")).alias("dist"),
         )
-        .filter(F.col("dist") <= max_dist)
+        .filter(F.col("dist") <= SYMSPELL_MAX_DIST)
         .distinct()
     )
 
 
-def sorted_neighborhood_pairs(
-    docs: DataFrame,
-    window: int = 4,
-    max_dist: int = 2,
-) -> DataFrame:
+# sorted-neighborhood blocking: successors compared per record, and
+# the Levenshtein distance within which a pair links
+SN_WINDOW = 4
+SN_MAX_DIST = 2
+
+
+def sorted_neighborhood_pairs(docs: DataFrame) -> DataFrame:
     """Sorted-neighborhood blocking (Hernandez & Stolfo 1995) — the
     OTHER classic record-linkage blocking, complementing
     symspell_pairs: sort the corpus by canonical key, compare each
-    record only to its `window` successors in sort order, verify
+    record only to its SN_WINDOW successors in sort order, verify
     with exact levenshtein. Where the delete neighborhood gives
     TOTAL recall at distance <= d for O(key length) index rows per doc,
-    sorted-neighborhood gives O(window) candidates per doc at ANY
+    sorted-neighborhood gives O(SN_WINDOW) candidates per doc at ANY
     distance cutoff — the cheap wide-net pass (typos in the first
     characters sort far apart and are missed; that trade is the
     method, and running both passes is the standard multi-pass SN
@@ -234,17 +209,15 @@ def sorted_neighborhood_pairs(
     (bucket, key, id) order == (key, id) order): one hash exchange
     on ~37^2 buckets + a tiny offset cumsum broadcast back. Bucket
     skew follows key-prefix skew (a boilerplate-heavy corpus
-    concentrates); the verify stays O(window) per doc regardless.
-    Candidate pairs join on rank-block ids (block = idx div window;
+    concentrates); the verify stays O(SN_WINDOW) per doc regardless.
+    Candidate pairs join on rank-block ids (block = idx div SN_WINDOW;
     a-side emits its own and the next block — each qualifying pair
     matches exactly once, no distinct needed).
 
     Output: (doc_a, doc_b, gap, dist) with doc_a < doc_b by id,
-    gap = rank distance (1..window), dist = exact levenshtein
-    <= max_dist.
+    gap = rank distance (1..SN_WINDOW), dist = exact levenshtein
+    <= SN_MAX_DIST.
     """
-    if window < 1:
-        raise ValueError(f"sorted_neighborhood_pairs: window={window} < 1")
     keys = docs.select(
         "doc_id", canonical_key(F.col("text")).alias("key")
     )
@@ -262,8 +235,8 @@ def sorted_neighborhood_pairs(
         F.col("rnk").alias("rnk_a"),
         F.explode(
             F.array(
-                F.expr(f"rnk div {window}"),
-                F.expr(f"rnk div {window} + 1"),
+                F.expr(f"rnk div {SN_WINDOW}"),
+                F.expr(f"rnk div {SN_WINDOW} + 1"),
             )
         ).alias("blk"),
     )
@@ -271,11 +244,11 @@ def sorted_neighborhood_pairs(
         F.col("doc_id").alias("id_b"),
         F.col("key").alias("key_b"),
         F.col("rnk").alias("rnk_b"),
-        F.expr(f"rnk div {window}").alias("blk"),
+        F.expr(f"rnk div {SN_WINDOW}").alias("blk"),
     )
     cand = a.join(b, "blk").filter(
         (F.col("rnk_b") - F.col("rnk_a") >= 1)
-        & (F.col("rnk_b") - F.col("rnk_a") <= window)
+        & (F.col("rnk_b") - F.col("rnk_a") <= SN_WINDOW)
     )
     return (
         cand.select(
@@ -284,5 +257,5 @@ def sorted_neighborhood_pairs(
             (F.col("rnk_b") - F.col("rnk_a")).cast("int").alias("gap"),
             F.levenshtein(F.col("key_a"), F.col("key_b")).alias("dist"),
         )
-        .filter(F.col("dist") <= max_dist)
+        .filter(F.col("dist") <= SN_MAX_DIST)
     )

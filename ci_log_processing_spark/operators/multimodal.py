@@ -325,13 +325,16 @@ RESIZED_SCHEMA = (
 )
 
 
-def resize_images(
-    media: DataFrame, new_w: int = 4, new_h: int = 4
-) -> DataFrame:
+# resize_images' output size, in pixels
+RESIZE_W = 4
+RESIZE_H = 4
+
+
+def resize_images(media: DataFrame) -> DataFrame:
     """mapInPandas nearest-neighbor BMP downsample — the `resize`
     stage of the decode/feature/resize/frame-sample multimodal set:
-    output pixel (x, y, c) = stored pixel (x*w div new_w,
-    y*h div new_h, c), all-integer source indexing so both engines
+    output pixel (x, y, c) = stored pixel (x*w div RESIZE_W,
+    y*h div RESIZE_H, c), all-integer source indexing so both engines
     pick identical source bytes (no float scaling, no filtering —
     nearest-neighbor IS the deterministic resize). Row order is the
     container's stored order (the synthesiser writes rows linearly;
@@ -345,9 +348,6 @@ def resize_images(
     Output: (doc_id, width, height, new_w, new_h, resized_hash) with
     resized_hash = md5 of the resized interleaved pixel bytes.
     """
-    if new_w < 1 or new_h < 1:
-        raise ValueError("resize_images: target dims must be >= 1")
-
     def rs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib
 
@@ -368,17 +368,17 @@ def resize_images(
                 h = abs(h)
                 pixels = b[off:off + w * h * ch]
                 out = bytearray()
-                for y in range(new_h):
-                    sy = y * h // new_h
+                for y in range(RESIZE_H):
+                    sy = y * h // RESIZE_H
                     row = sy * w
-                    for x in range(new_w):
-                        p = (row + x * w // new_w) * ch
+                    for x in range(RESIZE_W):
+                        p = (row + x * w // RESIZE_W) * ch
                         out += pixels[p:p + ch]
                 rows["doc_id"].append(doc_id)
                 rows["width"].append(w)
                 rows["height"].append(h)
-                rows["new_w"].append(new_w)
-                rows["new_h"].append(new_h)
+                rows["new_w"].append(RESIZE_W)
+                rows["new_h"].append(RESIZE_H)
                 rows["resized_hash"].append(
                     hashlib.md5(bytes(out)).hexdigest()
                 )
@@ -461,12 +461,17 @@ def image_ahash(media: DataFrame) -> DataFrame:
     return images.mapInPandas(ah, AHASH_SCHEMA)
 
 
-def ahash_near_dup_pairs(
-    ah: DataFrame, max_hamming: int = 7, n_bands: int = 8
-) -> DataFrame:
+# largest aHash Hamming distance reported, and the band slices of the
+# 64-bit hash; the pigeonhole guarantee needs AHASH_MAX_HAMMING <
+# AHASH_BANDS, and full coverage AHASH_BANDS | 64
+AHASH_MAX_HAMMING = 7
+AHASH_BANDS = 8
+
+
+def ahash_near_dup_pairs(ah: DataFrame) -> DataFrame:
     """Image near-dup pairs by banded Hamming over the 64-bit aHash
     — dedup.simhash_pairs' pigeonhole plan on the image tier: any
-    pair within Hamming <= n_bands - 1 agrees exactly on at least
+    pair within Hamming <= AHASH_BANDS - 1 agrees exactly on at least
     one band slice, so candidates come from an equi-join on
     (band, slice) and bit_count(xor) verifies exactly. Banding uses
     UNSIGNED shifts (bit 63 is in play on a 64-bit signature; an
@@ -475,16 +480,7 @@ def ahash_near_dup_pairs(
     One (band, key) shuffle whose cost tracks duplicate density —
     never |images|^2.
     """
-    if max_hamming > n_bands - 1:
-        raise ValueError(
-            f"pigeonhole guarantee broken: max_hamming={max_hamming} "
-            f"needs n_bands >= {max_hamming + 1}"
-        )
-    if 64 % n_bands != 0:
-        raise ValueError(
-            f"n_bands={n_bands} must divide 64 (full coverage)"
-        )
-    band_w = 64 // n_bands
+    band_w = 64 // AHASH_BANDS
     mask = (1 << band_w) - 1
     bands = ah.select(
         "doc_id",
@@ -495,7 +491,7 @@ def ahash_near_dup_pairs(
                     F.shiftrightunsigned(
                         "ahash", i * band_w
                     ).bitwiseAND(F.lit(mask))
-                    for i in range(n_bands)
+                    for i in range(AHASH_BANDS)
                 ]
             )
         ).alias("band", "key"),
@@ -516,7 +512,7 @@ def ahash_near_dup_pairs(
                 F.col("a.ahash").bitwiseXOR(F.col("b.ahash"))
             ).alias("hamming"),
         )
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= AHASH_MAX_HAMMING)
         .distinct()
     )
 

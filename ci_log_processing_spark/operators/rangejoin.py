@@ -36,20 +36,17 @@ from pyspark.sql import functions as F
 
 # bins one interval may span before the join fails
 MAX_BINS_PER_INTERVAL = 1024
+# bin width W, in seconds: the typical incident-window length
+RANGE_BIN_SEC = 21600
 
 
 def range_join_binned(
-    points: DataFrame,
-    intervals: DataFrame,
-    keys: list[str],
-    point_ts: str = "ts",
-    bin_sec: int = 3600,
+    points: DataFrame, intervals: DataFrame, keys: list[str]
 ) -> DataFrame:
     """Inner-join each point row to every interval row (same `keys`)
-    whose [start_ts, end_ts] contains point_ts; inclusive both ends.
+    whose [start_ts, end_ts] contains the point's ts; inclusive both
+    ends.
     """
-    if bin_sec <= 0:
-        raise ValueError("range_join_binned: bin_sec must be positive")
     clash = (set(intervals.columns) - set(keys)) & set(points.columns)
     if clash:
         raise ValueError(
@@ -64,8 +61,8 @@ def range_join_binned(
         # binning needs
         return F.col(c).cast("timestamp_ltz").cast("long")
 
-    s_bin = F.floor(_epoch("start_ts") / bin_sec)
-    e_bin = F.floor(_epoch("end_ts") / bin_sec)
+    s_bin = F.floor(_epoch("start_ts") / RANGE_BIN_SEC)
+    e_bin = F.floor(_epoch("end_ts") / RANGE_BIN_SEC)
     n_bins = e_bin - s_bin + F.lit(1)
     guarded = F.when(
         n_bins > MAX_BINS_PER_INTERVAL,
@@ -73,8 +70,8 @@ def range_join_binned(
             F.concat(
                 F.lit(
                     "range_join_binned: interval spans more than "
-                    f"{MAX_BINS_PER_INTERVAL} bins of {bin_sec}s — raise "
-                    "bin_sec or split the interval: "
+                    f"{MAX_BINS_PER_INTERVAL} bins of {RANGE_BIN_SEC}s — "
+                    "raise RANGE_BIN_SEC or split the interval: "
                 ),
                 F.col("start_ts").cast("string"),
                 F.lit(" .. "),
@@ -86,14 +83,13 @@ def range_join_binned(
         "_bin", F.explode(F.sequence(guarded, e_bin))
     )
     binned_points = points.withColumn(
-        "_bin", F.floor(_epoch(point_ts) / bin_sec)
+        "_bin", F.floor(_epoch("ts") / RANGE_BIN_SEC)
     )
     cond = [binned_points[k] == binned_intervals[k] for k in keys] + [
         binned_points["_bin"] == binned_intervals["_bin"]
     ]
-    exact = (F.col(point_ts) >= F.col("start_ts")) & (
-        F.col(point_ts) <= F.col("end_ts")
-    )
+    ts = F.col("ts")
+    exact = (ts >= F.col("start_ts")) & (ts <= F.col("end_ts"))
     ival_cols = [c for c in intervals.columns if c not in keys]
     return (
         binned_points.join(binned_intervals, cond, "inner")

@@ -131,11 +131,13 @@ def bm25_topk(docs: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     )
 
 
-def inverted_index(
-    docs: DataFrame,
-    min_df: int = 1,
-    max_df: int = 64,
-) -> DataFrame:
+# document-frequency band [INDEX_MIN_DF, INDEX_MAX_DF] of the
+# published inverted index
+INDEX_MIN_DF = 2
+INDEX_MAX_DF = 1_000_000
+
+
+def inverted_index(docs: DataFrame) -> DataFrame:
     """Positional inverted-index construction: term -> serialized
     posting list "doc:p1,p2|doc:p3" with 1-based token positions —
     the index-build half of the retrieval tier (bm25_topk is the
@@ -151,11 +153,11 @@ def inverted_index(
     string is deterministic under any shuffle order and the oracle
     hash-matches cell-for-cell.
 
-    The df band [min_df, max_df] is the SCALE guard: max_df caps
-    per-term state (a stop-term appearing in f docs would otherwise
-    collect an f-sized posting array into ONE reducer row — the
-    posting-list analog of the LSH mega-bucket), and min_df drops
-    hapax noise. Real systems shard the hot tail instead of dropping
+    The df band [INDEX_MIN_DF, INDEX_MAX_DF] is the SCALE guard: the
+    max caps per-term state (a stop-term appearing in f docs would
+    otherwise collect an f-sized posting array into ONE reducer row —
+    the posting-list analog of the LSH mega-bucket), and the min
+    drops hapax noise. Real systems shard the hot tail instead of dropping
     it; the cap keeps per-group state bounded at any corpus size and
     is the documented trade.
 
@@ -170,11 +172,7 @@ def inverted_index(
 
     Output: (term, df, n_occurrences, postings).
     """
-    return finalize_index(
-        posting_rows(docs),
-        min_df=min_df,
-        max_df=max_df,
-    )
+    return finalize_index(posting_rows(docs))
 
 
 def posting_rows(docs: DataFrame) -> DataFrame:
@@ -210,15 +208,9 @@ def merge_posting_rows(stored: DataFrame, delta: DataFrame) -> DataFrame:
     return stored.unionByName(delta)
 
 
-def finalize_index(
-    td: DataFrame, min_df: int = 1, max_df: int = 64
-) -> DataFrame:
+def finalize_index(td: DataFrame) -> DataFrame:
     """Serialize posting rows into the published index table (the
     df-banded term -> postings strings inverted_index documents)."""
-    if min_df < 1 or max_df < min_df:
-        raise ValueError(
-            "inverted_index: need 1 <= min_df <= max_df"
-        )
     td = _register_persist(td)
     band = (
         td.groupBy("term")
@@ -226,7 +218,7 @@ def finalize_index(
             F.count(F.lit(1)).alias("df"),
             F.sum("_n_occ").alias("n_occurrences"),
         )
-        .filter((F.col("df") >= min_df) & (F.col("df") <= max_df))
+        .filter((F.col("df") >= INDEX_MIN_DF) & (F.col("df") <= INDEX_MAX_DF))
     )
     posting = F.concat_ws(
         ":",

@@ -15,8 +15,8 @@ Precedence (first match wins):
   1. no_metadata   — conversation lacks metadata (missing
                      buildinfo/inventory analog, logsender.py:136-141)
   2. preamble      — '-- Logs begin at ' before any timestamped turn
-  3. debug         — text contains 'DEBUG' (skip_debug mode,
-                     substring semantics like the reference)
+  3. debug         — text contains 'DEBUG' (the reference's
+                     --skip-debug, always on; substring semantics)
   4. empty_message — message empty after pipe-split
   5. errors        — severity ERROR or CRITICAL
   6. tool_calls    — tool turn (tool set or role='tool')
@@ -33,9 +33,7 @@ SINKS = ("errors", "tool_calls", "agent_turns", "drop_queue")
 PREAMBLE_PREFIX = "-- Logs begin at "
 
 
-def drop_reason_col(
-    skip_debug: bool = True, has_metadata: Column | None = None
-) -> Column:
+def drop_reason_col(has_metadata: Column | None = None) -> Column:
     """The drop rules (precedence 1-4) as one CASE; NULL keeps the row.
 
     Requires columns: text, message, prior_ts_count (see
@@ -50,15 +48,12 @@ def drop_reason_col(
         & (F.col("prior_ts_count") == 0),
         F.lit("preamble"),
     )
-    if skip_debug:
-        c = c.when(F.col("text").contains("DEBUG"), F.lit("debug"))
+    c = c.when(F.col("text").contains("DEBUG"), F.lit("debug"))
     c = c.when(F.length(F.col("message")) == 0, F.lit("empty_message"))
     return c.otherwise(F.lit(None).cast("string"))
 
 
-def route_cols(
-    skip_debug: bool = True, has_metadata: Column | None = None
-) -> tuple[Column, Column]:
+def route_cols(has_metadata: Column | None = None) -> tuple[Column, Column]:
     """(drop_reason, sink). The sink CASE reads the drop_reason column
     and sends every row with a reason to drop_queue (precedence 5-7
     need severity, tool, role); `with_route` adds them in that
@@ -72,7 +67,7 @@ def route_cols(
         )
         .otherwise(F.lit("agent_turns"))
     )
-    return drop_reason_col(skip_debug, has_metadata), sink
+    return drop_reason_col(has_metadata), sink
 
 
 def with_route(df: DataFrame, route: tuple[Column, Column]) -> DataFrame:
@@ -85,10 +80,6 @@ def with_route(df: DataFrame, route: tuple[Column, Column]) -> DataFrame:
     )
 
 
-def with_sink(
-    df: DataFrame,
-    skip_debug: bool = True,
-    has_metadata: Column | None = None,
-) -> DataFrame:
+def with_sink(df: DataFrame, has_metadata: Column | None = None) -> DataFrame:
     """Add sink and drop_reason."""
-    return with_route(df, route_cols(skip_debug, has_metadata))
+    return with_route(df, route_cols(has_metadata))

@@ -29,11 +29,9 @@ def available_requested(
     return [r for r in requested if r in avail]
 
 
-def semi_join_requested(
-    df: DataFrame, requested: DataFrame, key: str = "tool"
-) -> DataFrame:
-    """J4: broadcast left-semi join — rows whose `key` appears in the
+def semi_join_requested(df: DataFrame, requested: DataFrame) -> DataFrame:
+    """J4: broadcast left-semi join — rows whose `tool` appears in the
     requested dimension. Null keys never match (SQL semi-join
     semantics; the reference likewise only fetches named jobs)."""
-    dim = requested.select(key).distinct()
-    return df.join(F.broadcast(dim), key, "left_semi")
+    dim = requested.select("tool").distinct()
+    return df.join(F.broadcast(dim), "tool", "left_semi")

@@ -31,17 +31,19 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def conversation_select(
-    routed: DataFrame,
-    min_turns: int = 5,
-    max_error_frac: float = 0.2,
-    min_tool_calls: int = 1,
-) -> DataFrame:
+# conversation_select's bar: fewest visible turns, largest error
+# fraction, fewest tool-call turns of a selected conversation
+SFT_MIN_TURNS = 5
+SFT_MAX_ERROR_FRAC = 0.2
+SFT_MIN_TOOL_CALLS = 1
+
+
+def conversation_select(routed: DataFrame) -> DataFrame:
     """Per-conversation quality roll-up over the routed table, with a
     deterministic training-selection flag: a conversation is selected
-    iff it has >= min_turns VISIBLE turns (drop_queue excluded), its
-    error fraction (errors / visible) is <= max_error_frac, and it
-    contains >= min_tool_calls tool-call turns. This is document-
+    iff it has >= SFT_MIN_TURNS VISIBLE turns (drop_queue excluded),
+    its error fraction (errors / visible) is <= SFT_MAX_ERROR_FRAC,
+    and it contains >= SFT_MIN_TOOL_CALLS tool-call turns. This is document-
     level curation lifted to the conversation grain — the unit a
     transcript-SFT corpus actually samples.
 
@@ -54,8 +56,6 @@ def conversation_select(
     Output: (conv_id, n_turns, n_visible, n_errors, n_tool_calls,
     n_dropped, error_frac, selected).
     """
-    if min_turns < 1:
-        raise ValueError("conversation_select: min_turns must be >= 1")
     visible = F.col("n_visible")
     per = routed.groupBy("conv_id").agg(
         F.count(F.lit(1)).alias("n_turns"),
@@ -83,42 +83,43 @@ def conversation_select(
         "n_dropped",
         error_frac.alias("error_frac"),
         (
-            (visible >= min_turns)
-            & (error_frac <= max_error_frac)
-            & (F.col("n_tool_calls") >= min_tool_calls)
+            (visible >= SFT_MIN_TURNS)
+            & (error_frac <= SFT_MAX_ERROR_FRAC)
+            & (F.col("n_tool_calls") >= SFT_MIN_TOOL_CALLS)
         ).alias("selected"),
     )
 
 
-def context_windows(
-    routed: DataFrame, n_context: int = 4
-) -> DataFrame:
+# prompt context of a context_windows example, in visible turns
+SFT_CONTEXT_TURNS = 4
+
+
+def context_windows(routed: DataFrame) -> DataFrame:
     """Sliding-context SFT example construction: one training example
     per visible ASSISTANT turn, whose prompt context is the previous
-    <= n_context visible turns rendered as 'role: message' lines and
+    <= SFT_CONTEXT_TURNS visible turns rendered as 'role: message' lines and
     whose target is the turn's own message. Dropped turns (the
     drop_queue sink) are excluded BEFORE the window, so context never
     leaks preamble/empty/no-metadata rows — the same visibility rule
     the sinks enforce.
 
-    Scale shape: one conv-keyed window (rowsBetween -n_context..-1)
+    Scale shape: one conv-keyed window
+    (rowsBetween -SFT_CONTEXT_TURNS..-1)
     over the pipeline's existing conv_id partitioning; collect_list
-    over the ordered frame is per-frame-bounded state (<= n_context
-    rows), and the assistant filter happens after the window without
-    a second exchange. No joins, nothing corpus-sized on the driver.
+    over the ordered frame is per-frame-bounded state
+    (<= SFT_CONTEXT_TURNS rows), and the assistant filter happens
+    after the window without a second exchange. No joins, nothing corpus-sized on the driver.
 
     Output: (conv_id, turn_idx, n_context_turns, context, target);
     context is '' for a conversation-opening assistant turn.
     """
-    if n_context < 1:
-        raise ValueError("context_windows: n_context must be >= 1")
     visible = routed.filter(F.col("sink") != "drop_queue").select(
         "conv_id", "turn_idx", "role", "message"
     )
     w = (
         Window.partitionBy("conv_id")
         .orderBy("turn_idx")
-        .rowsBetween(-n_context, -1)
+        .rowsBetween(-SFT_CONTEXT_TURNS, -1)
     )
     ctx = F.collect_list(
         F.concat_ws(": ", F.col("role"), F.col("message"))
@@ -358,13 +359,12 @@ def chat_lint(df: DataFrame) -> DataFrame:
     )
 
 
-def render_chat(routed: DataFrame, template: str = "chatml") -> DataFrame:
+def render_chat(routed: DataFrame) -> DataFrame:
     """Chat-template rendering — the LAST step of an SFT export:
     collapse each conversation's visible turns into the ONE training
-    string the trainer tokenizes. Two templates:
-      * 'chatml':  <|im_start|>role\\nmessage<|im_end|> per turn,
-        turns joined by newline (the de-facto open-weights markup);
-      * 'plain':   role: message lines (the context_windows format).
+    string the trainer tokenizes, in ChatML:
+    <|im_start|>role\\nmessage<|im_end|> per turn, turns joined by
+    newline (the de-facto open-weights markup).
     Dropped turns (drop_queue sink) are excluded BEFORE rendering —
     the same visibility rule every sft.py operator enforces, so a
     rendered conversation can never leak preamble/empty rows.
@@ -379,24 +379,15 @@ def render_chat(routed: DataFrame, template: str = "chatml") -> DataFrame:
 
     Output: (conv_id, n_turns, n_assistant_turns, text).
     """
-    templates = {
-        "chatml": lambda x: F.concat(
+    def render(x):
+        return F.concat(
             F.lit("<|im_start|>"),
             x["role"],
             F.lit("\n"),
             x["message"],
             F.lit("<|im_end|>"),
-        ),
-        "plain": lambda x: F.concat_ws(
-            ": ", x["role"], x["message"]
-        ),
-    }
-    if template not in templates:
-        raise ValueError(
-            f"render_chat: unknown template {template!r}; "
-            f"have {sorted(templates)}"
         )
-    render = templates[template]
+
     turns = routed.filter(F.col("sink") != "drop_queue").select(
         "conv_id", "turn_idx", "role", "message"
     )

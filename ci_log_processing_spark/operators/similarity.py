@@ -120,9 +120,11 @@ def brute_force_topk(
     return _cosine_top_k(emb.crossJoin(F.broadcast(q)), k)
 
 
-def bucketed_ann_topk(
-    emb: DataFrame, queries: DataFrame, k: int = 10
-) -> DataFrame:
+# neighbors the ANN searches return per query
+ANN_K = 10
+
+
+def bucketed_ann_topk(emb: DataFrame, queries: DataFrame) -> DataFrame:
     """IVF-style ANN: probe only the query's own coarse bucket.
 
     At 100 TB the corpus is hash/range-partitioned by bucket id, so
@@ -136,7 +138,8 @@ def bucketed_ann_topk(
         F.col("label").alias("q_bucket"),
     )
     return _cosine_top_k(
-        emb.join(F.broadcast(q), emb["label"] == q["q_bucket"], "inner"), k
+        emb.join(F.broadcast(q), emb["label"] == q["q_bucket"], "inner"),
+        ANN_K,
     )
 
 
@@ -176,10 +179,7 @@ def bucket_centroids(emb: DataFrame) -> DataFrame:
 
 
 def ivf_multiprobe_topk(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    nprobe: int = 2,
+    emb: DataFrame, queries: DataFrame, nprobe: int = 2
 ) -> DataFrame:
     """True IVF search: rank bucket centroids per query, probe the
     nprobe nearest buckets, exact top-k inside the probed set.
@@ -206,7 +206,7 @@ def ivf_multiprobe_topk(
     ).select("query_id", "q_emb", "bkt")
     return _cosine_top_k(
         emb.join(F.broadcast(ranked), emb["label"] == ranked["bkt"], "inner"),
-        k,
+        ANN_K,
     )
 
 
@@ -257,13 +257,16 @@ def _hash_subsplit(
     )
 
 
-def embedding_near_dup_pairs_capped(
-    emb: DataFrame,
-    threshold: float = 0.95,
-    bucket_cap: int = 32,
-) -> DataFrame:
+# cosine at which the embedding near-dup operators (bucket pairs,
+# SemDeDup) call two vectors duplicates, and the largest cell the
+# capped bucket join compares all-pairs
+EMB_DUP_THRESHOLD = 0.3
+EMB_BUCKET_CAP = 20
+
+
+def embedding_near_dup_pairs_capped(emb: DataFrame) -> DataFrame:
     """embedding_near_dup_pairs with a MEGA-BUCKET guard: any `label`
-    bucket larger than `bucket_cap` is deterministically split into
+    bucket larger than EMB_BUCKET_CAP is deterministically split into
     ceil(size / cap) sub-buckets by hashing vec_id, and the all-pairs
     comparison stays inside a (bucket, sub) cell — EXPECTED per-cell
     cost ~cap^2 regardless of clustering skew (hash placement
@@ -285,13 +288,13 @@ def embedding_near_dup_pairs_capped(
     """
     keyed = emb.select(F.col("label").alias("bkt"), "vec_id", "embedding")
     return _bucket_pair_join(
-        _hash_subsplit(keyed, ["bkt"], bucket_cap), ["bkt", "sub"], threshold
+        _hash_subsplit(keyed, ["bkt"], EMB_BUCKET_CAP),
+        ["bkt", "sub"],
+        EMB_DUP_THRESHOLD,
     )
 
 
-def embedding_near_dup_pairs(
-    emb: DataFrame, threshold: float = 0.95
-) -> DataFrame:
+def embedding_near_dup_pairs(emb: DataFrame) -> DataFrame:
     """Near-duplicate vector pairs within coarse buckets.
 
     Self-join keyed on the bucket column — the all-pairs comparison
@@ -302,7 +305,7 @@ def embedding_near_dup_pairs(
     keyed = emb.select(
         F.col("label").alias("bkt"), "vec_id", "embedding"
     )
-    return _bucket_pair_join(keyed, ["bkt"], threshold)
+    return _bucket_pair_join(keyed, ["bkt"], EMB_DUP_THRESHOLD)
 
 
 def srp_planes(
@@ -331,18 +334,22 @@ def srp_planes(
     ]
 
 
+# signed-random-projection signature bits, split into SRP_BANDS band
+# keys (3 bits per band)
+SRP_BITS = 24
+SRP_BANDS = 8
+
+
 def srp_near_dup_pairs(
     emb: DataFrame,
     threshold: float = 0.30,
-    n_bits: int = 24,
-    bands: int = 8,
     bucket_cap: int | None = None,
 ) -> DataFrame:
     """Embedding near-dup pairs via signed-random-projection LSH —
     the cosine-metric sibling of minhash-LSH (Jaccard) and simhash
-    (text): each vector gets an n_bits signature (sign of the dot
+    (text): each vector gets an SRP_BITS signature (sign of the dot
     with a fixed Rademacher hyperplane, P[bits differ] = angle/pi),
-    the signature is split into `bands` keys, vectors colliding in
+    the signature is split into SRP_BANDS keys, vectors colliding in
     ANY band become a candidate pair, and candidates are verified
     with exact cosine >= threshold. Recall at the threshold boundary
     follows the Charikar collision bound 1-(1-p^rpb)^bands with
@@ -372,13 +379,9 @@ def srp_near_dup_pairs(
     discipline as cosine_col) so Spark and DuckDB agree at the
     sign boundary.
     """
-    if n_bits < 1 or bands < 1 or n_bits % bands != 0:
-        raise ValueError(
-            f"srp_near_dup_pairs: bands={bands} must divide n_bits={n_bits}"
-        )
-    rpb = n_bits // bands
+    rpb = SRP_BITS // SRP_BANDS
     dim = _dim(emb, "embedding")
-    planes = srp_planes(n_bits, dim)
+    planes = srp_planes(SRP_BITS, dim)
 
     def bit(p: int) -> Column:
         lit = F.array(*[F.lit(v) for v in planes[p]])
@@ -388,7 +391,7 @@ def srp_near_dup_pairs(
     sig = emb.select(
         "vec_id",
         "embedding",
-        *[bit(p).alias(f"b{p}") for p in range(n_bits)],
+        *[bit(p).alias(f"b{p}") for p in range(SRP_BITS)],
     )
     band_structs = F.array(
         *[
@@ -398,7 +401,7 @@ def srp_near_dup_pairs(
                     *[F.col(f"b{b * rpb + i}") for i in range(rpb)]
                 ).alias("key"),
             )
-            for b in range(bands)
+            for b in range(SRP_BANDS)
         ]
     )
     from .dedup import _register_persist
@@ -496,11 +499,16 @@ def ivfpq_ann_topk(
     )
 
 
-def contrastive_triplets(emb: DataFrame, t_pos: float = 0.35) -> DataFrame:
+# cosine that splits an anchor's candidates into positives and negatives
+TRIPLET_T_POS = 0.35
+
+
+def contrastive_triplets(emb: DataFrame) -> DataFrame:
     """Mine (anchor, positive, hard-negative) training triplets for
     contrastive embedding training: per anchor, the BEST positive
-    (highest cosine >= t_pos) and the HARDEST negative (highest
-    cosine < t_pos) — hard negatives, not random ones, are what make
+    (highest cosine >= TRIPLET_T_POS) and the HARDEST negative
+    (highest cosine < TRIPLET_T_POS) — hard negatives, not random
+    ones, are what make
     a contrastive batch informative, and the hardest ones live
     exactly in the LSH candidate set (similar enough to collide in a
     band, below the positive threshold).
@@ -536,14 +544,14 @@ def contrastive_triplets(emb: DataFrame, t_pos: float = 0.35) -> DataFrame:
     )
     order = [F.desc("cosine"), F.asc("other_id")]
     pos = _top_k(
-        both.filter(F.col("cosine") >= t_pos), "anchor_id", order, 1
+        both.filter(F.col("cosine") >= TRIPLET_T_POS), "anchor_id", order, 1
     ).select(
         "anchor_id",
         F.col("other_id").alias("pos_id"),
         F.col("cosine").alias("pos_cos"),
     )
     neg = _top_k(
-        both.filter(F.col("cosine") < t_pos), "anchor_id", order, 1
+        both.filter(F.col("cosine") < TRIPLET_T_POS), "anchor_id", order, 1
     ).select(
         "anchor_id",
         F.col("other_id").alias("neg_id"),
@@ -620,11 +628,13 @@ def _seed_vectors(
     return [list(r[vec_col]) for r in seeds]
 
 
+# clusters of the k-medians coarse quantizer behind kmeans_fit,
+# SemDeDup and knn_graph
+KMEANS_K = 8
+
+
 def kmeans_fit(
-    emb: DataFrame,
-    k: int = 8,
-    n_iter: int = 3,
-    keep_vec: bool = False,
+    emb: DataFrame, n_iter: int = 3, keep_vec: bool = False
 ) -> DataFrame:
     """Deterministic K-MEDIANS (Lloyd) fit — the "train the coarse
     quantizer" step a real IVF index build runs before
@@ -632,7 +642,7 @@ def kmeans_fit(
     stands in for this in the synthetic data).
 
     Fully deterministic, so the DuckDB oracle replays it exactly:
-      * init: the k vectors with smallest (md5(id), id) — a
+      * init: the KMEANS_K vectors with smallest (md5(id), id) — a
         reproducible pseudo-random seed draw;
       * assign: argmin of round(squared_distance, 5) with centroid
         INDEX as tie-break;
@@ -650,7 +660,7 @@ def kmeans_fit(
 
     Returns the final assignment: (vec_id, bkt, dist).
     """
-    cents = kmeans_centroids(emb, k, n_iter)
+    cents = kmeans_centroids(emb, KMEANS_K, n_iter)
     best = _argmin_centroid(F.col("embedding"), cents)
     out = emb.select(
         "vec_id",
@@ -689,16 +699,15 @@ def kmeans_centroids(
     return cents
 
 
-def semantic_cluster_dedup(
-    emb: DataFrame,
-    k: int = 8,
-    n_iter: int = 2,
-    threshold: float = 0.95,
-) -> DataFrame:
+# k-medians rounds of the quantizer SemDeDup and knn_graph share
+QUANTIZER_ITERS = 2
+
+
+def semantic_cluster_dedup(emb: DataFrame) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023):
     cluster the corpus embeddings with the deterministic k-medians
     fit, then drop every vector that has a LOWER-id near-duplicate
-    (cosine >= threshold) inside its own cluster. Near-dup search
+    (cosine >= EMB_DUP_THRESHOLD) inside its own cluster. Near-dup search
     never leaves a cluster — the clustering IS the blocking step
     that makes embedding dedup sub-quadratic at corpus scale.
 
@@ -717,9 +726,11 @@ def semantic_cluster_dedup(
 
     Output: (vec_id, bkt, dist, is_kept) — one row per input vector.
     """
-    assigned = kmeans_fit(emb, k, n_iter, keep_vec=True)
+    assigned = kmeans_fit(emb, QUANTIZER_ITERS, keep_vec=True)
     pairs = _bucket_pair_join(
-        assigned.select("bkt", "vec_id", "embedding"), ["bkt"], threshold
+        assigned.select("bkt", "vec_id", "embedding"),
+        ["bkt"],
+        EMB_DUP_THRESHOLD,
     )
     losers = (
         pairs.select(F.col("vec_b").alias("vec_id"))
@@ -738,17 +749,15 @@ def semantic_cluster_dedup(
     )
 
 
-def knn_graph(
-    emb: DataFrame,
-    k_nn: int = 5,
-    k_clusters: int = 8,
-    n_iter: int = 2,
-    nprobe: int = 1,
-) -> DataFrame:
+# knn_graph's neighbors per vector
+KNN_NEIGHBORS = 5
+
+
+def knn_graph(emb: DataFrame, nprobe: int = 1) -> DataFrame:
     """Approximate k-nearest-neighbor GRAPH over the corpus
     embeddings — the adjacency every graph-based curation step
     (semantic clustering into topics, kNN label propagation,
-    diversity sampling a la DSIR/D4) consumes. Each vector's k_nn
+    diversity sampling a la DSIR/D4) consumes. Each vector's KNN_NEIGHBORS
     nearest neighbors BY COSINE are searched only inside its own
     k-medians cluster: the same deterministic coarse quantizer the
     IVF index and SemDeDup share, reused here as the blocking step
@@ -777,11 +786,9 @@ def knn_graph(
     folds per candidate pair — bit-identical values (same doubles,
     same round-5), measured ~3× off the join stage at sf0.1.
     """
-    if k_nn < 1:
-        raise ValueError("knn_graph: k_nn >= 1 required")
-    if not 1 <= nprobe <= k_clusters:
-        raise ValueError("knn_graph: 1 <= nprobe <= k_clusters required")
-    cents = kmeans_centroids(emb, k_clusters, n_iter)
+    if not 1 <= nprobe <= KMEANS_K:
+        raise ValueError("knn_graph: 1 <= nprobe <= KMEANS_K required")
+    cents = kmeans_centroids(emb, KMEANS_K, QUANTIZER_ITERS)
     best = _argmin_centroid(F.col("embedding"), cents)
     b = emb.select(
         best["b"].alias("bkt"),
@@ -810,7 +817,10 @@ def knn_graph(
         )
     )
     return _top_k(
-        scored, "src", [F.col("cos_sim").desc(), F.col("nbr").asc()], k_nn
+        scored,
+        "src",
+        [F.col("cos_sim").desc(), F.col("nbr").asc()],
+        KNN_NEIGHBORS,
     ).select(
         F.col("src").alias("vec_id"),
         F.col("nbr").alias("nbr_id"),
@@ -1137,7 +1147,11 @@ def snapshot_drift(emb_a: DataFrame, emb_b: DataFrame) -> DataFrame:
     return _centroid_drift(dims)
 
 
-def kcenter_select(emb: DataFrame, k: int = 6) -> DataFrame:
+# centers kcenter_select picks
+KCENTER_K = 6
+
+
+def kcenter_select(emb: DataFrame) -> DataFrame:
     """Greedy k-center coreset selection (farthest-point traversal,
     Gonzalez 1985) — the diversity-maximizing data-selection pass:
     pick the vector farthest from everything picked so far, k times.
@@ -1162,15 +1176,13 @@ def kcenter_select(emb: DataFrame, k: int = 6) -> DataFrame:
 
     Output: (round_idx, vec_id, radius); radius NULL for the seed.
     """
-    if k < 1:
-        raise ValueError(f"kcenter_select: k={k} < 1")
     base = emb.select("vec_id", "embedding")
     seed = base.orderBy(F.col("vec_id")).limit(1).collect()
     if not seed:
         raise ValueError("kcenter_select: empty input")
     chosen = [(0, seed[0]["vec_id"], None)]
     cents = [list(seed[0]["embedding"])]
-    for r in range(1, k):
+    for r in range(1, KCENTER_K):
         best = _argmin_centroid(F.col("embedding"), cents)
         far = (
             base.select(

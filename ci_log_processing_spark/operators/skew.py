@@ -34,12 +34,9 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def repartition_by_conv(
-    df: DataFrame, spark: SparkSession, num_partitions: int | None = None
-) -> DataFrame:
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return df.repartition(num_partitions, F.col("conv_id"))
+def repartition_by_conv(df: DataFrame, spark: SparkSession) -> DataFrame:
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return df.repartition(n, F.col("conv_id"))
 
 
 def salted_bucket(turns_per_bucket: int = 512) -> Column:
@@ -53,10 +50,12 @@ def salted_bucket(turns_per_bucket: int = 512) -> Column:
     )
 
 
-def key_skew_audit(
-    df: DataFrame, key_col: str, top_n: int = 20
-) -> DataFrame:
-    """Partition-planning diagnostic: the top-N heaviest keys with
+# heaviest keys key_skew_audit reports
+SKEW_TOP_N = 20
+
+
+def key_skew_audit(df: DataFrame, key_col: str) -> DataFrame:
+    """Partition-planning diagnostic: the top-SKEW_TOP_N heaviest keys with
     their exact row share — the table you read BEFORE choosing a
     shuffle key, salt factor, or AQE skew threshold (the study that
     motivated this module's repartition_by_conv/salted_bucket pair).
@@ -79,9 +78,7 @@ def key_skew_audit(
         df.groupBy(key_col).agg(F.count(F.lit(1)).alias("cnt"))
     )
     total = counts.agg(F.sum("cnt").alias("total"))
-    top = counts.orderBy(
-        F.col("cnt").desc(), F.col(key_col)
-    ).limit(int(top_n))
+    top = counts.orderBy(F.col("cnt").desc(), F.col(key_col)).limit(SKEW_TOP_N)
     w = Window.orderBy(F.col("cnt").desc(), F.col(key_col))
     return (
         top.crossJoin(F.broadcast(total))
@@ -94,30 +91,29 @@ def key_skew_audit(
     )
 
 
-def salted_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    key: str,
-    n_salts: int = 8,
-) -> DataFrame:
+# reducers salted_join splits each key over
+N_SALTS = 8
+
+
+def salted_join(fact: DataFrame, dim: DataFrame, key: str) -> DataFrame:
     """Hot-key inner JOIN salting for when the dim side is too large to
     broadcast and the fact side's key distribution is skewed: a
     plain shuffle join sends every row of the hottest key to ONE
-    reducer; salting splits that key across `n_salts` reducers.
+    reducer; salting splits that key across `N_SALTS` reducers.
 
     Mechanics (the classic replicate-and-scatter):
       * the FACT side gets salt = pmod(xxhash64(monotonic row id),
-        n_salts)? No — row ids are nondeterministic under retries.
+        N_SALTS)? No — row ids are nondeterministic under retries.
         The salt must be a pure function of row CONTENT, so it is
-        pmod(h32(every fact column concatenated), n_salts): stable
+        pmod(h32(every fact column concatenated), N_SALTS): stable
         across retries/replays, uniform enough to split a hot key;
-      * the DIM side is replicated n_salts times (explode over the
+      * the DIM side is replicated N_SALTS times (explode over the
         salt range) — dim rows are duplicated, fact rows are not,
         so the join result is EXACTLY the unsalted join's;
       * the join runs on (key, salt) — the hot key now hashes to
-        n_salts distinct reducers.
+        N_SALTS distinct reducers.
 
-    Cost model: n_salts x dim shuffle bytes buys fact-side
+    Cost model: N_SALTS x dim shuffle bytes buys fact-side
     parallelism on the hot key — worth it iff the dim is much
     smaller than the fact's hot-key mass (else use AQE skew-join,
     which splits ONLY the oversized partitions at runtime; this
@@ -131,19 +127,17 @@ def salted_join(
     checks (the plan difference is the point, asserted in
     tests/test_plan_shape.py).
     """
-    if n_salts < 1:
-        raise ValueError(f"salted_join: n_salts={n_salts} < 1")
     from .dedup import h32
 
     fact_cols = [c for c in fact.columns]
     salt = F.pmod(
         h32(F.concat_ws("\x01", *[F.col(c).cast("string")
                                   for c in fact_cols])),
-        F.lit(n_salts),
+        F.lit(N_SALTS),
     ).cast("int")
     f = fact.withColumn("_salt", salt)
     d = dim.withColumn(
         "_salt",
-        F.explode(F.array(*[F.lit(i) for i in range(n_salts)])),
+        F.explode(F.array(*[F.lit(i) for i in range(N_SALTS)])),
     )
     return f.join(d, [key, "_salt"]).drop("_salt")

@@ -144,12 +144,13 @@ def snapshot_asof(
     )
 
 
-def compaction_plan(
-    files: DataFrame,
-    target_bytes: int = 64 * 1024,
-) -> DataFrame:
+# output file size compaction_plan packs toward, in bytes
+COMPACTION_TARGET_BYTES = 4096
+
+
+def compaction_plan(files: DataFrame) -> DataFrame:
     """Small-file compaction planner — which files to rewrite
-    together so each output file lands near `target_bytes` (the
+    together so each output file lands near COMPACTION_TARGET_BYTES (the
     OPTIMIZE / rewrite_data_files planning step, minus the catalog).
 
     Binning rule: within a partition, in file-id order, a file joins
@@ -185,7 +186,7 @@ def compaction_plan(
         "part",
         "file_id",
         "bytes",
-        F.expr(f"_cum_before div {int(target_bytes)}").alias("bin_idx"),
+        F.expr(f"_cum_before div {COMPACTION_TARGET_BYTES}").alias("bin_idx"),
     )
 
 

@@ -199,10 +199,14 @@ def attach_boilerplate(docs: DataFrame) -> DataFrame:
     )
 
 
-def line_dedup(docs: DataFrame, min_count: int = 3) -> DataFrame:
+# occurrences across the corpus that make a line boilerplate
+LINE_DEDUP_MIN_COUNT = 3
+
+
+def line_dedup(docs: DataFrame) -> DataFrame:
     """Corpus-wide repeated-LINE removal (the RefinedWeb / CCNet
     boilerplate pass): delete every line whose total occurrence
-    count across the corpus is >= min_count, rebuild each document
+    count across the corpus is >= LINE_DEDUP_MIN_COUNT, rebuild each document
     from its surviving lines in original order, and drop documents
     left with no lines at all (C4 semantics for all-boilerplate
     pages).
@@ -211,7 +215,7 @@ def line_dedup(docs: DataFrame, min_count: int = 3) -> DataFrame:
     shuffle on the md5 of the line (fixed-width key — the raw line
     never crosses the wire as a shuffle key); the hot-line set is a
     heavy-hitter table (small by construction — lines repeated >=
-    min_count times across a corpus are the boilerplate tail, not
+    LINE_DEDUP_MIN_COUNT times across a corpus are the boilerplate tail, not
     the corpus) and is BROADCAST into a left-anti join; the rebuild
     is one doc-keyed aggregate whose sort is a per-doc array_sort,
     not a global order. Total: one line-hash exchange + one doc
@@ -222,8 +226,6 @@ def line_dedup(docs: DataFrame, min_count: int = 3) -> DataFrame:
     Output: (doc_id, n_lines, n_kept, clean_text), only docs with
     n_kept >= 1.
     """
-    if min_count < 2:
-        raise ValueError("line_dedup: min_count must be >= 2")
     split = F.split(F.col("btext"), "\n")
     lines = docs.select(
         "doc_id",
@@ -233,7 +235,7 @@ def line_dedup(docs: DataFrame, min_count: int = 3) -> DataFrame:
     hot = (
         lines.groupBy("_h")
         .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") >= min_count)
+        .filter(F.col("_n") >= LINE_DEDUP_MIN_COUNT)
         .select("_h")
     )
     kept = lines.join(F.broadcast(hot), "_h", "left_anti")
@@ -530,12 +532,14 @@ def fingerprints(docs: DataFrame) -> DataFrame:
     )
 
 
+# salient terms tfidf_top_terms keeps per document
+TFIDF_K = 3
+
+
 def tfidf_top_terms(
-    docs: DataFrame,
-    k: int = 3,
-    max_df_frac: float | None = None,
+    docs: DataFrame, max_df_frac: float | None = None
 ) -> DataFrame:
-    """Top-k salient terms per document — the corpus-keyword /
+    """Top-TFIDF_K salient terms per document — the corpus-keyword /
     topic-tagging pass curation pipelines run after cleaning.
 
     Ranking is the DETERMINISTIC integer order (tf DESC, df ASC,
@@ -570,8 +574,6 @@ def tfidf_top_terms(
     """
     from .dedup import _register_persist
 
-    if k < 1:
-        raise ValueError("tfidf_top_terms: k must be >= 1")
     if max_df_frac is not None and not (0.0 < max_df_frac <= 1.0):
         raise ValueError("tfidf_top_terms: max_df_frac must be in (0, 1]")
     n_docs = docs.agg(F.count(F.lit(1)).alias("_n_docs"))
@@ -601,7 +603,7 @@ def tfidf_top_terms(
         tf.join(dfreq, "term")
         .crossJoin(F.broadcast(n_docs))
         .withColumn("term_rank", F.row_number().over(w))
-        .filter(F.col("term_rank") <= k)
+        .filter(F.col("term_rank") <= TFIDF_K)
         .select(
             "doc_id",
             "term",
@@ -1233,9 +1235,13 @@ def vocab_stats(docs: DataFrame) -> DataFrame:
     )
 
 
-def hashed_features(docs: DataFrame, dim: int = 64) -> DataFrame:
+# buckets of a hashed_features vector
+HASH_DIM = 64
+
+
+def hashed_features(docs: DataFrame) -> DataFrame:
     """Feature-hashing doc vectors (the hashing trick, Weinberger
-    2009 / VW): every token maps to bucket h32(token) mod dim with a
+    2009 / VW): every token maps to bucket h32(token) mod HASH_DIM with a
     sign from an INDEPENDENT hash bit, and the doc's vector is the
     signed token-count sum per bucket — a fixed-dim bag-of-words
     embedding with NO vocabulary state, which is the whole point at
@@ -1249,7 +1255,7 @@ def hashed_features(docs: DataFrame, dim: int = 64) -> DataFrame:
     assemble a dense array downstream if a consumer needs one.
 
     Scale shape: explode + one (doc, bucket)-keyed partial+final
-    aggregate; per-doc fan-in is bounded by min(doc tokens, dim)
+    aggregate; per-doc fan-in is bounded by min(doc tokens, HASH_DIM)
     groups after the map-side combine. Both hashes are the repo's
     h32 (md5-prefix) primitive, mirrored bit-for-bit in the DuckDB
     twin.
@@ -1260,7 +1266,7 @@ def hashed_features(docs: DataFrame, dim: int = 64) -> DataFrame:
         F.col("doc_id"),
         F.explode(tokens_col(F.col("text"))).alias("_t"),
     ).filter(F.col("_t") != "")
-    bucket = (h32(F.col("_t")) % dim).alias("bucket")
+    bucket = (h32(F.col("_t")) % HASH_DIM).alias("bucket")
     sign = (
         F.lit(1)
         - F.lit(2) * (h32(F.concat(F.lit("s|"), F.col("_t"))) % 2)
@@ -1603,9 +1609,11 @@ def watermark_scores(docs: DataFrame) -> DataFrame:
 
 # fewest instances of a term in a source for source_keyness to rank it
 KEYNESS_MIN_COUNT = 5
+# distinctive terms source_keyness reports per source
+KEYNESS_K = 5
 
 
-def source_keyness(docs: DataFrame, k: int = 5) -> DataFrame:
+def source_keyness(docs: DataFrame) -> DataFrame:
     """Distinctive-term keyness per source — the data-card audit
     "which terms characterize THIS slice vs the rest of the corpus"
     (Dunning/Kilgarriff keyness; the per-source face of the
@@ -1632,14 +1640,12 @@ def source_keyness(docs: DataFrame, k: int = 5) -> DataFrame:
     aggregate (the ONLY corpus-sized work); term totals come from a
     vocab-sized re-aggregate of THAT table, source totals and the
     grand total from the same lineage (broadcast back); the final
-    top-k is a rank window partitioned by source over the
+    top-KEYNESS_K is a rank window partitioned by source over the
     vocab x sources table. KEYNESS_MIN_COUNT prunes the Zipf tail before
     the window.
 
     Output: (source, term, n_in, n_out, overrep, chi2_milli, rank).
     """
-    if k < 1:
-        raise ValueError(f"source_keyness: k={k} < 1")
     st = (
         docs.select(
             "source",
@@ -1686,7 +1692,7 @@ def source_keyness(docs: DataFrame, k: int = 5) -> DataFrame:
         F.desc("chi2_milli"), F.asc("term")
     )
     return full.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
+        F.col("rank") <= KEYNESS_K
     )
 
 

@@ -33,7 +33,7 @@ replacement and adjacent matches still work without lookarounds
 Ties in pair frequency break by (left, right) lexicographic order —
 bytewise-identical in Spark and DuckDB for the ASCII symbols this
 produces. All counts are integers; there is no float anywhere, so
-the oracle twin (oracle_data.q_bpe_merges, an UNROLLED n_merges-deep
+the oracle twin (oracle_data.q_bpe_merges, an UNROLLED BPE_MERGES-deep
 CTE chain) matches hash-exactly.
 
 Reference scope note: the reference pipeline (logscraper) has no
@@ -126,10 +126,12 @@ def _pair_counts(words: DataFrame) -> DataFrame:
     )
 
 
-def bpe_train_words(
-    docs: DataFrame, n_merges: int = 8
-) -> tuple[list[dict], DataFrame]:
-    """Run `n_merges` BPE merge rounds; return (merges, word table
+# merge rounds of every BPE training run
+BPE_MERGES = 8
+
+
+def bpe_train_words(docs: DataFrame) -> tuple[list[dict], DataFrame]:
+    """Run BPE_MERGES BPE merge rounds; return (merges, word table
     with final symbol strings). Each round collects exactly ONE row
     (the argmax pair — the model update, like kmeans_fit's centroid
     collect in operators/similarity.py); the word table itself never
@@ -137,7 +139,7 @@ def bpe_train_words(
 
     Stops early if no adjacent pair remains (every word fully
     merged); callers asserting a fixed merge count should size
-    n_merges to the corpus.
+    the corpus to BPE_MERGES.
     """
     words = _register_persist(
         word_freq(docs).select(
@@ -146,7 +148,7 @@ def bpe_train_words(
     )
     merges: list[dict] = []
     cur = words
-    for rank in range(1, n_merges + 1):
+    for rank in range(1, BPE_MERGES + 1):
         top = (
             _pair_counts(cur)
             .orderBy(F.desc("pair_freq"), F.asc("lhs"), F.asc("rhs"))
@@ -165,7 +167,7 @@ def bpe_train_words(
                 "pair_freq": int(pf),
             }
         )
-        # one literal replace per round; lineage is n_merges stacked
+        # one literal replace per round; lineage is BPE_MERGES stacked
         # codegen'd replaces over the persisted base — no re-shuffle
         cur = cur.withColumn(
             "s",
@@ -178,15 +180,15 @@ def bpe_train_words(
     return merges, cur
 
 
-def bpe_merges(docs: DataFrame, n_merges: int = 8) -> DataFrame:
+def bpe_merges(docs: DataFrame) -> DataFrame:
     """The learned merge table (merge_rank, lhs, rhs, merged,
-    pair_freq) — n_merges rows, the tokenizer model artifact."""
+    pair_freq) — BPE_MERGES rows, the tokenizer model artifact."""
     spark = SparkSession.getActiveSession()
-    merges, _ = bpe_train_words(docs, n_merges)
+    merges, _ = bpe_train_words(docs)
     return spark.createDataFrame(merges, MERGES_SCHEMA)
 
 
-def bpe_token_counts(docs: DataFrame, n_merges: int = 8) -> DataFrame:
+def bpe_token_counts(docs: DataFrame) -> DataFrame:
     """Per-document token count under the learned BPE vocabulary.
 
     Encoding does NOT re-apply merges per document: the training
@@ -200,7 +202,7 @@ def bpe_token_counts(docs: DataFrame, n_merges: int = 8) -> DataFrame:
     consistent in the oracle, and a constant offset per word either
     way. Words dropped by word_freq's \\x01 guard count 0.
     """
-    _, final_words = bpe_train_words(docs, n_merges)
+    _, final_words = bpe_train_words(docs)
     per_word = final_words.select(
         "word",
         F.size(
@@ -223,7 +225,7 @@ def bpe_token_counts(docs: DataFrame, n_merges: int = 8) -> DataFrame:
     )
 
 
-def bpe_token_counts_arrow(docs: DataFrame, n_merges: int = 8) -> DataFrame:
+def bpe_token_counts_arrow(docs: DataFrame) -> DataFrame:
     """Arrow closure-dict variant of bpe_token_counts — the
     hot-vocab-cache shape (BASELINE.md BPE-tier legs): the trained
     per-word segment counts ship to the Python workers as a dict
@@ -245,7 +247,7 @@ def bpe_token_counts_arrow(docs: DataFrame, n_merges: int = 8) -> DataFrame:
     """
     import pandas as pd
 
-    _, final_words = bpe_train_words(docs, n_merges)
+    _, final_words = bpe_train_words(docs)
     rows = final_words.select(
         "word",
         F.size(
@@ -276,7 +278,7 @@ def bpe_token_counts_arrow(docs: DataFrame, n_merges: int = 8) -> DataFrame:
     )
 
 
-def bpe_fertility(docs: DataFrame, n_merges: int = 8) -> DataFrame:
+def bpe_fertility(docs: DataFrame) -> DataFrame:
     """Tokenizer FERTILITY audit per corpus slice — the
     tokenizer-engineering acceptance metric: BPE tokens per
     whitespace word (fertility; ~1.0 = the vocab covers the slice,
@@ -296,7 +298,7 @@ def bpe_fertility(docs: DataFrame, n_merges: int = 8) -> DataFrame:
     group-keyed partial+final aggregate onto |groups| rows. Nothing
     new is corpus-sized.
     """
-    per_doc = bpe_token_counts(docs, n_merges)
+    per_doc = bpe_token_counts(docs)
     base = docs.select(
         "doc_id",
         "source",

@@ -19,7 +19,7 @@ operators/similarity.py:kmeans_fit):
     The rank iteration therefore runs on the driver over the
     collected edge list — collecting it is the point, exactly like
     collecting k centroids. Running power iteration through
-    distributed joins on a 50-row table would add n_iter pointless
+    distributed joins on a 50-row table would add PAGERANK_ITERS pointless
     scheduling rounds; the corpus-sized graph case (doc-similarity
     graphs) is served by the distributed connected-components
     operators in dedup.py instead.
@@ -36,7 +36,7 @@ BEFORE the edge multiply, so every intermediate fits int64
 in-edges is order-independent. Dangling tools (no out-edges) drop
 their damped mass — the standard simplification; the base term keeps
 every node alive. The DuckDB twin (oracle.q_tool_pagerank) unrolls
-the same n_iter rounds as CTEs in the same integer math, so the
+the same PAGERANK_ITERS rounds as CTEs in the same integer math, so the
 gate check is hash-exact with no float tolerance anywhere.
 """
 
@@ -103,7 +103,11 @@ def _iterate_ranks(
     return rank
 
 
-def tool_pagerank(routed: DataFrame, n_iter: int = 5) -> DataFrame:
+# power-iteration rounds of tool_pagerank
+PAGERANK_ITERS = 5
+
+
+def tool_pagerank(routed: DataFrame) -> DataFrame:
     """Weighted PageRank over the tool-transition graph. Returns
     (tool, pagerank_scaled, pagerank) — pagerank is the scaled rank
     divided by SCALE once (a single int64→double division, identical
@@ -117,7 +121,7 @@ def tool_pagerank(routed: DataFrame, n_iter: int = 5) -> DataFrame:
             "tool_pagerank: no tool→tool transitions in input"
         )
     edges = [(r["src"], r["dst"], int(r["n"])) for r in edge_rows]
-    rank = _iterate_ranks(edges, n_iter, 85)
+    rank = _iterate_ranks(edges, PAGERANK_ITERS, 85)
     rows = [
         {
             "tool": t,

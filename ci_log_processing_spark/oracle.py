@@ -72,12 +72,12 @@ def pipeline_cte(
     t_src = (
         f"SELECT * FROM {transcripts_rel}"
         if transcripts_rel
-        else transcripts_sql("duckdb", "events")
+        else transcripts_sql("duckdb")
     )
     m_src = (
         f"SELECT conv_id FROM {meta_rel}"
         if meta_rel
-        else conv_meta_sql("duckdb", "events")
+        else conv_meta_sql("duckdb")
     )
 
     return f"""
@@ -373,7 +373,7 @@ def q_perf_flatten() -> str:
         "AS BIGINT), 0) AS value FROM base"
     )
     return f"""
-WITH pr AS ({perf_reports_sql('duckdb', 'events')}),
+WITH pr AS ({perf_reports_sql('duckdb')}),
 base AS (
   SELECT conv_id, perf_json AS j,
          json_extract_string(perf_json, '$.report.hostname') AS hostname
@@ -415,7 +415,7 @@ def q_meta_normalize() -> str:
     )
     change = new_or("$.ref.change", "$.change")
     return f"""
-WITH cm AS ({conv_meta_sql('duckdb', 'events')}),
+WITH cm AS ({conv_meta_sql('duckdb')}),
 base AS (SELECT conv_id, meta_json AS j FROM cm)
 SELECT conv_id,
   'zuul-executor' AS build_node,
@@ -441,7 +441,7 @@ def q_subunit() -> str:
     from .sources.derived import subunit_results_sql
 
     return f"""
-WITH su AS ({subunit_results_sql('duckdb', 'events')}),
+WITH su AS ({subunit_results_sql('duckdb')}),
 d AS (
   SELECT *, date_diff('microsecond', start_ts, end_ts) AS us FROM su
 )
@@ -594,8 +594,8 @@ def q_asof_state() -> str:
     from .sources.derived import config_updates_sql
 
     return f"""
-WITH t AS ({transcripts_sql('duckdb', 'events')}),
-cfg0 AS ({config_updates_sql('duckdb', 'events')}),
+WITH t AS ({transcripts_sql('duckdb')}),
+cfg0 AS ({config_updates_sql('duckdb')}),
 cfg AS (
   SELECT conv_id, cfg_ts, arg_max(cfg_state, cfg_seq) AS cfg_state
   FROM cfg0 GROUP BY conv_id, cfg_ts
@@ -614,8 +614,8 @@ def q_range_join_incidents() -> str:
     from .sources.derived import incident_windows_sql
 
     return f"""
-WITH t AS ({transcripts_sql('duckdb', 'events')}),
-inc AS ({incident_windows_sql('duckdb', 'events')})
+WITH t AS ({transcripts_sql('duckdb')}),
+inc AS ({incident_windows_sql('duckdb')})
 SELECT t.conv_id, t.turn_idx, inc.incident_id
 FROM t JOIN inc
   ON t.conv_id = inc.conv_id
@@ -630,8 +630,8 @@ def q_stream_interval_join() -> str:
     from .sources.derived import config_updates_sql
 
     return f"""
-WITH t AS ({transcripts_sql('duckdb', 'events')}),
-cfg AS ({config_updates_sql('duckdb', 'events')})
+WITH t AS ({transcripts_sql('duckdb')}),
+cfg AS ({config_updates_sql('duckdb')})
 SELECT t.conv_id, t.turn_idx, cfg.cfg_seq, cfg.cfg_state
 FROM t JOIN cfg
   ON t.conv_id = cfg.conv_id
@@ -1441,7 +1441,7 @@ def q_scd2_intervals() -> str:
     from .sources.derived import config_updates_sql
 
     return f"""
-WITH cfg AS ({config_updates_sql('duckdb', 'events')})
+WITH cfg AS ({config_updates_sql('duckdb')})
 SELECT conv_id,
   cfg_state AS state,
   cfg_ts AS valid_from,
@@ -1738,8 +1738,8 @@ def q_asof_forward() -> str:
     from .sources.derived import config_updates_sql
 
     return f"""
-WITH t AS ({transcripts_sql('duckdb', 'events')}),
-cfg0 AS ({config_updates_sql('duckdb', 'events')}),
+WITH t AS ({transcripts_sql('duckdb')}),
+cfg0 AS ({config_updates_sql('duckdb')}),
 cfg AS (
   SELECT conv_id, cfg_ts, arg_max(cfg_state, cfg_seq) AS cfg_state
   FROM cfg0 GROUP BY conv_id, cfg_ts

@@ -9,7 +9,7 @@ Usage (local or cluster — only master/size differ):
       --input-dir /root/testdata/sf0.001 \
       --output-dir /tmp/clp_out \
       [--batch-ts "2024-01-01 00:00:00"] \
-      [--impl native|pandas] [--no-skip-debug]
+      [--impl native|pandas]
 
   --transcripts-parquet PATH replaces --input-dir: it reads a
   materialized transcripts table, and a conv_meta.parquet beside it
@@ -46,7 +46,6 @@ def main(argv=None):
     # UDF then also parsed the timestamp, message and program/pid).
     # --impl pandas stays as the mandated-path parity option.
     ap.add_argument("--impl", choices=["native", "pandas"], default="native")
-    ap.add_argument("--no-skip-debug", action="store_true")
     ap.add_argument("--no-write", action="store_true",
                     help="compute every sink row and count per-sink "
                          "rows, but write to Spark's noop sink instead "
@@ -108,7 +107,6 @@ def main(argv=None):
         transcripts,
         spark,
         batch_ts=args.batch_ts,
-        skip_debug=not args.no_skip_debug,
         impl=args.impl,
         meta=meta,
     )

@@ -110,12 +110,10 @@ class RoutingPlan:
         self,
         spark: SparkSession,
         batch_ts: str = DEFAULT_BATCH_TS,
-        skip_debug: bool = True,
         impl: str = "native",
         meta: DataFrame | None = None,
     ):
         self.spark = spark
-        self.partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
         ref_year = datetime.datetime.fromisoformat(batch_ts).year
         self.parse = parse_cols(ref_year, impl)
         # both windows share one Window operator. Enrichment is a level
@@ -137,7 +135,7 @@ class RoutingPlan:
             )
             self._present_hint = F.broadcast(self.present)
             has_metadata = F.coalesce(F.col("_has_meta"), F.lit(False))
-        self.route = route_cols(skip_debug, has_metadata)
+        self.route = route_cols(has_metadata)
 
     def __call__(self, df: DataFrame) -> DataFrame:
         # parse must run BEHIND an exchange, not pipelined into the
@@ -153,7 +151,7 @@ class RoutingPlan:
         # file-split packing collapses (measured 94 s vs 54 s at
         # local[32] on 20M rows); the extra exchange of narrow raw
         # rows is the cheaper evil.
-        df = repartition_by_conv(df, self.spark, self.partitions)
+        df = repartition_by_conv(df, self.spark)
         out = (
             _with_parse(df, self.parse)
             .withColumns(self.windows)
@@ -169,7 +167,6 @@ def full_pipeline(
     df: DataFrame,
     spark: SparkSession,
     batch_ts: str = DEFAULT_BATCH_TS,
-    skip_debug: bool = True,
     impl: str = "native",
     meta: DataFrame | None = None,
 ) -> DataFrame:
@@ -178,7 +175,6 @@ def full_pipeline(
     return RoutingPlan(
         spark,
         batch_ts=batch_ts,
-        skip_debug=skip_debug,
         impl=impl,
         meta=meta,
     )(df)

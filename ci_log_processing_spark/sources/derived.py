@@ -14,7 +14,7 @@ def _s(dialect: str, expr: str) -> str:
     return f"CAST({expr} AS {t})"
 
 
-def perf_reports_sql(dialect: str, events_rel: str = "events") -> str:
+def perf_reports_sql(dialect: str) -> str:
     """One performance.json-shaped document per sampled event.
 
     Shape mirrors tests/performance-example.json: services[2] (one
@@ -47,12 +47,12 @@ def perf_reports_sql(dialect: str, events_rel: str = "events") -> str:
 SELECT concat('conv-', lpad({uid}, 4, '0')) AS conv_id,
        event_id,
        {json_expr} AS perf_json
-FROM {events_rel}
+FROM events
 WHERE event_id % 50 = 0
 """
 
 
-def conv_meta_sql(dialect: str, events_rel: str = "events") -> str:
+def conv_meta_sql(dialect: str) -> str:
     """Per-conversation raw metadata JSON in TWO source shapes —
     even user_id gets the new-Zuul nested form, odd the old flat
     form (reference makeZuulCapability dual-schema tolerance,
@@ -88,11 +88,11 @@ def conv_meta_sql(dialect: str, events_rel: str = "events") -> str:
 SELECT concat('conv-', lpad({uid}, 4, '0')) AS conv_id,
        CASE WHEN user_id % 2 = 0 THEN {new_shape} ELSE {old_shape} END AS meta_json,
        CASE WHEN user_id % 2 = 0 THEN 'new' ELSE 'old' END AS source_shape
-FROM (SELECT DISTINCT user_id FROM {events_rel} WHERE user_id % 7 <> 3) u
+FROM (SELECT DISTINCT user_id FROM events WHERE user_id % 7 <> 3) u
 """
 
 
-def subunit_results_sql(dialect: str, events_rel: str = "events") -> str:
+def subunit_results_sql(dialect: str) -> str:
     """Synthetic subunit-analog test records: (conv_id, test_name,
     status, start_ts, end_ts). Skips have end == start (duration 0,
     like setUpClass skips in the reference golden,
@@ -110,12 +110,12 @@ SELECT concat('conv-', lpad({uid}, 4, '0')) AS conv_id,
        CASE WHEN event_id % 7 = 0 THEN 'skip' ELSE 'success' END AS test_status,
        ts AS start_ts,
        CASE WHEN event_id % 7 = 0 THEN ts ELSE {end_expr} END AS end_ts
-FROM {events_rel}
+FROM events
 WHERE event_id % 25 = 0
 """
 
 
-def config_updates_sql(dialect: str, events_rel: str = "events") -> str:
+def config_updates_sql(dialect: str) -> str:
     """Sparse per-conversation config/state stream for the as-of join
     gate query (operators/asof.py): every 25th event flips the
     conversation's live config to that event's type. `event_id` is
@@ -126,12 +126,12 @@ SELECT concat('conv-', lpad({uid}, 4, '0')) AS conv_id,
        ts AS cfg_ts,
        event_type AS cfg_state,
        event_id AS cfg_seq
-FROM {events_rel}
+FROM events
 WHERE event_id % 25 = 0
 """
 
 
-def incident_windows_sql(dialect: str, events_rel: str = "events") -> str:
+def incident_windows_sql(dialect: str) -> str:
     """Per-conversation 12 h incident windows for the binned range
     join gate query (operators/rangejoin.py): every 40th event opens
     a window [ts, ts + 12 h] tagged with a deterministic incident id."""
@@ -146,6 +146,6 @@ SELECT concat('conv-', lpad({uid}, 4, '0')) AS conv_id,
        concat('inc-', {eid}) AS incident_id,
        ts AS start_ts,
        {end_expr} AS end_ts
-FROM {events_rel}
+FROM events
 WHERE event_id % 40 = 0
 """

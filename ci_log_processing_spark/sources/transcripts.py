@@ -126,7 +126,7 @@ def text_sql(dialect: str) -> str:
     END"""
 
 
-def transcripts_sql(dialect: str = "spark", events_rel: str = "events") -> str:
+def transcripts_sql(dialect: str = "spark") -> str:
     """SQL deriving the transcripts table, per dialect."""
     assert dialect in ("spark", "duckdb")
     eid = "event_id"
@@ -153,7 +153,7 @@ SELECT
   {text} AS text,
   {tool_col} AS tool,
   ts
-FROM {events_rel}
+FROM events
 """
 
 

@@ -31,8 +31,8 @@ set (delta-sized), the read is partition-pruned to touched buckets
 at explicit paths (no full-snapshot listing beyond the bucket dirs),
 the merge is apply_cdc's delta-window + anti-join, and the write is
 one job partitioned by bucket. Cost tracks |touched buckets| x
-bucket size, never snapshot size — choose n_buckets so a bucket is
-a few files' worth, exactly like table bucketing.
+bucket size, never snapshot size — CDC_BUCKETS is chosen so a bucket
+is a few files' worth, exactly like table bucketing.
 
 Time travel falls out: read_snapshot(version=V) picks each bucket's
 latest version <= V — every batch boundary is a readable snapshot
@@ -54,10 +54,12 @@ CDC_STREAM_SCHEMA = (
 )
 
 _PAYLOAD = ["text"]
+# hash buckets of the merged snapshot table
+CDC_BUCKETS = 8
 
 
-def _bucket(col, n_buckets: int):
-    return F.pmod(F.xxhash64(col), F.lit(int(n_buckets)))
+def _bucket(col):
+    return F.pmod(F.xxhash64(col), F.lit(CDC_BUCKETS))
 
 
 def _latest_versions(
@@ -87,13 +89,11 @@ def _latest_versions(
     return out
 
 
-def bootstrap_snapshot(
-    base: DataFrame, snap_dir: str, n_buckets: int = 16
-) -> None:
+def bootstrap_snapshot(base: DataFrame, snap_dir: str) -> None:
     """Write the initial snapshot as version 0 of every bucket."""
     staged = os.path.join(snap_dir, "_stage_bootstrap")
     (
-        base.withColumn("bucket", _bucket(F.col("doc_id"), n_buckets))
+        base.withColumn("bucket", _bucket(F.col("doc_id")))
         .write.mode("overwrite")
         .partitionBy("bucket")
         .parquet(staged)
@@ -148,7 +148,6 @@ def run_cdc_merge(
     changes_dir: str,
     snap_dir: str,
     checkpoint_dir: str,
-    n_buckets: int = 16,
 ) -> DataFrame:
     """Drain a CDC change stream (availableNow) into the bucketed
     snapshot; returns the final merged table read back."""
@@ -156,9 +155,7 @@ def run_cdc_merge(
 
     def _process(batch: DataFrame, batch_id: int) -> None:
         version = batch_id + 1
-        delta = batch.withColumn(
-            "bucket", _bucket(F.col("doc_id"), n_buckets)
-        ).persist()
+        delta = batch.withColumn("bucket", _bucket(F.col("doc_id"))).persist()
         try:
             touched = sorted(
                 r.bucket
@@ -189,9 +186,7 @@ def run_cdc_merge(
             )
             staged = os.path.join(snap_dir, f"_stage_b{batch_id}")
             (
-                merged.withColumn(
-                    "bucket", _bucket(F.col("doc_id"), n_buckets)
-                )
+                merged.withColumn("bucket", _bucket(F.col("doc_id")))
                 # key-sorted within each bucket file: parquet zone
                 # maps then prune point lookups inside a bucket, the
                 # same reason bucketed tables sort on the bucket key

@@ -7,7 +7,7 @@ for exactly this reason, logscraper.py follow mode).
 
 Per micro-batch (foreachBatch, like follow.py/hll_stream.py):
 
-  1. run the batch pipeline on the arriving segment;
+  1. apply the stream's one RoutingPlan to the arriving segment;
   2. INTRA-batch gaps: the same conv-keyed lead() window the batch
      operator uses;
   3. BRIDGE gaps: join each conversation's FIRST routed turn of this
@@ -61,7 +61,7 @@ from ..operators.aggregate import (
     hdr_bucket_counts,
     hdr_percentiles_from_buckets,
 )
-from ..plans.pipeline import full_pipeline
+from ..plans.pipeline import RoutingPlan
 from .follow import TRANSCRIPT_SCHEMA
 from .partials import drain, read_partials, write_partial
 
@@ -76,7 +76,6 @@ def run_streaming_hdr(
     spark: SparkSession,
     transcripts_dir: str,
     output_dir: str,
-    sub_bits: int = 4,
     meta=None,
 ) -> DataFrame:
     """Drain `transcripts_dir` (availableNow), accumulating HDR
@@ -86,10 +85,12 @@ def run_streaming_hdr(
     buckets_dir = os.path.join(output_dir, "buckets")
     state_dir = os.path.join(output_dir, "state")
 
+    plan = RoutingPlan(spark, meta=meta)
+
     def process_batch(batch_df, batch_id: int):
         if batch_df.isEmpty():
             return
-        routed = full_pipeline(batch_df, spark, meta=meta)
+        routed = plan(batch_df)
         turns = routed.select(
             "conv_id", "turn_idx", "sink", "filled_ts"
         ).persist()
@@ -137,9 +138,7 @@ def run_streaming_hdr(
             ).alias("gap_ms"),
         )
         write_partial(
-            hdr_bucket_counts(
-                intra.unionAll(bridge), "sink", "gap_ms", sub_bits
-            ),
+            hdr_bucket_counts(intra.unionAll(bridge), "sink", "gap_ms"),
             buckets_dir,
             batch_id,
         )

@@ -3,8 +3,8 @@ HyperLogLog partials — the sketch pattern that replaces
 COUNT(DISTINCT) when the stream never ends and the key set never
 fits in state.
 
-Per micro-batch: run the batch pipeline (foreachBatch, same
-rationale as follow.py — the ffill window is conversation-ordered
+Per micro-batch: apply the stream's one RoutingPlan (foreachBatch,
+same rationale as follow.py — the ffill window is conversation-ordered
 and a conversation's turns arrive together), reduce the batch to
 its (sink, j, mj) register PARTIALS, and write them to a
 batch-addressed partial (`registers/b<batch_id>`, mode overwrite;
@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.aggregate import hll_estimate, hll_partial_registers
-from ..plans.pipeline import full_pipeline
+from ..plans.pipeline import RoutingPlan
 from .follow import TRANSCRIPT_SCHEMA
 from .partials import drain, read_partials, write_partial
 
@@ -52,10 +52,12 @@ def run_streaming_hll(
     (sink, hll_distinct) read back from the register sink."""
     regs_dir = os.path.join(output_dir, "registers")
 
+    plan = RoutingPlan(spark, meta=meta)
+
     def process_batch(batch_df, batch_id: int):
         if batch_df.isEmpty():
             return
-        routed = full_pipeline(batch_df, spark, meta=meta)
+        routed = plan(batch_df)
         # overwrite the batch's own subdir: a replayed batch lands in
         # the same place, and max-merge absorbs it either way
         write_partial(hll_partial_registers(routed), regs_dir, batch_id)

@@ -46,25 +46,16 @@ _POSTINGS_SCHEMA = (
 )
 
 
-def read_index(
-    spark: SparkSession,
-    index_dir: str,
-    min_df: int = 1,
-    max_df: int = 64,
-) -> DataFrame:
+def read_index(spark: SparkSession, index_dir: str) -> DataFrame:
     """The served index: finalize over the union of batch partials.
     Doc-disjoint batches make the union itself the merge — the df
     band and posting serialization run on the folded grain."""
     td = read_partials(spark, index_dir, _POSTINGS_SCHEMA)
-    return finalize_index(td, min_df=min_df, max_df=max_df)
+    return finalize_index(td)
 
 
 def run_index_maintenance(
-    spark: SparkSession,
-    docs_dir: str,
-    out_dir: str,
-    min_df: int = 1,
-    max_df: int = 64,
+    spark: SparkSession, docs_dir: str, out_dir: str
 ) -> DataFrame:
     """Drain `docs_dir` (availableNow); each micro-batch writes its
     posting-grain partial to <out>/index/b<batch_id> (overwrite —
@@ -85,4 +76,4 @@ def run_index_maintenance(
         _process,
         max_files_per_trigger=1,
     )
-    return read_index(spark, index_dir, min_df=min_df, max_df=max_df)
+    return read_index(spark, index_dir)

@@ -57,13 +57,12 @@ _CORPUS_SCHEMA = (
     "h string, doc_id long, text string, event_ts timestamp, "
     "quality double"
 )
+# lowest quality score a streamed document needs to be kept
+INGEST_MIN_QUALITY = 0.45
 
 
 def run_ingest_curation(
-    spark: SparkSession,
-    docs_dir: str,
-    out_dir: str,
-    min_quality: float = 0.30,
+    spark: SparkSession, docs_dir: str, out_dir: str
 ) -> DataFrame:
     """Drain `docs_dir` with an availableNow trigger; per batch:
     quality-gate, dedup against <out>/index, append survivors to
@@ -78,7 +77,7 @@ def run_ingest_curation(
     def _process(batch: DataFrame, batch_id: int) -> None:
         scored = quality_scores(
             batch, keep_cols=("text", "event_ts")
-        ).filter(F.col("quality") >= min_quality)
+        ).filter(F.col("quality") >= INGEST_MIN_QUALITY)
         fresh = incremental_dedup(
             scored.select("doc_id", "text", "event_ts", "quality"),
             read_partials(

@@ -54,17 +54,13 @@ _SH_SCHEMA = "doc_id long, shingles array<string>"
 
 
 def run_neardup_ingestion(
-    spark: SparkSession,
-    docs_dir: str,
-    out_dir: str,
-    threshold: float = 0.6,
+    spark: SparkSession, docs_dir: str, out_dir: str
 ) -> DataFrame:
     """Drain `docs_dir` with an availableNow trigger; per batch:
     exact intra-batch dedup, near-dup anti-join against the persisted
     band index, append survivors + their band/shingle index rows.
     Returns the curated corpus read back."""
     from ..operators.dedup import (
-        CANDIDATE_CAP,
         SHINGLE_K,
         _lsh_shingles_and_bands,
         exact_dedup_keep_first,
@@ -87,8 +83,6 @@ def run_neardup_ingestion(
             bands_b,
             read_partials(ss, sh_dir, _SH_SCHEMA, before=batch_id),
             read_partials(ss, bands_dir, _BANDS_SCHEMA, before=batch_id),
-            threshold,
-            CANDIDATE_CAP,
         )
         fresh = firsts.join(dup_ids, "doc_id", "left_anti")
         # one materialization feeds all three batch-scoped writes

@@ -36,6 +36,9 @@ SESSION_OUTPUT_SCHEMA = (
     "conv_id string, turns long, first_us long, last_us long, status string"
 )
 SESSION_STATE_SCHEMA = "turns long, first_us long, last_us long"
+# how long run_stateful_sessionize waits for evictions; headroom for
+# loaded machines
+EVICTION_DEADLINE_SEC = 180.0
 
 
 def _sessionize(
@@ -94,9 +97,7 @@ def run_stateful_sessionize(
     spark: SparkSession,
     transcripts_dir: str,
     output_dir: str,
-    max_files_per_trigger: int = 1,
     wait_evictions: int = 0,
-    eviction_deadline_sec: float = 60.0,
 ):
     """Run the stateful sessionizer over a transcript directory and
     return the emitted rows read back from the sink.
@@ -116,7 +117,7 @@ def run_stateful_sessionize(
 
     stream = (
         spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 1)
         .parquet(transcripts_dir)
     )
     sessions = stream.groupBy("conv_id").applyInPandasWithState(
@@ -166,7 +167,7 @@ def run_stateful_sessionize(
     # source is drained (a batch reported zero input rows) AND the
     # requested number of evictions has landed in the sink.
     try:
-        deadline = time.time() + eviction_deadline_sec
+        deadline = time.time() + EVICTION_DEADLINE_SEC
         drained_empty_polls = 0
         while time.time() < deadline:
             lp = q.lastProgress

@@ -32,6 +32,8 @@ from .watermark import _append_drain
 CONFIG_SCHEMA = (
     "cfg_conv_id string, cfg_ts timestamp, cfg_state string, cfg_seq long"
 )
+# how far back, in seconds, a config update still joins a turn
+LOOKBACK_SEC = 21600
 
 
 def streaming_interval_join(
@@ -39,10 +41,9 @@ def streaming_interval_join(
     transcripts_dir: str,
     config_dir: str,
     output_dir: str,
-    lookback_sec: int = 3600,
 ) -> DataFrame:
     """Join each streamed turn to every streamed config update of the
-    same conversation with cfg_ts in [ts - lookback_sec, ts]
+    same conversation with cfg_ts in [ts - LOOKBACK_SEC, ts]
     (inclusive both ends), availableNow trigger, append sink."""
     left = (
         spark.readStream.schema(TRANSCRIPT_SCHEMA)
@@ -61,7 +62,7 @@ def streaming_interval_join(
         F.expr(
             f"""
             conv_id = cfg_conv_id AND
-            cfg_ts >= ts - INTERVAL {lookback_sec} SECOND AND
+            cfg_ts >= ts - INTERVAL {LOOKBACK_SEC} SECOND AND
             cfg_ts <= ts
             """
         ),

@@ -71,7 +71,7 @@ def test_tfidf_ranking_and_score(spark):
         ],
         "doc_id long, text string",
     )
-    out = tfidf_top_terms(docs, k=2)
+    out = tfidf_top_terms(docs)
     got = {
         (r["doc_id"], r["term_rank"]): (r["term"], r["tf"], r["df_docs"])
         for r in out.collect()
@@ -91,12 +91,6 @@ def test_tfidf_ranking_and_score(spark):
 
     scores = {r["term"]: r["tfidf"] for r in out.filter("doc_id = 1").collect()}
     assert scores["apple"] == pytest.approx(2 * math.log(3 / 1))
-
-
-def test_tfidf_k_validation(spark):
-    docs = spark.createDataFrame([(1, "x")], "doc_id long, text string")
-    with pytest.raises(ValueError, match="k must be"):
-        tfidf_top_terms(docs, k=0)
 
 
 def test_session_window_gap_semantics(spark):
@@ -402,6 +396,7 @@ def test_hdr_latency_error_bound_and_merge(spark):
     import random
 
     from ci_log_processing_spark.operators.aggregate import (
+        HDR_SUB_BITS,
         hdr_latency_percentiles,
         hdr_partial_buckets,
         hdr_percentiles_from_buckets,
@@ -420,18 +415,17 @@ def test_hdr_latency_error_bound_and_merge(spark):
         rows, "conv_id string, turn_idx int, sink string, "
         "filled_ts timestamp",
     )
-    sub_bits = 4
     exact = {r["sink"]: r for r in turn_latency_percentiles(df).collect()}
     hdr = {
         r["sink"]: r
-        for r in hdr_latency_percentiles(df, sub_bits=sub_bits).collect()
+        for r in hdr_latency_percentiles(df).collect()
     }
     e, h = exact["tool_calls"], hdr["tool_calls"]
     assert h["n_gaps"] == e["n_calls"] == 40 * 29
     for p in ("p50", "p95", "p99"):
         ex, lb = e[f"{p}_ms"], h[f"{p}_ms_lb"]
         assert lb <= ex, (p, lb, ex)
-        assert ex - lb <= ex * 2.0 ** -sub_bits, (p, lb, ex)
+        assert ex - lb <= ex * 2.0 ** -HDR_SUB_BITS, (p, lb, ex)
 
     # merge property: per-conv-slice partials sum into the same
     # histogram (and thus the same percentiles) as the single pass
@@ -440,8 +434,8 @@ def test_hdr_latency_error_bound_and_merge(spark):
     import pyspark.sql.functions as F
 
     merged = (
-        hdr_partial_buckets(half_a, sub_bits=sub_bits)
-        .unionAll(hdr_partial_buckets(half_b, sub_bits=sub_bits))
+        hdr_partial_buckets(half_a)
+        .unionAll(hdr_partial_buckets(half_b))
         .groupBy("sink", "bucket")
         .agg(F.sum("c").alias("c"))
     )

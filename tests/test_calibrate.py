@@ -5,9 +5,8 @@ on planted violators, and leave already-monotone rates alone."""
 
 from fractions import Fraction
 
-import pytest
-
 from ci_log_processing_spark.operators.calibrate import (
+    CALIBRATION_BINS,
     reliability_isotonic,
 )
 
@@ -56,7 +55,7 @@ def test_iso_equals_pava_reference(spark):
     df = _scored(spark, PLANTED)
     got = {
         r["bin"]: r
-        for r in reliability_isotonic(df, n_bins=8).collect()
+        for r in reliability_isotonic(df).collect()
     }
     want = _pava([n for n, _ in PLANTED], [p for _, p in PLANTED])
     assert sorted(got) == list(range(8))
@@ -74,25 +73,20 @@ def test_iso_equals_pava_reference(spark):
 
 def test_iso_identity_when_already_monotone(spark):
     mono = [(10, 0), (10, 2), (10, 5), (10, 9)]
-    got = reliability_isotonic(_scored(spark, mono), n_bins=4).collect()
+    got = reliability_isotonic(_scored(spark, mono)).collect()
     for r in got:
         assert r["iso_micro"] == r["rate_micro"]
 
 
 def test_score_lo_edges_and_empty_bins(spark):
-    # scores 0 and 9, n_bins=4 -> span 10, width 2.5: docs land in
-    # bins 0 and 3 only; empty bins are absent, edges exact
+    # scores 0 and 9, 8 bins -> span 10, width 1.25: docs land in
+    # bins 0 and 7 only; empty bins are absent, edges exact
+    assert CALIBRATION_BINS == 8
     rows = [(1, 0, 0), (2, 0, 1), (3, 9, 1)]
     df = spark.createDataFrame(rows, "doc_id long, score_bits long, label int")
-    got = {r["bin"]: r for r in reliability_isotonic(df, n_bins=4).collect()}
-    assert sorted(got) == [0, 3]
+    got = {r["bin"]: r for r in reliability_isotonic(df).collect()}
+    assert sorted(got) == [0, 7]
     assert got[0]["score_lo"] == 0
-    # bin 3 starts at ceil(3*10/4) = 8
-    assert got[3]["score_lo"] == 8
-    assert got[0]["iso_micro"] == 500000 and got[3]["iso_micro"] == 1000000
-
-
-def test_rejects_bad_n_bins(spark):
-    df = spark.createDataFrame([(1, 0, 0)], "doc_id long, score_bits long, label int")
-    with pytest.raises(ValueError):
-        reliability_isotonic(df, n_bins=0)
+    # bin 7 starts at ceil(7*10/8) = 9
+    assert got[7]["score_lo"] == 9
+    assert got[0]["iso_micro"] == 500000 and got[7]["iso_micro"] == 1000000

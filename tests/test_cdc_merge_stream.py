@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ci_log_processing_spark.streaming.cdc_merge import (
+    CDC_BUCKETS,
     _latest_versions,
     bootstrap_snapshot,
     read_snapshot,
@@ -49,7 +50,7 @@ def _write_batches(spark, ch_dir, batches):
 
 def test_sequential_merge_and_bucket_rewrite(spark, work):
     snap = os.path.join(work, "snap")
-    bootstrap_snapshot(_base(spark), snap, n_buckets=4)
+    bootstrap_snapshot(_base(spark), snap)
     v0 = _latest_versions(spark, snap, 1 << 60)
     assert set(v0.values()) == {0}
 
@@ -62,9 +63,7 @@ def test_sequential_merge_and_bucket_rewrite(spark, work):
             [(1, "U", 3, "one-v3"), (100, "I", 4, "hundred")],
         ],
     )
-    out = run_cdc_merge(
-        spark, ch_dir, snap, os.path.join(work, "chk"), n_buckets=4
-    )
+    out = run_cdc_merge(spark, ch_dir, snap, os.path.join(work, "chk"))
     got = {r.doc_id: r.text for r in out.collect()}
     assert got[1] == "one-v3"
     assert 2 not in got
@@ -81,7 +80,7 @@ def test_sequential_merge_and_bucket_rewrite(spark, work):
 
 def test_time_travel_at_version_boundaries(spark, work):
     snap = os.path.join(work, "snap")
-    bootstrap_snapshot(_base(spark, 10), snap, n_buckets=4)
+    bootstrap_snapshot(_base(spark, 10), snap)
     ch_dir = os.path.join(work, "ch")
     _write_batches(
         spark,
@@ -91,9 +90,7 @@ def test_time_travel_at_version_boundaries(spark, work):
             [(3, "I", 2, "three-back")],
         ],
     )
-    run_cdc_merge(
-        spark, ch_dir, snap, os.path.join(work, "chk"), n_buckets=4
-    )
+    run_cdc_merge(spark, ch_dir, snap, os.path.join(work, "chk"))
     v0 = {r.doc_id: r.text for r in read_snapshot(spark, snap, 0).collect()}
     assert v0[3] == "base-3" and len(v0) == 10
     v_final = {
@@ -111,13 +108,15 @@ def test_time_travel_at_version_boundaries(spark, work):
 
 def test_replay_excludes_own_partial_version(spark, work):
     snap = os.path.join(work, "snap")
-    bootstrap_snapshot(_base(spark, 10), snap, n_buckets=2)
+    bootstrap_snapshot(_base(spark, 10), snap)
     # simulate a crashed batch-0 attempt: a partial v1 exists in the
     # bucket doc 0 hashes to, with GARBAGE content; the real batch 0
     # must neither read it (version exclusion) nor leave it behind
     # (delete-then-rename promote)
     b0 = spark.range(1).select(
-        F.pmod(F.xxhash64(F.lit(0).cast("long")), F.lit(2)).alias("b")
+        F.pmod(F.xxhash64(F.lit(0).cast("long")), F.lit(CDC_BUCKETS)).alias(
+            "b"
+        )
     ).collect()[0].b
     garbage_dir = os.path.join(snap, f"bucket={b0}", "v1")
     spark.createDataFrame(
@@ -126,9 +125,7 @@ def test_replay_excludes_own_partial_version(spark, work):
 
     ch_dir = os.path.join(work, "ch")
     _write_batches(spark, ch_dir, [[(0, "U", 1, "zero-v2")]])
-    out = run_cdc_merge(
-        spark, ch_dir, snap, os.path.join(work, "chk"), n_buckets=2
-    )
+    out = run_cdc_merge(spark, ch_dir, snap, os.path.join(work, "chk"))
     got = {r.doc_id: r.text for r in out.collect()}
     assert 999 not in got  # garbage replaced, not merged
     assert got[0] == "zero-v2"

@@ -104,20 +104,19 @@ def test_compaction_plan_running_sum_bins(spark):
     )
 
     files = spark.createDataFrame(
-        [("p", 1, 60), ("p", 2, 60), ("p", 3, 60), ("q", 4, 250)],
+        [("p", 1, 2500), ("p", 2, 2500), ("p", 3, 2500), ("q", 4, 10000)],
         "source string, doc_id long, n_chars long",
     )
     plan = {
         r.file_id: r.bin_idx
-        for r in compaction_plan(files, target_bytes=100).collect()
+        for r in compaction_plan(files).collect()
     }
-    # cum_before: 0, 60, 120 -> bins 0, 0, 1; q restarts at 0
+    # target 4096: cum_before 0, 2500, 5000 -> bins 0, 0, 1; q
+    # restarts at 0
     assert plan == {1: 0, 2: 0, 3: 1, 4: 0}
     summ = {
         (r.part, r.bin_idx): (r.n_files, r.out_bytes)
-        for r in compaction_summary(
-            compaction_plan(files, target_bytes=100)
-        ).collect()
+        for r in compaction_summary(compaction_plan(files)).collect()
     }
-    assert summ == {("p", 0): (2, 120), ("p", 1): (1, 60),
-                    ("q", 0): (1, 250)}
+    assert summ == {("p", 0): (2, 5000), ("p", 1): (1, 2500),
+                    ("q", 0): (1, 10000)}

@@ -85,51 +85,62 @@ def test_exact_star_edges_linear_in_group_size(spark):
 
 
 def test_duplicate_spans_merging(spark):
-    from ci_log_processing_spark.operators.dedup import duplicate_spans
+    from ci_log_processing_spark.operators.dedup import (
+        DUP_SPAN_K,
+        duplicate_spans,
+    )
 
-    shared = " ".join(f"s{i}" for i in range(6))  # 6 shared tokens
+    k = DUP_SPAN_K
+    shared = " ".join(f"s{i}" for i in range(k + 2))  # k+2 shared tokens
+    rep = " ".join(f"r{i}" for i in range(k))
     docs = spark.createDataFrame(
         [
             (1, f"{shared} unique tail one two"),
             (2, f"prefix bits {shared} other end"),
-            (3, "no overlap here at all whatsoever truly"),
-            # intra-doc repeat: the same 4-gram twice in ONE doc
-            (4, "r1 r2 r3 r4 gap r1 r2 r3 r4"),
+            (3, " ".join(f"solo{i}" for i in range(k + 5))),
+            # intra-doc repeat: the same k-gram twice in ONE doc
+            (4, f"{rep} gap {rep}"),
         ],
         "doc_id long, text string",
     )
     out = {
         r["doc_id"]: (r["n_spans"], r["n_dup_tokens"])
-        for r in duplicate_spans(docs, k=4).collect()
+        for r in duplicate_spans(docs).collect()
     }
-    # docs 1+2 share three 4-gram spans (positions merge into ONE
-    # interval covering the 6 shared tokens)
-    assert out[1] == (1, 6)
-    assert out[2] == (1, 6)
+    # docs 1+2 share three k-gram spans (positions merge into ONE
+    # interval covering the k+2 shared tokens)
+    assert out[1] == (1, k + 2)
+    assert out[2] == (1, k + 2)
     assert 3 not in out
-    # doc 4: both occurrences flagged; [0,3] and [5,8] don't touch
-    assert out[4] == (2, 8)
+    # doc 4: both occurrences flagged; [0,k-1] and [k+1,2k] don't touch
+    assert out[4] == (2, 2 * k)
 
 
 def test_duplicate_spans_touching_intervals_merge(spark):
-    from ci_log_processing_spark.operators.dedup import duplicate_spans
+    from ci_log_processing_spark.operators.dedup import (
+        DUP_SPAN_K,
+        duplicate_spans,
+    )
 
-    # doc1 tokens 0..7 are covered by two flagged spans [0,3] and
-    # [4,7] that TOUCH (4 == 3 + 1): they must merge into one
-    # maximal interval, not report two
+    # doc1 tokens 0..2k-1 are covered by two flagged spans [0,k-1]
+    # and [k,2k-1] that TOUCH (k == (k-1) + 1): they must merge into
+    # one maximal interval, not report two
+    k = DUP_SPAN_K
+    head = " ".join(f"t{i}" for i in range(k))
+    tail = " ".join(f"t{i}" for i in range(k, 2 * k))
     docs = spark.createDataFrame(
         [
-            (1, "t0 t1 t2 t3 t4 t5 t6 t7"),
-            (2, "t0 t1 t2 t3 x"),
-            (3, "y t4 t5 t6 t7"),
+            (1, f"{head} {tail}"),
+            (2, f"{head} x"),
+            (3, f"y {tail}"),
         ],
         "doc_id long, text string",
     )
     out = {
         r["doc_id"]: (r["n_spans"], r["n_dup_tokens"])
-        for r in duplicate_spans(docs, k=4).collect()
+        for r in duplicate_spans(docs).collect()
     }
-    assert out[1] == (1, 8), out
+    assert out[1] == (1, 2 * k), out
 
 
 def test_components_keeper_rate_on_clusters(spark):

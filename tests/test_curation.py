@@ -68,7 +68,7 @@ def test_top_ngrams_counts_and_ties(spark):
     )
     out = {
         r["ngram"]: (r["occurrences"], r["doc_freq"], r["rank"])
-        for r in top_ngrams(docs, n=2, k=10).collect()
+        for r in top_ngrams(docs).collect()
     }
     assert out["a b"] == (3, 2, 1)
     # ties at occurrences=1 break lexicographically
@@ -76,7 +76,7 @@ def test_top_ngrams_counts_and_ties(spark):
     # top-k must plan as TakeOrderedAndProject (per-partition heap),
     # never a global sort of all distinct n-grams
     plan = (
-        top_ngrams(docs, n=2, k=10)
+        top_ngrams(docs)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -90,22 +90,22 @@ def test_chunk_documents_coverage_and_overlap(spark):
     docs = spark.createDataFrame(
         [
             (1, " ".join(f"t{i}" for i in range(10))),   # short: 1 chunk
-            (2, " ".join(f"t{i}" for i in range(100))),  # 3 chunks
+            (2, " ".join(f"t{i}" for i in range(100))),  # 2 chunks
         ],
         "doc_id long, text string",
     )
     out = sorted(
         (r["doc_id"], r["chunk_idx"], r["start_tok"], r["n_chunk_tokens"])
-        for r in chunk_documents(docs, chunk_tokens=40, overlap=10).collect()
+        for r in chunk_documents(docs).collect()
     )
-    # doc 1: one short chunk; doc 2: stride 30 -> starts 0,30,60
+    # doc 1: one short chunk; doc 2: 64-token windows at stride 48 ->
+    # starts 0,48, the last one short
     assert out == [
         (1, 0, 0, 10),
-        (2, 0, 0, 40),
-        (2, 1, 30, 40),
-        (2, 2, 60, 40),
+        (2, 0, 0, 64),
+        (2, 1, 48, 52),
     ]
-    # every token of doc 2 is covered: 0-39, 30-69, 60-99
+    # every token of doc 2 is covered: 0-63, 48-99
 
 
 def test_c4_line_filter_rules(spark):
@@ -128,21 +128,20 @@ def test_c4_line_filter_rules(spark):
     assert out[3]["n_kept"] == 0 and out[3]["doc_kept"] is False
 
 
-def test_top_ngrams_trigram_short_docs(spark):
+def test_top_ngrams_short_docs(spark):
     from ci_log_processing_spark.operators.curation import top_ngrams
 
     docs = spark.createDataFrame(
-        [(1, "a"), (2, "a b"), (3, "a b c a b c")],
+        [(1, "a"), (2, ""), (3, "a b c a b c")],
         "doc_id long, text string",
     )
     out = {
         r["ngram"]: r["occurrences"]
-        for r in top_ngrams(docs, n=3, k=5).collect()
+        for r in top_ngrams(docs).collect()
     }
     # docs 1-2 are shorter than n and contribute nothing (and must
     # not crash the slice under ANSI)
-    assert out["a b c"] == 2
-    assert out["b c a"] == 1
+    assert out == {"a b": 2, "b c": 2, "c a": 1}
 
 
 def test_overlap_decontaminate_ratio_and_plan(spark):
@@ -161,7 +160,7 @@ def test_overlap_decontaminate_ratio_and_plan(spark):
         "doc_id long, text string",
     )
     bench = docs.filter("doc_id = 1")
-    q = overlap_decontaminate(docs, bench, k=5, threshold=0.5)
+    q = overlap_decontaminate(docs, bench)
     out = {r["doc_id"]: r for r in q.collect()}
     assert out[1]["overlap_frac"] == 1.0 and out[1]["contaminated"]
     # doc 2: 6 shingles, 4 of them inside the benchmark text
@@ -239,7 +238,7 @@ def test_perplexity_buckets_orders_by_fluency(spark):
          (4, "s", rare), (5, "s", rare), (6, "s", "the the zyx wvu a b")],
         "doc_id long, source string, text string",
     )
-    out = {r["doc_id"]: r for r in perplexity_buckets(docs, 3).collect()}
+    out = {r["doc_id"]: r for r in perplexity_buckets(docs).collect()}
     # boilerplate (all-common tokens) lands in the head bucket,
     # rare-token gibberish in the tail
     assert out[1]["ppl_bucket"] == 0
@@ -470,25 +469,23 @@ def test_decontaminate_spans_excision(spark):
 
     docs = spark.createDataFrame(
         [
-            # two hits at pos 1 and 3 (k=2): [1,2] and [3,4] touch ->
-            # ONE merged island covering tokens 1..4
+            # two hits at pos 1 and 2 (k=3): [1,3] and [2,4] overlap
+            # -> ONE merged island covering tokens 1..4
             (0, "keep The Quick brown Fox jumps end"),
             (1, "totally clean document here"),
-            (2, "the quick brown fox"),  # everything after pos 0? no:
-            # hits at 0 and 2 -> island [0,3] covers the WHOLE doc
+            (2, "the quick brown fox"),
+            # hits at 0 and 1 -> island [0,3] covers the WHOLE doc
             (3, "x y"),  # shorter than any shingle overlap
         ],
         "doc_id long, text string",
     )
-    # k=2 shingles of the snippet: "the quick","quick brown","brown fox"
+    # k=3 shingles of the snippet: "the quick brown", "quick brown fox"
     out = {
         r["doc_id"]: r
-        for r in decontaminate_spans(
-            docs, ["the quick brown fox"], k=2
-        ).collect()
+        for r in decontaminate_spans(docs, ["the quick brown fox"]).collect()
     }
     assert len(out) == 4
-    # doc 0: flagged positions 1,2,3 (lowercased match) -> one island
+    # doc 0: flagged positions 1,2 (lowercased match) -> one island
     # [1, 4]; original-CASE tokens removed, 'keep'+'jumps'+'end' stay
     assert out[0]["n_spans"] == 1
     assert out[0]["n_tokens_removed"] == 4
@@ -501,13 +498,13 @@ def test_decontaminate_spans_excision(spark):
     assert out[2]["n_spans"] == 1
     assert out[2]["n_tokens_removed"] == 4
     assert out[2]["clean_text"] == ""
-    # doc 3: no shingle of length 2 matches
+    # doc 3: shorter than a shingle
     assert out[3]["clean_text"] == "x y"
 
     import pytest
 
     with pytest.raises(ValueError):
-        decontaminate_spans(docs, ["short"], k=5)  # no >=5-token snippet
+        decontaminate_spans(docs, ["short"])  # no >=3-token snippet
 
 
 def test_decontaminate_spans_big_set_routes_to_semijoin(spark):
@@ -515,8 +512,8 @@ def test_decontaminate_spans_big_set_routes_to_semijoin(spark):
     inlined as an IN-list literal (plan-size cliff for huge suites):
     the operator auto-routes to a broadcast LeftSemi join with
     bit-identical output. Exercise both sides of the boundary on the
-    same inputs: the snippet below yields 3 distinct k=2 shingle
-    keys, so max_literal_keys=3 stays literal and =2 trips the
+    same inputs: the snippet below yields 2 distinct k=3 shingle
+    keys, so max_literal_keys=2 stays literal and =1 trips the
     semi-join."""
     from ci_log_processing_spark.operators.curation import (
         decontaminate_spans,
@@ -532,10 +529,10 @@ def test_decontaminate_spans_big_set_routes_to_semijoin(spark):
         ],
         "doc_id long, text string",
     )
-    snips = ["the quick brown fox"]  # 3 distinct k=2 shingles
+    snips = ["the quick brown fox"]  # 2 distinct k=3 shingles
 
-    lit = decontaminate_spans(docs, snips, k=2, max_literal_keys=3)
-    big = decontaminate_spans(docs, snips, k=2, max_literal_keys=2)
+    lit = decontaminate_spans(docs, snips, max_literal_keys=2)
+    big = decontaminate_spans(docs, snips, max_literal_keys=1)
 
     lit_plan = lit._jdf.queryExecution().executedPlan().toString()
     big_plan = big._jdf.queryExecution().executedPlan().toString()
@@ -574,7 +571,7 @@ def test_fuzzy_decontaminate_near_dup_and_plan(spark):
         "doc_id long, text string",
     )
     bench = spark.createDataFrame([(100, base)], "doc_id long, text string")
-    q = fuzzy_decontaminate(docs, bench, threshold=0.5, k=5)
+    q = fuzzy_decontaminate(docs, bench)
     out = {r["doc_id"]: r for r in q.collect()}
     assert sorted(out) == [1, 2, 3, 4]  # one row per corpus doc
     assert out[1]["contaminated"] and out[1]["best_jaccard"] == 1.0
@@ -590,18 +587,6 @@ def test_fuzzy_decontaminate_near_dup_and_plan(spark):
     # corpus is never the build side and never sort-merge-joined
     assert "SortMergeJoin" not in plan, plan
     assert "BroadcastHashJoin" in plan, plan
-
-
-def test_fuzzy_decontaminate_rejects_bad_threshold(spark):
-    from ci_log_processing_spark.operators.curation import (
-        fuzzy_decontaminate,
-    )
-
-    docs = spark.createDataFrame([(1, "a b c d e f")], "doc_id long, text string")
-    import pytest
-
-    with pytest.raises(ValueError):
-        fuzzy_decontaminate(docs, docs, threshold=0.0)
 
 
 def test_data_card_matches_pandas(spark):

@@ -76,7 +76,7 @@ def test_sessionize_islands(spark):
     )
     out = {
         (r.user_id, r.session_idx): r
-        for r in sessionize_events(events, gap_minutes=30).collect()
+        for r in sessionize_events(events).collect()
     }
     assert len(out) == 3
     s1 = out[("u1", 1)]
@@ -94,35 +94,8 @@ def test_sessionize_gap_boundary_is_exclusive(spark):
         [("u", ts(2024, 1, 1, 0, 0)), ("u", ts(2024, 1, 1, 0, 30))],
         "user_id string, ts timestamp",
     )
-    out = sessionize_events(events, gap_minutes=30).collect()
+    out = sessionize_events(events).collect()
     assert len(out) == 1 and out[0].n_events == 2
-
-
-def test_resize_identity_equals_phash(spark):
-    """Resizing to the image's own dimensions is the identity under
-    nearest-neighbor indexing, so resized_hash must equal the decode
-    operator's full-pixel phash — resize and decode agree on the
-    byte layout."""
-    from ci_log_processing_spark.operators.multimodal import (
-        attach_media,
-        decode_image_features,
-        resize_images,
-    )
-
-    docs = spark.createDataFrame(
-        [(0, "hello world bmp pixels", "s"),
-         (3, "another doc text here!", "s")],
-        "doc_id long, text string, source string",
-    )
-    media = attach_media(docs)
-    feats = {
-        r.doc_id: r for r in decode_image_features(media).collect()
-    }
-    for doc_id, f in feats.items():
-        got = resize_images(
-            media.filter(media.doc_id == doc_id), f.width, f.height
-        ).collect()[0]
-        assert got.resized_hash == f.phash
 
 
 def test_resize_downsample_matches_python(spark):
@@ -138,7 +111,7 @@ def test_resize_downsample_matches_python(spark):
     docs = spark.createDataFrame(
         [(0, text, "s")], "doc_id long, text string, source string"
     )
-    got = resize_images(attach_media(docs), 4, 4).collect()[0]
+    got = resize_images(attach_media(docs)).collect()[0]
     w, h = _bmp_geometry(len(text))
     pixels = _cycle(text.encode(), w * h * 3)
     out = bytearray()

@@ -31,7 +31,7 @@ def test_exact_finds_planted_copies(spark, corpus):
 
 
 def test_jaccard_finds_near_dups(spark, corpus):
-    pairs = ngram_jaccard_pairs(corpus, threshold=0.6).collect()
+    pairs = ngram_jaccard_pairs(corpus).collect()
     # each near-dup (base + 2000000) should pair with its base at
     # high jaccard; exact copies pair at jaccard 1.0
     exact_pairs = [p for p in pairs if p["jaccard"] == 1.0]
@@ -46,11 +46,11 @@ def test_jaccard_finds_near_dups(spark, corpus):
 def test_lsh_is_subset_of_jaccard(spark, corpus):
     jac = {
         (p["doc_a"], p["doc_b"])
-        for p in ngram_jaccard_pairs(corpus, threshold=0.6).collect()
+        for p in ngram_jaccard_pairs(corpus).collect()
     }
     lsh = {
         (p["doc_a"], p["doc_b"])
-        for p in minhash_lsh_pairs(corpus, spark, threshold=0.6).collect()
+        for p in minhash_lsh_pairs(corpus, spark).collect()
     }
     # LSH candidates are verified -> no false positives; banding can
     # only lose pairs, never invent them
@@ -86,7 +86,7 @@ def test_simhash_pairs_banding(spark, corpus):
     }
     got = {
         (p["doc_a"], p["doc_b"]): p["hamming"]
-        for p in simhash_pairs(corpus, max_hamming=3).collect()
+        for p in simhash_pairs(corpus).collect()
     }
     # exact-copy pairs: hamming 0, always found
     for doc_id in fps:
@@ -110,19 +110,16 @@ def test_ngram_df_cut_bounds_candidates(spark):
         ngram_jaccard_pairs,
     )
 
-    # n docs sharing ONE planted stop phrase (its three shingles are
-    # all any two docs share: jaccard 3/15): while n <= SHINGLE_DF_CUT
+    # n docs sharing ONE planted stop phrase (its eight shingles are
+    # all any two docs share: jaccard 8/10): while n <= SHINGLE_DF_CUT
     # the inverted index pairs all n*(n-1)/2 of them; one doc more and
     # the stop shingles are cut, so no pair survives
-    stop = "the quick brown fox jumps"
+    stop = "the quick brown fox jumps over the lazy dog again and again"
 
     def pairs(n):
-        rows = [
-            (i, f"{stop} unique tail {i} alpha beta gamma delta {i}")
-            for i in range(n)
-        ]
+        rows = [(i, f"{stop} tail{i}") for i in range(n)]
         docs = spark.createDataFrame(rows, "doc_id long, text string")
-        return ngram_jaccard_pairs(docs, threshold=0.01).collect()
+        return ngram_jaccard_pairs(docs).collect()
 
     n = SHINGLE_DF_CUT
     assert len(pairs(n)) == n * (n - 1) // 2
@@ -136,7 +133,7 @@ def test_release_persisted_frees_registry(spark, corpus):
     )
 
     release_persisted()  # clean slate (other tests may have piled up)
-    simhash_pairs(corpus, max_hamming=3).count()
+    simhash_pairs(corpus).count()
     n = release_persisted()
     assert n == 1  # exactly the fingerprint intermediate, nothing else
     assert release_persisted() == 0
@@ -171,7 +168,7 @@ def test_lsh_mega_bucket_is_capped(spark):
     docs = spark.createDataFrame(
         [(i, text) for i in range(n)], "doc_id long, text string"
     )
-    got = minhash_lsh_pairs(docs, spark, threshold=0.6).count()
+    got = minhash_lsh_pairs(docs, spark).count()
     expected = _capped_pair_count(n, 64)
     assert got == expected
     assert got < n * (n - 1) // 2 / 4  # far below the quadratic count
@@ -185,11 +182,11 @@ def test_simhash_mega_bucket_cap_opt_in(spark):
     docs = spark.createDataFrame(
         [(i, text) for i in range(n)], "doc_id long, text string"
     )
-    capped = simhash_pairs(docs, max_hamming=3, bucket_cap=16).count()
+    capped = simhash_pairs(docs, bucket_cap=16).count()
     assert capped == _capped_pair_count(n, 16)
     assert capped < n * (n - 1) // 2 / 4
     # default stays uncapped: total pigeonhole recall preserved
-    uncapped = simhash_pairs(docs, max_hamming=3).count()
+    uncapped = simhash_pairs(docs).count()
     assert uncapped == n * (n - 1) // 2
 
 
@@ -245,27 +242,27 @@ def test_incremental_minhash_dedup(spark):
     )
     out = sorted(
         r["doc_id"]
-        for r in incremental_minhash_dedup(
-            batch, index_docs, threshold=0.6
-        ).collect()
+        for r in incremental_minhash_dedup(batch, index_docs).collect()
     )
     assert out == [102, 103]
     release_persisted()
 
 
 def test_incremental_minhash_candidate_cap(spark):
-    """candidate_cap=1 offers only the smallest index id per band
-    bucket; since all index docs are identical, that one candidate
-    verifies and the duplicate batch doc is still dropped (existence
+    """More identical index docs than CANDIDATE_CAP share every band
+    bucket; only the CANDIDATE_CAP smallest ids are offered, they
+    verify, and the duplicate batch doc is still dropped (existence
     is all the anti-join needs)."""
     from ci_log_processing_spark.operators.dedup import (
+        CANDIDATE_CAP,
         incremental_minhash_dedup,
         release_persisted,
     )
 
     txt = "one two three four five six seven eight nine ten eleven"
     index_docs = spark.createDataFrame(
-        [(i, txt) for i in range(1, 9)], "doc_id long, text string"
+        [(i, txt) for i in range(1, CANDIDATE_CAP + 9)],
+        "doc_id long, text string",
     )
     batch = spark.createDataFrame(
         [(100, txt), (101, "unrelated new document body " * 5)],
@@ -273,13 +270,9 @@ def test_incremental_minhash_candidate_cap(spark):
     )
     out = sorted(
         r["doc_id"]
-        for r in incremental_minhash_dedup(
-            batch, index_docs, threshold=0.6, candidate_cap=1
-        ).collect()
+        for r in incremental_minhash_dedup(batch, index_docs).collect()
     )
     assert out == [101]
-    with pytest.raises(ValueError):
-        incremental_minhash_dedup(batch, index_docs, candidate_cap=0)
     release_persisted()
 
 
@@ -289,6 +282,7 @@ def test_shingle_impls_equal(spark):
     first-occurrence order — on repeated, short (< k tokens), and
     mixed-case docs."""
     from ci_log_processing_spark.operators.dedup import (
+        SHINGLE_K,
         shingled_docs,
         shingles_col,
         tokens_col,
@@ -305,18 +299,18 @@ def test_shingle_impls_equal(spark):
     ).repartition(2)
     a = {
         r["doc_id"]: r["shingles"]
-        for r in shingled_docs(docs, 5).collect()
+        for r in shingled_docs(docs, SHINGLE_K).collect()
     }
     # tokens in their own projection: shingles_col's interpreted
     # lambda re-evaluates captured children per element
     native = (
         docs.select("doc_id", tokens_col(F.col("text")).alias("_lt"))
-        .select("doc_id", shingles_col(F.col("_lt"), 5).alias("shingles"))
+        .select("doc_id", shingles_col(F.col("_lt")).alias("shingles"))
         .filter(F.size("shingles") > 0)
     )
     n = {r["doc_id"]: r["shingles"] for r in native.collect()}
     assert a == n
-    assert set(a) == {1, 3, 4}
+    assert SHINGLE_K == 5 and set(a) == {1, 3, 4}
     assert a[3] == ["r r r r r"]
     assert a[1][0] == "a b c d e"
 
@@ -346,7 +340,7 @@ def test_minhash_estimate_vs_exact(spark):
     # exact twin agrees on the candidate set (same banding)
     exact = {(r["doc_a"], r["doc_b"])
              for r in minhash_lsh_pairs(
-                 docs, spark, threshold=0.25).collect()}
+                 docs, spark).collect()}
     assert (1, 2) in exact
     release_persisted()
 

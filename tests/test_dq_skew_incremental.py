@@ -6,7 +6,7 @@ from pyspark.sql import functions as F
 
 from ci_log_processing_spark.operators.aggregate import merge_agg_deltas
 from ci_log_processing_spark.operators.dq import document_checks, dq_audit
-from ci_log_processing_spark.operators.skew import key_skew_audit
+from ci_log_processing_spark.operators.skew import SKEW_TOP_N, key_skew_audit
 
 
 def _docs(spark):
@@ -30,7 +30,6 @@ def test_dq_audit_counts_and_pass_flags(spark):
         for r in dq_audit(
             _docs(spark),
             document_checks(allowed_langs=("en",)),
-            unique_key="doc_id",
         ).collect()
     }
     assert out["not_null:text"].n_violations == 1
@@ -51,26 +50,27 @@ def test_dq_audit_clean_table_passes(spark):
         [(1, "abc", "en", "web", 3), (2, "de", "en", "web", 2)],
         "doc_id long, text string, lang string, source string, n_chars long",
     )
-    rows = dq_audit(
-        clean, document_checks(allowed_langs=("en",)), unique_key="doc_id"
-    ).collect()
+    rows = dq_audit(clean, document_checks(allowed_langs=("en",))).collect()
     assert len(rows) == 5
     assert all(r.passed and r.n_violations == 0 for r in rows)
 
 
 def test_key_skew_audit_shares_and_ranks(spark):
+    # a x6, b x3, then more singleton keys than SKEW_TOP_N: 39 rows
+    singles = [(f"k{i:02d}",) for i in range(30)]
     df = spark.createDataFrame(
-        [("a",)] * 6 + [("b",)] * 3 + [("c",)] * 1, "k string"
+        [("a",)] * 6 + [("b",)] * 3 + singles, "k string"
     )
-    out = {r.rank: r for r in key_skew_audit(df, "k", top_n=2).collect()}
-    assert len(out) == 2  # top_n respected
-    assert (out[1].key, out[1].cnt, out[1].share_milli) == ("a", 6, 600)
-    assert (out[2].key, out[2].cnt, out[2].share_milli) == ("b", 3, 300)
+    out = {r.rank: r for r in key_skew_audit(df, "k").collect()}
+    assert len(out) == SKEW_TOP_N  # top_n respected
+    assert (out[1].key, out[1].cnt, out[1].share_milli) == ("a", 6, 153)
+    assert (out[2].key, out[2].cnt, out[2].share_milli) == ("b", 3, 76)
+    assert (out[3].key, out[3].cnt) == ("k00", 1)
 
 
 def test_key_skew_audit_tie_breaks_by_key(spark):
     df = spark.createDataFrame([("b",), ("a",)], "k string")
-    out = [r.key for r in key_skew_audit(df, "k", top_n=2).collect()]
+    out = [r.key for r in key_skew_audit(df, "k").collect()]
     assert out == ["a", "b"]
 
 
@@ -103,7 +103,6 @@ def test_dq_audit_is_single_scan(spark):
     plan = dq_audit(
         _docs(spark),
         document_checks(allowed_langs=("en",)),
-        unique_key="doc_id",
     )._jdf.queryExecution().optimizedPlan().toString()
     # one logical scan feeds every constraint (Expand handles the
     # distinct-count; no self-join, no union of scans)

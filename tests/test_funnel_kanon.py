@@ -60,7 +60,7 @@ def test_k_anonymity_audit_flags_small_combos(spark):
     )
     out = {
         (r.source, r.lang, r.len_bucket): (r.n_docs, r.at_risk)
-        for r in k_anonymity_audit(docs, k=5).collect()
+        for r in k_anonymity_audit(docs).collect()
     }
     assert out[("web", "en", 1)] == (6, False)
     assert out[("code", "fr", 3)] == (2, True)

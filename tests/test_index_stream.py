@@ -49,12 +49,9 @@ def test_streamed_index_equals_batch_and_survives_replay(
     _write_wave(docs.filter("doc_id % 2 = 1"), work, in_dir, "w1",
                 2_000_000)
     out_dir = os.path.join(work, "out")
-    served = _index_map(
-        run_index_maintenance(spark, in_dir, out_dir, min_df=1,
-                              max_df=100)
-    )
+    served = _index_map(run_index_maintenance(spark, in_dir, out_dir))
     release_persisted()
-    whole = _index_map(inverted_index(docs, min_df=1, max_df=100))
+    whole = _index_map(inverted_index(docs))
     release_persisted()
     assert served == whole
     # both batches left their partial
@@ -69,8 +66,6 @@ def test_streamed_index_equals_batch_and_survives_replay(
     posting_rows(w0).write.mode("overwrite").parquet(
         os.path.join(index_dir, "b0")
     )
-    again = _index_map(
-        read_index(spark, index_dir, min_df=1, max_df=100)
-    )
+    again = _index_map(read_index(spark, index_dir))
     release_persisted()
     assert again == whole

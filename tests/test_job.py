@@ -53,7 +53,7 @@ def _sink_counts(spark, out_dir):
 
 def test_job_summary_resume_and_no_write(spark, tmp_path):
     t = load_transcripts(spark, SF)  # registers the events view
-    meta = spark.sql(conv_meta_sql("spark", "events"))
+    meta = spark.sql(conv_meta_sql("spark"))
     routed = full_pipeline(t, spark, meta=meta)
     expected = {
         r["sink"]: r["count"] for r in routed.groupBy("sink").count().collect()

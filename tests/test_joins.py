@@ -36,7 +36,7 @@ def right(spark):
             ("a", T(2024, 1, 1, 2, 0), "c1", 12),
             ("c", T(2024, 1, 1, 0, 0), "cX", 13),  # key absent on left
         ],
-        "k string, ts timestamp, state string, seq int",
+        "k string, ts timestamp, state string, cfg_seq int",
     )
 
 
@@ -48,7 +48,7 @@ def _states(df):
 
 
 def test_asof_backward_with_ties_and_seq(left, right):
-    out = asof_join(left, right, on=["k"], value_cols=["state"], seq_col="seq")
+    out = asof_join(left, right, on=["k"], value_cols=["state"])
     assert _states(out) == {
         # exact-ts match visible; max-seq survivor wins the same-ts dup
         ("a", 0): "c0b",
@@ -78,9 +78,10 @@ def test_asof_matches_pandas_merge_asof(spark):
         [(k, ts, i) for i, (k, ts) in enumerate(lrows)],
         "k string, ts timestamp, idx int",
     )
+    # (k, ts) is unique on the right: the seq tie-break never fires
     rdf = spark.createDataFrame(
-        [(k, ts, f"v{i}") for i, (k, ts) in enumerate(rrows)],
-        "k string, ts timestamp, val string",
+        [(k, ts, f"v{i}", 0) for i, (k, ts) in enumerate(rrows)],
+        "k string, ts timestamp, val string, cfg_seq int",
     )
     got = {
         r["idx"]: r["val"]
@@ -114,6 +115,7 @@ def pts(spark):
             ("a", T(2024, 1, 1, 0, 30), 100),
             ("a", T(2024, 1, 1, 5, 0), 101),
             ("b", T(2024, 1, 1, 0, 15), 102),
+            ("a", T(2024, 1, 1, 20, 0), 103),
         ],
         "k string, ts timestamp, pid int",
     )
@@ -126,6 +128,8 @@ def ivals(spark):
             ("a", T(2024, 1, 1, 0, 0), T(2024, 1, 1, 1, 0), "s1"),
             ("a", T(2024, 1, 1, 0, 20), T(2024, 1, 1, 0, 40), "s2"),
             ("b", T(2024, 1, 1, 1, 0), T(2024, 1, 1, 2, 0), "s3"),
+            # spans four RANGE_BIN_SEC (6 h) bins
+            ("a", T(2024, 1, 1, 5, 30), T(2024, 1, 2, 1, 0), "s4"),
         ],
         "k string, start_ts timestamp, end_ts timestamp, sid string",
     )
@@ -134,10 +138,11 @@ def ivals(spark):
 def test_range_join_inner_matches_exact_predicate(pts, ivals):
     got = {
         (r["pid"], r["sid"])
-        for r in range_join_binned(pts, ivals, keys=["k"], bin_sec=600).collect()
+        for r in range_join_binned(pts, ivals, keys=["k"]).collect()
     }
-    # pid 100 in both overlapping windows; inclusive boundaries
-    assert got == {(100, "s1"), (100, "s2")}
+    # pid 100 in both overlapping windows; pid 103 meets the
+    # multi-bin window in a later bin; inclusive boundaries
+    assert got == {(100, "s1"), (100, "s2"), (103, "s4")}
 
 
 def test_range_join_boundaries_inclusive(spark, ivals):
@@ -151,25 +156,9 @@ def test_range_join_boundaries_inclusive(spark, ivals):
     )
     got = {
         (r["pid"], r["sid"])
-        for r in range_join_binned(edge, ivals, keys=["k"], bin_sec=600).collect()
+        for r in range_join_binned(edge, ivals, keys=["k"]).collect()
     }
     assert got == {(1, "s1"), (2, "s1")}
-
-
-def test_range_join_bin_width_invariance(pts, ivals):
-    """Match set must not depend on the bin width chosen."""
-    base = {
-        (r["pid"], r["sid"])
-        for r in range_join_binned(pts, ivals, keys=["k"], bin_sec=60).collect()
-    }
-    for w in (7, 977, 86400):
-        got = {
-            (r["pid"], r["sid"])
-            for r in range_join_binned(
-                pts, ivals, keys=["k"], bin_sec=w
-            ).collect()
-        }
-        assert got == base, f"bin_sec={w}"
 
 
 def test_range_join_guard_fires_on_hostile_interval(spark, pts, ivals):
@@ -177,7 +166,7 @@ def test_range_join_guard_fires_on_hostile_interval(spark, pts, ivals):
         "end_ts", F.expr("end_ts + INTERVAL 400 DAYS")
     )
     with pytest.raises(Exception, match="spans more than"):
-        range_join_binned(pts, wide, keys=["k"], bin_sec=60).collect()
+        range_join_binned(pts, wide, keys=["k"]).collect()
 
 
 def test_asof_forward_direction_and_tolerance(spark):
@@ -195,13 +184,12 @@ def test_asof_forward_direction_and_tolerance(spark):
         [("c", T(2024, 1, 1, 11, 0), "a", 1),
          ("c", T(2024, 1, 1, 12, 0), "b", 1),
          ("c", T(2024, 1, 1, 12, 0), "b2", 2)],
-        "conv_id string, ts timestamp, state string, seq int",
+        "conv_id string, ts timestamp, state string, cfg_seq int",
     )
     fwd = {
         r["turn_idx"]: r["state"]
         for r in asof_join(
-            left, right, on=["conv_id"], value_cols=["state"],
-            seq_col="seq", direction="forward",
+            left, right, on=["conv_id"], value_cols=["state"], direction="forward",
         ).collect()
     }
     # turn 1 -> next flip at 11:00 ('a'); turn 2 -> exact match at

@@ -21,7 +21,7 @@ def test_keep_best_prefers_quality_over_min_id(spark):
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     out = (
-        dedup_keep_best(docs, spark, threshold=0.2)
+        dedup_keep_best(docs, spark)
         .toPandas()
         .set_index("doc_id")
         .sort_index()
@@ -32,8 +32,8 @@ def test_keep_best_prefers_quality_over_min_id(spark):
     assert bool(out.loc[0, "is_best"])
     assert not out.loc[1, "is_best"] and not out.loc[2, "is_best"]
     assert out.loc[0, "component"] == out.loc[1, "component"]
-    # near-dup cluster: the pair MUST link (identical 24-token prefix
-    # at threshold 0.2 — if this stops holding the test must fail,
+    # near-dup cluster: the pair MUST link (shingle Jaccard 10/15 —
+    # if this stops holding the test must fail,
     # not silently skip the only assertion that distinguishes
     # keep-best from min-id), and higher-quality doc 11 beats
     # lower-id doc 10

@@ -9,6 +9,8 @@ from pyspark.sql import functions as F
 from ci_log_processing_spark.operators.aggregate import retention_cohorts
 from ci_log_processing_spark.operators.dedup import cross_source_dup_matrix
 from ci_log_processing_spark.operators.layout import (
+    ZORDER_BUCKET_BITS,
+    ZORDER_PROBE,
     zorder_key,
     zorder_layout_audit,
 )
@@ -30,20 +32,18 @@ def test_zorder_audit_partitions_all_rows(spark):
         F.col("id").alias("doc_id"),
         ((F.col("id") * 37) % 991).alias("n_chars"),
     )
-    out = zorder_layout_audit(
-        df, "n_chars", "doc_id", bits=8, bucket_bits=4,
-        probe=(0, 100, 0, 100),
-    ).collect()
+    out = zorder_layout_audit(df, "n_chars", "doc_id").collect()
+    x_lo, x_hi, y_lo, y_hi = ZORDER_PROBE
     for lay in ("zorder", "linear"):
         rows = [r for r in out if r.layout == lay]
         assert sum(r.n_rows for r in rows) == 1000
-        assert len(rows) <= 16  # 2^bucket_bits
+        assert len(rows) <= 2 ** ZORDER_BUCKET_BITS
         for r in rows:
             assert r.min_x <= r.max_x and r.min_y <= r.max_y
             # overlap flag is exactly the bbox-rectangle test
             expect = (
-                r.min_x <= 100 and r.max_x >= 0
-                and r.min_y <= 100 and r.max_y >= 0
+                r.min_x <= x_hi and r.max_x >= x_lo
+                and r.min_y <= y_hi and r.max_y >= y_lo
             )
             assert r.overlaps_probe == expect
 
@@ -56,10 +56,7 @@ def test_zorder_prunes_more_than_linear_on_2d_probe(spark):
         F.col("id").alias("doc_id"),
         ((F.col("id") * 2654435761) % 4093).alias("n_chars"),
     )
-    out = zorder_layout_audit(
-        df, "n_chars", "doc_id", bits=8, bucket_bits=6,
-        probe=(0, 500, 0, 500),
-    ).collect()
+    out = zorder_layout_audit(df, "n_chars", "doc_id").collect()
     read = {
         lay: sum(
             r.n_rows
@@ -127,5 +124,5 @@ def test_retention_horizon_bounds_offsets(spark):
         ],
         "user_id string, ts timestamp",
     )
-    out = retention_cohorts(events, horizon_days=90).collect()
+    out = retention_cohorts(events).collect()
     assert max(r.day_offset for r in out) == 0

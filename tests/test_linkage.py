@@ -1,8 +1,7 @@
 """SymSpell delete-neighborhood fuzzy linkage
 (operators/linkage.py): total recall vs brute-force Levenshtein on
-planted typo corpora, d=2 neighborhood, key-length cap, guards."""
+planted typo corpora, key-length cap, sorted-neighborhood blocking."""
 
-import pytest
 from pyspark.sql import functions as F
 
 from ci_log_processing_spark.operators.dedup import release_persisted
@@ -67,7 +66,7 @@ TYPO_ROWS = [
 def test_symspell_total_recall_d1(spark):
     got = {
         (r["doc_a"], r["doc_b"], r["dist"])
-        for r in symspell_pairs(_docs(spark, TYPO_ROWS), max_dist=1).collect()
+        for r in symspell_pairs(_docs(spark, TYPO_ROWS)).collect()
     }
     release_persisted()
     assert got == _brute(TYPO_ROWS, 1)
@@ -79,29 +78,12 @@ def test_symspell_total_recall_d1(spark):
     assert not any(a == 1 and b == 3 for a, b, _ in got)
 
 
-def test_symspell_total_recall_d2(spark):
-    got = {
-        (r["doc_a"], r["doc_b"], r["dist"])
-        for r in symspell_pairs(_docs(spark, TYPO_ROWS), max_dist=2).collect()
-    }
-    release_persisted()
-    assert got == _brute(TYPO_ROWS, 2)
-    assert (1, 3, 2) in got and (3, 4, 2) in got
-
-
 def test_symspell_key_len_cap_bounds_fanout(spark):
     long = "word " * 200
     rows = [(1, long), (2, long + "tail difference beyond the cap")]
-    out = symspell_pairs(_docs(spark, rows), max_dist=1).collect()
+    out = symspell_pairs(_docs(spark, rows)).collect()
     release_persisted()
     assert {(r["doc_a"], r["doc_b"], r["dist"]) for r in out} == {(1, 2, 0)}
-
-
-def test_symspell_rejects_bad_max_dist(spark):
-    df = _docs(spark, [(1, "a")])
-    for bad in (0, 3):
-        with pytest.raises(ValueError):
-            symspell_pairs(df, max_dist=bad)
 
 
 def test_canonical_key_chain(spark):
@@ -120,6 +102,8 @@ def test_sorted_neighborhood_matches_plain_rank_reference(spark):
     import re
 
     from ci_log_processing_spark.operators.linkage import (
+        SN_MAX_DIST,
+        SN_WINDOW,
         sorted_neighborhood_pairs,
     )
 
@@ -134,12 +118,10 @@ def test_sorted_neighborhood_matches_plain_rank_reference(spark):
         (6, "b spacer one"), (7, "c spacer two"), (8, "d spacer"),
         (9, "m spacer"), (10, "q spacer"),
     ]
-    w, d = 2, 3
+    w, d = SN_WINDOW, SN_MAX_DIST
     got = {
         (r["doc_a"], r["doc_b"], r["gap"], r["dist"])
-        for r in sorted_neighborhood_pairs(
-            _docs(spark, rows), window=w, max_dist=d
-        ).collect()
+        for r in sorted_neighborhood_pairs(_docs(spark, rows)).collect()
     }
     from ci_log_processing_spark.operators.dedup import (
         release_persisted,

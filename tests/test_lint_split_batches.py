@@ -238,9 +238,3 @@ def test_render_chat_templates_and_visibility(spark):
         "<|im_start|>assistant\nhello<|im_end|>"
     )
     assert got["c2"]["text"] == "<|im_start|>assistant\nsolo<|im_end|>"
-    plain = {r["conv_id"]: r for r in render_chat(df, "plain").collect()}
-    assert plain["c1"]["text"] == "user: hi\nassistant: hello"
-    import pytest as _pt
-
-    with _pt.raises(ValueError):
-        render_chat(df, "mustache")

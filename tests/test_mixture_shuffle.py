@@ -10,6 +10,8 @@ from ci_log_processing_spark.operators.curation import (
     shuffle_index,
 )
 from ci_log_processing_spark.operators.similarity import (
+    EMB_DUP_THRESHOLD,
+    QUANTIZER_ITERS,
     cosine_col,
     kmeans_fit,
     semantic_cluster_dedup,
@@ -103,7 +105,7 @@ def test_line_dedup_removes_hot_lines_in_order(spark):
         + [(100, "BOILER")]  # all-boilerplate doc: must vanish
     )
     docs = spark.createDataFrame(rows, "doc_id long, btext string")
-    out = line_dedup(docs, min_count=3).toPandas().set_index("doc_id")
+    out = line_dedup(docs).toPandas().set_index("doc_id")
     assert 100 not in out.index
     assert len(out) == 10
     for i in range(10):
@@ -116,11 +118,9 @@ def test_line_dedup_threshold_boundary(spark):
     # a line occurring exactly min_count-1 times survives
     rows = [(i, f"only {i}\nTWICE" if i < 2 else f"only {i}") for i in range(5)]
     docs = spark.createDataFrame(rows, "doc_id long, btext string")
-    out = line_dedup(docs, min_count=3).toPandas()
+    out = line_dedup(docs).toPandas()
     kept_twice = out[out["doc_id"] < 2]
     assert (kept_twice["n_kept"] == 2).all()
-    with pytest.raises(ValueError):
-        line_dedup(docs, min_count=1)
 
 
 def test_line_dedup_broadcasts_hot_set(spark):
@@ -149,26 +149,30 @@ def test_attach_boilerplate_rules(spark):
 
 
 def test_semantic_cluster_dedup_keep_rule(spark):
-    # 3 tight groups of near-identical vectors + id-unique outliers
+    # 3 tight groups of near-identical vectors + outliers, each group
+    # and outlier on its own axis, so cross-group cosines are ~0
     import random
 
     rng = random.Random(7)
+
+    def axis(a):
+        return [1.0 if j == a else 0.0 for j in range(8)]
+
     rows = []
     for g in range(3):
-        base = [rng.uniform(-1, 1) for _ in range(8)]
         for i in range(6):
             rows.append(
-                (g * 10 + i, [v + rng.uniform(-1e-3, 1e-3) for v in base])
+                (g * 10 + i, [v + rng.uniform(-1e-3, 1e-3) for v in axis(g)])
             )
     for i in range(5):
-        rows.append((100 + i, [rng.uniform(-1, 1) for _ in range(8)]))
+        rows.append((100 + i, axis(3 + i)))
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = semantic_cluster_dedup(emb, k=4, n_iter=2, threshold=0.999)
+    out = semantic_cluster_dedup(emb)
     pdf = out.toPandas().set_index("vec_id")
     assert len(pdf) == 23  # one row per input vector
     # verify the keep rule brute-force: kept iff no lower-id
     # same-cluster vector within threshold
-    assigned = kmeans_fit(emb, k=4, n_iter=2, keep_vec=True)
+    assigned = kmeans_fit(emb, n_iter=QUANTIZER_ITERS, keep_vec=True)
     a = assigned.alias("a")
     b = assigned.alias("b")
     viol = (
@@ -178,7 +182,8 @@ def test_semantic_cluster_dedup_keep_rule(spark):
             & (F.col("b.vec_id") < F.col("a.vec_id")),
         )
         .filter(
-            cosine_col(F.col("a.embedding"), F.col("b.embedding")) >= 0.999
+            cosine_col(F.col("a.embedding"), F.col("b.embedding"))
+            >= EMB_DUP_THRESHOLD
         )
         .select(F.col("a.vec_id").alias("vec_id"))
         .distinct()

@@ -146,7 +146,7 @@ def test_image_ahash_near_dup_pairs(spark):
     )
 
     base = "alpha beta gamma delta epsilon zeta eta theta " * 3
-    noisy = base[:-1] + "x"          # same length, one byte moved
+    noisy = "~" + base[1:]           # same length, one byte changed
     rows = [
         (0, base, "s0"),             # doc_id % 3 == 0 -> image
         (3, base, "s0"),             # exact pixel copy of doc 0
@@ -168,22 +168,11 @@ def test_image_ahash_near_dup_pairs(spark):
 
     pairs = {
         (r.doc_a, r.doc_b): r.hamming
-        for r in ahash_near_dup_pairs(
-            image_ahash(media), max_hamming=15, n_bands=16
-        ).collect()
+        for r in ahash_near_dup_pairs(image_ahash(media)).collect()
     }
     assert pairs[(0, 3)] == 0
     assert pairs[(0, 6)] == ham_noisy
     assert (0, 9) not in pairs and (3, 9) not in pairs
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        ahash_near_dup_pairs(image_ahash(media), max_hamming=8,
-                             n_bands=8)
-    with _pytest.raises(ValueError):
-        ahash_near_dup_pairs(image_ahash(media), max_hamming=2,
-                             n_bands=5)
 
 
 def test_scene_cuts_planted_boundary(spark):

@@ -11,33 +11,45 @@ identifier-like string constant of a product file counts as a use.
 A use inside a package definition counts only while that definition is
 itself used, so a helper whose sole caller is dead is found as well.
 
-Parameters: a parameter with a default, of any function or method in
-the package outside ``oracle*.py``, fails when no call in a product
-file sets it. Tests do not count as callers: an option is worth its
-doubled test matrix only when product code needs a second value. A
-parameter only tests set gets one of three outcomes:
+Parameters: an option needs two values in use. A parameter with a
+default, of any function or method in the package outside
+``oracle*.py``, fails when the product calls give it at most one
+value. Tests do not count as callers: an option is worth its doubled
+test matrix only when product code needs a second value. A parameter
+with one value in product use gets one of three outcomes:
 
-- it becomes a module constant at its default, and the test asserts
+- it becomes a module constant at that value, and the test asserts
   the same property at that constant;
-- it becomes a constant, and the branch only the other value reached
+- it becomes a constant, and the branch only the other values reached
   is deleted together with the test case that reached it;
 - ``KEEP_PARAMS`` names it with a one-line reason and the test that
-  sets it, because that test needs another value to reach behaviour
-  the operator must keep and nothing else reaches it.
+  gives it another value, because that test needs the value to reach
+  behaviour the operator must keep and nothing else reaches it.
 
-A ``KEEP_PARAMS`` entry is stale, and fails, once a product call sets
-the option or no test sets it either. Parameters of definitions
-``KEEP`` lists are exempt. The rules, again by name (a call matches
-every definition of its callee's name):
+A ``KEEP_PARAMS`` entry is stale, and fails, once product calls give
+the option a second value or no test gives it another value either.
+Parameters of definitions ``KEEP`` lists are exempt. The value set of
+a parameter collects, over every call that can bind to it (a call
+matches every definition of its callee's name; ``self``/``cls`` are
+not counted for methods; ``Cls(...)`` calls ``Cls.__init__``; a call
+whose arguments cannot bind to a definition is not a call of it):
 
-- a call sets a parameter when it passes it by keyword, or passes
-  enough positional arguments to reach it (``self``/``cls`` are not
-  counted for methods; ``Cls(...)`` calls ``Cls.__init__``);
-- a ``*args`` or ``**kwargs`` splat sets every parameter;
-- ``functools.partial(f, ...)`` is a call of ``f``;
-- a function named anywhere other than as a direct callee (stored in
-  a dict, passed as a callback, decorated onto something) counts as
-  having every parameter set.
+- its default, when the call leaves the parameter out;
+- the literal, when the call passes one (``ast.literal_eval``);
+- the constant's literal, when the call passes by bare name a module
+  constant: a name its module binds once, at top level, to a literal,
+  or imports by ``from … import`` from such a binding;
+- the caller's own value set, when the call passes one of the
+  caller's parameters on by bare name and the caller never rebinds
+  it (resolved to a fixpoint);
+- UNKNOWN for any other expression (a bare ``self``/``cls`` too), for
+  every parameter of a call with a ``*args`` or ``**kwargs`` splat,
+  and for every parameter of a function named anywhere other than as
+  a direct callee (stored in a dict, passed as a callback, decorated
+  onto something).
+
+``functools.partial(f, …)`` is a call of ``f`` with the arguments it
+binds; the defaulted parameters it leaves out take their defaults.
 """
 
 import ast
@@ -151,36 +163,57 @@ def test_every_package_definition_is_reached_by_product_code():
     assert not unreached, "only tests reach:\n" + "\n".join(unreached)
 
 
-def _defaulted_params(tree):
-    """(def key, positional index or None, param) of every parameter
-    with a default; the key of ``__init__`` is its class name and a
-    method's positional index skips ``self``/``cls``."""
+def _defs(tree):
+    """(def key, node, self count) of every function and method; the
+    key of ``__init__`` is its class name, and the self count is 1 for
+    a method other than a staticmethod."""
     out = []
 
     def visit(node, cls):
         for s in ast.iter_child_nodes(node):
             if isinstance(s, ast.ClassDef):
                 visit(s, s.name)
-                continue
-            if not isinstance(s, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            elif isinstance(s, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                static = any(isinstance(d, ast.Name)
+                             and d.id == "staticmethod"
+                             for d in s.decorator_list)
+                key = cls if cls and s.name == "__init__" else s.name
+                out.append((key, s, 1 if cls and not static else 0))
+                visit(s, None)
+            else:
                 visit(s, cls)
-                continue
-            a = s.args
-            static = any(isinstance(d, ast.Name) and d.id == "staticmethod"
-                         for d in s.decorator_list)
-            skip = 1 if cls and not static else 0
-            key = cls if cls and s.name == "__init__" else s.name
-            pos = a.posonlyargs + a.args
-            first = len(pos) - len(a.defaults)
-            for i in range(first, len(pos)):
-                out.append((key, i - skip, pos[i].arg))
-            out.extend((key, None, p.arg)
-                       for p, d in zip(a.kwonlyargs, a.kw_defaults)
-                       if d is not None)
-            visit(s, None)
 
     visit(tree, None)
     return out
+
+
+def _params(fn, skip):
+    """(positional index or None, name, default node or None) of each
+    named parameter of ``fn`` after its ``skip`` leading ones."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    defaults = [None] * (len(pos) - len(a.defaults)) + a.defaults
+    out = [(i - skip, p.arg, d)
+           for i, (p, d) in enumerate(zip(pos, defaults)) if i >= skip]
+    return out + [(None, p.arg, d)
+                  for p, d in zip(a.kwonlyargs, a.kw_defaults)]
+
+
+def _defaulted_params(tree):
+    """(def key, positional index or None, param) of every parameter
+    with a default."""
+    return [(key, i, name) for key, fn, skip in _defs(tree)
+            for i, name, d in _params(fn, skip) if d is not None]
+
+
+UNKNOWN = "<unknown>"
+
+
+def _literal(node):
+    try:
+        return repr(ast.literal_eval(node))
+    except (ValueError, TypeError, SyntaxError, RecursionError):
+        return None
 
 
 def _callee_name(node):
@@ -191,153 +224,393 @@ def _callee_name(node):
     return None
 
 
-def _calls(tree):
-    """(name, keyword) pairs set, name -> most positional arguments
-    passed, and names whose every parameter counts as set."""
-    keywords, positional, everything = set(), {}, set()
-    callees = set()
-    for n in ast.walk(tree):
-        if not isinstance(n, ast.Call):
-            continue
-        func, args = n.func, n.args
-        if _callee_name(func) == "partial" and args:
-            func, args = args[0], args[1:]
-        name = _callee_name(func)
-        if name is None:
-            continue
-        callees.add(id(func))
-        if (any(isinstance(a, ast.Starred) for a in args)
-                or any(k.arg is None for k in n.keywords)):
-            everything.add(name)
-            continue
-        positional[name] = max(positional.get(name, 0), len(args))
-        keywords |= {(name, k.arg) for k in n.keywords}
-    for n in ast.walk(tree):
-        if id(n) not in callees:
-            name = _callee_name(n)
-            if name is not None:
-                everything.add(name)
-    return keywords, positional, everything
+def _calls_in(tree):
+    """(call, enclosing functions and lambdas, innermost last) of every
+    call in ``tree``."""
+    calls = []
+
+    def visit(node, scopes):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                             ast.Lambda)):
+            scopes = scopes + [node]
+        elif isinstance(node, ast.Call):
+            calls.append((node, scopes))
+        for c in ast.iter_child_nodes(node):
+            visit(c, scopes)
+
+    visit(tree, [])
+    return calls
 
 
-def unset_parameters(defining, calling, exempt=frozenset()):
-    """Sorted "module:def(param)" of the defaulted parameters of the
-    ``defining`` sources ({module: source}) that no ``calling`` source
-    sets, per the rules in the module docstring; definitions named in
-    ``exempt`` are skipped."""
-    keywords, positional, everything = set(), {}, set()
-    for src in calling:
-        k, p, e = _calls(ast.parse(src))
-        keywords |= k
-        everything |= e
-        for name, n in p.items():
-            positional[name] = max(positional.get(name, 0), n)
-    unset = []
-    for module, src in defining.items():
-        for key, index, param in _defaulted_params(ast.parse(src)):
-            if (key in exempt or key in everything
-                    or (key, param) in keywords
-                    or (index is not None
-                        and positional.get(key, 0) > index)):
+def _base_module(module, node):
+    """The absolute module name an ``ImportFrom`` in ``module`` reads."""
+    if not node.level:
+        return node.module
+    base = module.split(".")[:-node.level]
+    return ".".join(base + ([node.module] if node.module else []))
+
+
+def _constants(trees):
+    """{module: {name: literal repr}} of the names each module binds
+    exactly once, at top level, to a literal, plus the names it
+    imports by ``from … import`` from such a binding of another module
+    of ``trees``."""
+    own = {}
+    for module, tree in trees.items():
+        count, stack = {}, list(ast.iter_child_nodes(tree))
+        while stack:
+            n = stack.pop()
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef,
+                              ast.Lambda, ast.ClassDef)):
                 continue
-            unset.append(f"{module}:{key}({param})")
-    return sorted(unset)
+            if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store):
+                count[n.id] = count.get(n.id, 0) + 1
+            elif isinstance(n, ast.alias):
+                local = n.asname or n.name
+                count[local] = count.get(local, 0) + 1
+            stack.extend(ast.iter_child_nodes(n))
+        declared = {name for g in ast.walk(tree)
+                    if isinstance(g, ast.Global) for name in g.names}
+        own[module] = {
+            t.id: _literal(s.value) for s in tree.body
+            if isinstance(s, (ast.Assign, ast.AnnAssign))
+            and s.value is not None
+            for t in (s.targets if isinstance(s, ast.Assign)
+                      else [s.target])
+            if isinstance(t, ast.Name) and count.get(t.id) == 1
+            and t.id not in declared and _literal(s.value) is not None}
+    out = {}
+    for module, tree in trees.items():
+        imported = {}
+        for n in ast.walk(tree):
+            if isinstance(n, ast.ImportFrom):
+                src = own.get(_base_module(module, n), {})
+                for a in n.names:
+                    imported.setdefault(a.asname or a.name, set()).add(
+                        src.get(a.name, UNKNOWN))
+        out[module] = {**{k: v.pop() for k, v in imported.items()
+                          if len(v) == 1 and UNKNOWN not in v},
+                       **own[module]}
+    return out
+
+
+def _argument(node, scopes, stores, consts):
+    """The value an argument passes: a literal's repr, ``(function id,
+    name)`` when it passes on a parameter of an enclosing function by
+    bare name, the literal of a module constant (``consts``) it names,
+    else UNKNOWN. ``stores(fn)`` is the set of names ``fn`` assigns."""
+    lit = _literal(node)
+    if lit is not None:
+        return lit
+    if not isinstance(node, ast.Name):
+        return UNKNOWN
+    for fn in reversed(scopes):
+        a = fn.args
+        named = {p.arg for p in a.posonlyargs + a.args + a.kwonlyargs}
+        if node.id in named:
+            if isinstance(fn, ast.Lambda) or node.id in stores(fn):
+                return UNKNOWN
+            return (id(fn), node.id)
+        if node.id in {p.arg for p in (a.vararg, a.kwarg) if p}:
+            return UNKNOWN
+        if not isinstance(fn, ast.Lambda) and node.id in stores(fn):
+            return UNKNOWN
+    return consts.get(node.id, UNKNOWN)
+
+
+def _bind(args, keywords, params, fn, partial):
+    """{param: argument node, or None where the default applies}, or
+    None when ``args``/``keywords`` cannot be a call of ``fn``. A
+    ``partial`` call may leave required parameters out."""
+    a = fn.args
+    kw = {k.arg: k.value for k in keywords}
+    npos = sum(i is not None for i, _, _ in params)
+    if len(args) > npos and a.vararg is None:
+        return None
+    names = {name for _, name, _ in params}
+    if a.kwarg is None and set(kw) - names:
+        return None
+    bound = {}
+    for i, name, default in params:
+        if i is not None and i < len(args):
+            if name in kw:
+                return None
+            bound[name] = args[i]
+        elif name in kw:
+            bound[name] = kw[name]
+        elif default is not None:
+            bound[name] = None
+        elif not partial:
+            return None
+    return bound
+
+
+def value_sets(sources):
+    """{(module, def key, param): values} of every defaulted parameter
+    of ``sources`` ({module: source}), per the rules in the module
+    docstring. A value is a literal's repr, ``"=<source>"`` of a
+    default that is not a literal, or UNKNOWN."""
+    trees = {m: ast.parse(src) for m, src in sources.items()}
+    defs, by_key = {}, {}
+    for module, tree in trees.items():
+        for key, fn, skip in _defs(tree):
+            defs[id(fn)] = (module, key, fn, _params(fn, skip))
+            by_key.setdefault(key, []).append(id(fn))
+    values = {(f, name): set() for f, (_, _, _, ps) in defs.items()
+              for _, name, _ in ps}
+    stored = {}
+
+    def stores(fn):
+        if fn not in stored:
+            stored[fn] = {n.id for n in ast.walk(fn)
+                          if isinstance(n, ast.Name)
+                          and isinstance(n.ctx, ast.Store)}
+        return stored[fn]
+
+    consts = _constants(trees)
+    edges, callees, named = [], set(), set()
+    for module, tree in trees.items():
+        for call, scopes in _calls_in(tree):
+            func, args = call.func, call.args
+            callees.add(id(func))
+            partial = _callee_name(func) == "partial" and bool(args)
+            if partial:
+                func, args = args[0], args[1:]
+                callees.add(id(func))
+            splat = (any(isinstance(x, ast.Starred) for x in args)
+                     or any(k.arg is None for k in call.keywords))
+            for f in by_key.get(_callee_name(func), ()):
+                _, _, fn, params = defs[f]
+                if splat:
+                    for _, p, _ in params:
+                        values[(f, p)].add(UNKNOWN)
+                    continue
+                bound = _bind(args, call.keywords, params, fn, partial)
+                for _, p, default in params if bound is not None else ():
+                    if p not in bound:
+                        continue
+                    node = bound[p]
+                    if node is None:
+                        v = _literal(default) or "=" + ast.unparse(default)
+                    else:
+                        v = _argument(node, scopes, stores, consts[module])
+                    if isinstance(v, tuple) and v not in values:
+                        v = UNKNOWN   # a bare self/cls: no value set
+                    if isinstance(v, tuple):
+                        edges.append(((f, p), v))
+                    else:
+                        values[(f, p)].add(v)
+        named |= {_callee_name(n) for n in ast.walk(tree)
+                  if id(n) not in callees}
+    for f, (_, key, _, params) in defs.items():
+        if key in named:
+            for _, p, _ in params:
+                values[(f, p)].add(UNKNOWN)
+    changed = True
+    while changed:
+        changed = False
+        for target, source in edges:
+            new = values[source] - values[target]
+            if new:
+                values[target] |= new
+                changed = True
+    return {(module, key, p): values[(f, p)]
+            for f, (module, key, _, params) in defs.items()
+            for _, p, default in params if default is not None}
+
+
+def one_valued(sources, modules, exempt=frozenset()):
+    """Sorted "module:def(param)" of the defaulted parameters of
+    ``modules`` whose value set holds at most one value, none of them
+    UNKNOWN; definitions named in ``exempt`` are skipped."""
+    return sorted({f"{m}:{key}({p})"
+                   for (m, key, p), vals in value_sets(sources).items()
+                   if m in modules and key not in exempt
+                   and UNKNOWN not in vals and len(vals) < 2})
+
+
+def _module(path):
+    return ".".join(path.relative_to(ROOT).with_suffix("").parts)
 
 
 def _package_parameters():
-    """(defining sources, product sources, test sources) of the real
-    repository."""
-    defining = {
-        ".".join(p.relative_to(ROOT).with_suffix("").parts): p.read_text()
-        for p in PACKAGE.rglob("*.py") if not p.name.startswith("oracle")
-    }
+    """(product sources, test sources, checked modules) of the real
+    repository; sources are {module: source}."""
+    product = {_module(p): p.read_text() for p in _product_files()}
     tests = list((ROOT / "tests").rglob("*.py"))
     tests += (ROOT / "perfbench" / "tests").rglob("*.py")
-    return (defining, [p.read_text() for p in _product_files()],
-            [p.read_text() for p in tests])
+    modules = {_module(p) for p in PACKAGE.rglob("*.py")
+               if not p.name.startswith("oracle")}
+    return product, {_module(p): p.read_text() for p in tests}, modules
 
 
-def option_findings(defining, product, tests, keep_params):
-    """Sorted options no product call sets and ``keep_params`` does
-    not name, then the stale ``keep_params`` entries: those a product
-    call sets, or that no test sets either."""
+def option_findings(product, tests, modules, keep_params):
+    """Sorted one-valued options ``keep_params`` does not name, then
+    the stale ``keep_params`` entries: those product calls give a
+    second value, or that no test gives another value either."""
     exempt = frozenset(KEEP)
-    unset = set(unset_parameters(defining, product, exempt))
-    test_only = unset - set(unset_parameters(defining, product + tests,
-                                             exempt))
-    return sorted(unset - set(keep_params)) + sorted(
-        set(keep_params) - test_only)
+    one = set(one_valued(product, modules, exempt))
+    still = set(one_valued({**product, **tests}, modules, exempt))
+    return sorted(one - set(keep_params)) + sorted(
+        set(keep_params) - (one - still))
 
 
-def test_every_package_option_is_set_by_some_call():
-    # lists options no product call sets, and stale KEEP_PARAMS entries
+def test_every_package_option_takes_two_values():
+    # lists options product calls give one value, and stale KEEP_PARAMS
     found = option_findings(*_package_parameters(), KEEP_PARAMS)
     assert not found, (
-        "no product call sets, or stale KEEP_PARAMS:\n" + "\n".join(found))
+        "one value in product use, or stale KEEP_PARAMS:\n"
+        + "\n".join(found))
 
 
 def test_parameter_scan_rules():
-    defining = {"m": """
-def kw(a, b=1, c=2): ...
-def pos(a, b=1, c=2): ...
+    sources = {"m": """
+def omitted(a, b=1): ...
+def same(a, b=1): ...
+def two(a, b=1): ...
+def unknown(a, b=1): ...
 def star(a, b=1): ...
 def dstar(a, b=1): ...
-def part(a, b=1, c=2): ...
-def part2(a, b=1, c=2): ...
+def pos(a, b=1, c=2): ...
 def stored(a, b=1): ...
 def nobody(a, b=1): ...
+def kept(a, b=1): ...
+def leaf(a, b=1): ...
+def mid(a, b=1):
+    leaf(a, b)
+def top(a, b=5):
+    mid(a, b=b)
+def leaf2(a, b=1): ...
+def mid2(a, b=1):
+    leaf2(a, b=b)
+def top2(a, b=5):
+    mid2(a, b)
+def rebinds(a, b=1):
+    b = b + 1
+    leaf3(a, b)
+def leaf3(a, b=1): ...
 class C:
     def __init__(self, a, b=1, c=2): ...
     def meth(self, a=1, b=2): ...
     @staticmethod
     def st(a=1, b=2): ...
-def kept(a, b=1): ...
 def only_kw(a, *, b=1, c=2): ...
-"""}
-    calling = ["""
-import functools
+def misfit(a, b=1): ...
+def part(a, b=1, c=2): ...
+def part2(a, b=1, c=2): ...
+K = 3
+def const(a, b=1): ...
+def const2(a, b=1): ...
+def imported(a, b=1): ...
+def local(a, b=1): ...
+def twice(a, b=1): ...
+def takes(a, b=1): ...
+class D:
+    def run(self):
+        takes(0, self)
+""", "caller": """
 from functools import partial
-kw(0, c=3)
-pos(0, 1)
+from m import K as KAY
+J = 4
+T = 1
+T = 2
+omitted(0)
+same(0)
+same(0, b=1)
+two(0, b=2)
+two(0)
+unknown(0, b=x + 1)
 star(*xs)
 dstar(0, **opts)
-functools.partial(part, 0, c=5)
-partial(part2, b=1)
+pos(0, 3)
+pos(0, 4)
 TABLE = {"s": stored}
-TABLE["s"](0)
+kept(0)
+top(0)
+top(0, b=5)
+top2(0)
+top2(0, 6)
+rebinds(0)
 C(0, 1)
+C(0, 2)
 obj.meth(1)
+obj.meth(2)
 obj.st(1)
+obj.st(2)
 only_kw(0, c=1)
-"""]
-    unset = unset_parameters(defining, calling, frozenset({"kept"}))
-    assert unset == [
-        "m:C(c)",
-        "m:kw(b)",
+only_kw(0, c=3)
+misfit(0, 1, 2, 3)
+misfit(0)
+functools.partial(part, 0, c=5)
+part(0, c=6)
+partial(part2, b=1)
+partial(part2, b=3)
+const(0, J)
+const(0, b=J)
+const2(0, J)
+const2(0, KAY)
+imported(0, KAY)
+def f():
+    J = 5
+    local(0, J)
+local(0, J)
+twice(0, T)
+takes(0, 1)
+"""}
+    found = one_valued(sources, {"m"}, frozenset({"kept"}))
+    assert found == [
+        "m:C(c)",           # left out by both calls
+        "m:const(b)",       # a module constant, by position and keyword
+        "m:imported(b)",    # a constant imported under another name
+        "m:leaf(b)",        # 5 through two levels of pass-through
         "m:meth(b)",
-        "m:nobody(b)",
+        "m:mid(b)",
+        "m:misfit(b)",      # the 4-argument call cannot bind
+        "m:nobody(b)",      # no call at all
+        "m:omitted(b)",     # the default only
         "m:only_kw(b)",
-        "m:part(b)",
+        "m:part(b)",        # left out by partial() and by the call
         "m:part2(c)",
         "m:pos(c)",
+        "m:rebinds(b)",
+        "m:same(b)",        # a literal equal to the default
         "m:st(b)",
+        "m:top(b)",         # the default and an equal literal
     ]
+    # two distinct literals, an unknown expression, a splat, a stored
+    # function, a second value at the top of a chain, a rebound
+    # parameter, two constants, a local shadowing a constant, a name
+    # bound twice, a bare self and partial()'s bound values each keep
+    # the option
+    for ok in ("two", "unknown", "star", "dstar", "stored", "leaf2",
+               "mid2", "top2", "leaf3", "const2", "local", "twice",
+               "takes", "part2"):
+        assert f"m:{ok}(b)" not in found
+    assert "m:part(c)" not in found
 
 
 def test_test_calls_do_not_count_as_product_calls():
-    defining = {"m": """
+    sources = """
 def opt(a, b=1): ...
 def both(a, b=1): ...
 def kept(a, b=1): ...
+def grown(a, b=1): ...
 def unused(a, b=1): ...
-"""}
-    product = ["both(0, b=2)\nkept(0)\nunused(0)\nopt(0)"]
-    tests = ["opt(0, b=2)\nboth(0, b=3)\nkept(0, b=2)"]
-    keep = {"m:kept(b)": "needed", "m:both(b)": "set by product",
-            "m:unused(b)": "set by nothing", "m:gone(b)": "no such def"}
-    assert option_findings(defining, product, tests, keep) == [
+"""
+    product = {"m": sources,
+               "p": "both(0, b=2)\nboth(0)\nkept(0)\nopt(0)\n"
+                    "grown(0)\ngrown(0, b=7)\nunused(0)"}
+    tests = {"t": "opt(0, b=2)\nboth(0, b=3)\nkept(0, b=2)\n"
+                  "grown(0, b=3)"}
+    keep = {"m:kept(b)": "needed",
+            "m:both(b)": "product gives two values",
+            "m:grown(b)": "a second product value appeared",
+            "m:unused(b)": "no test gives another value",
+            "m:gone(b)": "no such def"}
+    assert option_findings(product, tests, {"m"}, keep) == [
         "m:opt(b)",
         "m:both(b)",
         "m:gone(b)",
+        "m:grown(b)",
         "m:unused(b)",
     ]

@@ -153,13 +153,15 @@ def test_bfd_beats_next_fit_on_skewed_mix(spark):
     on a planted skewed mix), match a pure-python BFD reference,
     and never overflow capacity except for oversized singletons."""
     from ci_log_processing_spark.operators.curation import (
+        BFD_CAPACITY,
         pack_sequences,
         pack_sequences_bfd,
     )
 
-    cap = 100
-    # skewed mix: 60+41 can never share; BFD pairs 60s with 40s
-    sizes = [60, 41, 60, 40, 59, 39, 58, 38, 120]
+    cap = BFD_CAPACITY
+    assert cap == 256  # the sizes below are planted for this capacity
+    # skewed mix: 154+103 can never share; BFD pairs 154s with 102s
+    sizes = [154, 103, 154, 102, 151, 100, 148, 97, 300]
     rows = [
         (i, " ".join(["w"] * n), "s0") for i, n in enumerate(sizes)
     ]
@@ -167,7 +169,7 @@ def test_bfd_beats_next_fit_on_skewed_mix(spark):
         rows, "doc_id long, text string, source string"
     )
     nf = pack_sequences(df, capacity=cap)
-    bfd = pack_sequences_bfd(df, capacity=cap)
+    bfd = pack_sequences_bfd(df)
     nf_bins = nf.agg({"bin_idx": "max"}).collect()[0][0] + 1
     got = {r["doc_id"]: r for r in bfd.collect()}
     bfd_bins = max(r["bin_idx"] for r in got.values()) + 1

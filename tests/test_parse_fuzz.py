@@ -38,6 +38,12 @@ PAYLOADS = [
     " |\x0bINFO [vt.mod] vertical tab",
     " |\xa0WARNING no-break space",
     " |\u3000INFO ideographic space",
+    # whitespace the reference's \S+ stops at, right after the
+    # timestamp
+    "\xa0| no-break space after the timestamp",
+    "\u3000| ideographic space after the timestamp",
+    "\x0b| vertical tab after the timestamp",
+    "\t| tab after the timestamp",
     "    raise ValueError('x')",
     "-- Logs begin at Mon 2024-01-01 00:00:00 UTC. --",
 ]

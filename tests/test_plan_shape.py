@@ -116,7 +116,8 @@ def test_asof_join_single_operator_exchange(spark):
         [("a", T(2024, 1, 1), 1)], "k string, ts timestamp, i int"
     )
     right = spark.createDataFrame(
-        [("a", T(2024, 1, 1), "s")], "k string, ts timestamp, v string"
+        [("a", T(2024, 1, 1), "s", 0)],
+        "k string, ts timestamp, v string, cfg_seq long",
     )
     plan = (
         asof_join(left, right, on=["k"], value_cols=["v"])
@@ -371,7 +372,7 @@ def test_decontaminate_spans_flag_is_scan_side(spark, tmp_path):
         "doc_id long, text string",
     ).write.parquet(p)
     docs = spark.read.parquet(p)
-    out = decontaminate_spans(docs, ["quick brown fox"], k=3)
+    out = decontaminate_spans(docs, ["quick brown fox"])
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" not in plan, plan
     # the benchmark set appears as an IN-list/join-free predicate on
@@ -529,7 +530,7 @@ def test_inverted_index_band_filters_before_collect(spark, tmp_path):
     ).write.parquet(p)
     docs = spark.read.parquet(p)
     plan = (
-        inverted_index(docs, min_df=1, max_df=5)
+        inverted_index(docs)
         ._jdf.queryExecution().executedPlan().toString()
     )
     release_persisted()
@@ -548,7 +549,7 @@ def test_count_cosine_no_cartesian_tf_reused(spark, tmp_path):
 
     p = str(tmp_path / "docs")
     spark.createDataFrame(
-        [(i, f"u{i} v{i} w{i}") for i in range(20)],
+        [(i, f"u{i} v{i} w{i} x{i} y{i}") for i in range(20)],
         "doc_id long, text string",
     ).write.parquet(p)
     docs = spark.read.parquet(p)
@@ -564,10 +565,9 @@ def test_count_cosine_no_cartesian_tf_reused(spark, tmp_path):
 def test_salted_join_scatters_without_broadcast(spark, tmp_path):
     """salted_join must (a) return exactly the unsalted join's rows,
     (b) put the salt in the join keys, and (c) stay a shuffle join
-    when broadcast is disabled — splitting the hot key over n_salts
+    when broadcast is disabled — splitting the hot key over N_SALTS
     reducers is its whole reason to exist."""
     from ci_log_processing_spark.operators.skew import salted_join
-    import pytest as _pt
 
     p = str(tmp_path / "fact")
     # skewed fact: one hot key with 500 rows, 20 cold keys
@@ -581,7 +581,7 @@ def test_salted_join_scatters_without_broadcast(spark, tmp_path):
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        out = salted_join(fact, dim, "conv_id", n_salts=8)
+        out = salted_join(fact, dim, "conv_id")
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastHashJoin" not in plan, plan
         assert "_salt" in plan, plan
@@ -596,15 +596,13 @@ def test_salted_join_scatters_without_broadcast(spark, tmp_path):
         assert got == want
         # the hot key's fact rows spread across >1 salt
         n_salt_vals = (
-            salted_join(fact, dim, "conv_id", n_salts=8)
+            salted_join(fact, dim, "conv_id")
             .filter("conv_id = 'hot'")
             .count()
         )
         assert n_salt_vals == 500
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    with _pt.raises(ValueError):
-        salted_join(fact, dim, "conv_id", n_salts=0)
 
 
 def test_cube_expands_before_partial_aggregate(spark, tmp_path):

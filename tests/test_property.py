@@ -298,6 +298,7 @@ def _py_decontaminate_spans(rows, snippets, k):
 )
 def test_decontaminate_spans_matches_python(spark, data):
     from ci_log_processing_spark.operators.curation import (
+        SPAN_SHINGLE_K,
         decontaminate_spans,
     )
 
@@ -308,7 +309,7 @@ def test_decontaminate_spans_matches_python(spark, data):
         (i, data.draw(doc)) for i in range(data.draw(st.integers(3, 8)))
     ]
     snippet = data.draw(st.lists(word, min_size=2, max_size=5).map(" ".join))
-    k = data.draw(st.integers(2, 3))
+    k = SPAN_SHINGLE_K
     if len(snippet.split(" ")) < k:
         snippet = snippet + " " + snippet  # ensure >= k tokens
     docs = spark.createDataFrame(rows, "doc_id long, text string")
@@ -318,7 +319,7 @@ def test_decontaminate_spans_matches_python(spark, data):
             r["n_tokens_removed"],
             r["clean_text"],
         )
-        for r in decontaminate_spans(docs, [snippet], k=k).collect()
+        for r in decontaminate_spans(docs, [snippet]).collect()
     }
     assert got == _py_decontaminate_spans(rows, [snippet], k)
 

@@ -129,7 +129,7 @@ def test_winnow_pairs_containment(spark):
             (3, " ".join(f"other{i}" for i in range(40))),
         ],
     )
-    out = winnow_pairs(docs, overlap_milli=800).collect()
+    out = winnow_pairs(docs).collect()
     release_persisted()
     pairs = {(r["doc_a"], r["doc_b"]): r["overlap_milli"] for r in out}
     assert (1, 2) in pairs and pairs[(1, 2)] >= 800

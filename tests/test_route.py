@@ -83,12 +83,3 @@ def test_no_metadata_routing(spark):
     assert out[("no-meta", 0)] == ("drop_queue", "no_metadata")
     assert out[("no-meta", 1)] == ("drop_queue", "no_metadata")
 
-
-def test_skip_debug_off(spark):
-    t0 = datetime.datetime(2024, 1, 1)
-    df = spark.createDataFrame(
-        [("c1", 0, "assistant", "2022-02-28 09:39:09.5 | DEBUG noisy", None, t0)],
-        "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
-    )
-    routed = full_pipeline(df, spark, skip_debug=False)
-    assert routed.collect()[0]["sink"] == "agent_turns"

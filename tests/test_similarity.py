@@ -46,7 +46,7 @@ def test_brute_force_topk(spark, emb):
 def test_bucketed_recall(spark, emb):
     q = emb.filter(F.col("vec_id") < 10)
     exact = brute_force_topk(emb, q, k=10).collect()
-    approx = bucketed_ann_topk(emb, q, k=10).collect()
+    approx = bucketed_ann_topk(emb, q).collect()
     e = {(r["query_id"], r["neighbor_id"]) for r in exact}
     a = {(r["query_id"], r["neighbor_id"]) for r in approx}
     recall = len(e & a) / len(e)
@@ -92,7 +92,7 @@ def test_ivf_multiprobe_recall_dominates_single_bucket(spark, emb):
     e = {(r["query_id"], r["neighbor_id"]) for r in exact}
 
     def recall(nprobe):
-        got = ivf_multiprobe_topk(emb, q, k=10, nprobe=nprobe).collect()
+        got = ivf_multiprobe_topk(emb, q, nprobe=nprobe).collect()
         g = {(r["query_id"], r["neighbor_id"]) for r in got}
         return len(e & g) / len(e)
 
@@ -127,27 +127,26 @@ def test_capped_near_dup_bounds_hot_bucket(spark):
     )
     full = {
         (r["vec_a"], r["vec_b"])
-        for r in embedding_near_dup_pairs(emb, threshold=0.99).collect()
+        for r in embedding_near_dup_pairs(emb).collect()
     }
     capped = {
         (r["vec_a"], r["vec_b"])
-        for r in embedding_near_dup_pairs_capped(
-            emb, threshold=0.99, bucket_cap=10
-        ).collect()
+        for r in embedding_near_dup_pairs_capped(emb).collect()
     }
     assert capped <= full  # never invents pairs
     assert capped  # still finds near-dups inside cells
-    # the hot bucket was split ~8 ways: the capped pair count must be
+    # the hot bucket was split 4 ways: the capped pair count must be
     # an order of magnitude below the uncapped quadratic blow-up
     assert len(capped) < len(full) / 3
 
 
 def test_kmeans_fit_deterministic_and_separates(spark):
-    """kmeans_fit: clear cluster structure recovered, deterministic
-    across invocations, empty-cluster arg validation."""
-    import pytest as _pt
-
-    from ci_log_processing_spark.operators.similarity import kmeans_fit
+    """kmeans_fit: clear cluster structure recovered (no cluster
+    mixes two blobs far apart), deterministic across invocations."""
+    from ci_log_processing_spark.operators.similarity import (
+        KMEANS_K,
+        kmeans_fit,
+    )
 
     # two tight blobs far apart, 64-d analog in 4-d
     rows = []
@@ -157,21 +156,23 @@ def test_kmeans_fit_deterministic_and_separates(spark):
     emb = spark.createDataFrame(
         rows, "vec_id long, embedding array<double>"
     )
-    out = {r["vec_id"]: r["bkt"] for r in kmeans_fit(emb, k=2, n_iter=3).collect()}
+    out = {r["vec_id"]: r["bkt"] for r in kmeans_fit(emb, n_iter=3).collect()}
     lo = {out[i] for i in range(10)}
     hi = {out[100 + i] for i in range(10)}
-    assert len(lo) == 1 and len(hi) == 1 and lo != hi
+    # KMEANS_K clusters split the blobs, never join them
+    assert lo.isdisjoint(hi)
+    assert len(lo | hi) <= KMEANS_K
     # deterministic: second run identical
-    out2 = {r["vec_id"]: r["bkt"] for r in kmeans_fit(emb, k=2, n_iter=3).collect()}
+    out2 = {r["vec_id"]: r["bkt"] for r in kmeans_fit(emb, n_iter=3).collect()}
     assert out == out2
-    with _pt.raises(ValueError, match="k >= 1"):
-        kmeans_fit(emb, k=0)
 
 
 def test_knn_graph_edges(spark):
-    """Every vector gets <= k_nn edges, ranked by cosine desc with
-    id tie-break, and neighbors never cross clusters."""
+    """Every vector gets <= KNN_NEIGHBORS edges, ranked by cosine desc
+    with id tie-break, and neighbors never cross clusters."""
     from ci_log_processing_spark.operators.similarity import (
+        KNN_NEIGHBORS,
+        QUANTIZER_ITERS,
         kmeans_fit,
         knn_graph,
     )
@@ -180,16 +181,17 @@ def test_knn_graph_edges(spark):
     vecs = [(i, [1.0 + 0.01 * i, 0.02 * i]) for i in range(6)]
     vecs += [(10 + i, [-1.0 - 0.01 * i, 0.03 * i]) for i in range(6)]
     emb = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
-    g = knn_graph(emb, k_nn=3, k_clusters=2, n_iter=2).collect()
+    g = knn_graph(emb).collect()
     by_src = {}
     for r in g:
         by_src.setdefault(r["vec_id"], []).append(r)
     assigned = {
         r["vec_id"]: r["bkt"]
-        for r in kmeans_fit(emb, k=2, n_iter=2).collect()
+        for r in kmeans_fit(emb, n_iter=QUANTIZER_ITERS).collect()
     }
+    assert by_src
     for src, edges in by_src.items():
-        assert len(edges) <= 3
+        assert len(edges) <= KNN_NEIGHBORS
         ranks = sorted(e["rank"] for e in edges)
         assert ranks == list(range(1, len(edges) + 1))
         sims = [e["cos_sim"] for e in sorted(edges, key=lambda e: e["rank"])]
@@ -200,10 +202,15 @@ def test_knn_graph_edges(spark):
 
 
 def test_knn_graph_multiprobe_superset_recall(spark):
-    """nprobe=2 reaches cross-cluster neighbors nprobe=1 cannot: the
-    nprobe=1 edge set is a subset of the candidate pool, and every
-    vector's edges at nprobe=2 are at least as similar rank-for-rank."""
-    from ci_log_processing_spark.operators.similarity import knn_graph
+    """nprobe=KMEANS_K reaches cross-cluster neighbors nprobe=1
+    cannot: the nprobe=1 edge set is a subset of the candidate pool,
+    and every vector's edges at nprobe=KMEANS_K are at least as
+    similar rank-for-rank."""
+    from ci_log_processing_spark.operators.similarity import (
+        KMEANS_K,
+        KNN_NEIGHBORS,
+        knn_graph,
+    )
 
     import pytest as _pt
 
@@ -213,8 +220,8 @@ def test_knn_graph_multiprobe_superset_recall(spark):
     vecs += [(10 + i, [0.1, 1.0 + 0.01 * i]) for i in range(5)]
     vecs += [(99, [0.6, 0.75])]  # boundary straggler
     emb = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
-    g1 = knn_graph(emb, k_nn=4, k_clusters=2, n_iter=2, nprobe=1).collect()
-    g2 = knn_graph(emb, k_nn=4, k_clusters=2, n_iter=2, nprobe=2).collect()
+    g1 = knn_graph(emb, nprobe=1).collect()
+    g2 = knn_graph(emb, nprobe=KMEANS_K).collect()
 
     def best(edges, src):
         mine = [e for e in edges if e["vec_id"] == src]
@@ -224,12 +231,15 @@ def test_knn_graph_multiprobe_superset_recall(spark):
         b1, b2 = best(g1, src), best(g2, src)
         for rank, sim in b1.items():
             assert b2.get(rank, -2.0) >= sim  # probing more never hurts
-    # nprobe=2 with 2 clusters == exhaustive: every vector gets 4 edges
+    # probing every cluster == exhaustive: every vector gets
+    # KNN_NEIGHBORS edges
     from collections import Counter
 
-    assert all(c == 4 for c in Counter(e["vec_id"] for e in g2).values())
+    counts = Counter(e["vec_id"] for e in g2)
+    assert len(counts) == len(vecs)
+    assert all(c == KNN_NEIGHBORS for c in counts.values())
     with _pt.raises(ValueError, match="nprobe"):
-        knn_graph(emb, k_nn=2, k_clusters=2, n_iter=1, nprobe=3)
+        knn_graph(emb, nprobe=KMEANS_K + 1)
 
 
 def test_embedding_diversity_matches_numpy(spark, emb):
@@ -366,9 +376,7 @@ def test_srp_near_dup_recall_and_precision(spark, emb):
         if cos(vecs[i], vecs[j]) >= 0.30
     }
 
-    got_rows = srp_near_dup_pairs(
-        emb, threshold=0.30, n_bits=24, bands=8
-    ).collect()
+    got_rows = srp_near_dup_pairs(emb, threshold=0.30).collect()
     got = {(r["vec_a"], r["vec_b"]) for r in got_rows}
     assert all(a < b for a, b in got)
     # precision 1.0: the verify step admits only true pairs
@@ -383,9 +391,7 @@ def test_srp_near_dup_recall_and_precision(spark, emb):
 
     again = {
         (r["vec_a"], r["vec_b"])
-        for r in srp_near_dup_pairs(
-            emb, threshold=0.30, n_bits=24, bands=8
-        ).collect()
+        for r in srp_near_dup_pairs(emb, threshold=0.30).collect()
     }
     assert got == again
 
@@ -410,9 +416,6 @@ def test_srp_capped_subset_and_divisibility(spark, emb):
     assert capped <= full
     assert len(capped) < len(full)  # cap 10 < gate cell sizes -> fires
 
-    with pytest.raises(ValueError, match="must divide"):
-        srp_near_dup_pairs(emb, bands=5, n_bits=16)
-
 
 def test_contrastive_triplets_invariants(spark, emb):
     """Triplets (contrastive_triplets): pos_cos >= t_pos > neg_cos,
@@ -420,12 +423,13 @@ def test_contrastive_triplets_invariants(spark, emb):
     Python reduction of the same SRP candidate set (best positive /
     hardest negative by (cosine desc, id asc))."""
     from ci_log_processing_spark.operators.similarity import (
+        TRIPLET_T_POS,
         contrastive_triplets,
         srp_near_dup_pairs,
     )
 
-    t_pos = 0.35
-    out = contrastive_triplets(emb, t_pos=t_pos).collect()
+    t_pos = TRIPLET_T_POS
+    out = contrastive_triplets(emb).collect()
     assert out, "no triplets mined at sf0.001"
     anchors = [r["anchor_id"] for r in out]
     assert len(anchors) == len(set(anchors))
@@ -460,7 +464,7 @@ def test_contrastive_triplets_invariants(spark, emb):
 
     again = {
         r["anchor_id"]: (r["pos_id"], r["pos_cos"], r["neg_id"], r["neg_cos"])
-        for r in contrastive_triplets(emb, t_pos=t_pos).collect()
+        for r in contrastive_triplets(emb).collect()
     }
     assert got == again
 
@@ -554,15 +558,16 @@ def test_kcenter_select_greedy_reference(spark):
         "vec_id long, embedding array<float>",
     )
     from ci_log_processing_spark.operators.similarity import (
+        KCENTER_K,
         kcenter_select,
     )
 
-    got = {r["round_idx"]: r for r in kcenter_select(df, k=4).collect()}
+    got = {r["round_idx"]: r for r in kcenter_select(df).collect()}
     # greedy reference in pure python
     coords = dict(pts)
     chosen = [0]
     order = [(0, None)]
-    for _ in range(3):
+    for _ in range(KCENTER_K - 1):
         far = max(
             ((min(round(sum((a - b) ** 2 for a, b in
                            zip(coords[i], coords[c])), 5)
@@ -579,7 +584,7 @@ def test_kcenter_select_greedy_reference(spark):
         else:
             assert got[r]["radius"] == pytest.approx(rad)
     # radii are non-increasing (greedy coverage certificate)
-    radii = [got[r]["radius"] for r in range(1, 4)]
+    radii = [got[r]["radius"] for r in range(1, KCENTER_K)]
     assert all(a >= b for a, b in zip(radii, radii[1:]))
 
 
@@ -590,9 +595,4 @@ def test_kcenter_select_guards(spark):
 
     df = spark.createDataFrame([], "vec_id long, embedding array<float>")
     with pytest.raises(ValueError):
-        kcenter_select(df, k=2)
-    one = spark.createDataFrame(
-        [(1, [1.0])], "vec_id long, embedding array<float>"
-    )
-    with pytest.raises(ValueError):
-        kcenter_select(one, k=0)
+        kcenter_select(df)

@@ -33,7 +33,7 @@ def test_kmeans_fit_fewer_vectors_than_k_matches_twin(spark, tmp_path):
         EMB_SCHEMA,
     ).coalesce(1).write.parquet(p)
     got = sorted(
-        tuple(r) for r in kmeans_fit(spark.read.parquet(p), k=8, n_iter=2)
+        tuple(r) for r in kmeans_fit(spark.read.parquet(p), n_iter=2)
         .select("vec_id", "bkt", "dist").collect()
     )
     con = duckdb.connect()

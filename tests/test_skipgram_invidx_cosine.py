@@ -8,11 +8,17 @@ from collections import Counter
 
 import pytest
 
+from ci_log_processing_spark.operators import retrieval
 from ci_log_processing_spark.operators.dedup import (
+    COSINE_DF_CUT,
+    COSINE_NGRAM,
     count_cosine_pairs,
     release_persisted,
 )
-from ci_log_processing_spark.operators.retrieval import inverted_index
+from ci_log_processing_spark.operators.retrieval import (
+    INDEX_MIN_DF,
+    inverted_index,
+)
 from ci_log_processing_spark.operators.textstats import skipgram_pairs
 
 DOCS_SCHEMA = "doc_id long, text string"
@@ -58,7 +64,7 @@ def test_skipgram_matches_python_reference(spark):
     assert got == dict(ref)
 
 
-def test_inverted_index_postings_and_band(spark):
+def test_inverted_index_postings_and_band(spark, monkeypatch):
     df = spark.createDataFrame(
         [
             (10, "b a b"),
@@ -69,30 +75,32 @@ def test_inverted_index_postings_and_band(spark):
     )
     out = {
         r.term: r
-        for r in inverted_index(df, min_df=1, max_df=2).collect()
+        for r in inverted_index(df).collect()
     }
     # 'b': docs 10 (pos 1,3) and 7 (pos 1) -> doc order forced
     assert out["b"].postings == "7:1|10:1,3"
     assert (out["b"].df, out["b"].n_occurrences) == (2, 3)
     # 'a': docs 2 (pos 1) and 10 (pos 2)
     assert out["a"].postings == "2:1|10:2"
-    # 'c': df 1
-    assert out["c"].postings == "2:2"
-    # min_df=2 drops 'c'; max_df=1 keeps only 'c'
-    assert set(
-        r.term for r in inverted_index(df, min_df=2, max_df=9).collect()
-    ) == {"a", "b"}
-    assert set(
-        r.term for r in inverted_index(df, min_df=1, max_df=1).collect()
-    ) == {"c"}
-    with pytest.raises(ValueError):
-        inverted_index(df, min_df=0)
-    with pytest.raises(ValueError):
-        inverted_index(df, min_df=3, max_df=2)
+    # 'c': df 1 < INDEX_MIN_DF, cut from the band
+    assert INDEX_MIN_DF == 2 and set(out) == {"a", "b"}
+    # the band's upper bound is the per-term state cap; the gate's
+    # vocabulary never reaches INDEX_MAX_DF, so pin the filter by
+    # lowering both bounds (read at call time) to a band of df == 1
+    monkeypatch.setattr(retrieval, "INDEX_MIN_DF", 1)
+    monkeypatch.setattr(retrieval, "INDEX_MAX_DF", 1)
+    out = {r.term: r for r in inverted_index(df).collect()}
+    assert set(out) == {"c"} and out["c"].postings == "2:2"
+
+
+def _grams(text: str) -> Counter:
+    toks = text.split()
+    n = COSINE_NGRAM
+    return Counter(" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1))
 
 
 def _cos(a: str, b: str) -> float:
-    ca, cb = Counter(a.split()), Counter(b.split())
+    ca, cb = _grams(a), _grams(b)
     dot = sum(ca[t] * cb[t] for t in ca)
     return dot / math.sqrt(
         sum(v * v for v in ca.values())
@@ -100,62 +108,51 @@ def _cos(a: str, b: str) -> float:
     )
 
 
-def test_count_cosine_unigram_vs_python(spark):
+def test_count_cosine_vs_python(spark):
     texts = {
-        0: "alpha beta gamma alpha",
-        1: "alpha beta gamma alpha delta",   # near-dup of 0
-        2: "epsilon zeta eta theta",         # unrelated
-        3: "alpha beta gamma alpha",         # exact dup of 0
+        0: "alpha beta gamma delta alpha beta gamma",
+        1: "alpha beta gamma delta alpha beta gamma epsilon",  # near-dup
+        2: "epsilon zeta eta theta iota kappa",                # unrelated
+        3: "alpha beta gamma delta alpha beta gamma",          # exact dup
     }
     df = spark.createDataFrame(list(texts.items()), DOCS_SCHEMA)
-    out = {
-        (r.doc_a, r.doc_b): r
-        for r in count_cosine_pairs(
-            df, threshold_milli=900, df_cut=128
-        ).collect()
-    }
+    out = {(r.doc_a, r.doc_b): r for r in count_cosine_pairs(df).collect()}
     release_persisted()
     expected = {
         (a, b)
         for a in texts
         for b in texts
-        if a < b and _cos(texts[a], texts[b]) >= 0.9
+        if a < b and _cos(texts[a], texts[b]) >= 0.8
     }
-    assert set(out) == expected and (0, 3) in expected
+    assert set(out) == expected and {(0, 1), (0, 3)} <= expected
     # the exact pair carries dot == norms (identical vectors)
     r = out[(0, 3)]
     assert r.dot == r.norm_a2 == r.norm_b2
-    with pytest.raises(ValueError):
-        count_cosine_pairs(df, threshold_milli=0)
-    with pytest.raises(ValueError):
-        count_cosine_pairs(df, ngram=0)
 
 
 def test_count_cosine_repeated_sentence_multiplicity(spark):
-    # multiplicity matters: doc 1 repeats doc 0's sentence 3x.
-    # Count-cosine keeps them close; a SET-based measure would too,
-    # but the dot here is 3x the set overlap — assert the exact
+    # multiplicity matters: doc 1 repeats doc 0's sentence twice, so
+    # each of doc 0's five 4-grams occurs twice in doc 1 (plus three
+    # grams across the seam). A SET-based measure sees 5 of 8 grams
+    # shared; the dot is twice the set overlap — assert the exact
     # integer dot to pin the multiplicity semantics.
-    df = spark.createDataFrame(
-        [(0, "x y z"), (1, "x y z x y z x y z")], DOCS_SCHEMA
-    )
-    rows = count_cosine_pairs(df, threshold_milli=990).collect()
+    s = "a b c d e f g h"
+    df = spark.createDataFrame([(0, s), (1, f"{s} {s}")], DOCS_SCHEMA)
+    rows = count_cosine_pairs(df).collect()
     release_persisted()
     assert len(rows) == 1
     r = rows[0]
-    # tf doc0 = 1 each; doc1 = 3 each; dot = 3*3 = 9
-    assert (r.dot, r.norm_a2, r.norm_b2) == (9, 3, 27)
+    # tf doc0 = 1 each; doc1 = 2 each (+ 3 seam grams once)
+    assert (r.dot, r.norm_a2, r.norm_b2) == (10, 5, 23)
 
 
 def test_count_cosine_df_cut_gates_candidates(spark):
-    # every shared term has df > cut -> no candidates at all
+    # the one shared term has df > cut -> no candidates at all
     df = spark.createDataFrame(
-        [(i, "same text here") for i in range(5)], DOCS_SCHEMA
+        [(i, "same text here too") for i in range(COSINE_DF_CUT + 1)],
+        DOCS_SCHEMA,
     )
-    assert (
-        count_cosine_pairs(df, threshold_milli=500, df_cut=2).count()
-        == 0
-    )
+    assert count_cosine_pairs(df).count() == 0
     release_persisted()
 
 
@@ -205,15 +202,13 @@ def test_incremental_index_merge_identity(spark):
     )
     whole = {
         r.term: (r.df, r.n_occurrences, r.postings)
-        for r in inverted_index(df, min_df=1, max_df=100).collect()
+        for r in inverted_index(df).collect()
     }
     merged = finalize_index(
         merge_posting_rows(
             posting_rows(df.filter("doc_id % 2 = 0")),
             posting_rows(df.filter("doc_id % 2 = 1")),
         ),
-        min_df=1,
-        max_df=100,
     )
     got = {
         r.term: (r.df, r.n_occurrences, r.postings)

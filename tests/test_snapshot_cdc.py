@@ -61,7 +61,7 @@ def test_cdc_reconstruction_and_sharing(spark):
     docs = _docs(spark, rows)
     out = {
         r["doc_id"]: r.asDict()
-        for r in cdc_chunk_stats(docs, window=8, divisor=16).collect()
+        for r in cdc_chunk_stats(docs).collect()
     }
     release_persisted()
     # insertion-robustness: the shared fraction of doc 1 vs its
@@ -100,7 +100,7 @@ def test_cdc_chunk_lengths_partition_text(spark):
     from ci_log_processing_spark.operators.dedup import cdc_chunk_stats
 
     # shared_chars <= total chars, and a solo unique doc shares 0
-    out = cdc_chunk_stats(docs, window=8, divisor=8)
+    out = cdc_chunk_stats(docs)
     joined = (
         out.join(docs, "doc_id")
         .select("doc_id", "shared_chars", F2.length("text").alias("n"))
@@ -109,16 +109,6 @@ def test_cdc_chunk_lengths_partition_text(spark):
     release_persisted()
     for r in joined:
         assert 0 <= r["shared_chars"] <= r["n"]
-
-
-def test_cdc_validation(spark):
-    from ci_log_processing_spark.operators.dedup import cdc_chunk_stats
-
-    docs = _docs(spark, [(1, "abc")])
-    with pytest.raises(ValueError):
-        cdc_chunk_stats(docs, window=1)
-    with pytest.raises(ValueError):
-        cdc_chunk_stats(docs, divisor=1)
 
 
 def test_normalize_text_rules(spark):
@@ -182,7 +172,7 @@ def test_epoch_plan_caps_and_shares(spark):
     out = {
         r["source"]: r.asDict()
         for r in epoch_plan(
-            docs, target_tokens=200.0, weights={"hq": 9.0}, max_epochs=4.0
+            docs, target_tokens=200.0, weights={"hq": 9.0}
         ).collect()
     }
     assert out["hq"]["available_tokens"] == 10
@@ -203,5 +193,3 @@ def test_epoch_plan_validation(spark):
     )
     with pytest.raises(ValueError):
         epoch_plan(docs, 10.0, {"s": -1.0})
-    with pytest.raises(ValueError):
-        epoch_plan(docs, 10.0, {}, max_epochs=0.0)

@@ -377,15 +377,16 @@ def test_streaming_interval_join_bounds(spark, tmp_path):
     import datetime as dt
 
     from ci_log_processing_spark.streaming.stream_join import (
+        LOOKBACK_SEC,
         streaming_interval_join,
     )
 
     T = dt.datetime
     turns = [("a", 0, "u", "x", "t", T(2024, 1, 1, 12, 0))]
     cfgs = [
-        ("a", T(2024, 1, 1, 11, 0), "s_lo", 1),   # == ts - lookback
+        ("a", T(2024, 1, 1, 6, 0), "s_lo", 1),    # == ts - LOOKBACK_SEC
         ("a", T(2024, 1, 1, 12, 0), "s_eq", 2),   # == ts
-        ("a", T(2024, 1, 1, 10, 59, 59), "s_old", 3),  # 1 s too old
+        ("a", T(2024, 1, 1, 5, 59, 59), "s_old", 3),  # 1 s too old
         ("a", T(2024, 1, 1, 12, 0, 1), "s_fut", 4),    # in the future
         ("b", T(2024, 1, 1, 11, 30), "s_otherconv", 5),
     ]
@@ -398,9 +399,8 @@ def test_streaming_interval_join_bounds(spark, tmp_path):
     spark.createDataFrame(
         cfgs, "cfg_conv_id string, cfg_ts timestamp, cfg_state string, cfg_seq long"
     ).coalesce(1).write.parquet(r_dir)
-    out = streaming_interval_join(
-        spark, l_dir, r_dir, str(tmp_path / "out"), lookback_sec=3600
-    )
+    assert LOOKBACK_SEC == 6 * 3600
+    out = streaming_interval_join(spark, l_dir, r_dir, str(tmp_path / "out"))
     assert sorted(r["cfg_state"] for r in out.collect()) == ["s_eq", "s_lo"]
 
 
@@ -434,9 +434,7 @@ def test_streaming_ingest_curation(spark, tmp_path):
         for f in sorted((docs_dir / f"wave{i}").glob("*.parquet")):
             shutil.copy(f, stream_dir / f"w{i}_{n}.parquet")
             n += 1
-    out = run_ingest_curation(
-        spark, str(stream_dir), str(tmp_path / "out"), min_quality=0.30
-    )
+    out = run_ingest_curation(spark, str(stream_dir), str(tmp_path / "out"))
     pdf = out.toPandas().sort_values("doc_id")
     # one row per distinct surviving text; first arrival wins
     assert sorted(pdf["text"]) == sorted(
@@ -462,7 +460,6 @@ def test_streaming_ingest_curation(spark, tmp_path):
         spark,
         str(stream_dir),
         str(tmp_path / "out2"),
-        min_quality=0.30,
     )
     assert out2.count() == 3
     from ci_log_processing_spark.operators.dedup import incremental_dedup
@@ -493,6 +490,7 @@ def test_ingest_curation_replay_after_crash(spark, tmp_path):
     from ci_log_processing_spark.operators.dedup import incremental_dedup
     from ci_log_processing_spark.operators.textstats import quality_scores
     from ci_log_processing_spark.streaming.ingest_curate import (
+        INGEST_MIN_QUALITY,
         run_ingest_curation,
     )
 
@@ -519,7 +517,7 @@ def test_ingest_curation_replay_after_crash(spark, tmp_path):
     )
     scored = batch.transform(
         lambda d: quality_scores(d, keep_cols=("text", "event_ts"))
-    ).filter("quality >= 0.30")
+    ).filter(F.col("quality") >= INGEST_MIN_QUALITY)
     fresh = incremental_dedup(
         scored.select("doc_id", "text", "event_ts", "quality"),
         spark.createDataFrame([], "h string"),
@@ -532,9 +530,7 @@ def test_ingest_curation_replay_after_crash(spark, tmp_path):
     )
 
     # --- restart: the stream replays batch 0 over its own leftovers ---
-    out = run_ingest_curation(
-        spark, str(stream_dir), str(out_dir), min_quality=0.30
-    )
+    out = run_ingest_curation(spark, str(stream_dir), str(out_dir))
     pdf = out.toPandas()
     # full recovery: both distinct docs present (intra-batch dup of
     # "two" collapsed), the partial corpus was overwritten, and the
@@ -590,14 +586,10 @@ def test_neardup_ingestion(spark, tmp_path):
         ],
         2_000_000,
     )
-    out = run_neardup_ingestion(
-        spark, str(stream_dir), str(tmp_path / "out"), threshold=0.6
-    )
+    out = run_neardup_ingestion(spark, str(stream_dir), str(tmp_path / "out"))
     assert sorted(r["doc_id"] for r in out.collect()) == [1, 2, 102]
     # replay against the existing output admits nothing new
-    out2 = run_neardup_ingestion(
-        spark, str(stream_dir), str(tmp_path / "out"), threshold=0.6
-    )
+    out2 = run_neardup_ingestion(spark, str(stream_dir), str(tmp_path / "out"))
     assert sorted(r["doc_id"] for r in out2.collect()) == [1, 2, 102]
     # the band/shingle index holds exactly the survivors
     sh = spark.read.option("recursiveFileLookup", "true").parquet(
@@ -686,7 +678,7 @@ def test_streaming_hdr_bridges_gaps_across_idle_batches(spark, tmp_path):
     streamed = {
         r["sink"]: r.asDict()
         for r in run_streaming_hdr(
-            spark, str(in_dir), str(tmp_path / "out"), sub_bits=4,
+            spark, str(in_dir), str(tmp_path / "out"),
             meta=meta,
         ).collect()
     }
@@ -694,7 +686,7 @@ def test_streaming_hdr_bridges_gaps_across_idle_batches(spark, tmp_path):
     batch = {
         r["sink"]: r.asDict()
         for r in hdr_latency_percentiles(
-            full_pipeline(allrows, spark, meta=meta), sub_bits=4
+            full_pipeline(allrows, spark, meta=meta)
         ).collect()
     }
     assert streamed == batch

@@ -66,7 +66,7 @@ def test_slo_burn_multiwindow_rule(spark):
     df = spark.createDataFrame(rows, ROUTED_SCHEMA)
     out = {
         r.window_start.hour: r
-        for r in slo_burn_alert(df, slo_milli=50).collect()
+        for r in slo_burn_alert(df).collect()
     }
     assert out[0].short_burn_milli == 100
     assert out[5].long_burn_milli == 100
@@ -95,13 +95,16 @@ def test_slo_burn_range_frame_respects_calendar_gaps(spark):
 
 
 def test_hashed_features_properties(spark):
-    from ci_log_processing_spark.operators.textstats import hashed_features
+    from ci_log_processing_spark.operators.textstats import (
+        HASH_DIM,
+        hashed_features,
+    )
 
     docs = spark.createDataFrame(
         [(1, "a b a"), (2, "a b a"), (3, "")],
         "doc_id long, text string",
     )
-    out = hashed_features(docs, dim=8).collect()
+    out = hashed_features(docs).collect()
     by_doc = {}
     for r in out:
         by_doc.setdefault(r.doc_id, {})[r.bucket] = r.weight
@@ -112,4 +115,4 @@ def test_hashed_features_properties(spark):
     assert sum(abs(w) for w in by_doc[1].values()) <= 3
     # the doc with no tokens contributes no rows
     assert 3 not in by_doc
-    assert all(0 <= r.bucket < 8 for r in out)
+    assert all(0 <= r.bucket < HASH_DIM for r in out)

@@ -10,12 +10,14 @@ missing year from its batch_ts.
 
 import datetime
 
+import duckdb
 import pytest
 from pyspark.sql import functions as F
 
 from ci_log_processing_spark.functions.timestamps import (
     parse_timestamp_py,
     ts_cascade_col,
+    ts_cascade_sql_duckdb,
 )
 from ci_log_processing_spark.plans.pipeline import (
     full_pipeline,
@@ -57,6 +59,28 @@ GOLDEN = [
         "2022-03-23T11:46:49+0000 some text",
         datetime.datetime(2022, 3, 23, 11, 46, 49),
     ),
+    # a token ends at any str.isspace() character, and the syslog
+    # day-time join is any of them
+    (
+        "2022-03-21T08:39:18.220547Z\xa0| no-break space",
+        datetime.datetime(2022, 3, 21, 8, 39, 18, 220547),
+    ),
+    (
+        "2022-03-21T08:39:18.220547Z\x0b| vertical tab",
+        datetime.datetime(2022, 3, 21, 8, 39, 18, 220547),
+    ),
+    (
+        "2022-02-28 09:39:09.5\u3000| ideographic space",
+        datetime.datetime(2022, 2, 28, 9, 39, 9, 500000),
+    ),
+    (
+        "Mar 31\u300004:50:23.795709 ideographic-joined syslog",
+        datetime.datetime(REF_YEAR, 3, 31, 4, 50, 23, 795700),
+    ),
+    (
+        "Mar 21 09:33:23\u2003host em space",
+        datetime.datetime(REF_YEAR, 3, 21, 9, 33, 23),
+    ),
     # no timestamp at all
     ('    raise ValueError("boom")', None),
     ("-- Logs begin at Mon 2022-02-28 09:00:00 UTC. --", None),
@@ -80,6 +104,13 @@ def test_catalyst_cascade(spark):
     by_text = {r["text"]: r["ts"] for r in got}
     for line, expected in GOLDEN:
         assert by_text[line] == expected, line
+
+
+def test_duckdb():
+    con = duckdb.connect()
+    sql = f"SELECT {ts_cascade_sql_duckdb('text', REF_YEAR)} FROM (SELECT ? AS text)"
+    for line, expected in GOLDEN:
+        assert con.execute(sql, [line]).fetchone()[0] == expected, line
 
 
 @pytest.mark.parametrize("impl", ["native", "pandas"])

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from ci_log_processing_spark.operators.dedup import release_persisted
 from ci_log_processing_spark.operators.tokenizer import (
+    BPE_MERGES,
     EOW,
     bpe_merges,
     bpe_token_counts,
@@ -67,20 +68,20 @@ def docs(spark):
 def test_bpe_merges_match_reference(spark, docs):
     got = [
         (r.merge_rank, r.lhs, r.rhs, r.merged, r.pair_freq)
-        for r in bpe_merges(docs, n_merges=10).orderBy("merge_rank").collect()
+        for r in bpe_merges(docs).orderBy("merge_rank").collect()
     ]
     release_persisted()
-    want, _ = _ref_bpe(CORPUS, 10)
+    want, _ = _ref_bpe(CORPUS, BPE_MERGES)
     assert got == want
 
 
 def test_bpe_token_counts_match_reference(spark, docs):
     got = {
         r.doc_id: r.n_bpe_tokens
-        for r in bpe_token_counts(docs, n_merges=6).collect()
+        for r in bpe_token_counts(docs).collect()
     }
     release_persisted()
-    _, words = _ref_bpe(CORPUS, 6)
+    _, words = _ref_bpe(CORPUS, BPE_MERGES)
     want = {
         i: sum(len(words[w]) for w in t.split(" ") if w)
         for i, t in enumerate(CORPUS)
@@ -94,19 +95,23 @@ def test_bpe_overlapping_pair_left_to_right(spark):
     docs = spark.createDataFrame(
         [(0, "aaaa aaa aaaa")], "doc_id long, text string"
     )
-    m = bpe_merges(docs, n_merges=1).collect()[0]
+    got = [
+        (r.merge_rank, r.lhs, r.rhs, r.merged, r.pair_freq)
+        for r in bpe_merges(docs).orderBy("merge_rank").collect()
+    ]
     release_persisted()
-    assert (m.lhs, m.rhs) == ("a", "a")
+    assert got[0][1:3] == ("a", "a")
     # aaaa contributes 3 (a,a) windows x2 freq... reference decides:
-    want, _ = _ref_bpe(["aaaa aaa aaaa"], 1)
-    assert (m.merge_rank, m.lhs, m.rhs, m.merged, m.pair_freq) == want[0]
+    want, _ = _ref_bpe(["aaaa aaa aaaa"], BPE_MERGES)
+    assert got == want
 
 
 def test_bpe_early_stop_when_fully_merged(spark):
     # single 1-char word: symbols [x, </w>] -> one merge possible,
-    # then every word is a single symbol and training stops early
+    # then every word is a single symbol and training stops early,
+    # well before BPE_MERGES
     docs = spark.createDataFrame([(0, "x x x")], "doc_id long, text string")
-    got = bpe_merges(docs, n_merges=5).collect()
+    got = bpe_merges(docs).collect()
     release_persisted()
     assert len(got) == 1
     assert (got[0].lhs, got[0].rhs) == ("x", EOW)
@@ -117,11 +122,14 @@ def test_bpe_tie_breaks_lexicographic(spark):
     # all freq 1 -> lexicographic min (a,</w>) wins ('<' = 0x3C
     # sorts before every lowercase letter, bytewise in both engines)
     docs = spark.createDataFrame([(0, "ab ba")], "doc_id long, text string")
-    m = bpe_merges(docs, n_merges=1).collect()[0]
+    got = [
+        (r.merge_rank, r.lhs, r.rhs, r.merged, r.pair_freq)
+        for r in bpe_merges(docs).orderBy("merge_rank").collect()
+    ]
     release_persisted()
-    assert (m.lhs, m.rhs) == ("a", EOW)
-    want, _ = _ref_bpe(["ab ba"], 1)
-    assert (m.merge_rank, m.lhs, m.rhs, m.merged, m.pair_freq) == want[0]
+    assert got[0][1:3] == ("a", EOW)
+    want, _ = _ref_bpe(["ab ba"], BPE_MERGES)
+    assert got == want
 
 
 def test_bpe_words_with_separator_byte_dropped(spark):
@@ -131,20 +139,20 @@ def test_bpe_words_with_separator_byte_dropped(spark):
     )
     counts = {
         r.doc_id: r.n_bpe_tokens
-        for r in bpe_token_counts(docs, n_merges=1).collect()
+        for r in bpe_token_counts(docs).collect()
     }
     release_persisted()
-    # the \x01 word contributes nothing; 'ok' merged once: ok,</w>
-    # after merge (o,k) -> [ok, </w>] = 2 tokens x2 words
-    assert counts == {0: 4}
+    # the \x01 word contributes nothing; 'ok' merges fully, (k,</w>)
+    # then (o,k</w>) -> [ok</w>] = 1 token x2 words
+    assert counts == {0: 2}
 
 
 def test_bpe_merges_gate_shape(spark, docs):
-    out = bpe_merges(docs, n_merges=4)
+    out = bpe_merges(docs)
     assert [f.name for f in out.schema.fields] == [
         "merge_rank", "lhs", "rhs", "merged", "pair_freq",
     ]
-    assert out.count() == 4
+    assert out.count() == BPE_MERGES
     release_persisted()
 
 
@@ -155,12 +163,12 @@ def test_bpe_token_counts_arrow_matches_join_variant(spark, docs):
 
     join_side = {
         r.doc_id: r.n_bpe_tokens
-        for r in bpe_token_counts(docs, n_merges=4).collect()
+        for r in bpe_token_counts(docs).collect()
     }
     release_persisted()
     arrow_side = {
         r.doc_id: r.n_bpe_tokens
-        for r in bpe_token_counts_arrow(docs, n_merges=4).collect()
+        for r in bpe_token_counts_arrow(docs).collect()
     }
     release_persisted()
     assert join_side == arrow_side
@@ -177,7 +185,7 @@ def test_bpe_token_counts_arrow_drops_uncountable_docs(spark):
     )
     out = {
         r.doc_id: r.n_bpe_tokens
-        for r in bpe_token_counts_arrow(docs, n_merges=1).collect()
+        for r in bpe_token_counts_arrow(docs).collect()
     }
     release_persisted()
     # docs 1 and 2 have no countable word — absent, like the join
@@ -201,7 +209,7 @@ def test_bpe_fertility_bounds_and_identity(spark):
     df = spark.createDataFrame(
         rows, "doc_id long, text string, source string"
     )
-    got = {r["source"]: r for r in bpe_fertility(df, n_merges=8).collect()}
+    got = {r["source"]: r for r in bpe_fertility(df).collect()}
     release_persisted()
     for src, r in got.items():
         assert r["fertility_milli"] >= 1000

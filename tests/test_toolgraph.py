@@ -104,6 +104,6 @@ def test_pagerank_empty_graph_raises(spark):
 
 
 def test_pagerank_deterministic_across_runs(spark, routed):
-    a = sorted(map(tuple, tool_pagerank(routed, n_iter=7).collect()))
-    b = sorted(map(tuple, tool_pagerank(routed, n_iter=7).collect()))
+    a = sorted(map(tuple, tool_pagerank(routed).collect()))
+    b = sorted(map(tuple, tool_pagerank(routed).collect()))
     assert a == b

@@ -57,7 +57,7 @@ def test_agent_loop_runs_islands(spark, routed):
     _, rows = routed
     out = {
         (r.conv_id, r.start_turn): (r.tool, r.run_len, r.end_turn)
-        for r in agent_loop_runs(_df(spark, rows), min_run=2).collect()
+        for r in agent_loop_runs(_df(spark, rows)).collect()
     }
     # conv A: exactly one qualifying run (turns 0-2); q2 breaks it
     assert out[("A", 0)] == ("search", 3, 2)
@@ -67,12 +67,6 @@ def test_agent_loop_runs_islands(spark, routed):
     # participates
     assert not any(k[0] == "B" for k in out)
     assert len(out) == 2
-
-
-def test_agent_loop_runs_min_run_validation(spark):
-    with pytest.raises(ValueError):
-        agent_loop_runs(_df(spark, [("A", 0, "u", None, "m", "errors")]),
-                        min_run=1)
 
 
 def test_conversation_funnel_milestones(spark, routed):
@@ -95,9 +89,7 @@ def test_turn_transitions_role_chain(spark, routed):
     _, rows = routed
     out = {
         (r.prev_state, r.state): (r.n_transitions, r.p)
-        for r in turn_transition_matrix(
-            _df(spark, rows), state_col="role", sink=None
-        ).collect()
+        for r in turn_transition_matrix(_df(spark, rows)).collect()
     }
     # conv A: asst->asst x4; conv B (drop excluded): user->asst,
     # asst->asst; conv C: user->user
@@ -106,17 +98,6 @@ def test_turn_transitions_role_chain(spark, routed):
     assert out[("user", "user")][0] == 1
     assert out[("user", "assistant")][1] == 0.5
     assert sum(n for n, _ in out.values()) == 7
-
-
-def test_turn_transitions_sink_restriction(spark, routed):
-    _, rows = routed
-    out = turn_transition_matrix(
-        _df(spark, rows), state_col="tool", sink="tool_calls"
-    ).collect()
-    # tool chain within tool_calls only: A search->search x3,
-    # B grep->grep x1
-    got = {(r.prev_state, r.state): r.n_transitions for r in out}
-    assert got == {("search", "search"): 3, ("grep", "grep"): 1}
 
 
 DOCS_SCHEMA = "doc_id long, text string"
@@ -294,22 +275,26 @@ def test_tool_health_composition_and_terminal_tool(spark):
 
 
 def test_conversation_select_rollup_and_flag(spark, routed):
-    from ci_log_processing_spark.operators.sft import conversation_select
+    from ci_log_processing_spark.operators.sft import (
+        SFT_MAX_ERROR_FRAC,
+        SFT_MIN_TURNS,
+        conversation_select,
+    )
 
     _, rows = routed
     out = {
         r["conv_id"]: r
-        for r in conversation_select(
-            _df(spark, rows), min_turns=3, max_error_frac=0.25,
-            min_tool_calls=1,
-        ).collect()
+        for r in conversation_select(_df(spark, rows)).collect()
     }
-    a = out["A"]  # 5 visible, 1 error (0.2), 4 tool calls -> selected
+    # A: 5 visible, 1 error (0.2), 4 tool calls -> selected, on the
+    # bar (5 turns, 0.2 error fraction)
+    a = out["A"]
+    assert (SFT_MIN_TURNS, SFT_MAX_ERROR_FRAC) == (5, 0.2)
     assert (a["n_turns"], a["n_visible"], a["n_errors"]) == (5, 5, 1)
     assert a["error_frac"] == 0.2 and a["selected"]
-    b = out["B"]  # 3 visible, 1 dropped, 2 tool calls, no errors
+    b = out["B"]  # 3 visible < SFT_MIN_TURNS, 1 dropped, no errors
     assert (b["n_visible"], b["n_dropped"]) == (3, 1)
-    assert b["selected"]
+    assert not b["selected"]
     c = out["C"]  # 2 visible < min_turns, 0 tool calls
     assert not c["selected"] and c["error_frac"] == 0.0
 
@@ -319,17 +304,30 @@ def test_conversation_select_all_dropped_conv(spark):
 
     rows = [("Z", 0, "user", None, "", "drop_queue")]
     df = spark.createDataFrame(rows, ROUTED_SCHEMA)
-    r = conversation_select(df, min_turns=1).collect()[0]
+    r = conversation_select(df).collect()[0]
     # error_frac must be 0.0 (not a div-by-zero) and never selected
     assert r["n_visible"] == 0 and r["error_frac"] == 0.0
     assert not r["selected"]
 
 
 def test_context_windows_frames_and_visibility(spark, routed):
-    from ci_log_processing_spark.operators.sft import context_windows
+    from ci_log_processing_spark.operators.sft import (
+        SFT_CONTEXT_TURNS,
+        context_windows,
+    )
 
     _, rows = routed
-    out = context_windows(_df(spark, rows), n_context=2).collect()
+    # conv D: SFT_CONTEXT_TURNS + 2 visible turns, then a dropped turn,
+    # before its last assistant turn, so the frame's lower bound cuts
+    # the oldest two
+    n = SFT_CONTEXT_TURNS + 2
+    d_rows = [
+        ("D", i, "user", None, f"m{i}", "agent_turns") for i in range(n)
+    ] + [
+        ("D", n, "user", None, "", "drop_queue"),
+        ("D", n + 1, "assistant", None, "last", "agent_turns"),
+    ]
+    out = context_windows(_df(spark, rows + d_rows)).collect()
     by_key = {(r["conv_id"], r["turn_idx"]): r for r in out}
     # only assistant turns produce examples
     assert all(k in by_key for k in [("A", 0), ("A", 4), ("B", 1)])
@@ -337,11 +335,20 @@ def test_context_windows_frames_and_visibility(spark, routed):
     # opening assistant turn: empty context
     r = by_key[("A", 0)]
     assert r["n_context_turns"] == 0 and r["context"] == ""
-    # frame is the previous <=2 VISIBLE turns, in turn order
+    # frame is the previous <= SFT_CONTEXT_TURNS (4) VISIBLE turns, in
+    # turn order
     r = by_key[("A", 4)]
-    assert r["n_context_turns"] == 2
-    assert r["context"] == "assistant: q1\nassistant: q2"
+    assert r["n_context_turns"] == 4
+    assert r["context"] == (
+        "assistant: q1\nassistant: q1\nassistant: q1\nassistant: q2"
+    )
     assert r["target"] == "done"
+    # D: exactly the SFT_CONTEXT_TURNS most recent visible turns
+    r = by_key[("D", n + 1)]
+    assert r["n_context_turns"] == SFT_CONTEXT_TURNS
+    assert r["context"] == "\n".join(
+        f"user: m{i}" for i in range(n - SFT_CONTEXT_TURNS, n)
+    )
     # B's dropped turn_idx=3 never appears in any context
     assert all("drop" not in r["context"] for r in out)
 
@@ -350,7 +357,7 @@ def test_context_windows_single_exchange_plan(spark, routed):
     from ci_log_processing_spark.operators.sft import context_windows
 
     _, rows = routed
-    q = context_windows(_df(spark, rows), n_context=4)
+    q = context_windows(_df(spark, rows))
     plan = q._jdf.queryExecution().executedPlan().toString()
     # one conv-keyed exchange feeding the window; no joins at all
     assert plan.count("Exchange") <= 1, plan
@@ -459,7 +466,7 @@ def test_source_keyness_flags_planted_term(spark):
     from ci_log_processing_spark.operators.dedup import release_persisted
 
     df = spark.createDataFrame(rows, "doc_id long, source string, text string")
-    got = source_keyness(df, k=2).collect()
+    got = source_keyness(df).collect()
     release_persisted()
     bysrc = {}
     for r in got:
