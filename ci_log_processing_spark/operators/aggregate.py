@@ -629,25 +629,23 @@ def hdr_partial_buckets(df: DataFrame) -> DataFrame:
         .filter(F.col("_next_ts").isNotNull())
         .select("sink", gap)
     )
-    return hdr_bucket_counts(gaps, "sink", "gap_ms")
+    return hdr_bucket_counts(gaps)
 
 
-def hdr_bucket_counts(
-    gaps: DataFrame, group_col: str, gap_col: str
-) -> DataFrame:
-    """Quantize a (group, gap) relation to HDR bucket counts — the
+def hdr_bucket_counts(gaps: DataFrame) -> DataFrame:
+    """Quantize a (sink, gap_ms) relation to HDR bucket counts — the
     shared bucket math for the batch sketch and the streaming
     per-micro-batch partials (streaming/hdr_stream.py). Pure-SQL
     expression (the python shiftright/shiftleft wrappers only take
     literal shift counts; the SQL functions accept expressions)."""
-    sh = f"greatest(length(bin({gap_col})) - 1 - {HDR_SUB_BITS}, 0)"
+    sh = f"greatest(length(bin(gap_ms)) - 1 - {HDR_SUB_BITS}, 0)"
     bucket = F.expr(
-        f"CASE WHEN {gap_col} <= 0 THEN {gap_col} "
-        f"ELSE shiftleft(shiftright({gap_col}, {sh}), {sh}) END"
+        "CASE WHEN gap_ms <= 0 THEN gap_ms "
+        f"ELSE shiftleft(shiftright(gap_ms, {sh}), {sh}) END"
     )
     return (
-        gaps.select(group_col, bucket.alias("bucket"))
-        .groupBy(group_col, "bucket")
+        gaps.select("sink", bucket.alias("bucket"))
+        .groupBy("sink", "bucket")
         .agg(F.count(F.lit(1)).alias("c"))
     )
 

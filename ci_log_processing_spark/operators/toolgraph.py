@@ -28,7 +28,7 @@ Integer-exact arithmetic (the repo-wide determinism rule): ranks are
 int64 micro-units of SCALE = 10^12. Per iteration, each node first
 converts its rank to a per-unit-of-edge-weight flow
 
-    flow(v) = (damping_pct * rank(v)) // (100 * out_weight(v))
+    flow(v) = (DAMPING_PCT * rank(v)) // (100 * out_weight(v))
 
 and sends flow(v) * n(v,u) along each edge — the division happens
 BEFORE the edge multiply, so every intermediate fits int64
@@ -54,6 +54,10 @@ from pyspark.sql.types import (
 from pyspark.sql.window import Window
 
 SCALE = 10**12
+# percent of a node's rank that flows along its out-edges per round
+DAMPING_PCT = 85
+# power-iteration rounds of tool_pagerank
+PAGERANK_ITERS = 5
 
 RANK_SCHEMA = StructType(
     [
@@ -81,9 +85,7 @@ def tool_transition_edges(routed: DataFrame) -> DataFrame:
     )
 
 
-def _iterate_ranks(
-    edges: list[tuple[str, str, int]], n_iter: int, damping_pct: int
-) -> dict[str, int]:
+def _iterate_ranks(edges: list[tuple[str, str, int]]) -> dict[str, int]:
     """Driver-side integer power iteration over the model-sized edge
     list. Pure deterministic int math — mirrored line-for-line by
     the unrolled SQL twin."""
@@ -92,19 +94,15 @@ def _iterate_ranks(
     for src, _dst, n in edges:
         out_w[src] = out_w.get(src, 0) + n
     init = SCALE // len(nodes)
-    base = ((100 - damping_pct) * init) // 100
+    base = ((100 - DAMPING_PCT) * init) // 100
     rank = {t: init for t in nodes}
-    for _ in range(n_iter):
+    for _ in range(PAGERANK_ITERS):
         nxt = {t: base for t in nodes}
         for src, dst, n in edges:
-            flow = (damping_pct * rank[src]) // (100 * out_w[src])
+            flow = (DAMPING_PCT * rank[src]) // (100 * out_w[src])
             nxt[dst] += flow * n
         rank = nxt
     return rank
-
-
-# power-iteration rounds of tool_pagerank
-PAGERANK_ITERS = 5
 
 
 def tool_pagerank(routed: DataFrame) -> DataFrame:
@@ -121,7 +119,7 @@ def tool_pagerank(routed: DataFrame) -> DataFrame:
             "tool_pagerank: no tool→tool transitions in input"
         )
     edges = [(r["src"], r["dst"], int(r["n"])) for r in edge_rows]
-    rank = _iterate_ranks(edges, PAGERANK_ITERS, 85)
+    rank = _iterate_ranks(edges)
     rows = [
         {
             "tool": t,

@@ -45,7 +45,6 @@ def _tool_category_values() -> str:
 
 
 def pipeline_cte(
-    skip_debug: bool = True,
     transcripts_rel: str | None = None,
     meta_rel: str | None = None,
 ) -> str:
@@ -61,12 +60,6 @@ def pipeline_cte(
     sub = subsystem_sql_duckdb("message")
     ts = ts_cascade_sql_duckdb("text", REF_YEAR)
 
-    debug_arm = (
-        "WHEN text LIKE '%DEBUG%' THEN 'drop_queue'" if skip_debug else ""
-    )
-    debug_reason = (
-        "WHEN text LIKE '%DEBUG%' THEN 'debug'" if skip_debug else ""
-    )
     from .sources.derived import conv_meta_sql
 
     t_src = (
@@ -127,7 +120,7 @@ routed AS (
       WHEN NOT has_meta THEN 'drop_queue'
       WHEN starts_with(text, '{PREAMBLE_PREFIX}') AND prior_ts_count = 0
         THEN 'drop_queue'
-      {debug_arm}
+      WHEN text LIKE '%DEBUG%' THEN 'drop_queue'
       WHEN length(message) = 0 THEN 'drop_queue'
       WHEN severity IN ('ERROR', 'CRITICAL') THEN 'errors'
       WHEN tool IS NOT NULL OR role = 'tool' THEN 'tool_calls'
@@ -137,7 +130,7 @@ routed AS (
       WHEN NOT has_meta THEN 'no_metadata'
       WHEN starts_with(text, '{PREAMBLE_PREFIX}') AND prior_ts_count = 0
         THEN 'preamble'
-      {debug_reason}
+      WHEN text LIKE '%DEBUG%' THEN 'debug'
       WHEN length(message) = 0 THEN 'empty_message'
       ELSE NULL
     END AS drop_reason

@@ -1,6 +1,7 @@
 """spark-submit entry point: the whole parse -> enrich -> route ->
-aggregate job with multi-sink fan-out, checkpointing and
-per-partition lineage metrics.
+aggregate job: filter_unprocessed (skip convs the manifest records)
+-> full_pipeline -> sinks.commit_batch, the batch commit each follow
+micro-batch also runs.
 
 Usage (local or cluster — only master/size differ):
 
@@ -15,15 +16,15 @@ Usage (local or cluster — only master/size differ):
   materialized transcripts table, and a conv_meta.parquet beside it
   (if any) drives the no_metadata rule.
 
-Writes:
+Writes (sinks.commit_batch; follow mode appends the same four):
   <out>/sinks/sink=<s>/event_date=<d>/
                               the one sink table (Iceberg analog,
-                              partitioned by sink and date; the
-                              follow loop appends the same table)
+                              partitioned by sink and date)
   <out>/agg_hourly/           per-sink windowed counts
-  <out>/checkpoint/           processed conv manifest (resume via
-                              left-anti join on next run)
   <out>/metrics/              per-partition lineage + row counts
+  <out>/checkpoint/           processed conv manifest (resume via
+                              left-anti join on the next run or
+                              micro-batch, of either mode)
 """
 
 from __future__ import annotations
@@ -63,13 +64,12 @@ def main(argv=None):
     if args.input_dir is None and args.transcripts_parquet is None:
         ap.error("one of --input-dir or --transcripts-parquet is required")
 
-    from pyspark.sql import functions as F
-
+    from ..operators.checkpoint import filter_unprocessed
+    from ..operators.route import SINKS
     from ..session import get_spark, hadoop_fs
+    from ..sinks import commit_batch, fanout_rows, observe_counts
     from ..sources.transcripts import load_transcripts
     from .pipeline import full_pipeline
-    from ..operators.aggregate import append_hourly_agg
-    from ..operators.checkpoint import filter_unprocessed, write_checkpoint
 
     spark = get_spark(master=args.master)
     t0 = time.time()
@@ -100,8 +100,9 @@ def main(argv=None):
         transcripts = load_transcripts(spark, args.input_dir)
         meta = spark.sql(conv_meta_sql("spark"))
 
-    ckpt_dir = os.path.join(args.output_dir, "checkpoint")
-    transcripts, already = filter_unprocessed(spark, transcripts, ckpt_dir)
+    transcripts, already = filter_unprocessed(
+        spark, transcripts, os.path.join(args.output_dir, "checkpoint")
+    )
 
     routed = full_pipeline(
         transcripts,
@@ -111,93 +112,40 @@ def main(argv=None):
         meta=meta,
     )
 
-    # The reference routes per file into 3 indices inside one pass
-    # (send_to_es, logsender.py:474-489). Spark translation that
-    # survives scale: ONE write job (sinks.append_fanout) — a single
-    # shuffle keyed on the table partition scheme, files track
-    # (sink x date) not tasks x dates, and no wide-row cache is ever
-    # built (persisting the parsed DF measured 2x the cost of
-    # writing it). Aggregates/metrics/checkpoint then run over the
-    # just-written columnar data with sink/date pruning for free.
-    # Writes are APPEND-mode batches tagged with batch_id; the conv
-    # checkpoint makes re-runs skip processed convs (at-least-once
-    # like the reference's remove-dir-on-success, logsender.py:550-560;
-    # a real Iceberg sink upgrades this to exactly-once snapshots).
+    # one commit, shared with follow (sinks.commit_batch): the
+    # fan-out write, then agg_hourly, metrics and the conv manifest
+    # that makes a re-run skip processed convs (at-least-once like the
+    # reference's remove-dir-on-success, logsender.py:550-560)
     batch_id = args.batch_ts.replace(" ", "T").replace(":", "-")
-    sinks_dir = os.path.join(args.output_dir, "sinks")
-    # Row and per-sink counts of THIS write come from one Observation
-    # on the write job itself — no count pass over the input and no
-    # re-read of the sinks. A fully-checkpointed input observes 0 rows
-    # and must stay a no-op: in particular it must NOT re-read this
-    # batch_id's previous rows and re-append aggregates.
-    from pyspark.sql import Observation
-
-    from ..operators.route import SINKS
-    from ..sinks import append_fanout, fanout_rows
-
-    obs = Observation("routed")
-    observed = routed.observe(
-        obs,
-        F.count(F.lit(1)).alias("n"),
-        *(F.count_if(F.col("sink") == s).alias(s) for s in SINKS),
-    )
-
     if args.no_write:
 
-        def write(df):
-            fanout_rows(df, batch_id).write.format("noop").mode(
-                "overwrite"
-            ).save()
+        def noop(df):
+            df.write.format("noop").mode("overwrite").save()
 
+        rows = fanout_rows(routed, batch_id)
         # warmup on a 2% sample: pays the one-time Janino codegen /
         # JIT compile (~8-10 s, identical generated classes) outside
         # the measured window, so wall_sec is steady-state engine
         # throughput — the quantity that scales with executors on a
         # real cluster where compile cost amortizes to zero
-        write(routed.sample(0.02, seed=7))
+        noop(rows.sample(0.02, seed=7))
         t0 = time.time()
+        observed, obs = observe_counts(rows)
+        noop(observed)
+        got = obs.get
     else:
-
-        def write(df):
-            append_fanout(df, sinks_dir, batch_id)
-
-    phases = {}
-    t_w = time.time()
-    write(observed)
-    got = obs.get
+        got = commit_batch(routed, args.output_dir, batch_id)
     n_rows = got["n"]
-    # zero-count sinks are left out, like a GROUP BY over the sinks
-    counts = {s: got[s] for s in SINKS if got[s]}
-    phases["fanout_write_sec"] = round(time.time() - t_w, 2)
-    if not args.no_write:
-        t_w = time.time()
-        if n_rows > 0:
-            written = spark.read.parquet(sinks_dir).filter(
-                F.col("batch_id") == batch_id
-            )
-            append_hourly_agg(written, args.output_dir, batch_id)
-            # per-partition lineage/throughput metrics
-            # (reference analog: Prometheus per-job gauges,
-            # logscraper.py:295-304)
-            metrics = written.groupBy("src_partition", "sink").agg(
-                F.count(F.lit(1)).alias("rows"),
-                F.countDistinct("conv_id").alias("convs"),
-            )
-            metrics.withColumn("batch_id", F.lit(batch_id)).write.mode(
-                "append"
-            ).parquet(os.path.join(args.output_dir, "metrics"))
-            write_checkpoint(written, ckpt_dir)
-        phases["post_write_sec"] = round(time.time() - t_w, 2)
     wall = time.time() - t0
     summary = {
         "rows": n_rows,
         "skipped_already_processed": already,
-        "sinks": counts,
+        # zero-count sinks are left out, like a GROUP BY over the sinks
+        "sinks": {s: got[s] for s in SINKS if got[s]},
         "wall_sec": round(wall, 2),
         "rows_per_sec": round(n_rows / wall, 1) if wall > 0 else None,
         "impl": args.impl,
         **({"no_write": True} if args.no_write else {}),
-        **phases,
     }
     print(json.dumps(summary))
     if args.summary_json:

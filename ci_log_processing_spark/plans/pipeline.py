@@ -5,7 +5,7 @@ pipeline (logsender.py `send` lifecycle, SURVEY.md §3.1):
 
   read -> parse (ts cascade + grok) -> forward-fill window ->
   enrich (literal map lookups) -> route (disjoint CASE) ->
-  one fan-out write (sinks.append_fanout) + grouped aggregates
+  one batch commit (sinks.commit_batch: fan-out write + aggregates)
 
 `impl` selects where severity and subsystem come from; the
 timestamp cascade, message split and program/pid are Catalyst

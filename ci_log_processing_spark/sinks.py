@@ -18,18 +18,25 @@ requires the iceberg-spark-runtime jar + a configured catalog, which
 this offline sandbox does not ship — `available()` reports that
 honestly, and tests golden-check the generated DDL instead.
 
-`append_fanout` is the one sink write of the job and of follow mode.
-BucketedTableSink is not on that path yet: it is the storage layer a
-conv_id-bucketed checkpoint manifest would use, so the resume
-anti-join rides the job's conv exchange instead of a broadcast.
+`commit_batch` is the one batch commit of the job and of follow mode:
+the fan-out into the sink table, then `agg_hourly/`, `metrics/` and
+the conv manifest `checkpoint/`. BucketedTableSink is not on that
+path yet: it is the storage layer a conv_id-bucketed checkpoint
+manifest would use, so the resume anti-join rides the job's conv
+exchange instead of a broadcast.
 """
 
 from __future__ import annotations
 
 import abc
+import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+from .operators.aggregate import append_hourly_agg
+from .operators.checkpoint import write_checkpoint
+from .operators.route import SINKS
 
 
 class TableSink(abc.ABC):
@@ -95,27 +102,79 @@ def fanout_rows(routed: DataFrame, batch_id: str) -> DataFrame:
     )
 
 
-def append_fanout(routed: DataFrame, path: str, batch_id: str) -> None:
-    """Route one batch into all four sinks in ONE write job — the
-    reference's single pass per build (send_to_es,
-    logsender.py:467-495), shared by the batch job and every follow
-    micro-batch.
+def observe_counts(rows: DataFrame) -> tuple[DataFrame, Observation]:
+    """`rows` observed for its row count `n` and its per-sink counts,
+    so the action that writes it also counts it."""
+    obs = Observation("routed")
+    return rows.observe(
+        obs,
+        F.count(F.lit(1)).alias("n"),
+        *(F.count_if(F.col("sink") == s).alias(s) for s in SINKS),
+    ), obs
 
-    One exchange keyed on the table partition scheme (sink,
-    event_date), so files track (sink x date), not tasks x dates.
-    The exchange has one partition per core (defaultParallelism):
-    left to AQE, a small batch coalesces to a single task that writes
-    every (sink, date) file serially."""
+
+# the job-group properties commit_batch sets per phase and restores
+_JOB_GROUP_KEYS = (
+    "spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"
+)
+
+
+def commit_batch(routed: DataFrame, output_dir: str, batch_id: str) -> dict:
+    """Commit one batch of `full_pipeline` output under `output_dir`,
+    for the batch job and every follow micro-batch alike — the
+    reference's one send_to_es pass per build, then its done mark
+    (logsender.py:467-495, 550-560). Returns the counts (`n`, and one
+    per sink) observed on the fan-out write.
+
+    The fan-out is ONE write job into `sinks/` behind one exchange
+    keyed on the table partition scheme (sink, event_date), so files
+    track (sink x date), not tasks x dates. The exchange has one
+    partition per core (defaultParallelism): left to AQE, a small
+    batch coalesces to a single task that writes every (sink, date)
+    file serially. Its narrow rows are persisted; when there are any,
+    `agg_hourly/`, `metrics/` (rows and convs per src_partition and
+    sink) and the conv manifest `checkpoint/` are appended from that
+    cache — O(batch), never a re-read of the sink table's history.
+    Each phase runs under its own job group (fanout, agg_hourly,
+    metrics, manifest) so an event log tells them apart; the caller's
+    group is restored afterwards."""
     spark = routed.sparkSession
-    w = fanout_rows(routed, batch_id).repartition(
-        spark.sparkContext.defaultParallelism, "sink", "event_date"
+    sc = spark.sparkContext
+    saved = {k: sc.getLocalProperty(k) for k in _JOB_GROUP_KEYS}
+    rows = (
+        fanout_rows(routed, batch_id)
+        .repartition(sc.defaultParallelism, "sink", "event_date")
+        .persist()
     )
-    # sink DDL seam: a real Iceberg catalog slots in as
-    # IcebergTableSink without touching the plan (create_indices
-    # analog, logsender.py:563-618)
-    table = ParquetDirSink(path)
-    table.ensure(spark)
-    table.append(w)
+    try:
+        sc.setJobGroup("fanout", "sink fan-out write")
+        observed, obs = observe_counts(rows)
+        # sink DDL seam: a real Iceberg catalog slots in as
+        # IcebergTableSink without touching the plan (create_indices
+        # analog, logsender.py:563-618)
+        table = ParquetDirSink(os.path.join(output_dir, "sinks"))
+        table.ensure(spark)
+        table.append(observed)
+        got = obs.get
+        if got["n"]:
+            sc.setJobGroup("agg_hourly", "hourly aggregate append")
+            append_hourly_agg(rows, output_dir, batch_id)
+            # reference analog: Prometheus per-job gauges,
+            # logscraper.py:295-304
+            sc.setJobGroup("metrics", "lineage metrics append")
+            rows.groupBy("src_partition", "sink").agg(
+                F.count(F.lit(1)).alias("rows"),
+                F.countDistinct("conv_id").alias("convs"),
+            ).withColumn("batch_id", F.lit(batch_id)).write.mode(
+                "append"
+            ).parquet(os.path.join(output_dir, "metrics"))
+            sc.setJobGroup("manifest", "conv manifest append")
+            write_checkpoint(rows, os.path.join(output_dir, "checkpoint"))
+    finally:
+        rows.unpersist()
+        for k, v in saved.items():
+            sc.setLocalProperty(k, v)
+    return got
 
 
 class IcebergTableSink(TableSink):
@@ -130,7 +189,7 @@ class IcebergTableSink(TableSink):
     def __init__(self, table: str):
         self.table = table
 
-    # exactly the columns append_fanout writes (full_pipeline output
+    # exactly the columns commit_batch writes (full_pipeline output
     # minus text/ts/prior_ts_count, plus src_partition/batch_id/
     # event_date), in full_pipeline's order so the data files keep
     # their column layout — fanout_rows selects this list, and tests

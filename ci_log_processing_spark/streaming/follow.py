@@ -23,22 +23,16 @@ and re-broadcasting the metadata table. The frame is released when
 the query ends: after awaitTermination for availableNow, through a
 query listener when a processingTime query stops or fails.
 
-Once per micro-batch (process_batch): the isEmpty guard, the plan
-applied to the batch (conv exchange at spark.sql.shuffle.partitions,
-the one Window, the presence join) and persisted, the fan-out write,
-the hourly aggregate write, and the unpersist.
+Once per micro-batch (process_batch), the batch job's own run:
+filter_unprocessed against the conv manifest, the plan, and
+sinks.commit_batch with batch_id = the micro-batch id. The reference's
+--follow likewise re-runs run() (logsender.py:683-687).
 
-Writes: each micro-batch appends the batch job's own sink table,
-`<out>/sinks/sink=<s>/event_date=<d>/`, through the job's one
-fan-out write (sinks.append_fanout, batch_id = the micro-batch id),
-plus its hourly aggregate to `<out>/agg_hourly/`. The reference's
---follow likewise re-runs the one send_to_es pass
-(logsender.py:467-495).
-
-Checkpointing: only Spark's own streaming checkpoint (file-source
-offsets under `<out>/_stream_ckpt`) stops a file from being re-read.
-The batch job's conv-manifest checkpoint is neither read nor written
-here, so a conv that reappears in a new file is emitted again.
+Checkpointing: Spark's streaming checkpoint (file-source offsets
+under `<out>/_stream_ckpt`) stops a file from being re-read, and the
+conv manifest the job shares stops a conv from being emitted twice:
+a conv that reappears in a new file, or that a job run over the same
+output already committed, is skipped.
 """
 
 from __future__ import annotations
@@ -49,9 +43,9 @@ import threading
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQueryListener
 
-from ..operators.aggregate import append_hourly_agg
+from ..operators.checkpoint import filter_unprocessed
 from ..plans.pipeline import DEFAULT_BATCH_TS, RoutingPlan
-from ..sinks import append_fanout
+from ..sinks import commit_batch
 
 TRANSCRIPT_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, "
@@ -98,25 +92,19 @@ def run_follow(
     processing_time: str | None = None,
     meta=None,
 ):
-    """Stream the transcripts directory into the sink table + hourly agg.
+    """Stream the transcripts directory into the job's outputs.
 
     `meta` (conv-metadata DataFrame) enables the no_metadata drop
     rule exactly as in batch mode. Returns the StreamingQuery
     (already awaited when availableNow).
     """
     plan = RoutingPlan(spark, batch_ts=batch_ts, meta=meta)
+    ckpt_dir = os.path.join(output_dir, "checkpoint")
 
     def process_batch(batch_df, batch_id: int):
-        if batch_df.isEmpty():
-            return
-        # the write and hourly_agg both consume it
-        routed = plan(batch_df).persist()
-        batch = str(batch_id)  # the sink table's batch_id is a string
-        try:
-            append_fanout(routed, os.path.join(output_dir, "sinks"), batch)
-            append_hourly_agg(routed, output_dir, batch)
-        finally:
-            routed.unpersist()
+        fresh, _ = filter_unprocessed(spark, batch_df, ckpt_dir)
+        # the sink table's batch_id is a string
+        commit_batch(plan(fresh), output_dir, str(batch_id))
 
     stream = (
         spark.readStream.schema(TRANSCRIPT_SCHEMA)

@@ -138,7 +138,7 @@ def run_streaming_hdr(
             ).alias("gap_ms"),
         )
         write_partial(
-            hdr_bucket_counts(intra.unionAll(bridge), "sink", "gap_ms"),
+            hdr_bucket_counts(intra.unionAll(bridge)),
             buckets_dir,
             batch_id,
         )

@@ -1,7 +1,9 @@
 """The spark-submit job (plans/job.py) end to end: summary counts
 from the write's Observation, checkpoint resume, --no-write, the
 --transcripts-parquet input with and without a conv_meta.parquet
-sibling, and the agg_hourly/ table the job and follow mode share.
+sibling, and the outputs the job and follow mode share: a run of
+either mode after the other over one output directory commits every
+turn exactly once.
 
 The job runs in a subprocess: its main() stops its SparkSession,
 which would also stop the shared test session."""
@@ -22,7 +24,7 @@ from test_route import SF
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 KEYS = {
     "rows", "skipped_already_processed", "sinks", "wall_sec",
-    "rows_per_sec", "impl", "fanout_write_sec",
+    "rows_per_sec", "impl",
 }
 
 
@@ -61,7 +63,7 @@ def test_job_summary_resume_and_no_write(spark, tmp_path):
 
     out = tmp_path / "out"
     first = _run_job(out, tmp_path / "first.json")
-    assert set(first) == KEYS | {"post_write_sec"}
+    assert set(first) == KEYS
     assert first["rows"] == 1000 == sum(first["sinks"].values())
     assert first["sinks"] == expected
     assert _sink_counts(spark, out) == first["sinks"]
@@ -70,7 +72,7 @@ def test_job_summary_resume_and_no_write(spark, tmp_path):
 
     # same batch again: every conv is checkpointed, nothing is appended
     rerun = _run_job(out, tmp_path / "rerun.json")
-    assert set(rerun) == KEYS | {"post_write_sec"}
+    assert set(rerun) == KEYS
     assert rerun["rows"] == 0 and rerun["sinks"] == {}
     assert rerun["skipped_already_processed"] > 0
     assert _sink_counts(spark, out) == first["sinks"]
@@ -81,6 +83,24 @@ def test_job_summary_resume_and_no_write(spark, tmp_path):
     assert dry["no_write"] is True
     assert dry["sinks"] == first["sinks"]
     assert not (dry_out / "sinks").exists()
+
+
+def _assert_exactly_once(spark, out, turns):
+    """Every input turn is in the sink table exactly once, and the
+    hourly aggregate, the lineage metrics and the conv manifest each
+    account for exactly those rows."""
+    sinks = spark.read.parquet(str(out / "sinks"))
+    rows = sinks.count()
+    keys = sinks.select("conv_id", "turn_idx").distinct().count()
+    assert rows == keys == turns
+
+    def total(table, col):
+        return duckdb.sql(
+            f"SELECT sum({col}) FROM read_parquet('{out / table}/*.parquet')"
+        ).fetchone()[0]
+
+    assert total("agg_hourly", "cnt") == rows
+    assert total("metrics", "rows") == total("checkpoint", "rows") == rows
 
 
 def _counts(df, col):
@@ -120,17 +140,38 @@ def test_job_transcripts_parquet_with_sibling_meta(spark, tmp_path):
     assert drops["no_metadata"] > 0
     assert drops == _counts(expected, "drop_reason")
 
-    # a follow drain appends the same agg_hourly/ table: it stays flat
-    # top-level parquet files (the layout readers glob), and its counts
-    # cover every sink row of both writers
+    _assert_exactly_once(spark, out, t.count())
+
+    # a follow drain over the same output reads the job's manifest and
+    # skips every conv the job committed; agg_hourly/ stays flat
+    # top-level parquet files (the layout readers glob)
     run_follow(spark, path, str(out), meta=meta)
     agg = out / "agg_hourly"
     assert not [e.name for e in os.scandir(agg) if e.is_dir()]
-    n_hourly = duckdb.sql(
-        f"SELECT sum(cnt) FROM read_parquet('{agg}/*.parquet')"
-    ).fetchone()[0]
-    n_sinks = spark.read.parquet(str(out / "sinks")).count()
-    assert n_hourly == n_sinks == 2 * got["rows"]
+    _assert_exactly_once(spark, out, got["rows"])
+
+
+def test_follow_then_job_one_output(spark, tmp_path):
+    """A job run over the output of a follow drain of the same input
+    skips every conv the drain committed."""
+    from ci_log_processing_spark.streaming.follow import run_follow
+
+    t = load_transcripts(spark, SF)
+    # conv-aligned files: a conv is the unit of readiness
+    path = str(tmp_path / "transcripts")
+    t.repartition(4, "conv_id").write.parquet(path)
+    out = tmp_path / "out"
+    run_follow(spark, path, str(out))
+    turns = t.count()
+    _assert_exactly_once(spark, out, turns)
+
+    got = _run_job(
+        out, tmp_path / "s.json", source=("--transcripts-parquet", path)
+    )
+    assert got["rows"] == 0 and got["sinks"] == {}
+    convs = t.select("conv_id").distinct().count()
+    assert got["skipped_already_processed"] == convs
+    _assert_exactly_once(spark, out, turns)
 
 
 def test_job_transcripts_parquet_without_meta(spark, tmp_path):

@@ -31,12 +31,12 @@ def test_native_pipeline_single_exchange(spark, tmp_path):
     routed = full_pipeline(t, spark, meta=meta)
     plan = routed._jdf.queryExecution().executedPlan().toString()
     # exactly ONE fact-table exchange: the explicit conv repartition
-    # that the ffill window and routing reuse (REPARTITION_BY_NUM).
+    # that the ffill window and routing reuse (REPARTITION_BY_COL).
     # Exchanges under broadcast build sides (dim distinct before
     # broadcast) move dimension rows, not the fact table, and are
     # exempt — so count by the repartition tag, not by line.
     fact_exchanges = [
-        ln for ln in plan.splitlines() if "REPARTITION_BY_NUM" in ln
+        ln for ln in plan.splitlines() if "REPARTITION_BY_COL" in ln
     ]
     assert len(fact_exchanges) == 1, plan
     # every join is broadcast: the fact table never shuffles on a key

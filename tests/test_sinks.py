@@ -9,7 +9,7 @@ from ci_log_processing_spark.sinks import (
     NO_DICTIONARY_COLUMNS,
     IcebergTableSink,
     ParquetDirSink,
-    append_fanout,
+    commit_batch,
     fanout_rows,
 )
 
@@ -79,7 +79,7 @@ def test_iceberg_ddl_golden():
 
 
 def test_iceberg_ddl_matches_job_schema(spark):
-    # the DDL columns must equal what append_fanout actually writes,
+    # the DDL columns must equal what commit_batch actually writes,
     # or the Iceberg path fails on its first real write
     import datetime as dt
 
@@ -127,7 +127,7 @@ def test_sink_file_layout(spark, tmp_path):
     names = {n for n, _t in IcebergTableSink.COLUMNS}
     assert set(NO_DICTIONARY_COLUMNS) <= names
 
-    append_fanout(_routed(spark), str(tmp_path / "sinks"), "b1")
+    commit_batch(_routed(spark), str(tmp_path), "b1")
     files = _parquet_files(tmp_path / "sinks")
     assert len(files) > 1
     for f in files:
@@ -154,6 +154,26 @@ def test_sink_file_layout(spark, tmp_path):
             assert role.has_dictionary_page, (f, role.encodings)
 
 
+def test_commit_batch_names_phases_and_restores_group(spark, tmp_path):
+    """The commit runs each phase under its own job group, and the
+    caller's group is back in place afterwards."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    phases = ("fanout", "agg_hourly", "metrics", "manifest")
+    before = {g: set(tracker.getJobIdsForGroup(g)) for g in phases}
+    sc.setJobGroup("caller", "the caller's group")
+    try:
+        got = commit_batch(_routed(spark), str(tmp_path), "b1")
+        assert sc.getLocalProperty("spark.jobGroup.id") == "caller"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+    assert got["n"] == 120
+    for g in phases:
+        assert set(tracker.getJobIdsForGroup(g)) - before[g], g
+
+
 def test_mixed_timestamp_generations_read_back_equal(spark, tmp_path):
     """A table holding files from before the INT64 switch (INT96) and
     after it reads back the same values in Spark and, through the
@@ -171,10 +191,10 @@ def test_mixed_timestamp_generations_read_back_equal(spark, tmp_path):
     current = spark.conf.get(key)
     spark.conf.set(key, "INT96")
     try:
-        append_fanout(routed, path, "old")
+        commit_batch(routed, str(out), "old")
     finally:
         spark.conf.set(key, current)
-    append_fanout(routed, path, "new")
+    commit_batch(routed, str(out), "new")
     routed.unpersist()
 
     physical = {

@@ -71,6 +71,44 @@ def test_follow_matches_batch(spark, tmp_path):
         assert got == expected, ("after-restart", sink, got, expected)
 
 
+def test_follow_restart_skips_a_reappearing_conv(spark, tmp_path):
+    """A restarted drain reads a new file; the conv it repeats is in
+    the conv manifest and is skipped, the new conv lands once."""
+    t = load_transcripts(spark, SF)
+    in_dir = str(tmp_path / "transcripts")
+    out_dir = str(tmp_path / "out")
+    t.repartition(2, "conv_id").write.parquet(in_dir)
+    run_follow(spark, in_dir, out_dir)
+    sinks_dir = os.path.join(out_dir, "sinks")
+    before = spark.read.parquet(sinks_dir).count()
+    assert before == t.count()
+
+    old = t.select("conv_id").orderBy("conv_id").first()["conv_id"]
+    again = t.filter(F.col("conv_id") == old)
+    new = again.withColumn("conv_id", F.lit("reappear-new"))
+    again.unionByName(new).coalesce(1).write.mode("append").parquet(in_dir)
+    run_follow(spark, in_dir, out_dir)
+
+    table = spark.read.parquet(sinks_dir)
+    assert table.count() == before + new.count()
+    keys = table.groupBy("conv_id", "turn_idx").count()
+    assert keys.filter(F.col("count") > 1).count() == 0
+
+
+def test_follow_names_each_commit_phase(spark, tmp_path):
+    """Each micro-batch's commit runs its phases under the job groups
+    fanout, agg_hourly, metrics and manifest."""
+    t = load_transcripts(spark, SF)
+    in_dir = str(tmp_path / "transcripts")
+    t.repartition(2, "conv_id").write.parquet(in_dir)
+    tracker = spark.sparkContext.statusTracker()
+    phases = ("fanout", "agg_hourly", "metrics", "manifest")
+    before = {g: set(tracker.getJobIdsForGroup(g)) for g in phases}
+    run_follow(spark, in_dir, str(tmp_path / "out"))
+    for g in phases:
+        assert set(tracker.getJobIdsForGroup(g)) - before[g], g
+
+
 def _meta_without_every_tenth_conv(t):
     convs = t.select("conv_id").distinct()
     return convs.filter(F.abs(F.hash("conv_id")) % 10 != 0)
