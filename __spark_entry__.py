@@ -51,12 +51,12 @@ SINK_COLS = [
 ]
 
 
-def _routed(spark: SparkSession, sf_dir: str, impl: str = "native") -> DataFrame:
+def _routed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ci_log_processing_spark.sources.derived import conv_meta_sql
 
     t = load_transcripts(spark, sf_dir)  # registers the events view
     meta = spark.sql(conv_meta_sql("spark"))
-    return full_pipeline(t, spark, impl=impl, meta=meta)
+    return full_pipeline(t, spark, meta=meta)
 
 
 # --- pipeline queries --------------------------------------------------
@@ -73,9 +73,12 @@ def q_parse(spark, sf_dir):
     return parse_transcripts(t).select(*PARSE_OUT)
 
 
-def q_parse_pandas(spark, sf_dir):
+def q_parse_arrow(spark, sf_dir):
+    """q_parse on the arrow grok engine. Its registry key keeps the
+    name pipe_parse_pandas_udf that CATALOG.md and the
+    CORRECTNESS_r*/GATE_LOCAL_r5* artifacts use."""
     t = load_transcripts(spark, sf_dir)
-    return parse_transcripts(t, impl="pandas").select(*PARSE_OUT)
+    return parse_transcripts(t, impl="arrow").select(*PARSE_OUT)
 
 
 def q_ffill(spark, sf_dir):
@@ -3616,7 +3619,7 @@ def _driver_rotation(d: dict) -> dict:
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     qs: dict[str, Callable] = {
         "pipe_parse": q_parse,
-        "pipe_parse_pandas_udf": q_parse_pandas,
+        "pipe_parse_pandas_udf": q_parse_arrow,
         "pipe_ffill": q_ffill,
         "pipe_enrich": q_enrich,
         "pipe_route": q_route,

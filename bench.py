@@ -142,6 +142,11 @@ def _emb(spark, sf_dir):
 
 
 def _routed(impl):
+    """full_pipeline's routed rows on the events-derived input, with
+    the grok level on engine `impl` ('native' or 'arrow'; the bench
+    name pipeline_pandas_udf, as in BENCH_r01-r05, is the arrow
+    engine)."""
+
     def q(spark, sf_dir):
         from ci_log_processing_spark.plans.pipeline import full_pipeline
         from ci_log_processing_spark.sources.derived import conv_meta_sql
@@ -194,7 +199,7 @@ def _op_asof_join(spark, sf_dir):
 # suite entries with no queries() twin
 BENCH_ONLY = {
     "pipeline_native": _routed("native"),
-    "pipeline_pandas_udf": _routed("pandas"),
+    "pipeline_pandas_udf": _routed("arrow"),
     "agg_hourly": _agg_hourly,
     "ann_brute_force_topk": _ann_brute_force_topk,
     "ann_pq_rerank": _ann_pq_rerank,

@@ -1,5 +1,4 @@
-"""Grok-style severity / subsystem extraction + the vectorized
-parse UDF.
+"""Grok-style severity / subsystem extraction and syslog program/pid.
 
 Severity taxonomy and "severity followed by [module]" shape come
 from the legacy Logstash oslofmt grok the reference repo carries
@@ -7,51 +6,83 @@ from the legacy Logstash oslofmt grok the reference repo carries
 richer semantics its Python rewrite dropped and our north star
 restores.
 
-Two implementations of severity and subsystem:
-  * `severity_col` / `subsystem_col` — Catalyst regexp_extract
-    (JVM, codegen; identical RE2-safe patterns used by the DuckDB
-    oracle);
-  * `make_grok_udf` — ONE Arrow-vectorized pandas UDF over the
-    `message` column returning struct(severity, subsystem). This is
-    the north-star-mandated path. It has no per-row Python of its
-    own, but pandas' .str.extract still runs its regex element by
-    element, so the UDF carries only these two fields.
-The timestamp cascade, the message split and program/pid are
-Catalyst only (timestamps.py, message.py, program_col/pid_col) and
-shared by both parse engines.
+One pattern text per field, read by every engine: Spark's
+regexp_extract (java.util.regex), pyarrow's extract_regex and the
+DuckDB twins (both RE2), and Python re in the tests. The three
+dialects disagree on the escape classes for words, digits and
+whitespace once text leaves ASCII, so the patterns spell every
+class out instead.
+
+`grok_cols` is the grok level, {severity, subsystem} over `message`,
+and the only expression in which the two parse engines differ:
+  * 'native' — Catalyst regexp_extract (whole-stage codegen);
+  * 'arrow'  — ONE Arrow UDF whose body is pyarrow's C++ RE2
+    extract_regex over the whole batch: no per-row Python.
+Program and pid are Catalyst in both (program_col, pid_col).
 """
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 
-# Keep RE2-compatible (no lookbehind) so the same pattern text runs
-# in Spark (java.util.regex), DuckDB (RE2) and pandas (re).
 SEVERITIES = ("AUDIT", "CRITICAL", "DEBUG", "INFO", "TRACE", "WARNING", "ERROR")
-SEVERITY_RX = r"\b(AUDIT|CRITICAL|DEBUG|INFO|TRACE|WARNING|ERROR)\b"
+# an ASCII word boundary as classes: RE2 has no lookaround, so the
+# trailing one consumes the next character (or ends the text)
+_NOT_WORD = "[^A-Za-z0-9_]"
+_SEVERITY = "|".join(SEVERITIES)
+SEVERITY_RX = rf"(?:^|{_NOT_WORD})({_SEVERITY})(?:{_NOT_WORD}|$)"
 # oslofmt: LOGLEVEL \[?module\]? — module directly after the severity
-SUBSYSTEM_RX = (
-    r"\b(?:AUDIT|CRITICAL|DEBUG|INFO|TRACE|WARNING|ERROR)\b"
-    r" \[?([A-Za-z][A-Za-z0-9_.-]*)\]?"
-)
+SUBSYSTEM_RX = rf"(?:^|{_NOT_WORD})(?:{_SEVERITY}) \[?([A-Za-z][A-Za-z0-9_.-]*)\]?"
 # syslog program/pid after a SYSLOGTIMESTAMP + host:
 # '%{DATA:syslog_program}(?:\[%{POSINT:syslog_pid}\])?:'
 # (openstack-filters.conf:49) — e.g. 'Apr 05 12:00:00 host sudo[123]: msg'
 # -> program 'sudo', pid 123; 'Apr 05 12:00:00.5 h kernel: x' -> 'kernel'.
+# The host is RE2's non-space class, spelled out.
 SYSLOG_PROG_RX = (
     r"^[A-Za-z]{3} [0-9]{2} [0-9]{2}:[0-9]{2}:[0-9]{2}(?:\.[0-9]+)? "
-    r"(\S+) ([A-Za-z0-9_./-]+)(?:\[([0-9]+)\])?:"
+    r"([^\t\n\f\r ]+) ([A-Za-z0-9_./-]+)(?:\[([0-9]+)\])?:"
 )
 
+# the grok level's fields, each read from group 1 of its pattern
+GROK_RX = {"severity": SEVERITY_RX, "subsystem": SUBSYSTEM_RX}
 
-def severity_col(message: Column) -> Column:
-    return F.nullif(F.regexp_extract(message, SEVERITY_RX, 1), F.lit(""))
+
+def _named(rx: str, name: str) -> str:
+    """`rx` with its first capture group named `name`
+    (extract_regex returns named groups only)."""
+    return re.sub(r"(?<!\\)\((?!\?)", f"(?P<{name}>", rx, count=1)
 
 
-def subsystem_col(message: Column) -> Column:
-    return F.nullif(F.regexp_extract(message, SUBSYSTEM_RX, 1), F.lit(""))
+def _grok_arrow(message):
+    # unannotated: arrow_udf then defaults to a scalar Array -> Array
+    # UDF, and pyarrow is imported only in the Python worker
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    return pa.StructArray.from_arrays(
+        [
+            pc.struct_field(pc.extract_regex(message, _named(rx, name)), [0])
+            for name, rx in GROK_RX.items()
+        ],
+        names=list(GROK_RX),
+    )
+
+
+def grok_cols(message: Column, impl: str) -> dict[str, Column]:
+    """{severity, subsystem} over `message`; NULL where the pattern
+    does not match. `impl` is 'native' or 'arrow' (same results)."""
+    if impl == "arrow":
+        udf = arrow_udf(_grok_arrow, ", ".join(f"{n} string" for n in GROK_RX))
+        g = udf(message)
+        return {name: g[name] for name in GROK_RX}
+    return {
+        name: F.nullif(F.regexp_extract(message, rx, 1), F.lit(""))
+        for name, rx in GROK_RX.items()
+    }
 
 
 def _syslog_shaped(text: Column) -> Column:
@@ -96,26 +127,3 @@ def pid_sql_duckdb(text_expr: str) -> str:
         f"try_cast(nullif(regexp_extract({text_expr}, "
         f"'{SYSLOG_PROG_RX}', 3), '') AS BIGINT)"
     )
-
-
-def make_grok_udf():
-    """Arrow-vectorized severity/subsystem grok over the `message`
-    column: the same fields as severity_col + subsystem_col, by
-    pandas .str.extract over the whole Arrow batch."""
-    # imported on first use, not with the module: only this path needs
-    # pandas. pandas_udf resolves the string annotations below (this
-    # module has `from __future__ import annotations`) through module
-    # globals, so `pd` is bound there.
-    global pd
-    import pandas as pd
-
-    @pandas_udf("severity string, subsystem string")
-    def grok(message: pd.Series) -> pd.DataFrame:
-        return pd.DataFrame(
-            {
-                "severity": message.str.extract(SEVERITY_RX, expand=False),
-                "subsystem": message.str.extract(SUBSYSTEM_RX, expand=False),
-            }
-        )
-
-    return grok

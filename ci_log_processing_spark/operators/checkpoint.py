@@ -56,22 +56,28 @@ def read_checkpoint(spark: SparkSession, ckpt_dir: str) -> DataFrame | None:
         return None
 
 
-def filter_unprocessed(
-    spark: SparkSession, transcripts: DataFrame, ckpt_dir: str
-) -> tuple[DataFrame, int]:
-    """Drop conversations already recorded in the checkpoint.
+def skip_processed(transcripts: DataFrame, ckpt: DataFrame | None) -> DataFrame:
+    """`transcripts` without the conversations the manifest `ckpt`
+    (read_checkpoint; None when there is none yet) records. Runs no
+    Spark job of its own.
 
-    Returns (remaining transcripts, number of skipped convs).
     The checkpoint side is tiny relative to the fact table, so it is
     broadcast — the anti-join never shuffles the 10^12-turn side.
     """
-    ckpt = read_checkpoint(spark, ckpt_dir)
     if ckpt is None:
-        return transcripts, 0
-    done = ckpt.select("conv_id").distinct()
-    n_done = done.count()
-    remaining = transcripts.join(F.broadcast(done), "conv_id", "left_anti")
-    return remaining, n_done
+        return transcripts
+    done = F.broadcast(ckpt.select("conv_id").distinct())
+    return transcripts.join(done, "conv_id", "left_anti")
+
+
+def filter_unprocessed(
+    spark: SparkSession, transcripts: DataFrame, ckpt_dir: str
+) -> tuple[DataFrame, int]:
+    """skip_processed against the manifest in `ckpt_dir`, plus the
+    number of convs that manifest records (one count job)."""
+    ckpt = read_checkpoint(spark, ckpt_dir)
+    n_done = 0 if ckpt is None else ckpt.select("conv_id").distinct().count()
+    return skip_processed(transcripts, ckpt), n_done
 
 
 def write_checkpoint(routed: DataFrame, ckpt_dir: str) -> None:

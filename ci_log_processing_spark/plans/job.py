@@ -10,7 +10,7 @@ Usage (local or cluster — only master/size differ):
       --input-dir /root/testdata/sf0.001 \
       --output-dir /tmp/clp_out \
       [--batch-ts "2024-01-01 00:00:00"] \
-      [--impl native|pandas]
+      [--impl native|arrow]
 
   --transcripts-parquet PATH replaces --input-dir: it reads a
   materialized transcripts table, and a conv_meta.parquet beside it
@@ -41,12 +41,13 @@ def main(argv=None):
     ap.add_argument("--input-dir", default=None)
     ap.add_argument("--output-dir", required=True)
     ap.add_argument("--batch-ts", default="2024-01-01 00:00:00")
-    # native is the default: measured faster than the pandas grok at
-    # BOTH local[8] (948k vs 537k compute rows/s) and local[32]
-    # (2.41M vs 1.42M) with better N->4N efficiency (BASELINE.md; the
-    # UDF then also parsed the timestamp, message and program/pid).
-    # --impl pandas stays as the mandated-path parity option.
-    ap.add_argument("--impl", choices=["native", "pandas"], default="native")
+    # the grok level's engine (plans/pipeline.py); everything else is
+    # the same Catalyst plan. native is the default: on 2M messages at
+    # local[4] its regexp_extract took 1.8-2.0 s against 3.25 s for the
+    # arrow UDF, whose floor is the Arrow round trip to the Python
+    # worker (ROADMAP direction 10). --impl arrow is the north star's
+    # vectorized-UDF path, with the same results.
+    ap.add_argument("--impl", choices=["native", "arrow"], default="native")
     ap.add_argument("--no-write", action="store_true",
                     help="compute every sink row and count per-sink "
                          "rows, but write to Spark's noop sink instead "

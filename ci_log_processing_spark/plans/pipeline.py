@@ -3,18 +3,15 @@
 One DataFrame DAG replacing the reference's hand-fused generator
 pipeline (logsender.py `send` lifecycle, SURVEY.md §3.1):
 
-  read -> parse (ts cascade + grok) -> forward-fill window ->
-  enrich (literal map lookups) -> route (disjoint CASE) ->
+  read -> parse (ts cascade, message, program/pid) -> forward-fill
+  window -> grok (severity, subsystem) -> enrich (literal map
+  lookups) -> route (disjoint CASE) ->
   one batch commit (sinks.commit_batch: fan-out write + aggregates)
 
-`impl` selects where severity and subsystem come from; the
-timestamp cascade, message split and program/pid are Catalyst
-expressions in both:
-  * 'native' — Catalyst regexp_extract (whole-stage codegen,
-    fastest; the 100 TB default);
-  * 'pandas' — one Arrow-vectorized pandas UDF over `message` (the
-    north-star grok path; same results, exercised by tests for
-    parity).
+`impl` selects only the grok level (functions/grok.grok_cols):
+'native' Catalyst regexp_extract (the default), or 'arrow', one
+Arrow UDF on pyarrow's RE2 kernels (the north-star UDF path). Every
+other expression is Catalyst in both, and the results are the same.
 """
 
 from __future__ import annotations
@@ -24,13 +21,7 @@ import datetime
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.grok import (
-    make_grok_udf,
-    pid_col,
-    program_col,
-    severity_col,
-    subsystem_col,
-)
+from ..functions.grok import grok_cols, pid_col, program_col
 from ..functions.message import message_col
 from ..functions.timestamps import ts_cascade_col
 from ..operators.enrich import enrichment_cols
@@ -42,39 +33,25 @@ DEFAULT_BATCH_TS = "2024-01-01 00:00:00"
 DEFAULT_REF_YEAR = 2024
 
 
-def parse_cols(ref_year: int, impl: str) -> list[dict[str, Column]]:
-    """parse_transcripts' columns, one dict per dependency level (a
-    level only reads columns of the input or of earlier levels).
-    Yearless timestamps get `ref_year`. The pandas engine stages the
-    message in `_m` and the UDF struct in `_g`, which `_with_parse`
-    drops, so that its output keeps its column order (severity and
-    subsystem before message)."""
+def parse_cols(ref_year: int) -> dict[str, Column]:
+    """The parse level, {event_ts, message, program, pid}: every
+    column reads only `text`. Yearless timestamps get `ref_year`."""
     text = F.col("text")
-    ts = ts_cascade_col(text, ref_year)
-    syslog = {"program": program_col(text), "pid": pid_col(text)}
-    if impl == "pandas":
-        m, g = F.col("_m"), F.col("_g")
-        return [
-            {"event_ts": ts, "_m": message_col(text)},
-            {"_g": make_grok_udf()(m)},
-            {"severity": g["severity"], "subsystem": g["subsystem"],
-             "message": m, **syslog},
-        ]
-    message = F.col("message")
-    return [
-        {"event_ts": ts, "message": message_col(text)},
-        {
-            "severity": severity_col(message),
-            "subsystem": subsystem_col(message),
-            **syslog,
-        },
-    ]
+    return {
+        "event_ts": ts_cascade_col(text, ref_year),
+        "message": message_col(text),
+        "program": program_col(text),
+        "pid": pid_col(text),
+    }
 
 
-def _with_parse(df: DataFrame, levels: list[dict[str, Column]]) -> DataFrame:
-    for level in levels:
-        df = df.withColumns(level)
-    return df.drop("_m", "_g") if "_g" in levels[1] else df
+def _with_grok(df: DataFrame, grok: dict[str, Column]) -> DataFrame:
+    """`df` plus the grok level (grok_cols), with severity and
+    subsystem placed right after message (the sink table's column
+    order)."""
+    cols = df.columns
+    at = cols.index("message") + 1
+    return df.withColumns(grok).select(*cols[:at], *grok, *cols[at:])
 
 
 def parse_transcripts(df: DataFrame, impl: str = "native") -> DataFrame:
@@ -82,7 +59,8 @@ def parse_transcripts(df: DataFrame, impl: str = "native") -> DataFrame:
     (the oslofmt grok field set incl. syslog_program/syslog_pid,
     openstack-filters.conf:49); yearless timestamps get
     DEFAULT_REF_YEAR."""
-    return _with_parse(df, parse_cols(DEFAULT_REF_YEAR, impl))
+    parsed = df.withColumns(parse_cols(DEFAULT_REF_YEAR))
+    return _with_grok(parsed, grok_cols(F.col("message"), impl))
 
 
 class RoutingPlan:
@@ -115,15 +93,18 @@ class RoutingPlan:
     ):
         self.spark = spark
         ref_year = datetime.datetime.fromisoformat(batch_ts).year
-        self.parse = parse_cols(ref_year, impl)
-        # both windows share one Window operator. Enrichment is a level
-        # of its own, above the Window: in the same projection it would
-        # be computed below the Window, and its array_sort (no codegen)
+        self.parse = parse_cols(ref_year)
+        # both windows share one Window operator. The grok and
+        # enrichment levels come above the Window: nothing below the
+        # route reads them, an Arrow UDF there would drop the conv
+        # partitioning the Window needs (one more exchange), and
+        # enrichment's array_sort (no codegen) in the parse projection
         # would split the parse stage from the window's sort
         self.windows = {
             "filled_ts": filled_ts_col(batch_ts),
             "prior_ts_count": prior_ts_count_col(),
         }
+        self.grok = grok_cols(F.col("message"), impl)
         self.enrich = enrichment_cols()
         self.present = None
         has_metadata = None
@@ -142,21 +123,9 @@ class RoutingPlan:
         # file scan (file-split packing caps scan parallelism); the
         # ffill window reuses this exact hash(conv_id) distribution so
         # no second shuffle appears (operators/skew.py).
-        #
-        # pandas caveat, measured and accepted: ArrowEvalPython does
-        # not propagate its child's output partitioning, so on the
-        # pandas path the window re-shuffles (3 exchanges total vs
-        # native's 2). The alternative — parse before the exchange —
-        # pins the Python workers to SCAN parallelism, which
-        # file-split packing collapses (measured 94 s vs 54 s at
-        # local[32] on 20M rows); the extra exchange of narrow raw
-        # rows is the cheaper evil.
         df = repartition_by_conv(df, self.spark)
-        out = (
-            _with_parse(df, self.parse)
-            .withColumns(self.windows)
-            .withColumns(self.enrich)
-        )
+        windowed = df.withColumns(self.parse).withColumns(self.windows)
+        out = _with_grok(windowed, self.grok).withColumns(self.enrich)
         if self.present is None:
             return with_route(out, self.route)
         out = out.join(self._present_hint, "conv_id", "left")

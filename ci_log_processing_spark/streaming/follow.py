@@ -24,9 +24,10 @@ the query ends: after awaitTermination for availableNow, through a
 query listener when a processingTime query stops or fails.
 
 Once per micro-batch (process_batch), the batch job's own run:
-filter_unprocessed against the conv manifest, the plan, and
-sinks.commit_batch with batch_id = the micro-batch id. The reference's
---follow likewise re-runs run() (logsender.py:683-687).
+skip_processed against the conv manifest (no count: follow reports
+no skipped total), the plan, and sinks.commit_batch with batch_id =
+the micro-batch id. The reference's --follow likewise re-runs run()
+(logsender.py:683-687).
 
 Checkpointing: Spark's streaming checkpoint (file-source offsets
 under `<out>/_stream_ckpt`) stops a file from being re-read, and the
@@ -43,7 +44,7 @@ import threading
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQueryListener
 
-from ..operators.checkpoint import filter_unprocessed
+from ..operators.checkpoint import read_checkpoint, skip_processed
 from ..plans.pipeline import DEFAULT_BATCH_TS, RoutingPlan
 from ..sinks import commit_batch
 
@@ -102,7 +103,7 @@ def run_follow(
     ckpt_dir = os.path.join(output_dir, "checkpoint")
 
     def process_batch(batch_df, batch_id: int):
-        fresh, _ = filter_unprocessed(spark, batch_df, ckpt_dir)
+        fresh = skip_processed(batch_df, read_checkpoint(spark, ckpt_dir))
         # the sink table's batch_id is a string
         commit_batch(plan(fresh), output_dir, str(batch_id))
 

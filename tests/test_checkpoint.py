@@ -16,6 +16,8 @@ from pyspark.sql import functions as F
 from ci_log_processing_spark.operators.checkpoint import (
     expire_checkpoint,
     filter_unprocessed,
+    read_checkpoint,
+    skip_processed,
     write_checkpoint,
 )
 from ci_log_processing_spark.plans.pipeline import full_pipeline
@@ -70,6 +72,26 @@ def test_checkpoint_anti_join_is_broadcast(spark, tmp_path):
     remaining, _ = filter_unprocessed(spark, t, ckpt)
     plan = remaining._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
+
+
+def test_skip_processed_runs_no_job(spark, tmp_path):
+    """Follow mode's anti-join builds the same frame as
+    filter_unprocessed without the manifest count, which is a Spark job
+    over the whole manifest on every micro-batch."""
+    ckpt = str(tmp_path / "ckpt")
+    t = load_transcripts(spark, SF)
+    write_checkpoint(full_pipeline(t, spark).limit(100), ckpt)
+    manifest = read_checkpoint(spark, ckpt)
+    sc = spark.sparkContext
+    sc.setJobGroup("skip_processed", "no job expected")
+    try:
+        remaining = skip_processed(t, manifest)
+        assert sc.statusTracker().getJobIdsForGroup("skip_processed") == []
+    finally:
+        sc.setJobGroup("", "")
+    want, _ = filter_unprocessed(spark, t, ckpt)
+    assert sorted(remaining.collect()) == sorted(want.collect())
+    assert skip_processed(t, None) is t
 
 
 def test_expire_checkpoint_ttl(spark, tmp_path):

@@ -46,6 +46,24 @@ def test_native_pipeline_single_exchange(spark, tmp_path):
     assert plan.count("Window") == 1, plan
 
 
+def test_arrow_pipeline_exchanges_match_native(spark, tmp_path):
+    # the engines differ only in the grok level, applied above the
+    # Window: the Arrow UDF must not cost the plan an exchange (its
+    # node drops the child's partitioning, so below the Window it
+    # would make the window re-shuffle)
+    t = _materialized(spark, tmp_path)
+    meta = spark.createDataFrame([(f"c{c}",) for c in range(15)], "conv_id string")
+
+    def plan(impl):
+        routed = full_pipeline(t, spark, impl=impl, meta=meta)
+        return routed._jdf.queryExecution().executedPlan().toString()
+
+    native, arrow = plan("native"), plan("arrow")
+    assert "ArrowEvalPython" in arrow and "ArrowEvalPython" not in native
+    assert arrow.count("Exchange") == native.count("Exchange"), arrow
+    assert arrow.count("Window") == 1, arrow
+
+
 def test_pii_and_repetition_are_shuffle_free(spark, tmp_path):
     # both operators are pure per-row expression pipelines; any
     # Exchange appearing here is a regression

@@ -113,7 +113,7 @@ def test_duckdb():
         assert con.execute(sql, [line]).fetchone()[0] == expected, line
 
 
-@pytest.mark.parametrize("impl", ["native", "pandas"])
+@pytest.mark.parametrize("impl", ["native", "arrow"])
 def test_parse_engines(spark, impl):
     df = spark.createDataFrame([(line,) for line, _ in GOLDEN], "text string")
     got = parse_transcripts(df, impl=impl).collect()

@@ -4,7 +4,7 @@ local[4N], each in a fresh spark-submit JVM, normalised to the host's
 own N -> 4N scaling ceilings. 4N is this process's CPU affinity count
 and N = max(1, 4N // 4).
 
-  python tools/run_scaling.py job [n_turns] [--impl native|pandas] [--pinned]
+  python tools/run_scaling.py job [n_turns] [--impl native|arrow] [--pinned]
       the spark-submit job (run_pipeline.py) on n_turns generated
       turns (default 20M), full and --no-write, best of 2 per level;
   python tools/run_scaling.py queries NAME[,NAME...] [n_docs]
@@ -195,7 +195,7 @@ def main():
     legs = ap.add_subparsers(dest="leg", required=True)
     job = legs.add_parser("job")
     job.add_argument("n_turns", type=int, nargs="?", default=20_000_000)
-    job.add_argument("--impl", choices=["native", "pandas"], default="native")
+    job.add_argument("--impl", choices=["native", "arrow"], default="native")
     job.add_argument("--pinned", action="store_true")
     job.set_defaults(run=job_leg)
     q = legs.add_parser("queries")
