@@ -12,10 +12,10 @@ Two deliberate determinism changes vs the reference (SURVEY.md §4):
     (logsender.py:354-356); the job takes the year of its
     ``batch_ts`` (plans/pipeline.RoutingPlan), so a rerun of the same
     batch parses the same instants;
-  * Python's ``%f`` right-pads fractional digits ('.596' ->
-    596000 us). All engine paths normalize the fraction to exactly
-    six digits before parsing so Spark ('SSSSSS'), DuckDB ('%f')
-    and Python agree bit-for-bit.
+  * Python's ``%f`` reads 1-6 fractional digits as a fraction
+    ('.596' -> 596000 us), and so does Spark's 'SSSSSS'. DuckDB's
+    '%f' reads '.596' as 596 us, so only the DuckDB twin right-pads
+    the fraction to six digits before parsing.
 
 Two implementations, one semantics, plus the DuckDB oracle twin:
   * ``parse_timestamp_py``  — pure Python (test oracle);
@@ -84,50 +84,43 @@ def parse_timestamp_py(
 _WS = f"[{WS}]"
 _END = f"(?:{_WS}|$)"
 
-# Anchored regex shapes (valid in Java and Python re) with an explicit
-# fractional group so the fraction can be right-padded to 6 digits
-# before parsing. Each entry:
-#   (regex, groups, spark_format, yearless)
-# where, when a frac group (the last) exists, the candidate string is
-# rebuilt as the other groups joined by a space + '.' +
-# rpad(frac,6,'0'), then parsed with spark_format.
+# Anchored regex shapes (valid in Java and Python re), one per
+# reference pattern, whose group 1 is the whole candidate; each entry
+# is (regex, spark_format, yearless). 'SSSSSS' reads 1-6 fractional
+# digits as a fraction, as strptime's %f does, so the candidate parses
+# as extracted.
 _SPARK_STEPS = [
     # 1: iso Z with fraction; \S+ token must be exactly this shape
     (
-        r"^([0-9]{4}-[0-9]{2}-[0-9]{2}T[0-9]{2}:[0-9]{2}:[0-9]{2})\.([0-9]{1,6})Z"
+        r"^([0-9]{4}-[0-9]{2}-[0-9]{2}T[0-9]{2}:[0-9]{2}:[0-9]{2}\.[0-9]{1,6})Z"
         + _END,
-        2,
         "yyyy-MM-dd'T'HH:mm:ss.SSSSSS",
         False,
     ),
     # 2: space-separated with fraction
     (
-        r"^([0-9]{4}-[0-9]{2}-[0-9]{2} [0-9]{2}:[0-9]{2}:[0-9]{2})\.([0-9]{1,6})"
+        r"^([0-9]{4}-[0-9]{2}-[0-9]{2} [0-9]{2}:[0-9]{2}:[0-9]{2}\.[0-9]{1,6})"
         + _END,
-        2,
         "yyyy-MM-dd HH:mm:ss.SSSSSS",
         False,
     ),
     # 3: syslog w/ micros truncated to 5 digits by the reference's
     #    14-char window (logsender.py:338-339)
     (
-        r"^([A-Za-z]{3} [0-9]{2})" + _WS + r"([0-9]{2}:[0-9]{2}:[0-9]{2})"
-        r"\.([0-9]{5})",
-        3,
+        r"^([A-Za-z]{3} [0-9]{2}" + _WS + r"[0-9]{2}:[0-9]{2}:[0-9]{2}"
+        r"\.[0-9]{5})",
         "MMM dd HH:mm:ss.SSSSSS",
         True,
     ),
     # 4: syslog without fraction (third \S+ token must be a bare time)
     (
         r"^([A-Za-z]{3} [0-9]{2} [0-9]{2}:[0-9]{2}:[0-9]{2})" + _END,
-        1,
         "MMM dd HH:mm:ss",
         True,
     ),
     # 5: first 19 iso chars
     (
         r"^([-0-9T:]{19})",
-        1,
         "yyyy-MM-dd'T'HH:mm:ss",
         False,
     ),
@@ -139,25 +132,27 @@ _SPARK_STEPS = [
     (
         r"^(?:Monday|Tuesday|Wednesday|Thursday|Friday|Saturday|Sunday) "
         r"([0-9]{2} [A-Za-z]+ [0-9]{4}  [0-9]{2}:[0-9]{2}:[0-9]{2})",
-        1,
         "dd MMMM yyyy  HH:mm:ss",
         False,
     ),
 ]
+_SPACES = " " * len(WS)
 
 
-def _spark_step(text: Column, rx: str, ngroups: int, fmt: str) -> Column:
-    if ngroups > 1:
-        heads = [F.regexp_extract(text, rx, i) for i in range(1, ngroups)]
-        head = heads[0] if len(heads) == 1 else F.concat_ws(" ", *heads)
-        frac = F.regexp_extract(text, rx, ngroups)
-        # frac is empty exactly when the step does not match
-        candidate = F.when(
-            frac != "", F.concat(head, F.lit("."), F.rpad(frac, 6, "0"))
-        )
-    else:
-        candidate = F.nullif(F.regexp_extract(text, rx, 1), F.lit(""))
-    return F.try_to_timestamp(candidate, F.lit(fmt))
+def _spark_step(text: Column, rx: str, fmt: str) -> Column:
+    # one regex evaluation per step; step 3's day-time join may be any
+    # WS character, and no other candidate holds one but the format's
+    # own spaces, so mapping them all to ' ' is exact
+    candidate = F.nullif(F.regexp_extract(text, rx, 1), F.lit(""))
+    return F.try_to_timestamp(F.translate(candidate, WS, _SPACES), F.lit(fmt))
+
+
+def starts_with_letter(text: Column) -> Column:
+    """True where `text` starts with an ASCII letter: the first-char
+    gate of every name-shaped pattern (a month, weekday or syslog
+    month abbreviation comes first)."""
+    c = F.ascii(F.substring(text, 1, 1))
+    return ((c >= 65) & (c <= 90)) | ((c >= 97) & (c <= 122))
 
 
 def ts_cascade_col(text: Column, ref_year: int) -> Column:
@@ -169,8 +164,8 @@ def ts_cascade_col(text: Column, ref_year: int) -> Column:
     both succeed), exactly like the reference's try/except loop.
     """
     cols = []
-    for rx, ngroups, fmt, yearless in _SPARK_STEPS:
-        ts = _spark_step(text, rx, ngroups, fmt)
+    for rx, fmt, yearless in _SPARK_STEPS:
+        ts = _spark_step(text, rx, fmt)
         if yearless:
             # Spark fills missing years with 1970 (Python: 1900);
             # both mean "no year in the text" -> ref_year.
@@ -186,9 +181,8 @@ def ts_cascade_col(text: Column, ref_year: int) -> Column:
     # pattern -> NULL (the reference loop would fail all six, too).
     c1 = F.ascii(F.substring(text, 1, 1))
     is_digit = (c1 >= 48) & (c1 <= 57)
-    is_alpha = ((c1 >= 65) & (c1 <= 90)) | ((c1 >= 97) & (c1 <= 122))
     return F.when(is_digit, F.coalesce(cols[0], cols[1], cols[4])).when(
-        is_alpha, F.coalesce(cols[2], cols[3], cols[5])
+        starts_with_letter(text), F.coalesce(cols[2], cols[3], cols[5])
     )
 
 

@@ -9,7 +9,7 @@ Usage (local or cluster — only master/size differ):
       -m ci_log_processing_spark.plans.job \
       --input-dir /root/testdata/sf0.001 \
       --output-dir /tmp/clp_out \
-      [--batch-ts "2024-01-01 00:00:00"] \
+      [--batch-ts "YYYY-MM-DD HH:MM:SS"] \
       [--impl native|arrow]
 
   --transcripts-parquet PATH replaces --input-dir: it reads a
@@ -37,16 +37,22 @@ import time
 
 
 def main(argv=None):
+    from .pipeline import DEFAULT_BATCH_TS, full_pipeline
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--input-dir", default=None)
     ap.add_argument("--output-dir", required=True)
-    ap.add_argument("--batch-ts", default="2024-01-01 00:00:00")
+    ap.add_argument("--batch-ts", default=DEFAULT_BATCH_TS,
+                    help="the batch's timestamp: names the batch and "
+                         "gives yearless lines their year "
+                         "(default: %(default)s)")
     # the grok level's engine (plans/pipeline.py); everything else is
-    # the same Catalyst plan. native is the default: on 2M messages at
-    # local[4] its regexp_extract took 1.8-2.0 s against 3.25 s for the
-    # arrow UDF, whose floor is the Arrow round trip to the Python
-    # worker (ROADMAP direction 10). --impl arrow is the north star's
-    # vectorized-UDF path, with the same results.
+    # the same Catalyst plan. native is the default. Severity plus
+    # subsystem over 2M persisted messages at local[4] (4-core shared
+    # host, noop write, warm runs): native regexp_extract 1.7-2.3 s
+    # (11-13 s while the word boundary was a leading negated class,
+    # functions/grok.py), the arrow UDF 0.9-1.3 s. --impl arrow is the
+    # north star's vectorized-UDF path, with the same results.
     ap.add_argument("--impl", choices=["native", "arrow"], default="native")
     ap.add_argument("--no-write", action="store_true",
                     help="compute every sink row and count per-sink "
@@ -70,7 +76,6 @@ def main(argv=None):
     from ..session import get_spark, hadoop_fs
     from ..sinks import commit_batch, fanout_rows, observe_counts
     from ..sources.transcripts import load_transcripts
-    from .pipeline import full_pipeline
 
     spark = get_spark(master=args.master)
     t0 = time.time()

@@ -30,7 +30,7 @@ from ..operators.route import route_cols, with_route
 from ..operators.skew import repartition_by_conv
 
 DEFAULT_BATCH_TS = "2024-01-01 00:00:00"
-DEFAULT_REF_YEAR = 2024
+DEFAULT_REF_YEAR = datetime.datetime.fromisoformat(DEFAULT_BATCH_TS).year
 
 
 def parse_cols(ref_year: int) -> dict[str, Column]:

@@ -8,6 +8,9 @@ import datetime as dt
 import inspect
 import re
 
+import duckdb
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import functions as F
 
 from ci_log_processing_spark.functions import grok, message, timestamps
@@ -117,3 +120,39 @@ def test_shared_patterns_spell_out_classes():
     assert any(name.endswith("SEVERITY_RX") for name, _ in texts)
     bad = [(n, t) for n, t in texts if _DIALECT_ESCAPE.search(t)]
     assert not bad, bad
+
+
+def _is_word(cp):
+    return chr(cp) == "_" or (chr(cp).isascii() and chr(cp).isalnum())
+
+
+def test_not_word_is_the_ascii_word_complement(spark):
+    # _NOT_WORD spells [^A-Za-z0-9_] as positive ranges up to U+10FFFF;
+    # a wrong range end would move answers on characters neither the
+    # fuzz nor the gate draws
+    rx = grok._NOT_WORD
+    scalars = [cp for cp in range(0x110000) if not 0xD800 <= cp <= 0xDFFF]
+    # a code point is wrong where the class matches it exactly when
+    # it is a word character
+    full = re.compile(rx)
+    wrong = [cp for cp in scalars if bool(full.fullmatch(chr(cp))) == _is_word(cp)]
+    assert not wrong, wrong
+    wrong = duckdb.sql(
+        f"SELECT list(i) FROM (SELECT chr(i::INT) AS c, i FROM ("
+        f"FROM range(0, {0xD800}) UNION ALL FROM range({0xE000}, {0x110000})"
+        f") t(i)) WHERE regexp_full_match(c, '{rx}') = "
+        "regexp_full_match(c, '[A-Za-z0-9_]')"
+    ).fetchone()[0]
+    assert not wrong, wrong
+    # Spark and pyarrow: each range end +-1 and the plane edges
+    ends = (0x00, 0x2F, 0x3A, 0x40, 0x5B, 0x5E, 0x60, 0x7B, 0x10FFFF)
+    probes = sorted(
+        {cp + d for cp in ends for d in (-1, 0, 1)} & set(scalars)
+        | {0xD7FF, 0xE000, 0xFFFF, 0x10000, 0x10FFFF}
+    )
+    expected = [not _is_word(cp) for cp in probes]
+    df = spark.createDataFrame([(chr(cp),) for cp in probes], "c string")
+    got = df.select(F.col("c").rlike(f"^{rx}$").alias("m")).collect()
+    assert [r["m"] for r in got] == expected
+    arr = pa.array([chr(cp) for cp in probes])
+    assert pc.match_substring_regex(arr, f"^{rx}$").to_pylist() == expected

@@ -81,6 +81,28 @@ GOLDEN = [
         "Mar 21 09:33:23\u2003host em space",
         datetime.datetime(REF_YEAR, 3, 21, 9, 33, 23),
     ),
+    # 'SSSSSS' and %f read 1-6 fractional digits as a fraction; a
+    # 7th digit fails step 1 and falls through to the 19 iso chars
+    (
+        "2022-03-25T17:40:37.1Z",
+        datetime.datetime(2022, 3, 25, 17, 40, 37, 100000),
+    ),
+    (
+        "2022-03-25T17:40:37.1234567Z y",
+        datetime.datetime(2022, 3, 25, 17, 40, 37),
+    ),
+    (
+        "2022-02-28 09:39:09.123456\t| tab",
+        datetime.datetime(2022, 2, 28, 9, 39, 9, 123456),
+    ),
+    (
+        "Mar 31\t04:50:23.12345",
+        datetime.datetime(REF_YEAR, 3, 31, 4, 50, 23, 123450),
+    ),
+    ("Mar 31\t04:50:23.7 short frac", None),
+    # the regex matches but the parse fails: the cascade falls through
+    ("2022-02-30T10:00:00.5Z x", None),
+    ("Feb 30 04:50:23.12345 x", None),
     # no timestamp at all
     ('    raise ValueError("boom")', None),
     ("-- Logs begin at Mon 2022-02-28 09:00:00 UTC. --", None),
@@ -104,6 +126,14 @@ def test_catalyst_cascade(spark):
     by_text = {r["text"]: r["ts"] for r in got}
     for line, expected in GOLDEN:
         assert by_text[line] == expected, line
+
+
+def test_one_regex_evaluation_per_step(spark):
+    # each of the six steps extracts its whole candidate once and
+    # parses it as extracted, with no fraction padding
+    plan = str(ts_cascade_col(F.col("text"), REF_YEAR))
+    assert plan.count("regexp_extract(") == 6, plan
+    assert "rpad(" not in plan, plan
 
 
 def test_duckdb():
